@@ -332,10 +332,10 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """queries() ∪ extra_queries() — the full 189+ registry. Tests and
-    tools MUST resolve query names through this helper (never a bare
-    queries()[name]) so per-round rotation between the driver window and
-    extras can never break a lookup (round-6/7 incident class)."""
+    """queries() ∪ extra_queries() — the full registry, driver window
+    first. Tests and tools MUST resolve query names through this helper
+    (never a bare queries()[name]) so moving a query between the driver
+    window and extras can never break a lookup."""
     merged = queries()
     merged.update(extra_queries())
     return merged
@@ -4723,300 +4723,64 @@ def _build_registries():
             .alias("reduction_ratio"),
         )
 
-    # the driver evaluates the FIRST 50 queries() entries — exactly this
-    # dict, one entry per operator family, every entry oracle-backed
-    reg = {
-        # star-schema dimensions (SURVEY §2.1 S7/S8, §2.2, §2.3 J2, §2.8)
-        # round-5 rotation: dim_cliente (J2/U1/W4 — all certified via
-        # dim_producto + every dim, driver-green r1-r4) demoted so the
-        # round-4 text operators get driver-hashed; see reg tail
-        # (wave 10: dim_fecha + dim_producto demoted — driver-green r1-r4
-        # four rounds running; the generated-sequence source and the
-        # full dim build stay exercised via fact_ventas' dim lookups and
-        # the mirror — for the session-6 statistics tier)
-        "events_type_hour_mi": events_type_hour_mi,
-        "nation_revenue_concentration": nation_revenue_concentration,
-        # round-4 late rotation: dim_direccion (left-enrichment + default
-        # member, both certified via dim_cliente/every dim) demoted for the
-        # SCD2 point-in-time temporal join — a distinct operator family
-        # (session-5 wave 9: scd2_pit_lookup demoted — driver-green r4,
-        # the temporal-join family stays in-window via events_asof_nearest
-        # and pytest-proven in streaming — for the merge_asof
-        # nearest/tolerance/payload tier)
-        "events_asof_nearest": events_asof_nearest,
-        # (wave 9: dim_catalogs demoted — driver-green r1-r4; every
-        # catalog dim stays individually mirror-checked — for
-        # events_key_skew, the shuffle-key skew diagnostics)
-        "events_key_skew": events_key_skew,
-        # facts (SURVEY §2.3 J1/J3/J4, §2.4, §2.5, §2.9)
+    # every registry query, one entry per line: the driver window's
+    # queries first, then the extras in extra_queries() order
+    table = {
         "fact_ventas": fact_ventas,
-        "fact_inventario": build_fact_inventario,
-        "fact_transacciones": fact_transacciones,
-        # (wave 10: fact_balance + fact_estado_resultados demoted —
-        # driver-green r1-r4; the conditional-sum/pivot/running-balance
-        # families stay in-window via fact_ventas/fact_transacciones —
-        # for grid-KS drift and the k-core peel)
-        "events_ks_value_drift": events_ks_value_drift,
-        "trade_kcore": trade_kcore,
-        # relational operator probes
-        # (wave 6: star_revenue_by_pais_trimestre demoted — star rollup
-        # carried by fact_ventas + sql_top_customer_per_nation — for the
-        # composed seasonal-residual anomaly screen)
-        # (round-6 rotation, wave 11: every swap below trades a
-        # driver-green-r5 veteran for a same-or-adjacent-family round-5
-        # addition that had only ever been mirror-checked — VERDICT r5 #7.
-        # revenue_anomaly_weeks out for weekly_revenue_decompose: the
-        # anomaly screen is BUILT on the decomposition's residuals)
-        "weekly_revenue_decompose": weekly_revenue_decompose,
-        # (wave 9: lineitem_pricing_summary demoted — driver-green
-        # r1-r4, multi-agg family carried by the fact builds +
-        # ventas_daily_summary mirror — for events_value_buckets, the
-        # exact quantile discretizer)
-        "events_value_buckets": events_value_buckets,
-        # (wave 11: customer_snapshot_diff out — CDC diff green r5; SCD
-        # family keeps a fresh carrier via the Type-3 previous-value col)
-        "scd3_customer_segment": scd3_customer_segment,
-        "events_variant_stats": events_variant_stats,
-        "emb_random_projection": emb_random_projection,
-        "doc_pii_redaction": doc_pii_redaction,
-        # (session 3: events_validated demoted — the validation engine's
-        # checks also run inside the in-window dq_report — for
-        # events_drift_psi, the PSI distribution-drift monitor)
-        "events_drift_psi": events_drift_psi,
-        # (session-5 wave 8: sql_top_customer_per_nation demoted —
-        # driver-green r1-r4; shared-dialect SQL + top-1 window also in
-        # extras via sql_revenue_by_nation — for lineitem_ols_trend, the
-        # closed-form grouped-OLS family)
-        "lineitem_ols_trend": lineitem_ols_trend,
-        # custom operators beyond the reference's surface
-        # (wave 5 rotation, continuing the never-driver-hashed sweep:
-        # lineitem_cube in / lineitem_rollup out (CUBE ⊃ ROLLUP grouping
-        # sets); events_retention in / custkey_set_ops out (set ops also
-        # exercised inside order_reconciliation + dq_report);
-        # events_attribution in / asof_last_order out (as-of join
-        # driver-green r1-r4, still mirror-checked). All demotions stay
-        # in extras.)
-        # (session 3: pnl_unpivot demoted — pivot/unpivot family carried
-        # in-window by fact_estado_resultados — for doc_repeated_spans,
-        # the Lee-et-al exact-substring duplication profile; see reg tail)
-        # (wave 8: events_value_band_rangejoin demoted — driver-green
-        # r1-r4, both physical range-join strategies stay mirror-checked —
-        # for events_chi2_daypart, the categorical-independence screen)
-        "events_chi2_daypart": events_chi2_daypart,
-        "events_robust_outliers": events_robust_outliers,
-        # (wave 11: events_funnel out, green r5 — the milestone-ordering
-        # machinery recurs in the accumulating-snapshot lifecycle fact)
-        "fact_order_lifecycle": fact_order_lifecycle,
-        # (wave 6: batch_token_stats demoted — the Arrow mapInPandas
-        # contract is carried in-window by media_features — for
-        # basket_part_affinity)
-        # (wave 11: basket_part_affinity out, green r5 — superseded
-        # in-window by the A-priori triple extension of the same miner)
-        "basket_frequent_triples": basket_frequent_triples,
-        "events_retention": events_retention,
-        "events_session_window": events_session_window,
-        # (wave 7: order_reconciliation demoted — full-outer reconcile
-        # family adjacent to the in-window customer_snapshot_diff CDC — for
-        # doc_weighted_sample, the A-ES weighted sampling primitive)
-        # (wave 11: doc_weighted_sample out, green r5 — sampling family
-        # carried by the Neyman optimal-allocation tier)
-        "order_sample_allocation": order_sample_allocation,
-        "lineitem_cube": lineitem_cube,
-        "events_gap_fill": events_gap_fill,
-        # (wave 11: events_attribution out, green r5 — last-touch is the
-        # degenerate case of the linear multi-touch credit split)
-        "events_linear_attribution": events_linear_attribution,
-        "doc_chunks": doc_chunks,
-        # north-star: text analysis / dedup / similarity / multimodal
-        # (round-5 rotation, two waves. Wave 1: doc_repetition /
-        # doc_bm25_topk / doc_surprisal / doc_incremental_dedup — the
-        # round-4 additions — in; doc_minhash_lsh ⊂ doc_lsh_verified,
-        # ann_ivf_topk ⊂ ann_ivf_trained_topk, doc_lang_id ~
-        # doc_text_stats, dim_cliente ~ dim_producto out. Wave 2: the
-        # remaining never-driver-hashed families in — doc_quality_gate
-        # (~doc_text_stats out), emb_near_dup_trained (⊃ emb_near_dup
-        # out), doc_pii_redaction (~scalar_showcase out),
-        # customer_snapshot_diff (CDC; dedup_lineitem out — keep-first
-        # dedup still exercised inside fact_ventas), events_session_window
-        # (native variant; gap-based events_sessionized out). Every
-        # demotion stays mirror-checked in extras. Wave 3: the session-2
-        # additions go straight in — events_variant_stats (fk_orphan_check
-        # out: orphan checks also run inside dq_report), emb_random_projection
-        # (events_tumbling_window out: windowed-agg family carried by
-        # events_session_window, streaming parity by pytest),
-        # doc_edit_distance_dups (doc_exact_dedup out: hash-dedup family
-        # carried by clusters/lsh_verified/incremental/source gate).
-        # Wave 4: the behavioral/robust-analytics families —
-        # events_robust_outliers (events_value_percentiles out: exact
-        # percentile is robust_outliers' own foundation),
-        # events_gap_fill (user_last_event out: max_by drives gap_fill's
-        # daily pre-agg), events_funnel (customer_balance_quartiles out:
-        # the distributed-rank machinery also assigns every dim SK).)
-        # (wave 11: doc_quality_gate out, green r5 — the gate's quality
-        # score is the stratified cut's own ranking signal)
-        "doc_quality_stratified": doc_quality_stratified,
-        "doc_edit_distance_dups": doc_edit_distance_dups,
-        # (session 3: doc_ngram_jaccard demoted — exact-Jaccard machinery
-        # also verified in-window via doc_lsh_verified's candidate-bounded
-        # verify — for doc_segment_dedup, the C4-style segment dedup +
-        # reassembly transform)
-        "doc_segment_dedup": doc_segment_dedup,
-        # (wave 7: doc_simhash_near_dup demoted — SimHash banding also
-        # drives the in-window doc_edit_distance_dups candidate stage — for
-        # doc_phrase_search, the positional-retrieval family)
-        "doc_phrase_search": doc_phrase_search,
-        # (wave 7: ann_brute_topk demoted — the ANN family is carried by
-        # ann_ivf_trained_topk, whose verify path computes the same exact
-        # cosines — for doc_heavy_terms, the sketch-tier heavy hitters)
-        "doc_heavy_terms": doc_heavy_terms,
-        # (wave 11: emb_near_dup_trained out, green r5 — trained-cell
-        # blocking stays exercised via its k-means; the cluster-quality
-        # evaluator of that same k-means enters)
-        "emb_cluster_quality": emb_cluster_quality,
-        # (wave 9: media_features demoted — driver-green r1-r4, the
-        # multimodal tier is pytest-proven incl. the REAL netpbm decode —
-        # for doc_mixture_alloc, training-mix water-filling)
-        # (wave 11: doc_mixture_alloc out, green r5 — water-filling
-        # family carried by the per-language token-budget mix fill)
-        "doc_token_budget_mix": doc_token_budget_mix,
-        # (wave 8: doc_dedup_clusters demoted — driver-green r1-r4,
-        # both CC variants pytest-proven + doc_dedup_kept mirror — for
-        # doc_bpe_merges, BPE tokenizer merge training)
-        "doc_bpe_merges": doc_bpe_merges,
-        # (wave 6: scd2_customer_segment demoted — SCD2 family carried
-        # in-window by scd2_pit_lookup and by the txlog scd2_commit tests —
-        # for customer_rfm)
-        "customer_rfm": customer_rfm,
-        # (wave 8: dq_report demoted — driver-green r1-r4, the checks
-        # also run via events_validated/fk_orphan_check mirrors — for
-        # customer_supplier_link, blocked Fellegi-Sunter linkage)
-        "customer_supplier_link": customer_supplier_link,
-        # (session 3: emb_label_centroids demoted — exact vector-agg
-        # machinery also inside the in-window trained-IVF k-means — for
-        # doc_collocations, the PMI collocation miner)
-        # session-5 additions: weighted all-pairs similarity + domain gate
-        # (doc_top_terms demoted — tf·N/df salience ⊂ the tf-idf family;
-        # dim_promocion demoted — dim family covered by fecha/producto/
-        # catalogs; both stay mirror-checked in extras)
-        "doc_tfidf_pairs": doc_tfidf_pairs,
-        "source_quality_report": source_quality_report,
-        # (wave 10: ann_ivf_trained_topk + doc_lsh_verified demoted —
-        # driver-green r4; trained-kmeans stays in-window via
-        # emb_near_dup_trained, LSH-verify via doc_incremental_dedup —
-        # for the PQ ANN tier and MMR diversified selection)
-        "ann_pq_topk": ann_pq_topk,
-        "emb_mmr_diverse": emb_mmr_diverse,
-        # (wave 6: doc_pack_bins demoted — packing/chunking family carried
-        # in-window by doc_chunks — for part_pagerank, the iterative tier)
-        "part_pagerank": part_pagerank,
-        # (wave 8: doc_contamination demoted — driver-green r4, the
-        # cross-split shingle machinery is in-window via doc_lsh_verified
-        # and doc_incremental_dedup — for part_triangles, triangle
-        # counting with degree-ordered orientation)
-        "part_triangles": part_triangles,
-        # (wave 11: doc_repetition out, green r5 — the repetition profile
-        # feeds the in-window quality tiers; the end-to-end fuzzy-dedup
-        # kept-corpus emitter enters with its reachability oracle)
-        "doc_dedup_kept": doc_dedup_kept,
-        "doc_repeated_spans": doc_repeated_spans,
-        "doc_collocations": doc_collocations,
-        "doc_bm25_topk": doc_bm25_topk,
-        # (wave 11: doc_surprisal out, green r5 — unigram surprisal is
-        # the bigram LM's own backoff term)
-        "doc_bigram_surprisal": doc_bigram_surprisal,
-        "doc_incremental_dedup": doc_incremental_dedup,
-    }
-    assert len(reg) == 50, f"driver window must hold exactly 50 queries, got {len(reg)}"
-    _r9_debuts = {
-        # round-9 debuts: hybrid BM25+ANN RRF and cluster-balanced
-        # diversity selection (both promoted in-round, wave 14b);
-        # leakage-safe splitting stays an extra (r10 candidate)
-        "doc_hybrid_rrf_search": doc_hybrid_rrf_search,
-        "emb_cluster_balanced_sample": emb_cluster_balanced_sample,
-        "doc_leakage_safe_split": doc_leakage_safe_split,
-        "doc_hybrid_rrf_search_ivf": doc_hybrid_rrf_search_ivf,
-        # round-10 debuts (wave 15 promotes them in-round): the
-        # persisted-index hybrid (VERDICT r9 #2), the split
-        # contamination measurement (VERDICT r9 #7), the persisted BM25
-        # inverted index, and the fully-persisted hybrid
-        "doc_hybrid_rrf_search_pq": doc_hybrid_rrf_search_pq,
-        "doc_contamination_safe_split": doc_contamination_safe_split,
-        "doc_bm25_persisted_topk": doc_bm25_persisted_topk,
-        "doc_hybrid_rrf_search_persisted": doc_hybrid_rrf_search_persisted,
-        # round-10 late extras (r11 promotion candidates): the inverted
-        # index's encode-only append path and sharded federated ANN
-        "doc_bm25_incremental_topk": doc_bm25_incremental_topk,
-        "ann_ivfpq_federated_topk": ann_ivfpq_federated_topk,
-        "doc_bm25_prf_search": doc_bm25_prf_search,
-        "doc_hybrid_rrf_search_federated": doc_hybrid_rrf_search_federated,
-        # round-11 debut (promoted in-round, wave 16): PRF over the
-        # PERSISTED inverted index — both passes + feedback mining read
-        # stored postings (VERDICT r10 #3)
-        "doc_bm25_prf_search_persisted": doc_bm25_prf_search_persisted,
-        # round-11 debut (promoted in-round, wave 16b): federated BM25
-        # over per-shard persisted inverted indexes — exact global-stats
-        # merge, bit-equal to the monolithic index (the lexical
-        # federation has no per-shard-training penalty; contrast the
-        # measured vector tier in RECALL.json)
-        "doc_bm25_federated_topk": doc_bm25_federated_topk,
-        # round-11 debut (promoted in-round, wave 16b): graded retrieval
-        # evaluation — nDCG@5 + MRR of the BM25 ranking per query
-        "doc_retrieval_rank_metrics": doc_retrieval_rank_metrics,
-        # round-11 debut (promoted in-round, wave 16b): phrase search
-        # over the persisted positional index
-        "doc_phrase_search_persisted": doc_phrase_search_persisted,
-        # round-11 debut (promoted in-round, wave 16b): proximity
-        # retrieval over the persisted positional index
-        "doc_proximity_search": doc_proximity_search,
-        # round-12 debut (promoted in-round, wave 17): sloppy phrase over
-        # the v2 array-postings positional layout (VERDICT r11 #1 + #6)
-        "doc_phrase_slop_search": doc_phrase_slop_search,
-        # round-12 debut (promoted in-round, wave 17): search over the
-        # STREAM-MAINTAINED inverted index (VERDICT r11 #4 — epoched
-        # global state, replay-idempotent stats merge)
-        "doc_bm25_maintained_topk": doc_bm25_maintained_topk,
-        # round-12 debut (promoted in-round, wave 17): unordered n-term
-        # within-window co-occurrence over the positional index
-        "doc_cooccurrence_search": doc_cooccurrence_search,
-    }
-
-    # same-family variants + individual catalog dims: outside the driver's
-    # window but still oracle-checked locally (tools/check_oracle.py) and
-    # benched (bench.py). Builders stay first-class package code.
-    extra = {
-        **_r9_debuts,
-        "ventas_daily_summary": ventas_daily_summary,
-        "discount_order_rollup": discount_order_rollup,
-        "top_discount_line_per_order": top_discount_line_per_order,
-        "dup_grain_check": dup_grain_check,
-        "events_json_stats": events_json_stats,
-        "events_sliding_window": events_sliding_window,
-        "corpus_term_freq": corpus_term_freq,
-        "doc_simhash": doc_simhash,
-        "emb_near_dup": emb_near_dup,
+        "part_copurchase_assortativity": part_copurchase_assortativity,
+        "lineitem_fd_violations": lineitem_fd_violations,
         "events_value_band_rangejoin_bucketed": events_value_band_rangejoin_bucketed,
-        "events_sessionized": events_sessionized,
-        "doc_split_assignment": doc_split_assignment,
+        "doc_source_woe": doc_source_woe,
+        "top_discount_lines_with_ties": top_discount_lines_with_ties,
+        "doc_bpe_token_counts": doc_bpe_token_counts,
+        "doc_contrastive_pairs": doc_contrastive_pairs,
+        "doc_lang_resample": doc_lang_resample,
+        "doc_stratified_sample": doc_stratified_sample,
+        "emb_centroid_drift": emb_centroid_drift,
+        "events_interpolated_daily": events_interpolated_daily,
+        "events_multiplicative_means": events_multiplicative_means,
+        "events_trailing_7d": events_trailing_7d,
+        "events_type_drift_psi": events_type_drift_psi,
+        "files_provenance": files_provenance,
+        "order_priority_exists": order_priority_exists,
+        "customer_order_distribution": customer_order_distribution,
+        "discount_order_rollup": discount_order_rollup,
+        "corpus_training_batches": corpus_training_batches,
+        "doc_incremental_dedup_persisted": doc_incremental_dedup_persisted,
         "doc_nb_lang_classifier": doc_nb_lang_classifier,
         "doc_quality_logreg": doc_quality_logreg,
-        "doc_winnow_overlap": doc_winnow_overlap,
         "doc_dsir_sample": doc_dsir_sample,
         "doc_temperature_resample": doc_temperature_resample,
         "doc_source_quality_gate": doc_source_quality_gate,
-        "doc_nb_persisted_classifier": doc_nb_persisted_classifier,
-        # round-13 debuts (VERDICT r12 #2 + #7): the compaction triptych
-        # on the driver gate + the NB maintenance stream's driver twin —
-        # all four promote in-window below (wave 18, the debut-round-
-        # driver-row rule)
+        "doc_uncertainty_sample": doc_uncertainty_sample,
+        "emb_cluster_balanced_sample": emb_cluster_balanced_sample,
+        "doc_leakage_safe_split": doc_leakage_safe_split,
+        "doc_hybrid_rrf_search_ivf": doc_hybrid_rrf_search_ivf,
+        "doc_hybrid_rrf_search_pq": doc_hybrid_rrf_search_pq,
+        "doc_contamination_safe_split": doc_contamination_safe_split,
+        "doc_hybrid_rrf_search_persisted": doc_hybrid_rrf_search_persisted,
+        "ann_ivfpq_federated_topk": ann_ivfpq_federated_topk,
+        "doc_bm25_incremental_topk": doc_bm25_incremental_topk,
+        "doc_bm25_prf_search": doc_bm25_prf_search,
+        "doc_hybrid_rrf_search_federated": doc_hybrid_rrf_search_federated,
+        "doc_cluster_quality_canonicals": doc_cluster_quality_canonicals,
+        "doc_bm25_prf_search_persisted": doc_bm25_prf_search_persisted,
+        "doc_bm25_federated_topk": doc_bm25_federated_topk,
+        "doc_retrieval_rank_metrics": doc_retrieval_rank_metrics,
+        "doc_proximity_search": doc_proximity_search,
+        "doc_phrase_slop_search": doc_phrase_slop_search,
+        "doc_bm25_maintained_topk": doc_bm25_maintained_topk,
+        "doc_cooccurrence_search": doc_cooccurrence_search,
         "doc_bm25_compacted_topk": doc_bm25_compacted_topk,
         "doc_phrase_search_compacted": doc_phrase_search_compacted,
         "ann_ivfpq_compacted_topk": ann_ivfpq_compacted_topk,
-        "ann_ivfpq_maintained_topk": ann_ivfpq_maintained_topk,
         "doc_nb_maintained_classifier": doc_nb_maintained_classifier,
-        "doc_uncertainty_sample": doc_uncertainty_sample,
+        "ann_ivfpq_maintained_topk": ann_ivfpq_maintained_topk,
+        "dup_grain_check": dup_grain_check,
+        "events_json_stats": events_json_stats,
+        "emb_near_dup": emb_near_dup,
+        "events_sessionized": events_sessionized,
         "dedup_lineitem": dedup_lineitem,
-        "doc_lang_resample": doc_lang_resample,
-        "semantic_near_dup_crosscheck": semantic_near_dup_crosscheck,
         "events_tumbling_window": events_tumbling_window,
         "doc_exact_dedup": doc_exact_dedup,
         "fk_orphan_check": fk_orphan_check,
@@ -5026,10 +4790,7 @@ def _build_registries():
         "approx_distinct_parts": approx_distinct_parts,
         "scalar_showcase": scalar_showcase,
         "doc_text_stats": doc_text_stats,
-        "doc_length_histogram": doc_length_histogram,
         "dim_usuario": build_dim_usuario,
-        "dim_proveedor": build_dim_proveedor,
-        "dim_orden": _catalog("build_dim_orden"),
         "dim_periodo_contable": _catalog("build_dim_periodo_contable"),
         "dim_detalle_venta": _legacy("build_dim_detalle_venta"),
         "dim_cuenta_contable": build_dim_cuenta_contable,
@@ -5037,18 +4798,12 @@ def _build_registries():
         "dim_tipo_movimiento": _catalog("build_dim_tipo_movimiento"),
         "dim_centro_costo": _catalog("build_dim_centro_costo"),
         "dim_tipo_transaccion": _catalog("build_dim_tipo_transaccion"),
-        "dim_impuestos": _catalog("build_dim_impuestos"),
         "dim_estado_orden": _catalog("build_dim_estado_orden"),
-        "dim_envio": _catalog("build_dim_envio"),
         "dim_canal": _legacy("build_dim_canal"),
         "dim_estado_pago": _legacy("build_dim_estado_pago"),
         "dim_pago": _legacy("build_dim_pago"),
         "dim_sitio_web": _legacy("build_dim_sitio_web"),
         "dim_direccion": _legacy("build_dim_direccion"),
-        "ann_ivf_trained_probe3": ann_ivf_trained_probe3,
-        "doc_stratified_sample": doc_stratified_sample,
-        # round-6 wave-11 demotions (ALL driver-green r5; each one's
-        # family keeps an in-window carrier — see the reg comments)
         "revenue_anomaly_weeks": revenue_anomaly_weeks,
         "basket_part_affinity": basket_part_affinity,
         "events_attribution": events_attribution,
@@ -5060,44 +4815,13 @@ def _build_registries():
         "emb_near_dup_trained": emb_near_dup_trained,
         "events_funnel": events_funnel,
         "doc_repetition": doc_repetition,
-        # round-6 additions (new families; driver-window candidates for r7)
-        "order_priority_exists": order_priority_exists,
-        "customer_order_distribution": customer_order_distribution,
-        "events_ewma_daily": events_ewma_daily,
-        "revenue_cusum_changepoint": revenue_cusum_changepoint,
-        "events_interpolated_daily": events_interpolated_daily,
-        "lineitem_fd_violations": lineitem_fd_violations,
-        "urgent_lineitems_bloom": urgent_lineitems_bloom,
-        "doc_quality_auc": doc_quality_auc,
-        "doc_quality_lift": doc_quality_lift,
-        "doc_source_woe": doc_source_woe,
-        "orders_systematic_sample": orders_systematic_sample,
-        "doc_quality_avg_precision": doc_quality_avg_precision,
-        "orders_loo_priority_encoding": orders_loo_priority_encoding,
-        "part_copurchase_assortativity": part_copurchase_assortativity,
-        "events_trimmed_mean": events_trimmed_mean,
-        "doc_feature_hashing": doc_feature_hashing,
-        "doc_prefix_jaccard_pairs": doc_prefix_jaccard_pairs,
-        "events_purchase_path_match": events_purchase_path_match,
-        "weekly_revenue_theilsen": weekly_revenue_theilsen,
-        "events_trailing_dau": events_trailing_dau,
-        "doc_quality_calibration": doc_quality_calibration,
-        "doc_quality_brier": doc_quality_brier,
-        "doc_kfold_assignment": doc_kfold_assignment,
-        "revenue_pareto_parts": revenue_pareto_parts,
-        "top_discount_lines_with_ties": top_discount_lines_with_ties,
-        "events_multiplicative_means": events_multiplicative_means,
-        "lsh_blocking_quality": lsh_blocking_quality,
-        # round-5 demotions (driver-green r1-r4; families still in-window)
         "dim_cliente": build_dim_cliente,
         "doc_lang_id": doc_lang_id,
         "doc_minhash_lsh": doc_minhash_lsh,
         "ann_ivf_topk": ann_ivf_topk,
-        # session-5 demotions for doc_tfidf_pairs / source_quality_report
         "dim_promocion": build_dim_promocion,
         "doc_top_terms": doc_top_terms,
         "customer_balance_quartiles": customer_balance_quartiles,
-        # wave-5 demotions (driver-green r1-r4; families still in-window)
         "sql_revenue_by_nation": sql_revenue_by_nation,
         "asof_last_order": asof_last_order,
         "lineitem_rollup": lineitem_rollup,
@@ -5106,441 +4830,189 @@ def _build_registries():
         "emb_label_centroids": emb_label_centroids,
         "events_validated": events_validated,
         "doc_ngram_jaccard": doc_ngram_jaccard,
-        "orders_profile": orders_profile,
-        "lineitem_benford": lineitem_benford,
-        "revenue_incremental_merge": revenue_incremental_merge,
-        "files_provenance": files_provenance,
-        "events_trailing_7d": events_trailing_7d,
-        "events_transitions": events_transitions,
         "user_last_event": user_last_event,
         "events_value_percentiles": events_value_percentiles,
-        "events_approx_quantiles": events_approx_quantiles,
-        "doc_token_entropy": doc_token_entropy,
-        "events_type_drift_psi": events_type_drift_psi,
-        # wave-7 demotions (driver-green in earlier rounds)
         "doc_simhash_near_dup": doc_simhash_near_dup,
         "ann_brute_topk": ann_brute_topk,
         "order_reconciliation": order_reconciliation,
-        # wave-6 demotions (driver-green in earlier rounds; families still
-        # in-window)
         "scd2_customer_segment": scd2_customer_segment,
         "batch_token_stats": batch_token_stats,
         "doc_pack_bins": doc_pack_bins,
         "star_revenue_by_pais_trimestre": star_revenue_by_pais_trimestre,
-        # session-5: int8 scalar-quantized ANN with exact rerank
-        "ann_sq8_topk": ann_sq8_topk,
-        # round-7: the IVF-PQ composition (promoted into the window below)
-        "ann_ivfpq_topk": ann_ivfpq_topk,
-        # round-8: search of the PERSISTED IVF-PQ index (promoted below —
-        # new operators need a driver row in their debut round)
-        "ann_ivfpq_persisted_topk": ann_ivfpq_persisted_topk,
-        # round-8: encode-only incremental append to the persisted index
-        "ann_ivfpq_incremental_topk": ann_ivfpq_incremental_topk,
-        # round-8: end-to-end curated-corpus -> packed-bins manifest
-        "corpus_training_batches": corpus_training_batches,
-        # round-8: batch ingestion against the PERSISTED band index
-        "doc_incremental_dedup_persisted": doc_incremental_dedup_persisted,
-        # round-8: quality-aware cluster canonical selection
-        "doc_cluster_quality_canonicals": doc_cluster_quality_canonicals,
-        # session-6: the end-to-end curation verdict (composition proof)
-        "doc_curation_report": doc_curation_report,
-        # session-6: training-pair mining
-        "doc_contrastive_pairs": doc_contrastive_pairs,
-        "emb_hard_negatives": emb_hard_negatives,
-        # wave-10 demotions (driver-green r1-r4; families still in-window)
         "dim_fecha": lambda spark, sf: build_dim_fecha(spark, sf),
         "dim_producto": build_dim_producto,
         "fact_balance": fact_balance,
         "fact_estado_resultados": fact_estado_resultados,
         "ann_ivf_trained_topk": ann_ivf_trained_topk,
         "doc_lsh_verified": doc_lsh_verified,
-        # session-5: per-group pairwise correlation matrix
-        "lineitem_corr_matrix": lineitem_corr_matrix,
-        # session-5: BPE applied — per-doc subword token accounting
-        "doc_bpe_token_counts": doc_bpe_token_counts,
-        # session-5: embedding centroid drift monitor
-        "emb_centroid_drift": emb_centroid_drift,
-        # wave-9 demotions (driver-green r1-r4; families still covered)
         "scd2_pit_lookup": scd2_pit_lookup,
         "dim_catalogs": dim_catalogs,
         "lineitem_pricing_summary": lineitem_pricing_summary,
         "media_features": media_features,
-        # wave-8 demotions (driver-green r1-r4; families still covered)
         "sql_top_customer_per_nation": sql_top_customer_per_nation,
         "events_value_band_rangejoin": events_value_band_rangejoin,
         "doc_dedup_clusters": doc_dedup_clusters,
         "dq_report": dq_report,
         "doc_contamination": doc_contamination,
+        "basket_frequent_triples": basket_frequent_triples,
+        "customer_rfm": customer_rfm,
+        "customer_supplier_link": customer_supplier_link,
+        "doc_bigram_surprisal": doc_bigram_surprisal,
+        "doc_bm25_topk": doc_bm25_topk,
+        "doc_bpe_merges": doc_bpe_merges,
+        "doc_chunks": doc_chunks,
+        "doc_collocations": doc_collocations,
+        "doc_dedup_kept": doc_dedup_kept,
+        "doc_heavy_terms": doc_heavy_terms,
+        "doc_pii_redaction": doc_pii_redaction,
+        "doc_quality_stratified": doc_quality_stratified,
+        "doc_repeated_spans": doc_repeated_spans,
+        "doc_token_budget_mix": doc_token_budget_mix,
+        "emb_cluster_quality": emb_cluster_quality,
+        "emb_mmr_diverse": emb_mmr_diverse,
+        "emb_random_projection": emb_random_projection,
+        "events_chi2_daypart": events_chi2_daypart,
+        "events_linear_attribution": events_linear_attribution,
+        "events_retention": events_retention,
+        "events_type_hour_mi": events_type_hour_mi,
+        "lineitem_cube": lineitem_cube,
+        "part_triangles": part_triangles,
+        "fact_order_lifecycle": fact_order_lifecycle,
+        "fact_inventario": build_fact_inventario,
+        "fact_transacciones": fact_transacciones,
+        "trade_kcore": trade_kcore,
+        "nation_revenue_concentration": nation_revenue_concentration,
+        "events_asof_nearest": events_asof_nearest,
+        "events_key_skew": events_key_skew,
+        "events_value_buckets": events_value_buckets,
+        "events_drift_psi": events_drift_psi,
+        "lineitem_ols_trend": lineitem_ols_trend,
+        "events_robust_outliers": events_robust_outliers,
+        "events_session_window": events_session_window,
+        "events_gap_fill": events_gap_fill,
+        "doc_edit_distance_dups": doc_edit_distance_dups,
+        "doc_segment_dedup": doc_segment_dedup,
+        "doc_phrase_search": doc_phrase_search,
+        "doc_tfidf_pairs": doc_tfidf_pairs,
+        "source_quality_report": source_quality_report,
+        "ann_pq_topk": ann_pq_topk,
+        "part_pagerank": part_pagerank,
+        "doc_incremental_dedup": doc_incremental_dedup,
+        "events_ks_value_drift": events_ks_value_drift,
+        "weekly_revenue_decompose": weekly_revenue_decompose,
+        "scd3_customer_segment": scd3_customer_segment,
+        "events_variant_stats": events_variant_stats,
+        "order_sample_allocation": order_sample_allocation,
+        "dim_envio": _catalog("build_dim_envio"),
+        "dim_impuestos": _catalog("build_dim_impuestos"),
+        "dim_orden": _catalog("build_dim_orden"),
+        "dim_proveedor": build_dim_proveedor,
+        "ventas_daily_summary": ventas_daily_summary,
+        "top_discount_line_per_order": top_discount_line_per_order,
+        "corpus_term_freq": corpus_term_freq,
+        "ann_ivfpq_topk": ann_ivfpq_topk,
+        "doc_quality_auc": doc_quality_auc,
+        "doc_quality_lift": doc_quality_lift,
+        "doc_quality_calibration": doc_quality_calibration,
+        "doc_quality_brier": doc_quality_brier,
+        "doc_kfold_assignment": doc_kfold_assignment,
+        "weekly_revenue_theilsen": weekly_revenue_theilsen,
+        "revenue_pareto_parts": revenue_pareto_parts,
+        "doc_prefix_jaccard_pairs": doc_prefix_jaccard_pairs,
+        "events_purchase_path_match": events_purchase_path_match,
+        "urgent_lineitems_bloom": urgent_lineitems_bloom,
+        "lsh_blocking_quality": lsh_blocking_quality,
+        "orders_systematic_sample": orders_systematic_sample,
+        "revenue_cusum_changepoint": revenue_cusum_changepoint,
+        "events_ewma_daily": events_ewma_daily,
+        "doc_feature_hashing": doc_feature_hashing,
+        "events_trailing_dau": events_trailing_dau,
+        "doc_length_histogram": doc_length_histogram,
+        "doc_split_assignment": doc_split_assignment,
+        "doc_simhash": doc_simhash,
+        "ann_sq8_topk": ann_sq8_topk,
+        "events_trimmed_mean": events_trimmed_mean,
+        "lineitem_benford": lineitem_benford,
+        "events_sliding_window": events_sliding_window,
+        "doc_token_entropy": doc_token_entropy,
+        "ann_ivf_trained_probe3": ann_ivf_trained_probe3,
+        "emb_hard_negatives": emb_hard_negatives,
+        "doc_quality_avg_precision": doc_quality_avg_precision,
+        "doc_curation_report": doc_curation_report,
+        "orders_loo_priority_encoding": orders_loo_priority_encoding,
+        "lineitem_corr_matrix": lineitem_corr_matrix,
+        "events_approx_quantiles": events_approx_quantiles,
+        "events_transitions": events_transitions,
+        "orders_profile": orders_profile,
+        "semantic_near_dup_crosscheck": semantic_near_dup_crosscheck,
+        "ann_ivfpq_persisted_topk": ann_ivfpq_persisted_topk,
+        "revenue_incremental_merge": revenue_incremental_merge,
+        "doc_hybrid_rrf_search": doc_hybrid_rrf_search,
+        "ann_ivfpq_incremental_topk": ann_ivfpq_incremental_topk,
+        "doc_nb_persisted_classifier": doc_nb_persisted_classifier,
+        "doc_bm25_persisted_topk": doc_bm25_persisted_topk,
+        "doc_phrase_search_persisted": doc_phrase_search_persisted,
+        "doc_winnow_overlap": doc_winnow_overlap,
     }
-
-    # ---- round-7 rotation (wave 12) ----------------------------------
-    # VERDICT r6 #3/#8: 60 of 188 queries had never had a green driver
-    # row — this wave promotes the round-6 additions (evaluation tier,
-    # Theil-Sen, Pareto (now top-k-first), prefix-Jaccard, pattern
-    # match, Bloom join, LSH-quality, systematic sample, CUSUM, EWMA,
-    # feature hashing, assortativity) plus the never-driver-checked §2
-    # dim/summary carriers. Every demotion is a multi-round driver-green
-    # veteran whose family keeps an in-window carrier (noted inline);
-    # demotions stay oracle-checked in extras via tools/check_oracle.py.
-    _promote_r7 = [
-        "doc_quality_auc",           # Mann-Whitney AUC (evaluation tier)
-        "doc_quality_lift",          # decile gains/lift
-        "doc_quality_calibration",   # reliability bins + ECE
-        "doc_quality_brier",         # Brier score
-        "doc_kfold_assignment",      # stratified k-fold
-        "weekly_revenue_theilsen",   # Theil-Sen + Mann-Kendall
-        "revenue_pareto_parts",      # top-200-first cumulative share
-        "doc_prefix_jaccard_pairs",  # lossless PPJoin
-        "events_purchase_path_match",  # MATCH_RECOGNIZE-lite
-        "urgent_lineitems_bloom",    # bloom-bitmap semi-join
-        "lsh_blocking_quality",      # blocking recall/reduction eval
-        "orders_systematic_sample",  # every-k sampling, no global window
-        "revenue_cusum_changepoint", # offline CUSUM
-        "events_ewma_daily",         # integer-lattice EWMA
-        "doc_feature_hashing",       # hashing-trick vectors
-        "part_copurchase_assortativity",  # degree assortativity
-        # §2 carriers that never had a driver row (VERDICT r6 #8)
-        "dim_envio",
-        "dim_impuestos",
-        "dim_orden",
-        "dim_proveedor",
-        "ventas_daily_summary",
-        "top_discount_line_per_order",
-        "corpus_term_freq",
-        # round-7 addition: IVF-PQ composed search (new operators need a
-        # driver row in their debut round)
-        "ann_ivfpq_topk",
-    ]
-    _demote_r7 = [
-        "basket_frequent_triples",   # basket family: affinity+triples mirror
-        "customer_rfm",              # RFM green r6; funnel/attribution/retention mirror-checked
-        "customer_supplier_link",    # linkage green r6; blocking machinery shared with LSH tiers
-        "doc_bigram_surprisal",      # surprisal family mirror-checked
-        "doc_bm25_topk",             # retrieval carried by doc_phrase_search
-        "doc_bpe_merges",            # BPE green r6; apply-side mirror
-        "doc_chunks",                # packing family mirror
-        "doc_collocations",          # PMI family mirror
-        "doc_dedup_kept",            # dedup carried by doc_incremental_dedup + segment
-        "doc_heavy_terms",           # sketch tier green r6 (heaviest bench query)
-        "doc_pii_redaction",         # scalar/regex family in scalar_showcase mirror
-        "doc_quality_stratified",    # quality family now carried by AUC/lift/calibration/brier
-        "doc_repeated_spans",        # span dedup green r6; family carried in-window
-        "doc_token_budget_mix",      # mixture family green r6
-        "emb_cluster_quality",       # k-means eval green r6; kmeans inside IVF stays
-        "emb_mmr_diverse",           # MMR green r6
-        "emb_random_projection",     # JL green r6
-        "events_chi2_daypart",       # stats family: theilsen/cusum/ewma enter
-        "events_linear_attribution", # attribution green r6; last-touch mirror
-        "events_retention",          # cohort green r6
-        "events_type_hour_mi",       # MI green r6
-        "lineitem_cube",             # grouping sets green r6; rollup mirror
-        "part_triangles",            # graph carried by trade_kcore + assortativity
-        "fact_order_lifecycle",      # lifecycle green r6; fact family carried by 3 fact builds
-    ]
-    for _n in _promote_r7:
-        reg[_n] = extra.pop(_n)
-    for _n in _demote_r7:
-        extra[_n] = reg.pop(_n)
-
-    # ---- round-8 rotation (wave 13) ----------------------------------
-    # VERDICT r7 #3: 38 queries had never had a green driver row; this
-    # wave promotes 24 of them (13 remain for round 9) plus the debut
-    # ann_ivfpq_persisted_topk. Every demotion is a driver-green veteran
-    # (most 3-6 rounds deep) whose family keeps an in-window carrier;
-    # demotions stay oracle-checked in extras via tools/check_oracle.py.
-    _promote_r8 = [
-        "ann_ivfpq_persisted_topk",  # round-8 debut: persisted-index search
-        # VERDICT r7 #3 priority list
-        "doc_curation_report",       # end-to-end curation verdict
-        "doc_quality_avg_precision", # AP (range-partitioned cumulative)
-        "doc_simhash",               # simhash near-dup tier
-        "ann_sq8_topk",              # int8 scalar-quantized ANN
-        "ann_ivf_trained_probe3",    # multi-probe trained IVF
-        "events_sliding_window",     # overlapping windows
-        "events_transitions",        # markov transition counts
-        "lineitem_benford",          # first-digit audit
-        "lineitem_corr_matrix",      # per-group pairwise correlations
-        "lineitem_fd_violations",    # functional-dependency audit
-        "orders_profile",            # column profiler
-        "events_value_band_rangejoin_bucketed",  # bucketed range join
-        # remainder of the never-driver-checked backlog (older families)
-        "doc_token_entropy",         # unigram entropy
-        "doc_source_woe",            # weight-of-evidence encoding
-        "orders_loo_priority_encoding",  # leave-one-out target encoding
-        "emb_hard_negatives",        # contrastive mining
-        "events_trailing_dau",       # trailing distinct users
-        "events_trimmed_mean",       # robust location
-        "events_approx_quantiles",   # exact-rank quantiles
-        "doc_length_histogram",      # log-bucketed lengths
-        "doc_split_assignment",      # hash split assignment
-        "ann_ivfpq_incremental_topk",  # round-8 debut: encode-only append
-        "top_discount_lines_with_ties",  # rank-with-ties top-k
-        "revenue_incremental_merge", # MERGE-based incremental rollup
-    ]
-    _demote_r8 = [
-        "fact_inventario",           # 6x green; fact family carried by fact_ventas
-        "fact_transacciones",        # 6x green; journal expansion pytest-pinned
-        "trade_kcore",               # 3x green; convergence gated in tests/test_round8_ops.py
-        "nation_revenue_concentration",  # 3x green; gini/top-share family stable
-        "events_asof_nearest",       # 3x green; asof family pytest-pinned
-        "events_key_skew",           # 3x green; skew diagnostics stable
-        "events_value_buckets",      # 3x green; width_bucket family stable
-        "events_drift_psi",          # 3x green; PSI carried by events_type_drift_psi next round
-        "lineitem_ols_trend",        # 3x green; stats family: benford/corr_matrix enter
-        "events_robust_outliers",    # 3x green; MAD family stable
-        "events_session_window",     # 3x green; sessionization carried by purchase_path_match
-        "events_gap_fill",           # 3x green; calendar fill family stable
-        "doc_edit_distance_dups",    # 3x green; edit-distance verify pytest-pinned
-        "doc_segment_dedup",         # 3x green; dedup carried by doc_simhash + prefix_jaccard
-        "doc_phrase_search",         # 3x green; retrieval carried by corpus_term_freq
-        "doc_tfidf_pairs",           # 3x green; tf-idf plan gate stays in pytest
-        "source_quality_report",     # 3x green; DQ family carried by orders_profile
-        "ann_pq_topk",               # 3x green; PQ carried by both ivfpq tiers
-        "part_pagerank",             # 3x green; graph carried by assortativity
-        "doc_incremental_dedup",     # 3x green; persisted-index pattern now carried by ivfpq_persisted
-        "events_ks_value_drift",     # 2x green; drift carried by value_band + trailing tiers
-        "weekly_revenue_decompose",  # 2x green; seasonal family carried by theilsen/cusum/ewma
-        "scd3_customer_segment",     # 2x green; SCD family carried by revenue_incremental_merge
-        "events_variant_stats",      # 2x green; variant JSON tier pytest-pinned
-        "order_sample_allocation",   # 2x green; sampling carried by systematic + loo encoding
-    ]
-    for _n in _promote_r8:
-        reg[_n] = extra.pop(_n)
-    for _n in _demote_r8:
-        extra[_n] = reg.pop(_n)
-
-    # ---- round-9 rotation (wave 14) ----------------------------------
-    # VERDICT r8 #1: finish the rotation — 24 slots = the full remaining
-    # never-driver-checked set (14 backlog + the 10 round-8 debuts), so
-    # after this wave the never-driver-checked backlog is ZERO. Every
-    # demotion is a driver-green veteran (2x green r7+r8, except
-    # events_trailing_dau whose exact family successor events_trailing_7d
-    # enters) whose family keeps an in-window carrier (noted inline);
-    # demotions stay oracle-checked in extras via tools/check_oracle.py.
-    # part_copurchase_assortativity stays in-window so the graph family
-    # keeps its carrier (triangles/pagerank/kcore are all in extras).
-    _promote_r9 = [
-        # -- the 14-query backlog (never driver-checked, older families)
-        "doc_bpe_token_counts",      # BPE apply + per-doc token counts
-        "doc_contrastive_pairs",     # anchor/positive/negative mining
-        "doc_lang_resample",         # per-language quota resampling
-        "doc_stratified_sample",     # proportional stratified sample
-        "emb_centroid_drift",        # per-cluster centroid drift
-        "events_interpolated_daily", # gap-fill + linear interpolation
-        "events_multiplicative_means",  # geometric/harmonic means
-        "events_trailing_7d",        # RANGE-frame trailing window
-        "events_type_drift_psi",     # per-type PSI drift
-        "files_provenance",          # input-file lineage rollup
-        "order_priority_exists",     # EXISTS/IN semi-join (bloom family carrier)
-        "semantic_near_dup_crosscheck",  # LSH×embedding near-dup agreement
-        "customer_order_distribution",   # count-of-counts histogram
-        "discount_order_rollup",     # ROLLUP hierarchy aggregate
-        # -- the 10 round-8 debuts (mirror-green at sf0.001, judge-sampled)
-        "corpus_training_batches",   # end-to-end curate→pack→manifest
-        "doc_incremental_dedup_persisted",  # persisted band-index dedup
-        "doc_nb_lang_classifier",    # NB train/score (oracle NULL-label fix r9)
-        "doc_nb_persisted_classifier",  # persisted filter model scoring
-        "doc_quality_logreg",        # logistic-regression GD trajectory
-        "doc_winnow_overlap",        # MOSS winnowing fingerprint overlap
-        "doc_dsir_sample",           # DSIR importance resampling
-        "doc_temperature_resample",  # p^tau mixture reweighting
-        "doc_source_quality_gate",   # per-source percentile gate
-        "doc_uncertainty_sample",    # active-learning margin sampling
-    ]
-    _demote_r9 = [
-        # r7-wave veterans, all 2x driver-green (r7+r8)
-        "dim_envio",                 # dim family: fact_ventas exercises all dim builds + SK lookups
-        "dim_impuestos",             # idem
-        "dim_orden",                 # idem
-        "dim_proveedor",             # idem
-        "ventas_daily_summary",      # multi-agg family: discount_order_rollup + customer_order_distribution enter
-        "top_discount_line_per_order",  # W3 top-1 carried by top_discount_lines_with_ties
-        "corpus_term_freq",          # token/corpus family: doc_bpe_token_counts + corpus_training_batches enter
-        "ann_ivfpq_topk",            # ANN keeps 4 carriers (sq8, ivf_trained, ivfpq_persisted, ivfpq_incremental)
-        "doc_quality_auc",           # evaluation tier carried by doc_quality_avg_precision + doc_quality_logreg
-        "doc_quality_lift",          # idem
-        "doc_quality_calibration",   # idem
-        "doc_quality_brier",         # idem
-        "doc_kfold_assignment",      # split family carried by doc_split_assignment
-        "weekly_revenue_theilsen",   # stats family: benford/corr_matrix stay, psi/interpolated enter
-        "revenue_pareto_parts",      # concentration family stable; pareto mirror-checked
-        "doc_prefix_jaccard_pairs",  # dedup carried by doc_simhash + winnow/persisted/crosscheck entering
-        "events_purchase_path_match",  # sequence family carried by events_transitions
-        "urgent_lineitems_bloom",    # semi-join family: order_priority_exists enters
-        "lsh_blocking_quality",      # blocking eval: semantic_near_dup_crosscheck enters
-        "orders_systematic_sample",  # sampling: stratified/lang_resample/uncertainty enter
-        "revenue_cusum_changepoint", # changepoint family mirror-checked; drift carried by PSI tiers
-        "events_ewma_daily",         # smoothing family: events_interpolated_daily enters
-        "doc_feature_hashing",       # features family: doc_bpe_token_counts enters
-        # 1x green, direct family swap
-        "events_trailing_dau",       # trailing family: events_trailing_7d is its RANGE-frame successor
-    ]
-    for _n in _promote_r9:
-        reg[_n] = extra.pop(_n)
-    for _n in _demote_r9:
-        extra[_n] = reg.pop(_n)
-
-    # ---- round-9 debut promotion (wave 14b) --------------------------
-    # New operators get a driver row in their debut round (the
-    # ann_ivfpq_persisted_topk precedent) — with these two in, NO query
-    # in the registry is left never-driver-checked after this round's
-    # window. Both are mirror-green at sf0.001 AND sf0.01. Demotions are
-    # r8-wave members (1x green) with in-window family carriers.
-    _promote_r9b = [
-        "doc_hybrid_rrf_search",      # hybrid BM25+cosine RRF (retrieval family enters)
-        "emb_cluster_balanced_sample",  # k-means quota diversity selection
-    ]
-    _demote_r9b = [
-        "doc_length_histogram",       # 1x green r8; profile family carried by orders_profile
-        "doc_split_assignment",       # 1x green r8; selection family carried by stratified/lang_resample/uncertainty (all in-window)
-    ]
-    for _n in _promote_r9b:
-        reg[_n] = extra.pop(_n)
-    for _n in _demote_r9b:
-        extra[_n] = reg.pop(_n)
-
-    # ---- round-10 rotation (wave 15) ----------------------------------
-    # VERDICT r9 #1: the two late round-9 debuts are the only registry
-    # entries without a driver row — rotate them in. Plus the two
-    # round-10 debuts (debut-round driver rows, the
-    # ann_ivfpq_persisted_topk precedent). Every demotion is a 2x
-    # driver-green r8+r9 veteran whose family keeps an in-window
-    # carrier; demotions stay oracle-checked in extras.
-    _promote_r10 = [
-        "doc_leakage_safe_split",    # r9 debut, never driver-checked
-        "doc_hybrid_rrf_search_ivf",  # r9 debut, never driver-checked
-        "doc_hybrid_rrf_search_pq",  # r10 debut: hybrid over the PERSISTED IVF-PQ index
-        "doc_contamination_safe_split",  # r10 debut: zero-cross-split measurement
-        "doc_bm25_persisted_topk",   # r10 debut: persisted BM25 inverted index
-        "doc_hybrid_rrf_search_persisted",  # r10 debut: BOTH retrieval sides persisted
-    ]
-    _demote_r10 = [
-        "doc_simhash",               # 2x green; simhash banding in extras, dedup family carried by incremental_dedup_persisted + winnow + crosscheck + leakage split
-        "ann_sq8_topk",              # 2x green; ANN keeps ivf_trained_probe3 + both persisted ivfpq tiers + the hybrids' semantic sides
-        "events_trimmed_mean",       # 2x green; robust-location family carried by events_approx_quantiles
-        "lineitem_benford",          # 2x green; audit family carried by lineitem_corr_matrix + lineitem_fd_violations
-        "events_sliding_window",     # 2x green; windowed-agg family carried by events_trailing_7d + streaming pytest parity
-        "doc_token_entropy",         # 2x green; text-quality family carried by doc_curation_report + doc_bpe_token_counts
-    ]
-    for _n in _promote_r10:
-        reg[_n] = extra.pop(_n)
-    for _n in _demote_r10:
-        extra[_n] = reg.pop(_n)
-
-    # ---- round-11 rotation (wave 16) ----------------------------------
-    # VERDICT r10 #1: the five never-driver-checked queries (computed by
-    # SET-DIFFERENCE against ALL CORRECTNESS_r*.json — the ledger rule
-    # tests/test_round11_ops.py::test_rotation_ledger now enforces, so
-    # the r8-stray class of miss can't recur) rotate in, plus the
-    # round-11 debut (PRF over the persisted index, VERDICT r10 #3 —
-    # debut-round driver rows per the ann_ivfpq_persisted_topk
-    # precedent). All six re-verified oracle-green at sf0.01 pre-swap.
-    # Every demotion is a 3x driver-green veteran whose family keeps an
-    # in-window carrier (noted inline); demotions stay oracle-checked in
-    # extras via tools/check_oracle.py. The six 1x-green wave-15
-    # promotions all stay in-window (VERDICT r10 #8).
-    _promote_r11 = [
-        "ann_ivfpq_federated_topk",   # sharded federated ANN (r10 late extra)
-        "doc_bm25_incremental_topk",  # inverted-index append path (r10 late extra)
-        "doc_bm25_prf_search",        # RM3 two-pass expansion (r10 late extra)
-        "doc_hybrid_rrf_search_federated",  # hybrid over the sharded corpus (r10 late extra)
-        "doc_cluster_quality_canonicals",   # the r8 stray the ledger missed
-        "doc_bm25_prf_search_persisted",    # r11 debut: PRF on the persisted index
-    ]
-    _demote_r11 = [
-        "ann_ivf_trained_probe3",    # 3x green; ANN keeps both persisted ivfpq tiers + federated (entering) + the hybrids' semantic sides
-        "emb_hard_negatives",        # 3x green; contrastive mining carried by doc_contrastive_pairs
-        "doc_quality_avg_precision", # 3x green; evaluation tier carried by doc_quality_logreg + quality-aware canonicals (entering)
-        "doc_curation_report",       # 3x green; curation composition carried by corpus_training_batches
-        "orders_loo_priority_encoding",  # 3x green; target-encoding family carried by doc_source_woe
-        "lineitem_corr_matrix",      # 3x green; stats-audit family carried by lineitem_fd_violations + orders_profile
-    ]
-    for _n in _promote_r11:
-        reg[_n] = extra.pop(_n)
-    for _n in _demote_r11:
-        extra[_n] = reg.pop(_n)
-
-    # ---- round-11 late debuts (wave 16b) -------------------------------
-    # New capability built mid-round enters the window immediately (the
-    # debut-round-driver-row rule); one more multi-green veteran demotes
-    # with an in-window family carrier.
-    _promote_r11b = [
-        "doc_bm25_federated_topk",   # r11 debut: exact federated BM25 over per-shard indexes
-        "doc_retrieval_rank_metrics",  # r11 debut: nDCG@5 + MRR retrieval evaluation
-        "doc_phrase_search_persisted",  # r11 debut: persisted positional index
-        "doc_proximity_search",      # r11 debut: proximity over the positional index
-    ]
-    _demote_r11b = [
-        "events_approx_quantiles",   # 3x green; distribution-profile family carried by orders_profile + events_type_drift_psi
-        "events_transitions",        # 3x green; events family carried by events_trailing_7d + events_type_drift_psi + events_interpolated_daily + events_multiplicative_means
-        "orders_profile",            # 3x green; stats-profile family carried by lineitem_fd_violations + events_type_drift_psi
-        "semantic_near_dup_crosscheck",  # 2x green; near-dup family carried by doc_incremental_dedup_persisted + doc_winnow_overlap + doc_leakage_safe_split + doc_contamination_safe_split
-    ]
-    for _n in _promote_r11b:
-        reg[_n] = extra.pop(_n)
-    for _n in _demote_r11b:
-        extra[_n] = reg.pop(_n)
-
-    # ---- round-12 rotation (wave 17) -----------------------------------
-    # doc_phrase_slop_search debuts in-window (the debut-round-driver-row
-    # rule); the four wave-16b debuts stay for their second driver
-    # exposure (VERDICT r11 #5). One 4x-green veteran demotes WITH
-    # in-window family carriers: ann_ivfpq_persisted_topk's persisted-ANN
-    # family remains covered by ann_ivfpq_incremental_topk +
-    # ann_ivfpq_federated_topk (+ the persisted hybrid's semantic side).
-    _promote_r12 = [
-        "doc_phrase_slop_search",    # r12 debut: sloppy phrase over the v2 array layout
-        "doc_bm25_maintained_topk",  # r12 debut: stream-maintained BM25 index search
-        "doc_cooccurrence_search",   # r12 debut: n-term window co-occurrence (positional)
-    ]
-    _demote_r12 = [
-        "ann_ivfpq_persisted_topk",  # 4x green; persisted-ANN family carried by ann_ivfpq_incremental_topk + ann_ivfpq_federated_topk
-        "revenue_incremental_merge", # 4x green; txlog/incremental family carried by files_provenance (txlog) + doc_bm25_incremental_topk + doc_incremental_dedup_persisted
-        "doc_hybrid_rrf_search",     # 3x green; FOUR hybrid variants stay in-window (ivf/pq/persisted/federated)
-    ]
-    for _n in _promote_r12:
-        reg[_n] = extra.pop(_n)
-    for _n in _demote_r12:
-        extra[_n] = reg.pop(_n)
-
-    # ---- round-13 rotation (wave 18) -----------------------------------
-    # The four round-13 debuts enter with their debut-round driver row
-    # (VERDICT r12 #2 + #7): the compaction triptych (BM25 / positional /
-    # IVF-PQ compacted searches — each bit-equal to its source index, so
-    # each reuses its family's oracle verbatim) and the NB maintenance
-    # stream's scoring twin. Every demotion is the entering debut's OWN
-    # multi-green family twin — the tightest possible carrier (the debut
-    # literally reuses the demoted entry's oracle or its family's):
-    _promote_r13 = [
-        "doc_bm25_compacted_topk",       # r13 debut: compacted BM25 search
-        "doc_phrase_search_compacted",   # r13 debut: stream→compacted positional
-        "ann_ivfpq_compacted_topk",      # r13 debut: compacted IVF-PQ search
-        "doc_nb_maintained_classifier",  # r13 debut: NB maintenance stream scoring
-        "ann_ivfpq_maintained_topk",     # r13 debut: IVF-PQ maintenance stream search
-    ]
-    _demote_r13 = [
-        "ann_ivfpq_incremental_topk",    # 5x green; persisted-ANN family carried by ann_ivfpq_compacted_topk (same oracle) + ann_ivfpq_federated_topk
-        "doc_nb_persisted_classifier",   # 4x green; NB family carried by doc_nb_maintained_classifier (same oracle) + doc_nb_lang_classifier + doc_uncertainty_sample
-        "doc_bm25_persisted_topk",       # 3x green; persisted-BM25 family carried by doc_bm25_compacted_topk (same oracle) + maintained/incremental/federated/PRF-persisted
-        "doc_phrase_search_persisted",   # 2x green; positional family carried by doc_phrase_search_compacted (same oracle) + proximity + slop + co-occurrence
-        "doc_winnow_overlap",            # 4x green; overlap/near-dup family carried by doc_incremental_dedup_persisted + doc_leakage_safe_split + doc_contamination_safe_split (all in-window)
-    ]
-    for _n in _promote_r13:
-        reg[_n] = extra.pop(_n)
-    for _n in _demote_r13:
-        extra[_n] = reg.pop(_n)
-    assert len(reg) == 50, f"post-rotation window must be 50, got {len(reg)}"
-
-    # ---- round-14 rotation (wave 19): deliberate HOLD ------------------
-    # VERDICT r13 #1: the six r13 debuts are 1×-green and the safe
-    # demotion pool is thin (most in-window veterans are themselves only
-    # 1-3× green). No new oracle-backed query families landed this round
-    # (the round-14 surfaces — retire_index_dir, ivfpq_remediate_drift,
-    # PNG palette/interlace — are admin/orchestration/codec code with
-    # pytest gates, not query shapes), so the window holds steady and
-    # the r14 driver run SECOND-greens the entire wave-18 cohort in
-    # place. The never-driver-checked ledger stays empty by construction
-    # (tests/test_round11_ops.py::test_rotation_ledger_never_checked_all_in_window).
+    # the driver evaluates the FIRST 50 queries() entries: exactly these,
+    # in this order, every one oracle-backed. Everything else in the table
+    # is an extra — outside the driver's window but still oracle-checked
+    # locally (tools/check_oracle.py) and benched (bench.py).
+    window = (
+        "fact_ventas",
+        "part_copurchase_assortativity",
+        "lineitem_fd_violations",
+        "events_value_band_rangejoin_bucketed",
+        "doc_source_woe",
+        "top_discount_lines_with_ties",
+        "doc_bpe_token_counts",
+        "doc_contrastive_pairs",
+        "doc_lang_resample",
+        "doc_stratified_sample",
+        "emb_centroid_drift",
+        "events_interpolated_daily",
+        "events_multiplicative_means",
+        "events_trailing_7d",
+        "events_type_drift_psi",
+        "files_provenance",
+        "order_priority_exists",
+        "customer_order_distribution",
+        "discount_order_rollup",
+        "corpus_training_batches",
+        "doc_incremental_dedup_persisted",
+        "doc_nb_lang_classifier",
+        "doc_quality_logreg",
+        "doc_dsir_sample",
+        "doc_temperature_resample",
+        "doc_source_quality_gate",
+        "doc_uncertainty_sample",
+        "emb_cluster_balanced_sample",
+        "doc_leakage_safe_split",
+        "doc_hybrid_rrf_search_ivf",
+        "doc_hybrid_rrf_search_pq",
+        "doc_contamination_safe_split",
+        "doc_hybrid_rrf_search_persisted",
+        "ann_ivfpq_federated_topk",
+        "doc_bm25_incremental_topk",
+        "doc_bm25_prf_search",
+        "doc_hybrid_rrf_search_federated",
+        "doc_cluster_quality_canonicals",
+        "doc_bm25_prf_search_persisted",
+        "doc_bm25_federated_topk",
+        "doc_retrieval_rank_metrics",
+        "doc_proximity_search",
+        "doc_phrase_slop_search",
+        "doc_bm25_maintained_topk",
+        "doc_cooccurrence_search",
+        "doc_bm25_compacted_topk",
+        "doc_phrase_search_compacted",
+        "ann_ivfpq_compacted_topk",
+        "doc_nb_maintained_classifier",
+        "ann_ivfpq_maintained_topk",
+    )
+    reg = {name: table[name] for name in window}
+    extra = {name: fn for name, fn in table.items() if name not in reg}
+    assert len(reg) == 50, f"driver window must hold exactly 50 queries, got {len(reg)}"
     return reg, extra
 
 

@@ -366,8 +366,7 @@ def main() -> None:
     spark = get_spark("bench")
     # headline set spans both registries (driver window + extras) so the
     # per-query series stays comparable across rounds
-    qs = dict(entrymod.queries())
-    qs.update(entrymod.extra_queries())
+    qs = entrymod.all_queries()
 
     # warm the JVM outside the measured window: file listing + codegen
     # compilation + shuffle machinery (join/window/agg/explode on tiny data)

@@ -70,14 +70,22 @@ def build_concurrently(builders: list) -> list:
         return [builders[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
+    from py4j.clientserver import ClientServer
+    from pyspark import SparkContext, inheritable_thread_target
     from pyspark.sql import SparkSession
 
     session = SparkSession.getActiveSession()
-    # Spark 4 wants the session handle so thread tags/local properties are
-    # inherited without the "Tags will not be inherited" warning; fall
-    # back to the bare wrapper when no session is active yet.
-    wrap = inheritable_thread_target(session) if session is not None else inheritable_thread_target
+    # In pinned-thread mode (a ClientServer gateway) Spark 4 wants the
+    # session handle so thread tags/local properties are inherited without
+    # the "Tags will not be inherited" warning. With pinning off,
+    # inheritable_thread_target returns its argument unchanged, so given
+    # the session it would hand back the session instead of a wrapper.
+    pinned = isinstance(SparkContext._gateway, ClientServer)
+    wrap = (
+        inheritable_thread_target(session)
+        if pinned and session is not None
+        else inheritable_thread_target
+    )
     with ThreadPoolExecutor(max_workers=len(builders)) as pool:
         futures = [pool.submit(wrap(b)) for b in builders]
         return [f.result() for f in futures]

@@ -339,6 +339,17 @@ def psi_report_categorical(
     )
 
 
+def _join_null_safe(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
+    """Inner join on ``keys`` that matches NULL to NULL; one copy of each
+    key column is kept (the left one)."""
+    right = right.select(
+        *[F.col(k).alias(f"_rk_{k}") for k in keys],
+        *[c for c in right.columns if c not in keys],
+    )
+    cond = [F.col(k).eqNullSafe(F.col(f"_rk_{k}")) for k in keys]
+    return left.join(right, cond).drop(*[f"_rk_{k}" for k in keys])
+
+
 def fd_violations(
     df: DataFrame,
     determinants: list[str],
@@ -368,9 +379,13 @@ def fd_violations(
        no sort anywhere), level 2 reduces to per-key ``n_rows`` /
        ``n_variants`` and keeps only violators;
     2. the first/last variant strings are fetched by re-joining the
-       (broadcast, violator-only) keys against the level-1 groups — the
-       string min/max SortAggregate now runs over the violating handful
-       of rows instead of the full table.
+       violator-only keys against the level-1 groups — the string
+       min/max SortAggregate now runs over the violating slice of rows
+       instead of the full table. The join is not forced to broadcast:
+       when most keys violate, the planner falls back to a shuffle join.
+
+    Both re-joins are null-safe, so a NULL determinant is one group that
+    is reported like any other (GROUP BY semantics), never dropped.
 
     Same rows, same values: level-1/level-2 counts are exactly the old
     ``count(*)`` / ``count_distinct``; min/max over a violating key's
@@ -389,11 +404,11 @@ def fd_violations(
         .filter(F.col("n_variants") > 1)
     )
     variants = (
-        groups.join(F.broadcast(per.select(*determinants)), determinants)
+        _join_null_safe(groups, per.select(*determinants), determinants)
         .groupBy(*det)
         .agg(F.min("_r").alias("first_variant"), F.max("_r").alias("last_variant"))
     )
-    return per.join(variants, determinants).select(
+    return _join_null_safe(per, variants, determinants).select(
         *determinants,
         F.col("n_rows").cast("long").alias("n_rows"),
         F.col("n_variants").cast("long").alias("n_variants"),

@@ -1149,6 +1149,25 @@ def test_durable_materialization_equals_ephemeral(spark, tmp_path):
     assert (tmp_path / "cent" / "_SUCCESS").exists()
 
 
+def test_build_concurrently_without_pinned_threads(monkeypatch):
+    """With pinned-thread mode off (PYSPARK_PIN_THREAD=false) the py4j
+    gateway is not a ClientServer and pyspark's inheritable_thread_target
+    returns its argument unchanged. The builders must still run, and
+    their results come back in builder order."""
+    import time
+
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    from data_warehouse_punta_fina_spark.operators.materialize import build_concurrently
+
+    session = object.__new__(SparkSession)  # an active session handle
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    monkeypatch.setattr(SparkSession, "getActiveSession", classmethod(lambda cls: session))
+    builders = [lambda: (time.sleep(0.2), "slow")[1], lambda: "fast", lambda: 3]
+    assert build_concurrently(builders) == ["slow", "fast", 3]
+
+
 def test_incremental_lsh_dedup_rejects_mismatched_index(spark, tmp_path):
     """A persisted band index built under different (num_hashes, bands,
     shingle_n) would silently admit every new doc (mismatched band keys

@@ -115,6 +115,15 @@ def test_fd_violations_reports_only_violators(spark):
     assert out[1]["first_variant"] == "a" and out[1]["last_variant"] == "b"
     assert out[3]["first_variant"] == "<null>"  # NULL renders explicitly
 
+    # a NULL determinant is one group, reported like any other key
+    df = spark.createDataFrame(
+        [(None, "a"), (None, "b"), (1, "x"), (1, "y")], "k int, dep string"
+    )
+    out = {r["k"]: r for r in fd_violations(df, ["k"], ["dep"]).collect()}
+    assert set(out) == {None, 1}
+    assert out[None]["n_rows"] == 2 and out[None]["n_variants"] == 2
+    assert out[None]["first_variant"] == "a" and out[None]["last_variant"] == "b"
+
 
 def test_fd_violations_multi_column_rendering(spark):
     from data_warehouse_punta_fina_spark.operators.quality import fd_violations

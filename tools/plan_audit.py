@@ -114,9 +114,8 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("plan_audit")
-    # audited set spans both registries (driver window rotates per round)
-    qs = dict(entrymod.queries())
-    qs.update(entrymod.extra_queries())
+    # audited set spans both registries (driver window + extras)
+    qs = entrymod.all_queries()
 
     def build(name):
         if name == "fact_ventas":

@@ -49,8 +49,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     spark = get_spark("profile")
-    qs = dict(entrymod.queries())
-    qs.update(entrymod.extra_queries())
+    qs = entrymod.all_queries()
 
     # same warm-up the bench does: page cache + codegen + shuffle machinery
     for t in ("lineitem", "orders", "part", "customer", "supplier",
