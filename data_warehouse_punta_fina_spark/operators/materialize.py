@@ -61,10 +61,16 @@ def build_concurrently(builders: list) -> list:
     the idle cores of one leg's stage tail with the other leg's tasks.
 
     Builders must be independent (no shared mutable state); each
-    normally ends in ``materialize(...)`` / ``localCheckpoint`` so its
-    work actually happens inside the thread. Exceptions propagate to
-    the caller. Plans, results and their values are identical to the
-    sequential construction — only the wall-clock interleaving changes.
+    normally ends in an action so its work actually happens inside the
+    thread — ``materialize(...)`` / ``localCheckpoint``, or a write (the
+    star build runs each table's build, parquet write and count as one
+    builder, ``plans.pipeline.run_star_build``). In pinned-thread mode
+    (PySpark's default) each thread inherits the caller's local
+    properties (job group, job description), so group cancellation and
+    job attribution cover its jobs. Exceptions propagate to the caller
+    once every builder has finished. Plans, results and their values are
+    identical to the sequential construction — only the wall-clock
+    interleaving changes.
     """
     if len(builders) == 1:
         return [builders[0]()]

@@ -1,19 +1,35 @@
 """Pipeline orchestration (reference SURVEY.md §3.1; `main.py:94-154`).
 
-dims → facts, with the staged financial chain materialized once:
-the reference writes fact_transacciones to the DW and reads it back for
-fact_balance / fact_estado_resultados (`complete_fact_builder.py:918-932`);
-here the journal is cached (or persisted to ``warehouse_dir``) and fed
-forward — one computation, two consumers.
+The reference runs two ordered phases, dims then facts, and writes
+fact_transacciones to the DW only to read it back for fact_balance /
+fact_estado_resultados (`complete_fact_builder.py:918-932`). Those two
+edges, dims → facts and journal → ledger, are the only real dependencies
+in the star build. Here the journal is cached and fed forward instead
+(one computation, two consumers), and every table's whole life (build
+its DataFrame, write it, count it) runs in its own driver thread
+(``operators.materialize.build_concurrently``), in two waves:
+
+1. the 8 dims, fact_inventario and fact_transacciones — the journal's
+   write materializes its cache;
+2. fact_ventas over the wave-1 dim_producto / dim_cliente / dim_almacen,
+   and the two ledger facts over the cached journal.
+
+Why threads: at these scales the build is bound by the per-job floor,
+not by data. Built one table after another it is ~100 small Spark jobs
+in series with the driver-side DataFrame construction (thousands of py4j
+round trips) between them, and most cores sit idle. The threads overlap
+both; every plan, and so every written row, is the serial composition's.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_warehouse_punta_fina_spark.operators.materialize import build_concurrently
 from data_warehouse_punta_fina_spark.plans.dims import (
     build_dim_almacen,
     build_dim_cliente,
@@ -33,12 +49,42 @@ from data_warehouse_punta_fina_spark.plans.facts import (
 )
 from data_warehouse_punta_fina_spark.sources.writers import write_parquet
 
+_DIMS = {
+    "dim_fecha": build_dim_fecha,
+    "dim_producto": build_dim_producto,
+    "dim_cliente": build_dim_cliente,
+    "dim_usuario": build_dim_usuario,
+    "dim_almacen": build_dim_almacen,
+    "dim_proveedor": build_dim_proveedor,
+    "dim_cuenta_contable": build_dim_cuenta_contable,
+    "dim_promocion": build_dim_promocion,
+}
+# the key order of ``PipelineResult.tables``
+_TABLES = (
+    *_DIMS,
+    "fact_ventas",
+    "fact_inventario",
+    "fact_transacciones",
+    "fact_balance",
+    "fact_estado_resultados",
+)
+
 
 @dataclass
 class PipelineResult:
     tables: dict[str, DataFrame]
     counts: dict[str, int] = field(default_factory=dict)
     seconds: float = 0.0
+
+
+class StarBuildError(RuntimeError):
+    """One star table failed; ``table`` and ``stage`` (build, write or
+    count) say where, and ``__cause__`` is the original exception."""
+
+    def __init__(self, table: str, stage: str):
+        super().__init__(f"star build failed at {table} ({stage})")
+        self.table = table
+        self.stage = stage
 
 
 def run_star_build(
@@ -48,44 +94,64 @@ def run_star_build(
     count: bool = True,
 ) -> PipelineResult:
     """Build every dim + fact. If ``warehouse_dir`` is set, each table is
-    written as parquet (facts partitioned where it pays off)."""
+    written as parquet; if ``count``, each is counted into ``counts``.
+
+    The worker threads inherit the caller's job group and description
+    (in PySpark's default pinned-thread mode), so ``cancelJobGroup`` and
+    job attribution cover the whole build. A failing table raises
+    ``StarBuildError`` naming it.
+
+    ``tables["fact_transacciones"]`` is returned cached: the caller owns
+    that cache and unpersists it when done (on failure the build
+    unpersists it itself)."""
     t0 = time.time()
-    dims: dict[str, DataFrame] = {
-        "dim_fecha": build_dim_fecha(spark, sf_dir),
-        "dim_producto": build_dim_producto(spark, sf_dir),
-        "dim_cliente": build_dim_cliente(spark, sf_dir),
-        "dim_usuario": build_dim_usuario(spark, sf_dir),
-        "dim_almacen": build_dim_almacen(spark, sf_dir),
-        "dim_proveedor": build_dim_proveedor(spark, sf_dir),
-        "dim_cuenta_contable": build_dim_cuenta_contable(spark, sf_dir),
-        "dim_promocion": build_dim_promocion(spark, sf_dir),
+    built: dict[str, DataFrame] = {}
+    counts: dict[str, int] = {}
+
+    def life(name, build):
+        def run():
+            stage = "build"
+            try:
+                df = built[name] = build()
+                if warehouse_dir:
+                    stage = "write"
+                    write_parquet(df, f"{warehouse_dir}/{name}")
+                if count:
+                    stage = "count"
+                    counts[name] = df.count()
+            except Exception as exc:
+                raise StarBuildError(name, stage) from exc
+
+        return run
+
+    wave_1 = {
+        **{name: partial(build, spark, sf_dir) for name, build in _DIMS.items()},
+        "fact_inventario": partial(build_fact_inventario, spark, sf_dir),
+        "fact_transacciones": lambda: build_fact_transacciones(spark, sf_dir).cache(),
     }
-
-    fact_ventas = build_fact_ventas(
-        spark, sf_dir, dims["dim_producto"], dims["dim_cliente"], dims["dim_almacen"]
-    )
-    fact_inventario = build_fact_inventario(spark, sf_dir)
-
-    journal = build_fact_transacciones(spark, sf_dir)
-    # staged self-referential dataflow: materialize once, consume twice
-    journal = journal.cache()
-    fact_balance = build_fact_balance(journal, dims["dim_cuenta_contable"])
-    fact_estado = build_fact_estado_resultados(journal)
-
-    tables = {
-        **dims,
-        "fact_ventas": fact_ventas,
-        "fact_inventario": fact_inventario,
-        "fact_transacciones": journal,
-        "fact_balance": fact_balance,
-        "fact_estado_resultados": fact_estado,
+    wave_2 = {
+        "fact_ventas": lambda: build_fact_ventas(
+            spark, sf_dir, built["dim_producto"], built["dim_cliente"], built["dim_almacen"]
+        ),
+        "fact_balance": lambda: build_fact_balance(
+            built["fact_transacciones"], built["dim_cuenta_contable"]
+        ),
+        "fact_estado_resultados": lambda: build_fact_estado_resultados(
+            built["fact_transacciones"]
+        ),
     }
+    try:
+        for wave in (wave_1, wave_2):
+            build_concurrently([life(name, build) for name, build in wave.items()])
+    except BaseException:
+        # build_concurrently returns only after every thread of the wave
+        # has finished, so no thread still uses the journal here
+        if "fact_transacciones" in built:
+            built["fact_transacciones"].unpersist()
+        raise
 
-    result = PipelineResult(tables=tables)
-    if warehouse_dir:
-        for name, df in tables.items():
-            write_parquet(df, f"{warehouse_dir}/{name}")
+    result = PipelineResult(tables={name: built[name] for name in _TABLES})
     if count:
-        result.counts = {name: df.count() for name, df in tables.items()}
+        result.counts = {name: counts[name] for name in _TABLES}
     result.seconds = time.time() - t0
     return result

@@ -17,9 +17,10 @@ SF_DIR = "/root/testdata/sf0.001"
 # persisted-index lifecycle/remediation probes, registry-wide subprocess
 # scans, adversarial-partition invariants). The tier stays green and
 # runnable: `pytest tests/ -m slow` (or `-m ""` for everything).
-# Three equivalence guards stay in the default gate despite their cost,
+# Four equivalence guards stay in the default gate despite their cost,
 # because they guard the riskiest rewrites: IVF-PQ equals brute force,
-# BM25 stream equals batch, and persisted BM25 equals in-query.
+# BM25 stream equals batch, persisted BM25 equals in-query, and the
+# concurrent star build equals the serial one.
 SLOW_TESTS = {
     "test_no_partition_defined_warnings_registry_wide",
     "test_continuous_dedup_ingest_stream",
@@ -38,7 +39,6 @@ SLOW_TESTS = {
     "test_ivfpq_refresh_if_drifted_rebuilds_and_recovers",
     "test_dedup_clusters_star_equals_label_propagation",
     "test_watermark_drops_late_data_in_append",
-    "test_pipeline_runs_end_to_end",
     "test_rrf_fusion_invariant_under_adversarial_partitions",
     "test_drop_duplicates_within_watermark_bounds_state",
     "test_ivfpq_maintenance_stream_equals_batch_appends_and_replay_safe",

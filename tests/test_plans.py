@@ -3,6 +3,7 @@ invariants (SURVEY.md §5.2) as assertions over the real builders."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -108,29 +109,121 @@ def test_financial_chain_invariants(spark, sf_dir):
     journal.unpersist()
 
 
+STAR_TABLES = [
+    "dim_fecha",
+    "dim_producto",
+    "dim_cliente",
+    "dim_usuario",
+    "dim_almacen",
+    "dim_proveedor",
+    "dim_cuenta_contable",
+    "dim_promocion",
+    "fact_ventas",
+    "fact_inventario",
+    "fact_transacciones",
+    "fact_balance",
+    "fact_estado_resultados",
+]
+
+
+def _serial_star_build(spark, sf_dir, warehouse_dir):
+    """The build_* functions run_star_build composes, built and written one
+    table after another."""
+    from data_warehouse_punta_fina_spark.plans import dims as D
+    from data_warehouse_punta_fina_spark.plans import facts as Fa
+    from data_warehouse_punta_fina_spark.sources.writers import write_parquet
+
+    t = {
+        name: getattr(D, f"build_{name}")(spark, sf_dir)
+        for name in STAR_TABLES
+        if name.startswith("dim_")
+    }
+    t["fact_ventas"] = Fa.build_fact_ventas(
+        spark, sf_dir, t["dim_producto"], t["dim_cliente"], t["dim_almacen"]
+    )
+    t["fact_inventario"] = Fa.build_fact_inventario(spark, sf_dir)
+    journal = t["fact_transacciones"] = Fa.build_fact_transacciones(spark, sf_dir).cache()
+    t["fact_balance"] = Fa.build_fact_balance(journal, t["dim_cuenta_contable"])
+    t["fact_estado_resultados"] = Fa.build_fact_estado_resultados(journal)
+    for name in STAR_TABLES:
+        write_parquet(t[name], f"{warehouse_dir}/{name}")
+    journal.unpersist()
+
+
 def test_pipeline_runs_end_to_end(spark, sf_dir, tmp_path):
+    """The concurrent two-wave build writes exactly the tables the serial
+    composition of the same builders writes, row for row."""
+    import duckdb
+
     from data_warehouse_punta_fina_spark.plans.pipeline import run_star_build
 
     result = run_star_build(spark, sf_dir, warehouse_dir=str(tmp_path / "wh"))
-    assert set(result.counts) == {
-        "dim_fecha",
-        "dim_producto",
-        "dim_cliente",
-        "dim_usuario",
-        "dim_almacen",
-        "dim_proveedor",
-        "dim_cuenta_contable",
-        "dim_promocion",
-        "fact_ventas",
-        "fact_inventario",
-        "fact_transacciones",
-        "fact_balance",
-        "fact_estado_resultados",
-    }
+    result.tables["fact_transacciones"].unpersist()
+    assert list(result.tables) == STAR_TABLES
+    assert list(result.counts) == STAR_TABLES
     assert all(v > 0 for v in result.counts.values())
-    # parquet written and re-readable
-    reread = spark.read.parquet(str(tmp_path / "wh" / "fact_ventas"))
-    assert reread.count() == result.counts["fact_ventas"]
+
+    _serial_star_build(spark, sf_dir, str(tmp_path / "serial"))
+    con = duckdb.connect()
+    for name in STAR_TABLES:
+        got = f"SELECT * FROM read_parquet('{tmp_path}/wh/{name}/*.parquet')"
+        want = f"SELECT * FROM read_parquet('{tmp_path}/serial/{name}/*.parquet')"
+        assert con.sql(f"SELECT count(*) FROM ({got})").fetchone()[0] == result.counts[name]
+        for a, b in ((got, want), (want, got)):
+            extra = con.sql(f"SELECT count(*) FROM ({a} EXCEPT ALL {b})").fetchone()[0]
+            assert extra == 0, name
+
+
+@pytest.mark.parametrize("table", ["dim_promocion", "fact_balance"])
+def test_pipeline_failure_names_its_table(spark, sf_dir, monkeypatch, table):
+    """A failing table (wave 1 or wave 2) is named in the error, the original
+    exception is its cause, and the cached journal is released."""
+    from pyspark import StorageLevel
+
+    from data_warehouse_punta_fina_spark.plans import pipeline
+
+    boom = ValueError("boom")
+
+    def fail(*args):
+        raise boom
+
+    if table in pipeline._DIMS:
+        monkeypatch.setitem(pipeline._DIMS, table, fail)
+    else:
+        monkeypatch.setattr(pipeline, f"build_{table}", fail)
+    journals = []
+    build_journal = pipeline.build_fact_transacciones
+
+    def keep_journal(*args):
+        journals.append(build_journal(*args))
+        return journals[-1]
+
+    monkeypatch.setattr(pipeline, "build_fact_transacciones", keep_journal)
+    with pytest.raises(pipeline.StarBuildError, match=table) as err:
+        pipeline.run_star_build(spark, sf_dir, warehouse_dir=None, count=False)
+    assert (err.value.table, err.value.stage) == (table, "build")
+    assert err.value.__cause__ is boom
+    assert journals[0].storageLevel == StorageLevel.NONE
+
+
+def test_pipeline_jobs_inherit_callers_job_group(spark, sf_dir):
+    """Every job the build's worker threads launch carries the caller's job
+    group, so cancelJobGroup and per-group attribution cover the build."""
+    from data_warehouse_punta_fina_spark.plans.pipeline import run_star_build
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test-star-build-group"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "star build under a caller's job group")
+    try:
+        result = run_star_build(spark, sf_dir, warehouse_dir=None, count=True)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    result.tables["fact_transacciones"].unpersist()
+    assert tracker.getJobIdsForGroup(group)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
 def test_load_table_normalizes_both_timestamp_encodings(spark, tmp_path):
