@@ -3,7 +3,10 @@
 ``queries()`` exposes every implemented operator family from SURVEY.md §2
 plus the north-star extensions (dedup / similarity / text analysis /
 multimodal); ``oracle_sql()`` gives the DuckDB-equivalent ANSI SQL for
-each. Cross-engine exactness strategy:
+each. Every query is declared once, in a family module of
+``data_warehouse_punta_fina_spark/registry/``: its builder, its oracle SQL
+and its decimal output columns side by side. This module only turns those
+declarations into the contract. Cross-engine exactness strategy:
 
 - money/ratio rounding uses the portable primitive
   ``floor(x·10^s + 0.5)/10^s`` (functions/money.py pround — Spark round
@@ -22,45 +25,23 @@ each. Cross-engine exactness strategy:
   differently in the driver's hasher (round-1 verdict: all 23 hash
   failures were decimal columns with bit-identical values).
 
-``queries()`` returns exactly 50 entries — the driver's checked window —
-one per operator family; same-family variants and the individual literal
-catalog dims (merged into the ``dim_catalogs`` probe) live in
-``extra_queries()``, still oracle-checked by tools/check_oracle.py and
-benched by bench.py.
+``queries()`` returns exactly 50 entries — the driver's checked window,
+listed in ``WINDOW`` below; every other declared query (same-family
+variants, the individual literal catalog dims, advanced tiers) lives in
+``extra_queries()`` in declaration order, still oracle-checked by
+tools/check_oracle.py and benched by bench.py.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from data_warehouse_punta_fina_spark.registry import DECLARED
+from data_warehouse_punta_fina_spark.registry.star import _DIM_MEMO
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SF_SMOKE = "/root/testdata/sf0.001"
-
-# ANSI SQL executed VERBATIM by both Spark SQL and DuckDB (shared dialect)
-_TOP_CUSTOMER_PER_NATION_SQL = """
-SELECT nacion, cliente, saldo FROM (
-  SELECT n_name AS nacion, c_name AS cliente,
-         CAST(FLOOR(c_acctbal * 100 + 0.5) / 100 AS DOUBLE) AS saldo,
-         ROW_NUMBER() OVER (PARTITION BY n_name ORDER BY c_acctbal DESC, c_custkey) AS rn
-  FROM customer JOIN nation ON c_nationkey = n_nationkey
-) ranked WHERE rn = 1
-"""
-
-_REVENUE_BY_NATION_SQL = """
-SELECT n_name AS nacion,
-       CAST(SUM(CAST(FLOOR((l_extendedprice * (1 - l_discount)) * 100 + 0.5) / 100 AS DECIMAL(15,2))) AS DOUBLE) AS revenue,
-       COUNT(*) AS n_lineas
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey  = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-GROUP BY n_name
-"""
-
-
-_DIM_MEMO: dict = {}
 
 
 def reset_session_memo() -> None:
@@ -74,35 +55,6 @@ def reset_session_memo() -> None:
         except Exception:  # noqa: BLE001 — a stopped session is fine
             pass
     _DIM_MEMO.clear()
-
-
-def _catalog(builder_name: str):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.plans import dims_catalog
-
-        return getattr(dims_catalog, builder_name)(spark, sf_dir)
-
-    return run
-
-
-def _legacy(builder_name: str):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.plans import dims_legacy
-
-        return getattr(dims_legacy, builder_name)(spark, sf_dir)
-
-    return run
-
-
-# --- portable-rounding SQL renderers (mirror functions/money.py) ----------
-
-
-def _r2(e: str, p: int = 15) -> str:
-    return f"CAST(FLOOR(({e}) * 100 + 0.5) / 100 AS DECIMAL({p},2))"
-
-
-def _r6(e: str) -> str:
-    return f"CAST(FLOOR(({e}) * 1000000 + 0.5) / 1000000 AS DECIMAL(12,6))"
 
 
 # --- decimal→double output boundary ----------------------------------------
@@ -134,175 +86,11 @@ def _dbl_out(fn):
     return run
 
 
-def _dblsql(sql: str, cols: list[str]) -> str:
+def _dblsql(sql: str, cols: Sequence[str]) -> str:
     """Oracle twin of :func:`_dbl_out`: re-project the listed decimal
     columns as DOUBLE (DuckDB ``* REPLACE`` star expression)."""
     rep = ", ".join(f"CAST({c} AS DOUBLE) AS {c}" for c in cols)
     return f"SELECT * REPLACE ({rep}) FROM ({sql}) _q"
-
-
-# decimal output columns per query (both dicts) — applied to the oracle SQL
-# via _dblsql; the Spark side discovers them from the schema in _dbl_out.
-_DEC_COLS: dict[str, list[str]] = {
-    "dim_producto": ["precio_base", "costo_estandar", "margen_pct"],
-    "dim_cliente": ["saldo"],
-    "fact_ventas": [
-        "cantidad", "precio_unitario", "subtotal_bruto", "descuento",
-        "subtotal", "impuesto", "total", "costo_total", "margen",
-    ],
-    "fact_inventario": ["cantidad", "stock_anterior", "stock_resultante"],
-    "fact_transacciones": ["monto"],
-    "fact_balance": ["debitos", "creditos", "movimiento_neto", "saldo_inicial", "saldo_final"],
-    "fact_estado_resultados": ["ingresos", "costos", "gastos", "utilidad_bruta", "utilidad_neta"],
-    "star_revenue_by_pais_trimestre": ["ventas_netas", "margen_total"],
-    "lineitem_pricing_summary": [
-        "sum_qty", "sum_base_price", "sum_disc_price", "sum_charge", "avg_qty", "avg_price",
-    ],
-    "dedup_lineitem": ["cantidad", "precio"],
-    "events_tumbling_window": ["total_value"],
-    "events_value_band_rangejoin": ["total_value"],
-    "events_value_band_rangejoin_bucketed": ["total_value"],
-    "pnl_unpivot": ["monto"],
-    "events_value_stats": ["media", "desv_estandar"],
-    "customer_balance_quartiles": ["saldo_total", "saldo_min", "saldo_max"],
-    "customer_rfm": ["monetary_total"],
-    "basket_part_affinity": ["support", "confidence", "lift"],
-    "part_pagerank": ["rank"],
-    "revenue_anomaly_weeks": ["rev", "rev_prev"],
-    "doc_weighted_sample": ["sample_key"],
-    "salted_revenue_by_flag": ["sum_qty", "max_price"],
-    "order_reconciliation": ["total_db", "total_csv", "total"],
-    "lineitem_rollup": ["sum_qty"],
-    "lineitem_cube": ["sum_qty"],
-    "user_last_event": ["last_value", "first_value", "total_value"],
-    "doc_text_stats": ["punct_ratio", "stopword_ratio", "quality"],
-    "doc_repeated_spans": ["dup_fraction"],
-    "doc_collocations": ["pmi"],
-    "events_drift_psi": ["p_base", "p_cur", "psi_term"],
-    "events_type_drift_psi": ["p_base", "p_cur", "psi_term"],
-    "doc_quality_gate": ["quality"],
-    "doc_quality_stratified": ["quality", "pct_rank"],
-    "doc_token_budget_mix": ["quality"],
-    "doc_ngram_jaccard": ["jaccard"],
-    "doc_lsh_verified": ["jaccard"],
-    "ann_brute_topk": ["cosine"],
-    "ann_sq8_topk": ["cosine"],
-    "ann_pq_topk": ["cosine"],
-    "ann_ivfpq_topk": ["cosine"],
-    "ann_ivfpq_persisted_topk": ["cosine"],
-    "ann_ivfpq_incremental_topk": ["cosine"],
-    "ann_ivfpq_compacted_topk": ["cosine"],
-    "ann_ivfpq_maintained_topk": ["cosine"],
-    "ann_ivfpq_federated_topk": ["cosine"],
-    "emb_mmr_diverse": ["relevance"],
-    "events_type_hour_mi": ["mi_term"],
-    "events_ks_value_drift": ["f_base", "f_cur", "ks_term"],
-    "nation_revenue_concentration": ["total", "gini", "top_share"],
-    "doc_curation_report": ["quality"],
-    "doc_cluster_quality_canonicals": ["quality"],
-    "emb_hard_negatives": ["cosine"],
-    "emb_cluster_quality": ["mean_sq_dist", "mean_silhouette"],
-    "weekly_revenue_decompose": ["rev"],
-    "basket_frequent_triples": ["support"],
-    "events_linear_attribution": ["credited"],
-    "order_sample_allocation": ["std", "quota"],
-    "ann_ivf_topk": ["cosine"],
-    "ann_ivf_trained_topk": ["cosine"],
-    "ann_ivf_trained_probe3": ["cosine"],
-    "emb_near_dup": ["cosine"],
-    "emb_near_dup_trained": ["cosine"],
-    "semantic_near_dup_crosscheck": ["cosine", "jaccard"],
-    "emb_label_centroids": ["centroid"],
-    "doc_top_terms": ["salience"],
-    # extra_queries() members (mirror-checked only)
-    "ventas_daily_summary": ["subtotal_total", "descuento_total"],
-    "discount_order_rollup": ["total", "descuento_total"],
-    "top_discount_line_per_order": ["descuento"],
-    "events_sliding_window": ["total_value"],
-    "events_session_window": ["total_value"],
-    "dim_proveedor": ["saldo"],
-    "dim_orden": ["total"],
-    "dim_impuestos": ["tasa"],
-    "dim_envio": ["costo"],
-}
-
-
-def _data_fingerprint(sf_dir: str, table: str) -> str:
-    """md5 over the (name, size, mtime_ns) of a testdata table's parquet
-    file(s) — keys the persisted-index caches under .indexes/ so a
-    regenerated testdata directory can never serve a stale index."""
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    bits = []
-    for root, _dirs, files in os.walk(src):
-        for fname in sorted(files):
-            st = os.stat(os.path.join(root, fname))
-            bits.append(f"{fname}:{st.st_size}:{st.st_mtime_ns}")
-    if not bits:  # single-file parquet
-        st = os.stat(src)
-        bits.append(f"{os.path.basename(src)}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(bits).encode()).hexdigest()[:12]
-
-
-def _index_cache_dir(family: str, key: str, keep: int = 4) -> str:
-    """Resolve (and bound) the persisted-index cache slot for one
-    (family, fingerprinted-key). The cache must hold SEVERAL fingerprints
-    at once — the driver alternates SFs within one round (sf0.001 smoke →
-    sf0.01 correctness → sf0.1 bench) and evicting siblings eagerly would
-    force a rebuild at every step, hiding the steady-state search cost
-    the persisted queries exist to show. Instead keep the ``keep`` most
-    recently used slots per family (LRU by directory mtime) so .indexes/
-    stays bounded across testdata refreshes without intra-round churn.
-
-    Relocation- and concurrency-safe (round-9): the cache root derives
-    from ``__file__`` (not a hard-coded path), and eviction skips any
-    entry touched within the last hour — a concurrent session (bench run
-    alongside pytest) can be actively scanning a sibling fingerprint, and
-    deleting it mid-query would fail that reader; an hour-old entry is a
-    previous testdata generation no live query can be reading."""
-    import os
-    import shutil
-    import time
-
-    def _mtime(path: str) -> float:
-        # a concurrent session may delete an entry between listdir and
-        # stat (ADVICE r9); treat a vanished entry as already evicted:
-        # returning "now" makes it look NEWEST (sorts last in the
-        # mtime-ascending order AND fails the >1h grace), so it is
-        # neither re-deleted nor does it fail the build (ADVICE r10
-        # comment fix — the behavior was right, the explanation inverted)
-        try:
-            return os.path.getmtime(path)
-        except OSError:
-            return time.time()
-
-    fam_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".indexes", family)
-    target = os.path.join(fam_dir, key)
-    if os.path.isdir(target):
-        # LRU touch-on-use (round-10 incident): eviction is mtime-ordered
-        # with a 1h grace, but directory mtimes only change on WRITE — so
-        # an index in active use could age past the grace and be evicted
-        # by a SIBLING lookup in the same query (the federated search
-        # locates shard s0, then s0 — now the oldest entry — is deleted
-        # by s1's eviction pass before the lazy plan ever reads it).
-        # Refreshing the target's mtime on every lookup makes "used just
-        # now" and "young" the same thing, for this process and any
-        # concurrent session alike.
-        try:
-            os.utime(target, None)
-        except OSError:
-            pass
-    if os.path.isdir(fam_dir):
-        others = [e for e in os.listdir(fam_dir) if e != key]
-        if len(others) >= keep:
-            now = time.time()
-            by_age = sorted(others, key=lambda e: _mtime(os.path.join(fam_dir, e)))
-            for entry in by_age[: len(others) - (keep - 1)]:
-                if now - _mtime(os.path.join(fam_dir, entry)) > 3600.0:
-                    shutil.rmtree(os.path.join(fam_dir, entry), ignore_errors=True)
-    return target
 
 
 # --- entry -----------------------------------------------------------------
@@ -315,20 +103,76 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # --- queries ---------------------------------------------------------------
 
+# the driver evaluates the FIRST 50 queries() entries: exactly these, in
+# this order, every one oracle-backed. Every other declared query is an
+# extra — outside the driver's window but still oracle-checked locally
+# (tools/check_oracle.py) and benched (bench.py).
+WINDOW = (
+    "fact_ventas",
+    "part_copurchase_assortativity",
+    "lineitem_fd_violations",
+    "events_value_band_rangejoin_bucketed",
+    "doc_source_woe",
+    "top_discount_lines_with_ties",
+    "doc_bpe_token_counts",
+    "doc_contrastive_pairs",
+    "doc_lang_resample",
+    "doc_stratified_sample",
+    "emb_centroid_drift",
+    "events_interpolated_daily",
+    "events_multiplicative_means",
+    "events_trailing_7d",
+    "events_type_drift_psi",
+    "files_provenance",
+    "order_priority_exists",
+    "customer_order_distribution",
+    "discount_order_rollup",
+    "corpus_training_batches",
+    "doc_incremental_dedup_persisted",
+    "doc_nb_lang_classifier",
+    "doc_quality_logreg",
+    "doc_dsir_sample",
+    "doc_temperature_resample",
+    "doc_source_quality_gate",
+    "doc_uncertainty_sample",
+    "emb_cluster_balanced_sample",
+    "doc_leakage_safe_split",
+    "doc_hybrid_rrf_search_ivf",
+    "doc_hybrid_rrf_search_pq",
+    "doc_contamination_safe_split",
+    "doc_hybrid_rrf_search_persisted",
+    "ann_ivfpq_federated_topk",
+    "doc_bm25_incremental_topk",
+    "doc_bm25_prf_search",
+    "doc_hybrid_rrf_search_federated",
+    "doc_cluster_quality_canonicals",
+    "doc_bm25_prf_search_persisted",
+    "doc_bm25_federated_topk",
+    "doc_retrieval_rank_metrics",
+    "doc_proximity_search",
+    "doc_phrase_slop_search",
+    "doc_bm25_maintained_topk",
+    "doc_cooccurrence_search",
+    "doc_bm25_compacted_topk",
+    "doc_phrase_search_compacted",
+    "ann_ivfpq_compacted_topk",
+    "doc_nb_maintained_classifier",
+    "ann_ivfpq_maintained_topk",
+)
+
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """The driver-checked registry: exactly 50 entries, every one with an
     oracle_sql() twin, final projections decimal-free (_dbl_out)."""
-    reg, _ = _build_registries()
-    return {name: _dbl_out(fn) for name, fn in reg.items()}
+    assert len(set(WINDOW)) == 50, "driver window must hold exactly 50 distinct queries"
+    return {name: _dbl_out(DECLARED[name].build) for name in WINDOW}
 
 
 def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Same-family variants, individual catalog dims, and advanced tiers
-    beyond the driver's 50-query window — tools/check_oracle.py checks
-    them alongside queries() by default."""
-    _, extra = _build_registries()
-    return {name: _dbl_out(fn) for name, fn in extra.items()}
+    beyond the driver's 50-query window, in declaration order —
+    tools/check_oracle.py checks them alongside queries() by default."""
+    return {name: _dbl_out(q.build) for name, q in DECLARED.items() if name not in WINDOW}
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -341,9622 +185,11 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return merged
 
 
-def _build_registries():
-    from data_warehouse_punta_fina_spark.functions.money import pround, pround2, pround6
-    from data_warehouse_punta_fina_spark.functions.strings import (
-        coded_id,
-        contains_ci,
-        extract_int,
-        first_token,
-    )
-    from data_warehouse_punta_fina_spark.functions.text import (
-        bpe_ish_token_count,
-        fingerprint,
-        lang_id,
-        punct_ratio,
-        quality_score,
-        stopword_ratio,
-        token_count,
-    )
-    from data_warehouse_punta_fina_spark.operators.dedup import (
-        duplicate_groups,
-        exact_dedup,
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-        simhash64,
-    )
-    from data_warehouse_punta_fina_spark.operators.multimodal import (
-        extract_features,
-        media_from_documents,
-    )
-    from data_warehouse_punta_fina_spark.operators.similarity import (
-        brute_force_topk,
-        embedding_near_dup_pairs,
-        ivf_topk,
-    )
-    from data_warehouse_punta_fina_spark.operators.validation import (
-        ColumnRule,
-        TableRules,
-        validate_and_populate,
-    )
-    from data_warehouse_punta_fina_spark.plans.dims import (
-        build_dim_almacen,
-        build_dim_cliente,
-        build_dim_cuenta_contable,
-        build_dim_fecha,
-        build_dim_producto,
-        build_dim_promocion,
-        build_dim_proveedor,
-        build_dim_usuario,
-    )
-    from data_warehouse_punta_fina_spark.plans.facts import (
-        build_fact_balance,
-        build_fact_estado_resultados,
-        build_fact_inventario,
-        build_fact_transacciones,
-        build_fact_ventas,
-    )
-    from data_warehouse_punta_fina_spark.sources.readers import load_table
-    from data_warehouse_punta_fina_spark.streaming.file_stream import tumbling_window_agg
-
-    def _memo_dim(name: str, build, spark: SparkSession, sf_dir: str) -> DataFrame:
-        # production materializes dims once and reuses them across all fact
-        # builds (plans/pipeline.py writes parquet); within a session the
-        # same reuse comes from persist() — unlike localCheckpoint, lineage
-        # is kept, so on a real cluster a lost executor recomputes the
-        # missing blocks instead of failing every downstream job
-        key = (spark.sparkContext.applicationId, sf_dir, name)
-        if key not in _DIM_MEMO:
-            _DIM_MEMO[key] = build(spark, sf_dir).persist()
-        return _DIM_MEMO[key]
-
-    def fact_ventas(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the fact itself is also materialized once per session — downstream
-        # consumers (daily rollup, DQ report) read it like the warehouse
-        # table the pipeline would have written
-        key = (spark.sparkContext.applicationId, sf_dir, "fact_ventas")
-        if key not in _DIM_MEMO:
-            _DIM_MEMO[key] = build_fact_ventas(
-                spark,
-                sf_dir,
-                _memo_dim("producto", build_dim_producto, spark, sf_dir),
-                _memo_dim("cliente", build_dim_cliente, spark, sf_dir),
-                _memo_dim("almacen", build_dim_almacen, spark, sf_dir),
-            ).persist()
-        return _DIM_MEMO[key]
-
-    def fact_transacciones(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return build_fact_transacciones(spark, sf_dir)
-
-    def fact_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return build_fact_balance(
-            build_fact_transacciones(spark, sf_dir), build_dim_cuenta_contable(spark, sf_dir)
-        )
-
-    def fact_estado_resultados(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return build_fact_estado_resultados(build_fact_transacciones(spark, sf_dir))
-
-    def star_revenue_by_pais_trimestre(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the dimensional query the warehouse exists for: fact ⨝ dim_fecha ⨝
-        # dim_cliente, rolled up by year/quarter/country. Both dims broadcast.
-        fv = fact_ventas(spark, sf_dir)
-        fecha = build_dim_fecha(spark, sf_dir).select("fecha_id", "anio", "trimestre")
-        cliente = _memo_dim("cliente", build_dim_cliente, spark, sf_dir).select("cliente_id", "pais")
-        return (
-            fv.join(F.broadcast(fecha), "fecha_id")
-            .join(F.broadcast(cliente), "cliente_id")
-            .groupBy("anio", "trimestre", "pais")
-            .agg(
-                F.sum("subtotal").cast("decimal(18,2)").alias("ventas_netas"),
-                F.sum("margen").cast("decimal(18,2)").alias("margen_total"),
-                F.count("*").alias("n_lineas"),
-                F.countDistinct("orden_id").alias("n_ordenes"),
-            )
-        )
-
-    def ventas_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-        fv = fact_ventas(spark, sf_dir)
-        return fv.groupBy("fecha_id").agg(
-            F.sum("subtotal").cast("decimal(18,2)").alias("subtotal_total"),
-            F.sum("descuento").cast("decimal(18,2)").alias("descuento_total"),
-            F.count("*").alias("n_lineas"),
-            F.countDistinct("orden_id").alias("n_ordenes"),
-        )
-
-    def lineitem_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem")
-        li = li.filter(F.col("l_shipdate") <= "2000-12-31")
-        disc_price = pround2(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        charge = pround2(F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax")))
-        agg = li.groupBy("l_returnflag", "l_linestatus").agg(
-            F.sum(pround2("l_quantity")).cast("decimal(18,2)").alias("sum_qty"),
-            F.sum(pround2("l_extendedprice")).cast("decimal(18,2)").alias("sum_base_price"),
-            F.sum(disc_price).cast("decimal(18,2)").alias("sum_disc_price"),
-            F.sum(charge).cast("decimal(18,2)").alias("sum_charge"),
-            F.count("*").alias("n_rows"),
-        )
-        return agg.withColumn(
-            "avg_qty", pround2(F.col("sum_qty").cast("double") / F.col("n_rows"))
-        ).withColumn("avg_price", pround2(F.col("sum_base_price").cast("double") / F.col("n_rows")))
-
-    def discount_order_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        orders = load_table(spark, sf_dir, "orders")
-        li = load_table(spark, sf_dir, "lineitem")
-        per_order = li.groupBy("l_orderkey").agg(
-            F.sum(pround2(F.col("l_extendedprice") * F.col("l_discount")))
-            .cast("decimal(18,2)")
-            .alias("descuento_total")
-        )
-        return orders.join(per_order, orders["o_orderkey"] == per_order["l_orderkey"], "left").select(
-            F.col("o_orderkey").alias("orden_id"),
-            pround2("o_totalprice").alias("total"),
-            F.coalesce(F.col("descuento_total"), F.lit(0).cast("decimal(18,2)")).alias("descuento_total"),
-        )
-
-    def top_discount_line_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.operators.windows import top_n_per_group
-
-        li = load_table(spark, sf_dir, "lineitem").withColumn(
-            "descuento", pround2(F.col("l_extendedprice") * F.col("l_discount"))
-        )
-        top = top_n_per_group(
-            li,
-            "l_orderkey",
-            [
-                F.desc("descuento"),
-                F.asc("l_linenumber"),
-                F.asc("l_partkey"),
-                F.asc("l_suppkey"),
-                F.asc("l_extendedprice"),
-                F.asc("l_shipdate"),
-            ],
-            n=1,
-        )
-        return top.select(
-            F.col("l_orderkey").alias("orden_id"),
-            F.col("l_linenumber").alias("linea"),
-            F.col("l_partkey").alias("producto_externo_id"),
-            F.col("descuento"),
-        )
-
-    def dup_grain_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem")
-        return duplicate_groups(li, ["l_orderkey", "l_linenumber"]).select(
-            F.col("l_orderkey").alias("orden_id"), F.col("l_linenumber").alias("linea"), F.col("n")
-        )
-
-    def dedup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.operators.dedup import dedupe_by_grain
-
-        li = load_table(spark, sf_dir, "lineitem")
-        deduped = dedupe_by_grain(
-            li,
-            ["l_orderkey", "l_linenumber"],
-            [
-                F.col("l_partkey"),
-                F.col("l_suppkey"),
-                F.col("l_quantity"),
-                F.col("l_extendedprice"),
-                F.col("l_discount"),
-                F.col("l_tax"),
-                F.col("l_returnflag"),
-                F.col("l_linestatus"),
-                F.col("l_shipdate"),
-            ],
-        )
-        return deduped.select(
-            F.col("l_orderkey").alias("orden_id"),
-            F.col("l_linenumber").alias("linea"),
-            F.col("l_partkey").alias("producto_externo_id"),
-            pround2("l_quantity").alias("cantidad"),
-            pround2("l_extendedprice").alias("precio"),
-        )
-
-    def fk_orphan_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem")
-        orders = load_table(spark, sf_dir, "orders")
-        part = load_table(spark, sf_dir, "part")
-        supplier = load_table(spark, sf_dir, "supplier")
-        customer = load_table(spark, sf_dir, "customer")
-        checks = [
-            ("lineitem.l_partkey->part", li.filter(F.col("l_partkey").isNotNull()).join(
-                F.broadcast(part.select("p_partkey")), li["l_partkey"] == part["p_partkey"], "left_anti"
-            )),
-            ("lineitem.l_suppkey->supplier", li.filter(F.col("l_suppkey").isNotNull()).join(
-                F.broadcast(supplier.select("s_suppkey")), li["l_suppkey"] == supplier["s_suppkey"], "left_anti"
-            )),
-            ("orders.o_custkey->customer", orders.filter(F.col("o_custkey").isNotNull()).join(
-                F.broadcast(customer.select("c_custkey")), orders["o_custkey"] == customer["c_custkey"], "left_anti"
-            )),
-        ]
-        out = None
-        for name, anti in checks:
-            row = anti.agg(F.count("*").alias("orphans")).select(F.lit(name).alias("fk"), "orphans")
-            out = row if out is None else out.unionByName(row)
-        return out
-
-    def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-        events = load_table(spark, sf_dir, "events")
-        agg = tumbling_window_agg(events, "1 hour")
-        return agg.select(
-            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-
-    def events_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-        events = load_table(spark, sf_dir, "events")
-        k = F.get_json_object("props", "$.k").cast("int")
-        return events.withColumn("k", k).groupBy("event_type").agg(
-            F.count("*").alias("n"),
-            F.sum("k").alias("sum_k"),
-            F.min("k").alias("min_k"),
-            F.max("k").alias("max_k"),
-        )
-
-    def events_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Spark 4 VariantType: parse once to the binary variant encoding,
-        # typed path extraction + runtime schema discovery — the modern
-        # replacement for per-access get_json_object string re-parsing
-        # (events_json_stats keeps the classic path for comparison)
-        # The discovered schema rendering (schema_of_variant -> e.g.
-        # 'OBJECT<k: BIGINT>') is Spark-version-dependent, so it is
-        # pinned by pytest, not emitted here (judge directive r5 #3).
-        events = load_table(spark, sf_dir, "events")
-        v = F.parse_json("props")
-        k = F.try_variant_get(v, "$.k", "int")
-        return (
-            events.select(F.col("event_type"), k.alias("k"))
-            .groupBy("event_type")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("k").alias("sum_k"),
-                F.count_distinct(F.col("k")).alias("distinct_k"),
-            )
-        )
-
-    def scalar_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
-        part = load_table(spark, sf_dir, "part")
-        return part.select(
-            F.col("p_partkey"),
-            coded_id("PRD-", "p_partkey", 8).alias("codigo"),
-            first_token("p_name").alias("primera_palabra"),
-            extract_int("p_brand").alias("marca_num"),
-            contains_ci("p_type", "brass").alias("es_brass"),
-            F.upper(F.trim("p_type")).alias("tipo_norm"),
-            F.when(F.col("p_size") >= 30, "grande")
-            .when(F.col("p_size") >= 15, "mediano")
-            .otherwise("pequeño")
-            .alias("clase_talla"),
-            F.format_string("P%07d", F.col("p_partkey")).alias("codigo_fmt"),
-        )
-
-    def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        return docs.select(
-            "doc_id",
-            F.length("text").alias("n_chars_calc"),
-            token_count("text").alias("n_tokens"),
-            bpe_ish_token_count("text").alias("n_bpe_tokens"),
-            punct_ratio("text").alias("punct_ratio"),
-            stopword_ratio("text").alias("stopword_ratio"),
-            quality_score("text").alias("quality"),
-            fingerprint("text").alias("fingerprint"),
-        )
-
-    def doc_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # pretraining-corpus scrubbing: emails/URLs/digit-runs → typed
-        # placeholders, pure codegen regexp_replace chain
-        from data_warehouse_punta_fina_spark.functions.text import pii_hits, redact_pii
-
-        docs = load_table(spark, sf_dir, "documents")
-        red = redact_pii("text")
-        return docs.select(
-            "doc_id",
-            pii_hits("text").alias("n_pii"),
-            F.length(red).alias("n_chars_redacted"),
-            F.substring(red, 1, 80).alias("muestra"),
-        )
-
-    def doc_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the corpus-filtering decision a training pipeline actually makes:
-        # keep/drop + first failing reason, thresholds on the shared
-        # oracle-reproducible quality metrics
-        docs = load_table(spark, sf_dir, "documents")
-        n_tok = token_count("text")
-        q = quality_score("text")
-        p = punct_ratio("text")
-        motivo = (
-            F.when(n_tok < 10, "too_short")
-            .when(q < 0.5, "low_quality")
-            .when(p > 0.2, "too_punct")
-            .otherwise("ok")
-        )
-        return docs.select(
-            "doc_id",
-            n_tok.alias("n_tokens"),
-            q.alias("quality"),
-            motivo.alias("motivo"),
-            (motivo == "ok").alias("keep"),
-        )
-
-    def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # token-length distribution in 32-token buckets — the length-mix
-        # report every corpus build runs before packing sequences
-        docs = load_table(spark, sf_dir, "documents")
-        n = token_count("text")
-        return (
-            docs.select(F.floor(n / F.lit(32)).cast("int").alias("bucket"), n.alias("n"))
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n").alias("total_tokens"),
-                F.min("n").alias("min_tokens"),
-                F.max("n").alias("max_tokens"),
-            )
-        )
-
-    def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        return docs.select("doc_id", "lang", lang_id("text").alias("lang_pred"))
-
-    def doc_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # distributed TRAINING, gradient flavor: full-batch logistic
-        # regression (en-detector over round-6 text-ratio features), one
-        # aggregation per GD step, weights flowing as broadcast 1-row
-        # DataFrames — no driver-side weight state. Output = the whole
-        # training trajectory (per-iteration loss + weights), which the
-        # DuckDB oracle replays term for term (operators/classify.py)
-        from data_warehouse_punta_fina_spark.operators.classify import (
-            logistic_regression_gd,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        feats = docs.select(
-            stopword_ratio("text").alias("sw"),
-            punct_ratio("text").alias("punct"),
-            quality_score("text").alias("q"),
-            (F.col("lang") == "en").cast("int").alias("y"),
-        ).localCheckpoint(eager=False)
-        return logistic_regression_gd(feats, ["sw", "punct", "q"], "y", iters=8, lr=0.5)
-
-    def doc_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # distributed classifier TRAINING on the cluster (the CCNet /
-        # fastText filter-model pattern real curation pipelines run):
-        # multinomial Naive Bayes language model trained on the
-        # fingerprint-split train docs (two aggregations — no gradient
-        # loop, no driver state), argmax-scored on the held-out split via
-        # a broadcast vocabulary-model join. Scores are exact decimal sums
-        # of round-6 log-probs → engine-portable (operators/classify.py)
-        # Round-16 (guide §6): the split runs through nb_classify_split —
-        # ONE text scan / ONE fingerprint evaluation feeding a shared
-        # postings checkpoint instead of the filter-pair shape's three
-        # scans; values identical by construction (oracle re-verified).
-        from data_warehouse_punta_fina_spark.operators.classify import (
-            nb_classify_split,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        return nb_classify_split(
-            docs, fingerprint("text") % 10, "text", "doc_id", "lang", train_buckets=8
-        )
-
-    def doc_nb_persisted_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the filter-model DEPLOYMENT shape: the NB language model is
-        # trained ONCE per data fingerprint and persisted (scheme
-        # fingerprint on the cond table's column metadata, validated at
-        # score time); scoring reads the stored vocabulary-sized model
-        # and tokenizes only the docs being scored. Deterministic
-        # training → values identical to doc_nb_lang_classifier, so the
-        # oracle is reused verbatim (the doc_incremental_dedup_persisted
-        # discipline).
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.classify import (
-            NB_SCHEME,
-            nb_save_model,
-            nb_score_model,
-        )
-
-        # the scheme version is part of the cache key: a future scheme bump
-        # re-trains instead of tripping the validator on a stale model
-        fp = _data_fingerprint(sf_dir, "documents")
-        mdl = _index_cache_dir("nb_model", f"lang_b8_{NB_SCHEME}_{fp}")
-        docs = load_table(spark, sf_dir, "documents")
-        b = fingerprint("text") % 10
-        if not os.path.exists(os.path.join(mdl, "cond", "_SUCCESS")):
-            nb_save_model(docs.filter(b < 8), mdl, "text", "lang")
-        return nb_score_model(docs.filter(b >= 8), mdl, "text", "doc_id", "lang")
-
-    def doc_nb_maintained_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-13 debut (VERDICT r12 #7): the NB-model MAINTENANCE
-        # stream's driver exposure — the classifier twin of
-        # doc_bm25_maintained_topk. The training docs drain through a
-        # real availableNow Structured Streaming query whose every
-        # micro-batch merges (class, term) counts + class doc counts
-        # under EPOCHED global state (streaming/classify_stream.
-        # run_nb_maintenance_stream — replay re-derives bit-identical
-        # counts; the batch-id regression guard refuses a reset
-        # checkpoint). The NB model is ENTIRELY mergeable global state,
-        # so the maintained model is bit-equal to one monolithic
-        # nb_save_model over everything streamed — scoring it equals
-        # doc_nb_persisted_classifier, and doc_nb_lang_classifier's
-        # oracle is reused verbatim.
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.classify import (
-            NB_SCHEME,
-            nb_score_model,
-        )
-        from data_warehouse_punta_fina_spark.streaming.classify_stream import (
-            run_nb_maintenance_stream,
-        )
-
-        fp = _data_fingerprint(sf_dir, "documents")
-        mdl = _index_cache_dir("nb_maint", f"lang_b8_{NB_SCHEME}_{fp}")
-        docs = load_table(spark, sf_dir, "documents")
-        b = fingerprint("text") % 10
-        if not os.path.exists(os.path.join(mdl, "_MAINTAINED")):
-            # clean slate (the doc_bm25_maintained_topk discipline): a
-            # partial prior attempt leaves a checkpoint whose offsets
-            # reference source files the overwrite below replaces
-            import shutil
-
-            for sub in os.listdir(mdl) if os.path.isdir(mdl) else []:
-                shutil.rmtree(os.path.join(mdl, sub), ignore_errors=True)
-            train = docs.filter(b < 8).select("doc_id", "text", "lang")
-            src = os.path.join(mdl, "_source")
-            # two files -> two micro-batches (maxFilesPerTrigger=1)
-            train.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(src)
-            train.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            q = run_nb_maintenance_stream(
-                spark,
-                src,
-                spark.read.parquet(src).schema,
-                checkpoint_dir=os.path.join(mdl, "_ckpt"),
-                model_dir=mdl,
-                text_col="text",
-                label_col="lang",
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError("nb maintenance drain did not finish within 300s")
-            with open(os.path.join(mdl, "_MAINTAINED"), "w") as fh:
-                fh.write("ok")
-        return nb_score_model(docs.filter(b >= 8), mdl, "text", "doc_id", "lang")
-
-    def doc_uncertainty_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # active-learning batch selection (the curation labeling loop):
-        # the 50 held-out docs the NB filter model is LEAST sure about —
-        # smallest |best-vs-second| margin, the standard uncertainty
-        # criterion — i.e. the annotation queue that improves the filter
-        # fastest. TakeOrderedAndProject: per-partition top-k, no global
-        # sort; ties deterministic on doc_id.
-        # round-16: same one-scan split trainer as doc_nb_lang_classifier
-        # (guide §6 — the scored frame is value-identical; only the
-        # selection below differs)
-        from data_warehouse_punta_fina_spark.operators.classify import (
-            nb_classify_split,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        scored = nb_classify_split(
-            docs, fingerprint("text") % 10, "text", "doc_id", "lang", train_buckets=8
-        )
-        return (
-            scored.orderBy(F.abs(F.col("margin")).asc(), F.asc("doc_id"))
-            .limit(50)
-            .select("doc_id", "predicted", "margin")
-        )
-
-    def doc_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # winnowing fingerprint overlap (Schleimer/Wilkerson/Aiken, SIGMOD
-        # 2003 — the MOSS scheme): per-doc rightmost-min-of-window k-gram
-        # hash selection, then a fingerprint-blocked pair join with a
-        # document-frequency cap — position-robust LOCAL overlap evidence
-        # (quotes/boilerplate) that MinHash resemblance and SimHash bit
-        # profiles can't localize (operators/winnow.py)
-        from data_warehouse_punta_fina_spark.operators.winnow import (
-            winnow_fingerprints,
-            winnow_overlap,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        fp = winnow_fingerprints(docs, k=4, w=4)
-        return winnow_overlap(fp, max_df=50, min_shared=3)
-
-    def doc_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # DSIR data selection (Xie et al., NeurIPS 2023): hashed unigram+
-        # bigram models of the TARGET (en docs) vs the RAW pool give per-
-        # bucket importance log-ratios (256 rows, broadcast); each doc scores
-        # an exact decimal logw; Gumbel-top-k draws 100 docs proportional
-        # to importance without replacement — one TakeOrderedAndProject,
-        # no global sort (operators/importance.py)
-        from data_warehouse_punta_fina_spark.operators.importance import (
-            dsir_resample,
-            hashed_ngram_logratio,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        lam = hashed_ngram_logratio(
-            None, docs, n_buckets=256, target_predicate=F.col("lang") == "en"
-        )
-        return dsir_resample(
-            docs.select("doc_id", "text"), lam, k=100, n_buckets=256
-        )
-
-    def doc_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # temperature-smoothed multilingual resampling (the q_l ∝ p_l^τ
-        # formula of Devlin 2019 / XLM-R): per-language τ=0.7 rates from
-        # the empirical distribution (a languages-sized broadcast), then
-        # deterministic content-fingerprint keeps — upweights tail
-        # languages without driver-side math (operators/mixture.py)
-        from data_warehouse_punta_fina_spark.operators.mixture import (
-            temperature_sampling_rates,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        per = docs.groupBy("lang").agg(F.count("*").alias("n"))
-        rates = temperature_sampling_rates(
-            per, tau=0.7, group_col="lang", count_col="n"
-        )
-        mille = (fingerprint("text") % 1000).cast("int")
-        return docs.join(
-            F.broadcast(rates.select("lang", "keep_mille")), "lang"
-        ).select(
-            "doc_id",
-            "lang",
-            "keep_mille",
-            mille.alias("mille"),
-            (mille < F.col("keep_mille")).alias("keep"),
-        )
-
-    def doc_source_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # per-source quantile quality gate: rank docs WITHIN their source
-        # and keep each source's top 30% — the debiasing alternative to a
-        # global threshold that silently drops whole low-scoring sources
-        # (operators/text_quality.py source_percentile_gate)
-        from data_warehouse_punta_fina_spark.operators.text_quality import (
-            source_percentile_gate,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        scored = docs.select(
-            "doc_id", "source", quality_score("text").alias("q")
-        )
-        return source_percentile_gate(scored, "q", "source", "doc_id", keep_top=0.3)
-
-    def order_sample_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Neyman optimal allocation: split a 1000-row sample budget across
-        # order-priority strata proportional to N_h·S_h (size × std of
-        # o_totalprice) — largest-remainder integer seats, exact
-        # sufficient statistics (operators.sampling.neyman_allocation)
-        from data_warehouse_punta_fina_spark.operators.sampling import (
-            neyman_allocation,
-        )
-
-        orders = load_table(spark, sf_dir, "orders")
-        return neyman_allocation(orders, ["o_orderpriority"], "o_totalprice", 1000)
-
-    def basket_frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # A-priori level 3: frequent part TRIPLES per order, candidates
-        # generated only from frequent pairs (downward closure) — the
-        # iteration after basket_part_affinity's pair stage
-        # (operators.behavior.frequent_triples)
-        from data_warehouse_punta_fina_spark.operators.behavior import frequent_triples
-
-        li = load_table(spark, sf_dir, "lineitem")
-        return frequent_triples(li, "l_orderkey", "l_partkey", min_count=2, top_k=50)
-
-    def events_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # linear multi-touch attribution: each purchase splits one unit
-        # of credit equally over its 24h view/click touches (no touch →
-        # 'organic'); round-6 decimal weights make the channel sums exact
-        # (operators.behavior.linear_attribution)
-        from data_warehouse_punta_fina_spark.operators.behavior import (
-            linear_attribution,
-        )
-
-        return linear_attribution(load_table(spark, sf_dir, "events"))
-
-    def weekly_revenue_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # classical additive decomposition of the weekly revenue series:
-        # value = trend (centered 2x4 MA) + seasonal (re-centered phase
-        # means) + residual — the explain-side companion to the
-        # revenue_anomaly_weeks screen (operators.timeseries)
-        from data_warehouse_punta_fina_spark.operators.timeseries import (
-            seasonal_decompose,
-        )
-
-        orders = load_table(spark, sf_dir, "orders")
-        weekly = orders.groupBy(
-            F.date_trunc("week", F.col("o_orderdate")).alias("wk")
-        ).agg(F.sum(pround2("o_totalprice")).cast("decimal(18,2)").alias("rev"))
-        return seasonal_decompose(weekly, "wk", "rev", period=4)
-
-    def scd3_customer_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # SCD Type 3 (previous-value column): even-key customers get a
-        # segment update — keys divisible by 4 re-assert the old value
-        # (prev stays NULL), the rest change (prev captures the old one),
-        # odd keys pass through (operators.scd.type3_update)
-        from data_warehouse_punta_fina_spark.operators.scd import type3_update
-
-        c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-        old_seg = F.when(F.col("c_acctbal") < 0, "neg").otherwise("pos")
-        target = c.select("c_custkey", old_seg.alias("segment")).withColumn(
-            "prev_segment", F.lit(None).cast("string")
-        )
-        upd_seg = F.when(F.col("c_custkey") % 4 == 0, old_seg).otherwise(F.lit("vip"))
-        updates = c.filter(F.col("c_custkey") % 2 == 0).select(
-            "c_custkey", upd_seg.alias("segment")
-        )
-        return type3_update(target, updates, ["c_custkey"], "segment", "prev_segment")
-
-    def fact_order_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # accumulating-snapshot fact (the Kimball milestone pattern the
-        # star schemas don't cover): one row per order with its milestone
-        # dates (first/last ship), lag measures between them, and the
-        # completion flag; orders with no lines keep null milestones
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            F.to_date("o_orderdate").alias("order_date"),
-        )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey",
-            F.to_date("l_shipdate").alias("_ship"),
-            "l_linestatus",
-        )
-        m = li.groupBy("l_orderkey").agg(
-            F.count("*").alias("n_lines"),
-            F.min("_ship").alias("first_ship"),
-            F.max("_ship").alias("last_ship"),
-            F.sum(F.when(F.col("l_linestatus") == "F", 1).otherwise(0)).alias("n_finished"),
-        )
-        return (
-            o.join(m, o.o_orderkey == m.l_orderkey, "left")
-            .select(
-                "o_orderkey",
-                "order_date",
-                F.coalesce(F.col("n_lines"), F.lit(0)).cast("bigint").alias("n_lines"),
-                F.coalesce(F.col("n_finished"), F.lit(0)).cast("bigint").alias("n_finished"),
-                "first_ship",
-                "last_ship",
-                F.datediff(F.col("first_ship"), F.col("order_date")).cast("int").alias(
-                    "days_to_first_ship"
-                ),
-                F.datediff(F.col("last_ship"), F.col("first_ship")).cast("int").alias(
-                    "ship_span_days"
-                ),
-                F.coalesce(
-                    F.col("n_finished") == F.col("n_lines"), F.lit(False)
-                ).alias("all_finished"),
-            )
-        )
-
-    def emb_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # evaluation for the trained IVF quantizer: per-cell member count,
-        # mean squared distance to the centroid, and mean SIMPLIFIED
-        # silhouette (centroid-based — the O(n²) pairwise form never
-        # materializes); same 16-cell/2-iter fit as ann_ivf_trained_topk
-        # (operators.similarity.kmeans_quality_report)
-        from data_warehouse_punta_fina_spark.operators.similarity import (
-            kmeans_quality_report,
-        )
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        return kmeans_quality_report(emb, n_centroids=16, iters=2)
-
-    def emb_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-9 debut: cluster-balanced diversity selection (the
-        # SemDeDup/DataComp curation pattern) — k-means the embedding
-        # space (the same deterministic 16-cell/2-iter quantizer as the
-        # IVF tiers), then draw an EQUAL md5-ranked quota of 20 per
-        # cluster: topical diversity a proportional or uniform sample
-        # cannot give (dominant clusters stop dominating the corpus).
-        # Scale shape: centroids broadcast for assignment, the quota
-        # window partitions on cid, nothing global; cluster_n rides a
-        # 16-row broadcast join.
-        from data_warehouse_punta_fina_spark.functions.vectors import quantize
-        from data_warehouse_punta_fina_spark.operators.similarity import (
-            _assign,
-            kmeans_fit,
-        )
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        cent = kmeans_fit(emb, k=16, iters=2)
-        cv = emb.select("vec_id", quantize("embedding").alias("qvec"))
-        assigned = _assign(cv, cent, "vec_id").select("vec_id", "cid")
-        sizes = assigned.groupBy("cid").agg(F.count("*").alias("cluster_n"))
-        key = F.md5(F.concat(F.col("vec_id").cast("string"), F.lit("|cbal")))
-        w = Window.partitionBy("cid").orderBy(key, F.col("vec_id"))
-        return (
-            assigned.withColumn("pick_rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("pick_rank") <= 20)
-            .join(F.broadcast(sizes), "cid")
-            .select(
-                "vec_id",
-                "cid",
-                F.col("cluster_n").cast("int").alias("cluster_n"),
-                "pick_rank",
-            )
-        )
-
-    def doc_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # contrastive training-pair mining: positives = LSH-verified
-        # near-dup pairs (both orientations anchor), negatives = 3
-        # deterministic hash-sampled docs per anchor from a broadcast
-        # 64-doc pool, positives/self anti-joined out
-        # (operators.pairs.contrastive_pairs — md5 rankings, no RNG)
-        from data_warehouse_punta_fina_spark.operators.pairs import contrastive_pairs
-
-        docs = load_table(spark, sf_dir, "documents")
-        return contrastive_pairs(docs, threshold=0.2, n_neg=3, neg_pool=64)
-
-    def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # hard negatives for dense-retrieval training: each query's exact
-        # cosine neighbors ranked 6..10 — informative near-misses below
-        # the presumed-positive top-5 (operators.pairs.hard_negatives)
-        from data_warehouse_punta_fina_spark.operators.pairs import hard_negatives
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        return hard_negatives(emb, emb.filter(F.col("vec_id") < 8), lo_rank=6, hi_rank=10)
-
-    def doc_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the END-TO-END curation decision, one row per document: every
-        # filter a training pipeline runs — exact dedup (keep-first by
-        # content hash), LSH-verified near-dup (keep-first: the larger id
-        # of a verified pair drops), length, quality, language — composed
-        # into flags + a precedence verdict. Each stage is the
-        # already-verified operator; this query proves they COMPOSE
-        from data_warehouse_punta_fina_spark.operators.dedup import (
-            _spread,
-            lsh_verified_pairs,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        # round-16 (guide §6 read-once): one projected scan computes every
-        # per-doc signal — content hash + the three text functions — and
-        # is checkpointed for all consumers; the r15 shape read the text
-        # column in FOUR scans (exact_dedup's md5+groupBy, the per-doc md5
-        # flag scan, the base signal scan, the LSH tokenize). The canon
-        # aggregation below IS exact_dedup's body verbatim over the shared
-        # projection (md5 → groupBy → min id + count), so flags and values
-        # are identical; only the LSH leg keeps its own (tokenize) scan.
-        proj = (
-            _spread(docs.select("doc_id", "text"))  # raw rows below, heavy exprs above
-            .select(
-                "doc_id",
-                F.md5("text").alias("content_hash"),
-                token_count("text").cast("int").alias("n_tokens"),
-                quality_score("text").alias("quality"),
-                lang_id("text").alias("lang_pred"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        canon = proj.groupBy("content_hash").agg(
-            F.min("doc_id").alias("canonical_id"), F.count("*").alias("n_copies")
-        )
-        exact_flag = proj.select("doc_id", "content_hash").join(
-            canon, "content_hash"
-        ).select(
-            "doc_id", (F.col("doc_id") != F.col("canonical_id")).alias("is_exact_dup")
-        )
-        near_ids = (
-            lsh_verified_pairs(docs, num_hashes=12, bands=4, threshold=0.2)
-            .select(F.col("id_b").alias("doc_id"))
-            .distinct()
-            .withColumn("_near", F.lit(True))
-        )
-        base = proj.select("doc_id", "n_tokens", "quality", "lang_pred")
-        out = (
-            base.join(exact_flag, "doc_id")
-            .join(near_ids, "doc_id", "left")
-            .withColumn("is_near_dup", F.coalesce(F.col("_near"), F.lit(False)))
-        )
-        verdict = (
-            F.when(F.col("is_exact_dup"), "exact_dup")
-            .when(F.col("is_near_dup"), "near_dup")
-            .when(F.col("n_tokens") < 10, "too_short")
-            .when(F.col("quality") < 0.5, "low_quality")
-            .when(F.col("lang_pred") == "und", "unknown_lang")
-            .otherwise("keep")
-        )
-        return out.select(
-            "doc_id",
-            "is_exact_dup",
-            "is_near_dup",
-            "n_tokens",
-            "quality",
-            "lang_pred",
-            verdict.alias("verdict"),
-        )
-
-    def doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return exact_dedup(load_table(spark, sf_dir, "documents"))
-
-    def doc_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), num_hashes=12, bands=4)
-
-    def doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # max_shingle_df bounds the hottest inverted-index key: shingles in
-        # >64 docs are stopword-shingles (no near-dup signal) and would fan
-        # out quadratically at corpus scale
-        return ngram_jaccard_pairs(
-            load_table(spark, sf_dir, "documents"), threshold=0.2, max_shingle_df=64
-        )
-
-    def doc_lang_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # corpus mixing: deterministic per-language downsampling by content
-        # fingerprint (a doc's keep/drop is stable under reshuffles and
-        # re-ingest — the reproducible version of weighted sampling used
-        # when balancing a training mix)
-        weights = {"en": 1000, "es": 500, "fr": 250, "de": 250}  # per-mille keep rates
-        docs = load_table(spark, sf_dir, "documents")
-        mille = fingerprint("text") % 1000
-        thr = F.lit(100)  # unknown/other languages: 10%
-        for lang, w in weights.items():
-            thr = F.when(F.col("lang") == lang, F.lit(w)).otherwise(thr)
-        return docs.select(
-            "doc_id", "lang", mille.cast("int").alias("mille"), (mille < thr).alias("keep")
-        )
-
-    def doc_split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # reproducible corpus splitting: bucket by the portable content
-        # fingerprint (NOT by row position/random — content-stable under
-        # re-shuffles, re-ingest, and engine changes), 80/10/10
-        docs = load_table(spark, sf_dir, "documents")
-        bucket = (fingerprint("text") % 10).cast("int")
-        return docs.select(
-            "doc_id",
-            bucket.alias("bucket"),
-            F.when(bucket < 8, "train").when(bucket == 8, "val").otherwise("test").alias("split"),
-        )
-
-    def doc_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-9 debut: LEAKAGE-SAFE corpus splitting — near-duplicate
-        # documents must land on the same side of a train/eval boundary,
-        # or eval leaks training content (the contamination mode that
-        # plain per-doc hash splitting cannot prevent: cross-split
-        # twins). Compose the verified pieces: LSH near-dup pairs →
-        # connected components → the 80/10/10 bucket derives from the
-        # CLUSTER id's md5 (13 hex digits → exact 2^52-range integer),
-        # so every member inherits its cluster's side. Scale shape: the
-        # cluster step is the O(log n)-capable components operator; the
-        # bucket is a pure function of cluster_id — no extra shuffle
-        # beyond the components themselves.
-        from data_warehouse_punta_fina_spark.operators.dedup import dedup_clusters
-
-        docs = load_table(spark, sf_dir, "documents")
-        pairs = minhash_lsh_pairs(docs, num_hashes=12, bands=4)
-        clusters = dedup_clusters(docs.select("doc_id"), pairs, max_iter=30).select(
-            "doc_id", "cluster_id"
-        )
-        digits = F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("cluster_id").cast("string"), F.lit("|leak"))),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        bucket = F.pmod(digits, F.lit(10)).cast("int")
-        return clusters.select(
-            "doc_id",
-            "cluster_id",
-            bucket.alias("bucket"),
-            F.when(bucket < 8, "train")
-            .when(bucket == 8, "val")
-            .otherwise("test")
-            .alias("split"),
-        )
-
-    def doc_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # decontamination: test-split documents sharing ≥3 distinct
-        # 3-gram shingles with any train-split document (the leakage check
-        # every corpus build runs after splitting). Inverted-index join on
-        # the shingle, restricted across the split boundary; stopword
-        # shingles (df > 64) are dropped — same hot-key bound as the
-        # Jaccard operator, or a ubiquitous trigram would fan out
-        # train×eval quadratically.
-        from data_warehouse_punta_fina_spark.operators.dedup import shingle_rows
-
-        docs = load_table(spark, sf_dir, "documents")
-        bucket = fingerprint("text") % 10
-        tagged = docs.withColumn("split", F.when(bucket < 8, "train").otherwise("eval"))
-        sh0 = shingle_rows(tagged, "text", "doc_id").localCheckpoint(eager=False)
-        hot = (
-            sh0.groupBy("shingle")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > 64)
-            .select("shingle")
-        )
-        sh = (
-            sh0.join(F.broadcast(hot), "shingle", "left_anti")
-            .join(tagged.select("doc_id", "split"), "doc_id")
-            .localCheckpoint(eager=False)
-        )
-        test_sh = sh.filter(F.col("split") == "eval").select(
-            F.col("doc_id").alias("test_id"), "shingle"
-        )
-        train_sh = sh.filter(F.col("split") == "train").select(
-            F.col("doc_id").alias("train_id"), "shingle"
-        )
-        return (
-            test_sh.join(train_sh, "shingle")
-            .groupBy("test_id", "train_id")
-            .agg(F.count("*").alias("n_shared"))
-            .filter(F.col("n_shared") >= 3)
-        )
-
-    def doc_contamination_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-10 debut (VERDICT r9 #7): the leakage-safe split's core
-        # claim measured as an oracle-checkable row instead of a
-        # pytest-only property. For BOTH split schemes — the plain
-        # per-doc hash split and doc_leakage_safe_split's
-        # cluster-derived 80/20 boundary — count (a) LSH near-dup pairs
-        # straddling train/eval (the split's own near-dup criterion:
-        # structurally ZERO for the cluster scheme, because both
-        # endpoints of every LSH pair share a cluster_id and the bucket
-        # is a pure function of cluster_id) and (b) the
-        # ≥3-shared-shingle decontamination screen's cross-boundary
-        # pairs (doc_contamination's detector — broader than LSH, so it
-        # drops sharply but need not hit zero). Scale shape: the pair
-        # table comes from the banded LSH join (never all-pairs), the
-        # shingle join drops ubiquitous shingles (df > 64) before any
-        # fan-out, both detectors are computed ONCE (checkpointed) and
-        # the two schemes differ only in the broadcast-sized split
-        # assignment; output is 2 rows.
-        from data_warehouse_punta_fina_spark.operators.dedup import (
-            _spread,
-            dedup_clusters,
-            shingle_rows,
-        )
-
-        docs = _spread(load_table(spark, sf_dir, "documents"))
-        # round-16 (guide §6): ONE checkpointed shingle table feeds both the
-        # LSH banding AND the ≥3-shared-shingle detector below — the r15
-        # shape shingled the corpus twice (stage profile: two identical
-        # 3.3 MB shingle aggregations per run). Same rows, same results.
-        sh0 = shingle_rows(docs, "text", "doc_id").localCheckpoint(eager=False)
-        pairs = minhash_lsh_pairs(
-            docs, num_hashes=12, bands=4, shingles=sh0
-        ).localCheckpoint(eager=False)
-        clusters = dedup_clusters(docs.select("doc_id"), pairs, max_iter=30).select(
-            "doc_id", "cluster_id"
-        )
-        hash_split = docs.select(
-            "doc_id", ((fingerprint("text") % 10) < 8).alias("is_train")
-        )
-        digits = F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("cluster_id").cast("string"), F.lit("|leak"))),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        safe_split = clusters.select(
-            "doc_id", (F.pmod(digits, F.lit(10)) < 8).alias("is_train")
-        )
-
-        hot = (
-            sh0.groupBy("shingle")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > 64)
-            .select("shingle")
-        )
-        sh = sh0.join(F.broadcast(hot), "shingle", "left_anti").localCheckpoint(
-            eager=False
-        )
-        # the ≥3-shared-shingle detector computed ONCE as an unordered pair
-        # table (round-15): the r14 shape re-ran the full shingle self-join
-        # PER SCHEME (test×train each time); the split assignment only
-        # decides which pairs count as cross-boundary, so the detector is
-        # split-independent — id_a < id_b halves the join output and both
-        # schemes read the same checkpointed pair set. A cross-boundary
-        # pair has exactly one test endpoint, so the unordered pair count
-        # equals the old (test_id, train_id) count; n_shared multiplicity
-        # semantics are unchanged (same Σ count_a·count_b per shingle).
-        shared3 = (
-            sh.select(F.col("doc_id").alias("id_a"), "shingle")
-            .join(sh.select(F.col("doc_id").alias("id_b"), "shingle"), "shingle")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("n_shared"))
-            .filter(F.col("n_shared") >= 3)
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=False)
-        )
-
-        def _scheme_counts(split_df: DataFrame, scheme: str) -> DataFrame:
-            sa = split_df.select(
-                F.col("doc_id").alias("id_a"), F.col("is_train").alias("train_a")
-            )
-            sb = split_df.select(
-                F.col("doc_id").alias("id_b"), F.col("is_train").alias("train_b")
-            )
-            lsh_cross = (
-                pairs.join(sa, "id_a")
-                .join(sb, "id_b")
-                .filter(F.col("train_a") != F.col("train_b"))
-                .agg(F.count("*").alias("n_cross_lsh_pairs"))
-            )
-            contam = (
-                shared3.join(sa, "id_a")
-                .join(sb, "id_b")
-                .filter(F.col("train_a") != F.col("train_b"))
-                .agg(F.count("*").alias("n_contam_pairs"))
-            )
-            return lsh_cross.crossJoin(F.broadcast(contam)).select(
-                F.lit(scheme).alias("scheme"), "n_cross_lsh_pairs", "n_contam_pairs"
-            )
-
-        return _scheme_counts(hash_split, "hash").unionByName(
-            _scheme_counts(safe_split, "cluster")
-        )
-
-    def doc_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # sequence packing: contiguous-greedy token bins per language shard
-        # (one PARTITIONED window — shards pack independently)
-        from data_warehouse_punta_fina_spark.operators.packing import pack_documents
-
-        docs = load_table(spark, sf_dir, "documents")
-        packed = pack_documents(docs, budget=512, shard_col="lang", order_col="doc_id")
-        return packed.select("doc_id", "lang", "n_tokens", "cum_before", "bin_id", "offset_in_bin")
-
-    def doc_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the at-scale dedup composition: LSH candidates → exact Jaccard
-        # verify on candidates only (never the all-pairs inverted index)
-        from data_warehouse_punta_fina_spark.operators.dedup import lsh_verified_pairs
-
-        return lsh_verified_pairs(
-            load_table(spark, sf_dir, "documents"), num_hashes=12, bands=4, threshold=0.2
-        )
-
-    def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return simhash64(load_table(spark, sf_dir, "documents"), bits=32)
-
-    def doc_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.operators.dedup import simhash_near_dup_pairs
-
-        return simhash_near_dup_pairs(load_table(spark, sf_dir, "documents"), max_hamming=2)
-
-    def events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # behavior transition matrix: (from_type → to_type) counts over
-        # each user's time-ordered event sequence — the Markov-chain
-        # input for journey modeling; one keyed window (lead), one count
-        events = load_table(spark, sf_dir, "events")
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        seq = events.select(
-            "user_id",
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-        ).filter(F.col("to_type").isNotNull())
-        return seq.groupBy("from_type", "to_type").agg(
-            F.count("*").alias("n_transitions")
-        )
-
-    def events_trailing_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # RANGE-framed window (time-interval frame, not row counts): per
-        # user, the trailing-7-day event-value sum at every event. The
-        # frame is defined by the ORDER-BY VALUE range, so ties inside
-        # the frame contribute symmetrically — order-independent by
-        # construction; decimal sums keep it exact.
-        events = load_table(spark, sf_dir, "events")
-        w = (
-            Window.partitionBy("user_id")
-            .orderBy(F.unix_seconds(F.col("ts")))
-            .rangeBetween(-7 * 86400, 0)
-        )
-        return events.select(
-            "event_id",
-            "user_id",
-            F.sum(pround2("value")).over(w).cast("double").alias("trailing_7d_value"),
-        )
-
-    def files_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # row provenance from Spark's hidden _metadata columns (file_name
-        # + per-file row_index) — ingestion lineage without any ETL
-        # bookkeeping. The oracle can only see the pre-registered views,
-        # so it asserts the KNOWN testdata layout (one file per table,
-        # contiguous 0-based row_index ⇒ max = count−1); the Spark side
-        # computes all of it from real scan metadata at runtime.
-        parts = None
-        for t in ("lineitem", "orders", "documents", "embeddings"):
-            d = spark.read.parquet(f"{sf_dir.rstrip('/')}/{t}.parquet").select(
-                F.lit(t).alias("tbl"),
-                F.col("_metadata.file_name").alias("file_name"),
-                F.col("_metadata.row_index").alias("_ri"),
-            )
-            parts = d if parts is None else parts.unionByName(d)
-        return parts.groupBy("tbl", "file_name").agg(
-            F.count("*").alias("n_rows"),
-            F.max("_ri").alias("max_row_index"),
-        )
-
-    def revenue_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # materialized-view maintenance: aggregate pre-1997 history ONCE,
-        # merge the post-1997 delta without rescanning history
-        # (operators.incremental). The oracle recomputes from scratch over
-        # ALL rows — a genuinely different computation path; equality
-        # holds because decimal sums are associative.
-        from data_warehouse_punta_fina_spark.operators.incremental import (
-            aggregate_delta,
-            incremental_agg_merge,
-        )
-
-        orders = load_table(spark, sf_dir, "orders")
-        proj = orders.select(
-            "o_orderstatus",
-            pround2("o_totalprice").alias("revenue"),
-            "o_orderdate",
-        )
-        cut = F.lit("1997-01-01").cast("timestamp")
-        prev = aggregate_delta(
-            proj.filter(F.col("o_orderdate") < cut), ["o_orderstatus"], ["revenue"]
-        )
-        merged = incremental_agg_merge(
-            prev,
-            proj.filter(F.col("o_orderdate") >= cut),
-            ["o_orderstatus"],
-            ["revenue"],
-        )
-        return merged.select(
-            "o_orderstatus", F.col("revenue").cast("double").alias("revenue"), "n"
-        )
-
-    def orders_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # schema-driven one-pass column profiler (operators.validation.
-        # profile_table). The double column is excluded from the ORACLE
-        # comparison only because Java 17's Double.toString is not
-        # shortest-round-trip (JDK-4511638, fixed in 19) so double→string
-        # may differ from DuckDB's formatter in the last digits — the
-        # operator itself profiles any dtype.
-        from data_warehouse_punta_fina_spark.operators.validation import profile_table
-
-        orders = load_table(spark, sf_dir, "orders")
-        return profile_table(
-            orders,
-            ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate", "o_orderpriority"],
-        )
-
-    def lineitem_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Benford first-digit screen per return flag (operators.validation.
-        # benford_deviation); first-SIGNIFICANT-digit extraction is robust
-        # to scientific notation (the mantissa leads), so double→string
-        # divergence cannot change the digit
-        from data_warehouse_punta_fina_spark.operators.validation import benford_deviation
-
-        li = load_table(spark, sf_dir, "lineitem")
-        return benford_deviation(li, "l_extendedprice", ["l_returnflag"])
-
-    def events_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # median/MAD modified z-score per event_type; report per-type
-        # totals + flagged count + the max score (round-6'd before both
-        # the threshold and the aggregate, so flags can't flip on a
-        # boundary) — operators.quality.robust_outliers
-        from data_warehouse_punta_fina_spark.operators.quality import robust_outliers
-
-        events = load_table(spark, sf_dir, "events")
-        scored = robust_outliers(events, "value", ["event_type"], z=2.0)
-        return scored.groupBy("event_type").agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("is_outlier").cast("int")).alias("n_outliers"),
-            F.max("score").alias("max_score"),
-        )
-
-    def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # last-touch attribution: each purchase credits the latest
-        # view/click within 24 h, else 'organic' — the union-window as-of
-        # pattern (operators.asof) carrying the touch payload, one window
-        # per user, no self-join
-        events = load_table(spark, sf_dir, "events")
-        u = events.filter(
-            F.col("event_type").isin("view", "click", "purchase")
-        ).select(
-            "user_id",
-            "ts",
-            "event_id",
-            "event_type",
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("_is_conv"),
-        )
-        w = (
-            Window.partitionBy("user_id")
-            .orderBy("ts", "_is_conv", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        touch_type = F.last(
-            F.when(F.col("_is_conv") == 0, F.col("event_type")), ignorenulls=True
-        ).over(w)
-        touch_ts = F.last(
-            F.when(F.col("_is_conv") == 0, F.col("ts")), ignorenulls=True
-        ).over(w)
-        m = u.withColumn("_tt", touch_type).withColumn("_tts", touch_ts)
-        attributed = F.when(
-            F.col("_tts").isNotNull()
-            & (
-                F.unix_micros(F.col("ts")) - F.unix_micros(F.col("_tts"))
-                <= F.lit(86400 * 1_000_000)
-            ),
-            F.col("_tt"),
-        ).otherwise(F.lit("organic"))
-        return (
-            m.filter(F.col("_is_conv") == 1)
-            .select(attributed.alias("attributed"))
-            .groupBy("attributed")
-            .agg(F.count("*").alias("n_conversions"))
-        )
-
-    def events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # calendar spine + LOCF: daily last value per user, gaps carried
-        # forward (operators.asof.gap_fill_locf); nulls before a user's
-        # first active day survive (no fabricated history)
-        from data_warehouse_punta_fina_spark.operators.asof import gap_fill_locf
-
-        events = load_table(spark, sf_dir, "events")
-        daily = events.groupBy(
-            "user_id", F.col("ts").cast("date").alias("fecha")
-        ).agg(
-            F.max_by(pround2("value"), F.struct("ts", "event_id")).alias("_v")
-        )
-        filled = gap_fill_locf(daily, "user_id", "fecha", ["_v"])
-        return filled.select(
-            "user_id", "fecha", F.col("_v").cast("double").alias("value")
-        )
-
-    def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # strict-order funnel view→click→purchase within 24 h of the first
-        # view: per-user progress, then the per-level user counts
-        # (operators.behavior.funnel_progress)
-        from data_warehouse_punta_fina_spark.operators.behavior import funnel_progress
-
-        events = load_table(spark, sf_dir, "events")
-        prog = funnel_progress(
-            events, ["view", "click", "purchase"], within_seconds=86400
-        )
-        return prog.groupBy("steps_completed").agg(F.count("*").alias("n_users"))
-
-    def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # weekly retention triangle (operators.behavior.retention_cohorts)
-        from data_warehouse_punta_fina_spark.operators.behavior import retention_cohorts
-
-        events = load_table(spark, sf_dir, "events")
-        return retention_cohorts(events)
-
-    def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # context-window chunking: overlapping 32-token windows, stride 24
-        # (operators.packing.chunk_documents — the split counterpart to
-        # doc_pack_bins' combine)
-        from data_warehouse_punta_fina_spark.operators.packing import chunk_documents
-
-        docs = load_table(spark, sf_dir, "documents")
-        return chunk_documents(docs, chunk_tokens=32, overlap=8)
-
-    def doc_edit_distance_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # strictest verify tier: SimHash-blocked candidates confirmed by
-        # true Levenshtein distance (identical DP in both engines) — only
-        # candidate texts are read, never all-pairs
-        from data_warehouse_punta_fina_spark.operators.dedup import edit_distance_near_dup
-
-        return edit_distance_near_dup(
-            load_table(spark, sf_dir, "documents"), max_hamming=3, max_ratio=0.6
-        )
-
-    def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        return brute_force_topk(emb, emb.filter(F.col("vec_id") < 8), k=5)
-
-    def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # 6 sign bits (64 cells) + Hamming-1 multiprobe: a query touches
-        # 7/64 ≈ 11% of the corpus instead of single-probe bits=4's 1/16
-        # with its boundary recall cliff — the buckets-vs-recall lever the
-        # round-1 verdict flagged
-        emb = load_table(spark, sf_dir, "embeddings")
-        return ivf_topk(emb, emb.filter(F.col("vec_id") < 8), k=5, bits=6, multiprobe=True)
-
-    def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the trained-quantizer tier above sign buckets: deterministic
-        # 2-iteration Lloyd k-means (integer-rounded centroids keep every
-        # distance exact int64 cross-engine), then cell-local search
-        from data_warehouse_punta_fina_spark.operators.similarity import ivf_trained_topk
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        return ivf_trained_topk(
-            emb, emb.filter(F.col("vec_id") < 8), k=5, n_centroids=16, iters=2
-        )
-
-    def ann_ivf_trained_probe3(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the nprobe lever on the trained quantizer: each query searches
-        # its 3 nearest cells (recall 0.544 → 0.706 at 16 cells,
-        # tools/ann_recall.py) — benched alongside nprobe=1 so the
-        # recall/cost trade is tracked round-over-round
-        from data_warehouse_punta_fina_spark.operators.similarity import ivf_trained_topk
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        return ivf_trained_topk(
-            emb, emb.filter(F.col("vec_id") < 8), k=5, n_centroids=16, iters=2, probes=3
-        )
-
-    def emb_near_dup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.operators.similarity import (
-            embedding_near_dup_pairs_trained,
-        )
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        return embedding_near_dup_pairs_trained(emb, threshold=0.35, n_centroids=16, iters=2)
-
-    def emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # 8 sign bits → 256 blocks: within-block pair count ~N²/256 (vs
-        # N²/16 at round-1's bits=4); blocking is mirrored exactly in the
-        # oracle, so recall semantics stay oracle-checked
-        emb = load_table(spark, sf_dir, "embeddings")
-        return embedding_near_dup_pairs(emb, threshold=0.35, bits=8)
-
-    def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Johnson-Lindenstrauss 64→16 reduction with a deterministic ±1
-        # (Achlioptas) matrix — exact int64 accumulation, md5-derived signs
-        # the oracle rebuilds bit-identically
-        from data_warehouse_punta_fina_spark.operators.similarity import random_projection
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        return random_projection(emb, out_dims=16, in_dims=64)
-
-    def dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the reference's FASE-5 post-load validation (SURVEY §5.3) over the
-        # built star: grain uniqueness, FK closure, double-entry, row counts
-        fv = fact_ventas(spark, sf_dir)
-        journal = build_fact_transacciones(spark, sf_dir)
-        dims = {
-            "cliente_id": _memo_dim("cliente", build_dim_cliente, spark, sf_dir),
-            "producto_id": _memo_dim("producto", build_dim_producto, spark, sf_dir),
-            "almacen_id": _memo_dim("almacen", build_dim_almacen, spark, sf_dir),
-        }
-        rows = []
-        n = fv.count()
-        rows.append(("count_gt_zero", "fact_ventas", n))
-        dup = fv.groupBy("venta_id").count().filter(F.col("count") > 1).count()
-        rows.append(("grain_unique", "fact_ventas", dup))
-        for fk, dim in dims.items():
-            orphans = fv.join(dim.select(F.col(fk)), fk, "left_anti").count()
-            rows.append(("fk_orphans", f"fact_ventas.{fk}", orphans))
-        de = journal.agg(
-            F.sum(F.when(F.col("tipo_movimiento") == "DEBITO", F.col("monto")).otherwise(0)).alias("d"),
-            F.sum(F.when(F.col("tipo_movimiento") == "CREDITO", F.col("monto")).otherwise(0)).alias("c"),
-        ).collect()[0]
-        diff_cents = int(abs((de["d"] or 0) - (de["c"] or 0)) * 100)
-        rows.append(("double_entry", "fact_transacciones", diff_cents))
-        return spark.createDataFrame(rows, "check string, target string, value long")
-
-    def scd2_customer_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.operators.scd import scd2_merge
-
-        customer = load_table(spark, sf_dir, "customer")
-        current = customer.select(
-            F.col("c_custkey").alias("cliente_key"),
-            F.col("c_mktsegment").alias("segmento"),
-            F.to_date(F.lit("2020-01-01")).alias("valid_from"),
-            F.to_date(F.lit("9999-12-31")).alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
-        updates = (
-            customer.filter(F.col("c_custkey") % 10 == 0)
-            .select(F.col("c_custkey").alias("cliente_key"), F.lit("SEGMENTO_NUEVO").alias("segmento"))
-            .unionByName(
-                customer.filter(F.col("c_custkey") % 97 == 0).select(
-                    (F.col("c_custkey") + F.lit(1000000)).alias("cliente_key"),
-                    F.lit("NUEVO").alias("segmento"),
-                )
-            )
-        )
-        return scd2_merge(
-            current, updates, "cliente_key", ["segmento"], F.to_date(F.lit("2024-06-01"))
-        )
-
-    def scd2_pit_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the Kimball temporal join: every order resolved to the customer-
-        # segment VERSION valid at its order date (interval residual on the
-        # equi hash join). No broadcast hint: the dim derives from customer
-        # (scale-proportional, ~15M rows at sf100), so Spark's
-        # autoBroadcastJoinThreshold picks the strategy — broadcast while
-        # small, shuffle join past the threshold
-        from data_warehouse_punta_fina_spark.operators.scd import pit_lookup, scd2_merge
-
-        customer = load_table(spark, sf_dir, "customer")
-        current = customer.select(
-            F.col("c_custkey").alias("cliente_key"),
-            F.col("c_mktsegment").alias("segmento"),
-            F.to_date(F.lit("1990-01-01")).alias("valid_from"),
-            F.to_date(F.lit("9999-12-31")).alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
-        updates = customer.filter(F.col("c_custkey") % 10 == 0).select(
-            F.col("c_custkey").alias("cliente_key"),
-            F.lit("SEGMENTO_NUEVO").alias("segmento"),
-        )
-        dim = scd2_merge(
-            current, updates, "cliente_key", ["segmento"], F.to_date(F.lit("1996-06-01"))
-        )
-        orders = load_table(spark, sf_dir, "orders")
-        return pit_lookup(
-            orders, dim, "o_custkey", "cliente_key", "o_orderdate"
-        ).select(
-            F.col("o_orderkey").alias("orden_id"),
-            F.col("o_custkey").alias("cliente_key"),
-            F.col("o_orderdate").alias("fecha"),
-            F.col("segmento"),
-            F.col("valid_from"),
-        )
-
-    def semantic_near_dup_crosscheck(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the SemDeDup pattern: candidates from EMBEDDING space (cheap,
-        # semantic), verification by exact text overlap — each candidate
-        # pair reports cosine AND n-gram Jaccard (0 when no shingle
-        # overlap: semantically close but textually distinct)
-        from data_warehouse_punta_fina_spark.operators.dedup import jaccard_on_candidates
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        docs = load_table(spark, sf_dir, "documents")
-        cand = embedding_near_dup_pairs(emb, threshold=0.35, bits=8).localCheckpoint(
-            eager=False
-        )
-        j = jaccard_on_candidates(docs, cand.select("id_a", "id_b"), threshold=0.0)
-        return cand.join(j, ["id_a", "id_b"], "left").select(
-            "id_a",
-            "id_b",
-            "cosine",
-            F.coalesce(F.col("jaccard"), F.lit(0).cast("decimal(12,6)")).alias("jaccard"),
-        )
-
-    def customer_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # CDC first half: diff two snapshots into inserted/deleted/updated/
-        # unchanged (the incremental upgrade of the reference's
-        # truncate-and-load). New snapshot is a deterministic mutation:
-        # %13 keys deleted, %10 segments updated, %97 keys inserted.
-        from data_warehouse_punta_fina_spark.operators.scd import snapshot_diff
-
-        customer = load_table(spark, sf_dir, "customer")
-        old = customer.select("c_custkey", "c_mktsegment")
-        base_new = customer.filter(F.col("c_custkey") % 13 != 0).select(
-            "c_custkey",
-            F.when(F.col("c_custkey") % 10 == 0, "SEGMENTO_NUEVO")
-            .otherwise(F.col("c_mktsegment"))
-            .alias("c_mktsegment"),
-        )
-        inserts = customer.filter(F.col("c_custkey") % 97 == 0).select(
-            (F.col("c_custkey") + F.lit(1000000)).alias("c_custkey"),
-            F.lit("NUEVO").alias("c_mktsegment"),
-        )
-        return snapshot_diff(
-            old, base_new.unionByName(inserts), ["c_custkey"], hash_compare=False
-        )
-
-    def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.operators.dedup import dedup_clusters
-
-        docs = load_table(spark, sf_dir, "documents")
-        pairs = minhash_lsh_pairs(docs, num_hashes=12, bands=4)
-        return dedup_clusters(docs.select("doc_id"), pairs, max_iter=30)
-
-    def doc_cluster_quality_canonicals(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # quality-aware canonical selection: the kept representative of
-        # each near-dup cluster is its HIGHEST-QUALITY member (ties to
-        # the smallest id), not the smallest id — the curation refinement
-        # a pipeline ships once a quality scorer exists (keeping the best
-        # copy of boilerplate families instead of an arbitrary one). The
-        # per-cluster argmax window partitions on cluster_id
-        # (cluster-sized partitions); quality values live on the exact
-        # 1e-6 lattice so the DESC order is engine-identical.
-        from data_warehouse_punta_fina_spark.functions.text import quality_score
-        from data_warehouse_punta_fina_spark.operators.dedup import dedup_clusters
-
-        docs = load_table(spark, sf_dir, "documents")
-        pairs = minhash_lsh_pairs(docs, num_hashes=12, bands=4)
-        clusters = dedup_clusters(docs.select("doc_id"), pairs, max_iter=30)
-        q = docs.select("doc_id", quality_score("text").alias("quality"))
-        joined = clusters.select("doc_id", "cluster_id").join(q, "doc_id")
-        w = Window.partitionBy("cluster_id").orderBy(
-            F.desc("quality"), F.asc("doc_id")
-        )
-        best = (
-            joined.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("cluster_id", F.col("doc_id").alias("canonical_doc"), "quality")
-        )
-        sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
-        return best.join(sizes, "cluster_id")
-
-    def doc_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # corpus-self-trained BIGRAM-LM surprisal: templated/boilerplate
-        # text repeats transitions, so conditional surprisal collapses
-        # even when the unigram mix looks normal — the sharper tail filter
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.text_quality import bigram_surprisal
-
-        docs = load_table(spark, sf_dir, "documents")
-        return bigram_surprisal(_spread(docs), "text", "doc_id")
-
-    def doc_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # deterministic n-per-language sample: rank by md5(doc_id||salt)
-        # inside each language — a reproducible "eyeball 20 docs per
-        # language" draw that never changes across reruns or re-ingests
-        docs = load_table(spark, sf_dir, "documents")
-        key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|sample")))
-        w = Window.partitionBy("lang").orderBy(key, F.col("doc_id"))
-        return (
-            docs.select("doc_id", "lang")
-            .withColumn("sample_rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("sample_rank") <= 20)
-        )
-
-    def doc_quality_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # language-STRATIFIED quality cut: keep each language's best half
-        # by percent_rank — a global threshold would wipe out languages
-        # whose quality distribution sits lower (the standard curation
-        # mistake the per-language window avoids)
-        from data_warehouse_punta_fina_spark.functions.money import pround6
-        from data_warehouse_punta_fina_spark.functions.text import quality_score
-
-        docs = load_table(spark, sf_dir, "documents")
-        base = docs.select("doc_id", "lang", quality_score("text").alias("quality"))
-        w = Window.partitionBy("lang").orderBy(F.desc("quality"), F.asc("doc_id"))
-        return base.withColumn("pct_rank", pround6(F.percent_rank().over(w))).withColumn(
-            "keep", F.col("pct_rank") <= 0.5
-        )
-
-    def doc_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # fill a per-language TOKEN budget best-docs-first: cumulative
-        # token sum over (quality desc) per language, keep while under
-        # budget — how a training mix hits "N tokens per language"
-        # without a driver-side loop
-        from data_warehouse_punta_fina_spark.functions.text import quality_score, token_count
-
-        docs = load_table(spark, sf_dir, "documents")
-        base = docs.select(
-            "doc_id",
-            "lang",
-            token_count("text").cast("int").alias("n_tokens"),
-            # quality_score is already round-6'd — no extra rounding here
-            quality_score("text").alias("quality"),
-        )
-        w = (
-            Window.partitionBy("lang")
-            .orderBy(F.desc("quality"), F.asc("doc_id"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return base.withColumn("cum_tokens", F.sum("n_tokens").over(w)).withColumn(
-            "keep", F.col("cum_tokens") <= F.lit(5000)
-        )
-
-    def doc_dedup_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the END-TO-END fuzzy-dedup pipeline a training-data curator runs:
-        # LSH candidate pairs → connected components (the O(log n)
-        # large-star/small-star variant — web-scale duplicate chains) →
-        # keep ONE canonical doc per cluster, reporting how many near-dup
-        # copies each kept doc absorbs
-        from data_warehouse_punta_fina_spark.operators.dedup import dedup_clusters_star
-
-        docs = load_table(spark, sf_dir, "documents")
-        pairs = minhash_lsh_pairs(docs, num_hashes=12, bands=4)
-        clusters = dedup_clusters_star(docs.select("doc_id"), pairs, max_iter=30)
-        sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
-        kept = (
-            clusters.filter(F.col("is_canonical"))
-            .join(sizes, "cluster_id")
-            .select("doc_id", F.col("n_members").cast("int").alias("n_members"))
-        )
-        return docs.select(
-            "doc_id", F.length("text").cast("int").alias("n_chars")
-        ).join(kept, "doc_id")
-
-    def corpus_term_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.functions.text import tokens as _tokens
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-
-        docs = load_table(spark, sf_dir, "documents")
-        toks = _spread(docs).select(F.explode(_tokens("text")).alias("term"))
-        freq = toks.groupBy("term").agg(F.count("*").alias("freq"))
-        # global top-20 via orderBy().limit() → TakeOrdered (per-partition
-        # top-k + driver merge), NOT a single-partition global window over
-        # the whole vocabulary; the rank window then runs on 20 rows only
-        top = freq.orderBy(F.desc("freq"), F.asc("term")).limit(20)
-        # single-group rank over the 20 surviving rows. The partition key is
-        # constant (pmod(hash,1)=0) but non-foldable, so Catalyst can't
-        # reduce it to an empty partition spec — which would trip
-        # WindowExec's "No Partition Defined" warning on every run.
-        w = Window.partitionBy(F.pmod(F.xxhash64("term"), F.lit(1))).orderBy(
-            F.desc("freq"), F.asc("term")
-        )
-        return top.withColumn("rank", F.row_number().over(w).cast("int"))
-
-    def doc_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # tf-idf-style salience with exact rational arithmetic
-        # (tf · N / df) — transcendental idf would differ in the last ulp
-        # across engines, the ratio form is bit-portable. df comes from the
-        # WHOLE corpus; output restricted to doc_id < 20, top-5 per doc.
-        from data_warehouse_punta_fina_spark.functions.money import pround6
-        from data_warehouse_punta_fina_spark.functions.text import tokens as _tokens
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-
-        docs = load_table(spark, sf_dir, "documents")
-        toks = _spread(docs).select("doc_id", F.explode(_tokens("text")).alias("term"))
-        tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-        df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
-        n_docs = docs.agg(F.count("*").alias("n_docs"))
-        scored = (
-            tf.filter(F.col("doc_id") < 20)
-            .join(df_, "term")
-            .crossJoin(F.broadcast(n_docs))
-            .withColumn("salience", pround6(F.col("tf") * F.col("n_docs") / F.col("df")))
-        )
-        w = Window.partitionBy("doc_id").orderBy(F.desc("salience"), F.asc("term"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= 5)
-            .select("doc_id", "term", "tf", "df", "salience", "rank")
-        )
-
-    def doc_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # weighted all-pairs similarity (Bayardo et al. 2007): tf-idf
-        # cosine top-5 neighbors per doc over the inverted-index self-join
-        # (operators.retrieval.tfidf_doc_pairs). Restricted to doc_id<200
-        # so the sf-proportional pair fan-out stays correctness-sized;
-        # at scale the df_cap bounds it instead.
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import tfidf_doc_pairs
-
-        docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-        return tfidf_doc_pairs(_spread(docs), k=5)
-
-    def source_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # FineWeb-style domain-level curation: per-source dup fraction,
-        # mean quality, short fraction + the keep/drop gate
-        # (operators.text_quality.source_quality_report)
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.text_quality import (
-            source_quality_report as _sqr,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        return _sqr(_spread(docs))
-
-    def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Gopher-style repetition profile (top-bigram share, duplicate-
-        # bigram fraction, unique ratio) — training-data quality signals
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.text_quality import repetition_metrics
-
-        docs = load_table(spark, sf_dir, "documents")
-        return repetition_metrics(_spread(docs), "text", "doc_id", n=2)
-
-    def doc_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Lee-et-al-style exact-substring duplication profile: 5-gram
-        # occurrences repeated anywhere in the corpus, interval-merged
-        # into maximal spans per doc (operators.dedup.repeated_span_stats)
-        from data_warehouse_punta_fina_spark.operators.dedup import repeated_span_stats
-
-        docs = load_table(spark, sf_dir, "documents")
-        return repeated_span_stats(docs, "text", "doc_id", n=5)
-
-    def doc_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # C4/CCNet-style segment dedup + reassembly: 24-token segments,
-        # corpus-wide keep-first, docs rebuilt from surviving segments
-        # (operators.dedup.dedup_segments)
-        from data_warehouse_punta_fina_spark.operators.dedup import (
-            dedup_segments,
-            fixed_token_segments,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        return dedup_segments(docs, fixed_token_segments("text", 24))
-
-    def doc_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Shannon entropy of each doc's token distribution + normalized
-        # form (operators.text_quality.token_entropy)
-        from data_warehouse_punta_fina_spark.operators.text_quality import token_entropy
-
-        docs = load_table(spark, sf_dir, "documents")
-        return token_entropy(docs)
-
-    def doc_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Church-&-Hanks PMI collocations: top-40 bigrams by pointwise
-        # mutual information vs the pair distribution's own marginals
-        # (operators.text_quality.pmi_collocations)
-        from data_warehouse_punta_fina_spark.operators.text_quality import pmi_collocations
-
-        docs = load_table(spark, sf_dir, "documents")
-        return pmi_collocations(docs, "text", "doc_id", min_pair_count=5, top_k=40)
-
-    def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Okapi BM25 lexical retrieval: fixed query set, top-5 per query.
-        # inverted-index join with broadcast query terms (operators.retrieval)
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import bm25_topk
-
-        docs = load_table(spark, sf_dir, "documents")
-        return bm25_topk(_spread(docs), _BM25_QUERIES, k=5)
-
-    def doc_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-9 debut: hybrid retrieval — BM25 lexical + exact-cosine
-        # semantic candidates fused by reciprocal-rank fusion (Cormack
-        # 2009), the standard RAG retrieval combiner. Query-by-example:
-        # docs 1-4 are the queries (their tokens feed BM25 via a
-        # DataFrame — no driver collect; their embeddings feed the
-        # semantic side), self-matches excluded, top-20 candidates per
-        # list, rrf_k=60, final top-5. Semantic coverage is PARTIAL at
-        # sf0.1 (embeddings cover 2000 of 5000 docs) — exactly the
-        # production shape where the lexical index is fuller than the
-        # vector index, which is what RRF exists to absorb.
-        from data_warehouse_punta_fina_spark.functions.text import tokens as _tokens
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            bm25_topk_terms,
-            rrf_fuse,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        emb = load_table(spark, sf_dir, "embeddings")
-        qids = [1, 2, 3, 4]
-        qterms = (
-            docs.filter(F.col("doc_id").isin(qids))
-            .select(
-                F.col("doc_id").alias("query_id"),
-                F.explode(_tokens(F.col("text"))).alias("term"),
-            )
-            .distinct()
-        )
-        lex = bm25_topk_terms(
-            _spread(docs), qterms, k=20, exclude_query_doc=True
-        ).select("query_id", "doc_id", "rank")
-        sem = brute_force_topk(emb, emb.filter(F.col("vec_id").isin(qids)), k=20).select(
-            F.col("query_id"), F.col("neighbor_id").alias("doc_id"), F.col("rank")
-        )
-        return rrf_fuse({"lex": lex, "sem": sem}, k=5, rrf_k=60)
-
-    def doc_hybrid_rrf_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-9 debut: the SCALE PATH of the hybrid — identical RRF
-        # fusion, but the semantic candidates come from the trained-IVF
-        # quantizer (16 cells, nprobe=3: probe cells, never the corpus)
-        # instead of the brute-force scan. At 100 TB this is the shape
-        # that runs: the brute twin (doc_hybrid_rrf_search) is the
-        # recall ceiling it trades against.
-        from data_warehouse_punta_fina_spark.functions.text import tokens as _tokens
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            bm25_topk_terms,
-            rrf_fuse,
-        )
-        from data_warehouse_punta_fina_spark.operators.similarity import (
-            ivf_trained_topk,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        emb = load_table(spark, sf_dir, "embeddings")
-        qids = [1, 2, 3, 4]
-        qterms = (
-            docs.filter(F.col("doc_id").isin(qids))
-            .select(
-                F.col("doc_id").alias("query_id"),
-                F.explode(_tokens(F.col("text"))).alias("term"),
-            )
-            .distinct()
-        )
-        # round-16 (guide §2.6, VERDICT r15 #4): the lexical and semantic
-        # legs are independent until the fuse, but the IVF leg's k-means
-        # training executes synchronously at construction (AQE compiles
-        # its localCheckpoint), serializing it BEFORE the lexical leg's
-        # tokenize ran in the final action. Build both legs in parallel
-        # driver threads, each ending in a lazy checkpoint so its stage
-        # chain runs inside its thread; results are unchanged (the legs'
-        # plans are identical, only the wall-clock interleaving moves).
-        from data_warehouse_punta_fina_spark.operators.materialize import (
-            build_concurrently,
-        )
-
-        lex, sem = build_concurrently(
-            [
-                lambda: bm25_topk_terms(
-                    _spread(docs), qterms, k=20, exclude_query_doc=True
-                )
-                .select("query_id", "doc_id", "rank")
-                .localCheckpoint(eager=False),
-                lambda: ivf_trained_topk(
-                    emb,
-                    emb.filter(F.col("vec_id").isin(qids)),
-                    k=20,
-                    n_centroids=16,
-                    iters=2,
-                    probes=3,
-                )
-                .select(
-                    F.col("query_id"),
-                    F.col("neighbor_id").alias("doc_id"),
-                    F.col("rank"),
-                )
-                .localCheckpoint(eager=False),
-            ]
-        )
-        return rrf_fuse({"lex": lex, "sem": sem}, k=5, rrf_k=60)
-
-    def doc_hybrid_rrf_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-10 debut (VERDICT r9 #2): the DEPLOYMENT shape of the
-        # hybrid — identical RRF fusion, but the semantic side probes
-        # the PERSISTED IVF-PQ index (the SAME durable artifact
-        # ann_ivfpq_persisted_topk builds and caches: coarse centroids +
-        # PQ codebooks + cid-partitioned codes), so at 100 TB the hybrid
-        # runs with NO training job and no corpus-wide vector scan
-        # anywhere in the plan: BM25 joins broadcast query terms against
-        # the postings, the semantic side reads only the probed cells'
-        # codes (dynamic partition pruning on the cid-partitioned codes
-        # table) and reranks 40 exact vectors per query. probes=6 /
-        # rerank=40 are SEARCH-time knobs — the same persisted artifact
-        # serves ann_ivfpq_persisted_topk at p4/r30; tuned so the fused
-        # top-5 overlaps the brute twin 18/20 at sf0.01
-        # (docs/BENCH_NOTES.md). One index, many query workloads — the
-        # fusion stays candidate-bounded (queries × k rows per list).
-        # Training is RNG-free, so the oracle is the in-query
-        # _ivfpq_topk_sql chain with the query filter swapped in.
-        import os
-
-        from data_warehouse_punta_fina_spark.functions.text import tokens as _tokens
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            bm25_topk_terms,
-            rrf_fuse,
-        )
-        from data_warehouse_punta_fina_spark.operators.similarity import (
-            ivfpq_build_index,
-            ivfpq_search_index,
-        )
-
-        params = dict(n_cells=16, m=8, n_centroids=8, iters=2)
-        fp = _data_fingerprint(sf_dir, "embeddings")
-        idx = _index_cache_dir("ivfpq", f"c16_m8_k8_i2_{fp}")
-        if not os.path.exists(os.path.join(idx, "codes", "_SUCCESS")):
-            ivfpq_build_index(load_table(spark, sf_dir, "embeddings"), idx, **params)
-        docs = load_table(spark, sf_dir, "documents")
-        emb = load_table(spark, sf_dir, "embeddings")
-        qids = [1, 2, 3, 4]
-        qterms = (
-            docs.filter(F.col("doc_id").isin(qids))
-            .select(
-                F.col("doc_id").alias("query_id"),
-                F.explode(_tokens(F.col("text"))).alias("term"),
-            )
-            .distinct()
-        )
-        lex = bm25_topk_terms(
-            _spread(docs), qterms, k=20, exclude_query_doc=True
-        ).select("query_id", "doc_id", "rank")
-        sem = ivfpq_search_index(
-            emb.filter(F.col("vec_id").isin(qids)),
-            emb,
-            idx,
-            k=20,
-            probes=6,
-            rerank=40,
-            **params,
-        ).select(F.col("query_id"), F.col("neighbor_id").alias("doc_id"), F.col("rank"))
-        return rrf_fuse({"lex": lex, "sem": sem}, k=5, rrf_k=60)
-
-    def doc_bm25_prf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-10 extra: pseudo-relevance-feedback query expansion
-        # (Rocchio/RM3 family) — first-pass BM25 top-3, the 5 most
-        # frequent NEW terms of the feedback set widen the query, second
-        # pass re-scores; one corpus tokenize feeds both passes
-        # (operators/retrieval.bm25_prf_topk; unrolled two-pass oracle)
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import bm25_prf_topk
-
-        docs = load_table(spark, sf_dir, "documents")
-        return bm25_prf_topk(_spread(docs), _BM25_QUERIES, k=5, fb_docs=3, fb_terms=5)
-
-    def doc_bm25_prf_search_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-11 debut (VERDICT r10 #3): PRF composed ONTO the
-        # persisted inverted index — both BM25 passes and the
-        # feedback-term mining read the stored postings
-        # (operators/retrieval.bm25_prf_search_index), zero corpus
-        # tokenization at query time. Deterministic twin of
-        # doc_bm25_prf_search, so its unrolled two-pass oracle is
-        # reused verbatim. Pass 1 gets the seed terms' static bucket
-        # filter (same index-router collect as doc_bm25_persisted_topk).
-        import re
-
-        from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            bm25_prf_search_index,
-        )
-
-        idx = _bm25_index_dir(spark, sf_dir)
-        qrows = [
-            (qid, t)
-            for qid, qtext in _BM25_QUERIES
-            for t in dict.fromkeys(
-                w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-            )
-        ]
-        qdf = spark.createDataFrame(qrows, "query_id int, term string")
-        buckets = sorted(
-            r["b"]
-            for r in qdf.select(
-                F.pmod(F.xxhash64("term"), F.lit(16)).cast("int").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return bm25_prf_search_index(
-            qdf, idx, k=5, fb_docs=3, fb_terms=5, prune_buckets=buckets
-        )
-
-    def _bm25_index_dir(spark: SparkSession, sf_dir: str) -> str:
-        # build-once-per-corpus-fingerprint persisted inverted index
-        # (operators/retrieval.bm25_build_index); stats/ is written last,
-        # so its _SUCCESS marks a complete build
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            bm25_build_index,
-        )
-
-        fp = _data_fingerprint(sf_dir, "documents")
-        idx = _index_cache_dir("bm25", f"b16_{fp}")
-        if not os.path.exists(os.path.join(idx, "stats", "_SUCCESS")):
-            bm25_build_index(
-                _spread(load_table(spark, sf_dir, "documents")), idx, n_buckets=16
-            )
-        return idx
-
-    def doc_bm25_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-10 debut: BM25 over the PERSISTED inverted index — the
-        # lexical twin of ann_ivfpq_persisted_topk. At 100 TB the word
-        # count (the only corpus-sized shuffle in retrieval) runs once
-        # per snapshot; every search is a broadcast (bucket, term) join
-        # that DPP-prunes the bucket-partitioned postings to the query
-        # terms' buckets. Deterministic scoring means the stored-index
-        # search is bit-equal to in-query tokenization — the oracle is
-        # doc_bm25_topk's SQL verbatim.
-        import re
-
-        from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            bm25_search_index,
-        )
-
-        idx = _bm25_index_dir(spark, sf_dir)
-        qrows = [
-            (qid, t)
-            for qid, qtext in _BM25_QUERIES
-            for t in dict.fromkeys(
-                w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-            )
-        ]
-        qdf = spark.createDataFrame(qrows, "query_id int, term string")
-        # driver-known literal queries get a STATIC bucket filter (DPP
-        # needs a selective predicate the LocalRelation lacks); the
-        # collect is metadata-sized (≤ n_buckets ints from ~40 literal
-        # terms — the index-router lookup every search engine does)
-        buckets = sorted(
-            r["b"]
-            for r in qdf.select(
-                F.pmod(F.xxhash64("term"), F.lit(16)).cast("int").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return bm25_search_index(qdf, idx, k=5, prune_buckets=buckets)
-
-    def doc_bm25_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-10 extra (r11 promotion candidate): the APPEND path of
-        # the persisted inverted index — build on the even-id half,
-        # append the odd half (operators/retrieval.bm25_append_index:
-        # only the new batch is tokenized; vocabulary + stats
-        # re-aggregate from stored postings, no corpus re-tokenize), and
-        # search the union. BM25's globals (df/avgdl/n) are re-derived
-        # exactly, so appended == full rebuild and doc_bm25_topk's
-        # oracle is reused verbatim.
-        import os
-        import re
-
-        from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            bm25_append_index,
-            bm25_build_index,
-            bm25_search_index,
-        )
-
-        fp = _data_fingerprint(sf_dir, "documents")
-        idx = _index_cache_dir("bm25_inc", f"b16_{fp}")
-        if not os.path.exists(os.path.join(idx, "_APPENDED")):
-            docs = _spread(load_table(spark, sf_dir, "documents"))
-            bm25_build_index(docs.filter(F.col("doc_id") % 2 == 0), idx, n_buckets=16)
-            bm25_append_index(docs.filter(F.col("doc_id") % 2 == 1), idx)
-            with open(os.path.join(idx, "_APPENDED"), "w") as fh:
-                fh.write("ok")
-        qrows = [
-            (qid, t)
-            for qid, qtext in _BM25_QUERIES
-            for t in dict.fromkeys(
-                w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-            )
-        ]
-        qdf = spark.createDataFrame(qrows, "query_id int, term string")
-        buckets = sorted(
-            r["b"]
-            for r in qdf.select(
-                F.pmod(F.xxhash64("term"), F.lit(16)).cast("int").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return bm25_search_index(qdf, idx, k=5, prune_buckets=buckets)
-
-    def doc_bm25_maintained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-12 debut (VERDICT r11 #4): the BM25 index-MAINTENANCE
-        # stream — documents drained through a real availableNow
-        # Structured Streaming query whose every micro-batch lands in
-        # the index via the O(batch ∪ vocab) append algebra under
-        # EPOCHED global state (streaming/bm25_stream.
-        # run_bm25_maintenance_stream: a replayed batch re-derives
-        # df/N/total_dl/fingerprint from the epoch below it — bit-equal,
-        # never double-merged). df/N/total_dl merge exactly over the
-        # disjoint batches, so searching the maintained index is
-        # bit-equal to one monolithic build — doc_bm25_topk's oracle is
-        # reused verbatim.
-        import os
-        import re
-
-        from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            bm25_search_index,
-        )
-        from data_warehouse_punta_fina_spark.streaming.bm25_stream import (
-            run_bm25_maintenance_stream,
-        )
-
-        fp = _data_fingerprint(sf_dir, "documents")
-        idx = _index_cache_dir("bm25_maint", f"b16_{fp}")
-        if not os.path.exists(os.path.join(idx, "_MAINTAINED")):
-            # clean slate: a PARTIAL prior attempt leaves a checkpoint
-            # whose offsets reference source files the overwrite below
-            # replaces (new part-file names) — resuming would re-ingest
-            # and corrupt the index, so rebuild from scratch instead
-            import shutil
-
-            for sub in os.listdir(idx) if os.path.isdir(idx) else []:
-                shutil.rmtree(os.path.join(idx, sub), ignore_errors=True)
-            docs = _spread(load_table(spark, sf_dir, "documents"))
-            src = os.path.join(idx, "_source")
-            # two files -> two micro-batches (maxFilesPerTrigger=1)
-            docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(src)
-            docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            q = run_bm25_maintenance_stream(
-                spark,
-                src,
-                spark.read.parquet(src).schema,
-                checkpoint_dir=os.path.join(idx, "_ckpt"),
-                index_dir=idx,
-                n_buckets=16,
-            )
-            # the marker must only exist for a FULLY drained stream — a
-            # timed-out drain would cache a partial index as complete
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError(
-                    "bm25 maintenance drain did not finish within 300s"
-                )
-            with open(os.path.join(idx, "_MAINTAINED"), "w") as fh:
-                fh.write("ok")
-        qrows = [
-            (qid, t)
-            for qid, qtext in _BM25_QUERIES
-            for t in dict.fromkeys(
-                w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-            )
-        ]
-        qdf = spark.createDataFrame(qrows, "query_id int, term string")
-        buckets = sorted(
-            r["b"]
-            for r in qdf.select(
-                F.pmod(F.xxhash64("term"), F.lit(16)).cast("int").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return bm25_search_index(qdf, idx, k=5, prune_buckets=buckets)
-
-    def doc_bm25_compacted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-13 debut (VERDICT r12 #2): search over a COMPACTED BM25
-        # index — the driver-gate exposure of the compaction triptych.
-        # The index is built on the even-id half then APPENDED with the
-        # odd half (each append adds a file set per touched bucket —
-        # the small-file fragmentation a long-lived index accumulates),
-        # then operators/retrieval.bm25_compact_index rewrites it ONE
-        # file per bucket (src→dst, the lakehouse cut-over shape),
-        # carrying dfstats/stats + the content fingerprint verbatim.
-        # Compaction changes LAYOUT, not content, so the search is
-        # bit-equal to a monolithic build — doc_bm25_topk's oracle is
-        # reused verbatim (the doc_bm25_incremental_topk discipline).
-        import os
-        import re
-
-        from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            bm25_append_index,
-            bm25_build_index,
-            bm25_compact_index,
-            bm25_search_index,
-        )
-
-        fp = _data_fingerprint(sf_dir, "documents")
-        root = _index_cache_dir("bm25_comp", f"b16_{fp}")
-        idx = os.path.join(root, "compacted")
-        if not os.path.exists(os.path.join(root, "_COMPACTED")):
-            src = os.path.join(root, "src")
-            docs = _spread(load_table(spark, sf_dir, "documents"))
-            bm25_build_index(docs.filter(F.col("doc_id") % 2 == 0), src, n_buckets=16)
-            bm25_append_index(docs.filter(F.col("doc_id") % 2 == 1), src)
-            bm25_compact_index(spark, src, idx)
-            with open(os.path.join(root, "_COMPACTED"), "w") as fh:
-                fh.write("ok")
-        qrows = [
-            (qid, t)
-            for qid, qtext in _BM25_QUERIES
-            for t in dict.fromkeys(
-                w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-            )
-        ]
-        qdf = spark.createDataFrame(qrows, "query_id int, term string")
-        buckets = sorted(
-            r["b"]
-            for r in qdf.select(
-                F.pmod(F.xxhash64("term"), F.lit(16)).cast("int").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return bm25_search_index(qdf, idx, k=5, prune_buckets=buckets)
-
-    def doc_bm25_federated_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-11 debut: SHARDED lexical indexing — the BM25 twin of
-        # ann_ivfpq_federated_topk, with the property the vector side
-        # lacks: federation is EXACT. Each shard (even/odd doc ids)
-        # builds its OWN persisted inverted index; the search merges
-        # the shards' global stats losslessly (df/N/total_dl are sums
-        # over disjoint doc sets) and scores every shard's bucket-pruned
-        # postings under the merged stats
-        # (operators/retrieval.bm25_federated_search), bit-equal to one
-        # monolithic index — so doc_bm25_topk's oracle is reused
-        # verbatim. Contrast measured in RECALL.json: the vector
-        # federation pays a per-shard-training recall penalty; the
-        # lexical one provably cannot.
-        import os
-        import re
-
-        from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            bm25_build_index,
-            bm25_federated_search,
-        )
-
-        fp = _data_fingerprint(sf_dir, "documents")
-        shards = []
-        for i in range(2):
-            idx = _index_cache_dir("bm25_fed", f"b16_{fp}_s{i}")
-            if not os.path.exists(os.path.join(idx, "stats", "_SUCCESS")):
-                docs = _spread(load_table(spark, sf_dir, "documents"))
-                bm25_build_index(
-                    docs.filter(F.col("doc_id") % 2 == i), idx, n_buckets=16
-                )
-            shards.append(idx)
-        qrows = [
-            (qid, t)
-            for qid, qtext in _BM25_QUERIES
-            for t in dict.fromkeys(
-                w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-            )
-        ]
-        qdf = spark.createDataFrame(qrows, "query_id int, term string")
-        buckets = sorted(
-            r["b"]
-            for r in qdf.select(
-                F.pmod(F.xxhash64("term"), F.lit(16)).cast("int").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return bm25_federated_search(qdf, shards, k=5, prune_buckets=buckets)
-
-    def doc_retrieval_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-11 debut: graded retrieval EVALUATION — nDCG@5 + MRR of
-        # the BM25 ranking per query (operators/evaluation.
-        # retrieval_rank_metrics), the metric pair every retrieval stack
-        # is judged by. Qrels here are derived (grade = # distinct query
-        # terms the doc contains) so the oracle can replay them; in
-        # production qrels are tiny human-judgment inputs and the
-        # evaluation is one candidate-bounded join + one qrels-sized
-        # window — nothing corpus-sized beyond the ranking under test.
-        import re
-
-        from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.evaluation import (
-            retrieval_rank_metrics,
-        )
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            _bm25_rank,
-            corpus_term_stats,
-        )
-
-        docs = _spread(load_table(spark, sf_dir, "documents"))
-        # ONE corpus tokenize feeds both the ranking under test and the
-        # derived qrels (round-15: the r14 shape tokenized twice — once
-        # inside bm25_topk, once for the qrels' distinct-term explode).
-        # postings rows ARE the distinct (doc, term) pairs, so the qrels
-        # grade (# distinct query terms the doc contains) reads straight
-        # off the checkpointed postings; df/dl re-derive from the same
-        # materialized blocks. Values identical, oracle unchanged.
-        postings, _df0, _dl0 = corpus_term_stats(docs)
-        postings = postings.localCheckpoint(eager=False)
-        df_stats = postings.groupBy("term").agg(F.count("*").alias("df"))
-        dl = postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-        qrows = [
-            (qid, t)
-            for qid, qtext in _BM25_QUERIES
-            for t in dict.fromkeys(
-                w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-            )
-        ]
-        qdf = spark.createDataFrame(qrows, "query_id int, term string")
-        # the ranking under test is corpus-sized work but its OUTPUT is
-        # queries x k rows — materialize so the metric branches never
-        # re-run the BM25 scan (plan-audit finding r11)
-        ranked = _bm25_rank(docs, qdf, 5, "doc_id", postings, df_stats, dl).localCheckpoint(
-            eager=False
-        )
-        qrels = (
-            postings.join(F.broadcast(qdf), "term")
-            .groupBy("query_id", "doc_id")
-            .agg(F.count("*").cast("int").alias("grade"))
-        )
-        return retrieval_rank_metrics(ranked, qrels, k=5)
-
-    def doc_hybrid_rrf_search_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-10 debut: the FULLY-persisted hybrid — BOTH retrieval
-        # sides read durable artifacts (BM25 inverted index + IVF-PQ
-        # index), so the complete RAG-retrieval stack runs with zero
-        # corpus-sized work at query time: no tokenize scan, no
-        # training job, two DPP-pruned index reads + candidate-bounded
-        # fusion. Values are bit-equal to doc_hybrid_rrf_search_pq
-        # (both index paths are deterministic twins of their in-query
-        # forms), so its oracle is reused verbatim.
-        import os
-
-        from data_warehouse_punta_fina_spark.functions.text import tokens as _tokens
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            bm25_search_index,
-            rrf_fuse,
-        )
-        from data_warehouse_punta_fina_spark.operators.similarity import (
-            ivfpq_build_index,
-            ivfpq_search_index,
-        )
-
-        params = dict(n_cells=16, m=8, n_centroids=8, iters=2)
-        fp = _data_fingerprint(sf_dir, "embeddings")
-        vidx = _index_cache_dir("ivfpq", f"c16_m8_k8_i2_{fp}")
-        if not os.path.exists(os.path.join(vidx, "codes", "_SUCCESS")):
-            ivfpq_build_index(load_table(spark, sf_dir, "embeddings"), vidx, **params)
-        lidx = _bm25_index_dir(spark, sf_dir)
-        docs = load_table(spark, sf_dir, "documents")
-        emb = load_table(spark, sf_dir, "embeddings")
-        qids = [1, 2, 3, 4]
-        qterms = (
-            docs.filter(F.col("doc_id").isin(qids))
-            .select(
-                F.col("doc_id").alias("query_id"),
-                F.explode(_tokens(F.col("text"))).alias("term"),
-            )
-            .distinct()
-        )
-        lex = bm25_search_index(qterms, lidx, k=20, exclude_query_doc=True).select(
-            "query_id", "doc_id", "rank"
-        )
-        sem = ivfpq_search_index(
-            emb.filter(F.col("vec_id").isin(qids)),
-            emb,
-            vidx,
-            k=20,
-            probes=6,
-            rerank=40,
-            **params,
-        ).select(F.col("query_id"), F.col("neighbor_id").alias("doc_id"), F.col("rank"))
-        return rrf_fuse({"lex": lex, "sem": sem}, k=5, rrf_k=60)
-
-    def doc_hybrid_rrf_search_federated(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-10 extra: hybrid retrieval over a SHARDED corpus — the
-        # composition a 100 TB RAG stack actually runs: BM25 lexical
-        # candidates + a semantic side that fans out to PER-SHARD
-        # persisted IVF-PQ indexes (no training job ever saw the whole
-        # corpus) and rank-merges, fused by RRF. Reuses the
-        # ann_ivfpq_federated_topk shard artifacts; oracle = the BM25
-        # chain + two CTE-prefixed shard chains + fed union + fusion.
-        import os
-
-        from data_warehouse_punta_fina_spark.functions.text import tokens as _tokens
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            bm25_topk_terms,
-            rrf_fuse,
-        )
-        from data_warehouse_punta_fina_spark.operators.similarity import (
-            ivfpq_build_index,
-            ivfpq_federated_search,
-        )
-
-        params = dict(n_cells=16, m=8, n_centroids=8, iters=2)
-        fp = _data_fingerprint(sf_dir, "embeddings")
-        emb = load_table(spark, sf_dir, "embeddings")
-        shards = []
-        for i, pred in enumerate((F.col("vec_id") % 2 == 0, F.col("vec_id") % 2 == 1)):
-            idx = _index_cache_dir("ivfpq_fed", f"c16_m8_k8_i2_{fp}_s{i}")
-            if not os.path.exists(os.path.join(idx, "codes", "_SUCCESS")):
-                ivfpq_build_index(emb.filter(pred), idx, **params)
-            shards.append(idx)
-        docs = load_table(spark, sf_dir, "documents")
-        qids = [1, 2, 3, 4]
-        qterms = (
-            docs.filter(F.col("doc_id").isin(qids))
-            .select(
-                F.col("doc_id").alias("query_id"),
-                F.explode(_tokens(F.col("text"))).alias("term"),
-            )
-            .distinct()
-        )
-        lex = bm25_topk_terms(
-            _spread(docs), qterms, k=20, exclude_query_doc=True
-        ).select("query_id", "doc_id", "rank")
-        sem = ivfpq_federated_search(
-            emb.filter(F.col("vec_id").isin(qids)),
-            emb,
-            shards,
-            k=20,
-            probes=4,
-            rerank=30,
-            **params,
-        ).select(F.col("query_id"), F.col("neighbor_id").alias("doc_id"), F.col("rank"))
-        return rrf_fuse({"lex": lex, "sem": sem}, k=5, rrf_k=60)
-
-    def doc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # incremental ingestion: odd-id docs arrive as the "new batch" and
-        # dedupe against the even-id indexed corpus (band join new×index,
-        # exact Jaccard verify on candidates only)
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread, incremental_lsh_dedup
-
-        docs = _spread(load_table(spark, sf_dir, "documents"))
-        corpus = docs.filter(F.col("doc_id") % 2 == 0)
-        new_batch = docs.filter(F.col("doc_id") % 2 == 1)
-        return incremental_lsh_dedup(corpus, new_batch, threshold=0.2)
-
-    def doc_incremental_dedup_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the steady-state ingestion shape: the corpus band index is
-        # PERSISTED (minhash_band_keys written partitionBy(band), built
-        # once per data fingerprint — parameter metadata rides the
-        # band_key column and is validated by incremental_lsh_dedup), so
-        # each arriving batch joins the STORED index instead of
-        # re-hashing the corpus; verify still tokenizes only candidate
-        # docs. Values identical to doc_incremental_dedup (same band
-        # scheme), so the oracle is reused verbatim.
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.dedup import (
-            _spread,
-            incremental_lsh_dedup,
-            minhash_band_keys,
-        )
-
-        fp = _data_fingerprint(sf_dir, "documents")
-        idx = _index_cache_dir("lsh_bands", f"h12_b4_n3_{fp}")
-
-        docs = _spread(load_table(spark, sf_dir, "documents"))
-        corpus = docs.filter(F.col("doc_id") % 2 == 0)
-        if not os.path.exists(os.path.join(idx, "_SUCCESS")):
-            minhash_band_keys(corpus).write.mode("overwrite").partitionBy(
-                "band"
-            ).parquet(idx)
-        bands = spark.read.parquet(idx)
-        new_batch = docs.filter(F.col("doc_id") % 2 == 1)
-        return incremental_lsh_dedup(
-            corpus, new_batch, threshold=0.2, corpus_bands=bands
-        )
-
-    def doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # self-trained unigram-LM mean surprisal per doc (CCNet/Dolma-style
-        # quality signal; both tails are filter candidates)
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.text_quality import unigram_surprisal
-
-        docs = load_table(spark, sf_dir, "documents")
-        return unigram_surprisal(_spread(docs), "text", "doc_id")
-
-    def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # position-wise vector aggregation: centroid per class label.
-        # exact int64 sums over quantized components; ONE double division at
-        # the end — deterministic under any partitioning (vectors.py note)
-        from data_warehouse_punta_fina_spark.functions.money import pround6
-        from data_warehouse_punta_fina_spark.functions.vectors import quantize
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        exploded = emb.select(
-            "label", F.posexplode(quantize("embedding")).alias("pos", "q")
-        )
-        return exploded.groupBy("label", "pos").agg(
-            F.count("*").alias("n"),
-            pround6(F.sum("q").cast("double") / F.count("*") / F.lit(1000.0)).alias("centroid"),
-        )
-
-    def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        return extract_features(media_from_documents(docs))
-
-    def sql_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the SQL front end: one ANSI string, executed verbatim by BOTH
-        # engines (Catalyst plans it like the DataFrame API would)
-        from data_warehouse_punta_fina_spark.sources.readers import register_views
-
-        register_views(spark, sf_dir)
-        return spark.sql(_REVENUE_BY_NATION_SQL)
-
-    def sql_top_customer_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # SQL window functions through the SQL front end — same string runs
-        # verbatim on both engines
-        from data_warehouse_punta_fina_spark.sources.readers import register_views
-
-        register_views(spark, sf_dir)
-        return spark.sql(_TOP_CUSTOMER_PER_NATION_SQL)
-
-    def events_value_band_rangejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # theta/range join: events.value BETWEEN band.lo AND band.hi.
-        # the band table is tiny → broadcast nested-loop, no shuffle of the
-        # fact side; at scale with many bands, bucketize the range key into
-        # an equi-join (the standard range-join rewrite)
-        events = load_table(spark, sf_dir, "events")
-        bands = spark.createDataFrame(
-            [("B0_50", 0.0, 50.0), ("B50_100", 50.0, 100.0), ("B100_250", 100.0, 250.0),
-             ("B250_INF", 250.0, 1e18)],
-            "band string, lo double, hi double",
-        )
-        joined = events.join(
-            F.broadcast(bands), (events["value"] >= bands["lo"]) & (events["value"] < bands["hi"]), "inner"
-        )
-        return joined.groupBy("band", "event_type").agg(
-            F.count("*").alias("n"),
-            F.sum(pround2("value")).cast("decimal(18,2)").alias("total_value"),
-        )
-
-    def events_value_band_rangejoin_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the SCALE tier of the range join: grid both sides on value/step
-        # and equi-join on the cell (residual predicate re-verifies), with
-        # an overflow cell capping the open-ended band — same result as
-        # the broadcast nested-loop (same oracle proves it), but the band
-        # side can be arbitrarily large
-        from data_warehouse_punta_fina_spark.operators.rangejoin import bucketed_range_join
-
-        events = load_table(spark, sf_dir, "events")
-        bands = spark.createDataFrame(
-            [("B0_50", 0.0, 50.0), ("B50_100", 50.0, 100.0), ("B100_250", 100.0, 250.0),
-             ("B250_INF", 250.0, 1e18)],
-            "band string, lo double, hi double",
-        )
-        joined = bucketed_range_join(events, "value", bands, step=50.0, hi_cap=250.0)
-        return joined.groupBy("band", "event_type").agg(
-            F.count("*").alias("n"),
-            F.sum(pround2("value")).cast("decimal(18,2)").alias("total_value"),
-        )
-
-    def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # 1-hour windows sliding every 30 min: each event lands in exactly 2
-        # windows (duration/slide). Same plan runs incrementally as a stream.
-        events = load_table(spark, sf_dir, "events")
-        agg = events.groupBy(
-            F.window("ts", "1 hour", "30 minutes").alias("w"), F.col("event_type")
-        ).agg(
-            F.count("*").alias("n_events"),
-            F.sum(pround2("value")).cast("decimal(18,2)").alias("total_value"),
-        )
-        return agg.select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-
-    def pnl_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # unpivot/melt: the P&L wide columns back to long (periodo, concepto,
-        # monto) via stack() — the inverse of the A6 pivot
-        pnl = build_fact_estado_resultados(build_fact_transacciones(spark, sf_dir))
-        return pnl.selectExpr(
-            "periodo_id",
-            "stack(5, 'ingresos', ingresos, 'costos', costos, 'gastos', gastos, "
-            "'utilidad_bruta', utilidad_bruta, 'utilidad_neta', utilidad_neta) AS (concepto, monto)",
-        )
-
-    def events_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # numerically-portable mean/stddev: exact decimal moment sums
-        # (Σx, Σx²), one double division/sqrt at the end. A naive float
-        # stddev is partial-aggregation-order dependent — this is not.
-        events = load_table(spark, sf_dir, "events")
-        v = pround2("value")
-        agg = events.groupBy("event_type").agg(
-            F.count("*").alias("n"),
-            F.sum(v).cast("decimal(20,2)").alias("sum_x"),
-            F.sum((v * v).cast("decimal(25,4)")).cast("decimal(25,4)").alias("sum_x2"),
-        )
-        from data_warehouse_punta_fina_spark.functions.money import pround6
-
-        mean = F.col("sum_x").cast("double") / F.col("n")
-        var = (
-            F.col("sum_x2").cast("double")
-            - F.col("sum_x").cast("double") * F.col("sum_x").cast("double") / F.col("n")
-        ) / (F.col("n") - 1)
-        return agg.select(
-            "event_type",
-            "n",
-            pround6(mean).alias("media"),
-            pround6(F.sqrt(var)).alias("desv_estandar"),
-        )
-
-    def customer_balance_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # NTILE(4) without the global window a plain ntile forces (a
-        # single-partition sort of the whole table — the round-1 scale
-        # flag): global rank via the two-pass range-partitioned
-        # ranked_sequential_id, then SQL NTILE's exact bucket rule — the
-        # first N%k buckets get floor(N/k)+1 rows (front-loaded, NOT the
-        # evenly-spread floor((r-1)k/N) variant) — in pure integer DIV/%.
-        from data_warehouse_punta_fina_spark.operators.windows import ranked_sequential_id
-
-        customer = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-        ranked = ranked_sequential_id(customer, ["c_acctbal", "c_custkey"], out="_r")
-        n = ranked.agg(F.count("*").alias("_n"))
-        big = "((_n div 4) + 1)"  # size of the first (_n % 4) buckets
-        ntile_expr = (
-            f"CASE WHEN _r <= (_n % 4) * {big} THEN ((_r - 1) div {big}) + 1 "
-            f"ELSE (_n % 4) + ((_r - (_n % 4) * {big} - 1) div (_n div 4)) + 1 END"
-        )
-        quartiled = ranked.crossJoin(F.broadcast(n)).withColumn(
-            "cuartil", F.expr(ntile_expr).cast("int")
-        )
-        return quartiled.groupBy("cuartil").agg(
-            F.count("*").alias("n"),
-            F.sum(pround2("c_acctbal")).cast("decimal(18,2)").alias("saldo_total"),
-            F.min(pround2("c_acctbal")).alias("saldo_min"),
-            F.max(pround2("c_acctbal")).alias("saldo_max"),
-        )
-
-    def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # market-basket association screen: parts co-purchased within an
-        # order, support/confidence/lift, top-50 by lift
-        # (operators.behavior.basket_affinity)
-        from data_warehouse_punta_fina_spark.operators.behavior import basket_affinity
-
-        li = load_table(spark, sf_dir, "lineitem")
-        return basket_affinity(li, "l_orderkey", "l_partkey", min_pair_count=3, top_k=50)
-
-    def doc_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # positional-index exact phrase search; the oracle scans token
-        # slices directly — two different computation paths, same rows
-        # (operators.retrieval.phrase_search)
-        from data_warehouse_punta_fina_spark.operators.retrieval import phrase_search
-
-        docs = load_table(spark, sf_dir, "documents")
-        return phrase_search(docs, "order fast")
-
-    def doc_phrase_search_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-11 debut: phrase search over the PERSISTED positional
-        # index (operators/retrieval.positional_build_index — the
-        # phrase/proximity complement of the BM25 postings, completing
-        # the persisted-artifact family). Zero corpus tokenization at
-        # query time: the phrase terms are driver-known literals, so the
-        # scan carries a STATIC bucket filter and matching is the
-        # classic positional intersection (term-frequency-sized join
-        # sides, never corpus-sized). Bit-equal to the in-query
-        # phrase_search — its oracle is reused verbatim.
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            phrase_search_index,
-            positional_build_index,
-        )
-
-        fp = _data_fingerprint(sf_dir, "documents")
-        idx = _index_cache_dir("positional", f"arr_b16_{fp}")
-        if not os.path.exists(os.path.join(idx, "stats", "_SUCCESS")):
-            positional_build_index(
-                _spread(load_table(spark, sf_dir, "documents")), idx, n_buckets=16
-            )
-        return phrase_search_index(spark, idx, "order fast")
-
-    def doc_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-11 debut: proximity retrieval over the persisted
-        # positional index — docs where 'customer' and 'order' co-occur
-        # within 6 tokens (operators/retrieval.proximity_search_index):
-        # the predicate between bag-of-words BM25 and exact phrase
-        # match, and the "terms in the same context" filter topical
-        # curation actually uses. Static bucket pruning (driver-known
-        # terms), per-doc tf_a x tf_b pair fan-out, never corpus-sized.
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            positional_build_index,
-            proximity_search_index,
-        )
-
-        fp = _data_fingerprint(sf_dir, "documents")
-        idx = _index_cache_dir("positional", f"arr_b16_{fp}")
-        if not os.path.exists(os.path.join(idx, "stats", "_SUCCESS")):
-            positional_build_index(
-                _spread(load_table(spark, sf_dir, "documents")), idx, n_buckets=16
-            )
-        return proximity_search_index(spark, idx, "customer", "order", window=6)
-
-    def doc_phrase_slop_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-12 debut: SLOPPY phrase search over the persisted
-        # positional index (operators/retrieval.phrase_slop_search_index
-        # — VERDICT r11 #6): 'customer order fast' in order with at most
-        # 3 intervening tokens between consecutive terms — the middle
-        # ground between exact phrase and bag-of-words, and the natural
-        # consumer of the v2 array-postings layout (one static bucket
-        # filter, per-term tf-bounded array explodes, two chained range
-        # joins; per-doc fan-out bounded by the product of the terms'
-        # frequencies). Oracle: the same chained joins over DuckDB token
-        # lists (1-based positions cancel in the gap differences;
-        # first_pos adjusts by -1).
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            phrase_slop_search_index,
-            positional_build_index,
-        )
-
-        fp = _data_fingerprint(sf_dir, "documents")
-        idx = _index_cache_dir("positional", f"arr_b16_{fp}")
-        if not os.path.exists(os.path.join(idx, "stats", "_SUCCESS")):
-            positional_build_index(
-                _spread(load_table(spark, sf_dir, "documents")), idx, n_buckets=16
-            )
-        return phrase_slop_search_index(
-            spark, idx, "customer order fast", slop=3
-        )
-
-    def doc_cooccurrence_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-12 debut: n-term WITHIN-WINDOW co-occurrence over the
-        # persisted positional index (operators/retrieval.
-        # cooccurrence_search_index) — 'spark', 'vector', 'join' in any
-        # order within 6 tokens: the unordered complement of the sloppy
-        # phrase (order-free "concepts in the same context" curation
-        # predicate). Chained equi-joins carry the running (min, max)
-        # span so tuples die as soon as the span exceeds the window;
-        # min_span is numbering-invariant (differences only). Oracle:
-        # the same 3-way join with GREATEST/LEAST span arithmetic.
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            cooccurrence_search_index,
-            positional_build_index,
-        )
-
-        fp = _data_fingerprint(sf_dir, "documents")
-        idx = _index_cache_dir("positional", f"arr_b16_{fp}")
-        if not os.path.exists(os.path.join(idx, "stats", "_SUCCESS")):
-            positional_build_index(
-                _spread(load_table(spark, sf_dir, "documents")), idx, n_buckets=16
-            )
-        return cooccurrence_search_index(
-            spark, idx, ["spark", "vector", "join"], window=6
-        )
-
-    def doc_phrase_search_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-13 debut (VERDICT r12 #2): phrase search over a
-        # COMPACTED positional index that started life STREAM-SHAPED —
-        # the documents land in two ingest_batch partitions (the
-        # maintenance-stream layout, written via the stream's own batch
-        # function), then operators/retrieval.positional_compact_index
-        # graduates the index to the batch shape (one file per bucket,
-        # ingest_batch dropped) and ESTABLISHES the content fingerprint
-        # from the corpus — after the ADVICE r12 cross-check that the
-        # corpus matches the indexed doc set. Compaction changes layout,
-        # not content, so the search is bit-equal to the batch-built
-        # index: doc_phrase_search's oracle is reused verbatim.
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.retrieval import (
-            phrase_search_index,
-            positional_compact_index,
-        )
-        from data_warehouse_punta_fina_spark.streaming.positional_stream import (
-            positional_ingest_batch,
-        )
-
-        fp = _data_fingerprint(sf_dir, "documents")
-        root = _index_cache_dir("positional_comp", f"arr_b16_{fp}")
-        idx = os.path.join(root, "compacted")
-        if not os.path.exists(os.path.join(root, "_COMPACTED")):
-            src = os.path.join(root, "src")
-            docs = _spread(load_table(spark, sf_dir, "documents"))
-            positional_ingest_batch(
-                docs.filter(F.col("doc_id") % 2 == 0), 0, src, n_buckets=16
-            )
-            positional_ingest_batch(
-                docs.filter(F.col("doc_id") % 2 == 1), 1, src, n_buckets=16
-            )
-            positional_compact_index(spark, src, idx, corpus=docs)
-            with open(os.path.join(root, "_COMPACTED"), "w") as fh:
-                fh.write("ok")
-        return phrase_search_index(spark, idx, "order fast")
-
-    def doc_heavy_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # two-pass distributed heavy hitters: per-partition Misra-Gries
-        # candidates (provable superset), exact JVM recount, integer
-        # threshold n*64 > N (operators.sampling.heavy_hitters)
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-        from data_warehouse_punta_fina_spark.operators.sampling import heavy_hitters
-        from data_warehouse_punta_fina_spark.functions.text import tokens as _tokens
-
-        docs = load_table(spark, sf_dir, "documents")
-        toks = _spread(docs).select(F.explode(_tokens(F.col("text"))).alias("tok"))
-        return heavy_hitters(toks, "tok", 64)
-
-    def doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Efraimidis-Spirakis weighted sample without replacement: 50 docs
-        # proportional to n_chars, reproducible across engines/partitions
-        # (operators.sampling.weighted_sample)
-        from data_warehouse_punta_fina_spark.operators.sampling import weighted_sample
-
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-        return weighted_sample(docs, "n_chars", 50, seed="ws")
-
-    def revenue_anomaly_weeks(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # time-series anomaly screen composed from existing operators:
-        # weekly revenue -> seasonal-naive residual (vs previous week,
-        # gap-proof date join, no row-lag) -> median/MAD robust outlier
-        # flags (operators.quality.robust_outliers)
-        from data_warehouse_punta_fina_spark.operators.quality import robust_outliers
-
-        orders = load_table(spark, sf_dir, "orders")
-        weekly = orders.groupBy(
-            F.date_trunc("week", F.col("o_orderdate")).alias("wk")
-        ).agg(F.sum(pround2("o_totalprice")).cast("decimal(18,2)").alias("rev"))
-        prev = weekly.select(
-            F.expr("wk + INTERVAL 7 DAYS").alias("wk"), F.col("rev").alias("rev_prev")
-        )
-        res = (
-            weekly.join(prev, "wk")
-            .withColumn(
-                "residual", (F.col("rev") - F.col("rev_prev")).cast("double")
-            )
-        )
-        scored = robust_outliers(res, "residual", z=3.5)
-        return scored.select(
-            F.date_format("wk", "yyyy-MM-dd").alias("week_start"),
-            "rev",
-            "rev_prev",
-            "residual",
-            "score",
-            "is_outlier",
-        )
-
-    def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # fixed-iteration PageRank over the co-purchase graph (parts
-        # sharing >= 2 orders), top-25 central parts
-        # (operators.graph.pagerank; oracle = 5 unrolled CTE iterations)
-        from data_warehouse_punta_fina_spark.operators.graph import pagerank
-
-        li = load_table(spark, sf_dir, "lineitem")
-        b = li.select(F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("it")).distinct()
-        pairs = (
-            b.alias("x")
-            .join(b.alias("y"), (F.col("x.bk") == F.col("y.bk")) & (F.col("x.it") < F.col("y.it")))
-            .groupBy(F.col("x.it").alias("item_a"), F.col("y.it").alias("item_b"))
-            .agg(F.count("*").alias("n_pair"))
-            .filter(F.col("n_pair") >= 2)
-            .select("item_a", "item_b")
-        )
-        pr = pagerank(pairs, "item_a", "item_b", iterations=5)
-        return pr.orderBy(F.desc("rank"), "node").limit(25)
-
-    def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # RFM segmentation: per-customer Recency/Frequency/Monetary
-        # quintiles via the window-free exact NTILE, standard segment
-        # labels, rolled up per segment (operators.behavior.rfm_scores)
-        from data_warehouse_punta_fina_spark.operators.behavior import rfm_scores
-
-        orders = load_table(spark, sf_dir, "orders")
-        cust = orders.groupBy(F.col("o_custkey").alias("k")).agg(
-            F.max("o_orderdate").alias("last_dt"),
-            F.count("*").alias("freq"),
-            F.sum(pround2("o_totalprice")).cast("decimal(18,2)").alias("mon"),
-        )
-        seg = rfm_scores(cust, "k", "last_dt", "freq", "mon", k=5)
-        return seg.groupBy("segment").agg(
-            F.count("*").alias("n_customers"),
-            F.sum("freq").alias("total_orders"),
-            F.sum("mon").cast("decimal(20,2)").alias("monetary_total"),
-        )
-
-    def events_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Population Stability Index drift report: the event-value
-        # distribution of the month's second half vs the first half,
-        # binned at the baseline's deciles (operators.quality.psi_report)
-        from data_warehouse_punta_fina_spark.operators.quality import psi_report
-
-        events = load_table(spark, sf_dir, "events")
-        split = F.lit("2024-01-16").cast("timestamp")
-        return psi_report(
-            events.filter(F.col("ts") < split),
-            events.filter(F.col("ts") >= split),
-            "value",
-            n_bins=10,
-        )
-
-    def events_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # KLL/GK-style quantile sketch conformance (the approximate tier's
-        # percentile counterpart to approx_distinct_parts): the sketch
-        # value itself is merge-order dependent, so the output exposes the
-        # EXACT median plus a boolean asserting the approx sits inside the
-        # exact [p−ε', p+ε'] value bounds, with ε' = 2/accuracy — double
-        # the guaranteed rank error, so the oracle can assert TRUE
-        # deterministically on any partitioning.
-        events = load_table(spark, sf_dir, "events")
-        acc, eps = 100, 2.0 / 100
-        agg = events.groupBy("event_type").agg(
-            F.percentile_approx("value", 0.5, acc).alias("_approx"),
-            F.expr("percentile(value, 0.5)").alias("p50"),
-            F.expr(f"percentile(value, {0.5 - eps})").alias("_lo"),
-            F.expr(f"percentile(value, {0.5 + eps})").alias("_hi"),
-            F.count("*").alias("n"),
-        )
-        return agg.select(
-            "event_type",
-            "n",
-            "p50",
-            ((F.col("_approx") >= F.col("_lo")) & (F.col("_approx") <= F.col("_hi"))).alias(
-                "approx_within_rank_bounds"
-            ),
-        )
-
-    def events_type_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # categorical PSI on the event-type mix, second half vs first
-        # half (operators.quality.psi_report_categorical)
-        from data_warehouse_punta_fina_spark.operators.quality import (
-            psi_report_categorical,
-        )
-
-        events = load_table(spark, sf_dir, "events")
-        split = F.lit("2024-01-16").cast("timestamp")
-        return psi_report_categorical(
-            events.filter(F.col("ts") < split),
-            events.filter(F.col("ts") >= split),
-            "event_type",
-        )
-
-    def events_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # exact interpolated percentiles: Spark `percentile` and DuckDB
-        # `quantile_cont` share the (n-1)·p linear-interpolation definition
-        # and agree bit-for-bit on doubles (probed before adopting)
-        events = load_table(spark, sf_dir, "events")
-        return events.groupBy("event_type").agg(
-            F.expr("percentile(value, 0.5)").alias("p50"),
-            F.expr("percentile(value, 0.9)").alias("p90"),
-            F.expr("percentile(value, 0.99)").alias("p99"),
-            F.count("*").alias("n"),
-        )
-
-    def salted_revenue_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.operators.skew import salted_agg
-
-        li = load_table(spark, sf_dir, "lineitem")
-        out = salted_agg(
-            li,
-            ["l_returnflag"],
-            {
-                "sum_qty": ("sum", pround2("l_quantity")),
-                "n_rows": ("count", F.lit(1)),
-                "max_price": ("max", pround2("l_extendedprice")),
-            },
-            buckets=16,
-        )
-        return out.select(
-            "l_returnflag",
-            F.col("sum_qty").cast("decimal(18,2)").alias("sum_qty"),
-            "n_rows",
-            "max_price",
-        )
-
-    def batch_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # §2.10 arbitrary pandas-callable contract via Arrow-batched
-        # mapInPandas — oracle-checked against the JVM-side tokenizer
-        import re as _re
-
-        import pandas as pd
-
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-        def per_batch(it):
-            pat = _re.compile(r"[a-z0-9]+")
-            for pdf in it:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "n_tokens_py": pdf["text"].map(lambda t: len(pat.findall(t.lower()))),
-                    }
-                )
-
-        return docs.mapInPandas(per_batch, schema="doc_id long, n_tokens_py long")
-
-    def asof_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.operators.asof import asof_join
-
-        events = load_table(spark, sf_dir, "events")
-        orders = load_table(spark, sf_dir, "orders")
-        left = events.select("event_id", "user_id", F.to_date("ts").alias("event_date"))
-        right = orders.select(F.col("o_custkey"), F.to_date("o_orderdate").alias("o_date"))
-        return asof_join(
-            left, right, "user_id", "o_custkey", "event_date", "o_date", out="last_order_date"
-        )
-
-    def events_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.operators.asof import sessionize
-
-        events = load_table(spark, sf_dir, "events")
-        out = sessionize(events, "user_id", "ts", gap_seconds=6 * 3600, order_tiebreak=["event_id"])
-        return out.select(
-            "event_id",
-            "user_id",
-            "session_seq",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-        )
-
-    def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # native session_window aggregate — the Structured-Streaming
-        # sessionization operator (merging-gap semantics: a new session
-        # starts when the inter-event gap is >= 6h; window end = last
-        # event + gap). Complements the row-level sessionize() operator
-        # (events_sessionized) with the aggregated per-session view.
-        events = load_table(spark, sf_dir, "events")
-        agg = events.groupBy(
-            F.session_window("ts", "6 hours").alias("w"), F.col("user_id")
-        ).agg(
-            F.count("*").alias("n_events"),
-            F.sum(pround2("value")).cast("decimal(18,2)").alias("total_value"),
-        )
-        return agg.select(
-            "user_id",
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-
-    def order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.operators.reconcile import reconcile_full_outer
-
-        orders = load_table(spark, sf_dir, "orders")
-        li = load_table(spark, sf_dir, "lineitem")
-        primary = orders.select(
-            F.col("o_orderkey").alias("orden_id"),
-            pround2("o_totalprice").cast("decimal(18,2)").alias("total"),
-        )
-        secondary = li.groupBy(F.col("l_orderkey").alias("orden_id")).agg(
-            F.sum(pround2("l_extendedprice")).cast("decimal(18,2)").alias("total")
-        )
-        return reconcile_full_outer(primary, secondary, ["orden_id"], ["total"])
-
-    def lineitem_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem")
-        return (
-            li.rollup("l_returnflag", "l_linestatus")
-            .agg(
-                F.sum(pround2("l_quantity")).cast("decimal(18,2)").alias("sum_qty"),
-                F.count("*").alias("n_rows"),
-            )
-        )
-
-    def lineitem_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # full CUBE + grouping_id: completes the grouping-sets family
-        # (ROLLUP in lineitem_rollup); both engines share the SQL-standard
-        # grouping-bit convention (leftmost column = MSB), verified exact
-        li = load_table(spark, sf_dir, "lineitem")
-        return li.cube("l_returnflag", "l_linestatus").agg(
-            F.sum(pround2("l_quantity")).cast("decimal(18,2)").alias("sum_qty"),
-            F.count("*").alias("n_rows"),
-            F.grouping_id().cast("int").alias("gid"),
-        )
-
-    def user_last_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-        events = load_table(spark, sf_dir, "events")
-        return events.groupBy("user_id").agg(
-            F.count("*").alias("n_events"),
-            F.max_by(pround2("value"), F.struct("ts", "event_id")).alias("last_value"),
-            F.min_by(pround2("value"), F.struct("ts", "event_id")).alias("first_value"),
-            F.sum(pround2("value")).cast("decimal(18,2)").alias("total_value"),
-        )
-
-    def custkey_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from data_warehouse_punta_fina_spark.operators.reconcile import symmetry_counts
-
-        orders = load_table(spark, sf_dir, "orders")
-        customer = load_table(spark, sf_dir, "customer")
-        return symmetry_counts(
-            orders.select(F.col("o_custkey").alias("k")),
-            customer.select(F.col("c_custkey").alias("k")),
-            ["k"],
-        )
-
-    def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # HLL sketch (A7 approximate tier). The sketch value itself is not
-        # oracle-portable, so the output exposes the exact count plus a
-        # boolean error-bound check: rsd=0.01 makes |err| > 5% a ≥5σ event,
-        # so the oracle can assert TRUE deterministically. HLL merge is
-        # commutative/associative → partition-order independent.
-        li = load_table(spark, sf_dir, "lineitem")
-        agg = li.groupBy("l_returnflag").agg(
-            F.approx_count_distinct("l_partkey", 0.01).alias("approx_parts"),
-            F.countDistinct("l_partkey").alias("exact_parts"),
-        )
-        return agg.select(
-            "l_returnflag",
-            "exact_parts",
-            (
-                F.abs(F.col("approx_parts") - F.col("exact_parts"))
-                <= F.col("exact_parts") * F.lit(0.05)
-            ).alias("approx_within_5pct"),
-        )
-
-    def events_validated(spark: SparkSession, sf_dir: str) -> DataFrame:
-        events = load_table(spark, sf_dir, "events")
-        rules = TableRules(
-            columns={
-                "event_id": ColumnRule(type="int", required=True),
-                "user_id": ColumnRule(type="int", required=True, default=-1),
-                "event_type": ColumnRule(type="string", default="unknown"),
-                "value": ColumnRule(type="float", min=0.0, max=250.0),
-            },
-            primary_key=["event_id"],
-        )
-        clean, _report = validate_and_populate(events.drop("props", "ts"), rules)
-        return clean.select("event_id", "user_id", "event_type", "value")
-
-    def dim_catalogs(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """All 12 literal/catalog dimensions (S8/U1 + the derived category
-        dim) as ONE probe row-set: (catalogo, item_id, codigo, nombre,
-        flag, valor). Round 1 spent 12 of the driver's 50 checked slots on
-        2-10-row literal tables; this keeps every catalog oracle-checked
-        in a single slot. The full-width builders stay in the package and
-        under pytest; per-dim entries remain in extra_queries()."""
-        from data_warehouse_punta_fina_spark.plans import dims_catalog, dims_legacy
-
-        def shape(df, name, id_col, codigo, nombre, flag, valor):
-            return df.select(
-                F.lit(name).alias("catalogo"),
-                F.col(id_col).cast("int").alias("item_id"),
-                codigo.cast("string").alias("codigo"),
-                F.col(nombre).alias("nombre"),
-                flag.cast("boolean").alias("flag"),
-                valor.cast("double").alias("valor"),
-            )
-
-        c, lg = dims_catalog, dims_legacy
-        parts = [
-            shape(build_dim_cuenta_contable(spark, sf_dir), "cuenta_contable", "cuenta_id",
-                  F.col("codigo"), "nombre", F.col("activa"), F.lit(None)),
-            shape(c.build_dim_tipo_movimiento(spark), "tipo_movimiento", "tipo_movimiento_id",
-                  F.col("codigo"), "nombre", F.col("activo"), F.lit(None)),
-            shape(c.build_dim_centro_costo(spark), "centro_costo", "centro_costo_id",
-                  F.col("codigo"), "nombre", F.col("activo"), F.lit(None)),
-            shape(c.build_dim_tipo_transaccion(spark), "tipo_transaccion", "tipo_transaccion_id",
-                  F.col("codigo"), "nombre", F.col("es_venta"), F.lit(None)),
-            shape(c.build_dim_impuestos(spark), "impuestos", "impuesto_id",
-                  F.col("codigo"), "nombre", F.col("activo"), F.col("tasa")),
-            shape(c.build_dim_estado_orden(spark), "estado_orden", "estado_orden_id",
-                  F.col("codigo_estado"), "nombre_estado", F.col("es_estado_final"), F.col("orden_flujo")),
-            shape(c.build_dim_envio(spark), "envio", "envio_id",
-                  F.col("codigo"), "metodo_envio", F.lit(None), F.col("costo")),
-            shape(lg.build_dim_canal(spark, sf_dir), "canal", "canal_id",
-                  F.col("codigo"), "nombre", F.col("activo"), F.lit(None)),
-            shape(lg.build_dim_estado_pago(spark, sf_dir), "estado_pago", "estado_pago_id",
-                  F.col("codigo"), "nombre", F.col("es_final"), F.lit(None)),
-            shape(lg.build_dim_pago(spark, sf_dir), "pago", "pago_id",
-                  F.col("metodo_pago"), "nombre", F.col("requiere_validacion"), F.col("plazo_dias")),
-            shape(lg.build_dim_sitio_web(spark, sf_dir), "sitio_web", "sitio_web_id",
-                  F.col("codigo"), "url", F.lit(None), F.lit(None)),
-            shape(c.build_dim_categoria_producto(spark, sf_dir), "categoria_producto", "categoria_id",
-                  F.lit(None), "nombre", F.col("activa"), F.lit(None)),
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def lineitem_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # per-(returnflag, linestatus) price~quantity OLS fit: slope /
-        # intercept / r² from exact sufficient statistics — one map-side-
-        # combined aggregate, no iteration (operators.stats.grouped_ols)
-        from data_warehouse_punta_fina_spark.operators.stats import grouped_ols
-
-        li = load_table(spark, sf_dir, "lineitem").select(
-            F.col("l_returnflag").alias("flag"),
-            F.col("l_linestatus").alias("status"),
-            "l_quantity",
-            "l_extendedprice",
-        )
-        return grouped_ols(
-            li, ["flag", "status"], "l_quantity", "l_extendedprice", x_scale=3, y_scale=2
-        )
-
-    def events_chi2_daypart(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # χ² independence screen: event type × daypart contingency cells
-        # with expected counts and per-cell χ² terms (SUM = the statistic;
-        # the big cells ARE the drill-down) — operators.stats.chi2_independence
-        from data_warehouse_punta_fina_spark.operators.stats import chi2_independence
-
-        ev = load_table(spark, sf_dir, "events").select(
-            F.col("event_type"),
-            (F.floor(F.hour("ts") / F.lit(6)) * F.lit(6)).cast("int").alias("daypart"),
-        )
-        return chi2_independence(ev, "event_type", "daypart").withColumnsRenamed(
-            {"a": "event_type", "b": "daypart"}
-        )
-
-    def events_type_hour_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # mutual-information decomposition of the same contingency the χ²
-        # screen tests: per-cell (n_ab/N)·ln(N·n_ab/(n_a·n_b)) in nats,
-        # SUM = I(type; daypart) — operators.stats.mutual_information
-        from data_warehouse_punta_fina_spark.operators.stats import mutual_information
-
-        ev = load_table(spark, sf_dir, "events").select(
-            F.col("event_type"),
-            (F.floor(F.hour("ts") / F.lit(6)) * F.lit(6)).cast("int").alias("daypart"),
-        )
-        return mutual_information(ev, "event_type", "daypart").withColumnsRenamed(
-            {"a": "event_type", "b": "daypart"}
-        )
-
-    def events_ks_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # two-sample KS on the baseline's decile grid: click-events' value
-        # CDF vs everything else, exact counts at each fitted cut
-        # (operators.stats.ks_grid_drift ∘ quantile_cuts_fit — grid-KS is
-        # within 1/10 of exact KS by construction); MAX(ks_term) is the
-        # statistic, the per-cut rows are the drill-down
-        from data_warehouse_punta_fina_spark.operators.stats import (
-            ks_grid_drift,
-            quantile_cuts_fit,
-        )
-
-        ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-        grid = quantile_cuts_fit(ev.filter(F.col("event_type") == "click"), "value", 10)
-        return ks_grid_drift(ev, "value", "event_type", "click", grid)
-
-    def nation_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # per-nation Gini + top-customer share of order revenue — the
-        # sorted-rank Gini identity, one group-partitioned window, exact
-        # int64 sufficient statistics (operators.stats.group_concentration)
-        from data_warehouse_punta_fina_spark.operators.stats import group_concentration
-
-        o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-        c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-        n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-        joined = o.join(c, o.o_custkey == c.c_custkey).join(
-            F.broadcast(n), c.c_nationkey == n.n_nationkey
-        )
-        return group_concentration(joined, ["n_name"], "c_custkey", "o_totalprice", 2)
-
-    def doc_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # BPE tokenizer training (Sennrich et al. 2016): the first 6 merge
-        # rules learned from the corpus word-frequency table — one
-        # corpus-scale word count, then vocabulary-sized merge iterations
-        # (operators.bpe.bpe_train; oracle = unrolled CTEs per merge)
-        from data_warehouse_punta_fina_spark.operators.bpe import bpe_train, word_frequency
-
-        docs = load_table(spark, sf_dir, "documents")
-        return bpe_train(word_frequency(docs), merges=6)
-
-    def customer_supplier_link(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Fellegi-Sunter probabilistic record linkage with blocking:
-        # customers × suppliers blocked on (nation, 100-wide balance
-        # band), scored on reference-number equality + balance proximity
-        # (operators.linkage.fellegi_sunter_link; oracle generated from
-        # the same FieldCompare list)
-        from data_warehouse_punta_fina_spark.operators.linkage import (
-            fellegi_sunter_link,
-        )
-
-        a = load_table(spark, sf_dir, "customer").select(
-            F.col("c_custkey"),
-            F.regexp_extract("c_name", "#(\\d+)", 1).cast("bigint").alias("ref_num"),
-            F.col("c_nationkey").alias("nat"),
-            F.floor(F.col("c_acctbal") / F.lit(100)).cast("bigint").alias("band"),
-            F.col("c_acctbal").alias("bal"),
-        )
-        b = load_table(spark, sf_dir, "supplier").select(
-            F.col("s_suppkey"),
-            F.regexp_extract("s_name", "#(\\d+)", 1).cast("bigint").alias("ref_num"),
-            F.col("s_nationkey").alias("nat"),
-            F.floor(F.col("s_acctbal") / F.lit(100)).cast("bigint").alias("band"),
-            F.col("s_acctbal").alias("bal"),
-        )
-        return fellegi_sunter_link(
-            a,
-            b,
-            "c_custkey",
-            "s_suppkey",
-            ["nat", "band"],
-            ["nat", "band"],
-            _link_fields(),
-            match_threshold=6.0,
-            review_threshold=2.0,
-        )
-
-    def part_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # triangle counts + local clustering coefficient over the part
-        # co-purchase graph (parts sharing an order) — degree-ordered
-        # orientation bounds wedge fan-out (operators.graph.triangle_counts)
-        from data_warehouse_punta_fina_spark.operators.graph import triangle_counts
-
-        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        a = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("pa"))
-        b = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("pb"))
-        edges = (
-            a.join(b, "l_orderkey")
-            .filter(F.col("pa") < F.col("pb"))
-            .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        )
-        return triangle_counts(edges)
-
-    def trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # k-core of the bipartite customer–supplier trade graph (iterative
-        # peel, early-exit at the fixed point): the trading nucleus —
-        # nodes with >= 10 within-core counterparties. Round 6 TRIED the
-        # delta peel here (operators.graph.kcore_delta) and measured it
-        # SLOWER at sf0.5 (23.3 s vs 13.5 s in bench context): this
-        # graph peels in huge frontiers, so "frontier-incident" is most
-        # of the graph and the delta version's extra anti-joins cost
-        # more than the re-aggregation they replace — kcore_delta stays
-        # available for the deep-cascade shapes it actually wins on
-        # (docs/BENCH_NOTES.md). Supplier ids offset to disjoint the
-        # bipartite sides (operators.graph.kcore; unrolled oracle; the
-        # part co-purchase graph is too dense to peel — min degree 42
-        # at sf0.01).
-        # max_iter=3 is MEASURED, not guessed (VERDICT r6 #5): the k=10
-        # peel of this graph converges after ONE effective round at every
-        # SF probed (sf0.001/0.01/0.1 testdata AND the 2.93M-edge
-        # .scaling/sf0.5 — DuckDB fixed-point loop, 2026-08-14, see
-        # docs/BENCH_NOTES.md round-7 note), so depth 3 = the effective
-        # round + the convergence-proof no-op + one margin round. The
-        # oracle unrolls the SAME depth, so even a hypothetical
-        # deeper-peeling input keeps both engines in agreement (both cap
-        # identically); the previous depth-6 unroll made the ORACLE pay
-        # 4 corpus-sized no-op rounds at sf0.5.
-        from data_warehouse_punta_fina_spark.operators.graph import kcore
-
-        o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        edges = o.join(li, o.o_orderkey == li.l_orderkey).select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + F.lit(1_000_000)).alias("dst"),
-        )
-        return kcore(edges, k=10, max_iter=3)
-
-    def events_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # join/group-key skew diagnostics: top-10 hottest user_ids with
-        # share/cumulative share + exact per-key count percentiles and the
-        # max/mean skew ratio (operators.skew.key_skew_report)
-        from data_warehouse_punta_fina_spark.operators.skew import key_skew_report
-
-        ev = load_table(spark, sf_dir, "events")
-        return key_skew_report(ev, "user_id", top_k=10)
-
-    def events_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # exact quantile discretizer (fit/transform): decile cuts fitted
-        # on events.value, every row bucketized by broadcast cuts (pure
-        # map), per-bucket count/min/max (operators.stats.quantile_cuts_fit
-        # + bucketize_with_cuts)
-        from data_warehouse_punta_fina_spark.operators.stats import (
-            bucketize_with_cuts,
-            quantile_cuts_fit,
-        )
-
-        ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-        cuts = quantile_cuts_fit(ev, "value", 10)
-        return (
-            bucketize_with_cuts(ev, cuts, "value")
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("n"),
-                F.min("value").alias("min_v"),
-                F.max("value").alias("max_v"),
-            )
-        )
-
-    def doc_mixture_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # training-mixture water-filling: allocate a global token budget
-        # across languages by target weight; under-supplied languages
-        # saturate and their deficit redistributes
-        # (operators.mixture.mixture_allocation; unrolled-round oracle)
-        from data_warehouse_punta_fina_spark.functions.text import token_count
-        from data_warehouse_punta_fina_spark.operators.mixture import mixture_allocation
-
-        docs = load_table(spark, sf_dir, "documents")
-        per_lang = (
-            docs.select(F.col("lang").alias("source"), token_count("text").alias("_tc"))
-            .groupBy("source")
-            .agg(F.sum("_tc").alias("tokens"))
-        )
-        w = spark.createDataFrame(_MIX_WEIGHTS, "source string, weight double")
-        # water-filling converges in ≤ |sources| rounds (≥1 source
-        # saturates per non-converged round) — 5 languages → 5 rounds
-        return mixture_allocation(
-            per_lang.join(F.broadcast(w), "source"), _MIX_BUDGET, max_iter=len(_MIX_WEIGHTS)
-        )
-
-    def events_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # merge_asof NEAREST with tolerance + payload: each click joins
-        # the nearest purchase by the same user within 30 minutes,
-        # carrying the purchase value (operators.asof.asof_join_values)
-        from data_warehouse_punta_fina_spark.operators.asof import asof_join_values
-
-        ev = load_table(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            "event_id", "user_id", "ts"
-        )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            "user_id", F.col("ts").alias("pts"), "value"
-        )
-        return asof_join_values(
-            clicks,
-            purchases,
-            "user_id",
-            "ts",
-            "pts",
-            ["value"],
-            direction="nearest",
-            tolerance_seconds=1800,
-        )
-
-    def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # int8 scalar-quantized ANN (FAISS SQ8 tier): asymmetric-distance
-        # scan over 1-byte codes, exact rerank of the top-20 candidates
-        # (operators.similarity.sq8_topk) — codes cut the scan 4x, the
-        # reported cosines stay exact
-        from data_warehouse_punta_fina_spark.operators.similarity import sq8_topk
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        return sq8_topk(emb, emb.filter(F.col("vec_id") < 8), k=5, rerank=20)
-
-    def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # product-quantization ANN (FAISS PQ tier, Jegou et al. 2011):
-        # 4 subspaces x 8 codebook centroids trained in ONE grouped Lloyd
-        # chain, asymmetric-distance scan over m-byte codes via a
-        # broadcast LUT, exact rerank of the top-20 candidates
-        # (operators.similarity.pq_topk) — at scale the scan reads
-        # 4 small ints per vector instead of 256 bytes
-        from data_warehouse_punta_fina_spark.operators.similarity import pq_topk
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        return pq_topk(emb, emb.filter(F.col("vec_id") < 8), k=5, m=4, n_centroids=8, iters=2, rerank=20)
-
-    def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the full IVF-PQ composition (VERDICT r6 #4): trained coarse
-        # cells restrict the scan to probes/n_cells of the corpus, ADC
-        # scores only the probed cells' m-byte codes, exact rerank
-        # decides the reported cosines (operators.similarity.ivfpq_topk;
-        # composed oracle). Driver config is deliberately small (16
-        # cells / 8x8 codebook) to keep the unrolled oracle tractable;
-        # the production recall rows — 0.919@14.1% scan (c64_p9 m16k16)
-        # and 0.906@12.5% (c32_p4 m8k32) at sf0.1 — live in
-        # tools/ann_recall.py + docs/SCALE.md.
-        from data_warehouse_punta_fina_spark.operators.similarity import ivfpq_topk
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        return ivfpq_topk(
-            emb,
-            emb.filter(F.col("vec_id") < 8),
-            k=5,
-            n_cells=16,
-            probes=4,
-            m=8,
-            n_centroids=8,
-            iters=2,
-            rerank=30,
-        )
-
-    def ann_ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the 100 TB deployment shape of IVF-PQ (VERDICT r7 #5): train
-        # ONCE into a durable index — coarse centroids, PQ codebooks,
-        # and (id, sub, scid) codes partitioned by cell — then every
-        # search reads the persisted artifacts: the broadcast query→cell
-        # join prunes the codes scan to the probed cells, ADC reads m
-        # ints per candidate, and only the rerank joins full vectors.
-        # Training is RNG-free, so the persisted search is bit-identical
-        # to in-query training with the same parameters — the oracle is
-        # therefore the same unrolled SQL as ann_ivfpq_topk. The index
-        # self-validates its parameter fingerprint from scid column
-        # metadata (the minhash band-index discipline) and is keyed by a
-        # content fingerprint of the embeddings table, so regenerated
-        # testdata can never serve a stale index.
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.similarity import (
-            ivfpq_build_index,
-            ivfpq_search_index,
-        )
-
-        params = dict(n_cells=16, m=8, n_centroids=8, iters=2)
-        fp = _data_fingerprint(sf_dir, "embeddings")
-        idx = _index_cache_dir("ivfpq", f"c16_m8_k8_i2_{fp}")
-        if not os.path.exists(os.path.join(idx, "codes", "_SUCCESS")):
-            emb_train = load_table(spark, sf_dir, "embeddings")
-            ivfpq_build_index(emb_train, idx, **params)
-        emb = load_table(spark, sf_dir, "embeddings")
-        return ivfpq_search_index(
-            emb.filter(F.col("vec_id") < 8),
-            emb,
-            idx,
-            k=5,
-            probes=4,
-            rerank=30,
-            **params,
-        )
-
-    def ann_ivfpq_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # encode-only ingestion (the production append path): the index
-        # trains on the EVEN-id half of the corpus, the odd half arrives
-        # as a batch encoded by the STORED quantizers
-        # (operators.similarity.ivfpq_append_index — no training job),
-        # and the search sees the union. The oracle unrolls the same
-        # asymmetry: k-means/PQ training CTEs restricted to even ids,
-        # final cell/code assignment over every vector
-        # (_ivfpq_topk_sql(train_filter=...)). Exact rerank keeps the
-        # reported cosines exact regardless of quantizer drift.
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.similarity import (
-            ivfpq_append_index,
-            ivfpq_build_index,
-            ivfpq_search_index,
-        )
-
-        params = dict(n_cells=16, m=8, n_centroids=8, iters=2)
-        fp = _data_fingerprint(sf_dir, "embeddings")
-        idx = _index_cache_dir("ivfpq_inc", f"c16_m8_k8_i2_{fp}")
-        emb = load_table(spark, sf_dir, "embeddings")
-        if not os.path.exists(os.path.join(idx, "_APPENDED")):
-            ivfpq_build_index(emb.filter(F.col("vec_id") % 2 == 0), idx, **params)
-            ivfpq_append_index(emb.filter(F.col("vec_id") % 2 == 1), idx)
-            with open(os.path.join(idx, "_APPENDED"), "w") as fh:
-                fh.write("ok")
-        return ivfpq_search_index(
-            emb.filter(F.col("vec_id") < 8),
-            emb,
-            idx,
-            k=5,
-            probes=4,
-            rerank=30,
-            **params,
-        )
-
-    def ann_ivfpq_compacted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-13 debut (VERDICT r12 #2): search over a COMPACTED
-        # IVF-PQ index — the vector member of the compaction triptych
-        # on the driver's own gate. Build on the even-id half, append
-        # the odd half encode-only (each append adds a file set per
-        # touched cid partition — the small-file fragmentation), then
-        # operators/similarity.ivfpq_compact_index rewrites the codes
-        # ONE file per cell, carrying quantizers + content fingerprint
-        # verbatim. Layout changes, content doesn't: the search is
-        # bit-equal to the appended index, so the oracle is
-        # ann_ivfpq_incremental_topk's SQL verbatim (train CTEs on even
-        # ids, assignment over all).
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.similarity import (
-            ivfpq_append_index,
-            ivfpq_build_index,
-            ivfpq_compact_index,
-            ivfpq_search_index,
-        )
-
-        params = dict(n_cells=16, m=8, n_centroids=8, iters=2)
-        fp = _data_fingerprint(sf_dir, "embeddings")
-        root = _index_cache_dir("ivfpq_comp", f"c16_m8_k8_i2_{fp}")
-        idx = os.path.join(root, "compacted")
-        emb = load_table(spark, sf_dir, "embeddings")
-        if not os.path.exists(os.path.join(root, "_COMPACTED")):
-            src = os.path.join(root, "src")
-            ivfpq_build_index(emb.filter(F.col("vec_id") % 2 == 0), src, **params)
-            ivfpq_append_index(emb.filter(F.col("vec_id") % 2 == 1), src)
-            ivfpq_compact_index(spark, src, idx)
-            with open(os.path.join(root, "_COMPACTED"), "w") as fh:
-                fh.write("ok")
-        return ivfpq_search_index(
-            emb.filter(F.col("vec_id") < 8),
-            emb,
-            idx,
-            k=5,
-            probes=4,
-            rerank=30,
-            **params,
-        )
-
-    def ann_ivfpq_maintained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-13 debut: the IVF-PQ index-MAINTENANCE stream — the
-        # vector member of the maintenance family (band index, NB, BM25,
-        # positional all stream; this was the one persisted index
-        # without a continuous-ingest path). Quantizers train ONCE on
-        # the even-id snapshot (streaming/ann_stream.ivfpq_stream_init);
-        # a real availableNow stream then drains the WHOLE corpus
-        # through encode-only micro-batches (codes land under
-        # ingest_batch=<id>/cid=<c> with dynamic overwrite — replay-
-        # idempotent, unlike the batch append's mode('append'); the
-        # content fingerprint merges as epochs, published last; the
-        # batch-id regression guard refuses a reset checkpoint).
-        # Content == quantizers-from-even + codes-for-all — exactly
-        # what build(even)+append(odd) produces — so
-        # ann_ivfpq_incremental_topk's oracle is reused verbatim.
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.similarity import (
-            ivfpq_search_index,
-        )
-        from data_warehouse_punta_fina_spark.streaming.ann_stream import (
-            ivfpq_stream_init,
-            run_ivfpq_maintenance_stream,
-        )
-
-        params = dict(n_cells=16, m=8, n_centroids=8, iters=2)
-        fp = _data_fingerprint(sf_dir, "embeddings")
-        idx = _index_cache_dir("ivfpq_maint", f"c16_m8_k8_i2_{fp}")
-        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        if not os.path.exists(os.path.join(idx, "_MAINTAINED")):
-            # clean slate (the doc_bm25_maintained_topk discipline)
-            import shutil
-
-            for sub in os.listdir(idx) if os.path.isdir(idx) else []:
-                shutil.rmtree(os.path.join(idx, sub), ignore_errors=True)
-            src = os.path.join(idx, "_source")
-            # two files -> two micro-batches (maxFilesPerTrigger=1)
-            emb.filter(F.col("vec_id") % 2 == 0).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(src)
-            emb.filter(F.col("vec_id") % 2 == 1).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            ivfpq_stream_init(
-                emb.filter(F.col("vec_id") % 2 == 0), idx, **params
-            )
-            q = run_ivfpq_maintenance_stream(
-                spark,
-                src,
-                spark.read.parquet(src).schema,
-                checkpoint_dir=os.path.join(idx, "_ckpt"),
-                index_dir=idx,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError(
-                    "ivfpq maintenance drain did not finish within 300s"
-                )
-            with open(os.path.join(idx, "_MAINTAINED"), "w") as fh:
-                fh.write("ok")
-        full = load_table(spark, sf_dir, "embeddings")
-        return ivfpq_search_index(
-            full.filter(F.col("vec_id") < 8),
-            full,
-            idx,
-            k=5,
-            probes=4,
-            rerank=30,
-            **params,
-        )
-
-    def ann_ivfpq_federated_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # round-10 extra (r11 promotion candidate): SHARDED indexing —
-        # at 100 TB no single training job sees the corpus; each shard
-        # (even/odd ids here) trains and persists its OWN IVF-PQ index,
-        # queries fan out to every shard, and the global top-k is the
-        # rank-merge of per-shard exact-reranked lists
-        # (operators.similarity.ivfpq_federated_search). The oracle
-        # unrolls BOTH shard chains (train_filter + corpus_filter per
-        # shard, CTE-prefixed) and takes the top-5 over their union.
-        import os
-
-        from data_warehouse_punta_fina_spark.operators.similarity import (
-            ivfpq_build_index,
-            ivfpq_federated_search,
-        )
-
-        params = dict(n_cells=16, m=8, n_centroids=8, iters=2)
-        fp = _data_fingerprint(sf_dir, "embeddings")
-        emb = load_table(spark, sf_dir, "embeddings")
-        shards = []
-        for i, pred in enumerate((F.col("vec_id") % 2 == 0, F.col("vec_id") % 2 == 1)):
-            idx = _index_cache_dir("ivfpq_fed", f"c16_m8_k8_i2_{fp}_s{i}")
-            if not os.path.exists(os.path.join(idx, "codes", "_SUCCESS")):
-                ivfpq_build_index(emb.filter(pred), idx, **params)
-            shards.append(idx)
-        return ivfpq_federated_search(
-            emb.filter(F.col("vec_id") < 8),
-            emb,
-            shards,
-            k=5,
-            probes=4,
-            rerank=30,
-            **params,
-        )
-
-    def emb_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # maximal-marginal-relevance diversified top-5 (Carbonell &
-        # Goldstein 1998): greedy relevance-vs-redundancy selection over a
-        # top-20 relevance pool, λ=1/2 — all score comparisons in exact
-        # int64 millionths (operators.similarity.mmr_topk; unrolled oracle)
-        from data_warehouse_punta_fina_spark.operators.similarity import mmr_topk
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        return mmr_topk(emb, emb.filter(F.col("vec_id") < 8), k=5, pool=20)
-
-    def lineitem_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # pairwise Pearson correlations among the lineitem measures per
-        # returnflag — multi-measure sufficient statistics, one aggregate
-        # (operators.stats.grouped_corr_matrix; generated oracle)
-        from data_warehouse_punta_fina_spark.operators.stats import grouped_corr_matrix
-
-        li = load_table(spark, sf_dir, "lineitem").select(
-            F.col("l_returnflag").alias("flag"),
-            "l_quantity",
-            "l_extendedprice",
-            "l_discount",
-            "l_tax",
-        )
-        return grouped_corr_matrix(
-            li, ["flag"], ["l_quantity", "l_extendedprice", "l_discount", "l_tax"], scale=3
-        )
-
-    def doc_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the tokenizer loop closed: train 6 BPE merges on the corpus,
-        # apply them to the word vocabulary (broadcast — vocab-sized),
-        # count subword tokens per document (what budget/mixture
-        # accounting actually consumes)
-        from data_warehouse_punta_fina_spark.operators.bpe import (
-            bpe_apply,
-            bpe_train,
-            word_frequency,
-        )
-        from data_warehouse_punta_fina_spark.operators.dedup import _spread
-
-        docs = load_table(spark, sf_dir, "documents")
-        wf = word_frequency(docs)
-        seg = bpe_apply(wf, bpe_train(wf, merges=6), merges=6).select(
-            "word", F.size(F.split("sym", " ")).alias("_nsub")
-        )
-        from data_warehouse_punta_fina_spark.functions.text import tokens as _toks
-
-        dw = (
-            _spread(docs.select("doc_id", _toks("text").alias("_t")))
-            .select("doc_id", F.explode("_t").alias("word"))
-            .groupBy("doc_id", "word")
-            .agg(F.count("*").alias("_c"))
-        )
-        per_doc = (
-            dw.join(F.broadcast(seg), "word")
-            .groupBy("doc_id")
-            .agg(
-                F.sum("_c").alias("n_words"),
-                F.sum(F.col("_c") * F.col("_nsub")).alias("n_bpe_tokens"),
-            )
-        )
-        return (
-            docs.select("doc_id")
-            .join(per_doc, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce(F.col("n_words"), F.lit(0)).cast("bigint").alias("n_words"),
-                F.coalesce(F.col("n_bpe_tokens"), F.lit(0))
-                .cast("bigint")
-                .alias("n_bpe_tokens"),
-            )
-        )
-
-    def emb_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # embedding-space drift monitor: per-label centroid of the even-id
-        # half vs the odd-id half (a stand-in for baseline vs current
-        # period), reporting centroid cosine + quantized L2 shift —
-        # the vector-space counterpart of the PSI value-drift monitors.
-        # Exactness: per-cell int64 sums; centroids as exact rationals
-        # (sum, n) — the cosine/L2 close over integers with one double
-        # step each, round-6.
-        from data_warehouse_punta_fina_spark.functions.money import pround
-        from data_warehouse_punta_fina_spark.functions.vectors import quantize
-
-        emb = load_table(spark, sf_dir, "embeddings")
-
-        def cells(df, tag):
-            return (
-                df.select("label", F.posexplode(quantize("embedding")).alias("pos", "q"))
-                .groupBy("label", "pos")
-                .agg(F.sum("q").alias(f"s_{tag}"), F.count("*").alias(f"n_{tag}"))
-            )
-
-        a = cells(emb.filter(F.col("vec_id") % 2 == 0), "a")
-        b = cells(emb.filter(F.col("vec_id") % 2 == 1), "b")
-        j = a.join(b, ["label", "pos"])
-        # centroid components as exact rationals: ca = s_a/n_a. All the
-        # cross terms stay integer: dot = Σ s_a·s_b / (n_a·n_b) etc —
-        # multiply through by (n_a·n_b)² to keep sums integral:
-        # cos = Σ s_a·s_b / sqrt(Σ s_a² · Σ s_b²) (n factors cancel).
-        agg = j.groupBy("label").agg(
-            F.first("n_a").alias("n_a"),
-            F.first("n_b").alias("n_b"),
-            F.sum(F.col("s_a").cast("decimal(38,0)") * F.col("s_b")).alias("_dot"),
-            F.sum(F.col("s_a").cast("decimal(38,0)") * F.col("s_a")).alias("_na2"),
-            F.sum(F.col("s_b").cast("decimal(38,0)") * F.col("s_b")).alias("_nb2"),
-        )
-        r6 = lambda c: pround(c, 6, 18).cast("double")  # noqa: E731
-        return agg.select(
-            "label",
-            "n_a",
-            "n_b",
-            r6(
-                F.col("_dot").cast("double")
-                / F.sqrt(F.col("_na2").cast("double") * F.col("_nb2").cast("double"))
-            ).alias("centroid_cosine"),
-        )
-
-    # ---- round-6 additions: EXISTS/distribution relational patterns,
-    # EWMA / CUSUM / linear-interpolation timeseries, FD audit, Bloom
-    # semi-join reduction, and the classifier-evaluation tier ----
-
-    def order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # TPC-H Q4 pattern: EXISTS-correlated subquery decorrelated to a
-        # LEFT SEMI join (each order counted once however many lineitems
-        # match) — the shape Catalyst plans as a shuffled semi join with
-        # the filter pushed below it
-        orders = load_table(spark, sf_dir, "orders")
-        li = load_table(spark, sf_dir, "lineitem")
-        returned = li.filter(F.col("l_returnflag") == "R").select(
-            F.col("l_orderkey").alias("o_orderkey")
-        )
-        return (
-            orders.join(returned, "o_orderkey", "left_semi")
-            .groupBy("o_orderpriority")
-            .agg(F.count("*").alias("n_orders"))
-        )
-
-    def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # TPC-H Q13 pattern: LEFT join preserves zero-order customers,
-        # then the count-of-counts histogram — double aggregation, the
-        # second over a cardinality-sized frame
-        cust = load_table(spark, sf_dir, "customer")
-        orders = load_table(spark, sf_dir, "orders")
-        per = (
-            cust.join(orders, cust["c_custkey"] == orders["o_custkey"], "left")
-            .groupBy("c_custkey")
-            .agg(F.count("o_orderkey").alias("n_orders"))
-        )
-        return per.groupBy("n_orders").agg(F.count("*").alias("n_customers"))
-
-    def _daily_cents(df: DataFrame, keys: list, ts_col: str, val_col: str) -> DataFrame:
-        # shared exact-daily-series helper: per-row cents quantization,
-        # int64 daily sums, exposed as double (cents/100 — one division)
-        return df.groupBy(
-            *keys, F.col(ts_col).cast("date").alias("day")
-        ).agg(
-            (
-                F.sum(F.floor(F.col(val_col) * 100 + F.lit(0.5)).cast("long")).cast(
-                    "double"
-                )
-                / 100.0
-            ).alias("_dv")
-        )
-
-    def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # per-type daily value series smoothed with the α=1/2 EWMA —
-        # integer-weighted lags, exact cross-engine
-        # (operators.timeseries.ewma)
-        from data_warehouse_punta_fina_spark.operators.timeseries import ewma
-
-        ev = load_table(spark, sf_dir, "events")
-        daily = _daily_cents(ev, ["event_type"], "ts", "value").withColumnRenamed(
-            "_dv", "daily_value"
-        )
-        return ewma(daily, "day", "daily_value", span=10, series_cols=["event_type"])
-
-    def revenue_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # offline CUSUM changepoint screen on the daily revenue series:
-        # |cumulative deviation| peaks at the most likely level shift
-        # (operators.timeseries.cusum_changepoint; exact int64 cusum)
-        from data_warehouse_punta_fina_spark.operators.timeseries import (
-            cusum_changepoint,
-        )
-
-        orders = load_table(spark, sf_dir, "orders")
-        daily = _daily_cents(orders, [], "o_orderdate", "o_totalprice").withColumnRenamed(
-            "_dv", "revenue"
-        )
-        return cusum_changepoint(daily, "day", "revenue")
-
-    def events_interpolated_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # linear interpolation of gap days in a sparse daily series (the
-        # refinement over LOCF gap-fill): calendar spine from the data's
-        # own bounds, missing days get the floor-division linear blend
-        # (operators.timeseries.interpolate_linear)
-        from data_warehouse_punta_fina_spark.operators.timeseries import (
-            interpolate_linear,
-        )
-
-        # value>90 + a user-id stride keeps the series SPARSE at every SF
-        # (16/30 days populated at sf0.01) so the interpolation branch is
-        # genuinely exercised by the driver gate, not just the spine join
-        ev = load_table(spark, sf_dir, "events").filter(
-            (F.col("event_type") == "purchase")
-            & (F.col("value") > 90)
-            & (F.col("user_id") % 23 == 0)
-        )
-        daily = _daily_cents(ev, [], "ts", "value").withColumnRenamed("_dv", "v")
-        bounds = ev.agg(
-            F.min(F.col("ts").cast("date")).alias("lo"),
-            F.max(F.col("ts").cast("date")).alias("hi"),
-        )
-        spine = bounds.select(F.explode(F.sequence("lo", "hi")).alias("day"))
-        grid = spine.join(daily, "day", "left")
-        out = interpolate_linear(grid, "day", "v")
-        return out.select("day", F.col("v").alias("value"), "interpolated")
-
-    def lineitem_fd_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # functional-dependency audit of the declared fact grain: which
-        # (l_orderkey, l_linenumber) keys map to MORE than one distinct
-        # content tuple (the testdata plants such collisions on purpose)
-        # — operators.quality.fd_violations; numeric dependents pre-
-        # quantized to int64 cents so the rendered variants are
-        # engine-portable strings
-        from data_warehouse_punta_fina_spark.operators.quality import fd_violations
-
-        li = load_table(spark, sf_dir, "lineitem")
-        pre = li.select(
-            "l_orderkey",
-            "l_linenumber",
-            "l_returnflag",
-            "l_linestatus",
-            F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("long").alias("qty_c"),
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("price_c"),
-        )
-        return fd_violations(
-            pre,
-            ["l_orderkey", "l_linenumber"],
-            ["l_returnflag", "l_linestatus", "qty_c", "price_c"],
-        )
-
-    def urgent_lineitems_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # semi-join reduction: lineitems of URGENT orders via a broadcast
-        # Bloom bitmap pre-filter + exact verify (operators.bloomjoin) —
-        # the result is exactly the semi join, the Bloom stage only cuts
-        # what the shuffle has to move
-        from data_warehouse_punta_fina_spark.operators.bloomjoin import bloom_semi_join
-
-        li = load_table(spark, sf_dir, "lineitem")
-        orders = load_table(spark, sf_dir, "orders")
-        urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT")
-        hit = bloom_semi_join(
-            li, urgent, "l_orderkey", "o_orderkey", m_bits=1 << 16, hashes=2
-        )
-        return hit.groupBy("l_returnflag").agg(
-            F.count("*").alias("n_lines"),
-            (
-                F.sum(F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("long")).cast(
-                    "double"
-                )
-                / 100.0
-            ).alias("sum_qty"),
-        )
-
-    def doc_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # evaluate the quality score as an English-detector per source:
-        # exact Mann-Whitney ROC-AUC with average-rank ties
-        # (operators.evaluation.binary_auc)
-        from data_warehouse_punta_fina_spark.operators.evaluation import binary_auc
-
-        docs = load_table(spark, sf_dir, "documents")
-        scored = docs.select(
-            "source",
-            quality_score("text").alias("q"),
-            (F.col("lang") == "en").alias("y"),
-        )
-        return binary_auc(scored, "q", "y", group_cols=["source"])
-
-    def doc_quality_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # gains/lift table of the quality score against the en label:
-        # exact front-loaded NTILE deciles, cumulative capture, lift
-        # (operators.evaluation.decile_lift)
-        from data_warehouse_punta_fina_spark.operators.evaluation import decile_lift
-
-        docs = load_table(spark, sf_dir, "documents")
-        scored = docs.select(
-            "doc_id",
-            quality_score("text").alias("q"),
-            (F.col("lang") == "en").alias("y"),
-        )
-        return decile_lift(scored, "q", "y", ["doc_id"])
-
-    def doc_source_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Weight-of-Evidence encoding of the source categorical against
-        # the en label, with half-count smoothing + IV terms
-        # (operators.evaluation.woe_encoding)
-        from data_warehouse_punta_fina_spark.operators.evaluation import woe_encoding
-
-        docs = load_table(spark, sf_dir, "documents")
-        return woe_encoding(
-            docs.select("source", (F.col("lang") == "en").alias("y")), "source", "y"
-        )
-
-    def orders_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # systematic every-97th sampling over the (date, key) total order
-        # — deterministic, evenly spread, no global window
-        # (operators.sampling.systematic_sample)
-        from data_warehouse_punta_fina_spark.operators.sampling import systematic_sample
-
-        orders = load_table(spark, sf_dir, "orders")
-        return systematic_sample(
-            orders.select("o_orderkey", "o_orderdate", "o_orderpriority"),
-            ["o_orderdate", "o_orderkey"],
-            every_k=97,
-        )
-
-    # ---- round-6 wave 2: PR-curve evaluation, leakage-free target
-    # encoding, the hashing trick, graph assortativity, robust means ----
-
-    def doc_quality_avg_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # exact average precision (pessimistic tie convention) of the
-        # quality score as an en-detector, per source — the PR-curve
-        # complement of doc_quality_auc (operators.evaluation)
-        from data_warehouse_punta_fina_spark.operators.evaluation import (
-            average_precision,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        scored = docs.select(
-            "source",
-            quality_score("text").alias("q"),
-            (F.col("lang") == "en").alias("y"),
-        )
-        return average_precision(scored, "q", "y", group_cols=["source"])
-
-    def orders_loo_priority_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # leave-one-out mean-price encoding of the order priority — the
-        # leakage-free supervised encoder (operators.evaluation); the
-        # custkey stride keeps the per-row output driver-hashable
-        from data_warehouse_punta_fina_spark.operators.evaluation import (
-            loo_target_encoding,
-        )
-
-        orders = load_table(spark, sf_dir, "orders").filter(
-            F.col("o_custkey") % 100 == 0
-        )
-        pre = orders.select(
-            "o_orderkey",
-            "o_orderpriority",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("price_c"),
-        )
-        out = loo_target_encoding(pre, "o_orderpriority", "price_c")
-        return out.select("o_orderkey", "o_orderpriority", "price_c", "loo_mean")
-
-    def part_copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Newman degree assortativity of the part co-purchase graph —
-        # hub-to-hub vs hub-and-spoke in one exact Pearson coefficient
-        # (operators.graph.degree_assortativity)
-        from data_warehouse_punta_fina_spark.operators.graph import (
-            degree_assortativity,
-        )
-
-        li = load_table(spark, sf_dir, "lineitem")
-        b = li.select(
-            F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("it")
-        ).distinct()
-        edges = (
-            b.alias("x")
-            .join(
-                b.alias("y"),
-                (F.col("x.bk") == F.col("y.bk")) & (F.col("x.it") < F.col("y.it")),
-            )
-            .select(F.col("x.it").alias("u"), F.col("y.it").alias("v"))
-            .distinct()
-        )
-        return degree_assortativity(edges)
-
-    def events_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # 10% symmetric trimmed mean of the event value per type — the
-        # robust location estimate between mean and median
-        # (operators.stats.trimmed_mean)
-        from data_warehouse_punta_fina_spark.operators.stats import trimmed_mean
-
-        ev = load_table(spark, sf_dir, "events")
-        return trimmed_mean(ev, ["event_type"], "value", trim=0.1)
-
-    def doc_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the hashing trick: fixed 16-dim signed token-count vectors, no
-        # vocabulary, md5-deterministic (operators.features). The
-        # driver-window projection flattens the vector to a CSV string:
-        # the driver's pandas canonicalizer cannot sort list-valued
-        # columns (r7 red row), and tests/test_oracle_types.py now bans
-        # complex-typed top-level outputs registry-wide. The operator
-        # itself keeps returning array<long> for composition.
-        from data_warehouse_punta_fina_spark.operators.features import feature_hashing
-
-        docs = load_table(spark, sf_dir, "documents")
-        vec = feature_hashing(docs, "doc_id", "text", dims=16)
-        return vec.select(
-            "doc_id",
-            F.array_join(F.col("features").cast("array<string>"), ",").alias(
-                "features_csv"
-            ),
-        )
-
-    # ---- round-6 wave 3: lossless set-similarity join, sequence
-    # pattern matching ----
-
-    def corpus_training_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the END-TO-END training-data build, stage-composed from
-        # verified operators: curation verdict (exact dedup + LSH-verified
-        # near-dup + length/quality/language gates, doc_curation_report)
-        # -> keep only 'keep' docs -> contiguous-greedy pack into
-        # 512-token bins sharded by the PREDICTED language
-        # (operators.packing.pack_documents — one window per shard, no
-        # global ordering) -> per-bin manifest (docs, tokens, id span).
-        # This is the query a trainer's data loader reads.
-        from data_warehouse_punta_fina_spark.operators.packing import pack_documents
-
-        report = doc_curation_report(spark, sf_dir)
-        kept = report.filter(F.col("verdict") == "keep").select(
-            "doc_id", "n_tokens", "lang_pred"
-        )
-        packed = pack_documents(
-            kept,
-            budget=512,
-            shard_col="lang_pred",
-            order_col="doc_id",
-            tokens_col=F.col("n_tokens").cast("long"),
-        )
-        return packed.groupBy(
-            F.col("lang_pred").alias("lang"), F.col("bin_id")
-        ).agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("bin_tokens"),
-            F.min("doc_id").alias("first_doc"),
-            F.max("doc_id").alias("last_doc"),
-        )
-
-    def doc_prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # ALL token-set pairs with Jaccard >= 0.95 via prefix filtering —
-        # exact, unlike the LSH tier; candidates join only on each doc's
-        # rarest-token prefix (operators.setjoin.prefix_jaccard_join)
-        from data_warehouse_punta_fina_spark.operators.setjoin import (
-            prefix_jaccard_join,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        return prefix_jaccard_join(docs, "doc_id", "text", threshold=0.95)
-
-    def events_purchase_path_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # MATCH_RECOGNIZE-lite: sessions containing click → purchase with
-        # only view/error/signup between, counted as non-overlapping
-        # regex matches over the session's ordered symbol string
-        # (operators.patterns.session_pattern_match)
-        from data_warehouse_punta_fina_spark.operators.patterns import (
-            session_pattern_match,
-        )
-
-        ev = load_table(spark, sf_dir, "events")
-        out = session_pattern_match(
-            ev,
-            "user_id",
-            "ts",
-            "event_type",
-            {"click": "c", "view": "v", "purchase": "p", "signup": "s", "error": "e"},
-            "c[ves]*p",
-            gap_seconds=6 * 3600,
-            tiebreak=["event_id"],
-        )
-        return out.select(
-            "user_id",
-            "session_seq",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            "n_events",
-            "n_matches",
-        )
-
-    # ---- round-6 wave 4: robust trend, rolling distinct counts ----
-
-    def weekly_revenue_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Theil-Sen robust slope + Mann-Kendall S over the weekly revenue
-        # series — the median-of-pairwise-slopes trend OLS can't have its
-        # breakdown point match (operators.stats.theil_sen_trend)
-        from data_warehouse_punta_fina_spark.operators.stats import theil_sen_trend
-
-        orders = load_table(spark, sf_dir, "orders")
-        weekly = orders.groupBy(
-            F.date_trunc("week", F.col("o_orderdate")).cast("date").alias("week")
-        ).agg(
-            (
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-                ).cast("double")
-                / 100.0
-            ).alias("revenue")
-        )
-        return theil_sen_trend(weekly, "week", "revenue")
-
-    def events_trailing_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # rolling 7-day distinct active users per day: each (user, day)
-        # contributes to the 7 trailing windows it falls in (explode a
-        # 7-day sequence), then one count-distinct per day — no
-        # data-sized range self-join, no window over raw events
-        ev = load_table(spark, sf_dir, "events")
-        du = ev.select(
-            "user_id", F.col("ts").cast("date").alias("day")
-        ).distinct()
-        expanded = du.select(
-            "user_id",
-            F.explode(
-                F.sequence(F.col("day"), F.date_add(F.col("day"), 6))
-            ).alias("wday"),
-        )
-        counts = expanded.groupBy("wday").agg(
-            F.count_distinct("user_id").alias("dau_7d")
-        )
-        bounds = ev.agg(
-            F.min(F.col("ts").cast("date")).alias("lo"),
-            F.max(F.col("ts").cast("date")).alias("hi"),
-        )
-        return (
-            counts.crossJoin(F.broadcast(bounds))
-            .filter((F.col("wday") >= F.col("lo")) & (F.col("wday") <= F.col("hi")))
-            .select(F.col("wday").alias("day"), "dau_7d")
-        )
-
-    # ---- round-6 wave 5: calibration, Brier, stratified k-fold ----
-
-    def doc_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # reliability diagram + ECE terms for the quality score as an
-        # en-probability (operators.evaluation.calibration_bins)
-        from data_warehouse_punta_fina_spark.operators.evaluation import (
-            calibration_bins,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        scored = docs.select(
-            quality_score("text").alias("q"), (F.col("lang") == "en").alias("y")
-        )
-        return calibration_bins(scored, "q", "y", n_bins=10)
-
-    def doc_quality_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # per-source Brier score of the quality-as-probability forecast
-        # (operators.evaluation.brier_score; exact integer-lattice MSE)
-        from data_warehouse_punta_fina_spark.operators.evaluation import brier_score
-
-        docs = load_table(spark, sf_dir, "documents")
-        scored = docs.select(
-            "source", quality_score("text").alias("q"), (F.col("lang") == "en").alias("y")
-        )
-        return brier_score(scored, "q", "y", group_cols=["source"])
-
-    def doc_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # deterministic stratified 5-fold split balanced per language
-        # (operators.evaluation.stratified_kfold; zero RNG)
-        from data_warehouse_punta_fina_spark.operators.evaluation import (
-            stratified_kfold,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        return stratified_kfold(docs.select("doc_id", "lang"), ["lang"], ["doc_id"], k=5)
-
-    # ---- round-6 wave 6: Pareto concentration, ties-aware top-k,
-    # multiplicative means ----
-
-    def revenue_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # 80/20 analysis, SCALE-SAFE: the per-part aggregate grows
-        # linearly with data (20M+ parts at sf100), so the top-200 prefix
-        # is taken FIRST via orderBy+limit (TakeOrderedAndProject: a
-        # per-partition top-k + tiny merge — never a single-partition
-        # sort of the full aggregate); the cumulative window then runs
-        # over <=200 rows behind a non-foldable constant key.
-        # cumsum-of-prefix == prefix-of-cumsum, so values are identical
-        # to the full cumulative restricted to rank <= 200.
-        from data_warehouse_punta_fina_spark.operators.windows import const_partition
-
-        li = load_table(spark, sf_dir, "lineitem")
-        per = li.groupBy("l_partkey").agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-            ).alias("_cents")
-        )
-        top = per.orderBy(F.desc("_cents"), F.asc("l_partkey")).limit(200)
-        w = (
-            Window.partitionBy(const_partition("l_partkey"))
-            .orderBy(F.desc("_cents"), F.asc("l_partkey"))
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        tot = per.agg(F.sum("_cents").alias("_tot"))
-        ranked = (
-            top.crossJoin(F.broadcast(tot))
-            .withColumn("_cum", F.sum("_cents").over(w))
-            .withColumn("_rank", F.count("*").over(w))
-        )
-        cum_share = F.col("_cum").cast("double") / F.col("_tot").cast("double")
-        # in_top80: strictly before the crossing point, plus the crossing
-        # row itself (integer compare: 5*cum_prev < 4*total)
-        prev = F.col("_cum") - F.col("_cents")
-        return ranked.select(
-            "l_partkey",
-            F.col("_rank").cast("long").alias("rank"),
-            (F.col("_cents").cast("double") / 100.0).alias("revenue"),
-            pround6(cum_share).cast("double").alias("cum_share"),
-            (5 * prev < 4 * F.col("_tot")).alias("in_top80"),
-        )
-
-    def top_discount_lines_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # RANK-with-ties top-k (vs the row_number top-1 family): every
-        # line sharing the 2 highest discount levels of its order
-        # qualifies — the ties-included SQL semantics ROW_NUMBER loses
-        li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 50 == 0)
-        w = Window.partitionBy("l_orderkey").orderBy(
-            F.desc(F.floor(F.col("l_discount") * 10000 + F.lit(0.5)).cast("long"))
-        )
-        return (
-            li.withColumn("rnk", F.rank().over(w))
-            .filter(F.col("rnk") <= 2)
-            .select(
-                "l_orderkey",
-                "l_linenumber",
-                F.col("rnk").cast("int").alias("rnk"),
-                (
-                    F.floor(F.col("l_discount") * 10000 + F.lit(0.5)).cast("long").cast(
-                        "double"
-                    )
-                    / 10000.0
-                ).alias("discount"),
-            )
-        )
-
-    def events_multiplicative_means(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # geometric + harmonic means per event type (positive values):
-        # ln/reciprocal terms round-6 into exact decimal sums, one
-        # exp/division at the end — the multiplicative complements of
-        # the trimmed/arithmetic means
-        ev = load_table(spark, sf_dir, "events").filter(F.col("value") > 0)
-        lnterm = pround6(F.log(F.col("value").cast("double")), 18)
-        invterm = pround(F.lit(1.0) / F.col("value").cast("double"), 9, 18)
-        per = ev.groupBy("event_type").agg(
-            F.count("*").alias("n"),
-            F.sum(lnterm).alias("_sln"),
-            F.sum(invterm).alias("_sinv"),
-        )
-        return per.select(
-            "event_type",
-            "n",
-            pround6(F.exp(F.col("_sln").cast("double") / F.col("n").cast("double")))
-            .cast("double")
-            .alias("geo_mean"),
-            pround6(F.col("n").cast("double") / F.col("_sinv").cast("double"))
-            .cast("double")
-            .alias("harmonic_mean"),
-        )
-
-    # ---- round-6 wave 7: blocking-quality evaluation ----
-
-    def lsh_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # "measure, don't guess" for the lossy tier itself: the LOSSLESS
-        # prefix join (token Jaccard >= 0.95) is the ground-truth pair
-        # set; MinHash-LSH banding is the blocker under evaluation. One
-        # row: blocking recall (caught/true) and reduction ratio
-        # (1 - candidates/all-pairs) — the two numbers every blocking
-        # design trades against each other. On THIS corpus the result
-        # is deliberately instructive: recall ~0.01 at reduction 0.9998
-        # (sf0.01) because 3-shingle MinHash blocks on word ORDER while
-        # the truth here is order-free token-set Jaccard — the
-        # definition mismatch a real pipeline must check before trusting
-        # its blocker, which is exactly what this query measures
-        from data_warehouse_punta_fina_spark.operators.setjoin import (
-            prefix_jaccard_join,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        truth = prefix_jaccard_join(docs, "doc_id", "text", threshold=0.95).select(
-            "id_a", "id_b"
-        )
-        cand = minhash_lsh_pairs(docs, num_hashes=12, bands=4)
-        t = truth.agg(F.count("*").alias("n_true"))
-        c = cand.agg(F.count("*").alias("n_candidates"))
-        caught = (
-            truth.join(cand, ["id_a", "id_b"], "left_semi")
-            .agg(F.count("*").alias("n_caught"))
-        )
-        nd = docs.agg(F.count("*").alias("n_docs"))
-        row = (
-            t.crossJoin(F.broadcast(c))
-            .crossJoin(F.broadcast(caught))
-            .crossJoin(F.broadcast(nd))
-        )
-        all_pairs = (F.col("n_docs") * (F.col("n_docs") - 1)).cast("double") / 2.0
-        return row.select(
-            "n_docs",
-            "n_true",
-            "n_candidates",
-            "n_caught",
-            F.when(
-                F.col("n_true") > 0,
-                pround6(F.col("n_caught").cast("double") / F.col("n_true").cast("double")),
-            )
-            .cast("double")
-            .alias("blocking_recall"),
-            pround6(F.lit(1.0) - F.col("n_candidates").cast("double") / all_pairs)
-            .cast("double")
-            .alias("reduction_ratio"),
-        )
-
-    # every registry query, one entry per line: the driver window's
-    # queries first, then the extras in extra_queries() order
-    table = {
-        "fact_ventas": fact_ventas,
-        "part_copurchase_assortativity": part_copurchase_assortativity,
-        "lineitem_fd_violations": lineitem_fd_violations,
-        "events_value_band_rangejoin_bucketed": events_value_band_rangejoin_bucketed,
-        "doc_source_woe": doc_source_woe,
-        "top_discount_lines_with_ties": top_discount_lines_with_ties,
-        "doc_bpe_token_counts": doc_bpe_token_counts,
-        "doc_contrastive_pairs": doc_contrastive_pairs,
-        "doc_lang_resample": doc_lang_resample,
-        "doc_stratified_sample": doc_stratified_sample,
-        "emb_centroid_drift": emb_centroid_drift,
-        "events_interpolated_daily": events_interpolated_daily,
-        "events_multiplicative_means": events_multiplicative_means,
-        "events_trailing_7d": events_trailing_7d,
-        "events_type_drift_psi": events_type_drift_psi,
-        "files_provenance": files_provenance,
-        "order_priority_exists": order_priority_exists,
-        "customer_order_distribution": customer_order_distribution,
-        "discount_order_rollup": discount_order_rollup,
-        "corpus_training_batches": corpus_training_batches,
-        "doc_incremental_dedup_persisted": doc_incremental_dedup_persisted,
-        "doc_nb_lang_classifier": doc_nb_lang_classifier,
-        "doc_quality_logreg": doc_quality_logreg,
-        "doc_dsir_sample": doc_dsir_sample,
-        "doc_temperature_resample": doc_temperature_resample,
-        "doc_source_quality_gate": doc_source_quality_gate,
-        "doc_uncertainty_sample": doc_uncertainty_sample,
-        "emb_cluster_balanced_sample": emb_cluster_balanced_sample,
-        "doc_leakage_safe_split": doc_leakage_safe_split,
-        "doc_hybrid_rrf_search_ivf": doc_hybrid_rrf_search_ivf,
-        "doc_hybrid_rrf_search_pq": doc_hybrid_rrf_search_pq,
-        "doc_contamination_safe_split": doc_contamination_safe_split,
-        "doc_hybrid_rrf_search_persisted": doc_hybrid_rrf_search_persisted,
-        "ann_ivfpq_federated_topk": ann_ivfpq_federated_topk,
-        "doc_bm25_incremental_topk": doc_bm25_incremental_topk,
-        "doc_bm25_prf_search": doc_bm25_prf_search,
-        "doc_hybrid_rrf_search_federated": doc_hybrid_rrf_search_federated,
-        "doc_cluster_quality_canonicals": doc_cluster_quality_canonicals,
-        "doc_bm25_prf_search_persisted": doc_bm25_prf_search_persisted,
-        "doc_bm25_federated_topk": doc_bm25_federated_topk,
-        "doc_retrieval_rank_metrics": doc_retrieval_rank_metrics,
-        "doc_proximity_search": doc_proximity_search,
-        "doc_phrase_slop_search": doc_phrase_slop_search,
-        "doc_bm25_maintained_topk": doc_bm25_maintained_topk,
-        "doc_cooccurrence_search": doc_cooccurrence_search,
-        "doc_bm25_compacted_topk": doc_bm25_compacted_topk,
-        "doc_phrase_search_compacted": doc_phrase_search_compacted,
-        "ann_ivfpq_compacted_topk": ann_ivfpq_compacted_topk,
-        "doc_nb_maintained_classifier": doc_nb_maintained_classifier,
-        "ann_ivfpq_maintained_topk": ann_ivfpq_maintained_topk,
-        "dup_grain_check": dup_grain_check,
-        "events_json_stats": events_json_stats,
-        "emb_near_dup": emb_near_dup,
-        "events_sessionized": events_sessionized,
-        "dedup_lineitem": dedup_lineitem,
-        "events_tumbling_window": events_tumbling_window,
-        "doc_exact_dedup": doc_exact_dedup,
-        "fk_orphan_check": fk_orphan_check,
-        "dim_almacen": build_dim_almacen,
-        "events_value_stats": events_value_stats,
-        "salted_revenue_by_flag": salted_revenue_by_flag,
-        "approx_distinct_parts": approx_distinct_parts,
-        "scalar_showcase": scalar_showcase,
-        "doc_text_stats": doc_text_stats,
-        "dim_usuario": build_dim_usuario,
-        "dim_periodo_contable": _catalog("build_dim_periodo_contable"),
-        "dim_detalle_venta": _legacy("build_dim_detalle_venta"),
-        "dim_cuenta_contable": build_dim_cuenta_contable,
-        "dim_categoria_producto": _catalog("build_dim_categoria_producto"),
-        "dim_tipo_movimiento": _catalog("build_dim_tipo_movimiento"),
-        "dim_centro_costo": _catalog("build_dim_centro_costo"),
-        "dim_tipo_transaccion": _catalog("build_dim_tipo_transaccion"),
-        "dim_estado_orden": _catalog("build_dim_estado_orden"),
-        "dim_canal": _legacy("build_dim_canal"),
-        "dim_estado_pago": _legacy("build_dim_estado_pago"),
-        "dim_pago": _legacy("build_dim_pago"),
-        "dim_sitio_web": _legacy("build_dim_sitio_web"),
-        "dim_direccion": _legacy("build_dim_direccion"),
-        "revenue_anomaly_weeks": revenue_anomaly_weeks,
-        "basket_part_affinity": basket_part_affinity,
-        "events_attribution": events_attribution,
-        "doc_weighted_sample": doc_weighted_sample,
-        "doc_surprisal": doc_surprisal,
-        "doc_quality_gate": doc_quality_gate,
-        "doc_mixture_alloc": doc_mixture_alloc,
-        "customer_snapshot_diff": customer_snapshot_diff,
-        "emb_near_dup_trained": emb_near_dup_trained,
-        "events_funnel": events_funnel,
-        "doc_repetition": doc_repetition,
-        "dim_cliente": build_dim_cliente,
-        "doc_lang_id": doc_lang_id,
-        "doc_minhash_lsh": doc_minhash_lsh,
-        "ann_ivf_topk": ann_ivf_topk,
-        "dim_promocion": build_dim_promocion,
-        "doc_top_terms": doc_top_terms,
-        "customer_balance_quartiles": customer_balance_quartiles,
-        "sql_revenue_by_nation": sql_revenue_by_nation,
-        "asof_last_order": asof_last_order,
-        "lineitem_rollup": lineitem_rollup,
-        "custkey_set_ops": custkey_set_ops,
-        "pnl_unpivot": pnl_unpivot,
-        "emb_label_centroids": emb_label_centroids,
-        "events_validated": events_validated,
-        "doc_ngram_jaccard": doc_ngram_jaccard,
-        "user_last_event": user_last_event,
-        "events_value_percentiles": events_value_percentiles,
-        "doc_simhash_near_dup": doc_simhash_near_dup,
-        "ann_brute_topk": ann_brute_topk,
-        "order_reconciliation": order_reconciliation,
-        "scd2_customer_segment": scd2_customer_segment,
-        "batch_token_stats": batch_token_stats,
-        "doc_pack_bins": doc_pack_bins,
-        "star_revenue_by_pais_trimestre": star_revenue_by_pais_trimestre,
-        "dim_fecha": lambda spark, sf: build_dim_fecha(spark, sf),
-        "dim_producto": build_dim_producto,
-        "fact_balance": fact_balance,
-        "fact_estado_resultados": fact_estado_resultados,
-        "ann_ivf_trained_topk": ann_ivf_trained_topk,
-        "doc_lsh_verified": doc_lsh_verified,
-        "scd2_pit_lookup": scd2_pit_lookup,
-        "dim_catalogs": dim_catalogs,
-        "lineitem_pricing_summary": lineitem_pricing_summary,
-        "media_features": media_features,
-        "sql_top_customer_per_nation": sql_top_customer_per_nation,
-        "events_value_band_rangejoin": events_value_band_rangejoin,
-        "doc_dedup_clusters": doc_dedup_clusters,
-        "dq_report": dq_report,
-        "doc_contamination": doc_contamination,
-        "basket_frequent_triples": basket_frequent_triples,
-        "customer_rfm": customer_rfm,
-        "customer_supplier_link": customer_supplier_link,
-        "doc_bigram_surprisal": doc_bigram_surprisal,
-        "doc_bm25_topk": doc_bm25_topk,
-        "doc_bpe_merges": doc_bpe_merges,
-        "doc_chunks": doc_chunks,
-        "doc_collocations": doc_collocations,
-        "doc_dedup_kept": doc_dedup_kept,
-        "doc_heavy_terms": doc_heavy_terms,
-        "doc_pii_redaction": doc_pii_redaction,
-        "doc_quality_stratified": doc_quality_stratified,
-        "doc_repeated_spans": doc_repeated_spans,
-        "doc_token_budget_mix": doc_token_budget_mix,
-        "emb_cluster_quality": emb_cluster_quality,
-        "emb_mmr_diverse": emb_mmr_diverse,
-        "emb_random_projection": emb_random_projection,
-        "events_chi2_daypart": events_chi2_daypart,
-        "events_linear_attribution": events_linear_attribution,
-        "events_retention": events_retention,
-        "events_type_hour_mi": events_type_hour_mi,
-        "lineitem_cube": lineitem_cube,
-        "part_triangles": part_triangles,
-        "fact_order_lifecycle": fact_order_lifecycle,
-        "fact_inventario": build_fact_inventario,
-        "fact_transacciones": fact_transacciones,
-        "trade_kcore": trade_kcore,
-        "nation_revenue_concentration": nation_revenue_concentration,
-        "events_asof_nearest": events_asof_nearest,
-        "events_key_skew": events_key_skew,
-        "events_value_buckets": events_value_buckets,
-        "events_drift_psi": events_drift_psi,
-        "lineitem_ols_trend": lineitem_ols_trend,
-        "events_robust_outliers": events_robust_outliers,
-        "events_session_window": events_session_window,
-        "events_gap_fill": events_gap_fill,
-        "doc_edit_distance_dups": doc_edit_distance_dups,
-        "doc_segment_dedup": doc_segment_dedup,
-        "doc_phrase_search": doc_phrase_search,
-        "doc_tfidf_pairs": doc_tfidf_pairs,
-        "source_quality_report": source_quality_report,
-        "ann_pq_topk": ann_pq_topk,
-        "part_pagerank": part_pagerank,
-        "doc_incremental_dedup": doc_incremental_dedup,
-        "events_ks_value_drift": events_ks_value_drift,
-        "weekly_revenue_decompose": weekly_revenue_decompose,
-        "scd3_customer_segment": scd3_customer_segment,
-        "events_variant_stats": events_variant_stats,
-        "order_sample_allocation": order_sample_allocation,
-        "dim_envio": _catalog("build_dim_envio"),
-        "dim_impuestos": _catalog("build_dim_impuestos"),
-        "dim_orden": _catalog("build_dim_orden"),
-        "dim_proveedor": build_dim_proveedor,
-        "ventas_daily_summary": ventas_daily_summary,
-        "top_discount_line_per_order": top_discount_line_per_order,
-        "corpus_term_freq": corpus_term_freq,
-        "ann_ivfpq_topk": ann_ivfpq_topk,
-        "doc_quality_auc": doc_quality_auc,
-        "doc_quality_lift": doc_quality_lift,
-        "doc_quality_calibration": doc_quality_calibration,
-        "doc_quality_brier": doc_quality_brier,
-        "doc_kfold_assignment": doc_kfold_assignment,
-        "weekly_revenue_theilsen": weekly_revenue_theilsen,
-        "revenue_pareto_parts": revenue_pareto_parts,
-        "doc_prefix_jaccard_pairs": doc_prefix_jaccard_pairs,
-        "events_purchase_path_match": events_purchase_path_match,
-        "urgent_lineitems_bloom": urgent_lineitems_bloom,
-        "lsh_blocking_quality": lsh_blocking_quality,
-        "orders_systematic_sample": orders_systematic_sample,
-        "revenue_cusum_changepoint": revenue_cusum_changepoint,
-        "events_ewma_daily": events_ewma_daily,
-        "doc_feature_hashing": doc_feature_hashing,
-        "events_trailing_dau": events_trailing_dau,
-        "doc_length_histogram": doc_length_histogram,
-        "doc_split_assignment": doc_split_assignment,
-        "doc_simhash": doc_simhash,
-        "ann_sq8_topk": ann_sq8_topk,
-        "events_trimmed_mean": events_trimmed_mean,
-        "lineitem_benford": lineitem_benford,
-        "events_sliding_window": events_sliding_window,
-        "doc_token_entropy": doc_token_entropy,
-        "ann_ivf_trained_probe3": ann_ivf_trained_probe3,
-        "emb_hard_negatives": emb_hard_negatives,
-        "doc_quality_avg_precision": doc_quality_avg_precision,
-        "doc_curation_report": doc_curation_report,
-        "orders_loo_priority_encoding": orders_loo_priority_encoding,
-        "lineitem_corr_matrix": lineitem_corr_matrix,
-        "events_approx_quantiles": events_approx_quantiles,
-        "events_transitions": events_transitions,
-        "orders_profile": orders_profile,
-        "semantic_near_dup_crosscheck": semantic_near_dup_crosscheck,
-        "ann_ivfpq_persisted_topk": ann_ivfpq_persisted_topk,
-        "revenue_incremental_merge": revenue_incremental_merge,
-        "doc_hybrid_rrf_search": doc_hybrid_rrf_search,
-        "ann_ivfpq_incremental_topk": ann_ivfpq_incremental_topk,
-        "doc_nb_persisted_classifier": doc_nb_persisted_classifier,
-        "doc_bm25_persisted_topk": doc_bm25_persisted_topk,
-        "doc_phrase_search_persisted": doc_phrase_search_persisted,
-        "doc_winnow_overlap": doc_winnow_overlap,
-    }
-    # the driver evaluates the FIRST 50 queries() entries: exactly these,
-    # in this order, every one oracle-backed. Everything else in the table
-    # is an extra — outside the driver's window but still oracle-checked
-    # locally (tools/check_oracle.py) and benched (bench.py).
-    window = (
-        "fact_ventas",
-        "part_copurchase_assortativity",
-        "lineitem_fd_violations",
-        "events_value_band_rangejoin_bucketed",
-        "doc_source_woe",
-        "top_discount_lines_with_ties",
-        "doc_bpe_token_counts",
-        "doc_contrastive_pairs",
-        "doc_lang_resample",
-        "doc_stratified_sample",
-        "emb_centroid_drift",
-        "events_interpolated_daily",
-        "events_multiplicative_means",
-        "events_trailing_7d",
-        "events_type_drift_psi",
-        "files_provenance",
-        "order_priority_exists",
-        "customer_order_distribution",
-        "discount_order_rollup",
-        "corpus_training_batches",
-        "doc_incremental_dedup_persisted",
-        "doc_nb_lang_classifier",
-        "doc_quality_logreg",
-        "doc_dsir_sample",
-        "doc_temperature_resample",
-        "doc_source_quality_gate",
-        "doc_uncertainty_sample",
-        "emb_cluster_balanced_sample",
-        "doc_leakage_safe_split",
-        "doc_hybrid_rrf_search_ivf",
-        "doc_hybrid_rrf_search_pq",
-        "doc_contamination_safe_split",
-        "doc_hybrid_rrf_search_persisted",
-        "ann_ivfpq_federated_topk",
-        "doc_bm25_incremental_topk",
-        "doc_bm25_prf_search",
-        "doc_hybrid_rrf_search_federated",
-        "doc_cluster_quality_canonicals",
-        "doc_bm25_prf_search_persisted",
-        "doc_bm25_federated_topk",
-        "doc_retrieval_rank_metrics",
-        "doc_proximity_search",
-        "doc_phrase_slop_search",
-        "doc_bm25_maintained_topk",
-        "doc_cooccurrence_search",
-        "doc_bm25_compacted_topk",
-        "doc_phrase_search_compacted",
-        "ann_ivfpq_compacted_topk",
-        "doc_nb_maintained_classifier",
-        "ann_ivfpq_maintained_topk",
-    )
-    reg = {name: table[name] for name in window}
-    extra = {name: fn for name, fn in table.items() if name not in reg}
-    assert len(reg) == 50, f"driver window must hold exactly 50 queries, got {len(reg)}"
-    return reg, extra
-
-
 # --- oracle SQL ------------------------------------------------------------
-
-_SPANISH_DAY_CASE = (
-    "CASE isodow(fecha) WHEN 1 THEN 'Lunes' WHEN 2 THEN 'Martes' WHEN 3 THEN 'Miércoles' "
-    "WHEN 4 THEN 'Jueves' WHEN 5 THEN 'Viernes' WHEN 6 THEN 'Sábado' ELSE 'Domingo' END"
-)
-_SPANISH_MONTH_CASE = (
-    "CASE month(fecha) WHEN 1 THEN 'Enero' WHEN 2 THEN 'Febrero' WHEN 3 THEN 'Marzo' "
-    "WHEN 4 THEN 'Abril' WHEN 5 THEN 'Mayo' WHEN 6 THEN 'Junio' WHEN 7 THEN 'Julio' "
-    "WHEN 8 THEN 'Agosto' WHEN 9 THEN 'Septiembre' WHEN 10 THEN 'Octubre' "
-    "WHEN 11 THEN 'Noviembre' ELSE 'Diciembre' END"
-)
-
-_DIM_PRODUCTO_SQL = f"""
-SELECT CAST(1 AS INT) AS producto_id, CAST(-1 AS BIGINT) AS producto_externo_id,
-       'PRD-00000000' AS codigo, 'Sin Producto' AS nombre, 'Sin Marca' AS marca,
-       'Sin Categoría' AS categoria, CAST(0 AS INT) AS talla,
-       CAST(NULL AS DECIMAL(15,2)) AS precio_base, CAST(NULL AS DECIMAL(15,2)) AS costo_estandar,
-       FALSE AS activo, CAST(NULL AS DECIMAL(10,2)) AS margen_pct
-UNION ALL
-SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY p_partkey) AS INT),
-       p_partkey,
-       'PRD-' || lpad(CAST(p_partkey AS VARCHAR), 8, '0'),
-       COALESCE(NULLIF(TRIM(p_name), ''), 'Producto ' || CAST(p_partkey AS VARCHAR)),
-       string_split(p_brand, '#')[1],
-       COALESCE(p_type, 'Sin Categoría'),
-       p_size,
-       {_r2("p_retailprice")},
-       {_r2("p_retailprice * 0.4")},
-       TRUE,
-       {"CAST(FLOOR(((CAST(" + _r2("p_retailprice") + " AS DOUBLE) - CAST(" + _r2("p_retailprice * 0.4") + " AS DOUBLE)) / CAST(" + _r2("p_retailprice") + " AS DOUBLE) * 100) * 100 + 0.5) / 100 AS DECIMAL(10,2))"}
-FROM part
-"""
-
-_DIM_CLIENTE_SQL = f"""
-SELECT CAST(1 AS INT) AS cliente_id, CAST(-1 AS BIGINT) AS cliente_externo_id,
-       'CLI-000000' AS codigo, 'Sin Cliente' AS nombre, 'Sin Segmento' AS segmento,
-       'Sin País' AS pais, CAST(NULL AS DECIMAL(15,2)) AS saldo, FALSE AS activo
-UNION ALL
-SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY c_custkey) AS INT),
-       c_custkey,
-       'CLI-' || lpad(CAST(c_custkey AS VARCHAR), 6, '0'),
-       COALESCE(NULLIF(TRIM(c_name), ''), 'Cliente ' || CAST(c_custkey AS VARCHAR)),
-       COALESCE(c_mktsegment, 'Sin Segmento'),
-       COALESCE(n_name, 'Sin País'),
-       {_r2("c_acctbal")},
-       TRUE
-FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-"""
-
-_DIM_ALMACEN_SQL = """
-SELECT CAST(1 AS INT) AS almacen_id, CAST(-1 AS BIGINT) AS almacen_externo_id,
-       'ALM-0000' AS codigo, 'Sin Almacén' AS nombre, 'Sin País' AS pais, FALSE AS activo
-UNION ALL
-SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY s_suppkey) AS INT),
-       s_suppkey,
-       'ALM-' || lpad(CAST(s_suppkey AS VARCHAR), 4, '0'),
-       COALESCE(NULLIF(TRIM(s_name), ''), 'Almacén ' || CAST(s_suppkey AS VARCHAR)),
-       COALESCE(n_name, 'Sin País'),
-       TRUE
-FROM supplier LEFT JOIN nation ON s_nationkey = n_nationkey
-"""
-
-# shared fact_ventas oracle (also reused by ventas_daily_summary)
-_FACT_VENTAS_SQL = f"""
-WITH dp AS (
-  SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY p_partkey) AS INT) AS producto_id,
-         p_partkey, {_r2("p_retailprice * 0.4")} AS costo_estandar
-  FROM part
-), dc AS (
-  SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY c_custkey) AS INT) AS cliente_id, c_custkey FROM customer
-), da AS (
-  SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY s_suppkey) AS INT) AS almacen_id, s_suppkey FROM supplier
-), grain AS (
-  SELECT l.*, o.o_orderdate, o.o_custkey
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-  WHERE o.o_orderdate IS NOT NULL AND l.l_partkey IS NOT NULL AND l.l_quantity > 0
-  QUALIFY ROW_NUMBER() OVER (
-    PARTITION BY l.l_orderkey, l.l_linenumber
-    ORDER BY l.l_partkey, l.l_suppkey, l.l_quantity, l.l_extendedprice, l.l_discount,
-             l.l_tax, l.l_returnflag, l.l_linestatus, l.l_shipdate
-  ) = 1
-), m AS (
-  SELECT l_orderkey * 10 + l_linenumber AS venta_id,
-         l_orderkey AS orden_id, l_linenumber AS linea,
-         CAST(strftime(o_orderdate, '%Y%m%d') AS INT) AS fecha_id,
-         o_custkey, l_partkey, l_suppkey,
-         {_r2("l_quantity")} AS cantidad,
-         {_r2("l_extendedprice / l_quantity")} AS precio_unitario,
-         {_r2("l_extendedprice")} AS subtotal_bruto,
-         {_r2("l_extendedprice * l_discount")} AS descuento
-  FROM grain
-), m2 AS (
-  SELECT *, subtotal_bruto - descuento AS subtotal_con_iva FROM m
-), m3 AS (
-  SELECT *, {_r2("CAST(subtotal_con_iva AS DOUBLE) / 1.13")} AS subtotal FROM m2
-), m4 AS (
-  SELECT *, subtotal_con_iva - subtotal AS impuesto FROM m3
-), joined AS (
-  SELECT m4.*, COALESCE(dc.cliente_id, 1) AS cliente_id, COALESCE(dp.producto_id, 1) AS producto_id,
-         COALESCE(da.almacen_id, 1) AS almacen_id,
-         {_r2("COALESCE(CAST(dp.costo_estandar AS DOUBLE), 0) * CAST(m4.cantidad AS DOUBLE)")} AS costo_total
-  FROM m4
-  LEFT JOIN dc ON m4.o_custkey = dc.c_custkey
-  LEFT JOIN dp ON m4.l_partkey = dp.p_partkey
-  LEFT JOIN da ON m4.l_suppkey = da.s_suppkey
-)
-SELECT venta_id, orden_id, linea, fecha_id, cliente_id, producto_id, almacen_id,
-       CASE WHEN impuesto > 0 THEN 1 ELSE 3 END AS impuesto_id,
-       CAST(cantidad AS DECIMAL(10,2)) AS cantidad,
-       CAST(precio_unitario AS DECIMAL(15,2)) AS precio_unitario,
-       CAST(subtotal_bruto AS DECIMAL(15,2)) AS subtotal_bruto,
-       CAST(descuento AS DECIMAL(15,2)) AS descuento,
-       CAST(subtotal AS DECIMAL(15,2)) AS subtotal,
-       CAST(impuesto AS DECIMAL(15,2)) AS impuesto,
-       CAST(subtotal_con_iva AS DECIMAL(15,2)) AS total,
-       CAST(costo_total AS DECIMAL(15,2)) AS costo_total,
-       CAST(subtotal - costo_total AS DECIMAL(15,2)) AS margen
-FROM joined
-"""
-
-# shared journal oracle (fact_transacciones; reused by balance / P&L)
-_JOURNAL_SQL = f"""
-WITH base AS (
-  SELECT o_orderkey AS orden_id,
-         'AST-' || lpad(CAST(o_orderkey AS VARCHAR), 8, '0') AS numero_asiento,
-         CAST(strftime(o_orderdate, '%Y%m%d') AS INT) AS fecha_id,
-         {_r2("o_totalprice")} AS total
-  FROM orders
-), b2 AS (
-  SELECT *, {_r2("CAST(total AS DOUBLE) / 1.13")} AS subtotal FROM base
-), b3 AS (
-  SELECT *, total - subtotal AS iva, {_r2("CAST(subtotal AS DOUBLE) * 0.4")} AS costo FROM b2
-), entries AS (
-  SELECT orden_id, numero_asiento, fecha_id, 1102 AS cuenta_id, 'DEBITO' AS tipo_movimiento,
-         CAST(total AS DECIMAL(15,2)) AS monto, 'Cobro de venta' AS descripcion FROM b3
-   WHERE CAST(total AS DECIMAL(15,2)) > 0
-  UNION ALL
-  SELECT orden_id, numero_asiento, fecha_id, 4101, 'CREDITO',
-         CAST(subtotal AS DECIMAL(15,2)), 'Venta de mercadería' FROM b3
-   WHERE CAST(subtotal AS DECIMAL(15,2)) > 0
-  UNION ALL
-  SELECT orden_id, numero_asiento, fecha_id, 2102, 'CREDITO',
-         CAST(iva AS DECIMAL(15,2)), 'IVA débito fiscal' FROM b3
-   WHERE CAST(iva AS DECIMAL(15,2)) > 0
-  UNION ALL
-  SELECT orden_id, numero_asiento, fecha_id, 5101, 'DEBITO',
-         CAST(costo AS DECIMAL(15,2)), 'Costo de ventas' FROM b3
-   WHERE CAST(costo AS DECIMAL(15,2)) > 0
-  UNION ALL
-  SELECT orden_id, numero_asiento, fecha_id, 1103, 'CREDITO',
-         CAST(costo AS DECIMAL(15,2)), 'Salida de inventario' FROM b3
-   WHERE CAST(costo AS DECIMAL(15,2)) > 0
-)
-SELECT orden_id, numero_asiento, fecha_id,
-       CAST(FLOOR(fecha_id / 100) AS INT) AS periodo_id,
-       cuenta_id, tipo_movimiento, monto, descripcion
-FROM entries
-"""
-
-_TOKENS = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-
-# fixed BM25 query set (query_id, query_text) — vocabulary drawn from the
-# synthetic corpus's word list so every term has a non-trivial posting list
-_BM25_QUERIES: list[tuple[int, str]] = [
-    (1, "spark window agg"),
-    (2, "hash join fast"),
-    (3, "customer order data"),
-    (4, "stream batch merge sort"),
-]
-
-# target mixture weights + token budget for doc_mixture_alloc — ONE
-# definition feeds the Spark literal frame and the oracle VALUES clause
-_MIX_WEIGHTS: list[tuple[str, float]] = [
-    ("de", 0.3),
-    ("en", 0.2),
-    ("es", 0.2),
-    ("fr", 0.15),
-    ("zh", 0.15),
-]
-_MIX_BUDGET = 20_000
-
-
-# Fellegi-Sunter comparator set for the customer↔supplier linkage query —
-# ONE definition feeds both the Spark plan and the generated oracle SQL
-def _link_fields():
-    from data_warehouse_punta_fina_spark.operators.linkage import FieldCompare
-
-    return [
-        FieldCompare("ref", "ref_num", "ref_num", m=0.95, u=0.001, kind="exact"),
-        FieldCompare("bal", "bal", "bal", m=0.9, u=0.01, kind="abs_diff", tol=5.0),
-    ]
-
-
-_SHINGLES = f"""
-CASE WHEN len({_TOKENS}) >= 3
-     THEN list_distinct([array_to_string(({_TOKENS})[j:j+2], ' ') FOR j IN generate_series(1, len({_TOKENS}) - 2)])
-     ELSE [array_to_string({_TOKENS}, ' ')]
-END
-"""
-
-_QUANT_VEC = "list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT))"
-
-def _hex13(expr: str) -> str:
-    """13 hex chars → BIGINT (range 2^52, exactly representable as a
-    double) — the oracle twin of operators.sampling's conv(substr(md5,
-    1, 13), 16, 10). Same digit-by-digit integer shifts as _hex56."""
-    return (
-        "list_sum(list_transform(range(1, 14), j -> "
-        f"CAST(strpos('0123456789abcdef', substr({expr}, j, 1)) - 1 AS BIGINT)"
-        " * (CAST(1 AS BIGINT) << (4 * (13 - j)))))"
-    )
-
-
-def _hex56(expr: str) -> str:
-    """14 hex chars → BIGINT, digit-by-digit with integer shifts (DuckDB
-    has no base-16 string→int cast; float powers would lose exactness
-    past 2^53). Mirrors Spark's conv(substr(md5,…,14), 16, 10)."""
-    return (
-        "list_sum(list_transform(range(1, 15), j -> "
-        f"CAST(strpos('0123456789abcdef', substr({expr}, j, 1)) - 1 AS BIGINT)"
-        " * (CAST(1 AS BIGINT) << (4 * (14 - j)))))"
-    )
-
-
-# MinHash signatures: ONE md5 per shingle, k permutations derived as
-# (h1 + i·h2) mod 2^56 from the digest halves (Kirsch-Mitzenmacher) —
-# mirrors operators.dedup.minhash_signatures exactly (MINHASH_MOD).
-_MINHASH_SIG_CTES = f"""sh AS (
-  SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM documents
-), hh AS (
-  SELECT doc_id, {_hex56("substr(md5(shingle), 1, 14)")} AS h1,
-         {_hex56("substr(md5(shingle), 17, 14)")} AS h2
-  FROM sh
-), sig AS (
-  SELECT doc_id, i, MIN((h1 + i * h2) % 72057594037927936) AS h
-  FROM hh CROSS JOIN range(12) t(i)
-  GROUP BY doc_id, i
-), bands AS (
-  SELECT doc_id, CAST(FLOOR(i / 3) AS INT) AS band,
-         string_agg(CAST(h AS VARCHAR), '|' ORDER BY i) AS band_key
-  FROM sig GROUP BY doc_id, CAST(FLOOR(i / 3) AS INT)
-)"""
-
-_MINHASH_PAIRS_SQL = f"""
-WITH {_MINHASH_SIG_CTES}
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-"""
-
-
-_SIMHASH_SQL = """
-WITH toks AS (
-  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS tok
-  FROM documents
-), h AS (
-  SELECT doc_id, substr(md5(tok), 1, 8) AS hx FROM toks
-), votes AS (
-  SELECT doc_id, j,
-         SUM(((strpos('0123456789abcdef', substr(hx, CAST(FLOOR(j / 4) AS INT) + 1, 1)) - 1)
-              >> (3 - (j % 4))) % 2 * 2 - 1) AS vote
-  FROM h CROSS JOIN range(32) t(j)
-  GROUP BY doc_id, j
-), fp AS (
-  SELECT doc_id,
-         SUM(CASE WHEN vote > 0 THEN (CAST(1 AS BIGINT) << (31 - j)) ELSE 0 END) AS simhash
-  FROM votes GROUP BY doc_id
-)
-SELECT d.doc_id, CAST(COALESCE(fp.simhash, 0) AS BIGINT) AS simhash
-FROM documents d LEFT JOIN fp ON d.doc_id = fp.doc_id
-"""
-
-def _cosine_sql(qa: str, ca: str) -> str:
-    dot = f"CAST(list_sum(list_transform(generate_series(1, 64), i -> {qa}[i] * {ca}[i])) AS DOUBLE)"
-    na = f"CAST(list_sum(list_transform(generate_series(1, 64), i -> {qa}[i] * {qa}[i])) AS DOUBLE)"
-    nb = f"CAST(list_sum(list_transform(generate_series(1, 64), i -> {ca}[i] * {ca}[i])) AS DOUBLE)"
-    return _r6(f"{dot} / sqrt({na} * {nb})")
-
-
-def _bucket_sql(bits: int) -> str:
-    """SQL twin of operators.similarity.sign_bucket."""
-    return " + ".join(f"(CASE WHEN embedding[{i + 1}] >= 0 THEN {1 << i} ELSE 0 END)" for i in range(bits))
-
-
-def _kmeans_cells_sql(n_centroids: int, iters: int, train_filter: str | None = None) -> list[str]:
-    """Shared CTE chain: Lloyd iterations unrolled, ending in ``af`` =
-    (vec_id, qv, cid) final cell assignments. Distances are exact BIGINT
-    sums (no float order dependence); centroid means round to int64 via
-    floor((2s+n)/(2n)) — mirrors operators.similarity.kmeans_fit.
-
-    ``train_filter`` restricts the TRAINING rows (seeds + Lloyd updates)
-    to a predicate over ``v`` while the final ``df``/``af`` assignment
-    still covers every vector — the twin of building a persisted index
-    on a base corpus and encode-only appending the rest
-    (operators.similarity.ivfpq_append_index)."""
-
-    def dist(qv: str, cv: str) -> str:
-        return (
-            "list_sum(list_transform(generate_series(1, 64), "
-            f"i -> ({qv}[i] - {cv}[i]) * ({qv}[i] - {cv}[i])))"
-        )
-
-    vt = "vt" if train_filter else "v"
-    parts = [
-        f"v AS (SELECT vec_id, {_QUANT_VEC} AS qv FROM embeddings)",
-    ]
-    if train_filter:
-        parts.append(f"vt AS (SELECT * FROM v WHERE {train_filter})")
-    parts.append(
-        f"c0 AS (SELECT vec_id AS cid, qv AS cv FROM {vt} ORDER BY vec_id LIMIT {n_centroids})"
-    )
-    prev = "c0"
-    for it in range(1, iters + 1):
-        parts += [
-            f"d{it} AS (SELECT {vt}.vec_id, {vt}.qv, {prev}.cid, {dist(vt + '.qv', prev + '.cv')} AS dist "
-            f"FROM {vt} CROSS JOIN {prev})",
-            f"a{it} AS (SELECT vec_id, qv, cid FROM d{it} "
-            f"QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) = 1)",
-            f"u{it} AS (SELECT cid, i, SUM(qv[i]) AS s, COUNT(*) AS n "
-            f"FROM a{it} CROSS JOIN range(1, 65) t(i) GROUP BY cid, i)",
-            f"c{it} AS (SELECT cid, list(CAST(FLOOR((2 * s + n) / (2 * n)) AS BIGINT) ORDER BY i) AS cv "
-            f"FROM u{it} GROUP BY cid)",
-        ]
-        prev = f"c{it}"
-    parts += [
-        f"df AS (SELECT v.vec_id, v.qv, {prev}.cid, {dist('v.qv', prev + '.cv')} AS dist "
-        f"FROM v CROSS JOIN {prev})",
-        "af AS (SELECT vec_id, qv, cid FROM df "
-        "QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) = 1)",
-    ]
-    return parts
-
-
-def _kmeans_ivf_sql(n_centroids: int = 16, iters: int = 2, k: int = 5, probes: int = 1) -> str:
-    """SQL twin of operators.similarity.ivf_trained_topk. ``probes > 1``
-    keeps each query's ``probes`` nearest cells (multi-probe; corpus rows
-    still live in exactly one cell, so pairs stay unique)."""
-    if probes == 1:
-        qf = "qf AS (SELECT vec_id AS query_id, qv, cid FROM af WHERE vec_id < 8)"
-    else:
-        qf = (
-            "qf AS (SELECT vec_id AS query_id, qv, cid FROM df WHERE vec_id < 8 "
-            f"QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) <= {probes})"
-        )
-    parts = _kmeans_cells_sql(n_centroids, iters) + [
-        qf,
-        "scored AS (SELECT qf.query_id, af.vec_id AS neighbor_id, "
-        f"{_cosine_sql('qf.qv', 'af.qv')} AS cosine "
-        "FROM qf JOIN af ON qf.cid = af.cid AND af.vec_id <> qf.query_id)",
-    ]
-    return (
-        "WITH " + ",\n".join(parts) + "\n"
-        "SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank FROM (\n"
-        "  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank\n"
-        f"  FROM scored\n) WHERE rank <= {k}"
-    )
-
-
-def _kmeans_near_dup_sql(n_centroids: int = 16, iters: int = 2, threshold: float = 0.35) -> str:
-    """SQL twin of operators.similarity.embedding_near_dup_pairs_trained."""
-    parts = _kmeans_cells_sql(n_centroids, iters)
-    cos = _cosine_sql("a.qv", "b.qv")
-    return (
-        "WITH " + ",\n".join(parts) + "\n"
-        f"SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cosine\n"
-        "FROM af a JOIN af b ON a.cid = b.cid AND a.vec_id < b.vec_id\n"
-        f"WHERE {cos} >= {threshold}"
-    )
-
-
-def _pq_topk_sql(
-    m: int = 4, n_centroids: int = 8, iters: int = 2, k: int = 5, rerank: int = 20,
-    dims: int = 64,
-) -> str:
-    """SQL twin of operators.similarity.pq_topk: per-subspace Lloyd
-    iterations unrolled (grouped by ``sub`` — the m codebooks train in the
-    same CTE chain), ADC scoring via the (query, sub, cid) partial-dot
-    LUT, exact-cosine rerank of the top ``rerank``."""
-    d = dims // m
-
-    def sdist(sv: str, cv: str) -> str:
-        return (
-            f"list_sum(list_transform(generate_series(1, {d}), "
-            f"i -> ({sv}[i] - {cv}[i]) * ({sv}[i] - {cv}[i])))"
-        )
-
-    parts = [
-        f"v AS (SELECT vec_id, {_QUANT_VEC} AS qv FROM embeddings)",
-        f"vs AS (SELECT vec_id, sub, qv[(sub * {d} + 1):((sub + 1) * {d})] AS sv "
-        f"FROM v CROSS JOIN range(0, {m}) t(sub))",
-        f"seed AS (SELECT vec_id FROM v ORDER BY vec_id LIMIT {n_centroids})",
-        "c0 AS (SELECT vs.sub, vs.vec_id AS cid, vs.sv AS cv FROM vs JOIN seed USING (vec_id))",
-    ]
-    prev = "c0"
-    for it in range(1, iters + 1):
-        parts += [
-            f"d{it} AS (SELECT vs.vec_id, vs.sub, vs.sv, c.cid, {sdist('vs.sv', 'c.cv')} AS dist "
-            f"FROM vs JOIN {prev} c ON c.sub = vs.sub)",
-            f"a{it} AS (SELECT vec_id, sub, sv, cid FROM d{it} "
-            "QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) = 1)",
-            f"u{it} AS (SELECT sub, cid, i, SUM(sv[i]) AS s, COUNT(*) AS n "
-            f"FROM a{it} CROSS JOIN range(1, {d + 1}) t(i) GROUP BY sub, cid, i)",
-            f"c{it} AS (SELECT sub, cid, list(CAST(FLOOR((2 * s + n) / (2 * n)) AS BIGINT) ORDER BY i) AS cv "
-            f"FROM u{it} GROUP BY sub, cid)",
-        ]
-        prev = f"c{it}"
-    adot = "CAST(SUM(l.pdot) AS DOUBLE)"
-    xn2 = "CAST(SUM(l.cn2) AS DOUBLE)"
-    qn2 = "CAST(ANY_VALUE(l.qn2) AS DOUBLE)"
-    parts += [
-        f"dF AS (SELECT vs.vec_id, vs.sub, vs.sv, c.cid, {sdist('vs.sv', 'c.cv')} AS dist "
-        f"FROM vs JOIN {prev} c ON c.sub = vs.sub)",
-        "af AS (SELECT vec_id, sub, cid FROM dF "
-        "QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) = 1)",
-        f"cf AS (SELECT sub, cid, cv, list_sum(list_transform(cv, x -> x * x)) AS cn2 FROM {prev})",
-        "q AS (SELECT vec_id AS query_id, qv, "
-        "list_sum(list_transform(qv, x -> x * x)) AS qn2 FROM v WHERE vec_id < 8)",
-        f"qs AS (SELECT query_id, qn2, sub, qv[(sub * {d} + 1):((sub + 1) * {d})] AS qsv "
-        f"FROM q CROSS JOIN range(0, {m}) t(sub))",
-        "lut AS (SELECT qs.query_id, qs.qn2, cf.sub, cf.cid, "
-        f"list_sum(list_transform(generate_series(1, {d}), i -> qs.qsv[i] * cf.cv[i])) AS pdot, "
-        "cf.cn2 FROM qs JOIN cf ON cf.sub = qs.sub)",
-        "approx AS (SELECT l.query_id, a.vec_id AS neighbor_id, "
-        f"{_r6(f'{adot} / sqrt({xn2} * {qn2})')} AS approx "
-        "FROM af a JOIN lut l ON l.sub = a.sub AND l.cid = a.cid "
-        "WHERE a.vec_id <> l.query_id GROUP BY l.query_id, a.vec_id)",
-        "cand AS (SELECT query_id, neighbor_id FROM approx "
-        f"QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY approx DESC, neighbor_id) <= {rerank})",
-        "exact AS (SELECT cand.query_id, cand.neighbor_id, "
-        f"{_cosine_sql('q.qv', 'cv2.qv')} AS cosine "
-        "FROM cand JOIN v cv2 ON cv2.vec_id = cand.neighbor_id "
-        "JOIN q ON q.query_id = cand.query_id)",
-    ]
-    return (
-        "WITH " + ",\n".join(parts) + "\n"
-        "SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank FROM (\n"
-        "  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank\n"
-        f"  FROM exact\n) WHERE rank <= {k}"
-    )
-
-
-def _ivfpq_topk_sql(
-    n_cells: int = 16,
-    probes: int = 4,
-    m: int = 8,
-    n_centroids: int = 8,
-    iters: int = 2,
-    k: int = 5,
-    rerank: int = 30,
-    dims: int = 64,
-    train_filter: str | None = None,
-    query_filter: str = "vec_id < 8",
-    parts_only: bool = False,
-    corpus_filter: str | None = None,
-) -> str | list[str]:
-    """SQL twin of operators.similarity.ivfpq_topk: the coarse k-means
-    cell chain (shared with the trained-IVF oracles) restricts candidate
-    pairs to probed cells; the per-subspace PQ chain (CTEs prefixed
-    ``p``) supplies codes + LUT for ADC scoring; exact-cosine rerank of
-    the top ``rerank``; final exact top-k.
-
-    ``query_filter`` selects the query vectors; ``parts_only`` returns
-    the CTE parts list (ending in ``exact`` = rerank-bounded exact
-    cosines) for composition into larger oracles — the hybrid RRF's
-    semantic side (doc_hybrid_rrf_search_pq) embeds this chain next to
-    the BM25 chain, which is why the query-vector CTE is named ``pqv``
-    (the BM25 chain owns ``q``)."""
-    d = dims // m
-
-    def sdist(sv: str, cv: str) -> str:
-        return (
-            f"list_sum(list_transform(generate_series(1, {d}), "
-            f"i -> ({sv}[i] - {cv}[i]) * ({sv}[i] - {cv}[i])))"
-        )
-
-    # coarse chain: v, c0..c{iters}, df, af  (af = corpus cell assignment)
-    parts = _kmeans_cells_sql(n_cells, iters, train_filter)
-    pvt = "pvst" if train_filter else "pvs"
-    parts += [
-        f"qcell AS (SELECT vec_id AS query_id, cid FROM df WHERE {query_filter} "
-        f"QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) <= {probes})",
-        # candidate pairs BEFORE the m-way code expansion (the Spark
-        # plan); corpus_filter restricts candidates to a shard (the
-        # federated oracle — af itself still assigns every vector)
-        "cpairs AS (SELECT qcell.query_id, af.vec_id FROM af "
-        "JOIN qcell ON qcell.cid = af.cid AND af.vec_id <> qcell.query_id"
-        + (f" AND ({corpus_filter})" if corpus_filter else "")
-        + ")",
-        # PQ chain, prefixed p* (training restricted by train_filter when
-        # set; final paf encoding always covers every vector)
-        f"pvs AS (SELECT vec_id, sub, qv[(sub * {d} + 1):((sub + 1) * {d})] AS sv "
-        f"FROM v CROSS JOIN range(0, {m}) t(sub))",
-    ]
-    if train_filter:
-        parts.append(f"pvst AS (SELECT * FROM pvs WHERE {train_filter})")
-    parts += [
-        f"pseed AS (SELECT vec_id FROM {'vt' if train_filter else 'v'} ORDER BY vec_id LIMIT {n_centroids})",
-        f"pc0 AS (SELECT {pvt}.sub, {pvt}.vec_id AS cid, {pvt}.sv AS cv FROM {pvt} JOIN pseed USING (vec_id))",
-    ]
-    prev = "pc0"
-    for it in range(1, iters + 1):
-        parts += [
-            f"pd{it} AS (SELECT {pvt}.vec_id, {pvt}.sub, {pvt}.sv, c.cid, {sdist(pvt + '.sv', 'c.cv')} AS dist "
-            f"FROM {pvt} JOIN {prev} c ON c.sub = {pvt}.sub)",
-            f"pa{it} AS (SELECT vec_id, sub, sv, cid FROM pd{it} "
-            "QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) = 1)",
-            f"pu{it} AS (SELECT sub, cid, i, SUM(sv[i]) AS s, COUNT(*) AS n "
-            f"FROM pa{it} CROSS JOIN range(1, {d + 1}) t(i) GROUP BY sub, cid, i)",
-            f"pc{it} AS (SELECT sub, cid, list(CAST(FLOOR((2 * s + n) / (2 * n)) AS BIGINT) ORDER BY i) AS cv "
-            f"FROM pu{it} GROUP BY sub, cid)",
-        ]
-        prev = f"pc{it}"
-    adot = "CAST(SUM(l.pdot) AS DOUBLE)"
-    xn2 = "CAST(SUM(l.cn2) AS DOUBLE)"
-    qn2 = "CAST(ANY_VALUE(l.qn2) AS DOUBLE)"
-    parts += [
-        f"pdF AS (SELECT pvs.vec_id, pvs.sub, pvs.sv, c.cid, {sdist('pvs.sv', 'c.cv')} AS dist "
-        f"FROM pvs JOIN {prev} c ON c.sub = pvs.sub)",
-        "paf AS (SELECT vec_id, sub, cid FROM pdF "
-        "QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) = 1)",
-        f"pcf AS (SELECT sub, cid, cv, list_sum(list_transform(cv, x -> x * x)) AS cn2 FROM {prev})",
-        "pqv AS (SELECT vec_id AS query_id, qv, "
-        f"list_sum(list_transform(qv, x -> x * x)) AS qn2 FROM v WHERE {query_filter})",
-        f"qs AS (SELECT query_id, qn2, sub, qv[(sub * {d} + 1):((sub + 1) * {d})] AS qsv "
-        f"FROM pqv CROSS JOIN range(0, {m}) t(sub))",
-        "lut AS (SELECT qs.query_id, qs.qn2, pcf.sub, pcf.cid, "
-        f"list_sum(list_transform(generate_series(1, {d}), i -> qs.qsv[i] * pcf.cv[i])) AS pdot, "
-        "pcf.cn2 FROM qs JOIN pcf ON pcf.sub = qs.sub)",
-        "approx AS (SELECT cp.query_id, cp.vec_id AS neighbor_id, "
-        f"{_r6(f'{adot} / sqrt({xn2} * {qn2})')} AS approx "
-        "FROM cpairs cp JOIN paf a ON a.vec_id = cp.vec_id "
-        "JOIN lut l ON l.query_id = cp.query_id AND l.sub = a.sub AND l.cid = a.cid "
-        "GROUP BY cp.query_id, cp.vec_id)",
-        "cand AS (SELECT query_id, neighbor_id FROM approx "
-        f"QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY approx DESC, neighbor_id) <= {rerank})",
-        "exact AS (SELECT cand.query_id, cand.neighbor_id, "
-        f"{_cosine_sql('pqv.qv', 'cv2.qv')} AS cosine "
-        "FROM cand JOIN v cv2 ON cv2.vec_id = cand.neighbor_id "
-        "JOIN pqv ON pqv.query_id = cand.query_id)",
-    ]
-    if parts_only:
-        return parts
-    return (
-        "WITH " + ",\n".join(parts) + "\n"
-        "SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank FROM (\n"
-        "  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank\n"
-        f"  FROM exact\n) WHERE rank <= {k}"
-    )
-
-
-def _prefix_ctes(parts: list[str], prefix: str) -> list[str]:
-    """Rename every CTE defined in ``parts`` (each part is one
-    ``name AS (...)`` clause) to ``prefix+name``, including all
-    references — lets two instances of the same unrolled chain (e.g.
-    one IVF-PQ chain per corpus shard in the federated-search oracle)
-    coexist in a single WITH block. Word-boundary rename over the
-    derived definition names only, so column names never collide."""
-    import re
-
-    names = set()
-    for p in parts:
-        m = re.match(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s+AS\s*\(", p)
-        if m:
-            names.add(m.group(1))
-    pat = re.compile(r"\b(" + "|".join(sorted(names, key=len, reverse=True)) + r")\b")
-    return [pat.sub(lambda m: prefix + m.group(1), p) for p in parts]
-
-
-def _mmr_sql(k: int = 5, pool: int = 20, lam_num: int = 1, lam_den: int = 2) -> str:
-    """SQL twin of operators.similarity.mmr_topk: the k−1 greedy rounds
-    unrolled as CTEs. Scores compare in exact BIGINT millionths derived
-    from the round-6 DECIMAL cosines (decimal × int is exact in both
-    engines), so the picked set is bit-identical."""
-    parts = [
-        f"v AS (SELECT vec_id, {_QUANT_VEC} AS qv FROM embeddings)",
-        "q AS (SELECT vec_id AS query_id, qv FROM v WHERE vec_id < 8)",
-        "scored AS (SELECT q.query_id, v.vec_id AS neighbor_id, "
-        f"{_cosine_sql('q.qv', 'v.qv')} AS rel "
-        "FROM q JOIN v ON v.vec_id <> q.query_id)",
-        "pool AS (SELECT query_id, neighbor_id, rel, "
-        "CAST(rel * 1000000 AS BIGINT) AS rel_i FROM scored "
-        f"QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY rel DESC, neighbor_id) <= {pool})",
-        "pairs AS (SELECT a.query_id, a.neighbor_id AS id_a, b.neighbor_id AS id_b, "
-        f"CAST({_cosine_sql('va.qv', 'vb.qv')} * 1000000 AS BIGINT) AS sim_i "
-        "FROM pool a JOIN pool b ON a.query_id = b.query_id AND a.neighbor_id <> b.neighbor_id "
-        "JOIN v va ON va.vec_id = a.neighbor_id JOIN v vb ON vb.vec_id = b.neighbor_id)",
-        "sel1 AS (SELECT query_id, neighbor_id, 1 AS step, rel AS relevance FROM pool "
-        "QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY rel_i DESC, neighbor_id) = 1)",
-    ]
-    prev = "sel1"
-    for step in range(2, k + 1):
-        parts += [
-            f"r{step} AS (SELECT p.query_id, p.neighbor_id, p.rel, p.rel_i, MAX(pr.sim_i) AS ms_i "
-            "FROM pool p "
-            f"LEFT JOIN {prev} sx ON sx.query_id = p.query_id AND sx.neighbor_id = p.neighbor_id "
-            "JOIN pairs pr ON pr.query_id = p.query_id AND pr.id_a = p.neighbor_id "
-            f"JOIN {prev} s ON s.query_id = pr.query_id AND s.neighbor_id = pr.id_b "
-            "WHERE sx.neighbor_id IS NULL GROUP BY 1, 2, 3, 4)",
-            f"p{step} AS (SELECT query_id, neighbor_id, {step} AS step, rel AS relevance FROM r{step} "
-            f"QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY "
-            f"({lam_num} * rel_i - {lam_den - lam_num} * ms_i) DESC, neighbor_id) = 1)",
-            f"sel{step} AS (SELECT * FROM {prev} UNION ALL SELECT * FROM p{step})",
-        ]
-        prev = f"sel{step}"
-    return (
-        "WITH " + ",\n".join(parts) + "\n"
-        f"SELECT query_id, neighbor_id, CAST(step AS INT) AS step, relevance FROM {prev}"
-    )
 
 
 def oracle_sql() -> dict[str, str]:
-    langs = {
-        "en": ["the", "and", "of", "to", "is", "with"],
-        "es": ["el", "la", "los", "de", "que", "y"],
-        "fr": ["le", "les", "des", "et", "est", "une"],
-        "de": ["der", "die", "das", "und", "ist", "ein"],
-    }
-
-    def marker_count(words: list[str]) -> str:
-        in_list = ", ".join(f"'{w}'" for w in words)
-        return f"len(list_filter({_TOKENS}, t -> t IN ({in_list})))"
-
-    lang_scores = {lang: marker_count(words) for lang, words in langs.items()}
-    best = f"greatest({lang_scores['en']}, {lang_scores['es']}, {lang_scores['fr']}, {lang_scores['de']})"
-    lang_case = (
-        f"CASE WHEN {best} > 0 AND {lang_scores['en']} = {best} THEN 'en' "
-        f"WHEN {best} > 0 AND {lang_scores['es']} = {best} THEN 'es' "
-        f"WHEN {best} > 0 AND {lang_scores['fr']} = {best} THEN 'fr' "
-        f"WHEN {best} > 0 AND {lang_scores['de']} = {best} THEN 'de' "
-        f"ELSE 'und' END"
-    )
-
-    stop_en = ", ".join(f"'{w}'" for w in ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"])
-    punct_raw = "CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE) / greatest(length(text), 1)"
-    alpha_raw = "CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / greatest(length(text), 1)"
-    n_tok = f"len({_TOKENS})"
-    quality = (
-        f"(least(CAST({n_tok} AS DOUBLE) / 64.0, 1.0) "
-        f"+ (1.0 - least(({punct_raw}) * 5.0, 1.0)) "
-        f"+ ({alpha_raw})) / 3.0"
-    )
-    bpe = (
-        "CAST(ceil(CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / 4) "
-        "+ length(regexp_replace(text, '[^0-9]', '', 'g')) "
-        "+ length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS BIGINT)"
-    )
-    fingerprint = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "list_transform(string_split(text, ''), ch -> CAST(ascii(ch) AS BIGINT))), "
-        "(acc, x) -> (acc * 31 + x) % 1000000007)"
-    )
-
-    o = {
-        "dim_fecha": f"""
-WITH days AS (
-  SELECT CAST(unnest(generate_series(DATE '1995-01-01', DATE '2005-12-31', INTERVAL 1 DAY)) AS DATE) AS fecha
-)
-SELECT CAST(strftime(fecha, '%Y%m%d') AS INT) AS fecha_id, fecha,
-       CAST(year(fecha) AS INT) AS anio, CAST(month(fecha) AS INT) AS mes,
-       CAST(day(fecha) AS INT) AS dia, CAST(quarter(fecha) AS INT) AS trimestre,
-       CAST(weekofyear(fecha) AS INT) AS semana, CAST(isodow(fecha) AS INT) AS dia_semana,
-       {_SPANISH_DAY_CASE} AS nombre_dia, {_SPANISH_MONTH_CASE} AS nombre_mes,
-       isodow(fecha) IN (6, 7) AS es_fin_semana
-FROM days
-""",
-        "dim_producto": _DIM_PRODUCTO_SQL,
-        "dim_cliente": _DIM_CLIENTE_SQL,
-        "dim_usuario": """
-SELECT CAST(1 AS INT) AS usuario_id, CAST(-1 AS BIGINT) AS usuario_externo_id,
-       'sin_usuario' AS username, 'sin_usuario@puntafina.sv' AS email, 'Sin Usuario' AS nombre_completo
-UNION ALL
-SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY user_id) AS INT), user_id,
-       'user' || CAST(user_id AS VARCHAR),
-       'user' || CAST(user_id AS VARCHAR) || '@puntafina.sv',
-       'user' || CAST(user_id AS VARCHAR)
-FROM (SELECT DISTINCT user_id FROM events)
-""",
-        "dim_almacen": _DIM_ALMACEN_SQL,
-        "dim_proveedor": f"""
-SELECT CAST(1 AS INT) AS proveedor_id, CAST(-1 AS BIGINT) AS proveedor_externo_id,
-       'PROV-0000' AS codigo, 'Sin Proveedor' AS nombre, 'Sin País' AS pais,
-       'Sin Región' AS region, CAST(NULL AS DECIMAL(15,2)) AS saldo, FALSE AS activo
-UNION ALL
-SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY s_suppkey) AS INT),
-       s_suppkey,
-       'PROV-' || lpad(CAST(s_suppkey AS VARCHAR), 4, '0'),
-       COALESCE(NULLIF(TRIM(s_name), ''), 'Proveedor ' || CAST(s_suppkey AS VARCHAR)),
-       COALESCE(n_name, 'Sin País'),
-       COALESCE(r_name, 'Sin Región'),
-       {_r2("s_acctbal")},
-       TRUE
-FROM supplier
-LEFT JOIN nation ON s_nationkey = n_nationkey
-LEFT JOIN region ON n_regionkey = r_regionkey
-""",
-        "dim_cuenta_contable": """
-SELECT * FROM (VALUES
-  (CAST(1 AS INT), CAST(0 AS INT), 'Sin Cuenta', 'na', 'na', FALSE),
-  (2, 1102, 'Bancos', 'activo', 'deudora', TRUE),
-  (3, 1103, 'Inventario', 'activo', 'deudora', TRUE),
-  (4, 2102, 'IVA por Pagar', 'pasivo', 'acreedora', TRUE),
-  (5, 4101, 'Ventas', 'ingreso', 'acreedora', TRUE),
-  (6, 5101, 'Costo de Ventas', 'costo', 'deudora', TRUE),
-  (7, 6101, 'Gastos de Operación', 'gasto', 'deudora', TRUE)
-) AS t(cuenta_id, codigo, nombre, tipo_cuenta, naturaleza, activa)
-""",
-        "dim_promocion": """
-WITH promos AS (
-  SELECT DISTINCT CAST(json_extract_string(props, '$.k') AS INT) AS promo_k
-  FROM events
-  WHERE event_type = 'purchase' AND json_extract_string(props, '$.k') IS NOT NULL
-)
-SELECT CAST(1 AS INT) AS promocion_id, CAST(-1 AS INT) AS promo_externo_id,
-       'PROMO-0000' AS codigo, 'Sin Promoción' AS nombre, FALSE AS usa_cupones
-UNION ALL
-SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY promo_k) AS INT), promo_k,
-       'PROMO-' || lpad(CAST(promo_k AS VARCHAR), 4, '0'),
-       'Promoción ' || CAST(promo_k AS VARCHAR), TRUE
-FROM promos
-""",
-        "fact_ventas": _FACT_VENTAS_SQL,
-        "fact_inventario": f"""
-WITH m AS (
-  SELECT event_id AS movimiento_id,
-         CAST(strftime(CAST(ts AS DATE), '%Y%m%d') AS INT) AS fecha_id,
-         user_id AS usuario_externo_id,
-         event_type AS tipo_movimiento,
-         CASE event_type WHEN 'purchase' THEN 2 WHEN 'click' THEN 3 WHEN 'error' THEN 5
-              WHEN 'signup' THEN 6 WHEN 'view' THEN 9 ELSE 1 END AS tipo_movimiento_id,
-         CAST(CASE WHEN event_type IN ('purchase', 'signup') THEN {_r2("value")}
-                   ELSE -{_r2("value")} END AS DECIMAL(15,2)) AS cantidad
-  FROM events
-), w AS (
-  SELECT *, SUM(cantidad) OVER (
-           PARTITION BY usuario_externo_id ORDER BY fecha_id, movimiento_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS stock_resultante
-  FROM m
-)
-SELECT movimiento_id, fecha_id, usuario_externo_id, tipo_movimiento, tipo_movimiento_id, cantidad,
-       CAST(COALESCE(LAG(stock_resultante) OVER (
-              PARTITION BY usuario_externo_id ORDER BY fecha_id, movimiento_id), 0) AS DECIMAL(15,2)) AS stock_anterior,
-       CAST(stock_resultante AS DECIMAL(15,2)) AS stock_resultante
-FROM w
-""",
-        "fact_transacciones": _JOURNAL_SQL,
-        "fact_balance": f"""
-WITH journal AS ({_JOURNAL_SQL}),
-rolled AS (
-  SELECT periodo_id, cuenta_id,
-         SUM(CASE WHEN tipo_movimiento = 'DEBITO' THEN monto ELSE 0 END) AS debitos,
-         SUM(CASE WHEN tipo_movimiento = 'CREDITO' THEN monto ELSE 0 END) AS creditos
-  FROM journal GROUP BY periodo_id, cuenta_id
-), signed AS (
-  SELECT *, CASE WHEN cuenta_id IN (2102, 4101) THEN creditos - debitos
-                 ELSE debitos - creditos END AS movimiento_neto
-  FROM rolled
-), run AS (
-  SELECT *, SUM(movimiento_neto) OVER (
-           PARTITION BY cuenta_id ORDER BY periodo_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS saldo_final
-  FROM signed
-)
-SELECT periodo_id, cuenta_id,
-       CAST(debitos AS DECIMAL(15,2)) AS debitos,
-       CAST(creditos AS DECIMAL(15,2)) AS creditos,
-       CAST(movimiento_neto AS DECIMAL(15,2)) AS movimiento_neto,
-       CAST(COALESCE(LAG(saldo_final) OVER (PARTITION BY cuenta_id ORDER BY periodo_id), 0) AS DECIMAL(15,2)) AS saldo_inicial,
-       CAST(saldo_final AS DECIMAL(15,2)) AS saldo_final
-FROM run
-""",
-        "fact_estado_resultados": f"""
-WITH journal AS ({_JOURNAL_SQL}),
-classified AS (
-  SELECT *, CASE substr(CAST(cuenta_id AS VARCHAR), 1, 1)
-              WHEN '4' THEN 'ingreso' WHEN '5' THEN 'costo' WHEN '6' THEN 'gasto' END AS tipo_cuenta
-  FROM journal
-  WHERE substr(CAST(cuenta_id AS VARCHAR), 1, 1) IN ('4', '5', '6')
-), signed AS (
-  SELECT *, CASE WHEN tipo_cuenta = 'ingreso'
-                 THEN CASE WHEN tipo_movimiento = 'CREDITO' THEN monto ELSE -monto END
-                 ELSE CASE WHEN tipo_movimiento = 'DEBITO' THEN monto ELSE -monto END
-            END AS monto_clasificado
-  FROM classified
-), pivoted AS (
-  SELECT periodo_id,
-         SUM(CASE WHEN tipo_cuenta = 'ingreso' THEN monto_clasificado ELSE 0 END) AS ingresos,
-         SUM(CASE WHEN tipo_cuenta = 'costo' THEN monto_clasificado ELSE 0 END) AS costos,
-         SUM(CASE WHEN tipo_cuenta = 'gasto' THEN monto_clasificado ELSE 0 END) AS gastos
-  FROM signed GROUP BY periodo_id
-)
-SELECT periodo_id,
-       CAST(ingresos AS DECIMAL(15,2)) AS ingresos,
-       CAST(costos AS DECIMAL(15,2)) AS costos,
-       CAST(gastos AS DECIMAL(15,2)) AS gastos,
-       CAST(ingresos - costos AS DECIMAL(15,2)) AS utilidad_bruta,
-       CAST(ingresos - costos - gastos AS DECIMAL(15,2)) AS utilidad_neta
-FROM pivoted
-WHERE ingresos <> 0 OR costos <> 0 OR gastos <> 0
-""",
-        "star_revenue_by_pais_trimestre": f"""
-WITH fv AS ({_FACT_VENTAS_SQL}),
-dc AS (
-  SELECT CAST(1 AS INT) AS cliente_id, 'Sin País' AS pais
-  UNION ALL
-  SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY c_custkey) AS INT), COALESCE(n_name, 'Sin País')
-  FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-)
-SELECT CAST(FLOOR(fv.fecha_id / 10000) AS INT) AS anio,
-       CAST(FLOOR((FLOOR(fv.fecha_id / 100) % 100 - 1) / 3) + 1 AS INT) AS trimestre,
-       dc.pais,
-       CAST(SUM(fv.subtotal) AS DECIMAL(18,2)) AS ventas_netas,
-       CAST(SUM(fv.margen) AS DECIMAL(18,2)) AS margen_total,
-       COUNT(*) AS n_lineas,
-       COUNT(DISTINCT fv.orden_id) AS n_ordenes
-FROM fv JOIN dc ON fv.cliente_id = dc.cliente_id
-GROUP BY 1, 2, 3
-""",
-        "ventas_daily_summary": f"""
-WITH fact_ventas AS ({_FACT_VENTAS_SQL})
-SELECT fecha_id,
-       CAST(SUM(subtotal) AS DECIMAL(18,2)) AS subtotal_total,
-       CAST(SUM(descuento) AS DECIMAL(18,2)) AS descuento_total,
-       COUNT(*) AS n_lineas,
-       COUNT(DISTINCT orden_id) AS n_ordenes
-FROM fact_ventas GROUP BY fecha_id
-""",
-        "lineitem_pricing_summary": f"""
-WITH agg AS (
-  SELECT l_returnflag, l_linestatus,
-         CAST(SUM({_r2("l_quantity")}) AS DECIMAL(18,2)) AS sum_qty,
-         CAST(SUM({_r2("l_extendedprice")}) AS DECIMAL(18,2)) AS sum_base_price,
-         CAST(SUM({_r2("l_extendedprice * (1 - l_discount)")}) AS DECIMAL(18,2)) AS sum_disc_price,
-         CAST(SUM({_r2("l_extendedprice * (1 - l_discount) * (1 + l_tax)")}) AS DECIMAL(18,2)) AS sum_charge,
-         COUNT(*) AS n_rows
-  FROM lineitem
-  WHERE l_shipdate <= TIMESTAMP '2000-12-31 00:00:00'
-  GROUP BY l_returnflag, l_linestatus
-)
-SELECT *, {_r2("CAST(sum_qty AS DOUBLE) / n_rows")} AS avg_qty,
-       {_r2("CAST(sum_base_price AS DOUBLE) / n_rows")} AS avg_price
-FROM agg
-""",
-        "discount_order_rollup": f"""
-WITH per_order AS (
-  SELECT l_orderkey, CAST(SUM({_r2("l_extendedprice * l_discount")}) AS DECIMAL(18,2)) AS descuento_total
-  FROM lineitem GROUP BY l_orderkey
-)
-SELECT o_orderkey AS orden_id, {_r2("o_totalprice")} AS total,
-       COALESCE(descuento_total, CAST(0 AS DECIMAL(18,2))) AS descuento_total
-FROM orders LEFT JOIN per_order ON o_orderkey = l_orderkey
-""",
-        "top_discount_line_per_order": f"""
-SELECT l_orderkey AS orden_id, l_linenumber AS linea, l_partkey AS producto_externo_id,
-       {_r2("l_extendedprice * l_discount")} AS descuento
-FROM lineitem
-QUALIFY ROW_NUMBER() OVER (
-  PARTITION BY l_orderkey
-  ORDER BY {_r2("l_extendedprice * l_discount")} DESC, l_linenumber, l_partkey, l_suppkey,
-           l_extendedprice, l_shipdate
-) = 1
-""",
-        "dup_grain_check": """
-SELECT l_orderkey AS orden_id, l_linenumber AS linea, COUNT(*) AS n
-FROM lineitem GROUP BY l_orderkey, l_linenumber HAVING COUNT(*) > 1
-""",
-        "dedup_lineitem": f"""
-SELECT l_orderkey AS orden_id, l_linenumber AS linea, l_partkey AS producto_externo_id,
-       {_r2("l_quantity")} AS cantidad, {_r2("l_extendedprice")} AS precio
-FROM lineitem
-QUALIFY ROW_NUMBER() OVER (
-  PARTITION BY l_orderkey, l_linenumber
-  ORDER BY l_partkey, l_suppkey, l_quantity, l_extendedprice, l_discount, l_tax,
-           l_returnflag, l_linestatus, l_shipdate
-) = 1
-""",
-        "fk_orphan_check": """
-SELECT 'lineitem.l_partkey->part' AS fk,
-       (SELECT COUNT(*) FROM lineitem WHERE l_partkey IS NOT NULL
-         AND l_partkey NOT IN (SELECT p_partkey FROM part)) AS orphans
-UNION ALL
-SELECT 'lineitem.l_suppkey->supplier',
-       (SELECT COUNT(*) FROM lineitem WHERE l_suppkey IS NOT NULL
-         AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier))
-UNION ALL
-SELECT 'orders.o_custkey->customer',
-       (SELECT COUNT(*) FROM orders WHERE o_custkey IS NOT NULL
-         AND o_custkey NOT IN (SELECT c_custkey FROM customer))
-""",
-        "events_tumbling_window": f"""
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type, COUNT(*) AS n_events,
-       CAST(SUM({_r2("value")}) AS DECIMAL(18,2)) AS total_value
-FROM events GROUP BY 1, 2
-""",
-        "events_json_stats": """
-WITH e AS (SELECT event_type, CAST(json_extract_string(props, '$.k') AS INT) AS k FROM events)
-SELECT event_type, COUNT(*) AS n, CAST(SUM(k) AS BIGINT) AS sum_k,
-       MIN(k) AS min_k, MAX(k) AS max_k
-FROM e GROUP BY event_type
-""",
-        "scalar_showcase": """
-SELECT p_partkey,
-       'PRD-' || lpad(CAST(p_partkey AS VARCHAR), 8, '0') AS codigo,
-       string_split(p_name, ' ')[1] AS primera_palabra,
-       CAST(regexp_extract(p_brand, '(\\d+)', 1) AS INT) AS marca_num,
-       contains(upper(p_type), 'BRASS') AS es_brass,
-       upper(trim(p_type)) AS tipo_norm,
-       CASE WHEN p_size >= 30 THEN 'grande' WHEN p_size >= 15 THEN 'mediano' ELSE 'pequeño' END AS clase_talla,
-       'P' || lpad(CAST(p_partkey AS VARCHAR), 7, '0') AS codigo_fmt
-FROM part
-""",
-        "dim_orden": f"""
-SELECT o_orderkey AS orden_id,
-       'ORD-' || CAST(o_orderkey AS VARCHAR) AS numero_orden,
-       CAST(strftime(o_orderdate, '%Y%m%d') AS INT) AS fecha_id,
-       CASE o_orderstatus WHEN 'O' THEN 'abierta' WHEN 'F' THEN 'completada'
-            WHEN 'P' THEN 'pendiente' ELSE 'desconocido' END AS estado,
-       CAST(regexp_extract(o_orderpriority, '(\\d+)', 1) AS INT) AS prioridad_nivel,
-       COALESCE(NULLIF(TRIM(string_split(o_orderpriority, '-')[2]), ''), 'SIN PRIORIDAD') AS prioridad,
-       'USD' AS moneda,
-       {_r2("o_totalprice")} AS total
-FROM orders
-""",
-        "dim_categoria_producto": """
-SELECT CAST(1 AS INT) AS categoria_id, 'Sin Categoría' AS nombre, FALSE AS activa
-UNION ALL
-SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY nombre) AS INT), nombre, TRUE
-FROM (SELECT DISTINCT p_type AS nombre FROM part WHERE p_type IS NOT NULL)
-""",
-        "dim_periodo_contable": """
-WITH months AS (
-  SELECT CAST(unnest(generate_series(DATE '1995-01-01', DATE '2005-12-01', INTERVAL 1 MONTH)) AS DATE) AS inicio
-)
-SELECT CAST(strftime(inicio, '%Y%m') AS INT) AS periodo_id,
-       CAST(year(inicio) AS INT) AS anio, CAST(month(inicio) AS INT) AS mes,
-       inicio AS fecha_inicio, last_day(inicio) AS fecha_fin,
-       CAST(day(last_day(inicio)) AS INT) AS dias_en_mes,
-       CAST(FLOOR((month(inicio) - 1) / 3) + 1 AS INT) AS trimestre
-FROM months
-""",
-        "dim_tipo_movimiento": """
-SELECT * FROM (VALUES
-  (CAST(1 AS INT), 'SIN_MOV', 'Sin Tipo', 'na', 'na', FALSE),
-  (2, 'MOV_ENTRADA', 'Entrada por Compra', 'entrada', 'suma', TRUE),
-  (3, 'MOV_SALIDA_VENTA', 'Salida por Venta', 'salida', 'resta', TRUE),
-  (4, 'MOV_AJUSTE_POS', 'Ajuste Positivo', 'ajuste', 'suma', TRUE),
-  (5, 'MOV_AJUSTE_NEG', 'Ajuste Negativo', 'ajuste', 'resta', TRUE),
-  (6, 'MOV_DEVOLUCION', 'Devolución de Cliente', 'entrada', 'suma', TRUE),
-  (7, 'MOV_TRASLADO_IN', 'Traslado Entrada', 'traslado', 'suma', TRUE),
-  (8, 'MOV_TRASLADO_OUT', 'Traslado Salida', 'traslado', 'resta', TRUE),
-  (9, 'MOV_MERMA', 'Merma', 'salida', 'resta', TRUE),
-  (10, 'MOV_INICIAL', 'Inventario Inicial', 'entrada', 'suma', TRUE)
-) AS t(tipo_movimiento_id, codigo, nombre, categoria, afecta_stock, activo)
-""",
-        "dim_centro_costo": """
-SELECT * FROM (VALUES
-  (CAST(1 AS INT), 'SIN_CC', 'Sin Centro', 'na', FALSE),
-  (2, 'CC_TIENDA_01', 'Tienda Centro Comercial Metrocentro', 'ventas', TRUE),
-  (3, 'CC_TIENDA_02', 'Tienda Plaza Mundo', 'ventas', TRUE),
-  (4, 'CC_ONLINE', 'Canal Digital', 'ventas', TRUE),
-  (5, 'CC_BODEGA', 'Bodega Central', 'logistica', TRUE),
-  (6, 'CC_ADMIN', 'Administración', 'administracion', TRUE)
-) AS t(centro_costo_id, codigo, nombre, tipo_centro, activo)
-""",
-        "dim_tipo_transaccion": """
-SELECT *, contains(upper(codigo), 'VENTA') AS es_venta FROM (VALUES
-  (CAST(1 AS INT), 'SIN_TRX', 'Sin Tipo', 'na', FALSE),
-  (2, 'TRX_VENTA', 'Registro de Venta', 'ingreso', TRUE),
-  (3, 'TRX_COMPRA', 'Registro de Compra', 'egreso', TRUE),
-  (4, 'TRX_PAGO', 'Pago a Proveedor', 'egreso', TRUE),
-  (5, 'TRX_COBRO', 'Cobro a Cliente', 'ingreso', TRUE),
-  (6, 'TRX_AJUSTE', 'Ajuste Contable', 'ajuste', TRUE)
-) AS t(tipo_transaccion_id, codigo, nombre, categoria, activo)
-""",
-        "dim_impuestos": f"""
-SELECT * FROM (VALUES
-  (CAST(1 AS INT), 'IVA', 'Impuesto al Valor Agregado', CAST({_r2("13.00")} AS DECIMAL(5,2)), TRUE),
-  (2, 'RENTA', 'Retención de Renta', CAST({_r2("10.00")} AS DECIMAL(5,2)), TRUE),
-  (3, 'EXENTO', 'Exento de Impuestos', CAST({_r2("0.00")} AS DECIMAL(5,2)), TRUE)
-) AS t(impuesto_id, codigo, nombre, tasa, activo)
-""",
-        "dim_estado_orden": """
-SELECT * FROM (VALUES
-  (CAST(1 AS INT), 'open', 'Abierta', 1, FALSE),
-  (2, 'processing', 'En Proceso', 2, FALSE),
-  (3, 'shipped', 'Enviada', 3, FALSE),
-  (4, 'delivered', 'Entregada', 4, TRUE),
-  (5, 'cancelled', 'Cancelada', 5, TRUE)
-) AS t(estado_orden_id, codigo_estado, nombre_estado, orden_flujo, es_estado_final)
-""",
-        "dim_envio": f"""
-SELECT envio_id, codigo, metodo_envio, tiempo_entrega,
-       CAST(regexp_extract(tiempo_entrega, '(\\d+)', 1) AS INT) AS dias_entrega_min,
-       {_r2("costo_raw")} AS costo
-FROM (VALUES
-  (CAST(1 AS INT), 'ENV001', 'Entrega Express', '1-2 días hábiles', 5.99),
-  (2, 'ENV002', 'Entrega Estándar', '3-5 días hábiles', 2.99),
-  (3, 'ENV003', 'Entrega Económica', '5-7 días hábiles', 0.99),
-  (4, 'ENV004', 'Retiro en Tienda', '0 días', 0.00)
-) AS t(envio_id, codigo, metodo_envio, tiempo_entrega, costo_raw)
-""",
-        "dim_direccion": """
-SELECT CAST(ROW_NUMBER() OVER (ORDER BY c_custkey) AS INT) AS direccion_id,
-       c_custkey AS cliente_externo_id,
-       'Calle ' || CAST(c_custkey AS VARCHAR) AS calle,
-       COALESCE(n_name, 'Sin Ciudad') AS ciudad,
-       COALESCE(r_name, 'Sin Región') AS region,
-       concat_ws(', ', 'Calle ' || CAST(c_custkey AS VARCHAR),
-                 COALESCE(n_name, 'Sin Ciudad'), COALESCE(r_name, 'Sin Región')) AS direccion_completa
-FROM customer
-LEFT JOIN nation ON c_nationkey = n_nationkey
-LEFT JOIN region ON n_regionkey = r_regionkey
-""",
-        "dim_detalle_venta": """
-WITH ded AS (
-  SELECT * FROM lineitem
-  QUALIFY ROW_NUMBER() OVER (
-    PARTITION BY l_orderkey, l_linenumber
-    ORDER BY l_partkey, l_suppkey, l_quantity, l_extendedprice, l_discount, l_tax,
-             l_returnflag, l_linestatus, l_shipdate
-  ) = 1
-)
-SELECT l_orderkey * 10 + l_linenumber AS detalle_id,
-       l_orderkey AS orden_id, l_linenumber AS linea,
-       'SKU-' || lpad(CAST(l_partkey AS VARCHAR), 8, '0') AS codigo,
-       COALESCE(NULLIF(TRIM(p_name), ''), 'Detalle ' || CAST(l_partkey AS VARCHAR)) AS descripcion
-FROM ded LEFT JOIN part ON l_partkey = p_partkey
-""",
-        "dim_canal": """
-SELECT * FROM (VALUES
-  (CAST(1 AS INT), 'SIN_CANAL', 'Sin Canal', 'na', FALSE),
-  (2, 'WEB', 'Tienda en Línea', 'online', TRUE),
-  (3, 'TIENDA', 'Tienda Física', 'retail', TRUE),
-  (4, 'DISTRIBUIDOR', 'Canal Mayorista', 'wholesale', TRUE),
-  (5, 'TELEFONO', 'Ventas Telefónicas', 'direct', TRUE)
-) AS t(canal_id, codigo, nombre, tipo, activo)
-""",
-        "dim_estado_pago": """
-SELECT * FROM (VALUES
-  (CAST(1 AS INT), 'pending', 'Pendiente', FALSE),
-  (2, 'authorized', 'Autorizado', FALSE),
-  (3, 'paid_partially', 'Pago Parcial', FALSE),
-  (4, 'paid_in_full', 'Pagado', TRUE),
-  (5, 'refunded', 'Reembolsado', TRUE),
-  (6, 'declined', 'Rechazado', TRUE)
-) AS t(estado_pago_id, codigo, nombre, es_final)
-""",
-        "dim_pago": """
-SELECT * FROM (VALUES
-  (CAST(1 AS INT), 'EFECTIVO', 'Efectivo', FALSE, 0),
-  (2, 'TARJETA_CREDITO', 'Tarjeta de Crédito', TRUE, 2),
-  (3, 'TARJETA_DEBITO', 'Tarjeta de Débito', TRUE, 1),
-  (4, 'TRANSFERENCIA', 'Transferencia Bancaria', TRUE, 3),
-  (5, 'CHEQUE', 'Cheque', TRUE, 5)
-) AS t(pago_id, metodo_pago, nombre, requiere_validacion, plazo_dias)
-""",
-        "dim_sitio_web": """
-SELECT * FROM (VALUES
-  (CAST(1 AS INT), 'PF_SV', 'puntafina.sv', 'production'),
-  (2, 'PF_STAGE', 'stage.puntafina.sv', 'staging')
-) AS t(sitio_web_id, codigo, url, entorno)
-""",
-        "sql_revenue_by_nation": _REVENUE_BY_NATION_SQL,
-        "sql_top_customer_per_nation": _TOP_CUSTOMER_PER_NATION_SQL,
-        "events_value_band_rangejoin": f"""
-WITH bands AS (
-  SELECT * FROM (VALUES
-    ('B0_50', 0.0, 50.0), ('B50_100', 50.0, 100.0),
-    ('B100_250', 100.0, 250.0), ('B250_INF', 250.0, 1e18)
-  ) AS t(band, lo, hi)
-)
-SELECT band, event_type, COUNT(*) AS n,
-       CAST(SUM({_r2("value")}) AS DECIMAL(18,2)) AS total_value
-FROM events JOIN bands ON value >= lo AND value < hi
-GROUP BY band, event_type
-""",
-        "events_sliding_window": f"""
-WITH grid AS (
-  SELECT e.*, date_trunc('hour', ts) + CASE WHEN minute(ts) >= 30 THEN INTERVAL 30 MINUTE ELSE INTERVAL 0 MINUTE END AS slot
-  FROM events e
-), expanded AS (
-  SELECT *, unnest([slot, slot - INTERVAL 30 MINUTE]) AS window_start FROM grid
-)
-SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start, event_type,
-       COUNT(*) AS n_events,
-       CAST(SUM({_r2("value")}) AS DECIMAL(18,2)) AS total_value
-FROM expanded GROUP BY window_start, event_type
-""",
-        "events_value_percentiles": """
-SELECT event_type,
-       quantile_cont(value, 0.5) AS p50,
-       quantile_cont(value, 0.9) AS p90,
-       quantile_cont(value, 0.99) AS p99,
-       COUNT(*) AS n
-FROM events GROUP BY event_type
-""",
-        "salted_revenue_by_flag": f"""
-SELECT l_returnflag,
-       CAST(SUM({_r2("l_quantity")}) AS DECIMAL(18,2)) AS sum_qty,
-       COUNT(*) AS n_rows,
-       MAX({_r2("l_extendedprice")}) AS max_price
-FROM lineitem GROUP BY l_returnflag
-""",
-        "batch_token_stats": f"""
-SELECT doc_id, CAST(len({_TOKENS}) AS BIGINT) AS n_tokens_py FROM documents
-""",
-        "asof_last_order": """
-WITH l AS (SELECT event_id, user_id, CAST(ts AS DATE) AS event_date FROM events),
-     r AS (SELECT DISTINCT o_custkey, CAST(o_orderdate AS DATE) AS o_date FROM orders)
-SELECT l.event_id, l.user_id, l.event_date, r.o_date AS last_order_date
-FROM l ASOF LEFT JOIN r ON l.user_id = r.o_custkey AND l.event_date >= r.o_date
-""",
-        "events_session_window": f"""
-WITH w1 AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN lag(epoch_us(ts)) OVER win IS NULL
-                   OR epoch_us(ts) - lag(epoch_us(ts)) OVER win >= 21600000000
-              THEN 1 ELSE 0 END AS is_new
-  FROM events
-  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id)
-), w2 AS (
-  SELECT *, SUM(is_new) OVER (
-      PARTITION BY user_id ORDER BY ts, event_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seq
-  FROM w1
-)
-SELECT user_id,
-       strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       strftime(MAX(ts) + INTERVAL 6 HOUR, '%Y-%m-%d %H:%M:%S') AS session_end,
-       COUNT(*) AS n_events,
-       CAST(SUM({_r2("value")}) AS DECIMAL(18,2)) AS total_value
-FROM w2 GROUP BY user_id, seq
-""",
-        "events_sessionized": """
-WITH w1 AS (
-  SELECT event_id, user_id, ts,
-         CASE WHEN lag(epoch_us(ts)) OVER win IS NULL
-                   OR epoch_us(ts) - lag(epoch_us(ts)) OVER win > 21600000000
-              THEN 1 ELSE 0 END AS is_new
-  FROM events
-  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id)
-), w2 AS (
-  SELECT *, CAST(SUM(is_new) OVER (
-      PARTITION BY user_id ORDER BY ts, event_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT) AS session_seq
-  FROM w1
-)
-SELECT event_id, user_id, session_seq,
-       strftime(MIN(ts) OVER (PARTITION BY user_id, session_seq), '%Y-%m-%d %H:%M:%S') AS session_start
-FROM w2
-""",
-        "order_reconciliation": f"""
-WITH a AS (
-  SELECT o_orderkey AS orden_id, CAST({_r2("o_totalprice")} AS DECIMAL(18,2)) AS total_db, 1 AS in_a
-  FROM orders
-), b AS (
-  SELECT l_orderkey AS orden_id,
-         CAST(SUM({_r2("l_extendedprice")}) AS DECIMAL(18,2)) AS total_csv, 1 AS in_b
-  FROM lineitem GROUP BY l_orderkey
-)
-SELECT COALESCE(a.orden_id, b.orden_id) AS orden_id,
-       a.total_db, b.total_csv,
-       CASE WHEN in_a IS NOT NULL AND in_b IS NOT NULL THEN 'both'
-            WHEN in_a IS NOT NULL THEN 'left_only' ELSE 'right_only' END AS presence,
-       COALESCE(a.total_db, b.total_csv) AS total,
-       CASE WHEN a.total_db IS NOT NULL AND b.total_csv IS NOT NULL
-            THEN a.total_db = b.total_csv END AS total_match
-FROM a FULL OUTER JOIN b ON a.orden_id = b.orden_id
-""",
-        "lineitem_rollup": f"""
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM({_r2("l_quantity")}) AS DECIMAL(18,2)) AS sum_qty,
-       COUNT(*) AS n_rows
-FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-""",
-        "lineitem_cube": f"""
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM({_r2("l_quantity")}) AS DECIMAL(18,2)) AS sum_qty,
-       COUNT(*) AS n_rows,
-       CAST(GROUPING(l_returnflag, l_linestatus) AS INT) AS gid
-FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-""",
-        "user_last_event": f"""
-WITH ordered AS (
-  SELECT user_id, {_r2("value")} AS v,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn_last,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS rn_first
-  FROM events
-)
-SELECT user_id, COUNT(*) AS n_events,
-       MAX(CASE WHEN rn_last = 1 THEN v END) AS last_value,
-       MAX(CASE WHEN rn_first = 1 THEN v END) AS first_value,
-       CAST(SUM(v) AS DECIMAL(18,2)) AS total_value
-FROM ordered GROUP BY user_id
-""",
-        "custkey_set_ops": """
-SELECT 'left_only' AS side,
-       (SELECT COUNT(*) FROM (SELECT DISTINCT o_custkey FROM orders
-         WHERE o_custkey NOT IN (SELECT c_custkey FROM customer))) AS n
-UNION ALL
-SELECT 'right_only',
-       (SELECT COUNT(*) FROM (SELECT DISTINCT c_custkey FROM customer
-         WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)))
-UNION ALL
-SELECT 'common',
-       (SELECT COUNT(*) FROM (SELECT DISTINCT o_custkey FROM orders
-         WHERE o_custkey IN (SELECT c_custkey FROM customer)))
-""",
-        "events_validated": """
-WITH v AS (
-  SELECT event_id,
-         CAST(COALESCE(user_id, -1) AS BIGINT) AS user_id,
-         COALESCE(event_type, 'unknown') AS event_type,
-         LEAST(GREATEST(value, 0.0), 250.0) AS value
-  FROM events
-)
-SELECT * FROM v
-QUALIFY ROW_NUMBER() OVER (PARTITION BY event_id ORDER BY user_id, event_type, value) = 1
-""",
-        "doc_text_stats": f"""
-SELECT doc_id,
-       CAST(length(text) AS INT) AS n_chars_calc,
-       CAST({n_tok} AS INT) AS n_tokens,
-       {bpe} AS n_bpe_tokens,
-       {_r6(punct_raw)} AS punct_ratio,
-       {_r6(f"CAST(len(list_filter({_TOKENS}, t -> t IN ({stop_en}))) AS DOUBLE) / greatest({n_tok}, 1)")} AS stopword_ratio,
-       {_r6(quality)} AS quality,
-       {fingerprint} AS fingerprint
-FROM documents
-""",
-        "doc_lang_id": f"""
-SELECT doc_id, lang, {lang_case} AS lang_pred FROM documents
-""",
-        "doc_exact_dedup": """
-SELECT md5(text) AS content_hash, MIN(doc_id) AS canonical_id, COUNT(*) AS n_copies
-FROM documents GROUP BY md5(text)
-""",
-        "doc_minhash_lsh": _MINHASH_PAIRS_SQL,
-        "doc_dedup_clusters": f"""
-WITH RECURSIVE pairs AS ({_MINHASH_PAIRS_SQL}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-)
-SELECT src AS doc_id, MIN(dst) AS cluster_id, (src = MIN(dst)) AS is_canonical
-FROM reach GROUP BY src
-""",
-        # round-8: quality-aware canonical per cluster — same recursive
-        # components, argmax by (quality DESC, doc_id) per cluster
-        "doc_cluster_quality_canonicals": f"""
-WITH RECURSIVE pairs AS ({_MINHASH_PAIRS_SQL}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
-clusters AS (SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src),
-q AS (SELECT doc_id, {_r6(quality)} AS quality FROM documents),
-sizes AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members FROM clusters GROUP BY cluster_id),
-best AS (
-  SELECT c.cluster_id, c.doc_id AS canonical_doc, q.quality
-  FROM clusters c JOIN q USING (doc_id)
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY c.cluster_id ORDER BY q.quality DESC, c.doc_id) = 1
-)
-SELECT b.cluster_id, b.canonical_doc, b.quality, s.n_members
-FROM best b JOIN sizes s USING (cluster_id)
-""",
-        # kept-corpus emitter: same recursive connected components, then
-        # one row per canonical doc with its cluster size (the Spark side
-        # runs the large-star/small-star variant, proven equal to label
-        # propagation by pytest and to this reachability oracle here)
-        "doc_dedup_kept": f"""
-WITH RECURSIVE pairs AS ({_MINHASH_PAIRS_SQL}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
-clusters AS (SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src),
-sizes AS (SELECT cluster_id, COUNT(*) AS n_members FROM clusters GROUP BY cluster_id)
-SELECT d.doc_id, CAST(length(d.text) AS INT) AS n_chars,
-       CAST(s.n_members AS INT) AS n_members
-FROM documents d
-JOIN clusters c ON d.doc_id = c.doc_id AND d.doc_id = c.cluster_id
-JOIN sizes s ON s.cluster_id = c.cluster_id
-""",
-        # bigram-LM surprisal: -ln p(w2|w1) per bigram occurrence, exact
-        # decimal weighted sums, LEFT JOIN keeps docs under 2 tokens
-        "doc_bigram_surprisal": f"""
-WITH toks AS (SELECT doc_id, {_TOKENS} AS ts FROM documents),
-grams AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(ts)), i -> ts[i] || ' ' || ts[i+1])) AS bg
-  FROM toks
-),
-postings AS (SELECT doc_id, bg, COUNT(*) AS tf FROM grams GROUP BY doc_id, bg),
-cbg AS (SELECT bg, SUM(tf) AS c2 FROM postings GROUP BY bg),
-cpre AS (SELECT string_split(bg, ' ')[1] AS w1, SUM(c2) AS c1 FROM cbg GROUP BY string_split(bg, ' ')[1]),
-scored AS (
-  SELECT p.doc_id, p.tf,
-         {_r6("ln(CAST(cpre.c1 AS DOUBLE) / CAST(cbg.c2 AS DOUBLE))")} AS s
-  FROM postings p JOIN cbg USING (bg)
-  JOIN cpre ON string_split(p.bg, ' ')[1] = cpre.w1
-),
-per_doc AS (SELECT doc_id, SUM(tf) AS n_bigrams, SUM(tf * s) AS ssum FROM scored GROUP BY doc_id)
-SELECT d.doc_id, CAST(COALESCE(p.n_bigrams, 0) AS INT) AS n_bigrams,
-       CAST({_r6("CAST(p.ssum AS DOUBLE) / p.n_bigrams")} AS DOUBLE) AS surprisal
-FROM (SELECT DISTINCT doc_id FROM documents) d LEFT JOIN per_doc p USING (doc_id)
-""",
-        # deterministic n-per-language sample: md5-keyed rank per stratum
-        "doc_stratified_sample": """
-SELECT doc_id, lang, CAST(rn AS INT) AS sample_rank FROM (
-  SELECT doc_id, lang,
-         ROW_NUMBER() OVER (PARTITION BY lang
-             ORDER BY md5(CAST(doc_id AS VARCHAR) || '|sample'), doc_id) AS rn
-  FROM documents
-) WHERE rn <= 20
-""",
-        # language-stratified quality cut: percent_rank is (rank-1)/(n-1)
-        # over identical round-6 quality keys on both engines
-        "doc_quality_stratified": f"""
-WITH b AS (
-  SELECT doc_id, lang, {_r6(quality)} AS quality FROM documents
-), r AS (
-  SELECT doc_id, lang, quality,
-         {_r6("percent_rank() OVER (PARTITION BY lang ORDER BY quality DESC, doc_id)")} AS pct_rank
-  FROM b
-)
-SELECT doc_id, lang, quality, pct_rank, pct_rank <= 0.5 AS keep FROM r
-""",
-        # per-language token-budget fill, best docs first (exact BIGINT
-        # cumulative sums — no float drift in the keep cutoff)
-        "doc_token_budget_mix": f"""
-WITH b AS (
-  SELECT doc_id, lang, CAST({n_tok} AS INT) AS n_tokens, {_r6(quality)} AS quality
-  FROM documents
-), c AS (
-  SELECT doc_id, lang, n_tokens, quality,
-         CAST(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY quality DESC, doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-  FROM b
-)
-SELECT doc_id, lang, n_tokens, quality, cum_tokens, cum_tokens <= 5000 AS keep FROM c
-""",
-        "doc_ngram_jaccard": f"""
-WITH sh0 AS (
-  SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM documents
-), sh AS (
-  SELECT * FROM sh0 WHERE shingle NOT IN (
-    SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) > 64)
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT id_a, id_b,
-       {_r6("CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)")} AS jaccard
-FROM common
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE {_r6("CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)")} >= 0.2
-""",
-        "doc_simhash": _SIMHASH_SQL,
-        "doc_simhash_near_dup": f"""
-WITH fp AS ({_SIMHASH_SQL}),
-banded AS (
-  SELECT doc_id, simhash, k AS band, (simhash >> (8 * CAST(k AS INT))) & 255 AS band_val
-  FROM fp CROSS JOIN range(4) t(k)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.simhash AS sh_a, b.simhash AS sh_b
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-)
-SELECT id_a, id_b, CAST(bit_count(xor(sh_a, sh_b)) AS INT) AS hamming
-FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= 2
-""",
-        "ann_brute_topk": f"""
-WITH q AS (
-  SELECT vec_id AS query_id, {_QUANT_VEC} AS qv FROM embeddings WHERE vec_id < 8
-), c AS (
-  SELECT vec_id, {_QUANT_VEC} AS cv FROM embeddings
-), scored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, {_cosine_sql("q.qv", "c.cv")} AS cosine
-  FROM q, c WHERE c.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= 5
-""",
-        "ann_ivf_topk": f"""
-WITH base AS (
-  SELECT vec_id, {_QUANT_VEC} AS cv, ({_bucket_sql(6)}) AS bucket FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, cv AS qv,
-         unnest([{", ".join(["bucket"] + [f"xor(bucket, {1 << i})" for i in range(6)])}]) AS probe
-  FROM base WHERE vec_id < 8
-), scored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, {_cosine_sql("q.qv", "c.cv")} AS cosine
-  FROM q JOIN base c ON c.bucket = q.probe AND c.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= 5
-""",
-        "emb_near_dup": f"""
-WITH p AS (
-  SELECT vec_id, {_QUANT_VEC} AS qv, ({_bucket_sql(8)}) AS bucket
-  FROM embeddings
-)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_cosine_sql("a.qv", "b.qv")} AS cosine
-FROM p a JOIN p b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE {_cosine_sql("a.qv", "b.qv")} >= 0.35
-""",
-        "dq_report": f"""
-WITH fv AS ({_FACT_VENTAS_SQL}),
-journal AS ({_JOURNAL_SQL}),
-dc AS (SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY c_custkey) AS INT) AS sk FROM customer UNION ALL SELECT 1),
-dp AS (SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY p_partkey) AS INT) AS sk FROM part UNION ALL SELECT 1),
-da AS (SELECT CAST(1 + ROW_NUMBER() OVER (ORDER BY s_suppkey) AS INT) AS sk FROM supplier UNION ALL SELECT 1)
-SELECT 'count_gt_zero' AS check, 'fact_ventas' AS target, (SELECT COUNT(*) FROM fv) AS value
-UNION ALL
-SELECT 'grain_unique', 'fact_ventas',
-       (SELECT COUNT(*) FROM (SELECT venta_id FROM fv GROUP BY venta_id HAVING COUNT(*) > 1))
-UNION ALL
-SELECT 'fk_orphans', 'fact_ventas.cliente_id',
-       (SELECT COUNT(*) FROM fv WHERE cliente_id NOT IN (SELECT sk FROM dc))
-UNION ALL
-SELECT 'fk_orphans', 'fact_ventas.producto_id',
-       (SELECT COUNT(*) FROM fv WHERE producto_id NOT IN (SELECT sk FROM dp))
-UNION ALL
-SELECT 'fk_orphans', 'fact_ventas.almacen_id',
-       (SELECT COUNT(*) FROM fv WHERE almacen_id NOT IN (SELECT sk FROM da))
-UNION ALL
-SELECT 'double_entry', 'fact_transacciones',
-       (SELECT CAST(ABS(SUM(CASE WHEN tipo_movimiento = 'DEBITO' THEN monto ELSE 0 END)
-                       - SUM(CASE WHEN tipo_movimiento = 'CREDITO' THEN monto ELSE 0 END)) * 100 AS BIGINT)
-        FROM journal)
-""",
-        "scd2_customer_segment": """
-WITH cur AS (
-  SELECT c_custkey AS cliente_key, c_mktsegment AS segmento,
-         DATE '2020-01-01' AS valid_from, DATE '9999-12-31' AS valid_to, TRUE AS is_current
-  FROM customer
-), upd AS (
-  SELECT c_custkey AS cliente_key, 'SEGMENTO_NUEVO' AS segmento FROM customer WHERE c_custkey % 10 = 0
-  UNION ALL
-  SELECT c_custkey + 1000000, 'NUEVO' FROM customer WHERE c_custkey % 97 = 0
-)
-SELECT c.cliente_key, c.segmento, c.valid_from, c.valid_to, c.is_current
-FROM cur c LEFT JOIN upd u ON c.cliente_key = u.cliente_key
-WHERE u.cliente_key IS NULL OR c.segmento IS NOT DISTINCT FROM u.segmento
-UNION ALL
-SELECT c.cliente_key, c.segmento, c.valid_from, DATE '2024-06-01', FALSE
-FROM cur c JOIN upd u ON c.cliente_key = u.cliente_key
-WHERE c.segmento IS DISTINCT FROM u.segmento
-UNION ALL
-SELECT c.cliente_key, u.segmento, DATE '2024-06-01', DATE '9999-12-31', TRUE
-FROM cur c JOIN upd u ON c.cliente_key = u.cliente_key
-WHERE c.segmento IS DISTINCT FROM u.segmento
-UNION ALL
-SELECT u.cliente_key, u.segmento, DATE '2024-06-01', DATE '9999-12-31', TRUE
-FROM upd u WHERE u.cliente_key NOT IN (SELECT cliente_key FROM cur)
-""",
-        "corpus_term_freq": f"""
-WITH t AS (SELECT unnest({_TOKENS}) AS term FROM documents),
-f AS (SELECT term, COUNT(*) AS freq FROM t GROUP BY term)
-SELECT term, freq, CAST(ROW_NUMBER() OVER (ORDER BY freq DESC, term) AS INT) AS rank
-FROM f QUALIFY rank <= 20
-""",
-        "doc_top_terms": f"""
-WITH toks AS (SELECT doc_id, unnest({_TOKENS}) AS term FROM documents),
-tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-n AS (SELECT COUNT(*) AS n_docs FROM documents),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf, df.df,
-         {_r6("tf.tf * n.n_docs / df.df")} AS salience
-  FROM tf JOIN df USING (term) CROSS JOIN n
-  WHERE tf.doc_id < 20
-)
-SELECT doc_id, term, tf, df, salience, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY salience DESC, term) AS rank
-  FROM scored
-) WHERE rank <= 5
-""",
-        "emb_label_centroids": f"""
-WITH q AS (
-  SELECT label, i - 1 AS pos, ({_QUANT_VEC})[i] AS qv
-  FROM embeddings CROSS JOIN range(1, 65) t(i)
-)
-SELECT label, CAST(pos AS INT) AS pos, COUNT(*) AS n,
-       {_r6("CAST(SUM(qv) AS DOUBLE) / COUNT(*) / 1000.0")} AS centroid
-FROM q GROUP BY label, pos
-""",
-        "media_features": """
-SELECT doc_id AS asset_id, 'image' AS modality,
-       CAST(strlen(text) AS BIGINT) AS n_bytes,
-       CAST(CASE WHEN strlen(text) >= 4
-                 THEN ascii(substr(text, 1, 1)) * 16777216 + ascii(substr(text, 2, 1)) * 65536
-                      + ascii(substr(text, 3, 1)) * 256 + ascii(substr(text, 4, 1))
-                 ELSE 0 END AS BIGINT) AS header_word,
-       CAST(list_sum(list_transform(string_split(text, ''), ch -> CAST(ascii(ch) AS BIGINT))) % 1000000007 AS BIGINT) AS checksum
-FROM documents
-""",
-        "customer_balance_quartiles": f"""
-WITH q AS (
-  SELECT c_acctbal, NTILE(4) OVER (ORDER BY c_acctbal, c_custkey) AS cuartil FROM customer
-)
-SELECT CAST(cuartil AS INT) AS cuartil, COUNT(*) AS n,
-       CAST(SUM({_r2("c_acctbal")}) AS DECIMAL(18,2)) AS saldo_total,
-       MIN({_r2("c_acctbal")}) AS saldo_min,
-       MAX({_r2("c_acctbal")}) AS saldo_max
-FROM q GROUP BY cuartil
-""",
-        "events_value_stats": f"""
-WITH agg AS (
-  SELECT event_type, COUNT(*) AS n,
-         CAST(SUM({_r2("value")}) AS DECIMAL(20,2)) AS sum_x,
-         CAST(SUM(CAST({_r2("value")} * {_r2("value")} AS DECIMAL(25,4))) AS DECIMAL(25,4)) AS sum_x2
-  FROM events GROUP BY event_type
-)
-SELECT event_type, n,
-       {_r6("CAST(sum_x AS DOUBLE) / n")} AS media,
-       {_r6("sqrt((CAST(sum_x2 AS DOUBLE) - CAST(sum_x AS DOUBLE) * CAST(sum_x AS DOUBLE) / n) / (n - 1))")} AS desv_estandar
-FROM agg
-""",
-        "approx_distinct_parts": """
-SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS exact_parts, TRUE AS approx_within_5pct
-FROM lineitem GROUP BY l_returnflag
-""",
-    }
-
-    o["semantic_near_dup_crosscheck"] = f"""
-WITH epairs AS ({o["emb_near_dup"]}),
-sh AS (
-  SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM documents
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id
-), common AS (
-  SELECT e.id_a, e.id_b, COUNT(*) AS common
-  FROM epairs e
-  JOIN sh a ON a.doc_id = e.id_a
-  JOIN sh b ON b.doc_id = e.id_b AND b.shingle = a.shingle
-  GROUP BY e.id_a, e.id_b
-), j AS (
-  SELECT c.id_a, c.id_b,
-         {_r6("CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)")} AS jaccard
-  FROM common c
-  JOIN sizes sa ON sa.doc_id = c.id_a
-  JOIN sizes sb ON sb.doc_id = c.id_b
-)
-SELECT e.id_a, e.id_b, e.cosine,
-       COALESCE(j.jaccard, CAST(0 AS DECIMAL(12,6))) AS jaccard
-FROM epairs e LEFT JOIN j ON e.id_a = j.id_a AND e.id_b = j.id_b
-"""
-
-    o["doc_contamination"] = f"""
-WITH tagged AS (
-  SELECT doc_id, text,
-         CASE WHEN ({fingerprint}) % 10 < 8 THEN 'train' ELSE 'eval' END AS split
-  FROM documents
-), sh0 AS (
-  SELECT doc_id, split, unnest({_SHINGLES}) AS shingle FROM tagged
-), sh AS (
-  SELECT * FROM sh0 WHERE shingle NOT IN (
-    SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) > 64)
-)
-SELECT t.doc_id AS test_id, tr.doc_id AS train_id, COUNT(*) AS n_shared
-FROM sh t JOIN sh tr ON t.shingle = tr.shingle AND t.split = 'eval' AND tr.split = 'train'
-GROUP BY t.doc_id, tr.doc_id
-HAVING COUNT(*) >= 3
-"""
-
-    o["doc_lang_resample"] = f"""
-WITH b AS (
-  SELECT doc_id, lang, CAST(({fingerprint}) % 1000 AS INT) AS mille FROM documents
-)
-SELECT doc_id, lang, mille,
-       mille < (CASE lang WHEN 'en' THEN 1000 WHEN 'es' THEN 500
-                          WHEN 'fr' THEN 250 WHEN 'de' THEN 250 ELSE 100 END) AS keep
-FROM b
-"""
-
-    o["customer_snapshot_diff"] = """
-WITH oldt AS (SELECT c_custkey, c_mktsegment FROM customer),
-newt AS (
-  SELECT c_custkey,
-         CASE WHEN c_custkey % 10 = 0 THEN 'SEGMENTO_NUEVO' ELSE c_mktsegment END AS c_mktsegment
-  FROM customer WHERE c_custkey % 13 <> 0
-  UNION ALL
-  SELECT c_custkey + 1000000, 'NUEVO' FROM customer WHERE c_custkey % 97 = 0
-)
-SELECT COALESCE(o.c_custkey, n.c_custkey) AS c_custkey,
-       CASE WHEN o.c_custkey IS NULL THEN 'inserted'
-            WHEN n.c_custkey IS NULL THEN 'deleted'
-            WHEN o.c_mktsegment IS DISTINCT FROM n.c_mktsegment THEN 'updated'
-            ELSE 'unchanged' END AS change_type
-FROM oldt o FULL OUTER JOIN newt n ON o.c_custkey = n.c_custkey
-"""
-
-    o["doc_split_assignment"] = f"""
-WITH b AS (SELECT doc_id, CAST(({fingerprint}) % 10 AS INT) AS bucket FROM documents)
-SELECT doc_id, bucket,
-       CASE WHEN bucket < 8 THEN 'train' WHEN bucket = 8 THEN 'val' ELSE 'test' END AS split
-FROM b
-"""
-
-    # leakage-safe split: the reachability-closure clusters (the
-    # doc_dedup_clusters oracle) + an 80/10/10 bucket hashed from the
-    # CLUSTER id — every member of a near-dup family inherits one side
-    o["doc_leakage_safe_split"] = f"""
-WITH RECURSIVE pairs AS ({_MINHASH_PAIRS_SQL}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
-clusters AS (SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src),
-b AS (
-  SELECT doc_id, cluster_id,
-         CAST(({_hex13("md5(CAST(cluster_id AS VARCHAR) || '|leak')")}) % 10 AS INT) AS bucket
-  FROM clusters
-)
-SELECT doc_id, cluster_id, bucket,
-       CASE WHEN bucket < 8 THEN 'train' WHEN bucket = 8 THEN 'val' ELSE 'test' END AS split
-FROM b
-"""
-
-    # contamination under both split schemes: LSH cross-boundary pairs
-    # (structurally zero for the cluster scheme) + the ≥3-shared-shingle
-    # screen, re-using the reachability-closure clusters chain
-    o["doc_contamination_safe_split"] = f"""
-WITH RECURSIVE pairs AS ({_MINHASH_PAIRS_SQL}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
-clusters AS (SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src),
-hash_split AS (
-  SELECT doc_id, ({fingerprint}) % 10 < 8 AS is_train FROM documents
-),
-safe_split AS (
-  SELECT doc_id,
-         ({_hex13("md5(CAST(cluster_id AS VARCHAR) || '|leak')")}) % 10 < 8 AS is_train
-  FROM clusters
-),
-sh0 AS (SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM documents),
-sh AS (
-  SELECT * FROM sh0 WHERE shingle NOT IN (
-    SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) > 64)
-),
-lsh_h AS (
-  SELECT COUNT(*) AS n FROM pairs p
-  JOIN hash_split a ON p.id_a = a.doc_id
-  JOIN hash_split b ON p.id_b = b.doc_id
-  WHERE a.is_train <> b.is_train
-),
-lsh_c AS (
-  SELECT COUNT(*) AS n FROM pairs p
-  JOIN safe_split a ON p.id_a = a.doc_id
-  JOIN safe_split b ON p.id_b = b.doc_id
-  WHERE a.is_train <> b.is_train
-),
-con_h AS (
-  SELECT COUNT(*) AS n FROM (
-    SELECT t.doc_id, tr.doc_id AS train_id FROM sh t
-    JOIN hash_split st ON t.doc_id = st.doc_id AND NOT st.is_train
-    JOIN sh tr ON t.shingle = tr.shingle
-    JOIN hash_split srt ON tr.doc_id = srt.doc_id AND srt.is_train
-    GROUP BY t.doc_id, tr.doc_id HAVING COUNT(*) >= 3)
-),
-con_c AS (
-  SELECT COUNT(*) AS n FROM (
-    SELECT t.doc_id, tr.doc_id AS train_id FROM sh t
-    JOIN safe_split st ON t.doc_id = st.doc_id AND NOT st.is_train
-    JOIN sh tr ON t.shingle = tr.shingle
-    JOIN safe_split srt ON tr.doc_id = srt.doc_id AND srt.is_train
-    GROUP BY t.doc_id, tr.doc_id HAVING COUNT(*) >= 3)
-)
-SELECT 'hash' AS scheme,
-       (SELECT n FROM lsh_h) AS n_cross_lsh_pairs,
-       (SELECT n FROM con_h) AS n_contam_pairs
-UNION ALL
-SELECT 'cluster' AS scheme,
-       (SELECT n FROM lsh_c) AS n_cross_lsh_pairs,
-       (SELECT n FROM con_c) AS n_contam_pairs
-"""
-
-    # full-batch logistic-regression GD replayed as an unrolled CTE chain —
-    # the oracle twin of operators/classify.logistic_regression_gd: per-row
-    # dot product + sigmoid in deterministic IEEE doubles, sigmoid and
-    # log-loss round-9'd into DECIMAL(18,9) the moment they exist, every
-    # cross-row SUM exact decimal, weight updates re-rounded to 9 decimals
-    _r9 = "CAST(FLOOR(({e}) * 1000000000 + 0.5) / 1000000000 AS DECIMAL(18,9))"
-    _swr6 = (
-        f"CAST(FLOOR((CAST(len(list_filter({_TOKENS}, t -> t IN ({stop_en}))) AS DOUBLE)"
-        f" / greatest(len({_TOKENS}), 1)) * 1000000 + 0.5) / 1000000 AS DECIMAL(12,6))"
-    )
-    _punct6 = f"CAST(FLOOR(({punct_raw}) * 1000000 + 0.5) / 1000000 AS DECIMAL(12,6))"
-    _q6 = f"CAST(FLOOR(({quality}) * 1000000 + 0.5) / 1000000 AS DECIMAL(12,6))"
-    _lrfeat = ["sw", "punct", "q"]
-    _wall = ["w_bias"] + [f"w_{c}" for c in _lrfeat]
-    _lrp = [
-        f"WITH feat AS (SELECT {_swr6} AS sw, {_punct6} AS punct, {_q6} AS q, "
-        "CAST(lang = 'en' AS INT) AS y FROM documents)",
-        "w0 AS (SELECT "
-        + ", ".join(f"CAST(0 AS DECIMAL(18,9)) AS {w}" for w in _wall)
-        + ")",
-    ]
-    for _i in range(8):
-        _z = "CAST(w_bias AS DOUBLE)" + "".join(
-            f" + CAST(w_{c} AS DOUBLE) * CAST({c} AS DOUBLE)" for c in _lrfeat
-        )
-        _s = _r9.format(e=f"CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-({_z})))")
-        _scl = "least(greatest(CAST(s AS DOUBLE), 1e-9), CAST(1 AS DOUBLE) - 1e-9)"
-        _ll = _r9.format(e=f"-(y * ln({_scl}) + (1 - y) * ln(CAST(1 AS DOUBLE) - {_scl}))")
-        _lrp.append(f"s{_i} AS (SELECT f.*, w.*, {_s} AS s FROM feat f CROSS JOIN w{_i} w)")
-        _gsel = ["COUNT(*) AS n", f"SUM({_ll}) AS lsum", "SUM(s - y) AS g_bias"]
-        _gsel += [f"SUM((s - y) * {c}) AS g_{c}" for c in _lrfeat]
-        _gsel += [f"MIN({w}) AS {w}" for w in _wall]
-        _lrp.append(f"g{_i} AS (SELECT " + ", ".join(_gsel) + f" FROM s{_i})")
-        _loss = _r9.format(e="CAST(lsum AS DOUBLE) / n")
-        _lrp.append(
-            f"r{_i} AS (SELECT CAST({_i} AS INT) AS iter, CAST({_loss} AS DOUBLE) AS loss, "
-            + ", ".join(f"CAST({w} AS DOUBLE) AS {w}" for w in _wall)
-            + f" FROM g{_i})"
-        )
-        _wsel = ", ".join(
-            _r9.format(
-                e=f"CAST({w} AS DOUBLE) - CAST(0.5 AS DOUBLE) * (CAST(g_{g} AS DOUBLE) / n)"
-            )
-            + f" AS {w}"
-            for w, g in zip(_wall, ["bias"] + _lrfeat)
-        )
-        _lrp.append(f"w{_i + 1} AS (SELECT {_wsel} FROM g{_i})")
-    o["doc_quality_logreg"] = (
-        ",\n".join(_lrp)
-        + "\n"
-        + " UNION ALL ".join(f"SELECT * FROM r{_i}" for _i in range(8))
-        + "\nORDER BY iter"
-    )
-
-    # multinomial NB with Laplace add-one smoothing, trained on the
-    # fingerprint train split, argmax-scored on the held-out split — the
-    # identical formula to operators/classify.py: every ln round-6'd into
-    # DECIMAL(12,6) before the exact decimal per-doc sum; ties by class asc
-    _nbr6 = "CAST(FLOOR(({e}) * 1000000 + 0.5) / 1000000 AS DECIMAL(12,6))"
-    o["doc_nb_lang_classifier"] = f"""
-WITH lab AS (SELECT doc_id, text, lang, ({fingerprint}) % 10 AS b FROM documents),
-tr AS (SELECT * FROM lab WHERE b < 8 AND lang IS NOT NULL),
-te AS (SELECT * FROM lab WHERE b >= 8),
-cond AS (
-  SELECT lang AS y, term, COUNT(*) AS c
-  FROM (SELECT lang, unnest({_TOKENS}) AS term FROM tr)
-  GROUP BY lang, term
-),
-tots AS (SELECT y, SUM(c) AS tot FROM cond GROUP BY y),
-consts AS (SELECT (SELECT COUNT(DISTINCT term) FROM cond) AS v,
-                  (SELECT COUNT(*) FROM tr) AS n),
-cls AS (
-  SELECT p.lang AS y, COALESCE(t.tot, 0) AS tot,
-         {_nbr6.format(e="ln(CAST(p.nd AS DOUBLE) / CAST(co.n AS DOUBLE))")} AS prior
-  FROM (SELECT lang, COUNT(*) AS nd FROM tr GROUP BY lang) p
-  LEFT JOIN tots t ON t.y = p.lang CROSS JOIN consts co
-),
-te_post AS (
-  SELECT doc_id, term, COUNT(*) AS tf
-  FROM (SELECT doc_id, unnest({_TOKENS}) AS term FROM te)
-  GROUP BY doc_id, term
-),
-sc AS (
-  SELECT p.doc_id, cl.y, SUM(p.tf) AS ntok,
-         SUM(p.tf * {_nbr6.format(e="ln(CAST(COALESCE(cd.c, 0) + 1 AS DOUBLE) / CAST(cl.tot + co.v AS DOUBLE))")}) AS s
-  FROM te_post p CROSS JOIN cls cl CROSS JOIN consts co
-  LEFT JOIN cond cd ON cd.y = cl.y AND cd.term = p.term
-  GROUP BY p.doc_id, cl.y
-),
-fullsc AS (
-  SELECT t.doc_id, t.lang AS actual, cl.y,
-         cl.prior + COALESCE(sc.s, 0) AS score, COALESCE(sc.ntok, 0) AS ntok
-  FROM te t CROSS JOIN cls cl
-  LEFT JOIN sc ON sc.doc_id = t.doc_id AND sc.y = cl.y
-),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, y ASC) AS rn,
-         LEAD(score) OVER (PARTITION BY doc_id ORDER BY score DESC, y ASC) AS second
-  FROM fullsc
-)
-SELECT doc_id, actual, y AS predicted, (y = actual) AS correct,
-       CAST(score - second AS DOUBLE) AS margin,
-       CAST(ntok AS INT) AS n_tokens
-FROM ranked WHERE rn = 1
-"""
-
-    # winnowing (SIGMOD 2003): 8-hex-md5 k-gram hashes packed as
-    # hash*2^31 + (2^31-1-pos) so MIN over the w-window is the rightmost
-    # minimum — the exact twin of operators/winnow.py
-    _hex8 = (
-        "list_sum(list_transform(range(1, 9), j -> "
-        "CAST(strpos('0123456789abcdef', substr({e}, j, 1)) - 1 AS BIGINT)"
-        " * (CAST(1 AS BIGINT) << (4 * (8 - j)))))"
-    )
-    o["doc_winnow_overlap"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS} AS ts FROM documents),
-g AS (
-  SELECT doc_id, u.pos, u.gram
-  FROM (
-    SELECT doc_id,
-           unnest([{{'pos': j - 1, 'gram': array_to_string(ts[j:j+3], ' ')}}
-                   FOR j IN generate_series(1, len(ts) - 3)]) AS u
-    FROM toks
-  )
-),
-comb AS (
-  SELECT doc_id, pos,
-         {_hex8.format(e="md5(gram)")} * 2147483648 + (2147483647 - pos) AS c
-  FROM g
-),
-win AS (
-  SELECT doc_id, pos,
-         MIN(c) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel,
-         MAX(pos) OVER (PARTITION BY doc_id) AS last
-  FROM comb
-),
-fp AS (
-  SELECT DISTINCT doc_id, sel >> 31 AS fp_hash
-  FROM win WHERE pos >= 3 OR pos = last
-),
-rare AS (SELECT fp_hash FROM fp GROUP BY fp_hash HAVING COUNT(*) <= 50),
-capped AS (SELECT f.doc_id, f.fp_hash FROM fp f JOIN rare r USING (fp_hash)),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM capped GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared_fp
-  FROM capped a JOIN capped b ON a.fp_hash = b.fp_hash AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-  HAVING COUNT(*) >= 3
-)
-SELECT p.id_a, p.id_b, CAST(p.shared_fp AS INT) AS shared_fp,
-       CAST(sa.n AS INT) AS fp_a, CAST(sb.n AS INT) AS fp_b,
-       CAST(FLOOR(CAST(p.shared_fp AS DOUBLE) / CAST(least(sa.n, sb.n) AS DOUBLE)
-                  * 1000000 + 0.5) / 1000000 AS DOUBLE) AS overlap
-FROM pairs p JOIN sizes sa ON sa.doc_id = p.id_a JOIN sizes sb ON sb.doc_id = p.id_b
-"""
-
-    # DSIR (Xie et al. 2023): hashed unigram+bigram bucket models,
-    # per-bucket lam = r6(ln target Laplace p) - r6(ln raw Laplace p),
-    # per-doc exact decimal logw, Gumbel-top-k on md5-derived uniforms —
-    # the exact twin of operators/importance.py (target = lang 'en')
-    _dsr6 = "CAST(FLOOR(({e}) * 1000000 + 0.5) / 1000000 AS DECIMAL(12,6))"
-    _dsu = (
-        "(" + _hex13("substr(md5('dsir' || '|' || CAST(doc_id AS VARCHAR)), 1, 13)")
-        + " + 0.5) / 4503599627370496.0"
-    )
-    o["doc_dsir_sample"] = f"""
-WITH toks AS (SELECT doc_id, lang, {_TOKENS} AS ts FROM documents),
-grams AS (
-  SELECT doc_id, lang,
-         unnest(list_concat(ts,
-           CASE WHEN len(ts) >= 2
-                THEN [array_to_string(ts[j:j+1], ' ') FOR j IN generate_series(1, len(ts) - 1)]
-                ELSE [] END)) AS g
-  FROM toks
-),
-bk AS (SELECT doc_id, lang, {_hex13("substr(md5(g), 1, 13)")} % 256 AS bkt FROM grams),
-tc AS (SELECT bkt, COUNT(*) AS ct FROM bk WHERE lang = 'en' GROUP BY bkt),
-rc AS (SELECT bkt, COUNT(*) AS cr FROM bk GROUP BY bkt),
-tot AS (SELECT (SELECT COUNT(*) FROM bk WHERE lang = 'en') AS tt,
-               (SELECT COUNT(*) FROM bk) AS tr),
-lam AS (
-  SELECT b.bkt,
-         {_dsr6.format(e="ln(CAST(COALESCE(tc.ct, 0) + 1 AS DOUBLE) / CAST(tot.tt + 256 AS DOUBLE))")}
-         - {_dsr6.format(e="ln(CAST(COALESCE(rc.cr, 0) + 1 AS DOUBLE) / CAST(tot.tr + 256 AS DOUBLE))")} AS lam
-  FROM range(256) b(bkt)
-  LEFT JOIN tc ON tc.bkt = b.bkt LEFT JOIN rc ON rc.bkt = b.bkt
-  CROSS JOIN tot
-),
-tf AS (SELECT doc_id, bkt, COUNT(*) AS tf FROM bk GROUP BY doc_id, bkt),
-logw AS (
-  SELECT tf.doc_id, SUM(tf.tf * lam.lam) AS lw
-  FROM tf JOIN lam ON lam.bkt = tf.bkt GROUP BY tf.doc_id
-),
-keyed AS (
-  SELECT d.doc_id,
-         CAST(COALESCE(lw.lw, 0) AS DOUBLE) AS logw,
-         CAST(FLOOR((CAST(COALESCE(lw.lw, 0) AS DOUBLE)
-                     + (-ln(-ln({_dsu})))) * 1000000000 + 0.5) / 1000000000
-              AS DOUBLE) AS sample_key
-  FROM (SELECT doc_id FROM documents) d
-  LEFT JOIN (SELECT doc_id AS lwid, lw FROM logw) lw ON lw.lwid = d.doc_id
-)
-SELECT doc_id, logw, sample_key
-FROM keyed ORDER BY sample_key DESC, doc_id LIMIT 100
-"""
-
-    # temperature-smoothed mixture rates (q_l ∝ p_l^τ, τ=0.7): every
-    # share/pow/ratio round-6'd as an exact decimal the moment it exists —
-    # the exact twin of operators/mixture.temperature_sampling_rates
-    o["doc_temperature_resample"] = f"""
-WITH per AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
-tot AS (SELECT SUM(n) AS t FROM per),
-sh AS (SELECT lang, n, {_dsr6.format(e="CAST(n AS DOUBLE) / CAST(t AS DOUBLE)")} AS share
-       FROM per CROSS JOIN tot),
-pw AS (SELECT lang, n, {_dsr6.format(e="pow(CAST(share AS DOUBLE), 0.7)")} AS p FROM sh),
-ps AS (SELECT SUM(p) AS psum FROM pw),
-ts AS (SELECT lang, n, {_dsr6.format(e="CAST(p AS DOUBLE) / CAST(psum AS DOUBLE)")} AS temp_share
-       FROM pw CROSS JOIN ps),
-km AS (
-  SELECT lang,
-         CAST(FLOOR(CAST({_dsr6.format(e="least(CAST(1 AS DOUBLE), FLOOR(CAST(t AS DOUBLE) * CAST(temp_share AS DOUBLE)) / CAST(n AS DOUBLE))")} AS DOUBLE) * 1000 + 0.5) AS INT) AS keep_mille
-  FROM ts CROSS JOIN tot
-)
-SELECT d.doc_id, d.lang, km.keep_mille,
-       CAST(({fingerprint}) % 1000 AS INT) AS mille,
-       (({fingerprint}) % 1000) < km.keep_mille AS keep
-FROM documents d JOIN km ON km.lang = d.lang
-"""
-
-    # per-source quantile quality gate: explicit (rank-1)/(n-1) percentile
-    # with total ordering (q desc, doc_id) — the exact twin of
-    # operators/text_quality.source_percentile_gate at keep_top=0.3
-    o["doc_source_quality_gate"] = f"""
-WITH scored AS (SELECT doc_id, source, {_dsr6.format(e=quality)} AS q FROM documents),
-r AS (
-  SELECT doc_id, source, q,
-         ROW_NUMBER() OVER (PARTITION BY source ORDER BY q DESC, doc_id) AS rn,
-         COUNT(*) OVER (PARTITION BY source) AS n
-  FROM scored
-),
-p AS (
-  SELECT doc_id, source, q,
-         CASE WHEN n > 1
-              THEN {_dsr6.format(e="CAST(rn - 1 AS DOUBLE) / CAST(n - 1 AS DOUBLE)")}
-              ELSE CAST(0 AS DECIMAL(12,6)) END AS pct
-  FROM r
-)
-SELECT doc_id, source, CAST(q AS DOUBLE) AS q,
-       CAST(pct AS DOUBLE) AS pct_rank, pct < 0.3 AS keep
-FROM p
-"""
-
-    # deterministic training → the persisted-model scorer produces values
-    # identical to in-query training; the oracle is reused verbatim (the
-    # doc_incremental_dedup_persisted discipline)
-    o["doc_nb_persisted_classifier"] = o["doc_nb_lang_classifier"]
-    # round-13 (VERDICT r12 #7): the stream-MAINTAINED NB model merges
-    # (class, term) + class-doc counts exactly per micro-batch (epoched,
-    # replay-idempotent), so it is bit-equal to one monolithic
-    # nb_save_model over everything streamed — same oracle again
-    o["doc_nb_maintained_classifier"] = o["doc_nb_lang_classifier"]
-
-    # uncertainty sampling composes the NB oracle: smallest |margin| first,
-    # ties by doc_id — the active-learning labeling queue
-    o["doc_uncertainty_sample"] = (
-        "SELECT doc_id, predicted, margin FROM ("
-        + o["doc_nb_lang_classifier"]
-        + ") _u ORDER BY abs(margin), doc_id LIMIT 50"
-    )
-
-    o["doc_pack_bins"] = f"""
-WITH t AS (
-  SELECT doc_id, lang, CAST({n_tok} AS INT) AS n_tokens FROM documents
-), c AS (
-  SELECT *, CAST(COALESCE(SUM(n_tokens) OVER (
-      PARTITION BY lang ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-  FROM t
-)
-SELECT doc_id, lang, n_tokens, cum_before,
-       CAST(FLOOR(cum_before / 512) AS INT) AS bin_id,
-       CAST(cum_before % 512 AS INT) AS offset_in_bin
-FROM c
-"""
-
-    o["doc_lsh_verified"] = f"""
-WITH cand AS ({_MINHASH_PAIRS_SQL}),
-sh AS (
-  SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM documents
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id
-), common AS (
-  SELECT c.id_a, c.id_b, COUNT(*) AS common
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.id_a
-  JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-  GROUP BY c.id_a, c.id_b
-)
-SELECT id_a, id_b,
-       {_r6("CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)")} AS jaccard
-FROM common
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE {_r6("CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)")} >= 0.2
-"""
-
-    # session-6: the end-to-end curation verdict — composes the exact-dup
-    # canonical map, the LSH-verified near-dup drop set, and the
-    # quality/length/language metrics (all already-verified fragments)
-    o["doc_curation_report"] = f"""
-WITH cand AS ({_MINHASH_PAIRS_SQL}),
-shc AS (
-  SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM documents
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM shc GROUP BY doc_id
-), common AS (
-  SELECT c.id_a, c.id_b, COUNT(*) AS common
-  FROM cand c
-  JOIN shc a ON a.doc_id = c.id_a
-  JOIN shc b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-  GROUP BY c.id_a, c.id_b
-), near AS (
-  SELECT DISTINCT id_b AS doc_id
-  FROM common
-  JOIN sizes sa ON sa.doc_id = id_a
-  JOIN sizes sb ON sb.doc_id = id_b
-  WHERE {_r6("CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)")} >= 0.2
-), canon AS (
-  SELECT md5(text) AS h, MIN(doc_id) AS canonical FROM documents GROUP BY 1
-), base AS (
-  SELECT doc_id, md5(text) AS h, CAST({n_tok} AS INT) AS n_tokens,
-         {_r6(quality)} AS quality, {lang_case} AS lang_pred
-  FROM documents
-)
-SELECT b.doc_id,
-       (b.doc_id <> c.canonical) AS is_exact_dup,
-       (n.doc_id IS NOT NULL) AS is_near_dup,
-       b.n_tokens, b.quality, b.lang_pred,
-       CASE WHEN b.doc_id <> c.canonical THEN 'exact_dup'
-            WHEN n.doc_id IS NOT NULL THEN 'near_dup'
-            WHEN b.n_tokens < 10 THEN 'too_short'
-            WHEN b.quality < 0.5 THEN 'low_quality'
-            WHEN b.lang_pred = 'und' THEN 'unknown_lang'
-            ELSE 'keep' END AS verdict
-FROM base b JOIN canon c ON c.h = b.h
-LEFT JOIN near n ON n.doc_id = b.doc_id
-"""
-
-    # round-8: the end-to-end curated-corpus -> packed-bins manifest —
-    # the curation oracle runs as a subquery, kept docs pack with the
-    # doc_pack_bins window (sharded by the PREDICTED language), and the
-    # bin manifest aggregates — stage-for-stage the Spark composition
-    o["corpus_training_batches"] = f"""
-WITH curated AS ({o["doc_curation_report"]}),
-kept AS (
-  SELECT doc_id, n_tokens, lang_pred FROM curated WHERE verdict = 'keep'
-), c AS (
-  SELECT *, CAST(COALESCE(SUM(n_tokens) OVER (
-      PARTITION BY lang_pred ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-  FROM kept
-)
-SELECT lang_pred AS lang, CAST(FLOOR(cum_before / 512) AS INT) AS bin_id,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_tokens) AS BIGINT) AS bin_tokens,
-       CAST(MIN(doc_id) AS BIGINT) AS first_doc,
-       CAST(MAX(doc_id) AS BIGINT) AS last_doc
-FROM c GROUP BY 1, 2
-"""
-
-    # session-6: contrastive pair mining — positives reuse the verified
-    # near-dup fragments; negatives are md5-ranked (pool draw + per-anchor
-    # ranking), so the exact pair set reproduces cross-engine
-    o["doc_contrastive_pairs"] = f"""
-WITH cand AS ({_MINHASH_PAIRS_SQL}),
-shc AS (
-  SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM documents
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM shc GROUP BY doc_id
-), common AS (
-  SELECT c.id_a, c.id_b, COUNT(*) AS common
-  FROM cand c
-  JOIN shc a ON a.doc_id = c.id_a
-  JOIN shc b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-  GROUP BY c.id_a, c.id_b
-), verified AS (
-  SELECT id_a, id_b
-  FROM common
-  JOIN sizes sa ON sa.doc_id = id_a
-  JOIN sizes sb ON sb.doc_id = id_b
-  WHERE {_r6("CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)")} >= 0.2
-), pos AS (
-  SELECT id_a AS anchor_id, id_b AS other_id FROM verified
-  UNION ALL SELECT id_b, id_a FROM verified
-), anchors AS (SELECT DISTINCT anchor_id FROM pos),
-pool AS (
-  SELECT doc_id AS cand_id FROM documents
-  ORDER BY md5(concat_ws('|', 'cp1', CAST(doc_id AS VARCHAR))), doc_id LIMIT 64
-), candn AS (
-  SELECT a.anchor_id, p.cand_id,
-         md5(concat_ws('|', 'cp1', CAST(a.anchor_id AS VARCHAR), CAST(p.cand_id AS VARCHAR))) AS pk
-  FROM anchors a JOIN pool p ON p.cand_id <> a.anchor_id
-  LEFT JOIN pos x ON x.anchor_id = a.anchor_id AND x.other_id = p.cand_id
-  WHERE x.other_id IS NULL
-), neg AS (
-  SELECT anchor_id, cand_id,
-         ROW_NUMBER() OVER (PARTITION BY anchor_id ORDER BY pk, cand_id) AS rn
-  FROM candn QUALIFY rn <= 3
-)
-SELECT anchor_id, other_id, 'pos' AS label, CAST(0 AS INT) AS pair_rank FROM pos
-UNION ALL
-SELECT anchor_id, cand_id AS other_id, 'neg' AS label, CAST(rn AS INT) AS pair_rank FROM neg
-"""
-
-    o["emb_hard_negatives"] = f"""
-WITH q AS (
-  SELECT vec_id AS query_id, {_QUANT_VEC} AS qv FROM embeddings WHERE vec_id < 8
-), c AS (
-  SELECT vec_id, {_QUANT_VEC} AS cv FROM embeddings
-), scored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, {_cosine_sql("q.qv", "c.cv")} AS cosine
-  FROM q, c WHERE c.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank BETWEEN 6 AND 10
-"""
-
-    from data_warehouse_punta_fina_spark.functions.text import PII_PATTERNS
-
-    red_sql = "text"
-    for pat, tok in PII_PATTERNS:
-        red_sql = f"regexp_replace({red_sql}, '{pat}', '{tok}', 'g')"
-    # mirrors functions.text.pii_hits: placeholders in the redacted text
-    # minus placeholder literals already present in the raw text, each
-    # pattern's delta clamped at 0 (a raw placeholder adjacent to a PII
-    # match gets swallowed by the greedy URL pattern — see pii_hits)
-    hits_sql = " + ".join(
-        f"GREATEST(CAST((length(red) - length(replace(red, '{tok}', ''))) / {len(tok)} AS INT)"
-        f" - CAST((length(text) - length(replace(text, '{tok}', ''))) / {len(tok)} AS INT), 0)"
-        for _, tok in PII_PATTERNS
-    )
-    o["doc_pii_redaction"] = f"""
-WITH r AS (SELECT doc_id, text, {red_sql} AS red FROM documents)
-SELECT doc_id, {hits_sql} AS n_pii,
-       CAST(length(red) AS INT) AS n_chars_redacted,
-       substr(red, 1, 80) AS muestra
-FROM r
-"""
-    o["doc_quality_gate"] = f"""
-WITH g AS (
-  SELECT doc_id, CAST({n_tok} AS INT) AS n_tokens,
-         {_r6(quality)} AS quality, {_r6(punct_raw)} AS punct
-  FROM documents
-), m AS (
-  SELECT doc_id, n_tokens, quality,
-         CASE WHEN n_tokens < 10 THEN 'too_short'
-              WHEN quality < 0.5 THEN 'low_quality'
-              WHEN punct > 0.2 THEN 'too_punct'
-              ELSE 'ok' END AS motivo
-  FROM g
-)
-SELECT doc_id, n_tokens, quality, motivo, motivo = 'ok' AS keep FROM m
-"""
-    o["doc_length_histogram"] = f"""
-WITH t AS (
-  SELECT CAST(FLOOR(CAST({n_tok} AS INT) / 32) AS INT) AS bucket, CAST({n_tok} AS INT) AS n
-  FROM documents
-)
-SELECT bucket, COUNT(*) AS n_docs, CAST(SUM(n) AS BIGINT) AS total_tokens,
-       MIN(n) AS min_tokens, MAX(n) AS max_tokens
-FROM t GROUP BY bucket
-"""
-
-    # session-6: Neyman allocation — exact sufficient stats, round-6
-    # weights, largest-remainder seats (ties -> stratum key ascending)
-    # DECIMAL(28,6): n_h·std_q exceeds (18,6)'s 1e12 integer headroom at
-    # 5× sf0.1 (sf0.5 scaling-run finding; mirrors operators/sampling.py)
-    _NY_R6 = "CAST(CAST(FLOOR(({e}) * 1000000 + 0.5) / 1000000 AS DECIMAL(28,6)) AS DOUBLE)"
-    o["order_sample_allocation"] = f"""
-WITH base AS (
-  SELECT o_orderpriority, CAST(FLOOR(CAST(o_totalprice AS DOUBLE) * 100 + 0.5) AS BIGINT) AS q
-  FROM orders
-),
-s AS (
-  SELECT o_orderpriority, COUNT(*) AS n_pop,
-         SUM(CAST(q AS DECIMAL(38,0))) AS s1,
-         SUM(CAST(q AS DECIMAL(38,0)) * q) AS s2
-  FROM base GROUP BY 1
-),
-w AS (
-  SELECT *, sqrt(greatest(
-    (CAST(n_pop AS DOUBLE) * CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))
-    / (CAST(n_pop AS DOUBLE) * CAST(n_pop AS DOUBLE)), 0.0)) AS std_q
-  FROM s
-),
-w2 AS (SELECT *, {_NY_R6.format(e="CAST(n_pop AS DOUBLE) * std_q")} AS wgt FROM w),
-tot AS (
-  SELECT SUM(CAST(FLOOR(wgt * 1000000 + 0.5) / 1000000 AS DECIMAL(28,6))) AS tw,
-         SUM(n_pop) AS nn
-  FROM w2
-),
-qta AS (
-  SELECT w2.*, 1000.0 * (CASE WHEN CAST(tw AS DOUBLE) > 0.0 THEN wgt / CAST(tw AS DOUBLE)
-                              ELSE CAST(n_pop AS DOUBLE) / CAST(nn AS DOUBLE) END) AS quota
-  FROM w2 CROSS JOIN tot
-),
-fl AS (SELECT *, CAST(FLOOR(quota) AS BIGINT) AS flr, quota - FLOOR(quota) AS frac FROM qta),
-lo AS (SELECT CAST(1000 - SUM(flr) AS BIGINT) AS leftv FROM fl),
-rk AS (SELECT *, ROW_NUMBER() OVER (ORDER BY frac DESC, o_orderpriority) AS rk FROM fl)
-SELECT o_orderpriority, n_pop,
-       {_NY_R6.format(e="std_q / 100.0")} AS std,
-       {_NY_R6.format(e="quota")} AS quota,
-       flr + CASE WHEN rk <= leftv THEN 1 ELSE 0 END AS alloc
-FROM rk CROSS JOIN lo
-"""
-
-    # session-6: A-priori triples — the oracle is the BRUTE triple join
-    # (the downward-closure prune is pure efficiency: the qualifying
-    # triple set is identical by definition)
-    o["basket_frequent_triples"] = f"""
-WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem),
-nb AS (SELECT COUNT(DISTINCT bk) AS n FROM b),
-t AS (
-  SELECT x.it AS item_a, y.it AS item_b, z.it AS item_c, COUNT(*) AS n_triple
-  FROM b x
-  JOIN b y ON x.bk = y.bk AND x.it < y.it
-  JOIN b z ON z.bk = x.bk AND z.it > y.it
-  GROUP BY 1, 2, 3 HAVING COUNT(*) >= 2
-)
-SELECT item_a, item_b, item_c, CAST(n_triple AS BIGINT) AS n_triple,
-       {_r6("CAST(n_triple AS DOUBLE) / CAST(n AS DOUBLE)")}::DOUBLE AS support
-FROM t CROSS JOIN nb
-ORDER BY n_triple DESC, item_a, item_b, item_c LIMIT 50
-"""
-
-    # session-6: linear multi-touch attribution — round-6 decimal weights
-    # (1/k per touch, 1 for organic), exact decimal channel sums
-    o["events_linear_attribution"] = """
-WITH conv AS (SELECT user_id AS u, ts AS cts, event_id AS cid FROM events WHERE event_type = 'purchase'),
-tch AS (SELECT user_id AS u, ts AS tts, event_type AS channel FROM events WHERE event_type IN ('view', 'click')),
-j AS (
-  SELECT conv.cid, tch.channel
-  FROM conv LEFT JOIN tch
-    ON tch.u = conv.u AND tch.tts <= conv.cts AND tch.tts >= conv.cts - INTERVAL 24 HOURS
-),
-k AS (
-  SELECT cid, COALESCE(channel, 'organic') AS channel,
-         COUNT(channel) OVER (PARTITION BY cid) AS kk
-  FROM j
-),
-w AS (
-  SELECT cid, channel,
-         CASE WHEN kk = 0 THEN CAST(1.0 AS DECIMAL(12,6))
-              ELSE CAST(FLOOR(1.0 / CAST(kk AS DOUBLE) * 1000000 + 0.5) / 1000000 AS DECIMAL(12,6)) END AS wgt
-  FROM k
-)
-SELECT channel, CAST(COUNT(DISTINCT cid) AS BIGINT) AS conversions,
-       CAST(SUM(wgt) AS DOUBLE) AS credited
-FROM w GROUP BY channel
-"""
-
-    # session-6: additive seasonal decomposition — every closing op
-    # mirrors operators.timeseries.seasonal_decompose exactly (2xMA with
-    # edge half-weights, phase means over round-6 decimal sums, grand-
-    # mean re-centering, rounded seasonal reused in the residual)
-    _TS_R6 = "CAST(CAST(FLOOR(({e}) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)) AS DOUBLE)"
-    o["weekly_revenue_decompose"] = f"""
-WITH wkrev AS (
-  SELECT date_trunc('week', o_orderdate) AS wk,
-         CAST(SUM(CAST(FLOOR(CAST(o_totalprice AS DOUBLE) * 100 + 0.5) / 100 AS DECIMAL(15,2))) AS DECIMAL(18,2)) AS rev
-  FROM orders GROUP BY 1
-),
-b AS (
-  SELECT wk, rev, CAST(FLOOR(CAST(rev AS DOUBLE) * 100 + 0.5) AS BIGINT) AS q,
-         ROW_NUMBER() OVER (ORDER BY wk) AS rn
-  FROM wkrev
-),
-t AS (
-  SELECT *, COUNT(q) OVER w5 AS cnt,
-         SUM(q * 2) OVER w5 - FIRST_VALUE(q) OVER w5 - LAST_VALUE(q) OVER w5 AS tot2,
-         CAST((rn - 1) % 4 AS INT) AS phase
-  FROM b WINDOW w5 AS (ORDER BY wk ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)
-),
-d AS (SELECT *, CASE WHEN cnt = 5 THEN CAST(tot2 AS DOUBLE) / 8.0 END AS trend_i FROM t),
-d2 AS (SELECT *, CASE WHEN trend_i IS NOT NULL THEN CAST(q AS DOUBLE) - trend_i END AS det FROM d),
-ph AS (
-  SELECT phase, SUM(CAST(FLOOR(det * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6))) AS s, COUNT(*) AS n
-  FROM d2 WHERE det IS NOT NULL GROUP BY phase
-),
-pm AS (SELECT phase, CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS m FROM ph),
-g AS (
-  SELECT CAST(SUM(CAST(FLOOR(m * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6))) AS DOUBLE)
-         / CAST(COUNT(*) AS DOUBLE) AS gm
-  FROM pm
-),
-se AS (
-  SELECT phase, CAST(CAST(FLOOR((m - gm) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)) AS DOUBLE) AS seasonal_q
-  FROM pm CROSS JOIN g
-)
-SELECT CAST(d2.wk AS TIMESTAMP) AS wk, CAST(d2.rev AS DOUBLE) AS rev,
-       {_TS_R6.format(e="trend_i / 100.0")} AS trend,
-       {_TS_R6.format(e="seasonal_q / 100.0")} AS seasonal,
-       {_TS_R6.format(e="(det - seasonal_q) / 100.0")} AS residual
-FROM d2 LEFT JOIN se USING (phase)
-"""
-
-    # session-6: SCD Type 3 — the oracle mirrors type3_update's left-join
-    # semantics (match → Type-1 overwrite; CHANGE → prev captures the old
-    # value; re-assertion keeps prev NULL; non-matches pass through)
-    o["scd3_customer_segment"] = """
-WITH c AS (
-  SELECT c_custkey, CASE WHEN c_acctbal < 0 THEN 'neg' ELSE 'pos' END AS old_seg
-  FROM customer
-),
-u AS (
-  SELECT c_custkey, CASE WHEN c_custkey % 4 = 0 THEN old_seg ELSE 'vip' END AS new_seg
-  FROM c WHERE c_custkey % 2 = 0
-)
-SELECT c.c_custkey,
-       COALESCE(u.new_seg, c.old_seg) AS segment,
-       CASE WHEN u.c_custkey IS NOT NULL AND u.new_seg <> c.old_seg THEN c.old_seg END AS prev_segment
-FROM c LEFT JOIN u USING (c_custkey)
-"""
-
-    # session-6: accumulating-snapshot fact — milestone dates + lag
-    # measures; lineless orders keep NULL milestones, zero counts, false
-    # completion (COALESCE mirrors the Spark projection)
-    o["fact_order_lifecycle"] = """
-WITH m AS (
-  SELECT l_orderkey, COUNT(*) AS n_lines,
-         MIN(CAST(l_shipdate AS DATE)) AS first_ship,
-         MAX(CAST(l_shipdate AS DATE)) AS last_ship,
-         SUM(CASE WHEN l_linestatus = 'F' THEN 1 ELSE 0 END) AS n_finished
-  FROM lineitem GROUP BY l_orderkey
-)
-SELECT o_orderkey, CAST(o_orderdate AS DATE) AS order_date,
-       CAST(COALESCE(n_lines, 0) AS BIGINT) AS n_lines,
-       CAST(COALESCE(n_finished, 0) AS BIGINT) AS n_finished,
-       first_ship, last_ship,
-       CAST(date_diff('day', CAST(o_orderdate AS DATE), first_ship) AS INT) AS days_to_first_ship,
-       CAST(date_diff('day', first_ship, last_ship) AS INT) AS ship_span_days,
-       COALESCE(n_finished = n_lines, FALSE) AS all_finished
-FROM orders LEFT JOIN m ON o_orderkey = l_orderkey
-"""
-
-    # session-6: clustering quality over the SAME 16-cell fit as the
-    # trained IVF — the chain's final distance CTE (df) already scores
-    # every (vec, centroid) pair
-    _cq_parts = _kmeans_cells_sql(16, 2) + [
-        "r AS (SELECT vec_id, cid, dist, "
-        "ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM df)",
-        "pv AS (SELECT vec_id, MIN(CASE WHEN rn = 1 THEN cid END) AS cid, "
-        "MIN(CASE WHEN rn = 1 THEN dist END) AS a, "
-        "MIN(CASE WHEN rn = 2 THEN dist END) AS b "
-        "FROM r WHERE rn <= 2 GROUP BY vec_id)",
-        "s AS (SELECT cid, a, "
-        + _r6("CAST(b - a AS DOUBLE) / CAST(greatest(a, b, 1) AS DOUBLE)")
-        + " AS sil FROM pv)",
-    ]
-    _cq_r6 = "CAST(FLOOR(({e}) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6))"
-    o["emb_cluster_quality"] = (
-        "WITH " + ",\n".join(_cq_parts) + "\n"
-        "SELECT cid, COUNT(*) AS n_vecs,\n"
-        f"  {_cq_r6.format(e='CAST(SUM(a) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')} AS mean_sq_dist,\n"
-        f"  {_cq_r6.format(e='CAST(SUM(sil) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')} AS mean_silhouette\n"
-        "FROM s GROUP BY cid"
-    )
-
-    o["ann_pq_topk"] = _pq_topk_sql(m=4, n_centroids=8, iters=2, k=5, rerank=20)
-    o["ann_ivfpq_topk"] = _ivfpq_topk_sql(
-        n_cells=16, probes=4, m=8, n_centroids=8, iters=2, k=5, rerank=30
-    )
-    # the persisted-index search is bit-identical to in-query training
-    # (RNG-free training, validated parameter fingerprint) — one oracle
-    # proves both the train-in-plan and the stored-index physical paths
-    o["ann_ivfpq_persisted_topk"] = _ivfpq_topk_sql(
-        n_cells=16, probes=4, m=8, n_centroids=8, iters=2, k=5, rerank=30
-    )
-    # incremental append: quantizers trained on the even-id half only,
-    # every vector encoded/searchable — the unrolled twin of build-on-
-    # base + encode-only append (ivfpq_append_index)
-    o["ann_ivfpq_incremental_topk"] = _ivfpq_topk_sql(
-        n_cells=16, probes=4, m=8, n_centroids=8, iters=2, k=5, rerank=30,
-        train_filter="vec_id % 2 = 0",
-    )
-    # compaction changes LAYOUT, not content (quantizers + codes carried
-    # verbatim, one file per cell) — searching the compacted index is
-    # bit-equal to the appended source, so the incremental oracle is
-    # reused verbatim (VERDICT r12 #2)
-    o["ann_ivfpq_compacted_topk"] = o["ann_ivfpq_incremental_topk"]
-    # the MAINTAINED index (round-13): quantizers init-trained on the
-    # even half, every vector stream-encoded with them — content-equal
-    # to build(even)+append(odd), so the same oracle again
-    o["ann_ivfpq_maintained_topk"] = o["ann_ivfpq_incremental_topk"]
-    o["emb_mmr_diverse"] = _mmr_sql(k=5, pool=20, lam_num=1, lam_den=2)
-    o["ann_ivf_trained_topk"] = _kmeans_ivf_sql(n_centroids=16, iters=2, k=5)
-    o["ann_ivf_trained_probe3"] = _kmeans_ivf_sql(n_centroids=16, iters=2, k=5, probes=3)
-    o["emb_near_dup_trained"] = _kmeans_near_dup_sql(n_centroids=16, iters=2, threshold=0.35)
-    # the bucketized rewrite must produce EXACTLY the nested-loop result —
-    # one oracle proves both physical strategies
-    o["events_value_band_rangejoin_bucketed"] = o["events_value_band_rangejoin"]
-
-    # unpivot oracle reuses the P&L oracle as a CTE (stack() twin)
-    o["pnl_unpivot"] = f"""
-WITH pnl AS ({o["fact_estado_resultados"]})
-SELECT periodo_id, concepto, monto FROM (
-  SELECT periodo_id, 'ingresos' AS concepto, ingresos AS monto FROM pnl
-  UNION ALL SELECT periodo_id, 'costos', costos FROM pnl
-  UNION ALL SELECT periodo_id, 'gastos', gastos FROM pnl
-  UNION ALL SELECT periodo_id, 'utilidad_bruta', utilidad_bruta FROM pnl
-  UNION ALL SELECT periodo_id, 'utilidad_neta', utilidad_neta FROM pnl
-) u
-"""
-
-    # combined catalog probe: one UNION ALL over the individual catalog
-    # oracles, shaped to (catalogo, item_id, codigo, nombre, flag, valor)
-    cat_map = [
-        ("cuenta_contable", "dim_cuenta_contable", "cuenta_id", "codigo", "nombre", "activa", "NULL"),
-        ("tipo_movimiento", "dim_tipo_movimiento", "tipo_movimiento_id", "codigo", "nombre", "activo", "NULL"),
-        ("centro_costo", "dim_centro_costo", "centro_costo_id", "codigo", "nombre", "activo", "NULL"),
-        ("tipo_transaccion", "dim_tipo_transaccion", "tipo_transaccion_id", "codigo", "nombre", "es_venta", "NULL"),
-        ("impuestos", "dim_impuestos", "impuesto_id", "codigo", "nombre", "activo", "tasa"),
-        ("estado_orden", "dim_estado_orden", "estado_orden_id", "codigo_estado", "nombre_estado", "es_estado_final", "orden_flujo"),
-        ("envio", "dim_envio", "envio_id", "codigo", "metodo_envio", "NULL", "costo"),
-        ("canal", "dim_canal", "canal_id", "codigo", "nombre", "activo", "NULL"),
-        ("estado_pago", "dim_estado_pago", "estado_pago_id", "codigo", "nombre", "es_final", "NULL"),
-        ("pago", "dim_pago", "pago_id", "metodo_pago", "nombre", "requiere_validacion", "plazo_dias"),
-        ("sitio_web", "dim_sitio_web", "sitio_web_id", "codigo", "url", "NULL", "NULL"),
-        ("categoria_producto", "dim_categoria_producto", "categoria_id", "NULL", "nombre", "activa", "NULL"),
-    ]
-    o["dim_catalogs"] = "\nUNION ALL\n".join(
-        f"SELECT '{name}' AS catalogo, CAST({idc} AS INT) AS item_id, CAST({cod} AS VARCHAR) AS codigo, "
-        f"{nom} AS nombre, CAST({flag} AS BOOLEAN) AS flag, CAST({val} AS DOUBLE) AS valor "
-        f"FROM ({o[key]}) _{name}"
-        for name, key, idc, cod, nom, flag, val in cat_map
-    )
-
-    # Gopher-style repetition profile over token bigrams. LEFT JOIN keeps
-    # docs with < 2 tokens (zero totals, null ratios) to mirror Spark's
-    # explode_outer.
-    o["doc_repeated_spans"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS} AS t FROM documents),
-g0 AS (
-  SELECT doc_id, unnest(generate_series(1, len(t) - 4)) AS j, t FROM toks
-),
-g AS (SELECT doc_id, j AS pos, array_to_string(t[j:j+4], ' ') AS gram FROM g0),
-c AS (SELECT gram FROM g GROUP BY gram HAVING COUNT(*) >= 2),
-d AS (SELECT g.doc_id, g.pos, g.pos + 4 AS e FROM g JOIN c USING (gram)),
-m AS (
-  SELECT doc_id, pos, e,
-         MAX(e) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_e
-  FROM d
-),
-i AS (
-  SELECT doc_id, pos, e,
-         SUM(CASE WHEN prev_e IS NULL OR pos > prev_e + 1 THEN 1 ELSE 0 END)
-           OVER (PARTITION BY doc_id ORDER BY pos) AS island
-  FROM m
-),
-s AS (SELECT doc_id, island, MAX(e) - MIN(pos) + 1 AS covered
-      FROM i GROUP BY doc_id, island),
-a AS (SELECT doc_id, COUNT(*) AS n_spans, SUM(covered) AS dup_tokens,
-             MAX(covered) AS longest_span
-      FROM s GROUP BY doc_id)
-SELECT l.doc_id,
-       l.n_tokens,
-       COALESCE(a.n_spans, 0) AS n_spans,
-       CAST(COALESCE(a.dup_tokens, 0) AS BIGINT) AS dup_tokens,
-       COALESCE(a.longest_span, 0) AS longest_span,
-       {_r6("COALESCE(a.dup_tokens, 0) / GREATEST(l.n_tokens, 1)")} AS dup_fraction
-FROM (SELECT doc_id, len(t) AS n_tokens FROM toks) l
-LEFT JOIN a USING (doc_id)
-"""
-
-    o["basket_part_affinity"] = f"""
-WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem),
-tot AS (SELECT COUNT(DISTINCT bk) AS n FROM b),
-item_n AS (SELECT it, COUNT(*) AS c FROM b GROUP BY it),
-pc AS (
-  SELECT x.it AS item_a, y.it AS item_b, COUNT(*) AS n_pair
-  FROM b x JOIN b y ON x.bk = y.bk AND x.it < y.it
-  GROUP BY 1, 2 HAVING COUNT(*) >= 3
-)
-SELECT pc.item_a, pc.item_b, pc.n_pair, a.c AS n_a, bb.c AS n_b,
-       {_r6("CAST(pc.n_pair AS DOUBLE) / CAST(tot.n AS DOUBLE)")} AS support,
-       {_r6("CAST(pc.n_pair AS DOUBLE) / CAST(a.c AS DOUBLE)")} AS confidence,
-       {_r6(
-           "(CAST(pc.n_pair AS DOUBLE) / CAST(tot.n AS DOUBLE))"
-           " / ((CAST(a.c AS DOUBLE) / CAST(tot.n AS DOUBLE))"
-           " * (CAST(bb.c AS DOUBLE) / CAST(tot.n AS DOUBLE)))"
-       )} AS lift
-FROM pc
-JOIN item_n a ON a.it = pc.item_a
-JOIN item_n bb ON bb.it = pc.item_b
-CROSS JOIN tot
-ORDER BY lift DESC, pc.item_a, pc.item_b LIMIT 50
-"""
-
-    o["doc_phrase_search"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS} AS t FROM documents),
-hits AS (
-  SELECT doc_id,
-         unnest([j FOR j IN generate_series(1, len(t) - 1)
-                 IF t[j] = 'order' AND t[j+1] = 'fast']) AS j
-  FROM toks
-)
-SELECT doc_id, COUNT(*) AS n_matches, MIN(j) - 1 AS first_pos
-FROM hits GROUP BY doc_id
-"""
-
-    o["doc_heavy_terms"] = f"""
-WITH toks AS (SELECT unnest({_TOKENS}) AS tok FROM documents),
-c AS (SELECT tok, COUNT(*) AS n_occurrences FROM toks GROUP BY tok),
-t AS (SELECT COUNT(*) AS n FROM toks)
-SELECT c.tok, c.n_occurrences FROM c, t WHERE c.n_occurrences * 64 > t.n
-"""
-
-    o["doc_weighted_sample"] = f"""
-SELECT doc_id, n_chars,
-       CAST(FLOOR(
-         (ln(CAST({_hex13("substr(md5('ws' || '|' || CAST(doc_id AS VARCHAR)), 1, 13)")} + 1 AS DOUBLE)
-             / 4503599627370496.0)
-          / CAST(n_chars AS DOUBLE)) * 1000000000 + 0.5
-       ) / 1000000000 AS DECIMAL(18,9)) AS sample_key
-FROM documents
-WHERE n_chars > 0
-ORDER BY sample_key DESC, doc_id LIMIT 50
-"""
-
-    o["revenue_anomaly_weeks"] = f"""
-WITH weekly AS (
-  SELECT date_trunc('week', o_orderdate) AS wk,
-         CAST(SUM({_r2("o_totalprice")}) AS DECIMAL(18,2)) AS rev
-  FROM orders GROUP BY 1
-),
-j AS (
-  SELECT w.wk, w.rev, p.rev AS rev_prev,
-         CAST(w.rev - p.rev AS DOUBLE) AS residual
-  FROM weekly w JOIN weekly p ON w.wk = p.wk + INTERVAL 7 DAY
-),
-med AS (SELECT quantile_cont(residual, 0.5) AS med FROM j),
-dev AS (SELECT j.*, abs(j.residual - m.med) AS absdev FROM j CROSS JOIN med m),
-mad AS (SELECT quantile_cont(absdev, 0.5) AS mad FROM dev),
-scored AS (
-  SELECT d.wk, d.rev, d.rev_prev, d.residual,
-         CASE WHEN m.mad > 0 THEN
-           CAST(CAST(FLOOR((0.6745 * d.absdev / m.mad) * 1000000 + 0.5) / 1000000 AS DECIMAL(15,6)) AS DOUBLE)
-         END AS score,
-         CASE WHEN m.mad > 0 THEN
-           (CAST(FLOOR((0.6745 * d.absdev / m.mad) * 1000000 + 0.5) / 1000000 AS DECIMAL(15,6)) > 3.5)
-         ELSE FALSE END AS is_outlier
-  FROM dev d CROSS JOIN mad m
-)
-SELECT strftime(wk, '%Y-%m-%d') AS week_start, rev, rev_prev, residual, score, is_outlier
-FROM scored
-"""
-
-    o["part_pagerank"] = f"""
-WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem),
-p AS (
-  SELECT x.it AS a, y.it AS bb FROM b x JOIN b y ON x.bk = y.bk AND x.it < y.it
-  GROUP BY 1, 2 HAVING COUNT(*) >= 2
-),
-e AS (SELECT a AS s, bb AS d FROM p UNION SELECT bb, a FROM p),
-nodes AS (SELECT DISTINCT s AS node FROM e),
-deg AS (SELECT s AS node, COUNT(*) AS dg FROM e GROUP BY s),
-nn AS (SELECT COUNT(*) AS n FROM nodes),
-r0 AS (SELECT node, {_r6("1.0 / CAST(nn.n AS DOUBLE)")} AS rank FROM nodes CROSS JOIN nn),
-c1 AS (
-  SELECT e.d AS node, SUM({_r6(f"CAST(r0.rank AS DOUBLE) / CAST(deg.dg AS DOUBLE)")}) AS s
-  FROM r0 JOIN deg USING (node) JOIN e ON e.s = r0.node GROUP BY e.d
-),
-r1 AS (
-  SELECT nodes.node,
-         {_r6(f"(1.0 - 0.85) / CAST(nn.n AS DOUBLE) + 0.85 * COALESCE(CAST(c1.s AS DOUBLE), 0.0)")} AS rank
-  FROM nodes CROSS JOIN nn LEFT JOIN c1 ON c1.node = nodes.node
-),
-c2 AS (
-  SELECT e.d AS node, SUM({_r6(f"CAST(r1.rank AS DOUBLE) / CAST(deg.dg AS DOUBLE)")}) AS s
-  FROM r1 JOIN deg USING (node) JOIN e ON e.s = r1.node GROUP BY e.d
-),
-r2 AS (
-  SELECT nodes.node,
-         {_r6(f"(1.0 - 0.85) / CAST(nn.n AS DOUBLE) + 0.85 * COALESCE(CAST(c2.s AS DOUBLE), 0.0)")} AS rank
-  FROM nodes CROSS JOIN nn LEFT JOIN c2 ON c2.node = nodes.node
-),
-c3 AS (
-  SELECT e.d AS node, SUM({_r6(f"CAST(r2.rank AS DOUBLE) / CAST(deg.dg AS DOUBLE)")}) AS s
-  FROM r2 JOIN deg USING (node) JOIN e ON e.s = r2.node GROUP BY e.d
-),
-r3 AS (
-  SELECT nodes.node,
-         {_r6(f"(1.0 - 0.85) / CAST(nn.n AS DOUBLE) + 0.85 * COALESCE(CAST(c3.s AS DOUBLE), 0.0)")} AS rank
-  FROM nodes CROSS JOIN nn LEFT JOIN c3 ON c3.node = nodes.node
-),
-c4 AS (
-  SELECT e.d AS node, SUM({_r6(f"CAST(r3.rank AS DOUBLE) / CAST(deg.dg AS DOUBLE)")}) AS s
-  FROM r3 JOIN deg USING (node) JOIN e ON e.s = r3.node GROUP BY e.d
-),
-r4 AS (
-  SELECT nodes.node,
-         {_r6(f"(1.0 - 0.85) / CAST(nn.n AS DOUBLE) + 0.85 * COALESCE(CAST(c4.s AS DOUBLE), 0.0)")} AS rank
-  FROM nodes CROSS JOIN nn LEFT JOIN c4 ON c4.node = nodes.node
-),
-c5 AS (
-  SELECT e.d AS node, SUM({_r6(f"CAST(r4.rank AS DOUBLE) / CAST(deg.dg AS DOUBLE)")}) AS s
-  FROM r4 JOIN deg USING (node) JOIN e ON e.s = r4.node GROUP BY e.d
-),
-r5 AS (
-  SELECT nodes.node,
-         {_r6(f"(1.0 - 0.85) / CAST(nn.n AS DOUBLE) + 0.85 * COALESCE(CAST(c5.s AS DOUBLE), 0.0)")} AS rank
-  FROM nodes CROSS JOIN nn LEFT JOIN c5 ON c5.node = nodes.node
-)
-SELECT node, rank FROM r5 ORDER BY rank DESC, node LIMIT 25
-"""
-
-    o["customer_rfm"] = f"""
-WITH cust AS (
-  SELECT o_custkey AS k, MAX(o_orderdate) AS last_dt, COUNT(*) AS freq,
-         CAST(SUM({_r2("o_totalprice")}) AS DECIMAL(18,2)) AS mon
-  FROM orders GROUP BY o_custkey
-),
-s AS (
-  SELECT k, freq, mon,
-         NTILE(5) OVER (ORDER BY last_dt, k) AS r_score,
-         NTILE(5) OVER (ORDER BY freq, k) AS f_score,
-         NTILE(5) OVER (ORDER BY mon, k) AS m_score
-  FROM cust
-),
-seg AS (
-  SELECT *,
-         CASE WHEN r_score >= 4 AND f_score >= 4 AND m_score >= 4 THEN 'champion'
-              WHEN r_score <= 2 AND f_score <= 2 THEN 'hibernating'
-              WHEN r_score <= 2 THEN 'at_risk'
-              WHEN m_score = 5 THEN 'big_spender'
-              WHEN f_score >= 4 THEN 'loyal'
-              ELSE 'regular' END AS segment
-  FROM s
-)
-SELECT segment, COUNT(*) AS n_customers, CAST(SUM(freq) AS BIGINT) AS total_orders,
-       CAST(SUM(mon) AS DECIMAL(20,2)) AS monetary_total
-FROM seg GROUP BY segment
-"""
-
-    o["doc_token_entropy"] = f"""
-WITH toksx AS (SELECT doc_id, unnest({_TOKENS}) AS tok FROM documents),
-counts AS (SELECT doc_id, tok, COUNT(*) AS c FROM toksx GROUP BY doc_id, tok),
-t AS (
-  SELECT doc_id, c,
-         SUM(c) OVER (PARTITION BY doc_id) AS n,
-         COUNT(*) OVER (PARTITION BY doc_id) AS dt
-  FROM counts
-),
-terms AS (
-  SELECT doc_id, n, dt,
-         {_r6("(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)) * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))")} AS term
-  FROM t
-),
-agg AS (
-  SELECT doc_id, MAX(n) AS n_tokens, MAX(dt) AS distinct_tokens,
-         CAST(-SUM(term) AS DOUBLE) AS entropy
-  FROM terms GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(COALESCE(a.n_tokens, 0) AS BIGINT) AS n_tokens,
-       COALESCE(a.distinct_tokens, 0) AS distinct_tokens,
-       a.entropy,
-       CASE WHEN a.distinct_tokens > 1
-            THEN CAST({_r6("a.entropy / ln(CAST(a.distinct_tokens AS DOUBLE))")} AS DOUBLE)
-       END AS norm_entropy
-FROM documents d LEFT JOIN agg a USING (doc_id)
-"""
-
-    o["doc_segment_dedup"] = f"""
-WITH base AS (SELECT doc_id, {_TOKENS} AS toks FROM documents),
-ex AS (
-  SELECT doc_id, CAST(u.s AS INT) AS pos,
-         array_to_string(toks[CAST(u.s AS INT) + 1:CAST(u.s AS INT) + 24], ' ') AS seg
-  FROM base, unnest(range(0, len(toks), 24)) u(s)
-  WHERE len(toks) > 0
-),
-rn AS (
-  SELECT doc_id, pos, seg,
-         ROW_NUMBER() OVER (PARTITION BY seg ORDER BY doc_id, pos) AS r
-  FROM ex
-),
-tot AS (SELECT doc_id, COUNT(*) AS n_segments FROM ex GROUP BY doc_id),
-reb AS (
-  SELECT doc_id, COUNT(*) AS n_kept, string_agg(seg, ' ' ORDER BY pos) AS cleaned_text
-  FROM rn WHERE r = 1 GROUP BY doc_id
-)
-SELECT d.doc_id,
-       COALESCE(tot.n_segments, 0) AS n_segments,
-       COALESCE(reb.n_kept, 0) AS n_kept,
-       COALESCE(reb.cleaned_text, '') AS cleaned_text
-FROM documents d
-LEFT JOIN tot USING (doc_id)
-LEFT JOIN reb USING (doc_id)
-"""
-
-    o["events_approx_quantiles"] = """
-SELECT event_type, COUNT(*) AS n,
-       quantile_cont(value, 0.5) AS p50,
-       TRUE AS approx_within_rank_bounds
-FROM events GROUP BY event_type
-"""
-
-    o["events_type_drift_psi"] = """
-WITH b AS (SELECT event_type FROM events WHERE ts < TIMESTAMP '2024-01-16' AND event_type IS NOT NULL),
-c AS (SELECT event_type FROM events WHERE ts >= TIMESTAMP '2024-01-16' AND event_type IS NOT NULL),
-nb AS (SELECT event_type AS category, COUNT(*) AS n_base FROM b GROUP BY 1),
-nc AS (SELECT event_type AS category, COUNT(*) AS n_cur FROM c GROUP BY 1),
-spine AS (SELECT category FROM nb UNION SELECT category FROM nc),
-tot AS (SELECT (SELECT COALESCE(SUM(n_base), 0) FROM nb) AS tb,
-               (SELECT COALESCE(SUM(n_cur), 0) FROM nc) AS tc)
-SELECT s.category,
-       COALESCE(nb.n_base, 0) AS n_base,
-       COALESCE(nc.n_cur, 0) AS n_cur,
-       CAST(FLOOR((GREATEST(CAST(COALESCE(nb.n_base, 0) AS DOUBLE) / CAST(tot.tb AS DOUBLE), 1e-06)) * 1000000 + 0.5) / 1000000 AS DECIMAL(12,6)) AS p_base,
-       CAST(FLOOR((GREATEST(CAST(COALESCE(nc.n_cur, 0) AS DOUBLE) / CAST(tot.tc AS DOUBLE), 1e-06)) * 1000000 + 0.5) / 1000000 AS DECIMAL(12,6)) AS p_cur,
-       CAST(FLOOR(((GREATEST(CAST(COALESCE(nc.n_cur, 0) AS DOUBLE) / CAST(tot.tc AS DOUBLE), 1e-06) - GREATEST(CAST(COALESCE(nb.n_base, 0) AS DOUBLE) / CAST(tot.tb AS DOUBLE), 1e-06)) * ln(GREATEST(CAST(COALESCE(nc.n_cur, 0) AS DOUBLE) / CAST(tot.tc AS DOUBLE), 1e-06) / GREATEST(CAST(COALESCE(nb.n_base, 0) AS DOUBLE) / CAST(tot.tb AS DOUBLE), 1e-06))) * 1000000 + 0.5) / 1000000 AS DECIMAL(12,6)) AS psi_term
-FROM spine s
-CROSS JOIN tot
-LEFT JOIN nb USING (category)
-LEFT JOIN nc USING (category)
-"""
-
-    o["events_drift_psi"] = f"""
-WITH b AS (SELECT value FROM events WHERE ts < TIMESTAMP '2024-01-16' AND value IS NOT NULL),
-c AS (SELECT value FROM events WHERE ts >= TIMESTAMP '2024-01-16' AND value IS NOT NULL),
-cuts AS (SELECT quantile_cont(value, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]) AS q FROM b),
-nb AS (SELECT len(list_filter(cuts.q, x -> value > x)) + 1 AS bin, COUNT(*) AS n_base
-       FROM b, cuts GROUP BY 1),
-nc AS (SELECT len(list_filter(cuts.q, x -> value > x)) + 1 AS bin, COUNT(*) AS n_cur
-       FROM c, cuts GROUP BY 1),
-spine AS (SELECT unnest(generate_series(1, 10)) AS bin),
-tot AS (SELECT (SELECT SUM(n_base) FROM nb) AS tb, (SELECT SUM(n_cur) FROM nc) AS tc)
-SELECT s.bin,
-       CASE WHEN s.bin >= 2 THEN cuts.q[CAST(s.bin - 1 AS INT)] END AS lo,
-       CASE WHEN s.bin <= 9 THEN cuts.q[CAST(s.bin AS INT)] END AS hi,
-       COALESCE(nb.n_base, 0) AS n_base,
-       COALESCE(nc.n_cur, 0) AS n_cur,
-       {_r6("GREATEST(CAST(COALESCE(nb.n_base, 0) AS DOUBLE) / CAST(tot.tb AS DOUBLE), 1e-06)")} AS p_base,
-       {_r6("GREATEST(CAST(COALESCE(nc.n_cur, 0) AS DOUBLE) / CAST(tot.tc AS DOUBLE), 1e-06)")} AS p_cur,
-       {_r6(
-           "(GREATEST(CAST(COALESCE(nc.n_cur, 0) AS DOUBLE) / CAST(tot.tc AS DOUBLE), 1e-06)"
-           " - GREATEST(CAST(COALESCE(nb.n_base, 0) AS DOUBLE) / CAST(tot.tb AS DOUBLE), 1e-06))"
-           " * ln(GREATEST(CAST(COALESCE(nc.n_cur, 0) AS DOUBLE) / CAST(tot.tc AS DOUBLE), 1e-06)"
-           " / GREATEST(CAST(COALESCE(nb.n_base, 0) AS DOUBLE) / CAST(tot.tb AS DOUBLE), 1e-06))"
-       )} AS psi_term
-FROM spine s
-CROSS JOIN cuts
-CROSS JOIN tot
-LEFT JOIN nb USING (bin)
-LEFT JOIN nc USING (bin)
-"""
-
-    o["doc_collocations"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS} AS t FROM documents),
-pairs AS (
-  SELECT gram, COUNT(*) AS n_pair FROM (
-    SELECT unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS gram
-    FROM toks
-  ) GROUP BY gram
-),
-sp AS (SELECT string_split(gram, ' ')[1] AS w1, string_split(gram, ' ')[2] AS w2, n_pair
-       FROM pairs),
-mx AS (SELECT w1, SUM(n_pair) AS c1 FROM sp GROUP BY w1),
-my AS (SELECT w2, SUM(n_pair) AS c2 FROM sp GROUP BY w2),
-tot AS (SELECT SUM(n_pair) AS n FROM sp)
-SELECT sp.w1, sp.w2, sp.n_pair,
-       {_r6("ln((CAST(sp.n_pair AS DOUBLE) / CAST(tot.n AS DOUBLE))"
-            " / ((CAST(mx.c1 AS DOUBLE) / CAST(tot.n AS DOUBLE))"
-            " * (CAST(my.c2 AS DOUBLE) / CAST(tot.n AS DOUBLE))))")} AS pmi
-FROM sp JOIN mx USING (w1) JOIN my USING (w2) CROSS JOIN tot
-WHERE sp.n_pair >= 5
-ORDER BY pmi DESC, w1, w2 LIMIT 40
-"""
-
-    o["doc_repetition"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS} AS ts FROM documents),
-grams AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(ts)), i -> ts[i] || ' ' || ts[i+1])) AS g
-  FROM toks
-),
-per_gram AS (SELECT doc_id, g, COUNT(*) AS c FROM grams GROUP BY doc_id, g),
-agg AS (
-  SELECT doc_id, SUM(c) AS total, COUNT(*) AS dstnct, MAX(c) AS top,
-         SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup
-  FROM per_gram GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(COALESCE(a.total, 0) AS INT) AS n_grams,
-       CAST(COALESCE(a.dstnct, 0) AS INT) AS distinct_grams,
-       CAST({_r6("a.top / a.total")} AS DOUBLE) AS top_gram_share,
-       CAST({_r6("a.dup / a.total")} AS DOUBLE) AS dup_gram_frac,
-       CAST({_r6("a.dstnct / a.total")} AS DOUBLE) AS unique_ratio
-FROM documents d LEFT JOIN agg a USING (doc_id)
-"""
-
-    # Okapi BM25 (k1=1.2, b=0.75): idf round-6'd immediately (absorbs any
-    # last-ulp ln() divergence), per-term score round-6'd to DECIMAL(12,6)
-    # BEFORE the per-doc sum (exact, order-independent), ties by doc_id.
-    import re as _re
-
-    from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE as _TSR
-
-    bm25_q = " UNION ALL ".join(
-        f"SELECT {qid} AS query_id, '{t}' AS term"
-        for qid, qtext in _BM25_QUERIES
-        # mirror operators.retrieval.bm25_topk's query normalization via the
-        # SAME shared regex (single source of truth with the corpus tokenizer)
-        for t in dict.fromkeys(w for w in _re.split(_TSR, qtext.lower()) if w)
-    )
-    bm25_s = (
-        "(idf * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)))"
-    )
-    o["doc_bm25_topk"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS}) AS term FROM documents
-),
-postings0 AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-dl AS (SELECT doc_id, SUM(tf) AS dl FROM postings0 GROUP BY doc_id),
-postings AS (SELECT p.doc_id, p.term, p.tf, dl.dl FROM postings0 p JOIN dl USING (doc_id)),
-dfs AS (SELECT term, COUNT(*) AS df FROM postings GROUP BY term),
-nd AS (
-  SELECT (SELECT COUNT(*) FROM documents) AS n,
-         CAST((SELECT COALESCE(SUM(dl), 0) FROM dl) AS DOUBLE)
-           / CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS avgdl
-),
-q AS ({bm25_q}),
-scored AS (
-  SELECT q.query_id, p.doc_id,
-         CAST({_r6(bm25_s.replace("idf", "FLOOR(ln((nd.n - dfs.df + 0.5) / (dfs.df + 0.5) + 1.0) * 1000000 + 0.5) / 1000000"))} AS DECIMAL(12,6)) AS s
-  FROM postings p JOIN q USING (term) JOIN dfs USING (term) CROSS JOIN nd
-),
-per_doc AS (
-  SELECT query_id, doc_id, CAST(SUM(s) AS DOUBLE) AS score FROM scored GROUP BY query_id, doc_id
-)
-SELECT query_id, doc_id, score,
-       CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS INT) AS rank
-FROM per_doc QUALIFY rank <= 5
-"""
-
-    # PRF query expansion: the doc_bm25_topk chain run twice — pass 1
-    # takes top-3 per query, the 5 highest-tf NEW terms of that feedback
-    # set union into the query, pass 2 re-scores (ties: docs by doc_id,
-    # terms by term asc — mirrors operators/retrieval.bm25_prf_topk)
-    _bm25_scored = (
-        "SELECT {q}.query_id, p.doc_id, "
-        f"CAST({_r6(bm25_s.replace('idf', 'FLOOR(ln((nd.n - dfs.df + 0.5) / (dfs.df + 0.5) + 1.0) * 1000000 + 0.5) / 1000000'))} AS DECIMAL(12,6)) AS s "
-        "FROM postings p JOIN {q} USING (term) JOIN dfs USING (term) CROSS JOIN nd"
-    )
-    o["doc_bm25_prf_search"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS}) AS term FROM documents
-),
-postings0 AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-dl AS (SELECT doc_id, SUM(tf) AS dl FROM postings0 GROUP BY doc_id),
-postings AS (SELECT p.doc_id, p.term, p.tf, dl.dl FROM postings0 p JOIN dl USING (doc_id)),
-dfs AS (SELECT term, COUNT(*) AS df FROM postings GROUP BY term),
-nd AS (
-  SELECT (SELECT COUNT(*) FROM documents) AS n,
-         CAST((SELECT COALESCE(SUM(dl), 0) FROM dl) AS DOUBLE)
-           / CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS avgdl
-),
-q0 AS ({bm25_q}),
-scored0 AS ({_bm25_scored.format(q="q0")}),
-pd0 AS (SELECT query_id, doc_id, CAST(SUM(s) AS DOUBLE) AS score FROM scored0 GROUP BY query_id, doc_id),
-lex0 AS (
-  SELECT query_id, doc_id FROM pd0
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) <= 3
-),
-fbt AS (
-  SELECT l.query_id, p.term, SUM(p.tf) AS w
-  FROM postings p JOIN lex0 l ON p.doc_id = l.doc_id
-  WHERE NOT EXISTS (
-    SELECT 1 FROM q0 WHERE q0.query_id = l.query_id AND q0.term = p.term)
-  GROUP BY l.query_id, p.term
-),
-expn AS (
-  SELECT query_id, term FROM fbt
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY w DESC, term) <= 5
-),
-q AS (SELECT query_id, term FROM q0 UNION SELECT query_id, term FROM expn),
-scored AS ({_bm25_scored.format(q="q")}),
-per_doc AS (
-  SELECT query_id, doc_id, CAST(SUM(s) AS DOUBLE) AS score FROM scored GROUP BY query_id, doc_id
-)
-SELECT query_id, doc_id, score,
-       CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS INT) AS rank
-FROM per_doc QUALIFY rank <= 5
-"""
-
-    # Hybrid RRF retrieval: the doc_bm25_topk CTE chain with the query
-    # side drawn from documents 1-4's own tokens (query-by-example, self
-    # excluded, top-20), the ann_brute_topk cosine chain over the same
-    # query ids (top-20), fused by reciprocal rank 1/(60+rank) — each
-    # contribution round-6'd to DECIMAL(12,6) so the fused sum is exact,
-    # ties by doc_id, final top-5 per query.
-    o["doc_hybrid_rrf_search"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS}) AS term FROM documents
-),
-postings0 AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-dl AS (SELECT doc_id, SUM(tf) AS dl FROM postings0 GROUP BY doc_id),
-postings AS (SELECT p.doc_id, p.term, p.tf, dl.dl FROM postings0 p JOIN dl USING (doc_id)),
-dfs AS (SELECT term, COUNT(*) AS df FROM postings GROUP BY term),
-nd AS (
-  SELECT (SELECT COUNT(*) FROM documents) AS n,
-         CAST((SELECT COALESCE(SUM(dl), 0) FROM dl) AS DOUBLE)
-           / CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS avgdl
-),
-q AS (SELECT DISTINCT doc_id AS query_id, term FROM toks WHERE doc_id IN (1, 2, 3, 4)),
-lexscored AS (
-  SELECT q.query_id, p.doc_id,
-         CAST({_r6(bm25_s.replace("idf", "FLOOR(ln((nd.n - dfs.df + 0.5) / (dfs.df + 0.5) + 1.0) * 1000000 + 0.5) / 1000000"))} AS DECIMAL(12,6)) AS s
-  FROM postings p JOIN q USING (term) JOIN dfs USING (term) CROSS JOIN nd
-  WHERE p.doc_id <> q.query_id
-),
-lexdoc AS (
-  SELECT query_id, doc_id, CAST(SUM(s) AS DOUBLE) AS score FROM lexscored GROUP BY query_id, doc_id
-),
-lex AS (
-  SELECT query_id, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-  FROM lexdoc QUALIFY rank <= 20
-),
-eq AS (SELECT vec_id AS query_id, {_QUANT_VEC} AS qv FROM embeddings WHERE vec_id IN (1, 2, 3, 4)),
-ec AS (SELECT vec_id, {_QUANT_VEC} AS cv FROM embeddings),
-semscored AS (
-  SELECT eq.query_id, ec.vec_id AS doc_id, {_cosine_sql("eq.qv", "ec.cv")} AS cosine
-  FROM eq, ec WHERE ec.vec_id <> eq.query_id
-),
-sem AS (
-  SELECT query_id, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, doc_id) AS rank
-  FROM semscored QUALIFY rank <= 20
-),
-contrib AS (
-  SELECT query_id, doc_id, CAST({_r6("1.0 / (60 + rank)")} AS DECIMAL(12,6)) AS c,
-         TRUE AS in_lex, FALSE AS in_sem FROM lex
-  UNION ALL
-  SELECT query_id, doc_id, CAST({_r6("1.0 / (60 + rank)")} AS DECIMAL(12,6)) AS c,
-         FALSE AS in_lex, TRUE AS in_sem FROM sem
-),
-fused AS (
-  SELECT query_id, doc_id, CAST(SUM(c) AS DOUBLE) AS rrf_score,
-         MAX(in_lex) AS in_lex, MAX(in_sem) AS in_sem
-  FROM contrib GROUP BY query_id, doc_id
-)
-SELECT query_id, doc_id, rrf_score, in_lex, in_sem, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY rrf_score DESC, doc_id) AS rank
-  FROM fused
-) WHERE rank <= 5
-"""
-
-    # Scale-path hybrid: same BM25 lexical chain, semantic candidates
-    # from the trained-IVF cells (nprobe=3, the _kmeans_cells_sql chain),
-    # identical RRF fusion. CTE namespaces are disjoint by construction
-    # (bm25: toks/postings*/dfs/nd/q/lex*; kmeans: v/c*/d*/a*/u*/df/af).
-    _kparts = ",\n".join(_kmeans_cells_sql(16, 2))
-    o["doc_hybrid_rrf_search_ivf"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS}) AS term FROM documents
-),
-postings0 AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-dl AS (SELECT doc_id, SUM(tf) AS dl FROM postings0 GROUP BY doc_id),
-postings AS (SELECT p.doc_id, p.term, p.tf, dl.dl FROM postings0 p JOIN dl USING (doc_id)),
-dfs AS (SELECT term, COUNT(*) AS df FROM postings GROUP BY term),
-nd AS (
-  SELECT (SELECT COUNT(*) FROM documents) AS n,
-         CAST((SELECT COALESCE(SUM(dl), 0) FROM dl) AS DOUBLE)
-           / CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS avgdl
-),
-q AS (SELECT DISTINCT doc_id AS query_id, term FROM toks WHERE doc_id IN (1, 2, 3, 4)),
-lexscored AS (
-  SELECT q.query_id, p.doc_id,
-         CAST({_r6(bm25_s.replace("idf", "FLOOR(ln((nd.n - dfs.df + 0.5) / (dfs.df + 0.5) + 1.0) * 1000000 + 0.5) / 1000000"))} AS DECIMAL(12,6)) AS s
-  FROM postings p JOIN q USING (term) JOIN dfs USING (term) CROSS JOIN nd
-  WHERE p.doc_id <> q.query_id
-),
-lexdoc AS (
-  SELECT query_id, doc_id, CAST(SUM(s) AS DOUBLE) AS score FROM lexscored GROUP BY query_id, doc_id
-),
-lex AS (
-  SELECT query_id, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-  FROM lexdoc QUALIFY rank <= 20
-),
-{_kparts},
-qf AS (
-  SELECT vec_id AS query_id, qv, cid FROM df WHERE vec_id IN (1, 2, 3, 4)
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) <= 3
-),
-semscored AS (
-  SELECT qf.query_id, af.vec_id AS doc_id, {_cosine_sql("qf.qv", "af.qv")} AS cosine
-  FROM qf JOIN af ON qf.cid = af.cid AND af.vec_id <> qf.query_id
-),
-sem AS (
-  SELECT query_id, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, doc_id) AS rank
-  FROM semscored QUALIFY rank <= 20
-),
-contrib AS (
-  SELECT query_id, doc_id, CAST({_r6("1.0 / (60 + rank)")} AS DECIMAL(12,6)) AS c,
-         TRUE AS in_lex, FALSE AS in_sem FROM lex
-  UNION ALL
-  SELECT query_id, doc_id, CAST({_r6("1.0 / (60 + rank)")} AS DECIMAL(12,6)) AS c,
-         FALSE AS in_lex, TRUE AS in_sem FROM sem
-),
-fused AS (
-  SELECT query_id, doc_id, CAST(SUM(c) AS DOUBLE) AS rrf_score,
-         MAX(in_lex) AS in_lex, MAX(in_sem) AS in_sem
-  FROM contrib GROUP BY query_id, doc_id
-)
-SELECT query_id, doc_id, rrf_score, in_lex, in_sem, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY rrf_score DESC, doc_id) AS rank
-  FROM fused
-) WHERE rank <= 5
-"""
-
-    # Deployment-shape hybrid: same BM25 lexical chain, semantic
-    # candidates from the IVF-PQ chain (training is RNG-free, so the
-    # persisted-index search the Spark side runs is bit-identical to
-    # this in-query unroll with the same parameters — the
-    # ann_ivfpq_persisted_topk precedent). The _ivfpq_topk_sql parts
-    # keep a disjoint namespace (v/c*/df/af + p*-prefixed PQ CTEs +
-    # pqv/qs/lut/approx/cand/exact) next to the BM25 chain's
-    # toks/postings*/dfs/nd/q/lex*.
-    _pqsem = ",\n".join(
-        _ivfpq_topk_sql(
-            n_cells=16,
-            probes=6,
-            m=8,
-            n_centroids=8,
-            iters=2,
-            rerank=40,
-            query_filter="vec_id IN (1, 2, 3, 4)",
-            parts_only=True,
-        )
-    )
-    o["doc_hybrid_rrf_search_pq"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS}) AS term FROM documents
-),
-postings0 AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-dl AS (SELECT doc_id, SUM(tf) AS dl FROM postings0 GROUP BY doc_id),
-postings AS (SELECT p.doc_id, p.term, p.tf, dl.dl FROM postings0 p JOIN dl USING (doc_id)),
-dfs AS (SELECT term, COUNT(*) AS df FROM postings GROUP BY term),
-nd AS (
-  SELECT (SELECT COUNT(*) FROM documents) AS n,
-         CAST((SELECT COALESCE(SUM(dl), 0) FROM dl) AS DOUBLE)
-           / CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS avgdl
-),
-q AS (SELECT DISTINCT doc_id AS query_id, term FROM toks WHERE doc_id IN (1, 2, 3, 4)),
-lexscored AS (
-  SELECT q.query_id, p.doc_id,
-         CAST({_r6(bm25_s.replace("idf", "FLOOR(ln((nd.n - dfs.df + 0.5) / (dfs.df + 0.5) + 1.0) * 1000000 + 0.5) / 1000000"))} AS DECIMAL(12,6)) AS s
-  FROM postings p JOIN q USING (term) JOIN dfs USING (term) CROSS JOIN nd
-  WHERE p.doc_id <> q.query_id
-),
-lexdoc AS (
-  SELECT query_id, doc_id, CAST(SUM(s) AS DOUBLE) AS score FROM lexscored GROUP BY query_id, doc_id
-),
-lex AS (
-  SELECT query_id, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-  FROM lexdoc QUALIFY rank <= 20
-),
-{_pqsem},
-sem AS (
-  SELECT query_id, neighbor_id AS doc_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM exact QUALIFY rank <= 20
-),
-contrib AS (
-  SELECT query_id, doc_id, CAST({_r6("1.0 / (60 + rank)")} AS DECIMAL(12,6)) AS c,
-         TRUE AS in_lex, FALSE AS in_sem FROM lex
-  UNION ALL
-  SELECT query_id, doc_id, CAST({_r6("1.0 / (60 + rank)")} AS DECIMAL(12,6)) AS c,
-         FALSE AS in_lex, TRUE AS in_sem FROM sem
-),
-fused AS (
-  SELECT query_id, doc_id, CAST(SUM(c) AS DOUBLE) AS rrf_score,
-         MAX(in_lex) AS in_lex, MAX(in_sem) AS in_sem
-  FROM contrib GROUP BY query_id, doc_id
-)
-SELECT query_id, doc_id, rrf_score, in_lex, in_sem, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY rrf_score DESC, doc_id) AS rank
-  FROM fused
-) WHERE rank <= 5
-"""
-
-    # Cluster-balanced diversity sample: the _kmeans_cells_sql chain's
-    # final assignment (af) + per-cid md5-ranked quota of 20 — the exact
-    # twin of kmeans_fit + _assign + the stratified-sampler window.
-    o["emb_cluster_balanced_sample"] = (
-        "WITH " + ",\n".join(_kmeans_cells_sql(16, 2)) + ",\n"
-        "sizes AS (SELECT cid, COUNT(*) AS cluster_n FROM af GROUP BY cid),\n"
-        "ranked AS (\n"
-        "  SELECT vec_id, cid,\n"
-        "         ROW_NUMBER() OVER (PARTITION BY cid ORDER BY md5(CAST(vec_id AS VARCHAR) || '|cbal'), vec_id) AS pick_rank\n"
-        "  FROM af\n"
-        ")\n"
-        "SELECT r.vec_id, r.cid, CAST(s.cluster_n AS INT) AS cluster_n,\n"
-        "       CAST(r.pick_rank AS INT) AS pick_rank\n"
-        "FROM ranked r JOIN sizes s USING (cid) WHERE r.pick_rank <= 20"
-    )
-
-    # Self-trained unigram-LM surprisal: per-token ln(T/ct) round-6'd to
-    # DECIMAL(12,6), exact decimal weighted sum per doc, one double
-    # division for the mean. LEFT JOIN keeps empty docs (null surprisal).
-    o["doc_surprisal"] = f"""
-WITH toks AS (SELECT doc_id, unnest({_TOKENS}) AS term FROM documents),
-postings AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-term_ct AS (SELECT term, SUM(tf) AS ct FROM postings GROUP BY term),
-tot AS (SELECT SUM(ct) AS t_total FROM term_ct),
-scored AS (
-  SELECT p.doc_id, p.tf,
-         {_r6("ln(CAST(tot.t_total AS DOUBLE) / CAST(term_ct.ct AS DOUBLE))")} AS surp
-  FROM postings p JOIN term_ct USING (term) CROSS JOIN tot
-),
-per_doc AS (
-  SELECT doc_id, SUM(tf) AS n_tokens, SUM(tf * surp) AS sum_surp
-  FROM scored GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(COALESCE(p.n_tokens, 0) AS INT) AS n_tokens,
-       CAST({_r6("CAST(p.sum_surp AS DOUBLE) / p.n_tokens")} AS DOUBLE) AS surprisal
-FROM (SELECT DISTINCT doc_id FROM documents) d LEFT JOIN per_doc p USING (doc_id)
-"""
-
-    # Incremental ingestion dedup: odd-id "new batch" vs even-id indexed
-    # corpus — band-join candidates (new × index only), exact Jaccard
-    # verify, best match per new doc (ties to smallest corpus id).
-    o["doc_incremental_dedup"] = f"""
-WITH {_MINHASH_SIG_CTES}, cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-  WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id
-), common AS (
-  SELECT c.id_a, c.id_b, COUNT(*) AS common
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.id_a
-  JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-  GROUP BY c.id_a, c.id_b
-), verified AS (
-  SELECT id_a, id_b,
-         {_r6("CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)")} AS jaccard
-  FROM common
-  JOIN sizes sa ON sa.doc_id = id_a
-  JOIN sizes sb ON sb.doc_id = id_b
-  WHERE {_r6("CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)")} >= 0.2
-), best AS (
-  SELECT id_b, id_a AS match_id, jaccard,
-         ROW_NUMBER() OVER (PARTITION BY id_b ORDER BY jaccard DESC, id_a) AS rn
-  FROM verified
-)
-SELECT n.doc_id, b.match_id IS NOT NULL AS is_dup,
-       b.match_id, CAST(b.jaccard AS DOUBLE) AS jaccard
-FROM (SELECT doc_id FROM documents WHERE doc_id % 2 = 1) n
-LEFT JOIN (SELECT * FROM best WHERE rn = 1) b ON n.doc_id = b.id_b
-"""
-
-    # Markov transition counts: lead() over the same (ts, event_id) total
-    # order in both engines.
-    o["events_transitions"] = """
-WITH seq AS (
-  SELECT user_id, event_type AS from_type,
-         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-  FROM events
-)
-SELECT from_type, to_type, COUNT(*) AS n_transitions
-FROM seq WHERE to_type IS NOT NULL GROUP BY from_type, to_type
-"""
-
-    # RANGE-framed trailing window: epoch-second ORDER BY so both engines
-    # evaluate the identical numeric range frame; decimal sums exact.
-    o["events_trailing_7d"] = f"""
-SELECT event_id, user_id,
-       CAST(SUM({_r2("value")}) OVER (
-         PARTITION BY user_id ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-         RANGE BETWEEN 604800 PRECEDING AND CURRENT ROW) AS DOUBLE) AS trailing_7d_value
-FROM events
-"""
-
-    # Provenance oracle: the views hide filenames, so assert the known
-    # one-file-per-table layout; Spark derives it from _metadata.
-    o["files_provenance"] = """
-SELECT 'lineitem' AS tbl, 'lineitem.parquet' AS file_name,
-       COUNT(*) AS n_rows, COUNT(*) - 1 AS max_row_index FROM lineitem
-UNION ALL SELECT 'orders', 'orders.parquet', COUNT(*), COUNT(*) - 1 FROM orders
-UNION ALL SELECT 'documents', 'documents.parquet', COUNT(*), COUNT(*) - 1 FROM documents
-UNION ALL SELECT 'embeddings', 'embeddings.parquet', COUNT(*), COUNT(*) - 1 FROM embeddings
-"""
-
-    # Materialized-view merge oracle: FULL RECOMPUTE over all rows — not
-    # a mirror of the split/merge path; equality is the distributivity
-    # proof (decimal sums associate exactly).
-    o["revenue_incremental_merge"] = f"""
-SELECT o_orderstatus,
-       CAST(SUM({_r2("o_totalprice")}) AS DOUBLE) AS revenue,
-       COUNT(*) AS n
-FROM orders GROUP BY o_orderstatus
-"""
-
-    # Schema-driven profiler: one UNION-ALL branch per column (the oracle
-    # pays per-column aggregates; Spark runs ONE generated aggregate).
-    # "column" is quoted — reserved in DuckDB.
-    def _profile_branch(col: str, dtype: str) -> str:
-        return (
-            f"SELECT '{col}' AS \"column\", '{dtype}' AS dtype, COUNT(*) AS n, "
-            f"CAST(SUM(CASE WHEN {col} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null, "
-            f"COUNT(DISTINCT {col}) AS n_distinct, "
-            f"CAST(MIN({col}) AS VARCHAR) AS min_str, "
-            f"CAST(MAX({col}) AS VARCHAR) AS max_str FROM orders"
-        )
-
-    o["orders_profile"] = " UNION ALL ".join(
-        _profile_branch(c, t)
-        for c, t in [
-            ("o_orderkey", "bigint"),
-            ("o_custkey", "bigint"),
-            ("o_orderstatus", "string"),
-            ("o_orderdate", "timestamp"),
-            ("o_orderpriority", "string"),
-        ]
-    )
-
-    # Benford first-digit screen: digits from the string form of the ABS
-    # value (mantissa-first, so scientific notation cannot change the
-    # first significant digit); expected shares are the SAME round-6
-    # Python literals Spark embeds.
-    import math as _math
-
-    _benford_case = " ".join(
-        f"WHEN digit = {d} THEN {round(_math.log10(1 + 1 / d), 6)!r}"
-        for d in range(1, 10)
-    )
-    o["lineitem_benford"] = f"""
-WITH d AS (
-  SELECT l_returnflag,
-         CAST(substring(regexp_replace(CAST(abs(l_extendedprice) AS VARCHAR), '[^1-9]', '', 'g'), 1, 1) AS INT) AS digit
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND abs(l_extendedprice) > 0
-),
-d2 AS (SELECT * FROM d WHERE digit IS NOT NULL),
-counts AS (SELECT l_returnflag, digit, COUNT(*) AS n_obs FROM d2 GROUP BY l_returnflag, digit),
-totals AS (SELECT l_returnflag, COUNT(*) AS total FROM d2 GROUP BY l_returnflag)
-SELECT c.l_returnflag, c.digit, c.n_obs,
-       CAST({_r6("CAST(c.n_obs AS DOUBLE) / t.total")} AS DOUBLE) AS obs_share,
-       CAST(CASE {_benford_case} ELSE 0.0 END AS DOUBLE) AS exp_share,
-       CAST({_r6("abs(CAST(c.n_obs AS DOUBLE) / t.total - (CASE " + _benford_case + " ELSE 0.0 END))")} AS DOUBLE) AS abs_dev
-FROM counts c JOIN totals t USING (l_returnflag)
-"""
-
-    # Median/MAD modified z-score: exact quantile_cont medians, score
-    # round-6'd before the threshold so flags can't flip cross-engine.
-    o["events_robust_outliers"] = """
-WITH med AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS med FROM events GROUP BY event_type
-),
-dev AS (
-  SELECT e.event_type, e.value, abs(e.value - m.med) AS absdev
-  FROM events e JOIN med m USING (event_type)
-),
-mad AS (
-  SELECT event_type, quantile_cont(absdev, 0.5) AS mad FROM dev GROUP BY event_type
-),
-scored AS (
-  SELECT d.event_type,
-         CASE WHEN m.mad > 0 THEN
-           CAST(FLOOR((0.6745 * d.absdev / m.mad) * 1000000 + 0.5) / 1000000 AS DECIMAL(15,6))
-         END AS score,
-         CASE WHEN m.mad > 0 THEN
-           (CAST(FLOOR((0.6745 * d.absdev / m.mad) * 1000000 + 0.5) / 1000000 AS DECIMAL(15,6)) > 2.0)
-         ELSE FALSE END AS is_outlier
-  FROM dev d JOIN mad m USING (event_type)
-)
-SELECT event_type, COUNT(*) AS n,
-       CAST(SUM(CAST(is_outlier AS INT)) AS BIGINT) AS n_outliers,
-       CAST(MAX(score) AS DOUBLE) AS max_score
-FROM scored GROUP BY event_type
-"""
-
-    # Last-touch attribution: the union-window as-of pattern carrying the
-    # touch payload; conversions sort after touches at equal (ts) via the
-    # is_conv key, microsecond-exact 24h lookback in both engines.
-    o["events_attribution"] = """
-WITH u AS (
-  SELECT user_id, ts, event_id, event_type,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_conv
-  FROM events WHERE event_type IN ('view', 'click', 'purchase')
-),
-m AS (
-  SELECT *,
-    last_value(CASE WHEN is_conv = 0 THEN event_type END IGNORE NULLS) OVER (
-      PARTITION BY user_id ORDER BY ts, is_conv, event_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tt,
-    last_value(CASE WHEN is_conv = 0 THEN ts END IGNORE NULLS) OVER (
-      PARTITION BY user_id ORDER BY ts, is_conv, event_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tts
-  FROM u
-)
-SELECT attributed, COUNT(*) AS n_conversions FROM (
-  SELECT CASE WHEN tts IS NOT NULL AND ts - tts <= INTERVAL 86400 SECOND
-              THEN tt ELSE 'organic' END AS attributed
-  FROM m WHERE is_conv = 1
-) GROUP BY attributed
-"""
-
-    # Calendar spine + last-observation-carried-forward: bounds from the
-    # data, per-user daily series, IGNORE NULLS running last.
-    o["events_gap_fill"] = f"""
-WITH daily AS (
-  SELECT user_id, day, v FROM (
-    SELECT user_id, CAST(ts AS DATE) AS day, {_r2("value")} AS v,
-           ROW_NUMBER() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-                              ORDER BY ts DESC, event_id DESC) AS rn
-    FROM events
-  ) WHERE rn = 1
-),
-bounds AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
-spine AS (
-  SELECT u.user_id, CAST(unnest(generate_series(b.lo, b.hi, INTERVAL 1 DAY)) AS DATE) AS day
-  FROM (SELECT DISTINCT user_id FROM daily) u CROSS JOIN bounds b
-),
-j AS (
-  SELECT s.user_id, s.day, d.v FROM spine s LEFT JOIN daily d USING (user_id, day)
-)
-SELECT user_id, day AS fecha,
-       CAST(last_value(v IGNORE NULLS) OVER (
-         PARTITION BY user_id ORDER BY day
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS value
-FROM j
-"""
-
-    # Strict-order funnel: step k = earliest event of its type strictly
-    # after the user's step k-1 time, every step within 24 h of step 0;
-    # level = max step reached.
-    o["events_funnel"] = """
-WITH s1 AS (
-  SELECT user_id, MIN(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY user_id
-),
-s2 AS (
-  SELECT e.user_id, MIN(e.ts) AS t2
-  FROM events e JOIN s1 ON e.user_id = s1.user_id
-   AND e.ts > s1.t1 AND e.ts <= s1.t1 + INTERVAL 86400 SECOND
-  WHERE e.event_type = 'click' GROUP BY e.user_id
-),
-s3 AS (
-  SELECT e.user_id, MIN(e.ts) AS t3
-  FROM events e
-  JOIN s2 ON e.user_id = s2.user_id AND e.ts > s2.t2
-  JOIN s1 ON e.user_id = s1.user_id AND e.ts <= s1.t1 + INTERVAL 86400 SECOND
-  WHERE e.event_type = 'purchase' GROUP BY e.user_id
-),
-lv AS (
-  SELECT user_id, 1 AS l FROM s1
-  UNION ALL SELECT user_id, 2 FROM s2
-  UNION ALL SELECT user_id, 3 FROM s3
-)
-SELECT steps_completed, COUNT(*) AS n_users FROM (
-  SELECT user_id, CAST(MAX(l) AS INT) AS steps_completed FROM lv GROUP BY user_id
-) GROUP BY steps_completed
-"""
-
-    # Weekly retention triangle: ISO-Monday date_trunc in both engines.
-    o["events_retention"] = """
-WITH first AS (
-  SELECT user_id, MIN(date_trunc('week', ts)) AS cohort FROM events GROUP BY user_id
-),
-active AS (
-  SELECT DISTINCT user_id, date_trunc('week', ts) AS wk FROM events
-)
-SELECT CAST(f.cohort AS DATE) AS cohort_week,
-       CAST(date_diff('day', f.cohort, a.wk) // 7 AS INT) AS week_offset,
-       COUNT(*) AS n_users
-FROM active a JOIN first f USING (user_id)
-GROUP BY cohort_week, week_offset
-"""
-
-    # Overlapping token-window chunking: 1-based inclusive list slices in
-    # DuckDB mirror Spark's F.slice; chunk starts are range(0, len, 24).
-    o["doc_chunks"] = f"""
-WITH base AS (SELECT doc_id, {_TOKENS} AS toks FROM documents),
-ex AS (
-  SELECT doc_id, toks, CAST(u.s AS INT) AS start
-  FROM base, unnest(range(0, len(toks), 24)) u(s)
-  WHERE len(toks) > 0
-)
-SELECT doc_id, CAST(start // 24 AS INT) AS chunk_id,
-       array_to_string(toks[start + 1:start + 32], ' ') AS chunk_text,
-       CAST(len(toks[start + 1:start + 32]) AS INT) AS n_tokens
-FROM ex
-"""
-
-    # Variant-typed extraction: the oracle extracts the same path with
-    # DuckDB JSON operators. The runtime-discovered variant schema
-    # rendering is Spark-version-dependent, so it is asserted in pytest
-    # (tests/test_oracle_types.py) rather than hash-compared here; sum_k is cast
-    # BIGINT so DuckDB's HUGEINT never reaches the typed hasher.
-    o["events_variant_stats"] = """
-SELECT event_type, COUNT(*) AS n,
-       CAST(SUM(CAST(props->>'$.k' AS INT)) AS BIGINT) AS sum_k,
-       COUNT(DISTINCT CAST(props->>'$.k' AS INT)) AS distinct_k
-FROM events GROUP BY event_type
-"""
-
-    # SimHash-blocked candidates verified by true edit distance — both
-    # engines run the identical Levenshtein DP, so dist is exact; only
-    # the ratio is rounded (portable round-6).
-    o["doc_edit_distance_dups"] = f"""
-WITH fp AS ({_SIMHASH_SQL}),
-banded AS (
-  SELECT doc_id, simhash, k AS band, (simhash >> (8 * CAST(k AS INT))) & 255 AS band_val
-  FROM fp CROSS JOIN range(4) t(k)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.simhash AS sh_a, b.simhash AS sh_b
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-),
-ham AS (
-  SELECT id_a, id_b, CAST(bit_count(xor(sh_a, sh_b)) AS INT) AS hamming
-  FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= 3
-),
-verified AS (
-  SELECT h.id_a, h.id_b, h.hamming,
-         CAST(levenshtein(da.text, db.text) AS INT) AS dist,
-         CAST({_r6("CAST(levenshtein(da.text, db.text) AS DOUBLE) / greatest(length(da.text), length(db.text), 1)")} AS DOUBLE) AS ratio
-  FROM ham h
-  JOIN documents da ON da.doc_id = h.id_a
-  JOIN documents db ON db.doc_id = h.id_b
-)
-SELECT id_a, id_b, hamming, dist, ratio FROM verified WHERE ratio <= 0.6
-"""
-
-    # Johnson-Lindenstrauss ±1 projection: rebuild the SAME matrix from
-    # md5("jl|pos|out_dim") (sign = +1 iff first hex nibble even), exact
-    # int64 accumulation, one round-6'd dequantizing division.
-    o["emb_random_projection"] = f"""
-WITH q AS (
-  SELECT vec_id, i - 1 AS pos, ({_QUANT_VEC})[i] AS qv
-  FROM embeddings CROSS JOIN range(1, 65) t(i)
-),
-mat AS (
-  SELECT p.range AS pos, k.range AS out_dim,
-         CASE WHEN strpos('02468ace', substr(md5('jl|' || p.range || '|' || k.range), 1, 1)) > 0
-              THEN 1 ELSE -1 END AS sign
-  FROM range(0, 64) p CROSS JOIN range(0, 16) k
-)
-SELECT q.vec_id, CAST(m.out_dim AS INT) AS out_dim,
-       CAST({_r6("CAST(SUM(q.qv * m.sign) AS DOUBLE) / 1000.0")} AS DOUBLE) AS value
-FROM q JOIN mat m USING (pos)
-GROUP BY q.vec_id, m.out_dim
-"""
-
-    # tf-idf cosine all-pairs similarity: INTEGER fixed-point mirror of
-    # operators.retrieval.tfidf_doc_pairs — weights in ten-thousandths
-    # (BIGINT), unit weights in billionths (BIGINT), exact integer norm
-    # and dot-product sums; every float step is a single correctly-
-    # rounded IEEE op, so both engines are bit-identical by construction.
-    o["doc_tfidf_pairs"] = f"""
-WITH d AS (SELECT * FROM documents WHERE doc_id < 200),
-toks AS (SELECT doc_id, unnest({_TOKENS}) AS term FROM d),
-postings AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-dfs AS (SELECT term, COUNT(*) AS df FROM postings GROUP BY term),
-nd AS (SELECT COUNT(*) AS n FROM d),
-w AS (
-  SELECT p.doc_id, p.term,
-         CAST(FLOOR(((1.0 + ln(CAST(p.tf AS DOUBLE)))
-              * (FLOOR((ln((nd.n + 1.0) / (dfs.df + 1.0)) + 1.0) * 1000000.0 + 0.5) / 1000000.0))
-              * 10000.0 + 0.5) AS BIGINT) AS wi
-  FROM postings p JOIN dfs USING (term) CROSS JOIN nd
-),
-norms AS (SELECT doc_id, SUM(wi * wi) AS norm2 FROM w GROUP BY doc_id),
-unitv AS (
-  SELECT w.doc_id, w.term,
-         CAST(FLOOR((CAST(w.wi AS DOUBLE) / sqrt(CAST(n2.norm2 AS DOUBLE)))
-              * 1000000000.0 + 0.5) AS BIGINT) AS u
-  FROM w JOIN norms n2 USING (doc_id)
-),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, SUM(a.u * b.u) AS dot
-  FROM unitv a JOIN unitv b ON a.term = b.term AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-simt AS (
-  SELECT doc_a, doc_b,
-         FLOOR((CAST(dot AS DOUBLE) / 1e18) * 1000000.0 + 0.5) / 1000000.0 AS sim
-  FROM pairs
-),
-sym AS (
-  SELECT doc_a, doc_b, sim FROM simt
-  UNION ALL
-  SELECT doc_b AS doc_a, doc_a AS doc_b, sim FROM simt
-)
-SELECT doc_a, doc_b, CAST(sim AS DOUBLE) AS sim,
-       CAST(ROW_NUMBER() OVER (PARTITION BY doc_a ORDER BY sim DESC, doc_b) AS INT) AS rank
-FROM sym QUALIFY rank <= 5
-"""
-
-    # FineWeb-style per-source curation report: exact-dup fraction via
-    # distinct md5, exact decimal quality sum, keep/drop gate computed on
-    # the ROUNDED doubles (mirrors operators.text_quality.
-    # source_quality_report exactly, including the gate's operand order).
-    o["source_quality_report"] = f"""
-WITH per_doc AS (
-  SELECT source, md5(text) AS h, length(text) AS len, {_r6(quality)} AS q
-  FROM documents
-),
-rep AS (
-  SELECT source, COUNT(*) AS n_docs, COUNT(DISTINCT h) AS n_distinct,
-         SUM(q) AS q_sum, SUM(len) AS len_sum,
-         SUM(CASE WHEN len < 100 THEN 1 ELSE 0 END) AS n_short
-  FROM per_doc GROUP BY source
-),
-proj AS (
-  SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
-         CAST({_r6("1.0 - CAST(n_distinct AS DOUBLE) / n_docs")} AS DOUBLE) AS dup_frac,
-         CAST({_r6("CAST(q_sum AS DOUBLE) / n_docs")} AS DOUBLE) AS mean_quality,
-         CAST({_r6("CAST(len_sum AS DOUBLE) / n_docs")} AS DOUBLE) AS mean_chars,
-         CAST({_r6("CAST(n_short AS DOUBLE) / n_docs")} AS DOUBLE) AS short_frac
-  FROM rep
-)
-SELECT source, n_docs, dup_frac, mean_quality, mean_chars, short_frac,
-       (dup_frac <= 0.5 AND mean_quality >= 0.5) AS kept
-FROM proj
-"""
-
-    # Kimball point-in-time lookup: orders joined to the SCD2 segment
-    # version valid at the order date (half-open interval, new version
-    # wins on the change date).
-    o["scd2_pit_lookup"] = """
-WITH cur AS (
-  SELECT c_custkey AS cliente_key, c_mktsegment AS segmento,
-         DATE '1990-01-01' AS valid_from, DATE '9999-12-31' AS valid_to
-  FROM customer
-), upd AS (
-  SELECT c_custkey AS cliente_key, 'SEGMENTO_NUEVO' AS segmento FROM customer WHERE c_custkey % 10 = 0
-), scd AS (
-  SELECT c.cliente_key, c.segmento, c.valid_from, c.valid_to
-  FROM cur c LEFT JOIN upd u ON c.cliente_key = u.cliente_key
-  WHERE u.cliente_key IS NULL OR c.segmento IS NOT DISTINCT FROM u.segmento
-  UNION ALL
-  SELECT c.cliente_key, c.segmento, c.valid_from, DATE '1996-06-01'
-  FROM cur c JOIN upd u ON c.cliente_key = u.cliente_key
-  WHERE c.segmento IS DISTINCT FROM u.segmento
-  UNION ALL
-  SELECT c.cliente_key, u.segmento, DATE '1996-06-01', DATE '9999-12-31'
-  FROM cur c JOIN upd u ON c.cliente_key = u.cliente_key
-  WHERE c.segmento IS DISTINCT FROM u.segmento
-)
-SELECT o.o_orderkey AS orden_id, o.o_custkey AS cliente_key, o.o_orderdate AS fecha,
-       d.segmento, d.valid_from
-FROM orders o LEFT JOIN scd d
-  ON o.o_custkey = d.cliente_key
- AND o.o_orderdate >= d.valid_from AND o.o_orderdate < d.valid_to
-"""
-
-    # session-5: closed-form grouped statistics. The OLS oracle is
-    # GENERATED from the same parameters as the Spark query (single
-    # source of truth for the normal-equation formulation).
-    from data_warehouse_punta_fina_spark.operators.stats import grouped_ols_oracle_sql
-
-    o["lineitem_ols_trend"] = grouped_ols_oracle_sql(
-        "SELECT l_returnflag AS flag, l_linestatus AS status, l_quantity, l_extendedprice FROM lineitem",
-        ["flag", "status"],
-        "l_quantity",
-        "l_extendedprice",
-        x_scale=3,
-        y_scale=2,
-    )
-
-    _CHI_R6 = "CAST(CAST(FLOOR(({e}) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)) AS DOUBLE)"
-    o["events_chi2_daypart"] = f"""
-WITH cells AS (
-  SELECT event_type, CAST(CAST(FLOOR(hour(ts) / 6) AS BIGINT) * 6 AS INT) AS daypart,
-         COUNT(*) AS observed
-  FROM events GROUP BY 1, 2
-),
-ra AS (SELECT event_type, SUM(observed) AS _ra FROM cells GROUP BY event_type),
-cb AS (SELECT daypart, SUM(observed) AS _cb FROM cells GROUP BY daypart),
-tot AS (SELECT SUM(observed) AS _n FROM cells),
-e AS (
-  SELECT c.event_type, c.daypart, c.observed,
-         {_CHI_R6.format(e="CAST(_ra AS DOUBLE) * CAST(_cb AS DOUBLE) / CAST(_n AS DOUBLE)")} AS expected
-  FROM cells c JOIN ra USING (event_type) JOIN cb USING (daypart) CROSS JOIN tot
-)
-SELECT event_type, daypart, observed,
-       expected,
-       {_CHI_R6.format(e="(CAST(observed AS DOUBLE) - expected) * (CAST(observed AS DOUBLE) - expected) / expected")} AS chi2_term
-FROM e
-"""
-
-    # session-6: mutual information over the same contingency as the χ²
-    # screen — lr rounded FIRST (absorbs ln's last ulp), term second,
-    # mirroring operators.stats.mutual_information's op order
-    o["events_type_hour_mi"] = f"""
-WITH cells AS (
-  SELECT event_type, CAST(CAST(FLOOR(hour(ts) / 6) AS BIGINT) * 6 AS INT) AS daypart,
-         COUNT(*) AS observed
-  FROM events GROUP BY 1, 2
-),
-ra AS (SELECT event_type, SUM(observed) AS _na FROM cells GROUP BY event_type),
-cb AS (SELECT daypart, SUM(observed) AS _nb FROM cells GROUP BY daypart),
-tot AS (SELECT SUM(observed) AS _n FROM cells),
-e AS (
-  SELECT c.event_type, c.daypart, c.observed, tot._n,
-         {_CHI_R6.format(e="ln(CAST(_n AS DOUBLE) * CAST(observed AS DOUBLE) / (CAST(_na AS DOUBLE) * CAST(_nb AS DOUBLE)))")} AS _lr
-  FROM cells c JOIN ra USING (event_type) JOIN cb USING (daypart) CROSS JOIN tot
-)
-SELECT event_type, daypart, observed,
-       {_CHI_R6.format(e="(CAST(observed AS DOUBLE) / CAST(_n AS DOUBLE)) * _lr")} AS mi_term
-FROM e
-"""
-
-    # session-6: grid-KS drift — decile cuts fitted on the click slice,
-    # exact conditional counts, round-6 CDFs (operators.stats.ks_grid_drift)
-    _ks_cuts = ", ".join(
-        f"quantile_cont(value, {j / 10!r}) AS cut_{j}" for j in range(1, 10)
-    )
-    _ks_counts = ", ".join(
-        f"SUM(CASE WHEN event_type = 'click' AND value <= cut_{j} THEN 1 ELSE 0 END) AS cb{j}, "
-        f"SUM(CASE WHEN event_type <> 'click' AND value <= cut_{j} THEN 1 ELSE 0 END) AS cc{j}"
-        for j in range(1, 10)
-    )
-    _ks_rows = "\nUNION ALL\n".join(
-        f"SELECT {j} AS j, CAST(cut_{j} AS DOUBLE) AS cut, n_base, n_cur, cb{j} AS _cb, cc{j} AS _cc FROM agg, cuts"
-        for j in range(1, 10)
-    )
-    o["events_ks_value_drift"] = f"""
-WITH src AS (SELECT event_type, value FROM events),
-cuts AS (SELECT {_ks_cuts} FROM src WHERE event_type = 'click'),
-agg AS (
-  SELECT CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
-         CAST(SUM(CASE WHEN event_type <> 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_cur,
-         {_ks_counts}
-  FROM src CROSS JOIN cuts
-),
-rows_ AS ({_ks_rows})
-SELECT CAST(j AS INT) AS j, cut, n_base, n_cur,
-       {_CHI_R6.format(e="CAST(_cb AS DOUBLE) / CAST(n_base AS DOUBLE)")} AS f_base,
-       {_CHI_R6.format(e="CAST(_cc AS DOUBLE) / CAST(n_cur AS DOUBLE)")} AS f_cur,
-       {_CHI_R6.format(e="abs(CAST(_cb AS DOUBLE) / CAST(n_base AS DOUBLE) - CAST(_cc AS DOUBLE) / CAST(n_cur AS DOUBLE))")} AS ks_term
-FROM rows_
-"""
-
-    # session-6: per-nation Gini via the sorted-rank identity — unit
-    # totals are exact int64 cents, rank-weighted sums exact, closing
-    # formula mirrors operators.stats.group_concentration's op order
-    o["nation_revenue_concentration"] = f"""
-WITH t AS (
-  SELECT n_name, c_custkey AS u,
-         CAST(FLOOR(CAST(o_totalprice AS DOUBLE) * 100.0 + 0.5) AS BIGINT) AS xq
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  JOIN nation ON c_nationkey = n_nationkey
-),
-tot AS (SELECT n_name, u, SUM(xq) AS x FROM t GROUP BY 1, 2),
-rk AS (SELECT n_name, u, x, ROW_NUMBER() OVER (PARTITION BY n_name ORDER BY x, u) AS i FROM tot),
-a AS (
-  SELECT n_name, COUNT(*) AS n_units, SUM(x) AS sx, SUM(i * x) AS six, MAX(x) AS xmax
-  FROM rk GROUP BY n_name
-)
-SELECT n_name, n_units,
-       {_CHI_R6.format(e="CAST(sx AS DOUBLE) / 100.0")} AS total,
-       {_CHI_R6.format(e="2.0 * CAST(six AS DOUBLE) / (CAST(n_units AS DOUBLE) * CAST(sx AS DOUBLE)) - (CAST(n_units AS DOUBLE) + 1.0) / CAST(n_units AS DOUBLE)")} AS gini,
-       {_CHI_R6.format(e="CAST(xmax AS DOUBLE) / CAST(sx AS DOUBLE)")} AS top_share
-FROM a
-"""
-
-    # session-6: k-core peel unrolled to the same max_iter as the Spark
-    # side (early exit never desynchronizes — converged rounds are no-ops).
-    # Depth 3 since round 7: measured convergence is 1 effective round at
-    # every probed SF incl. .scaling/sf0.5 (see trade_kcore's query
-    # comment); rounds 2-3 are the convergence no-op + margin.
-    _kcore_rounds = []
-    _prev_e = "e0"
-    for _r in range(1, 4):
-        # MATERIALIZED: each round references its predecessor ~5x; default
-        # CTE inlining would expand the chain exponentially (observed as
-        # "too many open files" on the lineitem scan at depth 6)
-        _kcore_rounds.append(
-            f"d{_r} AS (SELECT node, COUNT(*) AS deg FROM "
-            f"(SELECT u AS node FROM {_prev_e} UNION ALL SELECT v AS node FROM {_prev_e}) GROUP BY node),\n"
-            f"k{_r} AS (SELECT node FROM d{_r} WHERE deg >= 10),\n"
-            f"e{_r} AS MATERIALIZED (SELECT e.u, e.v FROM {_prev_e} e "
-            f"JOIN k{_r} a ON a.node = e.u JOIN k{_r} b ON b.node = e.v)"
-        )
-        _prev_e = f"e{_r}"
-    o["trade_kcore"] = (
-        """
-WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT o_custkey AS u, l_suppkey + 1000000 AS v
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-),
-"""
-        + ",\n".join(_kcore_rounds)
-        + f"""
-SELECT node, CAST(COUNT(*) AS BIGINT) AS core_degree
-FROM (SELECT u AS node FROM {_prev_e} UNION ALL SELECT v AS node FROM {_prev_e})
-GROUP BY node HAVING COUNT(*) >= 10
-"""
-    )
-
-    # session-5: embedding centroid drift — per-label per-dim int sums,
-    # n factors cancel in the centroid cosine so every sum stays integral
-    o["emb_centroid_drift"] = f"""
-WITH cells AS (
-  SELECT label, i AS pos,
-         SUM(CASE WHEN vec_id % 2 = 0 THEN qv[i] END) AS s_a,
-         COUNT(CASE WHEN vec_id % 2 = 0 THEN 1 END) AS n_a,
-         SUM(CASE WHEN vec_id % 2 = 1 THEN qv[i] END) AS s_b,
-         COUNT(CASE WHEN vec_id % 2 = 1 THEN 1 END) AS n_b
-  FROM (SELECT vec_id, label, {_QUANT_VEC} AS qv FROM embeddings), generate_series(1, 64) AS g(i)
-  GROUP BY label, i
-),
-agg AS (
-  SELECT label, MAX(n_a) AS n_a, MAX(n_b) AS n_b,
-         SUM(CAST(s_a AS DECIMAL(38,0)) * s_b) AS _dot,
-         SUM(CAST(s_a AS DECIMAL(38,0)) * s_a) AS _na2,
-         SUM(CAST(s_b AS DECIMAL(38,0)) * s_b) AS _nb2
-  FROM cells GROUP BY label
-  HAVING MAX(n_a) > 0 AND MAX(n_b) > 0
-)
-SELECT label, n_a, n_b,
-       CAST(CAST(FLOOR((CAST(_dot AS DOUBLE) / sqrt(CAST(_na2 AS DOUBLE) * CAST(_nb2 AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)) AS DOUBLE) AS centroid_cosine
-FROM agg
-"""
-
-    # session-5: grouped correlation matrix — generated oracle from the
-    # same measures/scale
-    from data_warehouse_punta_fina_spark.operators.stats import grouped_corr_oracle_sql
-
-    o["lineitem_corr_matrix"] = grouped_corr_oracle_sql(
-        "SELECT l_returnflag AS flag, l_quantity, l_extendedprice, l_discount, l_tax FROM lineitem",
-        ["flag"],
-        ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
-        scale=3,
-    )
-
-    # session-5: SQ8 scalar-quantized ANN — per-dim integer lo/hi fit,
-    # half-up rational code rounding, asymmetric scan at ×255 scale
-    # (scale cancels in cosine), exact rerank of the top-20
-    _sq8_xhat_sql = """list_transform(generate_series(1, 64), i ->
-      CASE WHEN f.hi[i] = f.lo[i] THEN f.lo[i] * 255
-           ELSE CAST(FLOOR(CAST((cv[i] - f.lo[i]) * 510 + (f.hi[i] - f.lo[i]) AS DOUBLE)
-                           / CAST(2 * (f.hi[i] - f.lo[i]) AS DOUBLE)) AS BIGINT)
-                * (f.hi[i] - f.lo[i]) + f.lo[i] * 255
-      END)"""
-    o["ann_sq8_topk"] = f"""
-WITH c AS (
-  SELECT vec_id, {_QUANT_VEC} AS cv FROM embeddings
-),
-per AS (
-  SELECT i, MIN(cv[i]) AS lo, MAX(cv[i]) AS hi
-  FROM c, generate_series(1, 64) AS g(i) GROUP BY i
-),
-f AS (SELECT list(lo ORDER BY i) AS lo, list(hi ORDER BY i) AS hi FROM per),
-enc AS (
-  SELECT vec_id, {_sq8_xhat_sql} AS xhat FROM c CROSS JOIN f
-),
-q AS (
-  SELECT vec_id AS query_id, {_QUANT_VEC} AS qv FROM embeddings WHERE vec_id < 8
-),
-approx AS (
-  SELECT q.query_id, enc.vec_id AS neighbor_id,
-         {_cosine_sql("q.qv", "enc.xhat")} AS approx
-  FROM q, enc WHERE enc.vec_id <> q.query_id
-),
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY approx DESC, neighbor_id) AS r
-    FROM approx
-  ) WHERE r <= 20
-),
-exact AS (
-  SELECT cand.query_id, cand.neighbor_id, {_cosine_sql("q.qv", "c.cv")} AS cosine
-  FROM cand JOIN c ON c.vec_id = cand.neighbor_id JOIN q USING (query_id)
-)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM exact
-) WHERE rank <= 5
-"""
-
-    # session-5: merge_asof nearest — the same union+window construction
-    # in SQL (backward carry time-asc, forward carry time-desc, epoch-us
-    # deltas, per-direction tolerance BEFORE the nearest tie-break,
-    # ties prefer backward). last_value IGNORE NULLS carries the right
-    # row's time and value through the same window, so both columns come
-    # from the same matched row.
-    _ASOF_SEC = lambda e: f"CAST(epoch_us({e}) AS DOUBLE) / 1000000.0"  # noqa: E731
-    o["events_asof_nearest"] = f"""
-WITH l AS (
-  SELECT event_id, user_id AS _k, ts AS _t FROM events WHERE event_type = 'click'
-),
-r AS (
-  SELECT user_id AS _k, ts AS _t, MAX(value) AS val
-  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-),
-u AS (
-  SELECT _k, _t, 1 AS isl, event_id, CAST(NULL AS DOUBLE) AS val FROM l
-  UNION ALL
-  SELECT _k, _t, 0, NULL, val FROM r
-),
-c AS (
-  SELECT *,
-    last_value(CASE WHEN isl = 0 THEN _t END IGNORE NULLS)
-      OVER (PARTITION BY _k ORDER BY _t ASC, isl ASC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rt_b,
-    last_value(CASE WHEN isl = 0 THEN val END IGNORE NULLS)
-      OVER (PARTITION BY _k ORDER BY _t ASC, isl ASC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS val_b,
-    last_value(CASE WHEN isl = 0 THEN _t END IGNORE NULLS)
-      OVER (PARTITION BY _k ORDER BY _t DESC, isl ASC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rt_f,
-    last_value(CASE WHEN isl = 0 THEN val END IGNORE NULLS)
-      OVER (PARTITION BY _k ORDER BY _t DESC, isl ASC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS val_f
-  FROM u
-),
-t AS (
-  SELECT event_id, _k AS user_id, _t AS ts,
-    CASE WHEN rt_b IS NOT NULL AND ({_ASOF_SEC('_t')} - {_ASOF_SEC('rt_b')}) <= 1800.0 THEN rt_b END AS tb,
-    CASE WHEN rt_b IS NOT NULL AND ({_ASOF_SEC('_t')} - {_ASOF_SEC('rt_b')}) <= 1800.0 THEN val_b END AS vb,
-    CASE WHEN rt_f IS NOT NULL AND ({_ASOF_SEC('rt_f')} - {_ASOF_SEC('_t')}) <= 1800.0 THEN rt_f END AS tf,
-    CASE WHEN rt_f IS NOT NULL AND ({_ASOF_SEC('rt_f')} - {_ASOF_SEC('_t')}) <= 1800.0 THEN val_f END AS vf
-  FROM c WHERE isl = 1
-)
-SELECT event_id, user_id, ts,
-  CASE WHEN tb IS NULL THEN tf WHEN tf IS NULL THEN tb
-       WHEN ({_ASOF_SEC('ts')} - {_ASOF_SEC('tb')}) <= ({_ASOF_SEC('tf')} - {_ASOF_SEC('ts')}) THEN tb
-       ELSE tf END AS pts_asof,
-  CASE WHEN tb IS NULL THEN vf WHEN tf IS NULL THEN vb
-       WHEN ({_ASOF_SEC('ts')} - {_ASOF_SEC('tb')}) <= ({_ASOF_SEC('tf')} - {_ASOF_SEC('ts')}) THEN vb
-       ELSE vf END AS value_asof
-FROM t
-"""
-
-    # session-5: mixture water-filling — oracle generated with the same
-    # rounds from the same weights/budget literals
-    from data_warehouse_punta_fina_spark.operators.mixture import (
-        mixture_allocation_oracle_sql,
-    )
-
-    _mix_values = ", ".join(f"('{s}', {w!r})" for s, w in _MIX_WEIGHTS)
-    o["doc_mixture_alloc"] = mixture_allocation_oracle_sql(
-        f"""WITH tl AS (
-  SELECT lang AS source, SUM(len({_TOKENS})) AS tokens FROM documents GROUP BY lang
-), w(source, weight) AS (VALUES {_mix_values})
-SELECT tl.source, tl.tokens, w.weight FROM tl JOIN w USING (source)""",
-        _MIX_BUDGET,
-        max_iter=len(_MIX_WEIGHTS),
-    )
-
-    # session-5: exact quantile discretizer — decile cuts (quantile_cont
-    # ≡ percentile), bucket = 1 + Σ (x > cut_i), ties to the lower bucket
-    _bucket_cuts = ", ".join(
-        f"quantile_cont(value, {i / 10!r}) AS cut_{i}" for i in range(1, 10)
-    )
-    _bucket_expr = " + ".join(f"CAST(value > cut_{i} AS INT)" for i in range(1, 10))
-    o["events_value_buckets"] = f"""
-WITH src AS (SELECT event_id, value FROM events),
-cuts AS (SELECT {_bucket_cuts} FROM src),
-b AS (
-  SELECT value,
-         CASE WHEN value IS NOT NULL THEN 1 + {_bucket_expr} END AS bucket
-  FROM src CROSS JOIN cuts
-)
-SELECT bucket, COUNT(*) AS n, MIN(value) AS min_v, MAX(value) AS max_v
-FROM b GROUP BY bucket
-"""
-
-    # session-5: key-skew diagnostics — exact per-key count percentiles
-    # (percentile ≡ quantile_cont), round-6 shares, same op order
-    _SKEW_R6 = "CAST(CAST(FLOOR(({e}) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)) AS DOUBLE)"
-    _skew_mean = "CAST(total_rows AS DOUBLE) / CAST(n_keys AS DOUBLE)"
-    o["events_key_skew"] = f"""
-WITH counts AS (
-  SELECT CAST(user_id AS VARCHAR) AS key, COUNT(*) AS n FROM events GROUP BY 1
-),
-summary AS (
-  SELECT SUM(n) AS total_rows, COUNT(*) AS n_keys,
-         quantile_cont(n, 0.5) AS p50, quantile_cont(n, 0.9) AS p90,
-         quantile_cont(n, 0.99) AS p99, MAX(n) AS max_per_key
-  FROM counts
-),
-top AS (
-  SELECT key, n,
-         ROW_NUMBER() OVER (ORDER BY n DESC, key) AS rank,
-         SUM(n) OVER (ORDER BY n DESC, key) AS _cum
-  FROM counts ORDER BY n DESC, key LIMIT 10
-)
-SELECT rank, key, n,
-       {_SKEW_R6.format(e="CAST(n AS DOUBLE) / CAST(total_rows AS DOUBLE)")} AS share,
-       {_SKEW_R6.format(e="CAST(_cum AS DOUBLE) / CAST(total_rows AS DOUBLE)")} AS cum_share,
-       CAST(total_rows AS BIGINT) AS total_rows, n_keys,
-       {_SKEW_R6.format(e=_skew_mean)} AS mean_per_key,
-       p50, p90, p99, max_per_key,
-       {_SKEW_R6.format(e=f"CAST(max_per_key AS DOUBLE) / ({_skew_mean})")} AS skew_ratio
-FROM top CROSS JOIN summary
-"""
-
-    # session-5: triangle counting over the part co-purchase graph —
-    # degree-ordered orientation, every triangle enumerated exactly once
-    _TRI_R6 = "CAST(CAST(FLOOR(({e}) * 1000000 + 0.5) / 1000000 AS DECIMAL(12,6)) AS DOUBLE)"
-    _tri_lower = "(da.degree < db.degree OR (da.degree = db.degree AND u < v))"
-    o["part_triangles"] = f"""
-WITH e0 AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-deg AS (
-  SELECT node, COUNT(*) AS degree
-  FROM (SELECT u AS node FROM e0 UNION ALL SELECT v AS node FROM e0)
-  GROUP BY node
-),
-orient AS (
-  SELECT CASE WHEN {_tri_lower} THEN u ELSE v END AS x,
-         CASE WHEN {_tri_lower} THEN v ELSE u END AS y
-  FROM e0 JOIN deg da ON da.node = u JOIN deg db ON db.node = v
-),
-tri AS (
-  SELECT e1.x, e1.y, e2.y AS z
-  FROM orient e1
-  JOIN orient e2 ON e2.x = e1.y
-  JOIN orient e3 ON e3.x = e1.x AND e3.y = e2.y
-),
-tc AS (
-  SELECT node, COUNT(*) AS t
-  FROM (SELECT x AS node FROM tri UNION ALL SELECT y FROM tri UNION ALL SELECT z FROM tri)
-  GROUP BY node
-)
-SELECT d.node, d.degree, CAST(COALESCE(t, 0) AS BIGINT) AS triangles,
-       CASE WHEN d.degree >= 2 THEN {_TRI_R6.format(e="CAST(2.0 AS DOUBLE) * CAST(COALESCE(t, 0) AS DOUBLE) / (CAST(d.degree AS DOUBLE) * (CAST(d.degree AS DOUBLE) - 1.0))")}
-       END AS clustering
-FROM deg d LEFT JOIN tc ON d.node = tc.node
-"""
-
-    # session-5: blocked Fellegi-Sunter linkage — oracle generated from
-    # the SAME FieldCompare list (weights/predicates/sum order shared)
-    from data_warehouse_punta_fina_spark.operators.linkage import (
-        fellegi_sunter_oracle_sql,
-    )
-
-    _link_a = """SELECT c_custkey, CAST(regexp_extract(c_name, '#(\\d+)', 1) AS BIGINT) AS ref_num,
-       c_nationkey AS nat, CAST(FLOOR(c_acctbal / 100) AS BIGINT) AS band, c_acctbal AS bal
-FROM customer"""
-    _link_b = """SELECT s_suppkey, CAST(regexp_extract(s_name, '#(\\d+)', 1) AS BIGINT) AS ref_num,
-       s_nationkey AS nat, CAST(FLOOR(s_acctbal / 100) AS BIGINT) AS band, s_acctbal AS bal
-FROM supplier"""
-    o["customer_supplier_link"] = fellegi_sunter_oracle_sql(
-        _link_a,
-        _link_b,
-        "c_custkey",
-        "s_suppkey",
-        ["nat", "band"],
-        ["nat", "band"],
-        _link_fields(),
-        match_threshold=6.0,
-        review_threshold=2.0,
-    )
-
-    # session-5: BPE merge-table training — oracle generated for the same
-    # merge count from the same word-count source (unrolled CTE per merge)
-    from data_warehouse_punta_fina_spark.operators.bpe import (
-        bpe_oracle_sql,
-        bpe_segmentation_oracle_sql,
-    )
-
-    _BPE_WC_SQL = f"SELECT word, COUNT(*) AS freq FROM (SELECT unnest({_TOKENS}) AS word FROM documents) GROUP BY word"
-    o["doc_bpe_merges"] = bpe_oracle_sql(_BPE_WC_SQL, merges=6)
-
-    o["doc_bpe_token_counts"] = f"""
-WITH seg AS (
-  SELECT word, len(string_split(sym, ' ')) AS nsub
-  FROM ({bpe_segmentation_oracle_sql(_BPE_WC_SQL, merges=6)}) applied
-),
-dwc AS (
-  SELECT doc_id, word, COUNT(*) AS c
-  FROM (SELECT doc_id, unnest({_TOKENS}) AS word FROM documents)
-  GROUP BY doc_id, word
-),
-per_doc AS (
-  SELECT doc_id, SUM(c) AS n_words, SUM(c * nsub) AS n_bpe_tokens
-  FROM dwc JOIN seg USING (word) GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(COALESCE(n_words, 0) AS BIGINT) AS n_words,
-       CAST(COALESCE(n_bpe_tokens, 0) AS BIGINT) AS n_bpe_tokens
-FROM documents d LEFT JOIN per_doc USING (doc_id)
-"""
-
-    # ---- round-6 additions ------------------------------------------------
-    # shared inline round-6-as-double (the _CHI_R6/_TRI_R6 pattern)
-    _R6D = "CAST(CAST(FLOOR(({e}) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)) AS DOUBLE)"
-
-    # TPC-H Q4 pattern: EXISTS over returned lineitems
-    o["order_priority_exists"] = """
-SELECT o_orderpriority, COUNT(*) AS n_orders
-FROM orders
-WHERE EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-GROUP BY o_orderpriority
-"""
-
-    # TPC-H Q13 pattern: count-of-counts including zero-order customers
-    o["customer_order_distribution"] = """
-WITH per AS (
-  SELECT c_custkey, COUNT(o_orderkey) AS n_orders
-  FROM customer LEFT JOIN orders ON o_custkey = c_custkey
-  GROUP BY c_custkey
-)
-SELECT n_orders, COUNT(*) AS n_customers FROM per GROUP BY n_orders
-"""
-
-    # α=1/2 EWMA, span 10: integer weights 2^(9-j) on daily int64 cents —
-    # numerator/denominator exact, one double division, round-6 (mirrors
-    # operators.timeseries.ewma exactly, lag for lag)
-    _ewma_num = " + ".join(
-        f"COALESCE(g{j} * {1 << (9 - j)}, 0)" if j else f"cents * 512"
-        for j in range(10)
-    )
-    _ewma_den = " + ".join(
-        f"CASE WHEN g{j} IS NULL THEN 0 ELSE {1 << (9 - j)} END" if j else "512"
-        for j in range(10)
-    )
-    _ewma_lags = ", ".join(f"lag(cents, {j}) OVER w AS g{j}" for j in range(1, 10))
-    o["events_ewma_daily"] = f"""
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
-  FROM events GROUP BY 1, 2
-),
-l AS (
-  SELECT event_type, day, cents, {_ewma_lags}
-  FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY day)
-)
-SELECT event_type, day, CAST(cents AS DOUBLE) / 100.0 AS daily_value,
-       {_R6D.format(e=f"CAST({_ewma_num} AS DOUBLE) / CAST({_ewma_den} AS DOUBLE) / 100.0")} AS ewma
-FROM l
-"""
-
-    # offline CUSUM: deviations scaled by n (n·x − Σx) keep the running
-    # sum exact int64; the peak-|cusum| flag is an integer comparison
-    o["revenue_cusum_changepoint"] = f"""
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
-  FROM orders GROUP BY 1
-),
-st AS (SELECT CAST(SUM(cents) AS BIGINT) AS s, COUNT(*) AS n FROM daily),
-c AS (
-  SELECT day, cents, n,
-         CAST(SUM(n * cents - s) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cn
-  FROM daily, st
-),
-m AS (SELECT *, MAX(ABS(cn)) OVER () AS mx FROM c)
-SELECT day, CAST(cents AS DOUBLE) / 100.0 AS revenue,
-       {_R6D.format(e="CAST(cn AS DOUBLE) / CAST(n AS DOUBLE) / 100.0")} AS cusum,
-       (ABS(cn) = mx AND mx > 0) AS is_changepoint
-FROM m
-"""
-
-    # linear interpolation of gap days: floor-division blend between the
-    # previous/next anchors; edges backfill/carry (mirrors
-    # operators.timeseries.interpolate_linear)
-    o["events_interpolated_daily"] = """
-WITH ev AS (SELECT * FROM events
-            WHERE event_type = 'purchase' AND value > 90 AND user_id % 23 = 0),
-daily AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
-  FROM ev GROUP BY 1
-),
-b AS (SELECT MIN(CAST(ts AS DATE)) AS lo, MAX(CAST(ts AS DATE)) AS hi FROM ev),
-spine AS (SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day FROM b),
-g AS (SELECT s.day, d.cents FROM spine s LEFT JOIN daily d USING (day)),
-f AS (
-  SELECT day, cents,
-         last_value(cents IGNORE NULLS) OVER wb AS pv,
-         last_value(CASE WHEN cents IS NOT NULL THEN day END IGNORE NULLS) OVER wb AS pt,
-         first_value(cents IGNORE NULLS) OVER wf AS nv,
-         first_value(CASE WHEN cents IS NOT NULL THEN day END IGNORE NULLS) OVER wf AS nt
-  FROM g
-  WINDOW wb AS (ORDER BY day ROWS UNBOUNDED PRECEDING),
-         wf AS (ORDER BY day ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-)
-SELECT day,
-       CAST(CASE WHEN cents IS NOT NULL THEN cents
-                 WHEN pv IS NULL THEN nv
-                 WHEN nv IS NULL THEN pv
-                 ELSE pv + CAST(FLOOR(CAST((nv - pv) * date_diff('day', pt, day) AS DOUBLE)
-                                      / CAST(date_diff('day', pt, nt) AS DOUBLE)) AS BIGINT)
-            END AS DOUBLE) / 100.0 AS value,
-       (cents IS NULL) AS interpolated
-FROM f
-"""
-
-    # FD audit: same NUL-separated rendering as quality.fd_violations
-    _fd_dep = (
-        "concat_ws(chr(0), COALESCE(CAST(l_returnflag AS VARCHAR), '<null>'), "
-        "COALESCE(CAST(l_linestatus AS VARCHAR), '<null>'), "
-        "COALESCE(CAST(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT) AS VARCHAR), '<null>'), "
-        "COALESCE(CAST(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS VARCHAR), '<null>'))"
-    )
-    o["lineitem_fd_violations"] = f"""
-WITH per AS (
-  SELECT l_orderkey, l_linenumber, COUNT(*) AS n_rows,
-         COUNT(DISTINCT {_fd_dep}) AS n_variants,
-         MIN({_fd_dep}) AS fv, MAX({_fd_dep}) AS lv
-  FROM lineitem GROUP BY 1, 2
-)
-SELECT l_orderkey, l_linenumber, n_rows, n_variants,
-       replace(fv, chr(0), ' | ') AS first_variant,
-       replace(lv, chr(0), ' | ') AS last_variant
-FROM per WHERE n_variants > 1
-"""
-
-    # Bloom semi-join reduction: the result is EXACTLY the semi join
-    # (the bitmap stage is perf-only), so the oracle is the plain IN
-    o["urgent_lineitems_bloom"] = """
-SELECT l_returnflag, COUNT(*) AS n_lines,
-       CAST(SUM(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_qty
-FROM lineitem
-WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT')
-GROUP BY l_returnflag
-"""
-
-    # exact Mann-Whitney AUC on the score-DISTINCT aggregate (mirrors
-    # operators.evaluation.binary_auc: 2·Σpos-ranks stays integer)
-    o["doc_quality_auc"] = f"""
-WITH scored AS (SELECT source, {_r6(quality)} AS q, (lang = 'en') AS y FROM documents),
-per AS (
-  SELECT source, q, COUNT(*) AS c,
-         CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS p
-  FROM scored GROUP BY 1, 2
-),
-cum AS (
-  SELECT *, COALESCE(CAST(SUM(c) OVER (PARTITION BY source ORDER BY q
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS cb
-  FROM per
-),
-a AS (
-  SELECT source, CAST(SUM(p) AS BIGINT) AS n_pos, CAST(SUM(c - p) AS BIGINT) AS n_neg,
-         CAST(SUM(p * (2 * cb + c + 1)) AS BIGINT) AS s2
-  FROM cum GROUP BY source
-)
-SELECT source, n_pos, n_neg,
-       CASE WHEN n_pos > 0 AND n_neg > 0
-            THEN {_R6D.format(e="CAST(s2 - n_pos * (n_pos + 1) AS DOUBLE) / CAST(2 * n_pos * n_neg AS DOUBLE)")}
-       END AS auc
-FROM a
-"""
-
-    # gains/lift: NTILE(10) is the same front-loaded SQL-standard bucket
-    # rule operators.windows.exact_ntile implements without the window
-    o["doc_quality_lift"] = f"""
-WITH scored AS (SELECT doc_id, {_r6(quality)} AS q, (lang = 'en') AS y FROM documents),
-bucketed AS (
-  SELECT CAST(NTILE(10) OVER (ORDER BY q DESC, doc_id) AS INT) AS bucket, y FROM scored
-),
-per AS (
-  SELECT bucket, COUNT(*) AS n,
-         CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
-  FROM bucketed GROUP BY bucket
-),
-tot AS (SELECT CAST(SUM(n) AS BIGINT) AS tn, CAST(SUM(n_pos) AS BIGINT) AS tp FROM per),
-c AS (
-  SELECT bucket, n, n_pos,
-         CAST(SUM(n_pos) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_pos,
-         tn, tp
-  FROM per, tot
-)
-SELECT bucket, n, n_pos,
-       {_R6D.format(e="CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE)")} AS pos_rate,
-       {_R6D.format(e="CAST(cum_pos AS DOUBLE) / CAST(tp AS DOUBLE)")} AS cum_capture,
-       {_R6D.format(e="(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE)) / (CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE))")} AS lift
-FROM c
-"""
-
-    # WOE with half-count smoothing + IV terms (natural log, round-6)
-    _woe = (
-        "ln(((CAST(n_pos AS DOUBLE) + 0.5) / CAST(pt AS DOUBLE)) "
-        "/ ((CAST(n - n_pos AS DOUBLE) + 0.5) / CAST(nt AS DOUBLE)))"
-    )
-    _woe_d = (
-        "((CAST(n_pos AS DOUBLE) + 0.5) / CAST(pt AS DOUBLE) "
-        "- (CAST(n - n_pos AS DOUBLE) + 0.5) / CAST(nt AS DOUBLE))"
-    )
-    o["doc_source_woe"] = f"""
-WITH per AS (
-  SELECT source AS category, COUNT(*) AS n,
-         CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
-  FROM documents GROUP BY source
-),
-tot AS (SELECT CAST(SUM(n_pos) AS BIGINT) AS pt, CAST(SUM(n - n_pos) AS BIGINT) AS nt FROM per)
-SELECT category, n, n_pos,
-       {_R6D.format(e=_woe)} AS woe,
-       {_R6D.format(e=f"{_woe_d} * {_woe}")} AS iv_term
-FROM per, tot
-"""
-
-    # exact AP, pessimistic tie convention: per desc-ordered distinct-
-    # score block, positives contribute (P_b+i)/(N_b+c−p+i), i=1..p —
-    # the explode is n_pos-sized (mirrors evaluation.average_precision)
-    _ap_term = "CAST(pb + i AS DOUBLE) / CAST(nb + c - p + i AS DOUBLE)"
-    o["doc_quality_avg_precision"] = f"""
-WITH scored AS (SELECT source, {_r6(quality)} AS q, (lang = 'en') AS y FROM documents),
-per AS (
-  SELECT source, q, COUNT(*) AS c,
-         CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS p
-  FROM scored GROUP BY 1, 2
-),
-cum AS (
-  SELECT *, COALESCE(CAST(SUM(c) OVER wd AS BIGINT), 0) AS nb,
-            COALESCE(CAST(SUM(p) OVER wd AS BIGINT), 0) AS pb
-  FROM per
-  WINDOW wd AS (PARTITION BY source ORDER BY q DESC
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-),
-terms AS (
-  SELECT source, CAST(FLOOR(({_ap_term}) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)) AS term
-  FROM cum, unnest(range(1, p + 1)) t(i) WHERE p > 0
-),
-agg AS (SELECT source, SUM(term) AS ts FROM terms GROUP BY source),
-universe AS (
-  SELECT source, CAST(SUM(p) AS BIGINT) AS n_pos, CAST(SUM(c) AS BIGINT) AS n
-  FROM per GROUP BY source
-)
-SELECT u.source, u.n, u.n_pos,
-       CASE WHEN u.n_pos > 0
-            THEN {_R6D.format(e="CAST(a.ts AS DOUBLE) / CAST(u.n_pos AS DOUBLE)")}
-       END AS avg_precision
-FROM universe u LEFT JOIN agg a USING (source)
-"""
-
-    # leave-one-out target encoding: (Σ_cat − own)/(n_cat − 1), exact
-    # int64 subtraction, singleton categories NULL
-    o["orders_loo_priority_encoding"] = f"""
-WITH pre AS (
-  SELECT o_orderkey, o_orderpriority,
-         CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS price_c
-  FROM orders WHERE o_custkey % 100 = 0
-),
-st AS (
-  SELECT o_orderpriority, CAST(SUM(price_c) AS BIGINT) AS cs, COUNT(*) AS cn
-  FROM pre GROUP BY 1
-)
-SELECT o_orderkey, o_orderpriority, price_c,
-       CASE WHEN cn > 1
-            THEN {_R6D.format(e="CAST(cs - price_c AS DOUBLE) / CAST(cn - 1 AS DOUBLE)")}
-       END AS loo_mean
-FROM pre JOIN st USING (o_orderpriority)
-"""
-
-    # Newman degree assortativity over the symmetrized stub list —
-    # DECIMAL(38,0) sufficient statistics, closing Pearson in the same
-    # fixed IEEE order as operators.graph.degree_assortativity
-    _as_cov = "(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-    _as_vx = "(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
-    _as_vy = "(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))"
-    o["part_copurchase_assortativity"] = f"""
-WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem),
-e AS (SELECT DISTINCT x.it AS u, y.it AS v FROM b x JOIN b y ON x.bk = y.bk AND x.it < y.it),
-deg AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg
-  FROM (SELECT u AS node FROM e UNION ALL SELECT v FROM e) GROUP BY node
-),
-t AS (
-  SELECT du.deg AS xdeg, dv.deg AS ydeg
-  FROM e JOIN deg du ON du.node = e.u JOIN deg dv ON dv.node = e.v
-),
-stubs AS (SELECT xdeg AS x, ydeg AS y FROM t UNION ALL SELECT ydeg, xdeg FROM t),
-s AS (
-  SELECT COUNT(*) AS n,
-         SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy,
-         SUM(CAST(x AS DECIMAL(38,0)) * y) AS sxy,
-         SUM(CAST(x AS DECIMAL(38,0)) * x) AS sxx,
-         SUM(CAST(y AS DECIMAL(38,0)) * y) AS syy
-  FROM stubs
-),
-c AS (
-  SELECT CAST((SELECT COUNT(*) FROM deg) AS BIGINT) AS n_nodes,
-         CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS n_edges
-)
-SELECT n_nodes, n_edges,
-       {_R6D.format(e="CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)")} AS mean_degree,
-       CASE WHEN {_as_vx} > 0 AND {_as_vy} > 0
-            THEN {_R6D.format(e=f"{_as_cov} / (sqrt({_as_vx}) * sqrt({_as_vy}))")}
-       END AS assortativity
-FROM c CROSS JOIN s
-"""
-
-    # symmetric 10% trim: rank ORDER BY value (tie order arbitrary — the
-    # retained multiset is tie-invariant), exact int64 middle sum
-    o["events_trimmed_mean"] = f"""
-WITH base AS (
-  SELECT event_type, CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS q FROM events
-),
-r AS (
-  SELECT event_type, q,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY q) AS rr,
-         COUNT(*) OVER (PARTITION BY event_type) AS n
-  FROM base
-),
-kept AS (
-  SELECT *, CAST(FLOOR(n * 0.1) AS BIGINT) AS k
-  FROM r WHERE rr > FLOOR(n * 0.1) AND rr <= n - FLOOR(n * 0.1)
-)
-SELECT event_type, CAST(MAX(n) AS BIGINT) AS n,
-       CAST(MAX(k) AS BIGINT) AS n_trimmed_each_side,
-       {_R6D.format(e="CAST(SUM(q) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) / 100.0")} AS trimmed_mean
-FROM kept GROUP BY event_type
-"""
-
-    # hashing trick: md5-derived index/sign (the _hex13 idiom — Spark's
-    # conv(substr(md5,1,13),16,10) twin), dense 16-vector via the
-    # doc × dim grid + ordered list aggregate
-    _fh_ix = f"CAST({_hex13('md5(t)')} % 16 AS INT)"
-    _fh_sg = "CAST(1 - 2 * ((strpos('0123456789abcdef', substr(md5(t), 14, 1)) - 1) % 2) AS BIGINT)"
-    o["doc_feature_hashing"] = f"""
-WITH tok AS (SELECT doc_id, unnest({_TOKENS}) AS t FROM documents),
-h AS (SELECT doc_id, {_fh_ix} AS ix, {_fh_sg} AS sg FROM tok),
-per AS (SELECT doc_id, ix, CAST(SUM(sg) AS BIGINT) AS v FROM h GROUP BY 1, 2),
-grid AS (
-  SELECT d.doc_id, CAST(g.i AS INT) AS ix
-  FROM documents d CROSS JOIN (SELECT unnest(range(0, 16)) AS i) g
-),
-dense AS (
-  SELECT grid.doc_id, grid.ix, COALESCE(per.v, 0) AS v
-  FROM grid LEFT JOIN per ON per.doc_id = grid.doc_id AND per.ix = grid.ix
-)
-SELECT doc_id, array_to_string(list(v ORDER BY ix), ',') AS features_csv
-FROM dense GROUP BY doc_id
-"""
-
-    # prefix filtering is LOSSLESS, so the oracle is the brute shared-
-    # token all-pairs Jaccard (identical qualifying set by construction)
-    o["doc_prefix_jaccard_pairs"] = f"""
-WITH toks AS (SELECT doc_id, unnest(list_distinct({_TOKENS})) AS tok FROM documents),
-sizes AS (SELECT doc_id, COUNT(*) AS nt FROM toks GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(COUNT(*) AS BIGINT) AS intersection
-  FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b, na.nt AS n_a, nb.nt AS n_b, intersection,
-       {_R6D.format(e="CAST(intersection AS DOUBLE) / CAST(na.nt + nb.nt - intersection AS DOUBLE)")} AS jaccard
-FROM inter
-JOIN sizes na ON na.doc_id = id_a
-JOIN sizes nb ON nb.doc_id = id_b
-WHERE CAST(intersection AS DOUBLE) / CAST(na.nt + nb.nt - intersection AS DOUBLE) >= 0.95
-"""
-
-    # session symbol-string pattern match: same gap sessionization as
-    # operators.asof.sessionize (exact integer microseconds), ordered
-    # string_agg, non-overlapping leftmost regex count
-    o["events_purchase_path_match"] = """
-WITH base AS (
-  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
-),
-lagd AS (
-  SELECT *, lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-  FROM base
-),
-flag AS (
-  SELECT *, CASE WHEN prev IS NULL OR epoch_us(ts) - prev > 21600 * CAST(1000000 AS BIGINT)
-                 THEN 1 ELSE 0 END AS nf
-  FROM lagd
-),
-ses AS (
-  SELECT *, CAST(SUM(nf) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS UNBOUNDED PRECEDING) AS INT) AS session_seq
-  FROM flag
-),
-symed AS (
-  SELECT user_id, session_seq, ts, event_id,
-         CASE event_type WHEN 'click' THEN 'c' WHEN 'view' THEN 'v'
-              WHEN 'purchase' THEN 'p' WHEN 'signup' THEN 's'
-              WHEN 'error' THEN 'e' ELSE '_' END AS sym
-  FROM ses
-),
-agg AS (
-  SELECT user_id, session_seq, MIN(ts) AS session_start, COUNT(*) AS n_events,
-         string_agg(sym, '' ORDER BY ts, event_id) AS seq
-  FROM symed GROUP BY 1, 2
-)
-SELECT user_id, session_seq,
-       strftime(session_start, '%Y-%m-%d %H:%M:%S') AS session_start,
-       n_events,
-       CAST(len(regexp_extract_all(seq, 'c[ves]*p')) AS BIGINT) AS n_matches
-FROM agg
-WHERE len(regexp_extract_all(seq, 'c[ves]*p')) > 0
-  AND n_events <= 10000
-"""
-
-    # Theil-Sen + Mann-Kendall: pairwise slopes over the weekly series,
-    # median by value order (tie positions arbitrary, median value
-    # invariant), integer S — mirrors operators.stats.theil_sen_trend
-    o["weekly_revenue_theilsen"] = f"""
-WITH weekly AS (
-  SELECT CAST(date_trunc('week', o_orderdate) AS DATE) AS week,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS q
-  FROM orders GROUP BY 1
-),
-d AS (SELECT week, q, CAST(ROW_NUMBER() OVER (ORDER BY week) AS BIGINT) AS x FROM weekly),
-pairs AS (
-  SELECT a.x AS xa, a.q AS qa, b.x AS xb, b.q AS qb,
-         CAST(b.q - a.q AS DOUBLE) / CAST(b.x - a.x AS DOUBLE) AS s,
-         CAST(sign(CAST(b.q - a.q AS DOUBLE)) AS BIGINT) AS sgn
-  FROM d a JOIN d b ON a.x < b.x
-),
-ranked AS (SELECT s, ROW_NUMBER() OVER (ORDER BY s) AS r, COUNT(*) OVER () AS m FROM pairs),
-med AS (
-  SELECT SUM(s) / COUNT(*) AS slope_c, CAST(MAX(m) AS BIGINT) AS n_pairs
-  FROM ranked WHERE r = FLOOR((m + 1) / 2) OR r = FLOOR(m / 2) + 1
-),
-mk AS (SELECT CAST(SUM(sgn) AS BIGINT) AS mk_s FROM pairs),
-resid AS (
-  SELECT CAST(d.q AS DOUBLE) - med.slope_c * CAST(d.x AS DOUBLE) AS res FROM d, med
-),
-rranked AS (SELECT res, ROW_NUMBER() OVER (ORDER BY res) AS r, COUNT(*) OVER () AS n FROM resid),
-imed AS (
-  SELECT SUM(res) / COUNT(*) AS icept_c, CAST(MAX(n) AS BIGINT) AS n
-  FROM rranked WHERE r = FLOOR((n + 1) / 2) OR r = FLOOR(n / 2) + 1
-)
-SELECT imed.n AS n, med.n_pairs,
-       {_R6D.format(e="med.slope_c / 100.0")} AS slope,
-       {_R6D.format(e="imed.icept_c / 100.0")} AS intercept,
-       mk.mk_s
-FROM med CROSS JOIN mk CROSS JOIN imed
-"""
-
-    # rolling 7-day DAU: every (user, day) feeds the 7 trailing windows
-    # it belongs to; count-distinct per window day, clipped to the
-    # observed range
-    o["events_trailing_dau"] = """
-WITH du AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-b AS (SELECT MIN(CAST(ts AS DATE)) AS lo, MAX(CAST(ts AS DATE)) AS hi FROM events),
-expanded AS (
-  SELECT user_id, CAST(unnest(generate_series(day, day + 6, INTERVAL 1 DAY)) AS DATE) AS wday
-  FROM du
-)
-SELECT wday AS day, COUNT(DISTINCT user_id) AS dau_7d
-FROM expanded, b
-WHERE wday >= lo AND wday <= hi
-GROUP BY 1
-"""
-
-    # reliability bins + ECE terms on the round-6 integer-millionth
-    # lattice (mirrors operators.evaluation.calibration_bins op-for-op)
-    _cal_mean = "CAST(sq6 AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0"
-    _cal_rate = "CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE)"
-    o["doc_quality_calibration"] = f"""
-WITH scored AS (SELECT {_r6(quality)} AS q, (lang = 'en') AS y FROM documents),
-q6 AS (
-  SELECT CAST(FLOOR(CAST(q AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS q6,
-         CASE WHEN y THEN 1 ELSE 0 END AS yy
-  FROM scored
-),
-binned AS (SELECT CAST(LEAST(FLOOR(q6 * 10 / 1000000), 9) AS INT) AS bin, q6, yy FROM q6),
-per AS (
-  SELECT bin, COUNT(*) AS n, CAST(SUM(yy) AS BIGINT) AS n_pos,
-         CAST(SUM(q6) AS BIGINT) AS sq6
-  FROM binned GROUP BY bin
-),
-tot AS (SELECT CAST(SUM(n) AS BIGINT) AS nn FROM per)
-SELECT bin, n, n_pos,
-       {_R6D.format(e=_cal_mean)} AS mean_score,
-       {_R6D.format(e=_cal_rate)} AS pos_rate,
-       {_R6D.format(e=f"(CAST(n AS DOUBLE) / CAST(nn AS DOUBLE)) * abs({_cal_mean} - {_cal_rate})")} AS ece_term
-FROM per CROSS JOIN tot
-"""
-
-    # Brier: exact integer-lattice squared errors, DECIMAL(38,0) sums
-    o["doc_quality_brier"] = f"""
-WITH scored AS (SELECT source, {_r6(quality)} AS q, (lang = 'en') AS y FROM documents),
-e AS (
-  SELECT source,
-         CAST(FLOOR(CAST(q AS DOUBLE) * 1000000 + 0.5) AS BIGINT)
-           - (CASE WHEN y THEN 1000000 ELSE 0 END) AS err
-  FROM scored
-),
-per AS (
-  SELECT source, COUNT(*) AS n, SUM(CAST(err AS DECIMAL(38,0)) * err) AS se2
-  FROM e GROUP BY source
-)
-SELECT source, n,
-       {_R6D.format(e="CAST(se2 AS DOUBLE) / CAST(n AS DOUBLE) / 1e12")} AS brier
-FROM per
-"""
-
-    # deterministic stratified k-fold: (per-stratum rank − 1) mod k
-    o["doc_kfold_assignment"] = """
-SELECT doc_id, lang,
-       CAST((ROW_NUMBER() OVER (PARTITION BY lang ORDER BY doc_id) - 1) % 5 AS INT) AS fold
-FROM documents
-"""
-
-    # Pareto 80/20: cumulative share over the part aggregate; the
-    # crossing test is pure integer (5·cum_prev < 4·total)
-    o["revenue_pareto_parts"] = f"""
-WITH per AS (
-  SELECT l_partkey,
-         CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
-  FROM lineitem GROUP BY 1
-),
-tot AS (SELECT CAST(SUM(cents) AS BIGINT) AS t FROM per),
-ranked AS (
-  SELECT l_partkey, cents, t,
-         CAST(SUM(cents) OVER w AS BIGINT) AS cum,
-         CAST(COUNT(*) OVER w AS BIGINT) AS rank
-  FROM per, tot
-  WINDOW w AS (ORDER BY cents DESC, l_partkey ROWS UNBOUNDED PRECEDING)
-)
-SELECT l_partkey, rank, CAST(cents AS DOUBLE) / 100.0 AS revenue,
-       {_R6D.format(e="CAST(cum AS DOUBLE) / CAST(t AS DOUBLE)")} AS cum_share,
-       (5 * (cum - cents) < 4 * t) AS in_top80
-FROM ranked WHERE rank <= 200
-"""
-
-    # RANK-with-ties top-k: every line at the order's top-2 discount
-    # levels (the ties-included semantics row_number loses)
-    o["top_discount_lines_with_ties"] = """
-WITH li AS (SELECT * FROM lineitem WHERE l_orderkey % 50 = 0),
-d AS (
-  SELECT l_orderkey, l_linenumber,
-         CAST(FLOOR(l_discount * 10000 + 0.5) AS BIGINT) AS d4
-  FROM li
-),
-r AS (SELECT *, RANK() OVER (PARTITION BY l_orderkey ORDER BY d4 DESC) AS rnk FROM d)
-SELECT l_orderkey, l_linenumber, CAST(rnk AS INT) AS rnk,
-       CAST(d4 AS DOUBLE) / 10000.0 AS discount
-FROM r WHERE rnk <= 2
-"""
-
-    # geometric + harmonic means: round-6/round-9 terms summed as exact
-    # decimals, one exp/division at the close
-    o["events_multiplicative_means"] = f"""
-WITH ev AS (SELECT event_type, CAST(value AS DOUBLE) AS v FROM events WHERE value > 0),
-t AS (
-  SELECT event_type,
-         CAST(FLOOR(ln(v) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)) AS lnterm,
-         CAST(FLOOR((1.0 / v) * 1000000000 + 0.5) / 1000000000 AS DECIMAL(18,9)) AS invterm
-  FROM ev
-),
-per AS (
-  SELECT event_type, COUNT(*) AS n, SUM(lnterm) AS sln, SUM(invterm) AS sinv
-  FROM t GROUP BY 1
-)
-SELECT event_type, n,
-       {_R6D.format(e="exp(CAST(sln AS DOUBLE) / CAST(n AS DOUBLE))")} AS geo_mean,
-       {_R6D.format(e="CAST(n AS DOUBLE) / CAST(sinv AS DOUBLE)")} AS harmonic_mean
-FROM per
-"""
-
-    # blocking quality: lossless token-Jaccard truth vs the MinHash
-    # banding candidates (reuses _MINHASH_PAIRS_SQL verbatim)
-    o["lsh_blocking_quality"] = f"""
-WITH toksq AS (SELECT doc_id, unnest(list_distinct({_TOKENS})) AS tok FROM documents),
-sizesq AS (SELECT doc_id, COUNT(*) AS nt FROM toksq GROUP BY doc_id),
-interq AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS i
-  FROM toksq a JOIN toksq b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-truth AS (
-  SELECT id_a, id_b FROM interq
-  JOIN sizesq na ON na.doc_id = id_a JOIN sizesq nb ON nb.doc_id = id_b
-  WHERE CAST(i AS DOUBLE) / CAST(na.nt + nb.nt - i AS DOUBLE) >= 0.95
-),
-cand AS (SELECT id_a, id_b FROM ({_MINHASH_PAIRS_SQL}) c),
-tc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true FROM truth),
-cc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates FROM cand),
-ca AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_caught
-       FROM truth t JOIN cand c USING (id_a, id_b)),
-nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents)
-SELECT n_docs, n_true, n_candidates, n_caught,
-       CASE WHEN n_true > 0
-            THEN {_R6D.format(e="CAST(n_caught AS DOUBLE) / CAST(n_true AS DOUBLE)")}
-       END AS blocking_recall,
-       {_R6D.format(e="1.0 - CAST(n_candidates AS DOUBLE) / (CAST(n_docs * (n_docs - 1) AS DOUBLE) / 2.0)")} AS reduction_ratio
-FROM tc CROSS JOIN cc CROSS JOIN ca CROSS JOIN nd
-"""
-
-    # systematic every-97th over the (date, key) total order
-    o["orders_systematic_sample"] = """
-WITH r AS (
-  SELECT o_orderkey, o_orderdate, o_orderpriority,
-         ROW_NUMBER() OVER (ORDER BY o_orderdate, o_orderkey) AS rn
-  FROM orders
-)
-SELECT o_orderkey, o_orderdate, o_orderpriority FROM r WHERE (rn - 1) % 97 = 0
-"""
-
-    # the persisted-band-index ingestion produces byte-identical values to
-    # the in-query-indexed one (same versioned band scheme) — reuse verbatim
-    o["doc_incremental_dedup_persisted"] = o["doc_incremental_dedup"]
-
-    # persisted BM25 inverted-index search is bit-equal to in-query
-    # tokenization (deterministic scoring, versioned BM25_SCHEME), and the
-    # fully-persisted hybrid equals the persisted-IVFPQ hybrid (its lex
-    # side is that same identity) — reuse both oracles verbatim
-    o["doc_bm25_persisted_topk"] = o["doc_bm25_topk"]
-    o["doc_bm25_incremental_topk"] = o["doc_bm25_topk"]
-    # round-12: the stream-MAINTAINED index merges df/N/total_dl exactly
-    # per micro-batch (epoched, replay-idempotent), so its search is
-    # bit-equal to one monolithic build — same oracle again
-    o["doc_bm25_maintained_topk"] = o["doc_bm25_topk"]
-    # round-13 (VERDICT r12 #2): COMPACTION changes layout, not content —
-    # postings/dfstats/stats carried verbatim into the one-file-per-bucket
-    # shape — so the compacted search is bit-equal to the same monolithic
-    # build. Oracle reused verbatim.
-    o["doc_bm25_compacted_topk"] = o["doc_bm25_topk"]
-    o["doc_hybrid_rrf_search_persisted"] = o["doc_hybrid_rrf_search_pq"]
-
-    # federated sharded ANN: one full IVF-PQ chain per shard (training
-    # AND candidates restricted to the shard, CTE names prefixed so the
-    # two chains coexist), global top-5 over the union of the shards'
-    # exact-reranked candidate lists
-    _fed_parts: list[str] = []
-    for _i, _pred in enumerate(("vec_id % 2 = 0", "vec_id % 2 = 1")):
-        _fed_parts += _prefix_ctes(
-            _ivfpq_topk_sql(
-                n_cells=16,
-                probes=4,
-                m=8,
-                n_centroids=8,
-                iters=2,
-                rerank=30,
-                train_filter=_pred,
-                corpus_filter=_pred,
-                parts_only=True,
-            ),
-            f"s{_i}",
-        )
-    o["ann_ivfpq_federated_topk"] = (
-        "WITH "
-        + ",\n".join(_fed_parts)
-        + """,
-fed AS (
-  SELECT query_id, neighbor_id, cosine FROM s0exact
-  UNION ALL
-  SELECT query_id, neighbor_id, cosine FROM s1exact
-)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM fed
-) WHERE rank <= 5
-"""
-    )
-
-    # hybrid over the sharded corpus: the BM25 chain + BOTH prefixed
-    # shard chains (query side docs 1-4), fed union → semantic top-20,
-    # RRF fusion identical to the other hybrids
-    _fedq_parts: list[str] = []
-    for _i, _pred in enumerate(("vec_id % 2 = 0", "vec_id % 2 = 1")):
-        _fedq_parts += _prefix_ctes(
-            _ivfpq_topk_sql(
-                n_cells=16,
-                probes=4,
-                m=8,
-                n_centroids=8,
-                iters=2,
-                rerank=30,
-                train_filter=_pred,
-                corpus_filter=_pred,
-                query_filter="vec_id IN (1, 2, 3, 4)",
-                parts_only=True,
-            ),
-            f"s{_i}",
-        )
-    _fedq = ",\n".join(_fedq_parts)
-    o["doc_hybrid_rrf_search_federated"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS}) AS term FROM documents
-),
-postings0 AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-dl AS (SELECT doc_id, SUM(tf) AS dl FROM postings0 GROUP BY doc_id),
-postings AS (SELECT p.doc_id, p.term, p.tf, dl.dl FROM postings0 p JOIN dl USING (doc_id)),
-dfs AS (SELECT term, COUNT(*) AS df FROM postings GROUP BY term),
-nd AS (
-  SELECT (SELECT COUNT(*) FROM documents) AS n,
-         CAST((SELECT COALESCE(SUM(dl), 0) FROM dl) AS DOUBLE)
-           / CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS avgdl
-),
-q AS (SELECT DISTINCT doc_id AS query_id, term FROM toks WHERE doc_id IN (1, 2, 3, 4)),
-lexscored AS (
-  SELECT q.query_id, p.doc_id,
-         CAST({_r6(bm25_s.replace("idf", "FLOOR(ln((nd.n - dfs.df + 0.5) / (dfs.df + 0.5) + 1.0) * 1000000 + 0.5) / 1000000"))} AS DECIMAL(12,6)) AS s
-  FROM postings p JOIN q USING (term) JOIN dfs USING (term) CROSS JOIN nd
-  WHERE p.doc_id <> q.query_id
-),
-lexdoc AS (
-  SELECT query_id, doc_id, CAST(SUM(s) AS DOUBLE) AS score FROM lexscored GROUP BY query_id, doc_id
-),
-lex AS (
-  SELECT query_id, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-  FROM lexdoc QUALIFY rank <= 20
-),
-{_fedq},
-fedq AS (
-  SELECT query_id, neighbor_id, cosine FROM s0exact
-  UNION ALL
-  SELECT query_id, neighbor_id, cosine FROM s1exact
-),
-sem AS (
-  SELECT query_id, neighbor_id AS doc_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM fedq QUALIFY rank <= 20
-),
-contrib AS (
-  SELECT query_id, doc_id, CAST({_r6("1.0 / (60 + rank)")} AS DECIMAL(12,6)) AS c,
-         TRUE AS in_lex, FALSE AS in_sem FROM lex
-  UNION ALL
-  SELECT query_id, doc_id, CAST({_r6("1.0 / (60 + rank)")} AS DECIMAL(12,6)) AS c,
-         FALSE AS in_lex, TRUE AS in_sem FROM sem
-),
-fused AS (
-  SELECT query_id, doc_id, CAST(SUM(c) AS DOUBLE) AS rrf_score,
-         MAX(in_lex) AS in_lex, MAX(in_sem) AS in_sem
-  FROM contrib GROUP BY query_id, doc_id
-)
-SELECT query_id, doc_id, rrf_score, in_lex, in_sem, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY rrf_score DESC, doc_id) AS rank
-  FROM fused
-) WHERE rank <= 5
-"""
-
-    # round-11: PRF over the persisted index is the deterministic twin of
-    # the in-query PRF (both passes + mining are bit-equal to tokenizing —
-    # the persisted-search determinism argument), so the oracle is reused
-    o["doc_bm25_prf_search_persisted"] = o["doc_bm25_prf_search"]
-
-    # round-11: federated BM25 merges df/N/total_dl EXACTLY across
-    # disjoint shards (integer sums), so per-shard scoring under merged
-    # stats is bit-equal to the monolithic index — the single-index
-    # oracle is the federated oracle
-    o["doc_bm25_federated_topk"] = o["doc_bm25_topk"]
-
-    # round-11: phrase search over the persisted positional index is
-    # bit-equal to the in-query token-slice scan (same tokenizer rule on
-    # corpus and phrase, positional intersection == gram match) — reuse
-    o["doc_phrase_search_persisted"] = o["doc_phrase_search"]
-    # round-13 (VERDICT r12 #2): a stream-shaped positional index
-    # compacted into the batch layout carries the same (term, doc,
-    # positions) content — the compacted search is bit-equal, oracle
-    # reused verbatim
-    o["doc_phrase_search_compacted"] = o["doc_phrase_search"]
-
-    # round-11: proximity retrieval — pairs of 'customer'/'order'
-    # occurrences within 6 tokens. The oracle's list positions are
-    # 1-based where the index stores 0-based, but only DIFFERENCES
-    # reach the output, so the numbering cancels.
-    o["doc_proximity_search"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS} AS t FROM documents),
-pa AS (
-  SELECT doc_id,
-         unnest([j FOR j IN generate_series(1, len(t)) IF t[j] = 'customer']) AS p
-  FROM toks
-),
-pb AS (
-  SELECT doc_id,
-         unnest([j FOR j IN generate_series(1, len(t)) IF t[j] = 'order']) AS p
-  FROM toks
-),
-pairs AS (
-  SELECT pa.doc_id, ABS(pa.p - pb.p) AS d
-  FROM pa JOIN pb USING (doc_id)
-  WHERE ABS(pa.p - pb.p) <= 6
-)
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_pairs, CAST(MIN(d) AS BIGINT) AS min_dist
-FROM pairs GROUP BY doc_id
-"""
-
-    # round-12: sloppy phrase 'customer order fast' with slop=3 — terms
-    # in order, each consecutive gap in [1, 4]. The oracle replays the
-    # SAME chained range joins over 1-based token positions (gaps are
-    # differences, so the numbering cancels; first_pos adjusts by -1);
-    # n_matches counts distinct (p1, p2, p3) tuples exactly as the
-    # chained Spark joins enumerate them.
-    o["doc_phrase_slop_search"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS} AS t FROM documents),
-p1 AS (
-  SELECT doc_id,
-         unnest([j FOR j IN generate_series(1, len(t)) IF t[j] = 'customer']) AS p
-  FROM toks
-),
-p2 AS (
-  SELECT doc_id,
-         unnest([j FOR j IN generate_series(1, len(t)) IF t[j] = 'order']) AS p
-  FROM toks
-),
-p3 AS (
-  SELECT doc_id,
-         unnest([j FOR j IN generate_series(1, len(t)) IF t[j] = 'fast']) AS p
-  FROM toks
-),
-tuples AS (
-  SELECT p1.doc_id, p1.p AS a
-  FROM p1 JOIN p2 USING (doc_id) JOIN p3 USING (doc_id)
-  WHERE p2.p > p1.p AND p2.p - p1.p <= 4
-    AND p3.p > p2.p AND p3.p - p2.p <= 4
-)
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_matches,
-       CAST(MIN(a) - 1 AS BIGINT) AS first_pos
-FROM tuples GROUP BY doc_id
-"""
-
-    # round-12: unordered 3-term co-occurrence within 6 tokens — the
-    # same chained joins with GREATEST/LEAST span arithmetic; spans are
-    # position differences, so 1- vs 0-based numbering cancels.
-    o["doc_cooccurrence_search"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS} AS t FROM documents),
-p0 AS (
-  SELECT doc_id,
-         unnest([j FOR j IN generate_series(1, len(t)) IF t[j] = 'spark']) AS p
-  FROM toks
-),
-p1 AS (
-  SELECT doc_id,
-         unnest([j FOR j IN generate_series(1, len(t)) IF t[j] = 'vector']) AS p
-  FROM toks
-),
-p2 AS (
-  SELECT doc_id,
-         unnest([j FOR j IN generate_series(1, len(t)) IF t[j] = 'join']) AS p
-  FROM toks
-),
-tuples AS (
-  SELECT p0.doc_id,
-         GREATEST(p0.p, p1.p, p2.p) - LEAST(p0.p, p1.p, p2.p) AS span
-  FROM p0 JOIN p1 USING (doc_id) JOIN p2 USING (doc_id)
-  WHERE GREATEST(p0.p, p1.p, p2.p) - LEAST(p0.p, p1.p, p2.p) <= 6
-)
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_matches,
-       CAST(MIN(span) AS BIGINT) AS min_span
-FROM tuples GROUP BY doc_id
-"""
-
-    # round-11: graded retrieval evaluation — nDCG@5 + MRR of the BM25
-    # ranking against derived qrels (grade = # distinct query terms in
-    # the doc). Per-position discounted gains are round-6'd to
-    # DECIMAL(12,6) before the per-query sum (the BM25-idf exactness
-    # discipline: pow/log2 last-ulp divergence absorbed by the round,
-    # decimal sums partition-order independent); ideal ordering ties by
-    # doc_id so IDCG is deterministic.
-    _GAIN6 = (
-        "CAST(FLOOR((POW(2.0, grade) - 1.0) / LOG2(CAST({r} AS DOUBLE) + 1.0)"
-        " * 1000000 + 0.5) / 1000000 AS DECIMAL(12,6))"
-    )
-    o["doc_retrieval_rank_metrics"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS}) AS term FROM documents
-),
-postings0 AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-dl AS (SELECT doc_id, SUM(tf) AS dl FROM postings0 GROUP BY doc_id),
-postings AS (SELECT p.doc_id, p.term, p.tf, dl.dl FROM postings0 p JOIN dl USING (doc_id)),
-dfs AS (SELECT term, COUNT(*) AS df FROM postings GROUP BY term),
-nd AS (
-  SELECT (SELECT COUNT(*) FROM documents) AS n,
-         CAST((SELECT COALESCE(SUM(dl), 0) FROM dl) AS DOUBLE)
-           / CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS avgdl
-),
-q AS ({bm25_q}),
-scored AS (
-  SELECT q.query_id, p.doc_id,
-         CAST(CAST(FLOOR(((FLOOR(ln((nd.n - dfs.df + 0.5) / (dfs.df + 0.5) + 1.0) * 1000000 + 0.5) / 1000000 * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)))) * 1000000 + 0.5) / 1000000 AS DECIMAL(12,6)) AS DECIMAL(12,6)) AS s
-  FROM postings p JOIN q USING (term) JOIN dfs USING (term) CROSS JOIN nd
-),
-per_doc AS (
-  SELECT query_id, doc_id, CAST(SUM(s) AS DOUBLE) AS score FROM scored GROUP BY query_id, doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-  FROM per_doc QUALIFY rank <= 5
-),
-qrels AS (
-  SELECT q.query_id, t.doc_id, CAST(COUNT(*) AS INT) AS grade
-  FROM (SELECT DISTINCT doc_id, term FROM toks) t JOIN q USING (term)
-  GROUP BY 1, 2
-),
-got AS (
-  SELECT r.query_id, r.rank, COALESCE(qr.grade, 0) AS grade
-  FROM ranked r LEFT JOIN qrels qr ON qr.query_id = r.query_id AND qr.doc_id = r.doc_id
-),
-dcg AS (
-  SELECT query_id, SUM({_GAIN6.format(r="rank")}) AS dcg,
-         MIN(CASE WHEN grade > 0 THEN rank END) AS first_rel
-  FROM got GROUP BY query_id
-),
-ideal AS (
-  SELECT query_id, grade,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY grade DESC, doc_id) AS ir
-  FROM qrels QUALIFY ir <= 5
-),
-idcg AS (
-  SELECT query_id, SUM({_GAIN6.format(r="ir")}) AS idcg FROM ideal GROUP BY query_id
-)
-SELECT d.query_id,
-       CASE WHEN d.first_rel IS NULL THEN 0.0
-            ELSE {_R6D.format(e="1.0 / CAST(d.first_rel AS DOUBLE)")} END AS mrr,
-       CASE WHEN i.idcg IS NOT NULL AND i.idcg > 0
-            THEN {_R6D.format(e="CAST(d.dcg AS DOUBLE) / CAST(i.idcg AS DOUBLE)")}
-            ELSE 0.0 END AS ndcg
-FROM dcg d LEFT JOIN idcg i USING (query_id)
-"""
-
-    # decimal→double at the output boundary (twin of _dbl_out; see module
-    # docstring — the driver's hasher canonicalizes decimals inconsistently)
-    for name, cols in _DEC_COLS.items():
-        if name in o:
-            o[name] = _dblsql(o[name], cols)
-    return o
+    """DuckDB twin of every declared query; the declared decimal columns
+    are cast to DOUBLE at the boundary (twin of _dbl_out — see module
+    docstring: the driver's hasher canonicalizes decimals inconsistently)."""
+    return {name: _dblsql(q.sql, q.dec) if q.dec else q.sql for name, q in DECLARED.items()}

@@ -18,7 +18,7 @@ log-probability is rounded to DECIMAL(12,6) the moment it is computed
 scores are exact decimal sums of (bigint tf × decimal log-prob) terms, so
 they are independent of partition/aggregation order on a 1000-executor
 cluster; the ONLY double outputs are final casts. The DuckDB oracle twin
-(`__spark_entry__.py` doc_nb_lang_classifier) evaluates the identical
+(`registry/text.py` doc_nb_lang_classifier) evaluates the identical
 formula.
 
 Not in the reference (its DW has no ML tier); public semantics per

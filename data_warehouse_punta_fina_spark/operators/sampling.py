@@ -2,7 +2,7 @@
 
 Deterministic counterparts to the reference-free sampling a training-data
 pipeline needs: the stratified / split / resample family lives in
-``__spark_entry__``'s corpus queries (fingerprint-bucket splits,
+the registry's curation queries (fingerprint-bucket splits,
 per-language keep rates); this module holds the reusable primitives.
 """
 

@@ -13,7 +13,7 @@ metrics. Spark-first mapping:
 the batch-with-resume semantics the reference actually implements. True
 streaming additions (watermarked event-time windows, stateful sessionize)
 go beyond the reference: the batch-equivalent windowed aggregation lives
-in __spark_entry__ (q_events_tumbling_window) with a SQL oracle; this
+in registry/events.py (events_tumbling_window) with a SQL oracle; this
 module provides the incremental execution of the same plans.
 """
 

@@ -344,15 +344,15 @@ def test_bm25_prf_expansion_degenerates_and_widens(spark):
     plain bm25_topk (the degenerate identity); with expansion on, every
     query still returns a full 1..5 ranking and at least one query's
     result set moves (the feedback terms matter on this corpus)."""
-    import __spark_entry__ as entrymod
     from data_warehouse_punta_fina_spark.operators.retrieval import (
         bm25_prf_topk,
         bm25_topk,
     )
+    from data_warehouse_punta_fina_spark.registry import retrieval
     from data_warehouse_punta_fina_spark.sources.readers import load_table
 
     docs = load_table(spark, SF, "documents")
-    queries = entrymod._BM25_QUERIES
+    queries = retrieval._BM25_QUERIES
     plain = sorted(map(tuple, bm25_topk(docs, queries, k=5).collect()))
     degenerate = sorted(
         map(tuple, bm25_prf_topk(docs, queries, k=5, fb_docs=3, fb_terms=0).collect())
@@ -378,6 +378,7 @@ def test_index_cache_touch_on_use_prevents_self_eviction():
     import time
 
     import __spark_entry__ as entrymod
+    from data_warehouse_punta_fina_spark.registry import shared
 
     fam = "pytest_touch_fam"
     fam_dir = os.path.join(os.path.dirname(os.path.abspath(entrymod.__file__)), ".indexes", fam)
@@ -389,10 +390,10 @@ def test_index_cache_touch_on_use_prevents_self_eviction():
             os.makedirs(d)
             os.utime(d, (old, old))
         # look up e0 (touch-on-use refreshes it) ...
-        assert entrymod._index_cache_dir(fam, "e0").endswith("e0")
+        assert shared._index_cache_dir(fam, "e0").endswith("e0")
         # ... then a sibling lookup runs the eviction pass: e0 must
         # survive (just used), while stale siblings beyond keep evict
-        entrymod._index_cache_dir(fam, "e1")
+        shared._index_cache_dir(fam, "e1")
         assert os.path.isdir(os.path.join(fam_dir, "e0"))
         remaining = set(os.listdir(fam_dir))
         assert "e0" in remaining and len(remaining) < 6

@@ -29,7 +29,7 @@ def test_rotation_ledger_never_checked_all_in_window():
         with open(path) as fh:
             checked |= set(json.load(fh))
     assert checked, "no CORRECTNESS artifacts found — ledger rule can't run"
-    reg, extra = entrymod._build_registries()
+    reg, extra = entrymod.queries(), entrymod.extra_queries()
     never = (set(reg) | set(extra)) - checked
     stuck = never - set(reg)
     assert not stuck, (
@@ -162,11 +162,11 @@ def test_index_refresh_fingerprint_cycle(spark, tmp_path):
     mutation changes the data fingerprint, so the stale index's cache
     key no longer resolves (the reject), a rebuild under the new key
     runs, and search results change accordingly."""
-    import __spark_entry__ as entrymod
     from data_warehouse_punta_fina_spark.operators.retrieval import (
         bm25_build_index,
         bm25_search_index,
     )
+    from data_warehouse_punta_fina_spark.registry import shared
 
     sfdir = str(tmp_path)
     corpus_v1 = spark.createDataFrame(
@@ -174,7 +174,7 @@ def test_index_refresh_fingerprint_cycle(spark, tmp_path):
         "doc_id long, text string",
     )
     corpus_v1.write.mode("overwrite").parquet(f"{sfdir}/documents.parquet")
-    fp1 = entrymod._data_fingerprint(sfdir, "documents")
+    fp1 = shared._data_fingerprint(sfdir, "documents")
     idx1 = str(tmp_path / "idx" / fp1)
     bm25_build_index(spark.read.parquet(f"{sfdir}/documents.parquet"), idx1, n_buckets=4)
     qt = spark.createDataFrame([(9, "spark")], "query_id int, term string")
@@ -188,7 +188,7 @@ def test_index_refresh_fingerprint_cycle(spark, tmp_path):
         "doc_id long, text string",
     )
     corpus_v2.write.mode("overwrite").parquet(f"{sfdir}/documents.parquet")
-    fp2 = entrymod._data_fingerprint(sfdir, "documents")
+    fp2 = shared._data_fingerprint(sfdir, "documents")
     assert fp2 != fp1, "fingerprint must change when the corpus files change"
     # the stale index is keyed under fp1 → a lookup under fp2 is a cache
     # miss (the reject: the old artifacts are never consulted), forcing

@@ -12,13 +12,14 @@ def test_reset_session_memo_rebuilds_identically(spark):
     the first build (determinism of the whole dataflow, not just the
     cache)."""
     import __spark_entry__ as entrymod
+    from data_warehouse_punta_fina_spark.registry import star
 
     sf = "/root/testdata/sf0.001"
     q = entrymod.all_queries()["fact_ventas"]
     first = {(r["venta_id"]): (r["total"], r["cliente_id"]) for r in q(spark, sf).collect()}
-    assert len(entrymod._DIM_MEMO) > 0
+    assert len(star._DIM_MEMO) > 0
     entrymod.reset_session_memo()
-    assert entrymod._DIM_MEMO == {}
+    assert star._DIM_MEMO == {}
     second = {(r["venta_id"]): (r["total"], r["cliente_id"]) for r in q(spark, sf).collect()}
     assert first == second
 
