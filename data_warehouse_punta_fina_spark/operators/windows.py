@@ -136,17 +136,20 @@ def ranked_sequential_id(
     rank. Cluster-robust: every branch recomputes to the same answer, so
     nothing needs materializing — lost executors just replay lineage.
 
-    FULLY LAZY — zero driver collects, one Spark job (round-4 rewrite:
-    the collect-based version cost two extra jobs that each re-executed
-    the upstream lineage, plus ~0.5 s of driver-side expression building
-    per call). Cutpoints live in a 1-row broadcast (``collect_list`` over
-    the sample); offsets in a ≤ n-row broadcast (per-bucket counts +
-    cumulative window). Both sub-plans are pure functions of the data, so
-    branch re-execution on a cluster always agrees. Sample-size note: the
-    1/``sample_mod`` key sample is gathered into a single array — ~20k
-    entries for a 10M-key dim at the default 512, comfortably
-    broadcastable; raise ``sample_mod`` alongside ``partitions`` if keys
-    reach billions (1B keys, sample_mod=65536 → ~15k sampled keys).
+    Lazy, with no driver collect (round-4 rewrite: the collect-based
+    version ran two eager jobs that each re-executed the upstream lineage,
+    plus ~0.5 s of driver-side expression building per call). It is not
+    one Spark job: under AQE each broadcast and shuffle stage runs as its
+    own job when the result is forced (forcing ``dim_cliente`` at sf0.001
+    launches 12 jobs, ``dim_almacen`` 11). Cutpoints live in a 1-row
+    broadcast (``collect_list`` over the sample); offsets in a ≤ n-row
+    broadcast (per-bucket counts + cumulative window). Both sub-plans are
+    pure functions of the data, so branch re-execution on a cluster always
+    agrees. Sample-size note: the 1/``sample_mod`` key sample is gathered
+    into a single array — ~20k entries for a 10M-key dim at the default
+    512, comfortably broadcastable; raise ``sample_mod`` alongside
+    ``partitions`` if keys reach billions (1B keys, sample_mod=65536 →
+    ~15k sampled keys).
 
     This is the scale-safe replacement for a dim-builder global window:
     at sf100 dim_producto/dim_cliente are tens of millions of rows, far

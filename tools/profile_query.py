@@ -10,6 +10,10 @@ optimization/planning) from the QueryExecution tracker — at bench SF the
 data is small enough that a bloated plan's optimizer time is a real
 fraction of the reading.
 
+Each run also reports its Janino compiles: how many generated classes it
+compiled and their compile milliseconds. A repeated run that still
+compiles is missing the codegen class cache (see session.py).
+
 Usage:
     python tools/profile_query.py [--runs 3] [--explain plans/r15 --suffix before]
         [--sf-dir /root/testdata/sf0.1] query1 query2 ...
@@ -83,17 +87,23 @@ def main() -> None:
             print(f"profile: unknown query {name}", file=sys.stderr)
             continue
         runs = []
+        compiles = []
+        compile_ms = []
         phases = None
         for i in range(args.runs):
             if hasattr(entrymod, "reset_session_memo"):
                 entrymod.reset_session_memo()
             spark.sparkContext.setJobDescription(f"profile:{name}:{i}")
+            c0 = _compiles(spark)
             t0 = time.time()
             df = fn(spark, args.sf_dir)
             built = time.time() - t0
             df.write.format("noop").mode("overwrite").save()
             total = time.time() - t0
             runs.append(round(total, 3))
+            c1 = _compiles(spark)
+            compiles.append(c1[0] - c0[0])
+            compile_ms.append(round(c1[1] - c0[1], 1))
             if i == 0:
                 try:
                     tr = df._jdf.queryExecution().tracker().phases()
@@ -111,13 +121,31 @@ def main() -> None:
                     )
                     with open(path, "w") as fh:
                         fh.write(txt)
-            print(f"profile: {name} run{i} build={built:.3f}s total={total:.3f}s", file=sys.stderr)
+            print(
+                f"profile: {name} run{i} build={built:.3f}s total={total:.3f}s "
+                f"compiles={compiles[-1]} compile_ms={compile_ms[-1]}",
+                file=sys.stderr,
+            )
         spark.sparkContext.setJobDescription(None)
-        print(f"RESULT {name} min={min(runs)} runs={runs} phases={phases}")
+        print(
+            f"RESULT {name} min={min(runs)} runs={runs} phases={phases} "
+            f"compiles={compiles} compile_ms={compile_ms}"
+        )
         if args.stages:
             _dump_stage_table(spark, name)
         if args.sql:
             _dump_sql_metrics(spark, name)
+
+
+def _compiles(spark) -> tuple[int, float]:
+    """(classes compiled, compile milliseconds) by Janino in this JVM so far.
+    The count is CodegenMetrics' compilation-time histogram count; the
+    milliseconds come from CodeGenerator's compile-time accumulator, because
+    the histogram keeps only a sample of its values, not their sum."""
+    jvm = spark._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return count, nanos / 1e6
 
 
 def _dump_sql_metrics(spark, name: str) -> None:
