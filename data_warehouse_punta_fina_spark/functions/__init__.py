@@ -11,7 +11,6 @@ from data_warehouse_punta_fina_spark.functions.money import (  # noqa: F401
     IVA_RATE,
     extract_iva,
     money,
-    round2,
 )
 from data_warehouse_punta_fina_spark.functions.strings import (  # noqa: F401
     auto_id,
@@ -24,7 +23,6 @@ from data_warehouse_punta_fina_spark.functions.strings import (  # noqa: F401
     truthy_bool,
 )
 from data_warehouse_punta_fina_spark.functions.text import (  # noqa: F401
-    alpha_ratio,
     bpe_ish_token_count,
     fingerprint,
     lang_id,

@@ -25,12 +25,6 @@ def money(col: Column | str, precision: int = 15, scale: int = 2) -> Column:
     return c.cast(f"decimal({precision},{scale})")
 
 
-def round2(col: Column | str) -> Column:
-    """HALF_UP round to cents — matches PostgreSQL ROUND(numeric, 2) which
-    the reference's CAST(... AS NUMERIC(10,2)) applies."""
-    return F.round(col, 2)
-
-
 def pround(col: Column | str, scale: int = 2, precision: int = 15) -> Column:
     """Portable half-up rounding: ``floor(x·10^s + 0.5) / 10^s`` as decimal.
 
@@ -65,12 +59,6 @@ def pround2(col: Column | str) -> Column:
 def pround6(col: Column | str, precision: int = 12) -> Column:
     """Portable ratio rounding to DECIMAL(12,6)."""
     return pround(col, 6, precision)
-
-
-def sql_round(expr: str, scale: int = 2, precision: int = 15) -> str:
-    """ANSI-SQL rendering of :func:`pround` for external oracles."""
-    f = 10**scale
-    return f"CAST(FLOOR(({expr}) * {f} + 0.5) / {f} AS DECIMAL({precision},{scale}))"
 
 
 def extract_iva(incl: Column | str) -> tuple[Column, Column]:

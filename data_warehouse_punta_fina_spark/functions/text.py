@@ -77,12 +77,6 @@ def punct_ratio(col: Column | str) -> Column:
     return pround6(_punct_raw(F.col(col) if isinstance(col, str) else col))
 
 
-def alpha_ratio(col: Column | str) -> Column:
-    from data_warehouse_punta_fina_spark.functions.money import pround6
-
-    return pround6(_alpha_raw(F.col(col) if isinstance(col, str) else col))
-
-
 def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Column:
     from data_warehouse_punta_fina_spark.functions.money import pround6
 

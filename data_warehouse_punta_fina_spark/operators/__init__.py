@@ -13,7 +13,6 @@ from data_warehouse_punta_fina_spark.operators.behavior import (  # noqa: F401
 )
 from data_warehouse_punta_fina_spark.operators.dedup import (  # noqa: F401
     dedupe_by_grain,
-    duplicate_count,
     duplicate_groups,
     exact_dedup,
     incremental_lsh_dedup,
@@ -67,7 +66,6 @@ from data_warehouse_punta_fina_spark.operators.index_admin import (  # noqa: F40
 from data_warehouse_punta_fina_spark.operators.journal import explode_journal_entries  # noqa: F401
 from data_warehouse_punta_fina_spark.operators.pivots import (  # noqa: F401
     conditional_sum,
-    debit_credit_rollup,
     pivot_sum,
 )
 from data_warehouse_punta_fina_spark.operators.sk_lookup import scalar_lookup, sk_lookup  # noqa: F401
@@ -87,6 +85,5 @@ from data_warehouse_punta_fina_spark.operators.windows import (  # noqa: F401
     partitioned_sequential_id,
     ranked_sequential_id,
     running_total,
-    sequential_id,
     top_n_per_group,
 )

@@ -52,13 +52,6 @@ def duplicate_groups(df: DataFrame, keys: list[str]) -> DataFrame:
     return df.groupBy(*keys).agg(F.count("*").alias("n")).filter(F.col("n") > 1)
 
 
-def duplicate_count(df: DataFrame, keys: list[str]) -> int:
-    """`duplicated().sum()` equivalent (A10: `complete_fact_builder.py:236-242`)."""
-    total = df.count()
-    distinct = df.select(*keys).distinct().count()
-    return total - distinct
-
-
 # ---------------------------------------------------------------------------
 # Large-scale text dedup (north-star extensions)
 # ---------------------------------------------------------------------------

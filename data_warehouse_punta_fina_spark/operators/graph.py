@@ -370,69 +370,3 @@ def degree_assortativity(edges: DataFrame, src: str = "u", dst: str = "v") -> Da
             (vx > 0) & (vy > 0), r6(cov / (F.sqrt(vx) * F.sqrt(vy)))
         ).alias("assortativity"),
     )
-
-
-def kcore_delta(
-    edges: DataFrame,
-    k: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """k-core by DELTA peeling — the scale-fix the sf0.5 run asked for
-    (8.1× super-linear on :func:`kcore` at 5× data): instead of
-    re-aggregating the WHOLE live edge set every round, maintain a
-    degree table and per round (1) find the frontier (deg < k),
-    (2) decrement its neighbors by the frontier-incident edge counts,
-    (3) prune only frontier-incident stubs. Per-round cost is
-    proportional to edges TOUCHING removed nodes — on typical graphs the
-    cascade tail costs almost nothing, where the re-aggregating peel
-    pays the full live-graph scan every round.
-
-    Round semantics are identical to :func:`kcore` (each round removes
-    ALL nodes currently under k), so at convergence the outputs agree
-    exactly (pytest-pinned); ``max_iter`` bounds depth the same way.
-    Output: (node, core_degree) for the k-core members.
-    """
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    stubs = (
-        und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .localCheckpoint(eager=False)
-    )
-    alive = (
-        stubs.groupBy(F.col("u").alias("node"))
-        .agg(F.count("*").cast("long").alias("deg"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_iter):
-        frontier = alive.filter(F.col("deg") < k).select("node").localCheckpoint(eager=False)
-        if frontier.count() == 0:
-            break
-        dec = (
-            stubs.join(frontier.withColumnRenamed("node", "u"), "u", "left_semi")
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.count("*").cast("long").alias("_d"))
-        )
-        alive = (
-            alive.join(frontier, "node", "left_anti")
-            .join(dec, "node", "left")
-            .select(
-                "node",
-                (F.col("deg") - F.coalesce(F.col("_d"), F.lit(0))).alias("deg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        stubs = (
-            stubs.join(frontier.withColumnRenamed("node", "u"), "u", "left_anti")
-            .join(frontier.withColumnRenamed("node", "v"), "v", "left_anti")
-            .localCheckpoint(eager=False)
-        )
-    return alive.filter(F.col("deg") >= k).select(
-        "node", F.col("deg").alias("core_degree")
-    )

@@ -30,17 +30,3 @@ def pivot_sum(
     the reference's ``pivot_table(..., fill_value=0)``."""
     out = df.groupBy(*group_by).pivot(pivot_col, values).agg(F.sum(value_col))
     return out.na.fill(fill, subset=values)
-
-
-def debit_credit_rollup(
-    journal: DataFrame,
-    group_by: list[str],
-    tipo_col: str = "tipo_movimiento",
-    monto_col: str = "monto",
-) -> DataFrame:
-    """Ledger rollup: total debits/credits + net movement per group
-    (reference `complete_fact_builder.py:918-928`)."""
-    return journal.groupBy(*group_by).agg(
-        conditional_sum(tipo_col, "DEBITO", monto_col, "debitos"),
-        conditional_sum(tipo_col, "CREDITO", monto_col, "creditos"),
-    )

@@ -18,17 +18,6 @@ def _row(spark: SparkSession, check: str, target: str, metric: str, value: int, 
     )
 
 
-def check_counts(tables: dict[str, DataFrame]) -> DataFrame:
-    """Per-table counts > 0 (`main.py:662-667`)."""
-    spark = next(iter(tables.values())).sparkSession
-    out = None
-    for name, df in tables.items():
-        n = df.count()
-        r = _row(spark, "count_gt_zero", name, "rows", n, n > 0)
-        out = r if out is None else out.unionByName(r)
-    return out
-
-
 def check_fk_orphans(fact: DataFrame, fact_name: str, fks: dict[str, tuple[DataFrame, str]]) -> DataFrame:
     """FK-orphan anti-join counts for each declared FK (`main.py:798-835`).
     Orphans are counted AFTER default-member fallback, so passing means
@@ -50,23 +39,6 @@ def check_grain_unique(fact: DataFrame, fact_name: str, keys: list[str]) -> Data
     """Duplicate-grain check (`main.py:838-880`)."""
     dups = fact.groupBy(*keys).count().filter(F.col("count") > 1).count()
     return _row(fact.sparkSession, "grain_unique", fact_name, "dup_groups", dups, dups == 0)
-
-
-def check_not_null(df: DataFrame, name: str, cols: list[str]) -> DataFrame:
-    """NULL/empty checks on critical columns (`main.py:883-909`)."""
-    spark = df.sparkSession
-    out = None
-    for c in cols:
-        bad = df.filter(F.col(c).isNull() | (F.trim(F.col(c).cast("string")) == "")).count()
-        r = _row(spark, "not_null", f"{name}.{c}", "bad_rows", bad, bad == 0)
-        out = r if out is None else out.unionByName(r)
-    return out
-
-
-def check_reconciliation(source_count: int, target: DataFrame, name: str) -> DataFrame:
-    """Source-vs-DW count reconciliation (`main.py:911-967`)."""
-    n = target.count()
-    return _row(target.sparkSession, "reconciliation", name, "dw_minus_source", n - source_count, n == source_count)
 
 
 def check_double_entry(journal: DataFrame, monto: str = "monto", tipo: str = "tipo_movimiento") -> DataFrame:

@@ -1753,58 +1753,6 @@ def cooccurrence_search_index(
     )
 
 
-def phrase_search_federated(
-    spark,
-    index_dirs: list[str],
-    phrase: str,
-    slop: int | None = None,
-    id_col: str = "doc_id",
-    validate_index: bool = True,
-    verify_corpora: list[DataFrame] | None = None,
-    verify_text_col: str = "text",
-) -> DataFrame:
-    """Federated phrase (or sloppy-phrase, with ``slop``) search over
-    PER-SHARD persisted positional indexes — completing the federation
-    triptych with its degenerate-easy member: positions carry ZERO
-    global state (no df/N/avgdl, no quantizers), so federation is the
-    plain union of per-shard results — exact by construction, with not
-    even BM25's stats merge to perform (and none of the vector side's
-    recall penalty). Shards must partition the corpus (disjoint
-    ``id_col`` — each doc's matches come wholly from its own shard).
-
-    ``verify_corpora`` (parallel to ``index_dirs``) checks every
-    shard's stored fingerprint first and raises
-    :class:`~.freshness.StaleIndexError` naming a stale shard — the
-    per-shard refresh contract shared with both other federations."""
-    if not index_dirs:
-        raise ValueError("phrase_search_federated needs at least one shard index")
-    if verify_corpora is not None:
-        if len(verify_corpora) != len(index_dirs):
-            raise ValueError(
-                f"verify_corpora must parallel index_dirs "
-                f"({len(verify_corpora)} != {len(index_dirs)})"
-            )
-        for d, shard_corpus in zip(index_dirs, verify_corpora):
-            if not positional_index_is_fresh(shard_corpus, d, verify_text_col, id_col):
-                raise StaleIndexError(
-                    f"federated shard index at {d!r} does not match its live "
-                    "corpus — refresh that shard with positional_refresh_index; "
-                    "fresh shards need no rebuild."
-                )
-    parts = [
-        (
-            phrase_search_index(spark, d, phrase, id_col, validate_index)
-            if slop is None
-            else phrase_slop_search_index(spark, d, phrase, slop, id_col, validate_index)
-        )
-        for d in index_dirs
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def positional_append_index(
     new_docs: DataFrame,
     index_dir: str,

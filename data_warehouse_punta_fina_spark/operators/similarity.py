@@ -1117,47 +1117,6 @@ def ivfpq_compact_index(
         pass  # a pre-fingerprint index compacts fingerprint-less (stays stale)
 
 
-def ivfpq_recall_probe(
-    queries: DataFrame,
-    corpus: DataFrame,
-    index_dir: str,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **search_kwargs,
-) -> float:
-    """Sampled recall@k of a persisted IVF-PQ index against a
-    brute-force pass over the live corpus — the DRIFT SIGNAL the
-    freshness fingerprint cannot provide (VERDICT r12 #3):
-    :func:`ivfpq_append_index` encodes new vectors with FROZEN
-    quantizers, so a distribution shift in the appended data degrades
-    recall while the content fingerprint stays "fresh" (it tracks
-    corpus identity, not quantizer fit). Refresh orchestration should
-    run this probe on a small query sample periodically: a reading
-    below the index's trained recall floor (RECALL.json) means the
-    quantizers no longer describe the data — rebuild with
-    :func:`ivfpq_refresh_index` even though ``ivfpq_index_is_fresh``
-    still returns True.
-
-    Cost: one probed-cell index search + ONE brute-force pass of
-    ``corpus`` × ``queries`` (sample-sized — keep ``queries`` to tens
-    of rows; the brute side is |corpus| × |sample| dot products, the
-    same shape as one exact-rerank stage). Returns recall@k in [0, 1]:
-    |approx ∩ exact| / |exact| over (query, neighbor) pairs."""
-    got = ivfpq_search_index(
-        queries, corpus, index_dir, k=k, id_col=id_col, vec_col=vec_col,
-        **search_kwargs,
-    ).select("query_id", "neighbor_id")
-    truth = brute_force_topk(
-        corpus, queries, k=k, id_col=id_col, vec_col=vec_col
-    ).select("query_id", "neighbor_id")
-    n_truth = truth.count()
-    if n_truth == 0:
-        raise ValueError("recall probe needs a non-empty query sample")
-    n_hit = truth.join(got, ["query_id", "neighbor_id"]).count()
-    return n_hit / n_truth
-
-
 def ivfpq_index_is_fresh(
     corpus: DataFrame,
     index_dir: str,
@@ -1202,390 +1161,6 @@ def ivfpq_refresh_index(
         corpus, index_dir, n_cells, m, n_centroids, iters, id_col, vec_col, dims
     )
     return True
-
-
-def ivfpq_capacity_probe(
-    queries: DataFrame,
-    corpus: DataFrame,
-    index_dir: str,
-    target_recall: float,
-    k: int = 5,
-    rerank_ladder: tuple[int, ...] = (30, 120, 600),
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **search_kwargs,
-) -> dict:
-    """Diagnose WHY a persisted IVF-PQ index under-recalls — the
-    advisor between :func:`ivfpq_recall_probe` (detects) and the fix
-    (retrain? deepen rerank? widen probes?). Runs the recall probe at
-    increasing exact-rerank depths against ONE shared brute-force
-    truth; the shape of the curve separates the two failure modes:
-
-    - ``code_tied``: recall recovers as rerank deepens — the true
-      neighbors ARE in the probed cells, but the PQ codes cannot rank
-      them (ties: a tight cluster quantizes to one code under any
-      training). Retraining will NOT help; the knobs are rerank depth
-      or codebook richness (``m`` / ``n_centroids``). Measured on the
-      drifted-append fixture: 0.06 → 0.30 → 1.00 up the (30, 120, 600)
-      ladder.
-    - ``assignment_miss``: recall stays low at every depth — the true
-      neighbors are not in the probed cells at all. The knobs are
-      ``probes`` or a coarse-quantizer retrain
-      (:func:`ivfpq_refresh_if_drifted`).
-    - ``healthy``: the shallowest reading already meets
-      ``target_recall`` (pin it from RECALL.json's trained tier).
-
-    Cost: len(ladder) index searches + ONE sample-sized brute pass
-    (the truth set is shared across depths). Returns ``{"readings":
-    {rerank: recall}, "diagnosis": str}``."""
-    if not rerank_ladder or list(rerank_ladder) != sorted(set(rerank_ladder)):
-        raise ValueError("rerank_ladder must be strictly increasing and non-empty")
-    truth = brute_force_topk(
-        corpus, queries, k=k, id_col=id_col, vec_col=vec_col
-    ).select("query_id", "neighbor_id")
-    truth = truth.localCheckpoint()  # one brute pass, reused per depth
-    n_truth = truth.count()
-    if n_truth == 0:
-        raise ValueError("capacity probe needs a non-empty query sample")
-    readings: dict[int, float] = {}
-    for rr in rerank_ladder:
-        got = ivfpq_search_index(
-            queries, corpus, index_dir, k=k, rerank=rr,
-            id_col=id_col, vec_col=vec_col, **search_kwargs,
-        ).select("query_id", "neighbor_id")
-        readings[int(rr)] = (
-            truth.join(got, ["query_id", "neighbor_id"]).count() / n_truth
-        )
-    first, deepest = readings[rerank_ladder[0]], readings[rerank_ladder[-1]]
-    if first >= target_recall:
-        diagnosis = "healthy"
-    elif deepest >= target_recall:
-        diagnosis = "code_tied"
-    else:
-        diagnosis = "assignment_miss"
-    return {"readings": readings, "diagnosis": diagnosis}
-
-
-def ivfpq_refresh_if_drifted(
-    corpus: DataFrame,
-    index_dir: str,
-    sample_queries: DataFrame,
-    recall_floor: float,
-    k: int = 5,
-    n_cells: int = 32,
-    m: int = 8,
-    n_centroids: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 64,
-    **search_kwargs,
-) -> tuple[bool, float]:
-    """The DRIFT-aware refresh cycle — the orchestration composition
-    :func:`ivfpq_refresh_index` cannot be (round-13, closing VERDICT
-    r12 #3): the fingerprint cycle rebuilds when the CORPUS changed
-    under the index, but an append-maintained index tracks its corpus
-    exactly while its FROZEN quantizers drift away from the data —
-    ``is_fresh`` True, recall silently degrading. This runs the
-    sampled :func:`ivfpq_recall_probe` and retrains
-    (:func:`ivfpq_build_index` on the current corpus — re-fitting
-    quantizers AND re-establishing the fingerprint) when the reading
-    falls below ``recall_floor`` (pin it from RECALL.json's trained
-    tier for the index's parameters).
-
-    Returns ``(rebuilt, measured_recall)`` — the recall is the
-    PRE-rebuild reading, the number an operator would alert on. Run
-    once per ingest/maintenance cycle next to the fingerprint check,
-    not per query: the probe costs one sample-sized brute pass, the
-    rebuild one training job.
-
-    Scope note: retraining re-fits the quantizers to the CURRENT
-    distribution; whether the drifted mode then recovers is a
-    quantizer-CAPACITY question (an adversarially tight cluster ties
-    the PQ codes under any training — the knobs are rerank depth /
-    ``m`` / ``n_cells``). Re-probe after the rebuild: a reading still
-    under the floor means re-parameterize, not re-train."""
-    measured = ivfpq_recall_probe(
-        sample_queries, corpus, index_dir, k=k, id_col=id_col, vec_col=vec_col,
-        n_cells=n_cells, m=m, n_centroids=n_centroids, iters=iters, dims=dims,
-        **search_kwargs,
-    )
-    if measured >= recall_floor:
-        return False, measured
-    ivfpq_build_index(
-        corpus, index_dir, n_cells, m, n_centroids, iters, id_col, vec_col, dims
-    )
-    return True, measured
-
-
-def ivfpq_remediate_drift(
-    corpus: DataFrame,
-    index_dir: str,
-    sample_queries: DataFrame,
-    recall_floor: float,
-    k: int = 5,
-    probes: int = IVFPQ_DEFAULT_PROBES,
-    rerank: int = 50,
-    rerank_ladder: tuple[int, ...] = (30, 120, 600),
-    probe_ladder: tuple[int, ...] | None = None,
-    n_cells: int = 32,
-    m: int = 8,
-    n_centroids: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 64,
-) -> dict:
-    """Diagnose-FIRST drift remediation (round-14, VERDICT r13 #5) —
-    the composition :func:`ivfpq_refresh_if_drifted` deliberately is
-    not: that cycle retrains unconditionally below the floor, but
-    :func:`ivfpq_capacity_probe` can already tell when retraining is
-    the WRONG remedy. This runs the probe chain and applies the
-    cheapest fix the diagnosis indicates:
-
-    - ``healthy``: the current (``probes``, ``rerank``) reading meets
-      ``recall_floor`` — no action.
-    - ``code_tied``: recall recovers up the rerank ladder, so the true
-      neighbors ARE in the probed cells and the PQ codes merely tie —
-      a retrain cannot untie an adversarially tight cluster, but a
-      deeper exact rerank ranks it exactly. Remedy: recommend the
-      SHALLOWEST ladder depth that meets the floor. Zero index writes,
-      zero training jobs — the fix is a search-parameter bump.
-    - ``assignment_miss``: recall plateaus below the floor at every
-      rerank depth — the neighbors are not in the probed cells. Remedy:
-      widen ``probes`` up ``probe_ladder`` (default: doublings from the
-      current setting up to ``n_cells``), scaling ``rerank``
-      PROPORTIONALLY at each rung (measured on sf0.001: widening probes
-      at a FIXED rerank *lowers* recall — 0.86 at probes=1 → 0.70 at
-      probes=16, rerank=50 — because the ADC candidate pool grows while
-      the exact-rank window doesn't, so true neighbors fall out of the
-      ADC top-``rerank``; holding the reranked FRACTION constant
-      recovers monotonically: 0.89/0.91/0.99/1.00 up the doubled
-      (probes, rerank) ladder). Take the first rung that meets the
-      floor; only if the widest rung still misses does the coarse
-      quantizer itself no longer describe the data, and the remedy
-      escalates to a retrain (:func:`ivfpq_build_index` on the current
-      corpus, the :func:`ivfpq_refresh_if_drifted` action) with a
-      post-rebuild re-probe.
-
-    Returns ``{"diagnosis", "action", "pre", "post", "params",
-    "readings"}`` — ``pre`` is the reading an operator would alert on,
-    ``post`` the reading under the applied remedy, ``params`` the
-    (probes, rerank) to run searches with afterward. Cost: one shared
-    brute-force truth pass per probe stage (sample-sized — keep
-    ``sample_queries`` to tens of rows), the ladder's index searches
-    (each probes/n_cells-pruned), and a training job ONLY on the
-    escalation path. Run from maintenance orchestration next to the
-    fingerprint check, never per query."""
-    params = dict(
-        n_cells=n_cells, m=m, n_centroids=n_centroids, iters=iters, dims=dims
-    )
-    pre = ivfpq_recall_probe(
-        sample_queries, corpus, index_dir, k=k, id_col=id_col, vec_col=vec_col,
-        probes=probes, rerank=rerank, **params,
-    )
-    out = {
-        "pre": pre,
-        "params": {"probes": probes, "rerank": rerank},
-        "readings": {f"probes={probes},rerank={rerank}": pre},
-    }
-    if pre >= recall_floor:
-        return {**out, "diagnosis": "healthy", "action": "none", "post": pre}
-    ladder = tuple(sorted({*rerank_ladder, rerank}))
-    cap = ivfpq_capacity_probe(
-        sample_queries, corpus, index_dir, target_recall=recall_floor, k=k,
-        rerank_ladder=ladder, id_col=id_col, vec_col=vec_col, probes=probes,
-        **params,
-    )
-    out["readings"].update(
-        {f"probes={probes},rerank={r}": v for r, v in cap["readings"].items()}
-    )
-    if cap["diagnosis"] in ("healthy", "code_tied"):
-        # the candidates are in the probed cells — rank them exactly at
-        # the shallowest depth that clears the floor. No retrain.
-        depth = min(r for r, v in cap["readings"].items() if v >= recall_floor)
-        return {
-            **out,
-            "diagnosis": "code_tied",
-            "action": f"rerank={depth}",
-            "post": cap["readings"][depth],
-            "params": {"probes": probes, "rerank": int(depth)},
-        }
-    if probe_ladder is None:
-        probe_ladder = tuple(
-            p for p in (probes * 2, probes * 4, probes * 8, n_cells)
-            if probes < p <= n_cells
-        )
-    for p in sorted(set(probe_ladder)):
-        # hold the reranked fraction constant as the candidate pool
-        # widens (see docstring — fixed rerank REGRESSES under wider
-        # probes on the measured fixture)
-        rr = max(rerank, (rerank * int(p) + probes - 1) // probes)
-        reading = ivfpq_recall_probe(
-            sample_queries, corpus, index_dir, k=k, id_col=id_col, vec_col=vec_col,
-            probes=int(p), rerank=rr, **params,
-        )
-        out["readings"][f"probes={int(p)},rerank={rr}"] = reading
-        if reading >= recall_floor:
-            return {
-                **out,
-                "diagnosis": "assignment_miss",
-                "action": f"probes={int(p)},rerank={rr}",
-                "post": reading,
-                "params": {"probes": int(p), "rerank": rr},
-            }
-    # widest probes still miss: the coarse quantizer no longer describes
-    # the data — escalate to the retrain cycle and re-probe
-    ivfpq_build_index(
-        corpus, index_dir, n_cells, m, n_centroids, iters, id_col, vec_col, dims
-    )
-    post = ivfpq_recall_probe(
-        sample_queries, corpus, index_dir, k=k, id_col=id_col, vec_col=vec_col,
-        probes=probes, rerank=rerank, **params,
-    )
-    out["readings"][f"retrained:probes={probes},rerank={rerank}"] = post
-    if post >= recall_floor:
-        return {**out, "diagnosis": "assignment_miss", "action": "retrain", "post": post}
-    # the residual the r13 verdict documented: a tight cluster stays
-    # code-tied under ANY training (measured: retrain on the drifted
-    # union reads 0.075 at rerank=50 but 1.00 at 600). Re-diagnose the
-    # RETRAINED index once and apply the code-tied rerank remedy.
-    cap2 = ivfpq_capacity_probe(
-        sample_queries, corpus, index_dir, target_recall=recall_floor, k=k,
-        rerank_ladder=ladder, id_col=id_col, vec_col=vec_col, probes=probes,
-        **params,
-    )
-    out["readings"].update(
-        {f"retrained:probes={probes},rerank={r}": v for r, v in cap2["readings"].items()}
-    )
-    recovered = [r for r, v in cap2["readings"].items() if v >= recall_floor]
-    if recovered:
-        depth = min(recovered)
-        return {
-            **out,
-            "diagnosis": "assignment_miss",
-            "action": f"retrain+rerank={depth}",
-            "post": cap2["readings"][depth],
-            "params": {"probes": probes, "rerank": int(depth)},
-        }
-    # nothing on the ladder clears the floor even retrained: the floor
-    # is beyond this parameterization's capacity — the remaining knobs
-    # are codebook richness, and whether they HELP is measurable:
-    # run :func:`ivfpq_reparameterize_probe` next (it builds candidate
-    # parameterizations in scratch and reports which, if any, clears
-    # the floor at the caller's settings — or an honest None when the
-    # data is near-tied beyond any code resolution)
-    return {
-        **out,
-        "diagnosis": "assignment_miss",
-        "action": "reparameterize",
-        "post": max(cap2["readings"].values()),
-    }
-
-
-def ivfpq_reparameterize_probe(
-    corpus: DataFrame,
-    index_dir: str,
-    sample_queries: DataFrame,
-    recall_floor: float,
-    scratch_dir: str,
-    k: int = 5,
-    probes: int = IVFPQ_DEFAULT_PROBES,
-    rerank: int = 50,
-    candidates: tuple[dict, ...] | None = None,
-    apply: bool = False,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 64,
-) -> dict:
-    """The tool :func:`ivfpq_remediate_drift`'s ``reparameterize``
-    terminal verdict points at (round-14): when no (probes, rerank)
-    setting clears the floor even after a retrain, the remaining knobs
-    are CODEBOOK RICHNESS — and whether richer codes actually help is
-    an empirical question this probe answers instead of guessing.
-    Measured on sf0.001 at fixed (probes=16, rerank=50): m=8/nc=8 reads
-    0.70, nc=32 reads 0.85, m=16 reads 0.78, m=16+nc=32 reads 1.00 —
-    monotone and decisive. But on the adversarial near-tie fixture
-    (a +10-shifted cluster whose TRUE cosine neighbors differ only at
-    the 4th decimal) EVERY parameterization reads 0.075: no codebook
-    can resolve what the exact metric barely resolves, and the honest
-    answer is ``recommended: None`` (deepen rerank instead).
-
-    Protocol: reads the stored parameters from the index metadata,
-    builds each candidate parameterization in its own subdirectory of
-    ``scratch_dir`` (training jobs — this is the admin cost class, run
-    it offline), and measures recall at the CALLER'S (probes, rerank)
-    against ONE shared brute-force truth. The default candidate ladder
-    doubles the knobs cheapest-storage-first: richer codebooks
-    (``n_centroids``×4 — same code rows, a 4× LUT) before more
-    subspaces (``m``×2 — DOUBLES the codes-table rows) before both.
-    First candidate to clear ``recall_floor`` wins; ``apply=True``
-    rebuilds ``index_dir`` itself at the winning parameters (one more
-    training job + fingerprint re-stamp via :func:`ivfpq_build_index`).
-
-    Returns ``{"baseline", "readings", "recommended", "applied"}``."""
-    spark = corpus.sparkSession
-    codes = spark.read.parquet(f"{index_dir}/codes")
-    stored = dict(codes.schema["scid"].metadata or {})
-    if stored.get("scheme") != IVFPQ_SCHEME:
-        raise ValueError(
-            "cannot reparameterize an index without a valid parameter "
-            f"fingerprint (stored scheme {stored.get('scheme')!r})"
-        )
-    base = {
-        "n_cells": int(stored["n_cells"]),
-        "m": int(stored["m"]),
-        "n_centroids": int(stored["n_centroids"]),
-        "iters": int(stored["iters"]),
-    }
-    if candidates is None:
-        candidates = (
-            {**base, "n_centroids": base["n_centroids"] * 4},
-            {**base, "m": base["m"] * 2},
-            {**base, "m": base["m"] * 2, "n_centroids": base["n_centroids"] * 4},
-        )
-    truth = brute_force_topk(
-        corpus, sample_queries, k=k, id_col=id_col, vec_col=vec_col
-    ).select("query_id", "neighbor_id")
-    truth = truth.localCheckpoint()  # ONE brute pass shared by every reading
-    n_truth = truth.count()
-    if n_truth == 0:
-        raise ValueError("reparameterize probe needs a non-empty query sample")
-
-    def _recall(idx_dir: str, params: dict) -> float:
-        got = ivfpq_search_index(
-            sample_queries, corpus, idx_dir, k=k, probes=probes, rerank=rerank,
-            id_col=id_col, vec_col=vec_col, dims=dims, **params,
-        ).select("query_id", "neighbor_id")
-        return truth.join(got, ["query_id", "neighbor_id"]).count() / n_truth
-
-    baseline = _recall(index_dir, base)
-    readings: dict[str, float] = {}
-    recommended: dict | None = None
-    for i, cand in enumerate(candidates):
-        label = ",".join(f"{k_}={cand[k_]}" for k_ in ("n_cells", "m", "n_centroids"))
-        d = f"{scratch_dir.rstrip('/')}/cand{i}"
-        ivfpq_build_index(
-            corpus, d, cand["n_cells"], cand["m"], cand["n_centroids"],
-            cand["iters"], id_col, vec_col, dims,
-        )
-        readings[label] = _recall(d, cand)
-        if readings[label] >= recall_floor:
-            recommended = dict(cand)
-            break  # ladder is cost-ascending — the first clear is the pick
-    applied = False
-    if apply and recommended is not None:
-        ivfpq_build_index(
-            corpus, index_dir, recommended["n_cells"], recommended["m"],
-            recommended["n_centroids"], recommended["iters"], id_col, vec_col, dims,
-        )
-        applied = True
-    return {
-        "baseline": baseline,
-        "readings": readings,
-        "recommended": recommended,
-        "applied": applied,
-    }
 
 
 def ivfpq_search_index(

@@ -2,8 +2,10 @@
 
 All windows are partitioned by a business key, so at 100 TB each group is
 small and the shuffle is a standard hash repartition on the key — no
-global sort. The one exception, dense global id assignment, is documented
-on :func:`sequential_id`.
+global sort. Dense global ids avoid the single-partition global window
+too: :func:`ranked_sequential_id` (every dim SK) and
+:func:`partitioned_sequential_id` (the design for dense fact ids) rank per
+key range or partition and add offsets.
 """
 
 from __future__ import annotations
@@ -76,27 +78,6 @@ def top_n_per_group(
     pb = [partition_by] if isinstance(partition_by, str) else partition_by
     w = Window.partitionBy(*pb).orderBy(*order_by)
     return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= n).drop(rank_col)
-
-
-def sequential_id(
-    df: DataFrame,
-    order_by: str | list[str],
-    out: str = "id",
-    start: int = 1,
-) -> DataFrame:
-    """Dense sequential ids 1..n ordered by a natural key (W4: reference
-    `df.insert(0, 'line_item_id', range(1, len(df)+1))`,
-    `complete_dimension_builder.py:560-561`).
-
-    Scale note: a global row_number funnels through one partition — fine
-    for dimension tables (≤ millions of rows). For 100 TB facts prefer
-    :func:`partitioned_sequential_id`, which computes per-partition counts
-    and offsets (two passes, no single-partition bottleneck), or drop the
-    density requirement and use ``monotonically_increasing_id``.
-    """
-    ob = [order_by] if isinstance(order_by, str) else order_by
-    w = Window.orderBy(*ob)
-    return df.withColumn(out, F.row_number().over(w) + F.lit(start - 1))
 
 
 def ranked_sequential_id(

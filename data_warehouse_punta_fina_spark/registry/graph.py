@@ -243,17 +243,16 @@ GROUP BY node HAVING COUNT(*) >= 10
 def trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # k-core of the bipartite customer–supplier trade graph (iterative
     # peel, early-exit at the fixed point): the trading nucleus —
-    # nodes with >= 10 within-core counterparties. Round 6 TRIED the
-    # delta peel here (operators.graph.kcore_delta) and measured it
-    # SLOWER at sf0.5 (23.3 s vs 13.5 s in bench context): this
-    # graph peels in huge frontiers, so "frontier-incident" is most
-    # of the graph and the delta version's extra anti-joins cost
-    # more than the re-aggregation they replace — kcore_delta stays
-    # available for the deep-cascade shapes it actually wins on
-    # (docs/BENCH_NOTES.md). Supplier ids offset to disjoint the
-    # bipartite sides (operators.graph.kcore; unrolled oracle; the
-    # part co-purchase graph is too dense to peel — min degree 42
-    # at sf0.01).
+    # nodes with >= 10 within-core counterparties. Round 6 TRIED a
+    # delta peel here (decrement only the frontier's neighbours) and
+    # measured it SLOWER at sf0.5 (23.3 s vs 13.5 s in bench context):
+    # this graph peels in huge frontiers, so "frontier-incident" is
+    # most of the graph and the delta version's extra anti-joins cost
+    # more than the re-aggregation they replace. It was reverted and
+    # later deleted (docs/BENCH_NOTES.md). Supplier ids offset to
+    # disjoint the bipartite sides (operators.graph.kcore; unrolled
+    # oracle; the part co-purchase graph is too dense to peel — min
+    # degree 42 at sf0.01).
     # max_iter=3 is MEASURED, not guessed (VERDICT r6 #5): the k=10
     # peel of this graph converges after ONE effective round at every
     # SF probed (sf0.001/0.01/0.1 testdata AND the 2.93M-edge

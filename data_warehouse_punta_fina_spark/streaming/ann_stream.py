@@ -115,10 +115,10 @@ def run_ann_stream(
 # honors the quantizer-drift reality the roadmap documented: the stream
 # NEVER retrains — quantizers are trained once on an init snapshot
 # (:func:`ivfpq_stream_init`) and every micro-batch is encoded with them
-# (Jégou et al. 2011 ops posture). Drift detection is the recall probe's
-# job (``similarity.ivfpq_recall_probe`` — the freshness fingerprint
-# tracks corpus identity, not quantizer fit); refresh orchestration
-# rebuilds out-of-band when the probe reads below the trained floor.
+# (Jégou et al. 2011 ops posture). The freshness fingerprint cannot see
+# drift — it tracks corpus identity, not quantizer fit — so drift shows
+# only as lower recall against a brute-force pass; the remedy is an
+# out-of-band rebuild (``similarity.ivfpq_build_index``).
 # ---------------------------------------------------------------------------
 
 

@@ -25,18 +25,13 @@ SLOW_TESTS = {
     "test_no_partition_defined_warnings_registry_wide",
     "test_continuous_dedup_ingest_stream",
     "test_driver_window_spark_schemas_are_scalar",
-    "test_remediate_healthy_and_retrain_escalation",
     "test_round10_debuts_invariant_under_adversarial_partitions",
-    "test_reparameterize_probe_recommends_richer_codes",
-    "test_reparameterize_probe_honest_none_on_near_ties",
     "test_continuous_dedup_stream_resumes_from_checkpoint",
     "test_stream_stream_left_outer_join_emits_after_watermark",
     "test_classify_stream_matches_batch_and_is_idempotent",
     "test_nb_maintenance_stream_equals_monolithic_and_replay_safe",
-    "test_ivfpq_capacity_probe_diagnoses_failure_modes",
     "test_ivfpq_append_is_encode_only_and_validated",
     "test_bm25_federated_exactness_random_splits",
-    "test_ivfpq_refresh_if_drifted_rebuilds_and_recovers",
     "test_dedup_clusters_star_equals_label_propagation",
     "test_watermark_drops_late_data_in_append",
     "test_rrf_fusion_invariant_under_adversarial_partitions",
@@ -44,12 +39,9 @@ SLOW_TESTS = {
     "test_ivfpq_maintenance_stream_equals_batch_appends_and_replay_safe",
     "test_ivfpq_content_fingerprint_refresh_cycle",
     "test_dedup_stream_over_custom_python_source",
-    "test_remediate_code_tied_recovers_without_retrain",
     "test_dims_have_default_member_and_unique_sks",
     "test_maintenance_refuses_batch_built_artifacts",
-    "test_ivfpq_recall_probe_flags_drifted_append_while_fresh",
     "test_ann_stream_matches_batch_and_is_idempotent",
-    "test_remediate_assignment_miss_recovers_via_probes",
     "test_bm25_content_fingerprint_refresh_cycle",
     "test_txtable_delete_where_rewrites_only_hit_files",
     "test_bm25_maintenance_stream_matches_monolithic_and_replay_safe",
@@ -65,7 +57,6 @@ SLOW_TESTS = {
     "test_durable_materialization_equals_ephemeral",
     "test_range_partitioned_cumsum_fuzz",
     "test_stream_stream_interval_join_equals_batch",
-    "test_phrase_search_federated_exact_union_and_freshness",
     "test_bm25_federated_equals_monolithic_and_validates",
     "test_retire_refusals",
     "test_bm25_append_preserves_content_fingerprint",
@@ -73,7 +64,6 @@ SLOW_TESTS = {
     "test_incremental_lsh_dedup_with_persisted_index",
     "test_federated_refresh_rebuilds_only_stale_shards",
     "test_bm25_maintenance_batch_id_regression_guarded",
-    "test_kcore_delta_equals_reaggregating_peel",
     "test_txlog_change_feed_streaming_source",
     "test_bm25_topk_ranks_by_relevance",
     "test_ivfpq_plan_shape",

@@ -5,6 +5,7 @@ up, never called."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -41,23 +42,71 @@ def test_readme_coverage_counts_match_the_registry():
     )
 
 
+REPO = os.path.dirname(os.path.abspath(entrymod.__file__))
+
+
+def _test_names() -> set[str]:
+    names: set[str] = set()
+    for fname in os.listdir(os.path.join(REPO, "tests")):
+        if fname.endswith(".py"):
+            src = open(os.path.join(REPO, "tests", fname), encoding="utf-8").read()
+            names |= set(re.findall(r"^\s*def (test_\w+)", src, re.M))
+    return names
+
+
+def _top_level_names(path: str) -> set[str]:
+    names: set[str] = set()
+    for node in ast.parse(open(path, encoding="utf-8").read()).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names |= {n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)}
+    return names
+
+
 def test_operators_doc_marks_name_real_queries_and_tests():
     """docs/OPERATORS.md marks registry queries `r:` and pytest tests `t:`.
     Window membership is stated only by __spark_entry__.WINDOW, so the doc
-    carries no window labels; every marked name must exist."""
-    repo = os.path.dirname(os.path.abspath(entrymod.__file__))
-    doc = open(os.path.join(repo, "docs", "OPERATORS.md"), encoding="utf-8").read()
+    carries no window labels; every marked name must exist. Every
+    backticked `operators/<mod>.<name>` or `functions/<mod>.<name>` must
+    be a top-level def or assignment in that package module."""
+    doc = open(os.path.join(REPO, "docs", "OPERATORS.md"), encoding="utf-8").read()
     assert not re.findall(r"(?<!\w)[qx]:\w", doc), "window labels (q:/x:) are back"
-    tests: set[str] = set()
-    for fname in os.listdir(os.path.join(repo, "tests")):
-        if fname.endswith(".py"):
-            src = open(os.path.join(repo, "tests", fname), encoding="utf-8").read()
-            tests |= set(re.findall(r"^\s*def (test_\w+)", src, re.M))
-    known = {"r": set(entrymod.all_queries()), "t": tests}
+    known = {"r": set(entrymod.all_queries()), "t": _test_names()}
     marks = re.findall(r"(?<!\w)([rt]):([\w*/]+)", doc)
     assert marks
     unknown = sorted({f"{kind}:{name}" for kind, name in marks if name not in known[kind]})
     assert not unknown, f"OPERATORS.md names nothing for: {unknown}"
+
+    refs = [
+        ref
+        for span in re.findall(r"`([^`\n]+)`", doc)
+        for ref in re.findall(r"(?<![\w/])((?:operators|functions)/\w+)\.(\w+)", span)
+    ]
+    assert len(refs) > 100
+    pkg = os.path.join(REPO, "data_warehouse_punta_fina_spark")
+    paths = {mod: os.path.join(pkg, f"{mod}.py") for mod, _ in refs}
+    defined = {mod: _top_level_names(p) for mod, p in paths.items() if os.path.isfile(p)}
+    # `<mod>.py` is a file reference; any other name must be defined in <mod>
+    dangling = sorted(
+        {
+            f"{mod}.{name}"
+            for mod, name in refs
+            if mod not in defined or (name != "py" and name not in defined[mod])
+        }
+    )
+    assert not dangling, f"OPERATORS.md names code that does not exist: {dangling}"
+
+
+def test_slow_tier_names_real_tests():
+    """Every name in conftest.SLOW_TESTS is a test under tests/; a renamed
+    or deleted heavy test must not leave a stale name behind (the renamed
+    test would silently run in the default gate)."""
+    from conftest import SLOW_TESTS
+
+    stale = sorted(SLOW_TESTS - _test_names())
+    assert not stale, f"SLOW_TESTS names no test: {stale}"
 
 
 def test_registry_modules_reference_only_bound_globals():

@@ -518,64 +518,6 @@ def test_nb_maintenance_stream_equals_monolithic_and_replay_safe(spark, tmp_path
     assert _state() == before
 
 
-def test_phrase_search_federated_exact_union_and_freshness(spark, tmp_path):
-    """Positional federation is exact by construction (zero global
-    state): the union of per-shard phrase/slop searches equals the
-    monolithic index's results for random corpus splits; a stale shard
-    is refused naming its directory."""
-    import pytest
-
-    from data_warehouse_punta_fina_spark.operators.freshness import StaleIndexError
-    from data_warehouse_punta_fina_spark.operators.retrieval import (
-        phrase_search_federated,
-        phrase_search_index,
-        phrase_slop_search_index,
-        positional_build_index,
-    )
-    from data_warehouse_punta_fina_spark.sources.readers import load_table
-
-    docs = load_table(spark, SF, "documents").filter(F.col("doc_id") < 150)
-    mono = str(tmp_path / "mono")
-    positional_build_index(docs, mono, n_buckets=8)
-    single = sorted(map(tuple, phrase_search_index(spark, mono, "order fast").collect()))
-    single_slop = sorted(
-        map(tuple, phrase_slop_search_index(spark, mono, "order fast", slop=2).collect())
-    )
-    assert len(single) > 0
-
-    shards, dirs = [], []
-    for i in range(3):
-        s = docs.filter(F.pmod(F.xxhash64(F.lit(7), F.col("doc_id")), F.lit(3)) == i)
-        d = str(tmp_path / f"pshard{i}")
-        positional_build_index(s, d, n_buckets=8)
-        shards.append(s)
-        dirs.append(d)
-    fed = sorted(
-        map(tuple, phrase_search_federated(spark, dirs, "order fast").collect())
-    )
-    assert fed == single
-    fed_slop = sorted(
-        map(
-            tuple,
-            phrase_search_federated(spark, dirs, "order fast", slop=2).collect(),
-        )
-    )
-    assert fed_slop == single_slop
-
-    # freshness threading: fresh passes, a mutated shard is named
-    ok = phrase_search_federated(
-        spark, dirs, "order fast", verify_corpora=shards
-    ).collect()
-    assert sorted(map(tuple, ok)) == single
-    with pytest.raises(StaleIndexError, match="pshard1"):
-        phrase_search_federated(
-            spark,
-            dirs,
-            "order fast",
-            verify_corpora=[shards[0], shards[1].limit(3), shards[2]],
-        )
-
-
 def test_bm25_batch_append_refuses_stream_maintained_index(spark, tmp_path):
     """Layout-safety guard: bm25_append_index on a STREAM-MAINTAINED
     index (ingest_batch-partitioned postings) would write a mixed

@@ -2,8 +2,8 @@
 hot-term pathological document (VERDICT r12 #1 — the O(tf²) reference
 decode would straggle/OOM on a doc where one query term repeats 10⁴+
 times), compaction searched through the driver-exposed registry shape
-(#2), the IVF-PQ appended-index recall probe + drift detection (#3),
-the maintenance-stream batch-id regression guard (ADVICE r12 medium),
+(#2), the IVF-PQ maintenance stream, the maintenance-stream batch-id
+regression guard (ADVICE r12 medium),
 and the remaining ADVICE r12 hardenings (shared probe-default
 constant; compaction corpus cross-check before fingerprint stamping).
 """
@@ -246,67 +246,6 @@ def test_positional_compact_rejects_mismatched_corpus(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# VERDICT r12 #3 — IVF-PQ appended-index drift probe
-# ---------------------------------------------------------------------------
-
-
-def test_ivfpq_recall_probe_flags_drifted_append_while_fresh(spark, tmp_path):
-    """Appends encode with FROZEN quantizers, so a distribution shift
-    degrades recall while the content fingerprint stays 'fresh' (it
-    tracks corpus identity, not quantizer fit). The probe is the drift
-    signal: on a deliberately drifted index (append a far-off cluster
-    that keeps the original variance — exact ranking stays rich, the
-    frozen PQ sub-codebooks saturate to one code) the sampled recall
-    reads FAR below the trained floor while ivfpq_index_is_fresh still
-    returns True. Measured at authoring: trained 0.7375, drifted
-    0.0625."""
-    from data_warehouse_punta_fina_spark.operators.similarity import (
-        ivfpq_append_index,
-        ivfpq_build_index,
-        ivfpq_index_is_fresh,
-        ivfpq_recall_probe,
-    )
-    from data_warehouse_punta_fina_spark.sources.readers import load_table
-
-    emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
-    n = emb.count()
-    params = dict(n_cells=16, m=8, n_centroids=8, iters=2)
-    idx = str(tmp_path / "drift")
-
-    ivfpq_build_index(emb, idx, **params)
-    base_queries = emb.filter(F.col("vec_id") < 16)
-    trained = ivfpq_recall_probe(
-        base_queries, emb, idx, k=5, probes=4, rerank=30, **params
-    )
-    assert trained > 0.6, trained  # the trained index probes healthy
-
-    # drifted append: +10 per coordinate (original variance kept; float
-    # element type preserved so the fingerprint merge stays exact)
-    shifted = emb.select(
-        (F.col("vec_id") + F.lit(n)).alias("vec_id"),
-        F.transform("embedding", lambda x: (F.lit(10.0) + x).cast("float")).alias(
-            "embedding"
-        ),
-    )
-    ivfpq_append_index(shifted, idx)
-    union = emb.unionByName(shifted)
-
-    # the fingerprint CANNOT see the drift — the index is "fresh"...
-    assert ivfpq_index_is_fresh(union, idx)
-    # ...but the probe reads catastrophically below the trained floor
-    drifted = ivfpq_recall_probe(
-        shifted.filter(F.col("vec_id") < n + 16),
-        union,
-        idx,
-        k=5,
-        probes=4,
-        rerank=30,
-        **params,
-    )
-    assert drifted < trained - 0.3, (drifted, trained)
-
-
-# ---------------------------------------------------------------------------
 # Round-13: IVF-PQ index MAINTENANCE stream (closes the family gap —
 # the one persisted index without a continuous-ingest path)
 # ---------------------------------------------------------------------------
@@ -476,62 +415,6 @@ def test_ivfpq_maintenance_real_stream_drain(spark, tmp_path):
     assert got_m == got_b and got_m
 
 
-def test_ivfpq_refresh_if_drifted_rebuilds_and_recovers(spark, tmp_path):
-    """The drift-aware refresh cycle: a healthy index is a no-op (the
-    pre-rebuild recall is returned for alerting); a drifted append
-    triggers a retrain on the current corpus, after which the probe
-    reads healthy again and the fingerprint matches the union."""
-    from data_warehouse_punta_fina_spark.operators.similarity import (
-        ivfpq_append_index,
-        ivfpq_build_index,
-        ivfpq_index_is_fresh,
-        ivfpq_recall_probe,
-        ivfpq_refresh_if_drifted,
-    )
-    from data_warehouse_punta_fina_spark.sources.readers import load_table
-
-    emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
-    n = emb.count()
-    params = dict(n_cells=16, m=8, n_centroids=8, iters=2)
-    idx = str(tmp_path / "drift2")
-    ivfpq_build_index(emb, idx, **params)
-    queries = emb.filter(F.col("vec_id") < 16)
-
-    # healthy: no rebuild, reading above the floor
-    rebuilt, r0 = ivfpq_refresh_if_drifted(
-        emb, idx, queries, recall_floor=0.6, probes=4, rerank=30, **params
-    )
-    assert not rebuilt and r0 > 0.6
-
-    # drifted append (the test_ivfpq_recall_probe construction)
-    shifted = emb.select(
-        (F.col("vec_id") + F.lit(n)).alias("vec_id"),
-        F.transform("embedding", lambda x: (F.lit(10.0) + x).cast("float")).alias(
-            "embedding"
-        ),
-    )
-    ivfpq_append_index(shifted, idx)
-    union = emb.unionByName(shifted)
-    drift_queries = shifted.filter(F.col("vec_id") < n + 16)
-
-    rebuilt, r1 = ivfpq_refresh_if_drifted(
-        union, idx, drift_queries, recall_floor=0.6, probes=4, rerank=30, **params
-    )
-    assert rebuilt and r1 < 0.3  # the pre-rebuild reading is the alert value
-    # post-rebuild: the fingerprint is re-established for the union and
-    # the MAIN mode stays healthy (retraining on the union must not
-    # sacrifice the base distribution). Whether the drifted mode itself
-    # recovers is a quantizer-CAPACITY question — an adversarially tight
-    # cluster ties the PQ codes at any training, and the operator's knob
-    # is rerank depth / m / n_cells — which the post-rebuild probe
-    # measures; the helper's contract is detect + retrain + re-stamp.
-    assert ivfpq_index_is_fresh(union, idx)
-    r2 = ivfpq_recall_probe(
-        queries, union, idx, k=5, probes=4, rerank=30, **params
-    )
-    assert r2 > 0.5, r2
-
-
 # ---------------------------------------------------------------------------
 # Property fuzz: delta-encode → linear decode roundtrip (hypothesis)
 # ---------------------------------------------------------------------------
@@ -648,62 +531,3 @@ def test_maintenance_refuses_batch_built_artifacts(spark, tmp_path):
     nb_save_model(labeled, m, "text", "label")
     with pytest.raises(ValueError, match="batch-trained"):
         nb_maintenance_batch(labeled, 0, m, label_col="label")
-
-
-def test_ivfpq_capacity_probe_diagnoses_failure_modes(spark, tmp_path):
-    """The advisor between detection and the fix: recall recovering
-    with rerank depth means the candidates ARE in the probed cells but
-    the codes tie (code_tied — retraining won't help; deepen rerank or
-    enrich the codebook); recall flat-low at every depth means the
-    probed cells miss the neighbors (assignment_miss — widen probes or
-    retrain); a shallow reading at target is healthy."""
-    from data_warehouse_punta_fina_spark.operators.similarity import (
-        ivfpq_append_index,
-        ivfpq_build_index,
-        ivfpq_capacity_probe,
-    )
-    from data_warehouse_punta_fina_spark.sources.readers import load_table
-
-    emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
-    n = emb.count()
-    params = dict(n_cells=16, m=8, n_centroids=8, iters=2)
-    idx = str(tmp_path / "cap")
-    ivfpq_build_index(emb, idx, **params)
-    base_q = emb.filter(F.col("vec_id") < 16)
-
-    healthy = ivfpq_capacity_probe(
-        base_q, emb, idx, target_recall=0.7, probes=4, **params
-    )
-    assert healthy["diagnosis"] == "healthy", healthy
-
-    # drifted append: tight cluster -> codes tie under ANY training;
-    # deep rerank recovers exactly (measured 0.06 -> 0.30 -> 1.00)
-    shifted = emb.select(
-        (F.col("vec_id") + F.lit(n)).alias("vec_id"),
-        F.transform("embedding", lambda x: (F.lit(10.0) + x).cast("float")).alias(
-            "embedding"
-        ),
-    )
-    ivfpq_append_index(shifted, idx)
-    union = emb.unionByName(shifted)
-    drift_q = shifted.filter(F.col("vec_id") < n + 16)
-    tied = ivfpq_capacity_probe(
-        drift_q, union, idx, target_recall=0.7, probes=4, **params
-    )
-    assert tied["diagnosis"] == "code_tied", tied
-    rs = [tied["readings"][r] for r in sorted(tied["readings"])]
-    assert rs[0] < 0.3 and rs[-1] >= 0.9, rs
-
-    # starve the probes on a fresh base-only index: the unprobed cells
-    # hold ~14% of the true neighbors, and no rerank depth can recover
-    # what was never a candidate (measured: 0.85 -> 0.8625 -> 0.8625
-    # plateau) — against a 0.9 target that is assignment_miss, the
-    # widen-probes/retrain signal
-    idx2 = str(tmp_path / "cap2")
-    ivfpq_build_index(emb, idx2, **params)
-    starved = ivfpq_capacity_probe(
-        base_q, emb, idx2, target_recall=0.9, probes=1, **params
-    )
-    assert starved["diagnosis"] == "assignment_miss", starved
-    srs = [starved["readings"][r] for r in sorted(starved["readings"])]
-    assert max(srs) < 0.9, srs

@@ -625,41 +625,3 @@ def test_multiplicative_means_hand_computed(spark):
     ).collect()[0]
     assert abs(row["g"] - 4.0) < 1e-5          # sqrt(2*8)
     assert abs(row["h"] - 3.2) < 1e-6          # 2/(1/2+1/8)
-
-
-# --- wave 7: delta k-core peel ---------------------------------------------
-
-
-def test_kcore_delta_equals_reaggregating_peel(spark):
-    from data_warehouse_punta_fina_spark.operators.graph import kcore, kcore_delta
-
-    # crafted cascade: a 4-clique (3-core) with a pendant chain that
-    # peels over several rounds
-    clique = [(a, b) for a in range(4) for b in range(4) if a < b]
-    chain = [(3, 10), (10, 11), (11, 12)]
-    edges = spark.createDataFrame(clique + chain, "src int, dst int")
-    a = sorted((r["node"], r["core_degree"]) for r in kcore(edges, k=3).collect())
-    b = sorted((r["node"], r["core_degree"]) for r in kcore_delta(edges, k=3).collect())
-    assert a == b == [(0, 3), (1, 3), (2, 3), (3, 3)]
-
-
-def test_kcore_delta_equals_peel_on_real_bipartite_graph(spark):
-    from pyspark.sql import functions as F2
-
-    from data_warehouse_punta_fina_spark.operators.graph import kcore, kcore_delta
-    from data_warehouse_punta_fina_spark.sources.readers import load_table
-
-    sf = "/root/testdata/sf0.001"
-    orders = load_table(spark, sf, "orders")
-    li = load_table(spark, sf, "lineitem")
-    edges = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            F2.col("o_custkey").alias("src"),
-            (F2.col("l_suppkey") + 1_000_000).alias("dst"),
-        )
-        .distinct()
-    )
-    a = sorted((r["node"], r["core_degree"]) for r in kcore(edges, k=4).collect())
-    b = sorted((r["node"], r["core_degree"]) for r in kcore_delta(edges, k=4).collect())
-    assert a == b and len(a) > 0
