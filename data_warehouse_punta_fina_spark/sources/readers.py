@@ -5,12 +5,21 @@ and CSV with pandas (`extractors/csv_extractor.py:22-68`). Here every source
 is declarative: Catalyst pushes filters/projections into the scan (JDBC
 pushdown, Parquet predicate pushdown + column pruning), which covers the
 reference's hand-written WHERE/column-list SQL (S2/S3) for free.
+
+Source tables (``load_table``) are read with a declared schema taken from
+the parquet footer on the driver (``footer_schema``), so opening a table
+launches no Spark job: a schema-less ``spark.read.parquet`` infers the
+schema with one job per read, even for a single file.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -177,8 +186,125 @@ def read_jdbc(
     return reader.load()
 
 
+# Footer key under which Spark's parquet writer stores the row schema as JSON
+# (ParquetReadSupport.SPARK_METADATA_KEY).
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+# Arrow leaf types whose Spark type does not depend on the column: the
+# mapping of ParquetToSparkSchemaConverter for the parquet type each is
+# stored as. Unsigned ints widen; a duration is a plain INT64 in parquet.
+_PRIMITIVES = (
+    (pa.types.is_boolean, T.BooleanType()),
+    (pa.types.is_int8, T.ByteType()),
+    (pa.types.is_int16, T.ShortType()),
+    (pa.types.is_int32, T.IntegerType()),
+    (pa.types.is_int64, T.LongType()),
+    (pa.types.is_uint8, T.ShortType()),
+    (pa.types.is_uint16, T.IntegerType()),
+    (pa.types.is_uint32, T.LongType()),
+    (pa.types.is_uint64, T.DecimalType(20, 0)),
+    (pa.types.is_float32, T.FloatType()),
+    (pa.types.is_float64, T.DoubleType()),
+    (pa.types.is_date, T.DateType()),
+    (pa.types.is_duration, T.LongType()),
+    (pa.types.is_null, T.IntegerType()),
+)
+
+
+def _first_data_file(path: str) -> tuple[pafs.FileSystem, str]:
+    """The file whose footer Spark's schema inference reads: ``path``
+    itself, or for a directory its first data file in path order, skipping
+    the names Spark's file index hides (``_SUCCESS``, ``.crc`` files)."""
+    if "://" in path:
+        fs, local = pafs.FileSystem.from_uri(path)
+    else:
+        fs, local = pafs.LocalFileSystem(), os.path.abspath(path)
+    info = fs.get_file_info(local)
+    if info.type == pafs.FileType.File:
+        return fs, local
+    if info.type != pafs.FileType.Directory:
+        raise FileNotFoundError(f"parquet path does not exist: {path}")
+    files = sorted(
+        f.path
+        for f in fs.get_file_info(pafs.FileSelector(local))
+        if f.type == pafs.FileType.File and not f.base_name.startswith(("_", "."))
+    )
+    if not files:
+        raise ValueError(f"{path}: directory holds no parquet data file")
+    return fs, files[0]
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, read from one
+    parquet footer on the driver instead of by a Spark job.
+
+    A Spark-written file carries its row schema as JSON in the footer; it
+    is used as is (``ParquetFileFormat.readSchemaFromFooter``). Any other
+    file's arrow schema is mapped the way ``ParquetToSparkSchemaConverter``
+    maps the parquet types behind it, under the session's
+    ``inferTimestampNTZ`` and ``binaryAsString`` confs and with
+    ``nanosAsLong`` on (``load_table`` sets it). The footer is read on
+    every call, so a rewritten file is seen. Raises ``ValueError`` naming
+    the column and its type when Spark has no mapping for it."""
+    fs, data_file = _first_data_file(path)
+    with pq.ParquetFile(data_file, filesystem=fs) as pf:
+        row_schema = (pf.metadata.metadata or {}).get(_SPARK_ROW_METADATA)
+        arrow_schema = pf.schema_arrow
+        physical_types = [c.physical_type for c in pf.schema]
+    if row_schema is not None:
+        return T.StructType.fromJson(json.loads(row_schema))
+    conf = spark.conf
+    infer_ntz = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
+    binary_as_string = conf.get("spark.sql.parquet.binaryAsString", "false") == "true"
+    # one parquet leaf per arrow leaf, in the same depth-first order
+    leaves = iter(physical_types)
+
+    def convert(t: pa.DataType, column: str) -> T.DataType:
+        if pa.types.is_dictionary(t):
+            return convert(t.value_type, column)
+        if pa.types.is_struct(t):
+            return T.StructType(
+                [T.StructField(f.name, convert(f.type, f"{column}.{f.name}")) for f in t]
+            )
+        if pa.types.is_map(t):
+            return T.MapType(
+                convert(t.key_type, f"{column}.key"), convert(t.item_type, f"{column}.value")
+            )
+        if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+            return T.ArrayType(convert(t.value_type, f"{column}.element"))
+        physical = next(leaves)
+        if pa.types.is_timestamp(t):
+            if physical == "INT96":
+                return T.TimestampType()
+            if t.unit == "ns":
+                return T.LongType()
+            if t.tz is not None or not infer_ntz:
+                return T.TimestampType()
+            return T.TimestampNTZType()
+        if pa.types.is_string(t) or pa.types.is_large_string(t):
+            return T.StringType()
+        if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+            return T.StringType() if binary_as_string else T.BinaryType()
+        if pa.types.is_fixed_size_binary(t):
+            return T.BinaryType()
+        if pa.types.is_decimal(t) and t.precision <= 38:  # DecimalType.MAX_PRECISION
+            return T.DecimalType(t.precision, t.scale)
+        for is_type, spark_type in _PRIMITIVES:
+            if is_type(t):
+                return spark_type
+        raise ValueError(f"{path}: column {column!r} has arrow type {t}, which Spark cannot read")
+
+    return T.StructType([T.StructField(f.name, convert(f.type, f.name)) for f in arrow_schema])
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver testdata table with its declared schema.
+    """Load one source table, launching no Spark job.
+
+    The scan's schema comes from the table's parquet footer
+    (``footer_schema``), read on the driver, and is declared to the reader;
+    a schema-less read would run one inference job per call. The schema is
+    the file's own, not SOURCE_SCHEMAS: a table may hold a subset of the
+    declared columns.
 
     The testdata parquet has stored timestamps under two encodings across
     rounds; columns declared TimestampType in SOURCE_SCHEMAS are normalized
@@ -200,9 +326,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # runtime-settable SQL conf: required for TIMESTAMP(NANOS) parquet even
     # when the caller supplies its own SparkSession (e.g. the driver)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = footer_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     declared = {f.name: f.dataType for f in SOURCE_SCHEMAS[name].fields}
-    actual = {f.name: f.dataType for f in df.schema.fields}
+    actual = {f.name: f.dataType for f in schema.fields}
     for c, want in declared.items():
         got = actual.get(c)
         if not isinstance(want, T.TimestampType):

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest lives in, so a copy of the repo tests its own package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -273,11 +273,19 @@ def test_png_palette_and_interlaced_decode():
 
     with _pytest.raises(ValueError, match="palette index"):
         decode_png(png_encode(np.full((4, 4), 99, dtype=np.uint8), palette=pal[:5]))
-    b = bytearray(png_encode(idx, palette=pal))
-    # color type 4 (gray+alpha) refuses
-    with _pytest.raises(ValueError, match="palette"):
-        raw = png_encode(idx, palette=pal)
-        # strip the PLTE chunk: IHDR ends at 8+25; PLTE chunk follows
-        ihdr_end = 8 + 12 + 13
-        plte_len = int.from_bytes(raw[ihdr_end : ihdr_end + 4], "big")
+    # a palette PNG whose PLTE chunk is stripped refuses
+    raw = png_encode(idx, palette=pal)
+    # signature (8) + IHDR chunk (length 4 + type 4 + data 13 + crc 4)
+    ihdr_end = 8 + 12 + 13
+    plte_len = int.from_bytes(raw[ihdr_end : ihdr_end + 4], "big")
+    with _pytest.raises(ValueError, match="palette PNG without a valid PLTE"):
         decode_png(raw[:ihdr_end] + raw[ihdr_end + 12 + plte_len :])
+    # color type 4 (gray+alpha) refuses: patch IHDR's color-type byte
+    # (data starts at 16, color type is its 10th byte) and re-sign the chunk
+    import zlib
+
+    gray = bytearray(png_encode(g))
+    gray[16 + 9] = 4
+    gray[16 + 13 : 16 + 17] = zlib.crc32(bytes(gray[12 : 16 + 13])).to_bytes(4, "big")
+    with _pytest.raises(ValueError, match=r"only grayscale \(0\) / truecolor \(2\)"):
+        decode_png(bytes(gray))

@@ -3,7 +3,11 @@ invariants (SURVEY.md §5.2) as assertions over the real builders."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 
@@ -226,14 +230,44 @@ def test_pipeline_jobs_inherit_callers_job_group(spark, sf_dir):
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
+def _inferred_load(spark, sf_dir, name):
+    """A source table read the way load_table read it before footer
+    schemas: Spark's schema inference (one job per read) plus the same
+    timestamp normalization. The reference for the equivalence tests."""
+    from pyspark.sql import types as T
+
+    from data_warehouse_punta_fina_spark.schemas import SOURCE_SCHEMAS
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    actual = {f.name: f.dataType for f in df.schema.fields}
+    for f in SOURCE_SCHEMAS[name].fields:
+        if not isinstance(f.dataType, T.TimestampType):
+            continue
+        got = actual.get(f.name)
+        if isinstance(got, T.LongType):
+            df = df.withColumn(f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000")))
+        elif isinstance(got, T.TimestampNTZType):
+            df = df.withColumn(f.name, F.col(f.name).cast(T.TimestampType()))
+    return df
+
+
+def _group_job_ids(sc, group):
+    """Job ids launched under ``group``, once the listener bus has delivered
+    every event posted so far (the tracker is fed asynchronously)."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_load_table_normalizes_both_timestamp_encodings(spark, tmp_path):
     """The driver's testdata has switched parquet timestamp encodings
     between rounds (TIMESTAMP(NANOS) -> timestamp[us] no-tz); load_table
-    must deliver TIMESTAMP with identical values for BOTH, and
+    must deliver TIMESTAMP with identical values for every encoding a
+    writer may choose (nanos, micros and millis without a zone, micros in
+    UTC, legacy INT96), with the schema Spark's inference would give, and
     sessionize must run on the result (the round-3 breakage)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from data_warehouse_punta_fina_spark.operators.asof import sessionize
@@ -248,34 +282,126 @@ def test_load_table_normalizes_both_timestamp_encodings(spark, tmp_path):
         "props": ["{}"] * 8,
     }
     enc = {
-        "ntz": pa.array([m for m in micros], type=pa.timestamp("us")),
-        "nanos": pa.array([m * 1000 for m in micros], type=pa.timestamp("ns")),
+        "ntz": (pa.array(micros, type=pa.timestamp("us")), {}),
+        "nanos": (pa.array([m * 1000 for m in micros], type=pa.timestamp("ns")), {}),
+        "utc": (pa.array(micros, type=pa.timestamp("us", tz="UTC")), {}),
+        "millis": (pa.array([m // 1000 for m in micros], type=pa.timestamp("ms")), {}),
+        "int96": (
+            pa.array(micros, type=pa.timestamp("us")),
+            {"use_deprecated_int96_timestamps": True},
+        ),
     }
     got = {}
-    for label, ts_arr in enc.items():
+    for label, (ts_arr, write_opts) in enc.items():
         d = tmp_path / label
         d.mkdir()
         tbl = pa.table({**{k: pa.array(v) for k, v in base.items()}, "ts": ts_arr})
-        pq.write_table(tbl, str(d / "events.parquet"), store_schema=False)
+        pq.write_table(tbl, str(d / "events.parquet"), store_schema=False, **write_opts)
         df = load_table(spark, str(d), "events")
         assert isinstance(df.schema["ts"].dataType, T.TimestampType), label
+        assert df.schema == _inferred_load(spark, str(d), "events").schema, label
         got[label] = sorted(
             (r["event_id"], r["ts"]) for r in df.select("event_id", "ts").collect()
         )
         # the round-3 crash site: sessionize calls unix_micros(ts)
         sess = sessionize(df, key="user_id", time_col="ts", gap_seconds=1800)
         assert sess.count() == 8, label
-    assert got["ntz"] == got["nanos"]
+    for label in enc:
+        assert got[label] == got["ntz"], label
 
 
-def test_dim_and_fact_plan_building_is_fully_lazy(spark):
-    """Plan construction must not run data jobs. ranked_sequential_id on
-    an in-memory frame must launch ZERO jobs (the old rank ran two eager
-    collects per call); building the full file-backed dim+fact plans may
-    only launch parquet footer/schema reads (single-task jobs), never a
-    multi-task data scan."""
-    from pyspark.sql import functions as F
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_EQUIV_DIRS = [
+    os.path.join(_REPO, "perfbench", "data", "sf0.001"),
+    os.path.join(_REPO, "perfbench", "data", "sf0.01"),
+    *sorted(glob.glob(os.path.join(os.path.dirname(SF_DIR), "sf*"))),
+]
 
+
+@pytest.mark.parametrize(
+    "sf", _EQUIV_DIRS, ids=lambda d: f"{os.path.basename(os.path.dirname(d))}-{os.path.basename(d)}"
+)
+def test_load_table_equals_inferred_read(spark, sf):
+    """Every source table reads with the schema and the rows that Spark's
+    schema inference plus the same normalization give: the footer-derived
+    schema changes how the scan is set up, never what it returns."""
+    from data_warehouse_punta_fina_spark.schemas import TABLE_NAMES
+    from data_warehouse_punta_fina_spark.sources.readers import load_table
+
+    for name in TABLE_NAMES:
+        got = load_table(spark, sf, name)
+        want = _inferred_load(spark, sf, name)
+        assert got.schema == want.schema, name
+        # multiset difference in one job: +1 per row read here, -1 per
+        # reference row; any group whose sum is not 0 differs
+        diff = (
+            got.withColumn("_side", F.lit(1))
+            .unionByName(want.withColumn("_side", F.lit(-1)))
+            .groupBy(*got.columns)
+            .agg(F.sum("_side").alias("n"))
+            .filter("n != 0")
+        )
+        assert diff.isEmpty(), name
+
+
+def test_load_table_launches_no_job(spark, sf_dir):
+    """Opening a source table is pure planning: the schema comes from the
+    parquet footer on the driver, not from a Spark inference job."""
+    from data_warehouse_punta_fina_spark.schemas import TABLE_NAMES
+    from data_warehouse_punta_fina_spark.sources.readers import load_table
+
+    sc = spark.sparkContext
+    sc.setJobGroup("load-table", "load_table must not run jobs")
+    try:
+        for name in TABLE_NAMES:
+            assert load_table(spark, sf_dir, name).columns, name
+        assert _group_job_ids(sc, "load-table") == []
+    finally:
+        sc.setJobGroup("", "")
+
+
+def test_load_table_reads_spark_written_directory(spark, sf_dir, tmp_path):
+    """A Spark-written table directory (part files, ``_SUCCESS``, ``.crc``
+    files) holding a subset of the declared columns reads with its own
+    schema, and a rewrite between two calls is seen by the second."""
+    from data_warehouse_punta_fina_spark.sources.readers import load_table
+
+    src = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    out = tmp_path / "documents.parquet"
+    src.repartition(3).write.parquet(str(out))
+    assert (out / "_SUCCESS").exists()
+    df = load_table(spark, str(tmp_path), "documents")
+    assert df.columns == ["doc_id", "text"]
+    assert df.schema == _inferred_load(spark, str(tmp_path), "documents").schema
+    assert sorted(df.collect()) == sorted(src.collect())
+    src.select("doc_id").write.mode("overwrite").parquet(str(out))
+    assert load_table(spark, str(tmp_path), "documents").columns == ["doc_id"]
+
+
+def test_load_table_refuses_unmappable_type(spark, tmp_path):
+    """A column whose parquet type Spark cannot read fails at load_table,
+    naming the table file, the column and the type."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_warehouse_punta_fina_spark.sources.readers import load_table
+
+    tbl = pa.table(
+        {
+            "r_regionkey": pa.array([0], pa.int32()),
+            "r_opens": pa.array([{"at": 3_600_000_000}], pa.struct([("at", pa.time64("us"))])),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "region.parquet"))
+    with pytest.raises(ValueError, match=r"region\.parquet: column 'r_opens\.at' has arrow type time64\[us\]"):
+        load_table(spark, str(tmp_path), "region")
+
+
+def test_dim_and_fact_plan_building_is_fully_lazy(spark, sf_dir):
+    """Plan construction must not run jobs. ranked_sequential_id on an
+    in-memory frame must launch ZERO jobs (the old rank ran two eager
+    collects per call), and so must building the full file-backed dim+fact
+    plans: source schemas come from parquet footers read on the driver."""
     from data_warehouse_punta_fina_spark.operators.windows import ranked_sequential_id
     from data_warehouse_punta_fina_spark.plans.dims import (
         build_dim_almacen,
@@ -291,28 +417,18 @@ def test_dim_and_fact_plan_building_is_fully_lazy(spark):
         df = spark.range(0, 10_000).select((F.col("id") * 37 % 9973).alias("k"))
         ranked = ranked_sequential_id(df, "k", out="sk", start=2)
         assert "sk" in ranked.columns
-        assert sc.statusTracker().getJobIdsForGroup("lazy-rank") == []
+        assert _group_job_ids(sc, "lazy-rank") == []
     finally:
         sc.setJobGroup("", "")
 
-    sc.setJobGroup("lazy-plan", "plan building may only read footers")
+    sc.setJobGroup("lazy-plan", "plan building must not run jobs")
     try:
-        sf = "/root/testdata/sf0.001"
-        p = build_dim_producto(spark, sf)
-        c = build_dim_cliente(spark, sf)
-        a = build_dim_almacen(spark, sf)
-        fact = build_fact_ventas(spark, sf, p, c, a)
+        p = build_dim_producto(spark, sf_dir)
+        c = build_dim_cliente(spark, sf_dir)
+        a = build_dim_almacen(spark, sf_dir)
+        fact = build_fact_ventas(spark, sf_dir, p, c, a)
         assert len(fact.columns) > 5
-        tracker = sc.statusTracker()
-        for jid in tracker.getJobIdsForGroup("lazy-plan"):
-            info = tracker.getJobInfo(jid)
-            for sid in info.stageIds:
-                st = tracker.getStageInfo(sid)
-                if st is not None:
-                    assert st.numTasks <= 1, (
-                        f"plan building ran a {st.numTasks}-task stage "
-                        f"(job {jid}) — an eager data job, not a footer read"
-                    )
+        assert _group_job_ids(sc, "lazy-plan") == []
     finally:
         sc.setJobGroup("", "")
 

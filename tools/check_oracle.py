@@ -28,13 +28,14 @@ Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 

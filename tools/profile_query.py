@@ -14,6 +14,11 @@ Each run also reports its Janino compiles: how many generated classes it
 compiled and their compile milliseconds. A repeated run that still
 compiles is missing the codegen class cache (see session.py).
 
+Each run also reports its Spark jobs, counted per run from job groups in
+the status tracker (no UI needed): ``build_jobs=`` launched while building
+the DataFrame (schema inference, checkpoints at construction) and
+``jobs=`` for the whole run, build plus the terminal write.
+
 Usage:
     python tools/profile_query.py [--runs 3] [--explain plans/r15 --suffix before]
         [--sf-dir /root/testdata/sf0.1] query1 query2 ...
@@ -87,20 +92,26 @@ def main() -> None:
             print(f"profile: unknown query {name}", file=sys.stderr)
             continue
         runs = []
+        jobs = []
         compiles = []
         compile_ms = []
         phases = None
         for i in range(args.runs):
             if hasattr(entrymod, "reset_session_memo"):
                 entrymod.reset_session_memo()
-            spark.sparkContext.setJobDescription(f"profile:{name}:{i}")
+            sc = spark.sparkContext
+            group = f"profile:{name}:{i}"
+            sc.setJobGroup(f"{group}:build", group)
             c0 = _compiles(spark)
             t0 = time.time()
             df = fn(spark, args.sf_dir)
             built = time.time() - t0
+            sc.setJobGroup(f"{group}:exec", group)
             df.write.format("noop").mode("overwrite").save()
             total = time.time() - t0
             runs.append(round(total, 3))
+            build_jobs = _group_jobs(spark, f"{group}:build")
+            jobs.append((build_jobs, build_jobs + _group_jobs(spark, f"{group}:exec")))
             c1 = _compiles(spark)
             compiles.append(c1[0] - c0[0])
             compile_ms.append(round(c1[1] - c0[1], 1))
@@ -123,18 +134,29 @@ def main() -> None:
                         fh.write(txt)
             print(
                 f"profile: {name} run{i} build={built:.3f}s total={total:.3f}s "
+                f"build_jobs={jobs[-1][0]} jobs={jobs[-1][1]} "
                 f"compiles={compiles[-1]} compile_ms={compile_ms[-1]}",
                 file=sys.stderr,
             )
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
         spark.sparkContext.setJobDescription(None)
         print(
             f"RESULT {name} min={min(runs)} runs={runs} phases={phases} "
+            f"build_jobs={[b for b, _ in jobs]} jobs={[n for _, n in jobs]} "
             f"compiles={compiles} compile_ms={compile_ms}"
         )
         if args.stages:
             _dump_stage_table(spark, name)
         if args.sql:
             _dump_sql_metrics(spark, name)
+
+
+def _group_jobs(spark, group: str) -> int:
+    """Jobs launched under job group ``group``, once the listener bus has
+    delivered every event posted so far (the tracker is fed asynchronously)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _compiles(spark) -> tuple[int, float]:
