@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
+
 
 def funnel_progress(
     events: DataFrame,
@@ -133,7 +135,7 @@ def rfm_scores(
     # sorts' stages; independent branches let the scheduler overlap them
     # (each exact_ntile is constant-job-count, so the bench floor is
     # scheduling overhead, not data).
-    base = df.localCheckpoint(eager=False)
+    base = materialize(df)
     r = exact_ntile(base.select(key, recency_col), [recency_col, key], k, out="r_score").select(
         key, "r_score"
     )
@@ -199,7 +201,7 @@ def basket_affinity(
             .select("_b")
         )
         b = b.join(F.broadcast(big), "_b", "left_anti")
-    b = b.localCheckpoint(eager=False)  # consumed by totals, supports, both pair sides
+    b = materialize(b)  # consumed by totals, supports, both pair sides
     n_baskets = b.agg(F.countDistinct("_b").alias("_n"))
     item_n = b.groupBy("_i").agg(F.count("*").alias("_c"))
     pairs = (
@@ -269,18 +271,16 @@ def frequent_triples(
             .select("_b")
         )
         b = b.join(F.broadcast(big), "_b", "left_anti")
-    b = b.localCheckpoint(eager=False)
+    b = materialize(b)
     n_baskets = b.agg(F.countDistinct("_b").alias("_n"))
-    pair_occ = (
+    pair_occ = materialize(
         b.alias("x")
         .join(b.alias("y"), (F.col("x._b") == F.col("y._b")) & (F.col("x._i") < F.col("y._i")))
         .select(F.col("x._b").alias("_b"), F.col("x._i").alias("a"), F.col("y._i").alias("bb"))
-        .localCheckpoint(eager=False)
     )
-    freq_pairs = (
+    freq_pairs = materialize(
         pair_occ.groupBy("a", "bb").agg(F.count("*").alias("_c")).filter(F.col("_c") >= min_count)
         .select("a", "bb")
-        .localCheckpoint(eager=False)
     )
     fp_occ = pair_occ.join(F.broadcast(freq_pairs), ["a", "bb"], "left_semi").alias("fp")
     cand = (

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.text import tokens
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
 # single end-of-word marker symbol (standard BPE: distinguishes word-final
 # subwords); tokens are [a-z0-9]+ so it can never collide with content
@@ -89,13 +90,15 @@ def bpe_train(words: DataFrame, merges: int = 6) -> DataFrame:
     If the vocabulary exhausts (every word fully merged) before
     ``merges`` rounds, later ranks emit no row.
     """
-    vocab = words.select(
-        "word",
-        "freq",
-        F.concat(
-            F.rtrim(F.regexp_replace(F.col("word"), "(.)", "$1 ")), F.lit(" " + EOW)
-        ).alias("sym"),
-    ).localCheckpoint(eager=False)
+    vocab = materialize(
+        words.select(
+            "word",
+            "freq",
+            F.concat(
+                F.rtrim(F.regexp_replace(F.col("word"), "(.)", "$1 ")), F.lit(" " + EOW)
+            ).alias("sym"),
+        )
+    )
 
     merge_rows = []
     for k in range(1, merges + 1):
@@ -122,7 +125,7 @@ def bpe_train(words: DataFrame, merges: int = 6) -> DataFrame:
             .groupBy("pair")
             .agg(F.sum("freq").alias("cnt"))
         )
-        best = (
+        best = materialize(  # consumed by the rewrite AND the output
             pairs.orderBy(F.desc("cnt"), F.asc("pair"))
             .limit(1)
             .select(
@@ -130,14 +133,15 @@ def bpe_train(words: DataFrame, merges: int = 6) -> DataFrame:
                 F.replace(F.col("pair"), F.lit(" "), F.lit("")).alias("merged"),
                 F.col("cnt").alias("pair_count"),
             )
-            .localCheckpoint(eager=False)  # consumed by the rewrite AND the output
         )
         merge_rows.append(best.select(F.lit(k).alias("rank"), "pair", "merged", "pair_count"))
-        vocab = vocab.crossJoin(F.broadcast(best)).select(
-            "word",
-            "freq",
-            _merge_rewrite(F.col("sym"), F.col("pair"), F.col("merged")).alias("sym"),
-        ).localCheckpoint(eager=False)
+        vocab = materialize(
+            vocab.crossJoin(F.broadcast(best)).select(
+                "word",
+                "freq",
+                _merge_rewrite(F.col("sym"), F.col("pair"), F.col("merged")).alias("sym"),
+            )
+        )
 
     out = merge_rows[0]
     for m in merge_rows[1:]:

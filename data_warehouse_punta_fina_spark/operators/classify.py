@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround
 from data_warehouse_punta_fina_spark.functions.text import tokens
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
 # parameter fingerprint for persisted NB models (parquet-footer-durable
 # column metadata, the ivfpq_build_index / minhash_band_keys discipline)
@@ -74,18 +75,16 @@ def nb_train(
     )
     # cond feeds THREE consumers (class totals, vocab size, the scoring
     # join) — materialize so the train split is tokenized exactly once
-    cond = (
+    cond = materialize(
         toks_tr.groupBy("_y", "term")
         .agg(F.count("*").alias("_c"))
-        .localCheckpoint(eager=False)
     )
     tots = cond.groupBy("_y").agg(F.sum("_c").alias("_tot"))
     # priors feed both the class table and the total-doc count — derive
     # n from the class-sized priors rather than a second corpus scan
-    priors = (
+    priors = materialize(
         train.groupBy(lab.alias("_y"))
         .agg(F.count("*").alias("_nd"))
-        .localCheckpoint(eager=False)
     )
     n_row = priors.agg(F.sum("_nd").alias("_n"))
     classes = (
@@ -178,7 +177,7 @@ def nb_classify_split(
     """
     from data_warehouse_punta_fina_spark.operators.dedup import _spread
 
-    posting = (
+    posting = materialize(
         _spread(
             docs.select(
                 F.col(id_col), F.col(label_col).alias("_actual"), F.col(text_col)
@@ -192,22 +191,19 @@ def nb_classify_split(
         )
         .groupBy(id_col, "_actual", "_bkt", "term")
         .agg(F.count("*").alias("_tf"))
-        .localCheckpoint(eager=False)
     )
     tr = posting.filter(
         (F.col("_bkt") < train_buckets) & F.col("_actual").isNotNull()
     )
-    cond = (
+    cond = materialize(
         tr.filter(F.col("term").isNotNull())
         .groupBy(F.col("_actual").alias("_y"), "term")
         .agg(F.sum("_tf").alias("_c"))
-        .localCheckpoint(eager=False)
     )
     tots = cond.groupBy("_y").agg(F.sum("_c").alias("_tot"))
-    priors = (
+    priors = materialize(
         tr.groupBy(F.col("_actual").alias("_y"))
         .agg(F.count_distinct(F.col(id_col)).alias("_nd"))
-        .localCheckpoint(eager=False)
     )
     n_row = priors.agg(F.sum("_nd").alias("_n"))
     classes = (
@@ -325,7 +321,7 @@ def _nb_score(
     """
     from data_warehouse_punta_fina_spark.operators.dedup import _spread
 
-    te_all = (
+    te_all = materialize(
         _spread(
             test.select(
                 F.col(id_col), F.col(label_col).alias("_actual"), F.col(text_col)
@@ -338,7 +334,6 @@ def _nb_score(
         )
         .groupBy(id_col, "_actual", "term")
         .agg(F.count("*").alias("_tf"))
-        .localCheckpoint(eager=False)
     )
     return _nb_score_postings(cond, classes, consts, te_all, id_col, broadcast_model)
 
@@ -433,7 +428,7 @@ def logistic_regression_gd(
     weight type fixed at DECIMAL(18,9) forever (no decimal-scale creep).
 
     Scale shape: one scan of ``feats`` per iteration (each iteration's
-    1-row aggregate is eagerly ``localCheckpoint``-ed so the lazily
+    1-row aggregate is eagerly materialized so the lazily
     returned trajectory does not re-expand the training lineage
     quadratically); partial aggregation is map-side, the reduce is k+2
     decimal sums. Callers should materialize ``feats`` first (it is
@@ -464,7 +459,7 @@ def logistic_regression_gd(
         for c in feature_cols:
             aggs.append(F.sum(resid * F.col(c)).alias(f"_g_{c}"))
         aggs += [F.min(c).alias(c) for c in wcols]  # constants: carry w through
-        g = feats.crossJoin(F.broadcast(w)).agg(*aggs).localCheckpoint()
+        g = materialize(feats.crossJoin(F.broadcast(w)).agg(*aggs), eager=True)
         row = g.select(
             F.lit(it).cast("int").alias("iter"),
             pround(F.col("_lsum").cast("double") / F.col("_n"), 9, 18)

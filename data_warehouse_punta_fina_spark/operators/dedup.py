@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround6 as _pround6
 from data_warehouse_punta_fina_spark.functions.text import tokens, word_shingles
-from data_warehouse_punta_fina_spark.operators.materialize import materialize as _materialize
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -240,7 +240,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 12,
     bands: int = 4,
     shingle_n: int = 3,
-    bands_path: str | None = None,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash + banded LSH.
@@ -250,15 +249,11 @@ def minhash_lsh_pairs(
     band key (shuffle on small string keys) → distinct pairs. Full
     documents are never shuffled; only (band_key, id). Returns
     (id_a, id_b) with id_a < id_b.
-
-    ``bands_path`` durably materializes the band table to parquet before
-    the self-join (cluster posture: survives executor loss, reusable as a
-    persisted index); default is an ephemeral local checkpoint.
     """
     banded = minhash_band_keys(df, text_col, id_col, num_hashes, bands, shingle_n, shingles)
     # a DataFrame self-join re-executes the whole subplan per branch —
     # materialize the band table once and both sides read it
-    banded = _materialize(banded, bands_path)
+    banded = materialize(banded)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -302,7 +297,7 @@ def ngram_jaccard_pairs(
     # the df-cap derivation AND (sizes + both join branches) → materialize
     # it FIRST; the cap's broadcast anti-join is cheap to re-apply per
     # consumer compared to recomputing the shingling
-    sh = shingle_rows(df, text_col, id_col, shingle_n).localCheckpoint(eager=False)
+    sh = materialize(shingle_rows(df, text_col, id_col, shingle_n))
     if max_shingle_df is not None:
         hot = (
             sh.groupBy("shingle")
@@ -311,7 +306,7 @@ def ngram_jaccard_pairs(
             .select("shingle")
         )
         # hot set is tiny by construction (only keys above the cap) → broadcast anti-join
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti").localCheckpoint(eager=False)
+        sh = materialize(sh.join(F.broadcast(hot), "shingle", "left_anti"))
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -337,14 +332,9 @@ def lsh_verified_pairs(
     bands: int = 4,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    bands_path: str | None = None,
-    shingles_path: str | None = None,
 ) -> DataFrame:
     """The production near-dup pipeline: MinHash+LSH candidate generation,
     then EXACT Jaccard verification computed only for candidate pairs.
-    ``bands_path`` / ``shingles_path`` durably materialize the two
-    self-join intermediates to parquet (cluster posture); the default is
-    ephemeral local checkpoints.
 
     This is the composition the standalone operators document: the
     all-pairs inverted-index join never happens — the shingle self-join is
@@ -358,12 +348,12 @@ def lsh_verified_pairs(
     # shape shingled the corpus twice (once inside minhash_signatures,
     # once for the exact verify); stage profiles showed the two identical
     # shingle aggregations back to back. Same rows, same results.
-    sh = _materialize(shingle_rows(df, text_col, id_col, shingle_n), shingles_path)
+    sh = materialize(shingle_rows(df, text_col, id_col, shingle_n))
     cand = minhash_lsh_pairs(
-        df, text_col, id_col, num_hashes, bands, shingle_n, bands_path, shingles=sh
+        df, text_col, id_col, num_hashes, bands, shingle_n, shingles=sh
     )
     return jaccard_on_candidates(
-        df, cand, text_col, id_col, shingle_n, threshold, shingles_path,
+        df, cand, text_col, id_col, shingle_n, threshold,
         assume_distinct=True,  # band-join output is already .distinct()
         shingles=sh,
     )
@@ -376,7 +366,6 @@ def jaccard_on_candidates(
     id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.0,
-    shingles_path: str | None = None,
     assume_distinct: bool = False,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -384,23 +373,22 @@ def jaccard_on_candidates(
     pairs — the verify stage any blocking scheme (LSH bands, SimHash
     bands, embedding cells) composes with. Shuffle cost is
     O(|candidates| · shingles-per-doc); the all-pairs inverted index never
-    materializes. ``shingles_path`` durably materializes the shingle
-    table (consumed by sizes + both join sides) to parquet; default is an
-    ephemeral local checkpoint. ``assume_distinct=True`` skips the
+    materializes. The shingle table (consumed by sizes + both join sides)
+    is materialized once. ``assume_distinct=True`` skips the
     defensive dedup of the candidate list — pass it when the caller
     already emits distinct pairs (LSH band joins do), saving one shuffle
     per invocation."""
     if assume_distinct:
         cand = candidates.select("id_a", "id_b")
     else:
-        cand = candidates.select("id_a", "id_b").distinct().localCheckpoint(eager=False)
+        cand = materialize(candidates.select("id_a", "id_b").distinct())
     # ``shingles``: caller-shared prebuilt (id, shingle) table (already
-    # materialized by the caller; shingles_path is then the caller's
-    # concern) — see minhash_signatures for the value contract
+    # materialized by the caller) — see minhash_signatures for the value
+    # contract
     sh = (
         shingles
         if shingles is not None
-        else _materialize(shingle_rows(df, text_col, id_col, shingle_n), shingles_path)
+        else materialize(shingle_rows(df, text_col, id_col, shingle_n))
     )
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     a = sh.select(F.col(id_col).alias("id_a"), F.col("shingle"))
@@ -497,14 +485,13 @@ def incremental_lsh_dedup(
         else minhash_band_keys(corpus, text_col, id_col, num_hashes, bands, shingle_n)
     )
     nb = minhash_band_keys(new_docs, text_col, id_col, num_hashes, bands, shingle_n)
-    cand = (
+    # consumed three times below (id_a side, id_b side, verify stage) —
+    # materialize once instead of re-running the band join per branch
+    cand = materialize(
         cb.select(F.col(id_col).alias("id_a"), "band", "band_key")
         .join(nb.select(F.col(id_col).alias("id_b"), "band", "band_key"), ["band", "band_key"])
         .select("id_a", "id_b")
         .distinct()
-        # consumed three times below (id_a side, id_b side, verify stage) —
-        # materialize once instead of re-running the band join per branch
-        .localCheckpoint(eager=False)
     )
     # row-level restriction BEFORE tokenization: only documents that occur
     # in a candidate pair are shingled in the verify stage. The candidate
@@ -570,7 +557,7 @@ def simhash_near_dup_pairs(
             "guarantee (every pair within the radius shares a band) only holds below "
             "the band count — a larger radius would silently return an incomplete set"
         )
-    fp = simhash64(df, text_col, id_col, bits).localCheckpoint(eager=False)
+    fp = materialize(simhash64(df, text_col, id_col, bits))
     banded = fp.select(
         F.col(id_col),
         F.col("simhash"),
@@ -615,7 +602,6 @@ def gram_occurrences(
     id_col: str = "doc_id",
     n: int = 5,
     max_tokens: int | None = None,
-    tokens_path: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(occurrences, doc_lens): POSITIONAL n-gram occurrences — unlike
     :func:`shingle_rows` these are NOT per-doc distinct and carry the
@@ -625,15 +611,13 @@ def gram_occurrences(
     shorter than ``n`` tokens, which contribute no occurrence rows).
 
     Both frames derive from ONE tokenize: the tokenized projection is
-    materialized (ephemeral localCheckpoint, or durable parquet via
-    ``tokens_path``) before fanning out to the lens/occurrence branches —
+    materialized before fanning out to the lens/occurrence branches —
     at 100 TB tokenization is the dominant map cost and must not run per
     consumer (same discipline as BM25's single-tokenize avgdl).
     ``max_tokens`` is the giant-doc skew guard for the per-doc window.
     """
-    toked = _materialize(
-        _spread(df).select(F.col(id_col), tokens(text_col, max_tokens).alias("_toks")),
-        tokens_path,
+    toked = materialize(
+        _spread(df).select(F.col(id_col), tokens(text_col, max_tokens).alias("_toks"))
     )
     doc_lens = toked.select(F.col(id_col), F.size("_toks").cast("bigint").alias("n_tokens"))
     exploded = toked.select(
@@ -664,7 +648,6 @@ def repeated_span_stats(
     n: int = 5,
     min_count: int = 2,
     max_tokens: int | None = None,
-    tokens_path: str | None = None,
 ) -> DataFrame:
     """Exact-substring duplication profile per document (the Lee et al.
     2021 "Deduplicating Training Data Makes Language Models Better"
@@ -694,7 +677,7 @@ def repeated_span_stats(
       MAX(end) over preceding rows marks island starts, a running SUM
       numbers them — window partitioned by doc, never global.
     """
-    occ, doc_lens = gram_occurrences(df, text_col, id_col, n, max_tokens, tokens_path)
+    occ, doc_lens = gram_occurrences(df, text_col, id_col, n, max_tokens)
     dup_grams = (
         occ.groupBy("gram")
         .agg(F.count("*").alias("_cnt"))
@@ -748,7 +731,6 @@ def dedup_segments(
     df: DataFrame,
     segments_col: Column,
     id_col: str = "doc_id",
-    segments_path: str | None = None,
 ) -> DataFrame:
     """Segment-level exact dedup WITH document reassembly — the C4/CCNet
     cleanup shape: drop every repeated paragraph/segment corpus-wide
@@ -763,9 +745,8 @@ def dedup_segments(
     doc — (id, n_segments, n_kept, cleaned_text), cleaned_text '' when
     everything was dropped (or the doc was empty).
 
-    Scale shape: one segmentation pass (materialized — ephemeral
-    localCheckpoint or durable parquet via ``segments_path`` — because
-    both the totals and the keep-first branch consume it); keep-first is
+    Scale shape: one segmentation pass (materialized, because both the
+    totals and the keep-first branch consume it); keep-first is
     a top-1 window partitioned by the segment text (WindowGroupLimit
     pushes the rank-1 cut map-side; production would key the window on
     ``xxhash64(segment)`` to shuffle 8-byte keys — identical survivors,
@@ -774,11 +755,10 @@ def dedup_segments(
     collect_list order is partition-nondeterministic and must never be
     trusted).
     """
-    exploded = _materialize(
+    exploded = materialize(
         _spread(df)
         .select(F.col(id_col), segments_col.alias("_segs"))
-        .select(F.col(id_col), F.posexplode("_segs").alias("pos", "seg")),
-        segments_path,
+        .select(F.col(id_col), F.posexplode("_segs").alias("pos", "seg"))
     )
     totals = exploded.groupBy(id_col).agg(F.count("*").cast("bigint").alias("n_segments"))
     w = Window.partitionBy("seg").orderBy(F.asc(id_col), F.asc("pos"))
@@ -829,8 +809,6 @@ def edit_distance_near_dup(
     distances are exact integers — no rounding concerns until the final
     ratio (portable round-6). Output: (id_a, id_b, hamming, dist, ratio).
     """
-    from data_warehouse_punta_fina_spark.operators.materialize import materialize
-
     # three consumers below (two id projections + the verify join) would
     # re-run the band self-join per branch without this
     cand = materialize(
@@ -875,11 +853,10 @@ def dedup_clusters(
     ``pairs`` = (id_a, id_b) undirected edges. Returns (id, cluster_id,
     is_canonical).
     """
-    edges = (
+    edges = materialize(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     labels = ids.select(F.col(id_col).alias("node"), F.col(id_col).alias("label"))
     for _ in range(max_iter):
@@ -892,14 +869,13 @@ def dedup_clusters(
         # convergence check is a bare filter-count over the materialized
         # blocks instead of a new-vs-old self-join — one fewer join +
         # exchange per round (round-15; same fixed point, same rounds)
-        new_labels = (
+        new_labels = materialize(
             labels.join(neighbor_min, labels["node"] == neighbor_min["src"], "left")
             .select(
                 F.col("node"),
                 F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias("label"),
                 F.col("label").alias("_prev"),
             )
-            .localCheckpoint(eager=False)
         )
         changed = new_labels.filter(F.col("label") != F.col("_prev")).count()
         labels = new_labels.select("node", "label")
@@ -937,11 +913,10 @@ def dedup_clusters_star(
     final edges. Output schema matches :func:`dedup_clusters`:
     (id, cluster_id, is_canonical).
     """
-    und = (
+    und = materialize(
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
 
     def sym(e: DataFrame) -> DataFrame:
@@ -971,11 +946,10 @@ def dedup_clusters_star(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
         self_links = mins2.select(F.col("u"), F.col("m").alias("v"))
-        new_edges = (
+        new_edges = materialize(
             small_nbrs.unionByName(self_links)
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=False)
         )
         if (
             new_edges.count() == edges.count()

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround6
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 from data_warehouse_punta_fina_spark.operators.windows import (
     const_partition,
     range_partitioned_cumsum,
@@ -455,7 +456,7 @@ def retrieval_rank_metrics(
     # materialize once so neither branch recomputes the derivation
     # (plan-audit finding r11: without this the metrics plan re-scanned
     # the corpus per branch)
-    qrels = qrels.localCheckpoint(eager=False)
+    qrels = materialize(qrels)
     got = (
         ranked.filter(F.col("rank") <= k)
         .join(qrels, ["query_id", id_col], "left")

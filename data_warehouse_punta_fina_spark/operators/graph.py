@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
 
 def pagerank(
@@ -41,7 +42,7 @@ def pagerank(
       engines, and cluster layouts (the same discipline as BM25 /
       surprisal); the outer affine step is fixed-order IEEE then
       round-6;
-    - each superstep ends in an ephemeral localCheckpoint: the iteration
+    - each superstep ends in a lazy ``materialize``: the iteration
       chain stays LINEAR (without it, iteration k's plan re-derives all
       k−1 predecessors per consumer — the lineage blowup measured on the
       chained NTILEs);
@@ -56,12 +57,11 @@ def pagerank(
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     if not directed:
         e = e.unionByName(e.select(F.col("_d").alias("_s"), F.col("_s").alias("_d")))
-    e = e.distinct().localCheckpoint(eager=False)
-    nodes = (
+    e = materialize(e.distinct())
+    nodes = materialize(
         e.select(F.col("_s").alias("node"))
         .unionByName(e.select(F.col("_d").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     # out-degree folded into the node table ONCE (round-15): the r14 loop
     # re-joined ranks⋈deg every superstep AND recomputed the deg aggregate
@@ -69,18 +69,17 @@ def pagerank(
     # one aggregate fewer per iteration; dangling nodes (directed mode)
     # carry NULL _deg and contribute nothing, exactly as the inner join did
     deg = e.groupBy(F.col("_s").alias("node")).agg(F.count("*").alias("_deg"))
-    nodes = nodes.join(deg, "node", "left").localCheckpoint(eager=False)
+    nodes = materialize(nodes.join(deg, "node", "left"))
     n_nodes = nodes.agg(F.count("*").alias("_n"))
     base = F.lit(1.0 - damping) / F.col("_n").cast("double")
 
-    ranks = (
+    ranks = materialize(
         nodes.crossJoin(F.broadcast(n_nodes))
         .select(
             "node",
             "_deg",
             pround(F.lit(1.0) / F.col("_n").cast("double"), 6, 12).alias("rank"),
         )
-        .localCheckpoint(eager=False)
     )
     for _ in range(iterations):
         contrib = (
@@ -95,7 +94,7 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("_c").alias("_in"))
         )
-        ranks = (
+        ranks = materialize(
             nodes.join(contrib, "node", "left")
             .crossJoin(F.broadcast(n_nodes))
             .select(
@@ -108,7 +107,6 @@ def pagerank(
                     12,
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=False)
         )
     return ranks.select("node", "rank")
 
@@ -139,21 +137,19 @@ def triangle_counts(
     ``clustering = 2·T / (deg·(deg−1))`` (portable round-6; NULL for
     degree < 2, where it is undefined).
     """
-    und = (
+    und = materialize(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .select(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    deg = (
+    deg = materialize(
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("degree"))
-        .localCheckpoint(eager=False)
     )
     # orient low (degree, id) → high: rank compare via explicit lexicographic
     da = deg.select(F.col("node").alias("u"), F.col("degree").alias("_du"))
@@ -187,13 +183,12 @@ def triangle_counts(
     # was probed and measured NEUTRAL vs the three union legs —
     # interpreted higher-order functions give back what the saved reads
     # gain — so the codegen-friendly union stays.
-    adj = (
+    adj = materialize(  # consumed by the explode + the y-join
         oriented.groupBy("x")
         .agg(F.sort_array(F.collect_list("y")).alias("nb"))
-        .localCheckpoint(eager=False)  # consumed by the explode + the y-join
     )
     empty = F.slice(F.col("nb_x"), 1, 0)
-    pairs = (
+    pairs = materialize(  # consumed by three attribution legs
         adj.select(F.col("x"), F.col("nb").alias("nb_x"), F.explode("nb").alias("y"))
         .join(
             adj.select(F.col("x").alias("y"), F.col("nb").alias("nb_y")),
@@ -208,7 +203,6 @@ def triangle_counts(
             ),
         )
         .filter(F.size("_zs") > 0)
-        .localCheckpoint(eager=False)  # consumed by three attribution legs
     )
     tcnt = (
         pairs.select(F.col("x").alias("node"), F.size("_zs").cast("bigint").alias("_n"))
@@ -258,8 +252,8 @@ def kcore(
 
     Per peel round: one degree aggregate over the live edge multiset +
     one semi-join to drop edges touching removed nodes — both keyed on
-    node ids, Pregel-shaped, no global structure. Each round ends in an
-    ephemeral localCheckpoint (linear iteration chain, the pagerank
+    node ids, Pregel-shaped, no global structure. Each round ends in a
+    lazy ``materialize`` (linear iteration chain, the pagerank
     discipline) and the loop exits early once a round removes nothing
     (an exact count, the dedup_clusters convergence pattern). Peeling
     removes ≥ 1 node per non-converged round, so ``max_iter`` bounds
@@ -272,12 +266,11 @@ def kcore(
     de-looped first). Output: (node, core_degree) for nodes IN the
     k-core, where core_degree is the node's degree within the core.
     """
-    und = (
+    und = materialize(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     live = und
     # carry the live-edge count across rounds: each round then costs ONE
@@ -292,12 +285,11 @@ def kcore(
             .groupBy("node")
             .agg(F.count("*").alias("_deg"))
         )
-        keep = deg.filter(F.col("_deg") >= k).select("node").localCheckpoint(eager=False)
-        nxt = (
+        keep = materialize(deg.filter(F.col("_deg") >= k).select("node"))
+        nxt = materialize(
             live.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=False)
         )
         nxt_count = nxt.count()
         if live_count is None:

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround, pround6
 from data_warehouse_punta_fina_spark.functions.text import tokens
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
 _HEX13_SPAN = float(1 << 52)
 
@@ -112,12 +113,11 @@ def hashed_ngram_logratio(
                 target_predicate.cast("long").alias("_is_t"), F.col(text_col)
             )
         )
-        both = (
+        both = materialize(
             ex.select("_is_t", F.explode(_grams(F.col(text_col))).alias("_g"))
             .select("_is_t", _bucket(F.col("_g"), n_buckets).alias("_b"))
             .groupBy("_b")
             .agg(F.count("*").alias("_c_r"), F.sum("_is_t").alias("_c_t"))
-            .localCheckpoint(eager=False)
         )
         t = both.select(F.col("_b"), F.col("_c_t").alias("_c")).filter(F.col("_c") > 0)
         r = both.select(F.col("_b"), F.col("_c_r").alias("_c"))
@@ -127,8 +127,8 @@ def hashed_ngram_logratio(
             raise ValueError("pass either a target frame or target_predicate")
         # each B-row count table feeds its total AND the bucket join —
         # materialize so each corpus is tokenized exactly once
-        t = _bucket_counts(target, text_col, n_buckets).localCheckpoint(eager=False)
-        r = _bucket_counts(raw, text_col, n_buckets).localCheckpoint(eager=False)
+        t = materialize(_bucket_counts(target, text_col, n_buckets))
+        r = materialize(_bucket_counts(raw, text_col, n_buckets))
         _require_target_mass(t)
     t_tot = t.agg(F.sum("_c").alias("_tt"))
     r_tot = r.agg(F.sum("_c").alias("_tr"))

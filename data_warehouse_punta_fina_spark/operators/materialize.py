@@ -1,22 +1,22 @@
 """Materialization of multiply-consumed intermediates.
 
-A DataFrame self-join (LSH band tables, shingle tables, k-means
-centroids) re-executes its whole subplan per branch unless the
-intermediate is materialized. Two tiers:
+A DataFrame consumed by more than one branch (LSH band tables, shingle
+tables, k-means centroids, an iteration's state) re-executes its whole
+subplan per branch unless it is materialized. :func:`materialize` is the
+one place in the package that does it; every operator and registry
+builder calls it instead of ``localCheckpoint``/``checkpoint``.
 
-- **ephemeral** (default): ``localCheckpoint(eager=False)`` — blocks live
-  on executors, zero I/O, ideal for a single interactive action. The
-  caveat at cluster scale: checkpointed blocks have NO lineage, so a lost
-  executor forces recompute of the whole plan from the source.
-- **durable**: write the intermediate to parquet and read it back. Any
-  executor loss replays from the files; the table is also reusable across
-  jobs (this is how a persisted LSH band index is born — see
-  ``incremental_lsh_dedup``'s ``corpus_bands``).
+The mode is a deployment setting, not an argument: it follows the
+session's checkpoint directory (``spark.checkpoint.dir`` at startup, or
+``SparkContext.setCheckpointDir``).
 
-Operators that materialize an intermediate take an optional ``*_path``
-parameter and route it here, so the sandbox default stays cheap while a
-production deployment can flip every self-join input to durable storage
-with one argument.
+- **no checkpoint directory** (the default): ``localCheckpoint`` — blocks
+  live on the executors, no I/O. The blocks carry no lineage, so losing
+  an executor that holds one fails the query.
+- **checkpoint directory set**: ``checkpoint`` — the intermediate is
+  written as reliable files under the directory, and a lost executor's
+  partitions are read back from them. A lazy reliable checkpoint costs
+  one extra write job, which recomputes the intermediate.
 """
 
 from __future__ import annotations
@@ -24,24 +24,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def materialize(df: DataFrame, path: str | None = None) -> DataFrame:
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     """Materialize ``df`` once for multi-branch consumption.
 
-    ``path=None`` → lazy local checkpoint (ephemeral, executor-resident).
-    ``path=...``  → write-then-read parquet (durable, lineage-replayable,
-    survives executor loss; column metadata — e.g. the LSH parameter
-    fingerprint on band tables — survives the round-trip in the parquet
-    footer).
-
-    NOTE the durable path is EAGER by design: the write job runs at CALL
-    time (not first action) and overwrites whatever parquet exists at
-    ``path`` — durable materialization cannot be expressed lazily inside
-    one Spark plan. Pass a path only when you will execute the returned
-    plan; plan-inspection-only callers should use the default."""
-    if path is None:
-        return df.localCheckpoint(eager=False)
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    Lazy by default: the materialization happens with the first action
+    on the returned frame. ``eager=True`` runs it now — for a frame that
+    must be fully read before something overwrites its source.
+    Column metadata (e.g. the LSH parameter fingerprint on band tables)
+    survives both modes."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)
 
 
 def build_concurrently(builders: list) -> list:
@@ -49,10 +42,10 @@ def build_concurrently(builders: list) -> list:
     threads and return their results in order.
 
     Why this exists (guide §2.6 "overlap independent jobs"): under AQE,
-    any builder that materializes — ``localCheckpoint`` (even
-    ``eager=False``: compiling the plan to an RDD forces every shuffle
-    stage below the final one to execute synchronously), a parquet
-    write, or a collect — runs its whole stage chain at CALL time. Two
+    any builder that materializes — :func:`materialize` (even lazily:
+    compiling the plan to an RDD forces every shuffle stage below the
+    final one to execute synchronously), a parquet write, or a collect —
+    runs its whole stage chain at CALL time. Two
     independent legs built sequentially therefore serialize their
     chains even though no data dependency connects them; the profiler
     sees one long string of tiny 1-task AQE stage-jobs (the r15
@@ -62,7 +55,7 @@ def build_concurrently(builders: list) -> list:
 
     Builders must be independent (no shared mutable state); each
     normally ends in an action so its work actually happens inside the
-    thread — ``materialize(...)`` / ``localCheckpoint``, or a write (the
+    thread — ``materialize(...)``, or a write (the
     star build runs each table's build, parquet write and count as one
     builder, ``plans.pipeline.run_star_build``). In pinned-thread mode
     (PySpark's default) each thread inherits the caller's local

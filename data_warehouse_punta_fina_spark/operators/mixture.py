@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
 
 def _r6(c):
@@ -58,13 +59,15 @@ def mixture_allocation(
     simply unspent.
     """
     wq = F.floor(F.col(weight_col) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    state = sources.select(
-        F.col(source_col).alias("source"),
-        F.col(tokens_col).cast("long").alias("tokens"),
-        F.col(weight_col).cast("double").alias("weight"),
-        wq.alias("_wq"),
-        F.lit(False).alias("_sat"),
-    ).localCheckpoint(eager=False)
+    state = materialize(
+        sources.select(
+            F.col(source_col).alias("source"),
+            F.col(tokens_col).cast("long").alias("tokens"),
+            F.col(weight_col).cast("double").alias("weight"),
+            wq.alias("_wq"),
+            F.lit(False).alias("_sat"),
+        )
+    )
 
     share = _r6(
         (F.col("_wq").cast("double") / F.col("_t").cast("double"))
@@ -75,7 +78,7 @@ def mixture_allocation(
             F.sum(F.when(~F.col("_sat"), F.col("_wq")).otherwise(F.lit(0))).alias("_t"),
             F.sum(F.when(F.col("_sat"), F.col("tokens")).otherwise(F.lit(0))).alias("_used"),
         )
-        state = (
+        state = materialize(
             state.crossJoin(F.broadcast(totals))
             .select(
                 "source",
@@ -92,7 +95,6 @@ def mixture_allocation(
                     ).otherwise(F.lit(False))
                 ).alias("_sat"),
             )
-            .localCheckpoint(eager=False)
         )
     finals = state.agg(
         F.sum(F.when(~F.col("_sat"), F.col("_wq")).otherwise(F.lit(0))).alias("_t"),
@@ -215,9 +217,7 @@ def temperature_sampling_rates(
     n = F.col(count_col).cast("long")
     # base feeds four consumers (total, shares, power sum, output) —
     # materialize so the caller's corpus aggregation runs exactly once
-    base = per_group.select(F.col(group_col), n.alias("n")).localCheckpoint(
-        eager=False
-    )
+    base = materialize(per_group.select(F.col(group_col), n.alias("n")))
     tot = base.agg(F.sum("n").alias("_tot"))
     shared = base.crossJoin(F.broadcast(tot)).select(
         group_col,

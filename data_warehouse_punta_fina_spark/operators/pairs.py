@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
+
 
 def contrastive_pairs(
     docs: DataFrame,
@@ -55,9 +57,11 @@ def contrastive_pairs(
     """
     from data_warehouse_punta_fina_spark.operators.dedup import lsh_verified_pairs
 
-    pos_pairs = lsh_verified_pairs(
-        docs, text_col, id_col, num_hashes=num_hashes, bands=bands, threshold=threshold
-    ).select("id_a", "id_b").localCheckpoint(eager=False)
+    pos_pairs = materialize(
+        lsh_verified_pairs(
+            docs, text_col, id_col, num_hashes=num_hashes, bands=bands, threshold=threshold
+        ).select("id_a", "id_b")
+    )
     pos = (
         pos_pairs.select(F.col("id_a").alias("anchor_id"), F.col("id_b").alias("other_id"))
         .unionByName(

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
+
 
 def _row(spark: SparkSession, check: str, target: str, metric: str, value: int, passed: bool) -> DataFrame:
     return spark.createDataFrame(
@@ -151,10 +153,9 @@ def psi_report(
     # quantiles, not once per consumer (plan-audited: 10 source scans
     # before, 3 after — the quantile pass + one binning pass per side,
     # the structural minimum for quantile-then-bin)
-    cuts = (
+    cuts = materialize(
         base.filter(F.col(value_col).isNotNull())
         .agg(F.expr(f"percentile({value_col}, array({probs}))").alias("_cuts"))
-        .localCheckpoint(eager=False)
     )
 
     def binned(df: DataFrame, out: str) -> DataFrame:
@@ -173,8 +174,8 @@ def psi_report(
 
     # each side's bin-count table is consumed twice (join + its total) —
     # they are <= n_bins rows; materialize so each side scans once
-    nb = binned(base, "n_base").localCheckpoint(eager=False)
-    nc = binned(cur, "n_cur").localCheckpoint(eager=False)
+    nb = materialize(binned(base, "n_base"))
+    nc = materialize(binned(cur, "n_cur"))
     # bin spine 1..n_bins so empty bins on either side still report
     spine = (
         cuts.select(F.posexplode(F.concat(F.array(F.lit(None).cast("double")), F.col("_cuts"))))
@@ -274,17 +275,15 @@ def psi_report_categorical(
     """
     from data_warehouse_punta_fina_spark.functions.money import pround
 
-    nb = (
+    nb = materialize(
         base.filter(F.col(col).isNotNull())
         .groupBy(F.col(col).alias("category"))
         .agg(F.count("*").alias("n_base"))
-        .localCheckpoint(eager=False)
     )
-    nc = (
+    nc = materialize(
         cur.filter(F.col(col).isNotNull())
         .groupBy(F.col(col).alias("category"))
         .agg(F.count("*").alias("n_cur"))
-        .localCheckpoint(eager=False)
     )
     spine = nb.select("category").unionByName(nc.select("category")).distinct()
     p_base = F.greatest(F.col("n_base").cast("double") / F.col("_tb").cast("double"), F.lit(eps))
@@ -367,9 +366,9 @@ def fd_violations(
         "\x00", *[F.coalesce(F.col(c).cast("string"), F.lit("<null>")) for c in dependents]
     )
     det = [F.col(c) for c in determinants]
-    groups = df.groupBy(*det, rendered.alias("_r")).agg(
-        F.count("*").alias("_n")
-    ).localCheckpoint(eager=False)  # two consumers: counts + variant fetch
+    groups = materialize(  # two consumers: counts + variant fetch
+        df.groupBy(*det, rendered.alias("_r")).agg(F.count("*").alias("_n"))
+    )
     per = (
         groups.groupBy(*det)
         .agg(F.sum("_n").alias("n_rows"), F.count("*").alias("n_variants"))

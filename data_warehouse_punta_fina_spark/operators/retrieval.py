@@ -41,6 +41,7 @@ from data_warehouse_punta_fina_spark.operators.freshness import (
     merge_fingerprints,
     rows_match,
 )
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
 K1 = 1.2
 B = 0.75
@@ -50,7 +51,6 @@ def corpus_term_stats(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(postings, df_stats, dl): per-(doc, term) frequency + doc length,
     per-term document frequency, and the per-doc length table. All derive
@@ -63,20 +63,17 @@ def corpus_term_stats(
     whose exchanges are not deduped against the main plan's — stage
     profiles of doc_bm25_topk showed the (doc, term) aggregation and the
     spread exchange each executing TWICE per run (and 2× again per PRF
-    pass). The base (doc, term) count is therefore localCheckpoint-ed by
-    default, guaranteeing exactly one tokenize per query; every branch
-    reads materialized blocks. Every current caller — queries, index
-    builders/appenders, the maintenance stream's foreachBatch (a batch
-    frame, so checkpointing is legal) — has ≥2 downstream consumers and
-    keeps the default; ``materialize=False`` restores the purely lazy
-    shape for a future strictly-single-consumer caller.
+    pass). The base (doc, term) count is therefore materialized,
+    guaranteeing exactly one tokenize per query; every branch reads
+    materialized blocks. Every caller — queries, index builders/appenders,
+    the maintenance stream's foreachBatch (a batch frame, so
+    checkpointing is legal) — has ≥2 downstream consumers.
     """
     toks = docs.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term")
     )
     base = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    if materialize:
-        base = base.localCheckpoint(eager=False)
+    base = materialize(base)
     dl = base.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     postings = base.join(dl, id_col)
     df_stats = base.groupBy("term").agg(F.count("*").alias("df"))
@@ -331,7 +328,7 @@ def _bm25_append_plans(
     the plan gate can assert the append's READ SET: none of them scans
     ``{index_dir}/postings`` — the batch postings derive from
     ``new_docs`` only; the merged vocabulary reads the stored ``dfstats``
-    (vocabulary-sized, localCheckpointed so the merge can overwrite its
+    (vocabulary-sized, eagerly materialized so the merge can overwrite its
     own source path); the 1-row stats derive from the old stats row
     (collected) plus one aggregate over the batch postings."""
     spark = new_docs.sparkSession
@@ -380,12 +377,10 @@ def _bm25_append_plans(
     # vocabulary merge: stored (term, df) ∪ the batch's df deltas, one
     # union-aggregate over two vocabulary-sized inputs — batch ids are
     # disjoint from the corpus (the append contract), so per-term df
-    # counts add exactly. localCheckpoint breaks the lineage on the
-    # stored path so the merged table can overwrite it.
-    old_df = (
-        spark.read.parquet(f"{index_dir}/dfstats")
-        .select("term", "df")
-        .localCheckpoint()
+    # counts add exactly. An eager materialization breaks the lineage on
+    # the stored path so the merged table can overwrite it.
+    old_df = materialize(
+        spark.read.parquet(f"{index_dir}/dfstats").select("term", "df"), eager=True
     )
     merged_df = (
         old_df.unionByName(df_new.select("term", "df"))
@@ -997,7 +992,6 @@ def tfidf_doc_pairs(
     df_cap: int | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    unit_path: str | None = None,
 ) -> DataFrame:
     """Top-``k`` most cosine-similar documents per document under tf-idf
     weighting — the classic all-pairs similarity search (Bayardo et al.,
@@ -1076,12 +1070,10 @@ def tfidf_doc_pairs(
     )
     # unit weight in billionths: wi/sqrt(norm2i) == w/‖w‖ (the 1e4 scale
     # cancels); u ≤ 1 ⇒ ui ≤ 1e9
-    from data_warehouse_punta_fina_spark.operators.materialize import materialize
-
     # materialize the unit-weight table ONCE before the self-join: both
     # branches (and norms) otherwise re-derive the full tokenize→weight
     # subtree, multiplying the corpus scan per branch (plan-audited:
-    # ~38 text scans without this, 1 with). unit_path flips it durable.
+    # ~38 text scans without this, 1 with)
     unit = materialize(
         weighted.join(norms, id_col)
         .withColumn(
@@ -1093,8 +1085,7 @@ def tfidf_doc_pairs(
                 + F.lit(0.5)
             ),
         )
-        .select(F.col(id_col).alias("_id"), "term", "_ui"),
-        unit_path,
+        .select(F.col(id_col).alias("_id"), "term", "_ui")
     )
     a = unit.select(
         F.col("_id").alias("doc_a"), F.col("term"), F.col("_ui").alias("_ua")

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
 # 16^13 = 2^52: 13 hex digits convert exactly into a double-precision int
 _HEX13_SPAN = float(1 << 52)
@@ -123,7 +124,7 @@ def heavy_hitters(df: DataFrame, col: str, k: int) -> DataFrame:
     )
     # candidates + partition counts in ONE pass; tiny (≤ (k+1)·partitions
     # rows) but consumed twice, so materialize the blocks
-    sketch = items.mapInPandas(mg, schema=sk_schema).localCheckpoint(eager=False)
+    sketch = materialize(items.mapInPandas(mg, schema=sk_schema))
     cands = sketch.filter(F.col("_i").isNotNull()).select("_i").distinct()
     total = sketch.agg(F.sum("_c").alias("_n"))
     return (

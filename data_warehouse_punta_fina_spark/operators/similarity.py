@@ -27,6 +27,7 @@ from data_warehouse_punta_fina_spark.operators.freshness import (
     merge_fingerprints,
     rows_match,
 )
+from data_warehouse_punta_fina_spark.operators.materialize import build_concurrently, materialize
 
 
 def _prepare(df: DataFrame, id_col: str, vec_col: str, bucket_bits: int | None = None) -> DataFrame:
@@ -209,7 +210,6 @@ def ivf_trained_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     probes: int = 1,
-    centroids_path: str | None = None,
 ) -> DataFrame:
     """Approximate top-k over a TRAINED coarse quantizer: fit k-means on
     the corpus, assign corpus and queries to their nearest centroid, and
@@ -217,13 +217,9 @@ def ivf_trained_topk(
     is written partitioned by ``cid`` so a query probes ``probes``
     partitions — the real IVF index (with standard nprobe), not the
     sign-bit stand-in. Recall/scan trade measured in tools/ann_recall.py.
-    ``centroids_path`` durably materializes the trained centroids to
-    parquet (reusable index, survives executor loss); default is an
-    ephemeral local checkpoint."""
-    from data_warehouse_punta_fina_spark.operators.materialize import materialize
-
+    """
     cent = kmeans_fit(corpus, k=n_centroids, iters=iters, id_col=id_col, vec_col=vec_col)
-    cent = materialize(cent, centroids_path)  # reused by both assigns
+    cent = materialize(cent)  # reused by both assigns
     cv = corpus.select(F.col(id_col), quantize(vec_col).alias("qvec"))
     c_assigned = _assign(cv, cent, id_col).withColumn("nsq", norm_sq_q(F.col("qvec")))
     q_assigned = (
@@ -266,10 +262,9 @@ def embedding_near_dup_pairs_trained(
     pair budget. Same deterministic Lloyd fit as :func:`ivf_trained_topk`."""
     cent = kmeans_fit(df, k=n_centroids, iters=iters, id_col=id_col, vec_col=vec_col)
     v = df.select(F.col(id_col), quantize(vec_col).alias("qvec"))
-    assigned = (
-        _assign(v, cent.localCheckpoint(eager=False), id_col)
+    assigned = materialize(
+        _assign(v, materialize(cent), id_col)
         .withColumn("nsq", norm_sq_q(F.col("qvec")))
-        .localCheckpoint(eager=False)
     )
     a, b = assigned.alias("a"), assigned.alias("b")
     return (
@@ -294,7 +289,7 @@ def embedding_near_dup_pairs(
     by the coarse code so the self-join is block-diagonal rather than a
     full cross product (the standard blocking trick for pairwise dedup)."""
     # self-join: materialize the quantized projection once for both branches
-    p = _prepare(df, id_col, vec_col, bucket_bits=bits).localCheckpoint(eager=False)
+    p = materialize(_prepare(df, id_col, vec_col, bucket_bits=bits))
     a, b = p.alias("a"), p.alias("b")
     return (
         a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
@@ -599,7 +594,6 @@ def pq_topk(
     vec_col: str = "embedding",
     query_id_col: str | None = None,
     dims: int = 64,
-    codebook_path: str | None = None,
 ) -> DataFrame:
     """ANN top-k over PQ codes with asymmetric-distance scoring and EXACT
     re-ranking — the full IVF-PQ search recipe minus the coarse stage
@@ -617,19 +611,15 @@ def pq_topk(
     :func:`sq8_topk` — PQ decides which candidates survive, never the
     reported score.
 
-    At 100 TB the corpus persists as (vec_id, sub, cid) int codes
-    (``codebook_path`` makes the codebook itself durable/reusable): the
+    At 100 TB the corpus persists as (vec_id, sub, cid) int codes: the
     approximate scan reads m small ints per vector instead of 4·dims
     bytes — 64× less I/O at the defaults — and the exact path touches
     rerank·|Q| vectors.
     """
     from data_warehouse_punta_fina_spark.functions.money import pround6
-    from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
     qid = query_id_col or id_col
-    cb = materialize(
-        pq_fit(corpus, m, n_centroids, iters, id_col, vec_col, dims), codebook_path
-    )
+    cb = materialize(pq_fit(corpus, m, n_centroids, iters, id_col, vec_col, dims))
     codes = _assign_sub(_subvectors(corpus, id_col, vec_col, m, dims), cb, id_col).select(
         id_col, "sub", "cid"
     )
@@ -712,8 +702,6 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dims: int = 64,
-    centroids_path: str | None = None,
-    codebook_path: str | None = None,
 ) -> DataFrame:
     """The full IVF-PQ search recipe (Jégou et al. 2011 §V): a TRAINED
     coarse quantizer restricts the scan to ``probes``/``n_cells`` of the
@@ -744,10 +732,6 @@ def ivfpq_topk(
     tools/ann_recall.py + docs/SCALE.md.
     """
     from data_warehouse_punta_fina_spark.functions.money import pround6
-    from data_warehouse_punta_fina_spark.operators.materialize import (
-        build_concurrently,
-        materialize,
-    )
 
     # round-16 (guide §2.6, VERDICT r15 #3): the coarse quantizer and the
     # PQ codebook train on the same corpus but are INDEPENDENT — built
@@ -759,12 +743,10 @@ def ivfpq_topk(
             lambda: materialize(
                 kmeans_fit(
                     corpus, k=n_cells, iters=iters, id_col=id_col, vec_col=vec_col
-                ),
-                centroids_path,
+                )
             ),
             lambda: materialize(
-                pq_fit(corpus, m, n_centroids, iters, id_col, vec_col, dims),
-                codebook_path,
+                pq_fit(corpus, m, n_centroids, iters, id_col, vec_col, dims)
             ),
         ]
     )
@@ -1404,9 +1386,11 @@ def mmr_topk(
                            query_id_col=query_id_col)
     # exact int64 millionths of the round-6 cosine
     rel_i = (F.col("cosine") * F.lit(1_000_000)).cast("long")
-    pool_df = top.select(
-        "query_id", "neighbor_id", F.col("cosine").alias("relevance"), rel_i.alias("rel_i")
-    ).localCheckpoint(eager=False)
+    pool_df = materialize(
+        top.select(
+            "query_id", "neighbor_id", F.col("cosine").alias("relevance"), rel_i.alias("rel_i")
+        )
+    )
     # pairwise sims among each query's pool members (pool² per query, tiny)
     pv = pool_df.select("query_id", "neighbor_id").join(
         _prepare(corpus, id_col, vec_col).withColumnRenamed(id_col, "neighbor_id"),
@@ -1417,7 +1401,7 @@ def mmr_topk(
         cosine_q(F.col("a.qvec"), F.col("b.qvec"), F.col("a.nsq"), F.col("b.nsq"))
         * F.lit(1_000_000)
     ).cast("long")
-    pairs = (
+    pairs = materialize(
         a.join(
             b,
             (F.col("a.query_id") == F.col("b.query_id"))
@@ -1429,14 +1413,13 @@ def mmr_topk(
             F.col("b.neighbor_id").alias("id_b"),
             sim_i.alias("sim_i"),
         )
-        .localCheckpoint(eager=False)
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("rel_i"), F.asc("neighbor_id"))
-    selected = (
+    selected = materialize(
         pool_df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select("query_id", "neighbor_id", F.lit(1).alias("step"), "relevance")
-    ).localCheckpoint(eager=False)
+    )
     for step in range(2, k + 1):
         remaining = pool_df.join(
             selected.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_anti"
@@ -1459,7 +1442,7 @@ def mmr_topk(
             .filter(F.col("_rn") == 1)
             .select("query_id", "neighbor_id", F.lit(step).alias("step"), "relevance")
         )
-        selected = selected.unionByName(pick).localCheckpoint(eager=False)
+        selected = materialize(selected.unionByName(pick))
     return selected.select(
         "query_id", "neighbor_id", F.col("step").cast("int").alias("step"), "relevance"
     )

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
+
 
 def salted_agg(
     df: DataFrame,
@@ -86,10 +88,9 @@ def key_skew_report(
     from data_warehouse_punta_fina_spark.functions.money import pround
 
     r6 = lambda c: pround(c, 6, 18).cast("double")  # noqa: E731
-    counts = (
+    counts = materialize(  # consumed by summary AND top-k
         df.groupBy(F.col(key).cast("string").alias("key"))
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)  # consumed by summary AND top-k
     )
     summary = counts.agg(
         F.sum("n").alias("total_rows"),
@@ -103,9 +104,7 @@ def key_skew_report(
     # window (the repo keeps the 'No Partition Defined' warning stream at
     # zero): a broadcast dominance self-join over ≤ top_k² pairs —
     # rank(i) = |{j : j ≤ i in (n desc, key asc) order}|, cum(i) = Σ n_j
-    topped = counts.orderBy(F.desc("n"), F.asc("key")).limit(top_k).localCheckpoint(
-        eager=False
-    )
+    topped = materialize(counts.orderBy(F.desc("n"), F.asc("key")).limit(top_k))
     a, b = topped.alias("a"), topped.alias("b")
     dominates = (F.col("b.n") > F.col("a.n")) | (
         (F.col("b.n") == F.col("a.n")) & (F.col("b.key") <= F.col("a.key"))

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
 
 def _quant(col: str, scale: int):
@@ -185,9 +186,11 @@ def chi2_independence(
     combine, two marginal re-aggregations of the cell table (tiny),
     broadcast back — the input shuffles once.
     """
-    cells = df.groupBy(
-        F.col(col_a).alias("a"), F.col(col_b).alias("b")
-    ).agg(F.count("*").alias("observed")).localCheckpoint(eager=False)
+    cells = materialize(
+        df.groupBy(F.col(col_a).alias("a"), F.col(col_b).alias("b")).agg(
+            F.count("*").alias("observed")
+        )
+    )
     ra = cells.groupBy("a").agg(F.sum("observed").alias("_ra"))
     cb = cells.groupBy("b").agg(F.sum("observed").alias("_cb"))
     tot = cells.agg(F.sum("observed").alias("_n"))
@@ -525,10 +528,9 @@ def mutual_information(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     Shape: one (a,b) count with map-side combine + two tiny marginal
     re-aggregations broadcast back.
     """
-    cells = (
+    cells = materialize(
         df.groupBy(F.col(col_a).alias("a"), F.col(col_b).alias("b"))
         .agg(F.count("*").alias("observed"))
-        .localCheckpoint(eager=False)
     )
     ra = cells.groupBy("a").agg(F.sum("observed").alias("_na"))
     cb = cells.groupBy("b").agg(F.sum("observed").alias("_nb"))
@@ -636,10 +638,9 @@ def theil_sen_trend(
     # branches (slope median, Mann-Kendall, residual median) — without a
     # materialization the ORIGINAL series scan re-executes once per
     # branch (7 scans observed); both tables are aggregate-sized
-    d = (
+    d = materialize(
         series.select(*sc, F.col(time_col).alias("_t"), q.alias("_q"))
         .withColumn("_x", F.row_number().over(wt).cast("long"))
-        .localCheckpoint(eager=False)
     )
     a = d.select(*sc, F.col("_x").alias("_xa"), F.col("_q").alias("_qa"))
     b = d.select(*sc, F.col("_x").alias("_xb"), F.col("_q").alias("_qb"))
@@ -648,10 +649,12 @@ def theil_sen_trend(
     slope = (F.col("_qb") - F.col("_qa")).cast("double") / (
         F.col("_xb") - F.col("_xa")
     ).cast("double")
-    pairs = pairs.withColumn("_s", slope).withColumn(
-        "_sgn",
-        F.signum((F.col("_qb") - F.col("_qa")).cast("double")).cast("long"),
-    ).localCheckpoint(eager=False)
+    pairs = materialize(
+        pairs.withColumn("_s", slope).withColumn(
+            "_sgn",
+            F.signum((F.col("_qb") - F.col("_qa")).cast("double")).cast("long"),
+        )
+    )
     # ungrouped fallback: constant-valued NON-FOLDABLE key (a foldable
     # lit(0) constant-folds to an empty spec — a true global window);
     # anchored per-table on a real column (operators.windows.const_partition)

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround
 from data_warehouse_punta_fina_spark.functions.text import tokens
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
 
 def token_ngrams(col, n: int = 2):
@@ -344,7 +345,7 @@ def pmi_collocations(
     # scoring) — materialize it or the corpus tokenize re-runs per branch
     # (plan-audited: 4 corpus scans before, 1 after). It is vocabulary²-
     # of-observed-pairs sized — tiny next to the corpus.
-    pairs = (
+    pairs = materialize(
         ngram_rows(df, text_col, id_col, 2)
         .groupBy("gram")
         .agg(F.count("*").alias("n_pair"))
@@ -353,7 +354,6 @@ def pmi_collocations(
             F.substring_index(F.col("gram"), " ", -1).alias("w2"),
             F.col("n_pair"),
         )
-        .localCheckpoint(eager=False)
     )
     mx = pairs.groupBy("w1").agg(F.sum("n_pair").alias("c1"))
     my = pairs.groupBy("w2").agg(F.sum("n_pair").alias("c2"))

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
+
 
 def const_partition(anchor: str | Column) -> Column:
     """A constant-valued but NON-FOLDABLE window partition key.
@@ -91,7 +93,7 @@ def ranked_sequential_id(
 ) -> DataFrame:
     """Dense ids 1..n ordered by a key, WITHOUT a global window.
 
-    ``pin=True`` materializes the input once (lazy local checkpoint) so
+    ``pin=True`` materializes the input once (lazy ``materialize``) so
     the sample/offsets/rank branches read stored rows instead of
     re-executing the upstream subplan (~20% faster dim builds measured at
     sf0.1 when the pre-rank plan is join-heavy). Default OFF: the
@@ -138,7 +140,7 @@ def ranked_sequential_id(
     """
     ob = [order_by] if isinstance(order_by, str) else list(order_by)
     if pin:
-        df = df.localCheckpoint(eager=False)
+        df = materialize(df)
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
     key = F.struct(*[F.col(c).alias(c) for c in ob])
 
@@ -341,7 +343,7 @@ def partitioned_sequential_id(
         "_pid", F.shiftrightunsigned("_mid", 33)
     )
     if pin:
-        df2 = df2.localCheckpoint(eager=False)
+        df2 = materialize(df2)
     wcum = (
         Window.partitionBy(const_partition("_pid"))
         .orderBy("_pid")

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround6
 from data_warehouse_punta_fina_spark.functions.text import tokens
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
 # positions are packed below the 32-bit k-gram hash in one bigint:
 # comb = hash * 2^31 + (2^31 - 1 - pos). Minimizing comb minimizes the
@@ -132,14 +133,14 @@ def winnow_overlap(
     """
     # the fingerprint table feeds four consumers (df cap, sizes, both join
     # sides) — materialize once so the explode+window extraction runs once
-    hashes = fp.select(F.col(id_col), "fp_hash").distinct().localCheckpoint(eager=False)
+    hashes = materialize(fp.select(F.col(id_col), "fp_hash").distinct())
     rare = (
         hashes.groupBy("fp_hash")
         .agg(F.count("*").alias("_df"))
         .filter(F.col("_df") <= max_df)
         .select("fp_hash")
     )
-    capped = hashes.join(rare, "fp_hash").localCheckpoint(eager=False)
+    capped = materialize(hashes.join(rare, "fp_hash"))
     sizes = capped.groupBy(id_col).agg(F.count("*").alias("_n"))
     a = capped.select(F.col(id_col).alias("id_a"), "fp_hash")
     b = capped.select(F.col(id_col).alias("id_b"), "fp_hash")

@@ -13,6 +13,7 @@ from data_warehouse_punta_fina_spark.functions.text import (
     token_count,
 )
 from data_warehouse_punta_fina_spark.operators.dedup import minhash_lsh_pairs
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 from data_warehouse_punta_fina_spark.operators.mixture import mixture_allocation_oracle_sql
 from data_warehouse_punta_fina_spark.registry.shared import (
     _FINGERPRINT,
@@ -440,7 +441,7 @@ def doc_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation below IS exact_dedup's body verbatim over the shared
     # projection (md5 → groupBy → min id + count), so flags and values
     # are identical; only the LSH leg keeps its own (tokenize) scan.
-    proj = (
+    proj = materialize(
         _spread(docs.select("doc_id", "text"))  # raw rows below, heavy exprs above
         .select(
             "doc_id",
@@ -449,7 +450,6 @@ def doc_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             quality_score("text").alias("quality"),
             lang_id("text").alias("lang_pred"),
         )
-        .localCheckpoint(eager=False)
     )
     canon = proj.groupBy("content_hash").agg(
         F.min("doc_id").alias("canonical_id"), F.count("*").alias("n_copies")
@@ -628,17 +628,16 @@ def doc_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bucket = fingerprint("text") % 10
     tagged = docs.withColumn("split", F.when(bucket < 8, "train").otherwise("eval"))
-    sh0 = shingle_rows(tagged, "text", "doc_id").localCheckpoint(eager=False)
+    sh0 = materialize(shingle_rows(tagged, "text", "doc_id"))
     hot = (
         sh0.groupBy("shingle")
         .agg(F.count("*").alias("_df"))
         .filter(F.col("_df") > 64)
         .select("shingle")
     )
-    sh = (
+    sh = materialize(
         sh0.join(F.broadcast(hot), "shingle", "left_anti")
         .join(tagged.select("doc_id", "split"), "doc_id")
-        .localCheckpoint(eager=False)
     )
     test_sh = sh.filter(F.col("split") == "eval").select(
         F.col("doc_id").alias("test_id"), "shingle"
@@ -748,10 +747,8 @@ def doc_contamination_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH banding AND the ≥3-shared-shingle detector below — the r15
     # shape shingled the corpus twice (stage profile: two identical
     # 3.3 MB shingle aggregations per run). Same rows, same results.
-    sh0 = shingle_rows(docs, "text", "doc_id").localCheckpoint(eager=False)
-    pairs = minhash_lsh_pairs(
-        docs, num_hashes=12, bands=4, shingles=sh0
-    ).localCheckpoint(eager=False)
+    sh0 = materialize(shingle_rows(docs, "text", "doc_id"))
+    pairs = materialize(minhash_lsh_pairs(docs, num_hashes=12, bands=4, shingles=sh0))
     clusters = dedup_clusters(docs.select("doc_id"), pairs, max_iter=30).select(
         "doc_id", "cluster_id"
     )
@@ -777,9 +774,7 @@ def doc_contamination_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_df") > 64)
         .select("shingle")
     )
-    sh = sh0.join(F.broadcast(hot), "shingle", "left_anti").localCheckpoint(
-        eager=False
-    )
+    sh = materialize(sh0.join(F.broadcast(hot), "shingle", "left_anti"))
     # the ≥3-shared-shingle detector computed ONCE as an unordered pair
     # table (round-15): the r14 shape re-ran the full shingle self-join
     # PER SCHEME (test×train each time); the split assignment only
@@ -789,7 +784,7 @@ def doc_contamination_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair has exactly one test endpoint, so the unordered pair count
     # equals the old (test_id, train_id) count; n_shared multiplicity
     # semantics are unchanged (same Σ count_a·count_b per shingle).
-    shared3 = (
+    shared3 = materialize(
         sh.select(F.col("doc_id").alias("id_a"), "shingle")
         .join(sh.select(F.col("doc_id").alias("id_b"), "shingle"), "shingle")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -797,7 +792,6 @@ def doc_contamination_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= 3)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
 
     def _scheme_counts(split_df: DataFrame, scheme: str) -> DataFrame:

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE as _TSR
+from data_warehouse_punta_fina_spark.operators.materialize import build_concurrently, materialize
 from data_warehouse_punta_fina_spark.operators.similarity import brute_force_topk
 from data_warehouse_punta_fina_spark.registry.shared import (
     _QUANT_VEC,
@@ -281,36 +282,32 @@ def doc_hybrid_rrf_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-16 (guide §2.6, VERDICT r15 #4): the lexical and semantic
     # legs are independent until the fuse, but the IVF leg's k-means
     # training executes synchronously at construction (AQE compiles
-    # its localCheckpoint), serializing it BEFORE the lexical leg's
+    # its materialization), serializing it BEFORE the lexical leg's
     # tokenize ran in the final action. Build both legs in parallel
-    # driver threads, each ending in a lazy checkpoint so its stage
+    # driver threads, each ending in a lazy materialize so its stage
     # chain runs inside its thread; results are unchanged (the legs'
     # plans are identical, only the wall-clock interleaving moves).
-    from data_warehouse_punta_fina_spark.operators.materialize import (
-        build_concurrently,
-    )
-
     lex, sem = build_concurrently(
         [
-            lambda: bm25_topk_terms(
-                _spread(docs), qterms, k=20, exclude_query_doc=True
-            )
-            .select("query_id", "doc_id", "rank")
-            .localCheckpoint(eager=False),
-            lambda: ivf_trained_topk(
-                emb,
-                emb.filter(F.col("vec_id").isin(qids)),
-                k=20,
-                n_centroids=16,
-                iters=2,
-                probes=3,
-            )
-            .select(
-                F.col("query_id"),
-                F.col("neighbor_id").alias("doc_id"),
-                F.col("rank"),
-            )
-            .localCheckpoint(eager=False),
+            lambda: materialize(
+                bm25_topk_terms(
+                    _spread(docs), qterms, k=20, exclude_query_doc=True
+                ).select("query_id", "doc_id", "rank")
+            ),
+            lambda: materialize(
+                ivf_trained_topk(
+                    emb,
+                    emb.filter(F.col("vec_id").isin(qids)),
+                    k=20,
+                    n_centroids=16,
+                    iters=2,
+                    probes=3,
+                ).select(
+                    F.col("query_id"),
+                    F.col("neighbor_id").alias("doc_id"),
+                    F.col("rank"),
+                )
+            ),
         ]
     )
     return rrf_fuse({"lex": lex, "sem": sem}, k=5, rrf_k=60)
@@ -970,7 +967,7 @@ def doc_retrieval_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # off the checkpointed postings; df/dl re-derive from the same
     # materialized blocks. Values identical, oracle unchanged.
     postings, _df0, _dl0 = corpus_term_stats(docs)
-    postings = postings.localCheckpoint(eager=False)
+    postings = materialize(postings)
     df_stats = postings.groupBy("term").agg(F.count("*").alias("df"))
     dl = postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
     qrows = [
@@ -984,9 +981,7 @@ def doc_retrieval_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ranking under test is corpus-sized work but its OUTPUT is
     # queries x k rows — materialize so the metric branches never
     # re-run the BM25 scan (plan-audit finding r11)
-    ranked = _bm25_rank(docs, qdf, 5, "doc_id", postings, df_stats, dl).localCheckpoint(
-        eager=False
-    )
+    ranked = materialize(_bm25_rank(docs, qdf, 5, "doc_id", postings, df_stats, dl))
     qrels = (
         postings.join(F.broadcast(qdf), "term")
         .groupBy("query_id", "doc_id")

@@ -20,6 +20,7 @@ from data_warehouse_punta_fina_spark.operators.bpe import (
     bpe_oracle_sql,
     bpe_segmentation_oracle_sql,
 )
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 from data_warehouse_punta_fina_spark.registry.shared import (
     _FINGERPRINT,
     _LANG_CASE,
@@ -246,12 +247,14 @@ def doc_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = docs.select(
-        stopword_ratio("text").alias("sw"),
-        punct_ratio("text").alias("punct"),
-        quality_score("text").alias("q"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    ).localCheckpoint(eager=False)
+    feats = materialize(
+        docs.select(
+            stopword_ratio("text").alias("sw"),
+            punct_ratio("text").alias("punct"),
+            quality_score("text").alias("q"),
+            (F.col("lang") == "en").cast("int").alias("y"),
+        )
+    )
     return logistic_regression_gd(feats, ["sw", "punct", "q"], "y", iters=8, lr=0.5)
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_warehouse_punta_fina_spark.operators.materialize import materialize
 from data_warehouse_punta_fina_spark.operators.similarity import (
     brute_force_topk,
     embedding_near_dup_pairs,
@@ -267,9 +268,7 @@ def semantic_near_dup_crosscheck(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    cand = embedding_near_dup_pairs(emb, threshold=0.35, bits=8).localCheckpoint(
-        eager=False
-    )
+    cand = materialize(embedding_near_dup_pairs(emb, threshold=0.35, bits=8))
     j = jaccard_on_candidates(docs, cand.select("id_a", "id_b"), threshold=0.0)
     return cand.join(j, ["id_a", "id_b"], "left").select(
         "id_a",

@@ -19,10 +19,11 @@ SF_DIR = "/root/testdata/sf0.001"
 # persisted-index lifecycle/remediation probes, registry-wide subprocess
 # scans, adversarial-partition invariants). The tier stays green and
 # runnable: `pytest tests/ -m slow` (or `-m ""` for everything).
-# Four equivalence guards stay in the default gate despite their cost,
+# Five equivalence guards stay in the default gate despite their cost,
 # because they guard the riskiest rewrites: IVF-PQ equals brute force,
-# BM25 stream equals batch, persisted BM25 equals in-query, and the
-# concurrent star build equals the serial one.
+# BM25 stream equals batch, persisted BM25 equals in-query, the
+# concurrent star build equals the serial one, and materialization with
+# a checkpoint directory equals the default local checkpoints.
 SLOW_TESTS = {
     "test_no_partition_defined_warnings_registry_wide",
     "test_continuous_dedup_ingest_stream",
@@ -56,7 +57,6 @@ SLOW_TESTS = {
     "test_txtable_data_skipping_prunes_files",
     "test_auc_and_ap_drop_null_scores_consistently",
     "test_bm25_compact_maintained_index_roundtrip",
-    "test_durable_materialization_equals_ephemeral",
     "test_range_partitioned_cumsum_fuzz",
     "test_stream_stream_interval_join_equals_batch",
     "test_bm25_federated_equals_monolithic_and_validates",

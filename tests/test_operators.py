@@ -706,10 +706,10 @@ def test_ranked_sequential_id_no_materialization_and_null_keys(spark):
     src = inspect.getsource(W.ranked_sequential_id)
     for banned in ("persist", "cache("):
         assert banned not in src, banned
-    # the pin escape hatch is the single sanctioned checkpoint call, and
+    # the pin escape hatch is the single sanctioned materialization, and
     # it must be guarded by the flag (default-off lineage replay)
     body = src.split('"""')[-1]  # strip docstring mentions
-    assert body.count("localCheckpoint") == 1
+    assert body.count("materialize(") == 1
     assert "if pin:" in body
 
     rows = [(None, 0)] + [((i * 61) % 499, i) for i in range(1, 499)]
@@ -1113,40 +1113,65 @@ def test_incremental_lsh_dedup_verify_is_candidate_bounded(spark):
 
 
 def test_durable_materialization_equals_ephemeral(spark, tmp_path):
-    """Self-join intermediates offered a durable parquet path (cluster
-    posture: executor loss replays from files instead of recomputing the
-    whole plan) must produce byte-identical results to the default
-    ephemeral localCheckpoint path — for the LSH band+shingle tables and
-    the trained-IVF centroids."""
+    """With a checkpoint directory set on the session, every
+    ``materialize`` writes reliable checkpoint files (executor loss
+    replays from them) and must give the same results as the default
+    local checkpoints: the LSH band and shingle tables, the trained-IVF
+    centroids, and the eager dfstats re-read in ``bm25_append_index``."""
+    import shutil
+
     from data_warehouse_punta_fina_spark.operators.dedup import lsh_verified_pairs
+    from data_warehouse_punta_fina_spark.operators.retrieval import (
+        bm25_append_index,
+        bm25_build_index,
+    )
     from data_warehouse_punta_fina_spark.operators.similarity import ivf_trained_topk
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     docs = spark.createDataFrame(
-        [(0, base), (1, base), (2, "one two three four five six seven eight nine ten")],
+        [
+            (0, base),
+            (1, base),
+            (2, "one two three four five six seven eight nine ten"),
+            (3, "alpha beta gamma one two three"),
+        ],
         "doc_id long, text string",
     )
-    durable = lsh_verified_pairs(
-        docs,
-        threshold=0.5,
-        bands_path=str(tmp_path / "bands"),
-        shingles_path=str(tmp_path / "shingles"),
-    )
-    ephemeral = lsh_verified_pairs(docs, threshold=0.5)
-    assert sorted(map(tuple, durable.collect())) == sorted(map(tuple, ephemeral.collect()))
-    assert (tmp_path / "bands" / "_SUCCESS").exists()
-
     emb = spark.createDataFrame(
         [(i, [float(i % 7) + 1.0, float((i * 3) % 5) + 1.0, float(i % 4) + 1.0]) for i in range(40)],
         "vec_id long, embedding array<double>",
     )
     q = emb.filter(F.col("vec_id") < 3)
-    d2 = ivf_trained_topk(
-        emb, q, k=3, n_centroids=4, iters=2, centroids_path=str(tmp_path / "cent")
-    )
-    e2 = ivf_trained_topk(emb, q, k=3, n_centroids=4, iters=2)
-    assert sorted(map(tuple, d2.collect())) == sorted(map(tuple, e2.collect()))
-    assert (tmp_path / "cent" / "_SUCCESS").exists()
+    built = tmp_path / "bm25"
+    bm25_build_index(docs.filter(F.col("doc_id") < 2), str(built), n_buckets=4)
+
+    def run(tag):
+        idx = str(tmp_path / f"bm25_{tag}")
+        shutil.copytree(built, idx)
+        bm25_append_index(docs.filter(F.col("doc_id") >= 2), idx)
+        return [
+            sorted(map(tuple, lsh_verified_pairs(docs, threshold=0.5).collect())),
+            sorted(map(tuple, ivf_trained_topk(emb, q, k=3, n_centroids=4, iters=2).collect())),
+        ] + [
+            sorted(map(tuple, spark.read.parquet(f"{idx}/{part}").collect()))
+            for part in ("postings", "dfstats", "stats")
+        ]
+
+    sc = spark.sparkContext
+    ckpt = tmp_path / "ckpt"
+    previous = sc._jsc.sc().getCheckpointDir()
+    assert previous.isEmpty(), "the shared session must start without a checkpoint directory"
+    try:
+        sc.setCheckpointDir(str(ckpt))
+        durable = run("durable")
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(previous)
+    assert sc.getCheckpointDir() is None
+    ephemeral = run("ephemeral")
+    assert durable == ephemeral
+    assert all(durable), "every compared output is non-empty"
+    written = [p for p in ckpt.rglob("part-*") if p.is_file()]
+    assert written, "no checkpoint files under the session's checkpoint directory"
 
 
 def test_build_concurrently_without_pinned_threads(monkeypatch):

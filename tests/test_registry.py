@@ -141,3 +141,53 @@ def test_registry_modules_reference_only_bound_globals():
         walk(top)
     assert checked > 10
     assert not unresolved, f"unresolved globals: {unresolved}"
+
+
+# the per-operator durable-path options that materialize() replaced with
+# the session's checkpoint directory
+_DELETED_PATH_PARAMS = {
+    "bands_path",
+    "shingles_path",
+    "tokens_path",
+    "segments_path",
+    "unit_path",
+    "centroids_path",
+    "codebook_path",
+}
+
+
+def test_materialize_is_the_only_checkpoint_site():
+    """operators/materialize.py is the one place in the package that
+    materializes a DataFrame: no other module calls ``.localCheckpoint(``
+    or ``.checkpoint(``, ``materialize`` takes no path, and no operator
+    takes a durable ``*_path`` option again (durability follows the
+    session's checkpoint directory)."""
+    pkg = os.path.join(REPO, "data_warehouse_punta_fina_spark")
+    seam = os.path.join("operators", "materialize.py")
+    calls, params, checked = [], [], 0
+    for root, _dirs, files in os.walk(pkg):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            checked += 1
+            rel = os.path.relpath(os.path.join(root, fname), pkg)
+            tree = ast.parse(open(os.path.join(root, fname), encoding="utf-8").read())
+            for node in ast.walk(tree):
+                if (
+                    rel != seam
+                    and isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("localCheckpoint", "checkpoint")
+                ):
+                    calls.append(f"{rel}:{node.lineno}")
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and (
+                    rel.startswith("operators" + os.sep)
+                ):
+                    a = node.args
+                    names = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
+                    if rel == seam and node.name == "materialize":
+                        assert names == ["df", "eager"], names
+                    params += [f"{rel}:{node.name}({n})" for n in names if n in _DELETED_PATH_PARAMS]
+    assert checked > 50
+    assert not calls, f"materialize outside operators/materialize.py: {calls}"
+    assert not params, f"durable *_path options are back: {params}"

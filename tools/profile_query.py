@@ -47,7 +47,10 @@ def main() -> None:
                     help="dump top SQL-plan operators by time via the UI REST API")
     ap.add_argument("--no-checkpoint", action="store_true",
                     help="neutralize DataFrame.localCheckpoint while building the "
-                    "query so --explain captures the FULL pre-checkpoint lineage "
+                    "query. operators/materialize.materialize() is the package's only "
+                    "checkpoint site and calls it for every materialization when the "
+                    "session has no checkpoint directory (the default), so --explain "
+                    "captures the FULL pre-checkpoint lineage "
                     "(VERDICT r15 #8: checkpoint tails hid the deleted operators). "
                     "Plan-evidence mode only — timings under this flag re-execute "
                     "shared subtrees and must not be quoted as readings.")
@@ -116,14 +119,7 @@ def main() -> None:
             compiles.append(c1[0] - c0[0])
             compile_ms.append(round(c1[1] - c0[1], 1))
             if i == 0:
-                try:
-                    tr = df._jdf.queryExecution().tracker().phases()
-                    phases = {
-                        str(k): round((tr[k].endTimeMs() - tr[k].startTimeMs()) / 1000.0, 3)
-                        for k in tr.keySet().toArray()
-                    }
-                except Exception:
-                    phases = None
+                phases = _phases(df)
                 if args.explain:
                     os.makedirs(args.explain, exist_ok=True)
                     path = os.path.join(args.explain, f"{name}_{args.suffix}.txt")
@@ -149,6 +145,23 @@ def main() -> None:
             _dump_stage_table(spark, name)
         if args.sql:
             _dump_sql_metrics(spark, name)
+
+
+def _phases(df) -> dict[str, float]:
+    """Seconds per Catalyst phase (analysis, optimization, planning) of
+    ``df``'s own QueryExecution, planning it first if nothing has. The
+    tracker's phase table is a Scala map, walked through its key
+    iterator (py4j has no zero-argument ``toArray`` on it)."""
+    qe = df._jdf.queryExecution()
+    qe.executedPlan()
+    tr = qe.tracker().phases()
+    keys = tr.keys().iterator()
+    out = {}
+    while keys.hasNext():
+        k = keys.next()
+        ph = tr.apply(k)
+        out[str(k)] = round((ph.endTimeMs() - ph.startTimeMs()) / 1000.0, 3)
+    return out
 
 
 def _group_jobs(spark, group: str) -> int:
