@@ -702,7 +702,8 @@ def main() -> None:
     # filenames, so the 8-core run overwrote the 32-core run's per-query
     # detail and the scaling comparison lost its data. Non-commit runs
     # additionally write cpu-suffixed twins that can never collide.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from data_warehouse_punta_fina_spark.session import DEFAULT_CPUS as cpus
+
     extra_details = [] if _commit_run else [f"BENCH_DETAIL_driver_c{cpus}.json"]
     extra_summaries = [] if _commit_run else [f"BENCH_SUMMARY_driver_c{cpus}.json"]
     print(json.dumps(out))

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround
 from data_warehouse_punta_fina_spark.functions.text import tokens
+from data_warehouse_punta_fina_spark.operators.freshness import stamp, stored_params
 from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
 # parameter fingerprint for persisted NB models (parquet-footer-durable
@@ -243,9 +244,8 @@ def nb_save_model(
     margin. Training is deterministic, so scoring a persisted model
     equals training in-query — what the oracle checks."""
     cond, classes, consts = nb_train(train, text_col=text_col, label_col=label_col)
-    meta = {"scheme": NB_SCHEME, "logprob_scale": 6}
     cond.select(
-        "_y", "term", F.col("_c").alias("_c", metadata=meta)
+        "_y", "term", stamp("_c", NB_SCHEME, logprob_scale=6)
     ).write.mode("overwrite").parquet(f"{model_dir}/cond")
     classes.write.mode("overwrite").parquet(f"{model_dir}/classes")
     consts.write.mode("overwrite").parquet(f"{model_dir}/consts")
@@ -259,7 +259,6 @@ def nb_score_model(
     id_col: str = "doc_id",
     label_col: str | None = "label",
     broadcast_model: bool = True,
-    validate_model: bool = True,
 ) -> DataFrame:
     """Score documents against a PERSISTED NB model
     (:func:`nb_save_model`) — no training job anywhere in the plan: the
@@ -271,15 +270,8 @@ def nb_score_model(
     columns."""
     spark = test.sparkSession
     cond = spark.read.parquet(f"{model_dir}/cond")
-    stored = dict(cond.schema["_c"].metadata or {})
-    if validate_model and stored.get("scheme") != NB_SCHEME:
-        raise ValueError(
-            "persisted NB model carries no (or an incompatible) scheme "
-            f"fingerprint (stored {stored.get('scheme')!r} != {NB_SCHEME!r}); "
-            "scoring under a mismatched smoothing/rounding scheme silently "
-            "corrupts every margin. Rebuild with nb_save_model, or pass "
-            "validate_model=False for a model KNOWN to match."
-        )
+    # a mismatched smoothing/rounding scheme silently corrupts every margin
+    stored_params(cond, "_c", f"NB model at {model_dir!r}", NB_SCHEME)
     classes = spark.read.parquet(f"{model_dir}/classes")
     consts = spark.read.parquet(f"{model_dir}/consts")
     if label_col is None:

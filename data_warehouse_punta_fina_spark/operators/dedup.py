@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround6 as _pround6
 from data_warehouse_punta_fina_spark.functions.text import tokens, word_shingles
+from data_warehouse_punta_fina_spark.operators.freshness import stamp, stored_params
 from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
 
@@ -205,12 +206,6 @@ def minhash_band_keys(
     # batch-side parameters at join time (see incremental_lsh_dedup)
     # instead of silently yielding empty candidates when
     # (num_hashes, bands, shingle_n) drifted
-    meta = {
-        "scheme": MINHASH_SCHEME,
-        "num_hashes": num_hashes,
-        "bands": bands,
-        "shingle_n": shingle_n,
-    }
     return sig.select(
         F.col(id_col),
         F.explode(
@@ -227,9 +222,17 @@ def minhash_band_keys(
             )
         ).alias("bk"),
     ).select(
+        id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("band_key")
+    ).select(
         id_col,
-        F.col("bk.band").alias("band"),
-        F.col("bk.key").alias("band_key", metadata=meta),
+        "band",
+        stamp(
+            "band_key",
+            MINHASH_SCHEME,
+            num_hashes=num_hashes,
+            bands=bands,
+            shingle_n=shingle_n,
+        ),
     )
 
 
@@ -418,7 +421,6 @@ def incremental_lsh_dedup(
     shingle_n: int = 3,
     threshold: float = 0.2,
     corpus_bands: DataFrame | None = None,
-    validate_index: bool = True,
 ) -> DataFrame:
     """Dedupe an incoming batch against an already-indexed corpus — the
     production ingestion pattern (a new crawl arrives; only documents NOT
@@ -453,32 +455,17 @@ def incremental_lsh_dedup(
                 f"corpus_bands is missing required columns {sorted(missing)}; expected the "
                 f"({id_col}, band, band_key) layout produced by minhash_band_keys"
             )
-        stored = dict(corpus_bands.schema["band_key"].metadata or {})
-        expected = {
-            "scheme": MINHASH_SCHEME,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "shingle_n": shingle_n,
-        }
-        if validate_index and not stored:
-            raise ValueError(
-                "corpus_bands carries no parameter metadata on band_key — it was not "
-                "written by this engine's minhash_band_keys (or predates the versioned "
-                f"hash scheme {MINHASH_SCHEME!r}). A scheme/parameter mismatch makes the "
-                "band join silently admit every new doc, so unverifiable indexes are "
-                "rejected by default. Rebuild the index with minhash_band_keys, or pass "
-                "validate_index=False if the index is KNOWN to match."
-            )
-        drift = {
-            k: (stored[k], v) for k, v in expected.items() if k in stored and stored[k] != v
-        }
-        if drift:
-            raise ValueError(
-                "corpus_bands was built under a different hash scheme or LSH parameters "
-                f"than this batch ({ {k: f'stored={s} != batch={b}' for k, (s, b) in drift.items()} }); "
-                "mismatched band keys never collide, so every new doc would be silently "
-                "admitted as non-duplicate. Rebuild the index or pass matching parameters."
-            )
+        # mismatched band keys never collide: every new doc would be
+        # silently admitted as non-duplicate
+        stored_params(
+            corpus_bands,
+            "band_key",
+            "corpus_bands (persisted LSH band index)",
+            MINHASH_SCHEME,
+            num_hashes=num_hashes,
+            bands=bands,
+            shingle_n=shingle_n,
+        )
     cb = (
         corpus_bands
         if corpus_bands is not None

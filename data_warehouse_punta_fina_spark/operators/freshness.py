@@ -1,14 +1,26 @@
-"""Corpus-freshness discipline for the persisted indexes (round-11,
-VERDICT r10 #7).
+"""What a persisted index or model was built from, checked on every read.
 
-The persisted BM25 and IVF-PQ indexes already validate a PARAMETER
-fingerprint (scheme + build knobs ride as column metadata, so a
-layout/tokenizer mismatch is rejected at search time). What that cannot
-see is a STALE index: the corpus mutated after the build, and the stored
-postings/codes describe a snapshot that no longer exists. This module
-adds the missing half — a content fingerprint of the indexed corpus,
-stored with the index at build time, XOR/sum-merged exactly on append,
-and compared against the live corpus on demand:
+Every persisted artifact — the LSH band table, the BM25, positional and
+IVF-PQ indexes, the NB model — has to prove two things to a reader, and
+this module is the only code that knows how either proof is stored:
+
+**Parameters.** The build knobs ride as parquet column metadata on one
+data column of the artifact (``band_key``, ``tf``/``df``, ``scid`` or
+the stream codebook's ``cid``, the NB model's ``_c``): a ``scheme``
+version plus the parameters a reader must agree with. Writers stamp it
+with :func:`stamp`; every reader goes through :func:`stored_params`,
+which raises when the metadata is absent, the scheme differs, or any
+expected parameter is missing or different, and otherwise returns the
+stored dict (readers take ``n_buckets``, ``m``, ``dims``, ``n_cells``
+from it). There is no opt-out: an artifact that cannot show what it was
+built under is rejected, because a mismatched tokenizer, hash scheme or
+codebook silently skews every result instead of failing.
+
+**Content.** Parameters cannot see a STALE index: the corpus mutated
+after the build, and the stored postings/codes describe a snapshot that
+no longer exists. The content half is a fingerprint of the indexed
+corpus, stored with the index at build time, XOR/sum-merged exactly on
+append, and compared against the live corpus on demand:
 
 - :func:`content_fingerprint` — one aggregate over the corpus producing
   (row count, bit-XOR of per-row xxhash64, exact decimal SUM of the same
@@ -40,8 +52,48 @@ there; this discipline exists because OUR indexes are durable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+
+
+def stamp(col: str, scheme: str, **params) -> Column:
+    """``col`` carrying the artifact's build parameters as column metadata
+    (``scheme`` first, then ``params`` in the order given). Parquet keeps
+    field metadata in the footer, so it survives the write and every
+    read, partitioned or not."""
+    return F.col(col).alias(col, metadata={"scheme": scheme, **params})
+
+
+def stored_params(
+    df: DataFrame, col: str, where: str, scheme: str, **expected
+) -> dict:
+    """The build parameters stamped on ``df[col]``, checked against the
+    reader's ``scheme`` and ``expected`` values. Raises ``ValueError``
+    naming ``where`` (the artifact) when the metadata is absent, or
+    listing every stored-vs-expected pair that differs (a key missing
+    from the stored dict differs). Returns the stored dict."""
+    stored = dict(df.schema[col].metadata or {}) if col in df.columns else {}
+    if not stored:
+        raise ValueError(
+            f"{where} carries no parameter metadata on {col!r} (expected scheme "
+            f"{scheme!r}): it was not written by this engine, predates the "
+            "versioned scheme, or was copied without its column metadata. An "
+            "artifact that cannot show what it was built under is rejected; "
+            "rebuild it."
+        )
+    drift = [
+        f"{k}: stored {repr(stored[k]) if k in stored else '<missing>'} "
+        f"!= expected {v!r}"
+        for k, v in {"scheme": scheme, **expected}.items()
+        if k not in stored or stored[k] != v
+    ]
+    if drift:
+        raise ValueError(
+            f"{where} was built under different parameters than this call "
+            f"({'; '.join(drift)}); its results would be silently wrong. "
+            "Rebuild it or pass matching parameters."
+        )
+    return stored
 
 
 class StaleIndexError(ValueError):

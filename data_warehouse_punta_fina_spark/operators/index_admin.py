@@ -105,11 +105,11 @@ def _validate_supersedes(
     spark: SparkSession, src: str, dst: str, family: str
 ) -> None:
     """Refuse unless ``dst`` is a valid same-family index describing the
-    SAME corpus content as ``src``. Scheme validation reuses the exact
+    SAME corpus content as ``src``. Parameter validation reuses the exact
     reader the searches use (``_bm25_read_validated`` /
-    ``_pos_read_validated`` / the IVF-PQ scid-metadata check), so a
-    foreign or metadata-stripped dst fails with the same rejection a
-    search would give. Content cross-check compares the published
+    ``_pos_read_validated`` / ``freshness.stored_params`` on the IVF-PQ
+    codes), so a foreign or metadata-stripped dst fails with the same
+    rejection a search would give. Content cross-check compares the published
     corpus fingerprints where both sides carry one; a stream-built
     positional src (which writes no ``stats/``) falls back to comparing
     distinct doc counts — one index-sized aggregate each, the admin-job
@@ -132,8 +132,8 @@ def _validate_supersedes(
             _pos_read_validated,
         )
 
-        dst_pos, _n = _pos_read_validated(spark, dst, True)
-        src_pos, _sn = _pos_read_validated(spark, src, True)
+        dst_pos, _n = _pos_read_validated(spark, dst)
+        src_pos, _sn = _pos_read_validated(spark, src)
         try:
             src_stats = spark.read.parquet(f"{src}/stats").collect()[0]
             dst_stats = spark.read.parquet(f"{dst}/stats").collect()[0]
@@ -161,16 +161,15 @@ def _validate_supersedes(
 
             a, b = _n_docs(src_pos), _n_docs(dst_pos)
     elif family == "ivfpq":
+        from data_warehouse_punta_fina_spark.operators.freshness import stored_params
         from data_warehouse_punta_fina_spark.operators.similarity import IVFPQ_SCHEME
 
-        codes = spark.read.parquet(f"{dst}/codes")
-        stored = dict(codes.schema["scid"].metadata or {})
-        if stored.get("scheme") != IVFPQ_SCHEME:
-            raise ValueError(
-                f"superseding index at {dst!r} carries no (or a foreign) IVF-PQ "
-                f"parameter fingerprint (stored scheme {stored.get('scheme')!r} != "
-                f"{IVFPQ_SCHEME!r}) — refusing to retire {src!r} in its favor."
-            )
+        stored_params(
+            spark.read.parquet(f"{dst}/codes"),
+            "scid",
+            f"superseding IVF-PQ index at {dst!r}",
+            IVFPQ_SCHEME,
+        )
         a = _fp_fields(spark.read.parquet(f"{src}/fingerprint").collect()[0])
         b = _fp_fields(spark.read.parquet(f"{dst}/fingerprint").collect()[0])
     else:

@@ -40,6 +40,8 @@ from data_warehouse_punta_fina_spark.operators.freshness import (
     fingerprint_row,
     merge_fingerprints,
     rows_match,
+    stamp,
+    stored_params,
 )
 from data_warehouse_punta_fina_spark.operators.materialize import materialize
 
@@ -287,12 +289,11 @@ def bm25_build_index(
     Deterministic: same corpus → byte-identical scores from the stored
     index and the in-query :func:`bm25_topk_terms` path — which is what
     the oracle checks."""
-    meta = {"scheme": BM25_SCHEME, "n_buckets": n_buckets}
     postings, df_stats, _dl = corpus_term_stats(docs, text_col, id_col)
     bucket = F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("bucket")
     (
         postings.select(
-            "term", id_col, F.col("tf").alias("tf", metadata=meta), "dl", bucket
+            "term", id_col, stamp("tf", BM25_SCHEME, n_buckets=n_buckets), "dl", bucket
         )
         .write.mode("overwrite")
         .partitionBy("bucket")
@@ -334,12 +335,9 @@ def _bm25_append_plans(
     spark = new_docs.sparkSession
     # schema/metadata only for the postings side — the validated reader
     # resolves scheme + n_buckets through the SAME path the searches use
-    # (ADVICE r10 inference, VERDICT r11 #8: the append must not keep a
-    # divergent bare-default fallback), and none of its three tables is
-    # executed here beyond the 1-row stats collect below.
-    stored_postings, _dfs, _stats, n_buckets = _bm25_read_validated(
-        spark, index_dir, validate_index=True
-    )
+    # (VERDICT r11 #8), and none of its three tables is executed here
+    # beyond the 1-row stats collect below.
+    stored_postings, _dfs, _stats, n_buckets = _bm25_read_validated(spark, index_dir)
     if "ingest_batch" in stored_postings.columns:
         # a STREAM-MAINTAINED index partitions postings under
         # ingest_batch=<id>/bucket=<b>; a batch append would write
@@ -353,7 +351,6 @@ def _bm25_append_plans(
             "(streaming/bm25_stream.run_bm25_maintenance_stream), or rebuild "
             "a batch-shaped index with bm25_build_index."
         )
-    stored = dict(stored_postings.schema["tf"].metadata or {})
     old = spark.read.parquet(f"{index_dir}/stats").collect()[0]
     old_n, old_total_dl = int(old["n_docs"]), int(old["total_dl"])
     # one batch-sized pass gives BOTH the doc count and the batch's
@@ -372,7 +369,7 @@ def _bm25_append_plans(
     postings_new, df_new, _dl = corpus_term_stats(new_docs, text_col, id_col)
     bucket = F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("bucket")
     batch_postings = postings_new.select(
-        "term", id_col, F.col("tf").alias("tf", metadata=stored), "dl", bucket
+        "term", id_col, stamp("tf", BM25_SCHEME, n_buckets=n_buckets), "dl", bucket
     )
     # vocabulary merge: stored (term, df) ∪ the batch's df deltas, one
     # union-aggregate over two vocabulary-sized inputs — batch ids are
@@ -453,7 +450,6 @@ def bm25_compact_index(
     spark,
     src_index_dir: str,
     dst_index_dir: str,
-    validate_index: bool = True,
 ) -> None:
     """Compact a STREAM-MAINTAINED BM25 index into the batch shape —
     the operational closer of the maintenance loop (round-12): a
@@ -482,12 +478,7 @@ def bm25_compact_index(
     superseded fragmented layout (and its epoch history) with
     ``operators.index_admin.retire_index_dir`` — compaction creates the
     successor; retirement owns deleting the predecessor."""
-    postings, df_stats, stats, n_buckets = _bm25_read_validated(
-        spark, src_index_dir, validate_index
-    )
-    stored = dict(postings.schema["tf"].metadata or {})
-    if not stored:
-        stored = {"scheme": BM25_SCHEME, "n_buckets": n_buckets}
+    postings, df_stats, stats, n_buckets = _bm25_read_validated(spark, src_index_dir)
     id_cols = [
         c for c in postings.columns if c not in ("term", "tf", "dl", "bucket", "ingest_batch")
     ]
@@ -501,7 +492,7 @@ def bm25_compact_index(
         # ONE file per bucket partition (true compaction), instead of
         # tasks × buckets small files from a layout-preserving write
         postings.select(
-            "term", id_col, F.col("tf").alias("tf", metadata=stored), "dl", "bucket"
+            "term", id_col, stamp("tf", BM25_SCHEME, n_buckets=n_buckets), "dl", "bucket"
         )
         .repartition(n_buckets, "bucket")
         .write.mode("overwrite")
@@ -509,7 +500,7 @@ def bm25_compact_index(
         .parquet(f"{dst_index_dir}/postings")
     )
     (
-        df_stats.select("term", F.col("df").alias("df", metadata=stored), "bucket")
+        df_stats.select("term", stamp("df", BM25_SCHEME, n_buckets=n_buckets), "bucket")
         .repartition(n_buckets, "bucket")
         .write.mode("overwrite")
         .partitionBy("bucket")
@@ -567,49 +558,24 @@ def bm25_refresh_index(
 
 
 def _bm25_read_validated(
-    spark,
-    index_dir: str,
-    validate_index: bool = True,
-    n_buckets: int | None = None,
+    spark, index_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, int]:
-    """Read one persisted index's three tables and resolve its bucket
-    modulus (stored metadata → explicit argument → partition-value
-    inference, in that order — ADVICE r10). Shared by the single-index
-    and federated searches AND the append path (VERDICT r11 #8). The
-    scheme is validated from the postings footer BEFORE the sibling
-    tables are touched, so a foreign/stripped index fails with the
-    scheme rejection, not a missing-path error."""
+    """Read one persisted index's three tables and its bucket modulus.
+    Shared by the single-index and federated searches, the append and
+    the compaction (VERDICT r11 #8). The parameters are checked from the
+    postings footer BEFORE the sibling tables are touched, so a foreign
+    or stripped index fails with the parameter rejection, not a
+    missing-path error: a tokenizer or layout mismatch silently skews
+    every score, and a wrong modulus hashes query terms to the wrong
+    buckets."""
     postings = spark.read.parquet(f"{index_dir}/postings")
-    stored = dict(postings.schema["tf"].metadata or {})
-    if validate_index and stored.get("scheme") != BM25_SCHEME:
-        raise ValueError(
-            "persisted postings carry no/foreign scheme metadata on tf "
-            f"(stored {stored.get('scheme')!r} != {BM25_SCHEME!r}); a tokenizer or "
-            "layout mismatch silently skews every score, so unverifiable indexes "
-            "are rejected by default."
-        )
-    df_stats = spark.read.parquet(f"{index_dir}/dfstats")
-    stats = spark.read.parquet(f"{index_dir}/stats")
-    if "n_buckets" in stored:
-        n_buckets = int(stored["n_buckets"])
-    elif n_buckets is None:
-        # a metadata-stripped index (the validate_index=False escape
-        # hatch) must not GUESS the modulus — a wrong n_buckets hashes
-        # query terms to the wrong buckets and the (bucket, term) join
-        # silently drops postings (ADVICE r10). When the caller knows
-        # the build-time value, the explicit ``n_buckets`` argument is
-        # authoritative; otherwise infer it from the stored partition
-        # values: buckets are pmod(hash) ∈ [0, n), so max+1 is the
-        # modulus whenever the top bucket is populated — true for any
-        # vocabulary-sized index (thousands of terms over ≤ dozens of
-        # buckets; a tiny-vocab index should pass the explicit value).
-        # The aggregate reads only the partition column (resolved from
-        # directory names, no data scan).
-        top = postings.agg(F.max("bucket").alias("b")).collect()[0]["b"]
-        if top is None:
-            raise ValueError("cannot infer n_buckets from an empty postings table")
-        n_buckets = int(top) + 1
-    return postings, df_stats, stats, n_buckets
+    stored = stored_params(postings, "tf", f"BM25 index at {index_dir!r}", BM25_SCHEME)
+    return (
+        postings,
+        spark.read.parquet(f"{index_dir}/dfstats"),
+        spark.read.parquet(f"{index_dir}/stats"),
+        int(stored["n_buckets"]),
+    )
 
 
 def _bm25_query_buckets(
@@ -713,9 +679,7 @@ def bm25_search_index(
     k: int = 5,
     id_col: str = "doc_id",
     exclude_query_doc: bool = False,
-    validate_index: bool = True,
     prune_buckets: list[int] | None = None,
-    n_buckets: int | None = None,
     verify_corpus: DataFrame | None = None,
     verify_text_col: str = "text",
 ) -> DataFrame:
@@ -742,9 +706,7 @@ def bm25_search_index(
     runtime on any uncovered bucket — one comparison per query term on
     the broadcast-tiny side, never touching the postings scan."""
     spark = query_terms.sparkSession
-    postings, df_stats, stats, n_buckets = _bm25_read_validated(
-        spark, index_dir, validate_index, n_buckets
-    )
+    postings, df_stats, stats, n_buckets = _bm25_read_validated(spark, index_dir)
     if verify_corpus is not None and not bm25_index_is_fresh(
         verify_corpus, index_dir, verify_text_col, id_col
     ):
@@ -776,7 +738,6 @@ def bm25_federated_search(
     k: int = 5,
     id_col: str = "doc_id",
     exclude_query_doc: bool = False,
-    validate_index: bool = True,
     prune_buckets: list[int] | None = None,
     verify_corpora: list[DataFrame] | None = None,
     verify_text_col: str = "text",
@@ -830,7 +791,7 @@ def bm25_federated_search(
                     "rebuild."
                 )
     spark = query_terms.sparkSession
-    shards = [_bm25_read_validated(spark, d, validate_index) for d in index_dirs]
+    shards = [_bm25_read_validated(spark, d) for d in index_dirs]
     mods = {nb for (_p, _d, _s, nb) in shards}
     if len(mods) != 1:
         raise ValueError(
@@ -1284,12 +1245,11 @@ def positional_build_index(
     silently breaks adjacency matching, so v1 indexes are rejected).
     One corpus-sized job: the tokenize + (term, doc) group-by
     shuffle-write into the bucketed layout."""
-    meta = {"scheme": POS_SCHEME, "n_buckets": n_buckets}
     postings = _pos_postings(docs, text_col, id_col)
     bucket = F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("bucket")
     (
         postings.select(
-            "term", id_col, F.col("tf").alias("tf", metadata=meta), "positions", bucket
+            "term", id_col, stamp("tf", POS_SCHEME, n_buckets=n_buckets), "positions", bucket
         )
         .write.mode("overwrite")
         .partitionBy("bucket")
@@ -1306,7 +1266,6 @@ def positional_compact_index(
     corpus: DataFrame | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    validate_index: bool = True,
 ) -> None:
     """Compact a STREAM-BUILT positional index into the batch shape —
     the positional twin of :func:`bm25_compact_index`: the maintenance
@@ -1328,10 +1287,7 @@ def positional_compact_index(
     would graduate a mismatched index to ``is_fresh=True`` and admit
     batch appends onto it. After the path swap, retire the superseded
     stream layout with ``operators.index_admin.retire_index_dir``."""
-    positions, n_buckets = _pos_read_validated(spark, src_index_dir, validate_index)
-    stored = dict(positions.schema["tf"].metadata or {})
-    if not stored:
-        stored = {"scheme": POS_SCHEME, "n_buckets": n_buckets}
+    positions, n_buckets = _pos_read_validated(spark, src_index_dir)
     id_cols = [
         c
         for c in positions.columns
@@ -1344,7 +1300,11 @@ def positional_compact_index(
     src_id = id_cols[0]
     (
         positions.select(
-            "term", src_id, F.col("tf").alias("tf", metadata=stored), "positions", "bucket"
+            "term",
+            src_id,
+            stamp("tf", POS_SCHEME, n_buckets=n_buckets),
+            "positions",
+            "bucket",
         )
         .repartition(n_buckets, "bucket")
         .write.mode("overwrite")
@@ -1424,40 +1384,18 @@ def positional_refresh_index(
     return True
 
 
-def _pos_n_buckets(stored: dict, positions: DataFrame) -> int:
-    """Resolve the positional index's bucket modulus: stored metadata
-    when present, else inferred from the partition values (max+1 — the
-    :func:`_bm25_read_validated` inference; ADVICE r10: never GUESS a
-    modulus, a wrong one hashes query terms to the wrong buckets and
-    silently empties every result)."""
-    if "n_buckets" in stored:
-        return int(stored["n_buckets"])
-    top = positions.agg(F.max("bucket").alias("b")).collect()[0]["b"]
-    if top is None:
-        raise ValueError("cannot infer n_buckets from an empty positions table")
-    return int(top) + 1
-
-
-def _pos_read_validated(
-    spark, index_dir: str, validate_index: bool
-) -> tuple[DataFrame, int]:
+def _pos_read_validated(spark, index_dir: str) -> tuple[DataFrame, int]:
     """Read + validate one positional index (array layout): returns the
-    positions table and the bucket modulus. Scheme metadata rides on
+    positions table and the bucket modulus. The parameters ride on
     ``tf`` (the BM25 discipline); a v1 row-per-token or foreign index is
     rejected — a layout/tokenizer mismatch silently breaks adjacency
-    matching. Shared by phrase / sloppy-phrase / proximity search."""
+    matching, and a wrong modulus empties every result. Shared by the
+    searches, the append and the compaction."""
     positions = spark.read.parquet(f"{index_dir}/positions")
-    stored = dict(
-        (positions.schema["tf"].metadata or {}) if "tf" in positions.columns else {}
+    stored = stored_params(
+        positions, "tf", f"positional index at {index_dir!r}", POS_SCHEME
     )
-    if validate_index and stored.get("scheme") != POS_SCHEME:
-        raise ValueError(
-            "persisted positional index carries no/foreign scheme metadata "
-            f"(stored {stored.get('scheme')!r} != {POS_SCHEME!r}); a tokenizer or "
-            "layout mismatch (e.g. the v1 row-per-token layout) silently breaks "
-            "adjacency matching, so unverifiable indexes are rejected by default."
-        )
-    return positions, _pos_n_buckets(stored, positions)
+    return positions, int(stored["n_buckets"])
 
 
 def _pos_term_occurrences(
@@ -1491,7 +1429,6 @@ def phrase_search_index(
     index_dir: str,
     phrase: str,
     id_col: str = "doc_id",
-    validate_index: bool = True,
     verify_corpus: DataFrame | None = None,
     verify_text_col: str = "text",
 ) -> DataFrame:
@@ -1519,7 +1456,7 @@ def phrase_search_index(
     toks = [w for w in re.split(TOKEN_SPLIT_RE, phrase.lower()) if w]
     if not toks:
         raise ValueError("phrase contains no tokens under the corpus token rule")
-    positions, n_buckets = _pos_read_validated(spark, index_dir, validate_index)
+    positions, n_buckets = _pos_read_validated(spark, index_dir)
     if verify_corpus is not None and not positional_index_is_fresh(
         verify_corpus, index_dir, verify_text_col, id_col
     ):
@@ -1544,7 +1481,6 @@ def phrase_slop_search_index(
     phrase: str,
     slop: int = 0,
     id_col: str = "doc_id",
-    validate_index: bool = True,
     verify_corpus: DataFrame | None = None,
     verify_text_col: str = "text",
 ) -> DataFrame:
@@ -1580,7 +1516,7 @@ def phrase_slop_search_index(
     toks = [w for w in re.split(TOKEN_SPLIT_RE, phrase.lower()) if w]
     if not toks:
         raise ValueError("phrase contains no tokens under the corpus token rule")
-    positions, n_buckets = _pos_read_validated(spark, index_dir, validate_index)
+    positions, n_buckets = _pos_read_validated(spark, index_dir)
     if verify_corpus is not None and not positional_index_is_fresh(
         verify_corpus, index_dir, verify_text_col, id_col
     ):
@@ -1615,7 +1551,6 @@ def proximity_search_index(
     term_b: str,
     window: int = 8,
     id_col: str = "doc_id",
-    validate_index: bool = True,
 ) -> DataFrame:
     """Proximity search over the PERSISTED positional index: documents
     where ``term_a`` and ``term_b`` co-occur within ``window`` tokens —
@@ -1650,7 +1585,7 @@ def proximity_search_index(
                          "twice under the symmetric join) — use phrase_search_index")
     if window < 1:
         raise ValueError("window must be >= 1 token")
-    positions, n_buckets = _pos_read_validated(spark, index_dir, validate_index)
+    positions, n_buckets = _pos_read_validated(spark, index_dir)
     occ = _pos_term_occurrences(spark, positions, [ta, tb], n_buckets, id_col)
     pa = occ[ta].select(F.col(id_col), F.col("pos").alias("_pa"))
     pb = occ[tb].select(F.col(id_col), F.col("pos").alias("_pb"))
@@ -1671,7 +1606,6 @@ def cooccurrence_search_index(
     terms: list[str],
     window: int = 12,
     id_col: str = "doc_id",
-    validate_index: bool = True,
     verify_corpus: DataFrame | None = None,
     verify_text_col: str = "text",
 ) -> DataFrame:
@@ -1717,7 +1651,7 @@ def cooccurrence_search_index(
         )
     if window < 1:
         raise ValueError("window must be >= 1 token")
-    positions, n_buckets = _pos_read_validated(spark, index_dir, validate_index)
+    positions, n_buckets = _pos_read_validated(spark, index_dir)
     if verify_corpus is not None and not positional_index_is_fresh(
         verify_corpus, index_dir, verify_text_col, id_col
     ):
@@ -1762,8 +1696,7 @@ def positional_append_index(
     from pyspark.errors import AnalysisException
 
     spark = new_docs.sparkSession
-    positions, n_buckets = _pos_read_validated(spark, index_dir, True)
-    stored = dict(positions.schema["tf"].metadata or {})
+    _positions, n_buckets = _pos_read_validated(spark, index_dir)
     try:
         old = spark.read.parquet(f"{index_dir}/stats").collect()[0]
     except AnalysisException as exc:
@@ -1787,7 +1720,11 @@ def positional_append_index(
     bucket = F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("bucket")
     (
         postings.select(
-            "term", id_col, F.col("tf").alias("tf", metadata=stored), "positions", bucket
+            "term",
+            id_col,
+            stamp("tf", POS_SCHEME, n_buckets=n_buckets),
+            "positions",
+            bucket,
         )
         .write.mode("append")
         .partitionBy("bucket")

@@ -26,6 +26,8 @@ from data_warehouse_punta_fina_spark.operators.freshness import (
     fingerprint_row,
     merge_fingerprints,
     rows_match,
+    stamp,
+    stored_params,
 )
 from data_warehouse_punta_fina_spark.operators.materialize import build_concurrently, materialize
 
@@ -917,20 +919,23 @@ def ivfpq_build_index(
     cb_r = spark.read.parquet(f"{index_dir}/codebook")
     cv = corpus.select(F.col(id_col), quantize(vec_col).alias("qvec"))
     cells = _assign(cv, coarse_r, id_col).select(id_col, "cid")
-    meta = {
-        "scheme": IVFPQ_SCHEME,
-        "n_cells": n_cells,
-        "m": m,
-        "n_centroids": n_centroids,
-        "iters": iters,
-        "dims": dims,
-    }
     codes = (
         _assign_sub(_subvectors(corpus, id_col, vec_col, m, dims), cb_r, id_col)
         .select(id_col, "sub", F.col("cid").alias("scid"))
         .join(cells, id_col)
         .select(
-            id_col, "sub", F.col("scid").alias("scid", metadata=meta), "cid"
+            id_col,
+            "sub",
+            stamp(
+                "scid",
+                IVFPQ_SCHEME,
+                n_cells=n_cells,
+                m=m,
+                n_centroids=n_centroids,
+                iters=iters,
+                dims=dims,
+            ),
+            "cid",
         )
     )
     codes.write.mode("overwrite").partitionBy("cid").parquet(f"{index_dir}/codes")
@@ -951,7 +956,6 @@ def ivfpq_append_index(
     index_dir: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    validate_index: bool = True,
 ) -> DataFrame:
     """Encode-only ingestion into a persisted IVF-PQ index — the
     production append path (new vectors arrive; re-training the coarse
@@ -989,15 +993,8 @@ def ivfpq_append_index(
             "ann_stream.run_ivfpq_maintenance_stream), or graduate it to the "
             "batch shape with ivfpq_compact_index first."
         )
-    stored = dict(codes0.schema["scid"].metadata or {})
-    if validate_index and stored.get("scheme") != IVFPQ_SCHEME:
-        raise ValueError(
-            "persisted codes carry no (or an incompatible) parameter fingerprint "
-            f"(stored scheme {stored.get('scheme')!r} != {IVFPQ_SCHEME!r}); encoding a "
-            "batch under mismatched parameters silently corrupts the index. Rebuild "
-            "with ivfpq_build_index, or pass validate_index=False for an index KNOWN "
-            "to match."
-        )
+    # encoding a batch under mismatched parameters silently corrupts the index
+    stored = stored_params(codes0, "scid", f"IVF-PQ index at {index_dir!r}", IVFPQ_SCHEME)
     m, dims = int(stored["m"]), int(stored["dims"])
     cv = new_vectors.select(F.col(id_col), quantize(vec_col).alias("qvec"))
     cells = _assign(cv, coarse, id_col).select(id_col, "cid")
@@ -1005,7 +1002,7 @@ def ivfpq_append_index(
         _assign_sub(_subvectors(new_vectors, id_col, vec_col, m, dims), cb, id_col)
         .select(id_col, "sub", F.col("cid").alias("scid"))
         .join(cells, id_col)
-        .select(id_col, "sub", F.col("scid").alias("scid", metadata=stored), "cid")
+        .select(id_col, "sub", stamp("scid", **stored), "cid")
     )
     codes.write.mode("append").partitionBy("cid").parquet(f"{index_dir}/codes")
     # O(batch) fingerprint maintenance: disjoint ids (the append
@@ -1038,7 +1035,6 @@ def ivfpq_compact_index(
     spark,
     src_index_dir: str,
     dst_index_dir: str,
-    validate_index: bool = True,
 ) -> None:
     """Compact an IVF-PQ index that has taken many encode-only appends —
     the vector member of the compaction triptych (round-12; see
@@ -1054,14 +1050,11 @@ def ivfpq_compact_index(
     after the swap, ``operators.index_admin.retire_index_dir`` owns
     deleting the superseded layout and its epoch history)."""
     codes = spark.read.parquet(f"{src_index_dir}/codes")
-    stored = dict(codes.schema["scid"].metadata or {})
-    if validate_index and stored.get("scheme") != IVFPQ_SCHEME:
-        raise ValueError(
-            "persisted codes carry no (or an incompatible) parameter fingerprint "
-            f"(stored scheme {stored.get('scheme')!r} != {IVFPQ_SCHEME!r}); "
-            "compacting an unverifiable index would bless a corrupt layout."
-        )
-    n_cells = int(stored.get("n_cells", 32))
+    # compacting an unverifiable index would bless a corrupt layout
+    stored = stored_params(
+        codes, "scid", f"IVF-PQ index at {src_index_dir!r}", IVFPQ_SCHEME
+    )
+    n_cells = int(stored["n_cells"])
     # a stream-maintained source carries ingest_batch partitions; the
     # compacted output drops them — the "graduation" to batch shape
     # (round-13; the bm25/positional compaction discipline)
@@ -1074,9 +1067,7 @@ def ivfpq_compact_index(
         )
     id_col = id_cols[0]
     (
-        codes.select(
-            id_col, "sub", F.col("scid").alias("scid", metadata=stored), "cid"
-        )
+        codes.select(id_col, "sub", stamp("scid", **stored), "cid")
         .repartition(n_cells, "cid")
         .write.mode("overwrite")
         .partitionBy("cid")
@@ -1159,7 +1150,6 @@ def ivfpq_search_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dims: int = 64,
-    validate_index: bool = True,
     verify_corpus: DataFrame | None = None,
 ) -> DataFrame:
     """Search a PERSISTED IVF-PQ index (:func:`ivfpq_build_index`) — no
@@ -1174,9 +1164,8 @@ def ivfpq_search_index(
     which is exactly what the oracle checks.
 
     The stored parameter fingerprint (column metadata on ``scid``) must
-    match the call's parameters; mismatches raise instead of silently
-    scoring against the wrong codebook (``validate_index=False`` skips
-    the check for indexes KNOWN to match, e.g. metadata-stripped copies).
+    match the call's parameters; a missing fingerprint or any mismatch
+    raises instead of silently scoring against the wrong codebook.
     """
     spark = queries.sparkSession
     coarse = spark.read.parquet(f"{index_dir}/centroids")
@@ -1188,33 +1177,17 @@ def ivfpq_search_index(
             f"persisted codes table is missing required columns {sorted(missing)}; "
             f"expected the ({id_col}, sub, scid, cid) layout written by ivfpq_build_index"
         )
-    stored = dict(codes.schema["scid"].metadata or {})
-    expected = {
-        "scheme": IVFPQ_SCHEME,
-        "n_cells": n_cells,
-        "m": m,
-        "n_centroids": n_centroids,
-        "iters": iters,
-        "dims": dims,
-    }
-    if validate_index and not stored:
-        raise ValueError(
-            "persisted codes carry no parameter metadata on scid — the index was not "
-            "written by this engine's ivfpq_build_index (or predates the versioned "
-            f"scheme {IVFPQ_SCHEME!r}). A codebook/parameter mismatch silently degrades "
-            "every ADC score, so unverifiable indexes are rejected by default; pass "
-            "validate_index=False only for an index KNOWN to match."
-        )
-    drift = {
-        k_: (stored[k_], v) for k_, v in expected.items() if k_ in stored and stored[k_] != v
-    }
-    if validate_index and drift:
-        raise ValueError(
-            "persisted IVF-PQ index was built under different parameters than this "
-            f"search ({ {k_: f'stored={sv} != search={bv}' for k_, (sv, bv) in drift.items()} }); "
-            "ADC scores against a mismatched codebook are silently wrong. Rebuild the "
-            "index or pass matching parameters."
-        )
+    stored_params(
+        codes,
+        "scid",
+        f"IVF-PQ index at {index_dir!r}",
+        IVFPQ_SCHEME,
+        n_cells=n_cells,
+        m=m,
+        n_centroids=n_centroids,
+        iters=iters,
+        dims=dims,
+    )
     if verify_corpus is not None and not ivfpq_index_is_fresh(
         verify_corpus, index_dir, id_col, vec_col
     ):

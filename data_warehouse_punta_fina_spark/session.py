@@ -34,7 +34,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# local[N]: SPARK_GRAFT_CPUS when set, else the CPUs this process may run on
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 # Janino class cache size: one all_queries() pass at sf0.001 compiled
 # 4,120 distinct classes, the registry_mix operations 455 (see module doc).
 CODEGEN_CACHE_ENTRIES = 8192
@@ -48,15 +49,6 @@ def get_spark(app_name: str = "punta_fina_spark", master: str | None = None) -> 
         .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # floor for AQE's post-shuffle coalescing (Spark default 1m).
-        # Compute-dense small-byte stages (quantized-vector training
-        # aggregates, token stats) are k·dims-row tables at ANY corpus
-        # size, so the floor is a scale-independent knob — overridable to
-        # probe the coalesce-vs-parallelism trade without code changes.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))

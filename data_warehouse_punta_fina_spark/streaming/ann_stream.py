@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from data_warehouse_punta_fina_spark.operators.freshness import stamp, stored_params
 from data_warehouse_punta_fina_spark.operators.similarity import ivfpq_search_index
 
 BATCH_COL = "ingest_batch"
@@ -151,21 +152,24 @@ def ivfpq_stream_init(
         pq_fit,
     )
 
-    meta = {
-        "scheme": IVFPQ_SCHEME,
-        "n_cells": n_cells,
-        "m": m,
-        "n_centroids": n_centroids,
-        "iters": iters,
-        "dims": dims,
-    }
     coarse = kmeans_fit(
         train_corpus, k=n_cells, iters=iters, id_col=id_col, vec_col=vec_col
     )
     coarse.write.mode("overwrite").parquet(f"{index_dir}/centroids")
     cb = pq_fit(train_corpus, m, n_centroids, iters, id_col, vec_col, dims)
     cb.select(
-        "sub", F.col("cid").alias("cid", metadata=meta), "cvec", "cn2"
+        "sub",
+        stamp(
+            "cid",
+            IVFPQ_SCHEME,
+            n_cells=n_cells,
+            m=m,
+            n_centroids=n_centroids,
+            iters=iters,
+            dims=dims,
+        ),
+        "cvec",
+        "cn2",
     ).write.mode("overwrite").parquet(f"{index_dir}/codebook")
 
 
@@ -226,14 +230,11 @@ def ivfpq_maintenance_batch(
     )
     coarse = spark.read.parquet(f"{index_dir}/centroids")
     cb = spark.read.parquet(f"{index_dir}/codebook")
-    stored = dict(cb.schema["cid"].metadata or {})
-    if stored.get("scheme") != IVFPQ_SCHEME:
-        raise ValueError(
-            "codebook carries no (or a foreign) parameter fingerprint "
-            f"(stored scheme {stored.get('scheme')!r} != {IVFPQ_SCHEME!r}) — "
-            "the maintained index must be initialized with ivfpq_stream_init "
-            "so batches encode under validated parameters."
-        )
+    # the maintained index must be initialized with ivfpq_stream_init so
+    # batches encode under validated parameters
+    stored = stored_params(
+        cb, "cid", f"IVF-PQ codebook at {index_dir!r}", IVFPQ_SCHEME
+    )
     m, dims = int(stored["m"]), int(stored["dims"])
 
     cv = batch.select(F.col(id_col), quantize(vec_col).alias("qvec"))
@@ -242,7 +243,7 @@ def ivfpq_maintenance_batch(
         _assign_sub(_subvectors(batch, id_col, vec_col, m, dims), cb, id_col)
         .select(id_col, "sub", F.col("cid").alias("scid"))
         .join(cells, id_col)
-        .select(id_col, "sub", F.col("scid").alias("scid", metadata=stored), "cid")
+        .select(id_col, "sub", stamp("scid", **stored), "cid")
     )
     (
         codes.withColumn(BATCH_COL, F.lit(int(batch_id)))

@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from data_warehouse_punta_fina_spark.operators.freshness import stamp
 from data_warehouse_punta_fina_spark.operators.retrieval import (
     BM25_SCHEME,
     bm25_search_index,
@@ -179,13 +180,12 @@ def bm25_maintenance_batch(
         epoch_subdirs=("dfstats_epochs", "stats_epochs"),
         batch_subdirs=("postings",),
     )
-    meta = {"scheme": BM25_SCHEME, "n_buckets": n_buckets}
     bucket = F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("bucket")
 
     postings, df_new, _dl = corpus_term_stats(batch, text_col, id_col)
     (
         postings.select(
-            "term", id_col, F.col("tf").alias("tf", metadata=meta), "dl", bucket
+            "term", id_col, stamp("tf", BM25_SCHEME, n_buckets=n_buckets), "dl", bucket
         )
         .withColumn(BATCH_COL, F.lit(int(batch_id)))
         .write.mode("overwrite")
@@ -217,7 +217,7 @@ def bm25_maintenance_batch(
     merged_df = (
         merged_df.groupBy("term")
         .agg(F.sum("df").cast("long").alias("df"))
-        .select("term", F.col("df").alias("df", metadata=meta), bucket)
+        .select("term", stamp("df", BM25_SCHEME, n_buckets=n_buckets), bucket)
     )
     merged_df.write.mode("overwrite").partitionBy("bucket").parquet(
         f"{index_dir}/dfstats_epochs/epoch={int(batch_id)}"
@@ -251,7 +251,7 @@ def bm25_maintenance_batch(
     # healed by replay re-publishing from the same epoch)
     (
         spark.read.parquet(f"{index_dir}/dfstats_epochs/epoch={int(batch_id)}")
-        .select("term", F.col("df").alias("df", metadata=meta), bucket)
+        .select("term", stamp("df", BM25_SCHEME, n_buckets=n_buckets), bucket)
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(f"{index_dir}/dfstats")

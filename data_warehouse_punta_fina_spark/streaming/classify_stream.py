@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from data_warehouse_punta_fina_spark.operators.classify import nb_score_model
+from data_warehouse_punta_fina_spark.operators.freshness import stamp
 
 BATCH_COL = "ingest_batch"
 
@@ -218,11 +219,10 @@ def nb_maintenance_batch(
     write_epoch(docs_m, f"{model_dir}/classdocs_epochs", int(batch_id))
 
     # ---- publish the nb_save_model layout LAST --------------------------
-    meta = {"scheme": NB_SCHEME, "logprob_scale": 6}
     cond_new = read_epoch(spark, f"{model_dir}/cond_epochs", int(batch_id))
     docs_new = read_epoch(spark, f"{model_dir}/classdocs_epochs", int(batch_id))
     cond_new.select(
-        "_y", "term", F.col("_c").alias("_c", metadata=meta)
+        "_y", "term", stamp("_c", NB_SCHEME, logprob_scale=6)
     ).write.mode("overwrite").parquet(f"{model_dir}/cond")
     tots = cond_new.groupBy("_y").agg(F.sum("_c").alias("_tot"))
     n_row = docs_new.agg(F.sum("_nd").alias("_n"))

@@ -109,11 +109,7 @@ def dedup_ingest_batch(
         bands=bands,
         shingle_n=shingle_n,
         threshold=threshold,
-        # metadata does not survive a schema-merged partitioned read on
-        # every Spark version; the parameters here are the single source
-        # of truth for ALL writes below, so the index always matches
         corpus_bands=stored if have_index else None,
-        validate_index=False,
     )
 
     admitted = batch.join(

@@ -139,6 +139,8 @@ def guard_stream_ownership(
     path is fine (first batch); a path whose first-level directories
     are all ``{batch_col}=`` is fine (ours); anything else raises with
     the remedy."""
+    from data_warehouse_punta_fina_spark.operators.index_admin import read_tombstone
+
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(table_path)
@@ -152,18 +154,12 @@ def guard_stream_ownership(
     for cand in (p, p.getParent()):
         if cand is None:
             continue
-        t = jvm.org.apache.hadoop.fs.Path(cand, "_RETIRED.json")
-        if fs.exists(t):
-            superseded = "<unreadable tombstone>"
-            try:
-                stream = fs.open(t)
-                raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-                stream.close()
-                import json as _json
-
-                superseded = _json.loads(raw).get("superseded_by", superseded)
-            except Exception:  # noqa: BLE001 — the refusal must not depend on parse
-                pass
+        try:
+            tomb = read_tombstone(spark, cand.toString())
+        except ValueError:  # unparseable: the refusal must not depend on parse
+            tomb = {}
+        if tomb is not None:
+            superseded = tomb.get("superseded_by", "<unreadable tombstone>")
             raise RetiredArtifactError(
                 f"artifact at {cand.toString()!r} was retired — superseded by "
                 f"{superseded!r}. A maintenance batch landing here would "

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from data_warehouse_punta_fina_spark.operators.freshness import stamp
 from data_warehouse_punta_fina_spark.operators.retrieval import (
     POS_SCHEME,
     _pos_postings,
@@ -82,12 +83,15 @@ def positional_ingest_batch(
         int(batch_id),
         batch_subdirs=("positions",),
     )
-    meta = {"scheme": POS_SCHEME, "n_buckets": n_buckets}
     postings = _pos_postings(batch, text_col, id_col)
     bucket = F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("bucket")
     (
         postings.select(
-            "term", id_col, F.col("tf").alias("tf", metadata=meta), "positions", bucket
+            "term",
+            id_col,
+            stamp("tf", POS_SCHEME, n_buckets=n_buckets),
+            "positions",
+            bucket,
         )
         .withColumn(BATCH_COL, F.lit(int(batch_id)))
         .write.mode("overwrite")

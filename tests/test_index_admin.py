@@ -116,6 +116,18 @@ def test_retire_refusals(spark, tmp_path):
     bm25_build_index(_docs(spark, 0, 30), d, n_buckets=4)
     with pytest.raises(ValueError, match="itself retired"):
         retire_index_dir(spark, d, a, "bm25", min_age_seconds=0)
+    # a tombstone that does not parse still retires the directory: a
+    # maintenance batch must refuse it, not re-bootstrap a fork there
+    from data_warehouse_punta_fina_spark.streaming.epochs import (
+        RetiredArtifactError,
+        guard_stream_ownership,
+    )
+
+    garbled = tmp_path / "garbled"
+    garbled.mkdir()
+    (garbled / "_RETIRED.json").write_text("{not json")
+    with pytest.raises(RetiredArtifactError, match="<unreadable tombstone>"):
+        guard_stream_ownership(spark, str(garbled / "postings"))
 
 
 def test_retire_ivfpq_maintained_lifecycle(spark, sf_dir, tmp_path):
@@ -194,9 +206,7 @@ def test_retire_positional_stream_doc_count_crosscheck(spark, tmp_path):
 
     # wrong-corpus dst refuses on the doc-count fallback
     wrong = str(tmp_path / "pos_wrong")
-    positional_compact_index(
-        spark, src, wrong, corpus=None, validate_index=True
-    )
+    positional_compact_index(spark, src, wrong, corpus=None)
     # drop a doc from 'wrong' by rebuilding from a smaller stream
     smaller = str(tmp_path / "pos_smaller_stream")
     positional_ingest_batch(docs.filter(F.col("doc_id") < 10), 0, smaller, n_buckets=4)

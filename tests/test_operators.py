@@ -1225,24 +1225,29 @@ def test_incremental_lsh_dedup_rejects_mismatched_index(spark, tmp_path):
     assert dict(stored.schema["band_key"].metadata) == {
         "scheme": MINHASH_SCHEME, "num_hashes": 8, "bands": 2, "shingle_n": 3,
     }
-    with pytest.raises(ValueError, match="different hash scheme or LSH parameters"):
+    with pytest.raises(ValueError, match="different parameters.*num_hashes: stored 8 != expected 12"):
         incremental_lsh_dedup(corpus, new, num_hashes=12, bands=4, corpus_bands=stored)
     # missing layout columns are rejected up front, not at join time
     with pytest.raises(ValueError, match="missing required columns"):
         incremental_lsh_dedup(corpus, new, corpus_bands=stored.drop("band_key"))
     # an index WITHOUT metadata (foreign writer / pre-versioning) is
-    # unverifiable → rejected by default, accepted only with the explicit
-    # validate_index=False opt-out
+    # unverifiable → rejected
     bare = stored.select(
         "doc_id", "band", F.col("band_key").alias("band_key", metadata={})
     )
     assert dict(bare.schema["band_key"].metadata) == {}
     with pytest.raises(ValueError, match="no parameter metadata"):
         incremental_lsh_dedup(corpus, new, num_hashes=8, bands=2, corpus_bands=bare)
-    got = {r["doc_id"]: r["is_dup"] for r in incremental_lsh_dedup(
-        corpus, new, num_hashes=8, bands=2, corpus_bands=bare, validate_index=False
-    ).collect()}
-    assert got[1] is True
+    # a stamp that lacks a parameter cannot vouch for it
+    partial = stored.select(
+        "doc_id",
+        "band",
+        F.col("band_key").alias(
+            "band_key", metadata={"scheme": MINHASH_SCHEME, "num_hashes": 8, "shingle_n": 3}
+        ),
+    )
+    with pytest.raises(ValueError, match="bands: stored <missing> != expected 2"):
+        incremental_lsh_dedup(corpus, new, num_hashes=8, bands=2, corpus_bands=partial)
 
 
 def test_tfidf_doc_pairs_cosine_semantics(spark):

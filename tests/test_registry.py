@@ -191,3 +191,45 @@ def test_materialize_is_the_only_checkpoint_site():
     assert checked > 50
     assert not calls, f"materialize outside operators/materialize.py: {calls}"
     assert not params, f"durable *_path options are back: {params}"
+
+
+def test_freshness_is_the_only_parameter_metadata_site():
+    """operators/freshness.py is the one module that knows how a
+    persisted index or model records its build parameters: no other
+    module reads ``.metadata`` off a schema field or passes ``metadata=``
+    to a call, and no function takes a ``validate_index``/
+    ``validate_model`` switch, nor ``bm25_search_index`` an ``n_buckets``
+    override, that would let a reader skip the check."""
+    pkg = os.path.join(REPO, "data_warehouse_punta_fina_spark")
+    seam = os.path.join("operators", "freshness.py")
+    sites, params, checked = [], [], 0
+    for root, _dirs, files in os.walk(pkg):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            checked += 1
+            rel = os.path.relpath(os.path.join(root, fname), pkg)
+            tree = ast.parse(open(os.path.join(root, fname), encoding="utf-8").read())
+            for node in ast.walk(tree):
+                if rel != seam and (
+                    (
+                        isinstance(node, ast.Attribute)
+                        and node.attr == "metadata"
+                        and isinstance(node.value, ast.Subscript)
+                    )
+                    or (
+                        isinstance(node, ast.Call)
+                        and any(kw.arg == "metadata" for kw in node.keywords)
+                    )
+                ):
+                    sites.append(f"{rel}:{node.lineno}")
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    a = node.args
+                    names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                    opt_outs = names & {"validate_index", "validate_model"}
+                    if node.name == "bm25_search_index" and "n_buckets" in names:
+                        opt_outs.add("n_buckets")
+                    params += [f"{rel}:{node.name}({n})" for n in sorted(opt_outs)]
+    assert checked > 50
+    assert not sites, f"column metadata handled outside operators/freshness.py: {sites}"
+    assert not params, f"parameter-check opt-outs are back: {params}"

@@ -163,8 +163,8 @@ def test_bm25_persisted_index_equals_inquery_and_prunes(spark, tmp_path):
     hp = sorted(map(tuple, df_h.collect()))
     assert hp == sorted(map(tuple, qs["doc_hybrid_rrf_search_pq"](spark, SF).collect()))
 
-    # scheme validation: an index whose tf column lost its metadata is
-    # rejected by default, accepted only with validate_index=False
+    # parameter validation: an index whose tf column lost its metadata
+    # is rejected
     idx = str(tmp_path / "bm25_stripped")
     docs = spark.createDataFrame(
         [(1, "spark sql engine"), (2, "duck db oracle"), (3, "spark shuffle")],
@@ -182,14 +182,8 @@ def test_bm25_persisted_index_equals_inquery_and_prunes(spark, tmp_path):
         else:
             sub.write.parquet(f"{stripped}/{part}")
     qt = spark.createDataFrame([(9, "spark")], "query_id int, term string")
-    with pytest.raises(ValueError, match="scheme"):
+    with pytest.raises(ValueError, match="no parameter metadata"):
         bm25_search_index(qt, stripped, k=2)
-    # the metadata-stripped escape hatch must not GUESS the modulus
-    # (ADVICE r10): the caller passes the build-time value explicitly
-    rows = bm25_search_index(
-        qt, stripped, k=2, validate_index=False, n_buckets=4
-    ).collect()
-    assert {r["doc_id"] for r in rows} == {1, 3}
 
 
 def test_bm25_append_index_equals_full_rebuild(spark, tmp_path):
@@ -235,7 +229,7 @@ def test_bm25_append_index_equals_full_rebuild(spark, tmp_path):
     src.select(
         "term", "doc_id", F.col("tf").alias("tf", metadata={}), "dl", "bucket"
     ).write.partitionBy("bucket").parquet(f"{stripped}/postings")
-    with pytest.raises(ValueError, match="scheme"):
+    with pytest.raises(ValueError, match="no parameter metadata"):
         bm25_append_index(docs.limit(1), stripped)
 
 

@@ -80,47 +80,6 @@ def test_bm25_prf_persisted_equals_inquery_and_reads_no_corpus(spark):
     assert plan.count("documents.parquet") == 0
 
 
-def test_bm25_search_index_infers_n_buckets_when_stripped(spark, tmp_path):
-    """ADVICE r10: a metadata-stripped index must not silently guess 16
-    buckets — with no explicit n_buckets the modulus is inferred from
-    the stored partition values (max bucket + 1), so a stripped 8-bucket
-    index over a real vocabulary searches identically to the intact
-    one."""
-    from data_warehouse_punta_fina_spark.functions.text import tokens as _tokens
-    from data_warehouse_punta_fina_spark.operators.retrieval import (
-        bm25_build_index,
-        bm25_search_index,
-    )
-    from data_warehouse_punta_fina_spark.sources.readers import load_table
-
-    docs = load_table(spark, SF, "documents").filter(F.col("doc_id") < 200)
-    idx = str(tmp_path / "intact")
-    bm25_build_index(docs, idx, n_buckets=8)
-    stripped = str(tmp_path / "stripped")
-    for part in ("postings", "dfstats", "stats"):
-        sub = spark.read.parquet(f"{idx}/{part}")
-        if part == "postings":
-            sub = sub.select(
-                "term", "doc_id", F.col("tf").alias("tf", metadata={}), "dl", "bucket"
-            )
-            sub.write.partitionBy("bucket").parquet(f"{stripped}/{part}")
-        else:
-            sub.write.parquet(f"{stripped}/{part}")
-    qt = (
-        docs.filter(F.col("doc_id").isin([1, 2]))
-        .select(
-            F.col("doc_id").alias("query_id"),
-            F.explode(_tokens(F.col("text"))).alias("term"),
-        )
-        .distinct()
-    )
-    a = sorted(map(tuple, bm25_search_index(qt, idx, k=5).collect()))
-    b = sorted(
-        map(tuple, bm25_search_index(qt, stripped, k=5, validate_index=False).collect())
-    )
-    assert a == b and len(a) == 10
-
-
 def test_bm25_prune_buckets_miss_fails_loudly(spark, tmp_path):
     """ADVICE r10: a prune_buckets list that misses a query term's
     bucket must raise at runtime instead of silently deleting that

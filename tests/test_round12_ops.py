@@ -65,11 +65,14 @@ def test_positional_array_layout_row_count_and_delta_encoding(spark, tmp_path):
 
 def test_positional_v1_layout_rejected(spark, tmp_path):
     """A v1 row-per-token index (or any foreign layout) is rejected at
-    search time — a layout mismatch would silently break adjacency."""
+    search time — a layout mismatch would silently break adjacency. So
+    is a v2 index whose ``tf`` lost its metadata or carries another
+    scheme."""
     import pytest
 
     from data_warehouse_punta_fina_spark.operators.retrieval import (
         phrase_search_index,
+        positional_build_index,
         proximity_search_index,
     )
 
@@ -80,10 +83,27 @@ def test_positional_v1_layout_rejected(spark, tmp_path):
     )
     idx = str(tmp_path / "v1")
     v1.write.partitionBy("bucket").parquet(f"{idx}/positions")
-    with pytest.raises(ValueError, match="scheme"):
+    with pytest.raises(ValueError, match="no parameter metadata"):
         phrase_search_index(spark, idx, "alpha beta")
-    with pytest.raises(ValueError, match="scheme"):
+    with pytest.raises(ValueError, match="no parameter metadata"):
         proximity_search_index(spark, idx, "alpha", "beta")
+
+    v2 = str(tmp_path / "v2")
+    positional_build_index(
+        spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string"),
+        v2,
+        n_buckets=4,
+    )
+    for name, md in (("stripped", {}), ("foreign", {"scheme": "pos-tokenv1", "n_buckets": 4})):
+        spark.read.parquet(f"{v2}/positions").select(
+            "term", "doc_id", F.col("tf").alias("tf", metadata=md), "positions", "bucket"
+        ).write.partitionBy("bucket").parquet(f"{tmp_path}/{name}/positions")
+    with pytest.raises(ValueError, match="no parameter metadata"):
+        phrase_search_index(spark, f"{tmp_path}/stripped", "alpha beta")
+    with pytest.raises(
+        ValueError, match="different parameters.*scheme: stored 'pos-tokenv1'"
+    ):
+        phrase_search_index(spark, f"{tmp_path}/foreign", "alpha beta")
 
 
 def test_phrase_slop_search_semantics_and_slop0_identity(spark, tmp_path):
@@ -707,5 +727,5 @@ def test_ivfpq_compact_index_bit_equal_and_one_file_per_cell(spark, tmp_path):
     spark.read.parquet(f"{src}/codes").select(
         "vec_id", "sub", F.col("scid").alias("scid", metadata={}), "cid"
     ).write.partitionBy("cid").parquet(f"{stripped}/codes")
-    with pytest.raises(ValueError, match="scheme"):
+    with pytest.raises(ValueError, match="no parameter metadata"):
         ivfpq_compact_index(spark, stripped, str(tmp_path / "never"))

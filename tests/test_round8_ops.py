@@ -230,7 +230,7 @@ def test_ivfpq_append_is_encode_only_and_validated(spark, tmp_path):
     ).write.parquet(f"{stripped}/codes")
     spark.read.parquet(f"{idx}/centroids").write.parquet(f"{stripped}/centroids")
     spark.read.parquet(f"{idx}/codebook").write.parquet(f"{stripped}/codebook")
-    with pytest.raises(ValueError, match="parameter fingerprint"):
+    with pytest.raises(ValueError, match="no parameter metadata"):
         ivfpq_append_index(batch, stripped)
 
 
@@ -724,8 +724,15 @@ def test_nb_persisted_model_scores_without_training(spark, tmp_path):
     ).write.parquet(f"{stripped}/cond")
     spark.read.parquet(f"{mdl}/classes").write.parquet(f"{stripped}/classes")
     spark.read.parquet(f"{mdl}/consts").write.parquet(f"{stripped}/consts")
-    with pytest.raises(ValueError, match="scheme"):
+    with pytest.raises(ValueError, match="no parameter metadata"):
         nb_score_model(test, stripped)
+    # a model stamped under another scheme is drift, not a missing stamp
+    foreign = str(tmp_path / "foreign")
+    spark.read.parquet(f"{mdl}/cond").select(
+        "_y", "term", F.col("_c").alias("_c", metadata={"scheme": "nb-v0"})
+    ).write.parquet(f"{foreign}/cond")
+    with pytest.raises(ValueError, match="different parameters.*scheme: stored 'nb-v0'"):
+        nb_score_model(test, foreign)
 
 
 def test_uncertainty_sample_uses_takeordered(spark):

@@ -1,6 +1,33 @@
-"""The engine session keeps a repeated query's generated code compiled."""
+"""The engine session keeps a repeated query's generated code compiled,
+and sizes ``local[N]`` to the host when ``SPARK_GRAFT_CPUS`` is unset."""
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_default_cpus_follow_the_process_affinity():
+    """Without ``SPARK_GRAFT_CPUS`` the session runs one task slot per CPU
+    this process may use, not a fixed count."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "from data_warehouse_punta_fina_spark import session; "
+            "print(session.DEFAULT_CPUS)",
+        ],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.strip()
+    assert out == str(len(os.sched_getaffinity(0)))
 
 
 def _compile_count(spark) -> int:

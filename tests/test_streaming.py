@@ -525,6 +525,53 @@ def test_continuous_dedup_ingest_stream(spark, tmp_path):
     } == admitted_ids
 
 
+def test_dedup_ingest_batch_rejects_unstamped_band_index(spark, tmp_path):
+    """The stream's persisted band index is checked like any other: a
+    partitioned band table written by ``minhash_band_keys`` keeps its
+    parameter metadata through the ``ingest_batch`` partitioning and is
+    accepted, while one whose ``band_key`` carries no metadata is
+    rejected instead of screening the batch with band keys of unknown
+    parameters."""
+    import pytest
+
+    from data_warehouse_punta_fina_spark.operators.dedup import minhash_band_keys
+    from data_warehouse_punta_fina_spark.streaming.dedup_stream import (
+        BATCH_COL,
+        dedup_ingest_batch,
+    )
+
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    corpus = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    batch = spark.createDataFrame([(2, text)], "doc_id long, text string")
+    for name, strip in (("stamped", False), ("unstamped", True)):
+        root = tmp_path / name
+        corpus.withColumn(BATCH_COL, F.lit(0)).write.partitionBy(BATCH_COL).parquet(
+            str(root / "admitted")
+        )
+        bands = minhash_band_keys(corpus)
+        if strip:
+            bands = bands.select(
+                "doc_id", "band", F.col("band_key").alias("band_key", metadata={})
+            )
+        bands.withColumn(BATCH_COL, F.lit(0)).write.partitionBy(BATCH_COL).parquet(
+            str(root / "index")
+        )
+        paths = {
+            "admitted_path": str(root / "admitted"),
+            "index_path": str(root / "index"),
+            "verdicts_path": str(root / "verdicts"),
+        }
+        if strip:
+            with pytest.raises(ValueError, match="no parameter metadata"):
+                dedup_ingest_batch(batch, 1, **paths)
+        else:
+            dedup_ingest_batch(batch, 1, **paths)
+            verdict = spark.read.parquet(paths["verdicts_path"]).collect()
+            assert [(r["doc_id"], r["is_dup"], r["match_id"]) for r in verdict] == [
+                (2, True, 1)
+            ]
+
+
 def test_python_streaming_datasource_drains_and_matches_batch(spark, tmp_path):
     """The custom source's streaming reader drains availableNow in
     batch_size micro-batches and produces EXACTLY the batch reader's
