@@ -29,7 +29,7 @@ sum would be nondeterministic across reruns — and ties break on doc_id.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround
@@ -82,6 +82,27 @@ def corpus_term_stats(
     return postings, df_stats, dl
 
 
+def query_terms(spark: SparkSession, queries: list[tuple[int, str]]) -> DataFrame:
+    """(query_id int, term string) rows of a literal list of
+    (query_id, query_text). Terms are normalized with the SAME rule as
+    corpus tokens (lowercase, ``functions.text.TOKEN_SPLIT_RE`` splits —
+    single source of truth, so a corpus-tokenizer change can never
+    silently desynchronize the query side) so "Spark-SQL!" finds 'spark'
+    and 'sql'. Repeated terms of one query count once (standard
+    bag-of-documents BM25 ignores query-side tf at these query lengths)."""
+    import re
+
+    from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
+
+    qrows = [
+        (qid, t)
+        for qid, qtext in queries
+        # dedupe, keep order; mirror functions.text.tokens exactly
+        for t in dict.fromkeys(w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w)
+    ]
+    return spark.createDataFrame(qrows, "query_id int, term string")
+
+
 def bm25_topk(
     docs: DataFrame,
     queries: list[tuple[int, str]],
@@ -91,29 +112,13 @@ def bm25_topk(
 ) -> DataFrame:
     """Top-``k`` documents per query under Okapi BM25.
 
-    ``queries`` is a literal list of (query_id, query_text); query terms
-    are normalized with the SAME rule as corpus tokens (lowercase,
-    ``functions.text.TOKEN_SPLIT_RE`` splits — single source of truth, so
-    a corpus-tokenizer change can never silently desynchronize the query
-    side) so "Spark-SQL!" finds 'spark' and 'sql'. Repeated query terms
-    count once (standard bag-of-documents BM25 ignores query-side tf at
-    these query lengths). Output: (query_id, doc_id, score, rank), rank
-    1..k, score rounded to 6 (portable), ties broken by doc_id ascending.
+    ``queries`` is a literal list of (query_id, query_text), turned into
+    terms by :func:`query_terms`. Output: (query_id, doc_id, score,
+    rank), rank 1..k, score rounded to 6 (portable), ties broken by
+    doc_id ascending.
     """
-    import re
-
-    from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
-
-    spark = docs.sparkSession
     postings, df_stats, dl = corpus_term_stats(docs, text_col, id_col)
-
-    qrows = [
-        (qid, t)
-        for qid, qtext in queries
-        # dedupe, keep order; mirror functions.text.tokens exactly
-        for t in dict.fromkeys(w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w)
-    ]
-    qdf = spark.createDataFrame(qrows, "query_id int, term string")
+    qdf = query_terms(docs.sparkSession, queries)
     return _bm25_rank(docs, qdf, k, id_col, postings, df_stats, dl)
 
 
@@ -222,18 +227,8 @@ def bm25_prf_topk(
     result against the postings, so expansion is feedback-set-bounded.
     Deterministic: first-pass ties by ``id_col``, term picks tie by
     term ascending — mirrored exactly by the unrolled oracle."""
-    import re
-
-    from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
-
-    spark = docs.sparkSession
     postings, df_stats, dl = corpus_term_stats(docs, text_col, id_col)
-    qrows = [
-        (qid, t)
-        for qid, qtext in queries
-        for t in dict.fromkeys(w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w)
-    ]
-    qdf = spark.createDataFrame(qrows, "query_id int, term string")
+    qdf = query_terms(docs.sparkSession, queries)
     first = _bm25_rank(docs, qdf, fb_docs, id_col, postings, df_stats, dl)
     fb = (
         postings.join(F.broadcast(first.select("query_id", id_col)), id_col)
@@ -348,7 +343,7 @@ def _bm25_append_plans(
             f"BM25 index at {index_dir!r} is stream-maintained (postings are "
             "partitioned by ingest_batch) — batch appends would corrupt its "
             "layout; keep feeding the maintenance stream "
-            "(streaming/bm25_stream.run_bm25_maintenance_stream), or rebuild "
+            "(streaming/bm25_stream.bm25_maintenance_batch), or rebuild "
             "a batch-shaped index with bm25_build_index."
         )
     old = spark.read.parquet(f"{index_dir}/stats").collect()[0]

@@ -990,7 +990,7 @@ def ivfpq_append_index(
             f"IVF-PQ index at {index_dir!r} is stream-maintained (codes are "
             "partitioned by ingest_batch) — batch appends would corrupt its "
             "layout; keep feeding the maintenance stream (streaming/"
-            "ann_stream.run_ivfpq_maintenance_stream), or graduate it to the "
+            "ann_stream.ivfpq_maintenance_batch), or graduate it to the "
             "batch shape with ivfpq_compact_index first."
         )
     # encoding a batch under mismatched parameters silently corrupts the index

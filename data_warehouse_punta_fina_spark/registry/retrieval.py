@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE as _TSR
 from data_warehouse_punta_fina_spark.operators.materialize import build_concurrently, materialize
+from data_warehouse_punta_fina_spark.operators.retrieval import query_terms
 from data_warehouse_punta_fina_spark.operators.similarity import brute_force_topk
 from data_warehouse_punta_fina_spark.registry.shared import (
     _QUANT_VEC,
@@ -20,6 +21,7 @@ from data_warehouse_punta_fina_spark.registry.shared import (
     _index_cache_dir,
     _ivfpq_topk_sql,
     _kmeans_cells_sql,
+    _maintained_drain,
     _prefix_ctes,
     _r6,
     query,
@@ -40,10 +42,31 @@ _BM25_QUERIES: list[tuple[int, str]] = [
 _BM25_Q = " UNION ALL ".join(
     f"SELECT {qid} AS query_id, '{t}' AS term"
     for qid, qtext in _BM25_QUERIES
-    # mirror operators.retrieval.bm25_topk's query normalization via the
+    # mirror operators.retrieval.query_terms' normalization via the
     # SAME shared regex (single source of truth with the corpus tokenizer)
     for t in dict.fromkeys(w for w in _re.split(_TSR, qtext.lower()) if w)
 )
+
+
+def _bm25_queries(spark: SparkSession) -> tuple[DataFrame, list[int]]:
+    """The fixed query set as (query_id, term) rows, and the sorted
+    16-bucket index partitions its terms hash to. Driver-known literal
+    queries get a STATIC bucket filter (DPP needs a selective predicate
+    the LocalRelation lacks); the collect is metadata-sized (≤ n_buckets
+    ints from ~40 literal terms — the index-router lookup every search
+    engine does)."""
+    qdf = query_terms(spark, _BM25_QUERIES)
+    buckets = sorted(
+        r["b"]
+        for r in qdf.select(
+            F.pmod(F.xxhash64("term"), F.lit(16)).cast("int").alias("b")
+        )
+        .distinct()
+        .collect()
+    )
+    return qdf, buckets
+
+
 _BM25_S = (
     "(idf * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)))"
 )
@@ -525,30 +548,12 @@ def doc_bm25_prf_search_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
     # doc_bm25_prf_search, so its unrolled two-pass oracle is
     # reused verbatim. Pass 1 gets the seed terms' static bucket
     # filter (same index-router collect as doc_bm25_persisted_topk).
-    import re
-
-    from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
     from data_warehouse_punta_fina_spark.operators.retrieval import (
         bm25_prf_search_index,
     )
 
     idx = _bm25_index_dir(spark, sf_dir)
-    qrows = [
-        (qid, t)
-        for qid, qtext in _BM25_QUERIES
-        for t in dict.fromkeys(
-            w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-        )
-    ]
-    qdf = spark.createDataFrame(qrows, "query_id int, term string")
-    buckets = sorted(
-        r["b"]
-        for r in qdf.select(
-            F.pmod(F.xxhash64("term"), F.lit(16)).cast("int").alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+    qdf, buckets = _bm25_queries(spark)
     return bm25_prf_search_index(
         qdf, idx, k=5, fb_docs=3, fb_terms=5, prune_buckets=buckets
     )
@@ -588,34 +593,12 @@ def doc_bm25_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # terms' buckets. Deterministic scoring means the stored-index
     # search is bit-equal to in-query tokenization — the oracle is
     # doc_bm25_topk's SQL verbatim.
-    import re
-
-    from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
     from data_warehouse_punta_fina_spark.operators.retrieval import (
         bm25_search_index,
     )
 
     idx = _bm25_index_dir(spark, sf_dir)
-    qrows = [
-        (qid, t)
-        for qid, qtext in _BM25_QUERIES
-        for t in dict.fromkeys(
-            w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-        )
-    ]
-    qdf = spark.createDataFrame(qrows, "query_id int, term string")
-    # driver-known literal queries get a STATIC bucket filter (DPP
-    # needs a selective predicate the LocalRelation lacks); the
-    # collect is metadata-sized (≤ n_buckets ints from ~40 literal
-    # terms — the index-router lookup every search engine does)
-    buckets = sorted(
-        r["b"]
-        for r in qdf.select(
-            F.pmod(F.xxhash64("term"), F.lit(16)).cast("int").alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+    qdf, buckets = _bm25_queries(spark)
     return bm25_search_index(qdf, idx, k=5, prune_buckets=buckets)
 
 
@@ -630,9 +613,7 @@ def doc_bm25_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly, so appended == full rebuild and doc_bm25_topk's
     # oracle is reused verbatim.
     import os
-    import re
 
-    from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
     from data_warehouse_punta_fina_spark.operators.dedup import _spread
     from data_warehouse_punta_fina_spark.operators.retrieval import (
         bm25_append_index,
@@ -648,22 +629,7 @@ def doc_bm25_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25_append_index(docs.filter(F.col("doc_id") % 2 == 1), idx)
         with open(os.path.join(idx, "_APPENDED"), "w") as fh:
             fh.write("ok")
-    qrows = [
-        (qid, t)
-        for qid, qtext in _BM25_QUERIES
-        for t in dict.fromkeys(
-            w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-        )
-    ]
-    qdf = spark.createDataFrame(qrows, "query_id int, term string")
-    buckets = sorted(
-        r["b"]
-        for r in qdf.select(
-            F.pmod(F.xxhash64("term"), F.lit(16)).cast("int").alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+    qdf, buckets = _bm25_queries(spark)
     return bm25_search_index(qdf, idx, k=5, prune_buckets=buckets)
 
 
@@ -677,77 +643,29 @@ def doc_bm25_maintained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Structured Streaming query whose every micro-batch lands in
     # the index via the O(batch ∪ vocab) append algebra under
     # EPOCHED global state (streaming/bm25_stream.
-    # run_bm25_maintenance_stream: a replayed batch re-derives
+    # bm25_maintenance_batch: a replayed batch re-derives
     # df/N/total_dl/fingerprint from the epoch below it — bit-equal,
     # never double-merged). df/N/total_dl merge exactly over the
     # disjoint batches, so searching the maintained index is
     # bit-equal to one monolithic build — doc_bm25_topk's oracle is
     # reused verbatim.
-    import os
-    import re
+    from functools import partial
 
-    from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
-    from data_warehouse_punta_fina_spark.operators.dedup import _spread
     from data_warehouse_punta_fina_spark.operators.retrieval import (
         bm25_search_index,
     )
     from data_warehouse_punta_fina_spark.streaming.bm25_stream import (
-        run_bm25_maintenance_stream,
+        bm25_maintenance_batch,
     )
 
     fp = _data_fingerprint(sf_dir, "documents")
     idx = _index_cache_dir("bm25_maint", f"b16_{fp}")
-    if not os.path.exists(os.path.join(idx, "_MAINTAINED")):
-        # clean slate: a PARTIAL prior attempt leaves a checkpoint
-        # whose offsets reference source files the overwrite below
-        # replaces (new part-file names) — resuming would re-ingest
-        # and corrupt the index, so rebuild from scratch instead
-        import shutil
-
-        for sub in os.listdir(idx) if os.path.isdir(idx) else []:
-            shutil.rmtree(os.path.join(idx, sub), ignore_errors=True)
-        docs = _spread(load_table(spark, sf_dir, "documents"))
-        src = os.path.join(idx, "_source")
-        # two files -> two micro-batches (maxFilesPerTrigger=1)
-        docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(src)
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q = run_bm25_maintenance_stream(
-            spark,
-            src,
-            spark.read.parquet(src).schema,
-            checkpoint_dir=os.path.join(idx, "_ckpt"),
-            index_dir=idx,
-            n_buckets=16,
-        )
-        # the marker must only exist for a FULLY drained stream — a
-        # timed-out drain would cache a partial index as complete
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "bm25 maintenance drain did not finish within 300s"
-            )
-        with open(os.path.join(idx, "_MAINTAINED"), "w") as fh:
-            fh.write("ok")
-    qrows = [
-        (qid, t)
-        for qid, qtext in _BM25_QUERIES
-        for t in dict.fromkeys(
-            w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-        )
-    ]
-    qdf = spark.createDataFrame(qrows, "query_id int, term string")
-    buckets = sorted(
-        r["b"]
-        for r in qdf.select(
-            F.pmod(F.xxhash64("term"), F.lit(16)).cast("int").alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    with _maintained_drain(
+        idx, docs, "doc_id", partial(bm25_maintenance_batch, index_dir=idx, n_buckets=16)
+    ):
+        pass  # no state to lay before the drain
+    qdf, buckets = _bm25_queries(spark)
     return bm25_search_index(qdf, idx, k=5, prune_buckets=buckets)
 
 
@@ -769,9 +687,7 @@ def doc_bm25_compacted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-equal to a monolithic build — doc_bm25_topk's oracle is
     # reused verbatim (the doc_bm25_incremental_topk discipline).
     import os
-    import re
 
-    from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
     from data_warehouse_punta_fina_spark.operators.dedup import _spread
     from data_warehouse_punta_fina_spark.operators.retrieval import (
         bm25_append_index,
@@ -791,22 +707,7 @@ def doc_bm25_compacted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25_compact_index(spark, src, idx)
         with open(os.path.join(root, "_COMPACTED"), "w") as fh:
             fh.write("ok")
-    qrows = [
-        (qid, t)
-        for qid, qtext in _BM25_QUERIES
-        for t in dict.fromkeys(
-            w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-        )
-    ]
-    qdf = spark.createDataFrame(qrows, "query_id int, term string")
-    buckets = sorted(
-        r["b"]
-        for r in qdf.select(
-            F.pmod(F.xxhash64("term"), F.lit(16)).cast("int").alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+    qdf, buckets = _bm25_queries(spark)
     return bm25_search_index(qdf, idx, k=5, prune_buckets=buckets)
 
 
@@ -829,9 +730,7 @@ def doc_bm25_federated_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # federation pays a per-shard-training recall penalty; the
     # lexical one provably cannot.
     import os
-    import re
 
-    from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
     from data_warehouse_punta_fina_spark.operators.dedup import _spread
     from data_warehouse_punta_fina_spark.operators.retrieval import (
         bm25_build_index,
@@ -848,22 +747,7 @@ def doc_bm25_federated_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 docs.filter(F.col("doc_id") % 2 == i), idx, n_buckets=16
             )
         shards.append(idx)
-    qrows = [
-        (qid, t)
-        for qid, qtext in _BM25_QUERIES
-        for t in dict.fromkeys(
-            w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-        )
-    ]
-    qdf = spark.createDataFrame(qrows, "query_id int, term string")
-    buckets = sorted(
-        r["b"]
-        for r in qdf.select(
-            F.pmod(F.xxhash64("term"), F.lit(16)).cast("int").alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+    qdf, buckets = _bm25_queries(spark)
     return bm25_federated_search(qdf, shards, k=5, prune_buckets=buckets)
 
 
@@ -946,9 +830,6 @@ def doc_retrieval_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # production qrels are tiny human-judgment inputs and the
     # evaluation is one candidate-bounded join + one qrels-sized
     # window — nothing corpus-sized beyond the ranking under test.
-    import re
-
-    from data_warehouse_punta_fina_spark.functions.text import TOKEN_SPLIT_RE
     from data_warehouse_punta_fina_spark.operators.dedup import _spread
     from data_warehouse_punta_fina_spark.operators.evaluation import (
         retrieval_rank_metrics,
@@ -970,14 +851,7 @@ def doc_retrieval_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings = materialize(postings)
     df_stats = postings.groupBy("term").agg(F.count("*").alias("df"))
     dl = postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-    qrows = [
-        (qid, t)
-        for qid, qtext in _BM25_QUERIES
-        for t in dict.fromkeys(
-            w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w
-        )
-    ]
-    qdf = spark.createDataFrame(qrows, "query_id int, term string")
+    qdf = query_terms(spark, _BM25_QUERIES)
     # the ranking under test is corpus-sized work but its OUTPUT is
     # queries x k rows — materialize so the metric branches never
     # re-run the BM25 scan (plan-audit finding r11)

@@ -1,14 +1,17 @@
 """How a registry query is declared, plus the helpers two or more families
 share: the portable-rounding SQL renderers, the token/shingle/MinHash SQL,
 the k-means/PQ SQL generators, the text-quality SQL expressions and the
-persisted-index cache slots."""
+persisted-index cache slots, and the one build path of the artifacts a
+maintenance stream lays."""
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 class Declared(NamedTuple):
@@ -134,6 +137,53 @@ def _index_cache_dir(family: str, key: str, keep: int = 4) -> str:
                 if now - _mtime(os.path.join(fam_dir, entry)) > 3600.0:
                     shutil.rmtree(os.path.join(fam_dir, entry), ignore_errors=True)
     return target
+
+
+@contextmanager
+def _maintained_drain(
+    art_dir: str,
+    rows: DataFrame,
+    id_col: str,
+    process: Callable[[DataFrame, int], None],
+) -> Iterator[bool]:
+    """Build the stream-maintained artifact in ``art_dir`` once, through a
+    real availableNow drain of ``process`` (a per-batch maintenance
+    function). Yields False when the ``_MAINTAINED`` marker shows a
+    finished build. Otherwise it empties ``art_dir`` first — a partial
+    prior attempt leaves a checkpoint whose offsets name source files the
+    staging below replaces, so resuming it would re-ingest and corrupt the
+    artifact — and yields True, so the block can lay any state the drain
+    needs. On leaving the block it stages the even and odd ``id_col``
+    halves of ``rows`` as two files under ``_source`` (two micro-batches
+    at maxFilesPerTrigger=1), drains them, and writes the marker only
+    after the drain finished: a timed-out drain raises and never caches a
+    partial artifact as complete."""
+    import os
+    import shutil
+
+    from data_warehouse_punta_fina_spark.streaming.file_stream import (
+        drain,
+        read_file_stream,
+    )
+
+    marker = os.path.join(art_dir, "_MAINTAINED")
+    if os.path.exists(marker):
+        yield False
+        return
+    for sub in os.listdir(art_dir) if os.path.isdir(art_dir) else []:
+        shutil.rmtree(os.path.join(art_dir, sub), ignore_errors=True)
+    yield True
+    src = os.path.join(art_dir, "_source")
+    half = F.col(id_col) % 2
+    rows.filter(half == 0).coalesce(1).write.mode("overwrite").parquet(src)
+    rows.filter(half == 1).coalesce(1).write.mode("append").parquet(src)
+    stream = read_file_stream(rows.sparkSession, src, rows.schema, max_files_per_trigger=1)
+    q = drain(stream, os.path.join(art_dir, "_ckpt"), process)
+    if not q.awaitTermination(300):
+        q.stop()
+        raise RuntimeError(f"maintenance drain into {art_dir!r} did not finish within 300s")
+    with open(marker, "w") as fh:
+        fh.write("ok")
 
 
 _TOKENS = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"

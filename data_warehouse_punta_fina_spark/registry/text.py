@@ -31,6 +31,7 @@ from data_warehouse_punta_fina_spark.registry.shared import (
     _data_fingerprint,
     _hex13,
     _index_cache_dir,
+    _maintained_drain,
     _r6,
     query,
     sql_of,
@@ -374,58 +375,32 @@ def doc_nb_maintained_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # real availableNow Structured Streaming query whose every
     # micro-batch merges (class, term) counts + class doc counts
     # under EPOCHED global state (streaming/classify_stream.
-    # run_nb_maintenance_stream — replay re-derives bit-identical
+    # nb_maintenance_batch — replay re-derives bit-identical
     # counts; the batch-id regression guard refuses a reset
     # checkpoint). The NB model is ENTIRELY mergeable global state,
     # so the maintained model is bit-equal to one monolithic
     # nb_save_model over everything streamed — scoring it equals
     # doc_nb_persisted_classifier, and doc_nb_lang_classifier's
     # oracle is reused verbatim.
-    import os
+    from functools import partial
 
     from data_warehouse_punta_fina_spark.operators.classify import (
         NB_SCHEME,
         nb_score_model,
     )
     from data_warehouse_punta_fina_spark.streaming.classify_stream import (
-        run_nb_maintenance_stream,
+        nb_maintenance_batch,
     )
 
     fp = _data_fingerprint(sf_dir, "documents")
     mdl = _index_cache_dir("nb_maint", f"lang_b8_{NB_SCHEME}_{fp}")
     docs = load_table(spark, sf_dir, "documents")
     b = fingerprint("text") % 10
-    if not os.path.exists(os.path.join(mdl, "_MAINTAINED")):
-        # clean slate (the doc_bm25_maintained_topk discipline): a
-        # partial prior attempt leaves a checkpoint whose offsets
-        # reference source files the overwrite below replaces
-        import shutil
-
-        for sub in os.listdir(mdl) if os.path.isdir(mdl) else []:
-            shutil.rmtree(os.path.join(mdl, sub), ignore_errors=True)
-        train = docs.filter(b < 8).select("doc_id", "text", "lang")
-        src = os.path.join(mdl, "_source")
-        # two files -> two micro-batches (maxFilesPerTrigger=1)
-        train.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(src)
-        train.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q = run_nb_maintenance_stream(
-            spark,
-            src,
-            spark.read.parquet(src).schema,
-            checkpoint_dir=os.path.join(mdl, "_ckpt"),
-            model_dir=mdl,
-            text_col="text",
-            label_col="lang",
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("nb maintenance drain did not finish within 300s")
-        with open(os.path.join(mdl, "_MAINTAINED"), "w") as fh:
-            fh.write("ok")
+    train = docs.filter(b < 8).select("doc_id", "text", "lang")
+    with _maintained_drain(
+        mdl, train, "doc_id", partial(nb_maintenance_batch, model_dir=mdl, label_col="lang")
+    ):
+        pass  # no state to lay before the drain
     return nb_score_model(docs.filter(b >= 8), mdl, "text", "doc_id", "lang")
 
 

@@ -20,6 +20,7 @@ from data_warehouse_punta_fina_spark.registry.shared import (
     _index_cache_dir,
     _ivfpq_topk_sql,
     _kmeans_cells_sql,
+    _maintained_drain,
     _prefix_ctes,
     _r6,
     query,
@@ -631,51 +632,25 @@ def ann_ivfpq_maintained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Content == quantizers-from-even + codes-for-all — exactly
     # what build(even)+append(odd) produces — so
     # ann_ivfpq_incremental_topk's oracle is reused verbatim.
-    import os
+    from functools import partial
 
     from data_warehouse_punta_fina_spark.operators.similarity import (
         ivfpq_search_index,
     )
     from data_warehouse_punta_fina_spark.streaming.ann_stream import (
+        ivfpq_maintenance_batch,
         ivfpq_stream_init,
-        run_ivfpq_maintenance_stream,
     )
 
     params = dict(n_cells=16, m=8, n_centroids=8, iters=2)
     fp = _data_fingerprint(sf_dir, "embeddings")
     idx = _index_cache_dir("ivfpq_maint", f"c16_m8_k8_i2_{fp}")
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    if not os.path.exists(os.path.join(idx, "_MAINTAINED")):
-        # clean slate (the doc_bm25_maintained_topk discipline)
-        import shutil
-
-        for sub in os.listdir(idx) if os.path.isdir(idx) else []:
-            shutil.rmtree(os.path.join(idx, sub), ignore_errors=True)
-        src = os.path.join(idx, "_source")
-        # two files -> two micro-batches (maxFilesPerTrigger=1)
-        emb.filter(F.col("vec_id") % 2 == 0).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(src)
-        emb.filter(F.col("vec_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        ivfpq_stream_init(
-            emb.filter(F.col("vec_id") % 2 == 0), idx, **params
-        )
-        q = run_ivfpq_maintenance_stream(
-            spark,
-            src,
-            spark.read.parquet(src).schema,
-            checkpoint_dir=os.path.join(idx, "_ckpt"),
-            index_dir=idx,
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "ivfpq maintenance drain did not finish within 300s"
-            )
-        with open(os.path.join(idx, "_MAINTAINED"), "w") as fh:
-            fh.write("ok")
+    with _maintained_drain(
+        idx, emb, "vec_id", partial(ivfpq_maintenance_batch, index_dir=idx)
+    ) as building:
+        if building:
+            ivfpq_stream_init(emb.filter(F.col("vec_id") % 2 == 0), idx, **params)
     full = load_table(spark, sf_dir, "embeddings")
     return ivfpq_search_index(
         full.filter(F.col("vec_id") < 8),

@@ -284,7 +284,7 @@ class TxTable:
     def stream_sink(self, stream_id: str):
         """A ready-made ``foreachBatch`` callable:
 
-            q = df.writeStream.foreachBatch(table.stream_sink(ckpt_path))
+            q = drain(df, ckpt_path, table.stream_sink(ckpt_path))  # streaming/file_stream
 
         Every micro-batch becomes one atomic, idempotent log commit —
         the stream lands in a table with snapshot reads, time travel,

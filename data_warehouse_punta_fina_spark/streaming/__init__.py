@@ -1,9 +1,9 @@
 from data_warehouse_punta_fina_spark.streaming.dedup_stream import (  # noqa: F401
     dedup_ingest_batch,
-    run_dedup_ingest_stream,
 )
 from data_warehouse_punta_fina_spark.streaming.observer import ProgressLedger  # noqa: F401
 from data_warehouse_punta_fina_spark.streaming.file_stream import (  # noqa: F401
+    drain,
     event_interval_join,
     read_file_stream,
     run_available_now,

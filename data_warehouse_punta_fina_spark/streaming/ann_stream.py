@@ -25,10 +25,8 @@ band index and NB model retrain out-of-band).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from data_warehouse_punta_fina_spark.operators.freshness import stamp, stored_params
 from data_warehouse_punta_fina_spark.operators.similarity import ivfpq_search_index
@@ -59,53 +57,6 @@ def ann_stream_batch(
         .partitionBy(BATCH_COL)
         .parquet(results_path)
     )
-
-
-def run_ann_stream(
-    spark: SparkSession,
-    input_path: str | None,
-    schema: T.StructType | None,
-    checkpoint_dir: str,
-    index_dir: str,
-    corpus: DataFrame,
-    results_path: str,
-    k: int = 5,
-    max_files_per_trigger: int = 1,
-    stream: DataFrame | None = None,
-    available_now: bool = True,
-    **search_kwargs,
-) -> StreamingQuery:
-    """Drain ``input_path`` (availableNow) through the persisted-index
-    search loop — or pass any streaming DataFrame via ``stream``
-    (foreachBatch is source-agnostic). Resume-safe: the checkpoint
-    replays an uncommitted batch, whose partitioned overwrite makes the
-    rerun idempotent."""
-    from data_warehouse_punta_fina_spark.streaming.file_stream import read_file_stream
-
-    if stream is None:
-        if input_path is None or schema is None:
-            raise ValueError("provide either stream= or (input_path, schema)")
-        stream = read_file_stream(
-            spark, input_path, schema, max_files_per_trigger=max_files_per_trigger
-        )
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        ann_stream_batch(
-            batch,
-            batch_id,
-            index_dir=index_dir,
-            corpus=corpus,
-            results_path=results_path,
-            k=k,
-            **search_kwargs,
-        )
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -278,40 +229,3 @@ def ivfpq_maintenance_batch(
         .parquet(f"{index_dir}/fingerprint")
     )
     prune_epochs(spark, index_dir, ("fingerprint_epochs",), keep=2)
-
-
-def run_ivfpq_maintenance_stream(
-    spark: SparkSession,
-    input_path: str | None,
-    schema: T.StructType | None,
-    checkpoint_dir: str,
-    index_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_files_per_trigger: int = 1,
-    stream: DataFrame | None = None,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Drain a vector stream through the IVF-PQ maintenance loop
-    (:func:`ivfpq_maintenance_batch`; the index must be laid by
-    :func:`ivfpq_stream_init` first). Resume-safe: an uncommitted batch
-    replays, overwriting its own codes partitions and re-deriving its
-    fingerprint epoch from pre-batch state."""
-    from data_warehouse_punta_fina_spark.streaming.file_stream import read_file_stream
-
-    if stream is None:
-        if input_path is None or schema is None:
-            raise ValueError("provide either stream= or (input_path, schema)")
-        stream = read_file_stream(
-            spark, input_path, schema, max_files_per_trigger=max_files_per_trigger
-        )
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        ivfpq_maintenance_batch(batch, batch_id, index_dir, id_col, vec_col)
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -18,7 +18,7 @@ all four streaming twins.
 Scale shape per micro-batch: the batch's (query_id, term) rows
 broadcast into the (bucket, term) join; the batch side carries a
 streaming-source predicate, so dynamic partition pruning keeps the
-postings scan at the batch's term buckets. For :func:`run_bm25_stream`
+postings scan at the batch's term buckets. For :func:`bm25_stream_batch`
 the index is STATIC between rebuilds — searches never mutate the
 searched structure, so batches are independently replayable in any
 order.
@@ -50,14 +50,15 @@ batches (integer sums / XOR), the maintained index is bit-equal to a
 monolithic ``bm25_build_index`` over everything streamed so far — and
 ``bm25_index_is_fresh`` holds against the streamed corpus (unlike the
 positional stream, whose staleness discipline is the checkpoint alone).
+
+Both per-batch functions run under ``streaming.file_stream.drain``, e.g.
+``drain(stream, ckpt, partial(bm25_maintenance_batch, index_dir=idx))``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from data_warehouse_punta_fina_spark.operators.freshness import stamp
 from data_warehouse_punta_fina_spark.operators.retrieval import (
@@ -90,51 +91,6 @@ def bm25_stream_batch(
         .partitionBy(BATCH_COL)
         .parquet(results_path)
     )
-
-
-def run_bm25_stream(
-    spark: SparkSession,
-    input_path: str | None,
-    schema: T.StructType | None,
-    checkpoint_dir: str,
-    index_dir: str,
-    results_path: str,
-    k: int = 5,
-    max_files_per_trigger: int = 1,
-    stream: DataFrame | None = None,
-    available_now: bool = True,
-    **search_kwargs,
-) -> StreamingQuery:
-    """Drain ``input_path`` (availableNow) through the persisted-index
-    search loop — or pass any streaming DataFrame via ``stream``
-    (foreachBatch is source-agnostic). Resume-safe: the checkpoint
-    replays an uncommitted batch, whose partitioned overwrite makes the
-    rerun idempotent."""
-    from data_warehouse_punta_fina_spark.streaming.file_stream import read_file_stream
-
-    if stream is None:
-        if input_path is None or schema is None:
-            raise ValueError("provide either stream= or (input_path, schema)")
-        stream = read_file_stream(
-            spark, input_path, schema, max_files_per_trigger=max_files_per_trigger
-        )
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        bm25_stream_batch(
-            batch,
-            batch_id,
-            index_dir=index_dir,
-            results_path=results_path,
-            k=k,
-            **search_kwargs,
-        )
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def bm25_maintenance_batch(
@@ -265,42 +221,3 @@ def bm25_maintenance_batch(
 
     # ---- bound the epoch history (streaming/epochs.py invariant) --------
     prune_epochs(spark, index_dir, ("dfstats_epochs", "stats_epochs"), keep=2)
-
-
-def run_bm25_maintenance_stream(
-    spark: SparkSession,
-    input_path: str | None,
-    schema: T.StructType | None,
-    checkpoint_dir: str,
-    index_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 16,
-    max_files_per_trigger: int = 1,
-    stream: DataFrame | None = None,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Drain a document stream through the BM25 index-maintenance loop
-    (module docstring: epoched global state, replay-idempotent).
-    Resume-safe: an uncommitted batch replays, overwriting its own
-    postings partition and re-deriving its epoch from pre-batch state."""
-    from data_warehouse_punta_fina_spark.streaming.file_stream import read_file_stream
-
-    if stream is None:
-        if input_path is None or schema is None:
-            raise ValueError("provide either stream= or (input_path, schema)")
-        stream = read_file_stream(
-            spark, input_path, schema, max_files_per_trigger=max_files_per_trigger
-        )
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        bm25_maintenance_batch(
-            batch, batch_id, index_dir, text_col, id_col, n_buckets
-        )
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -23,10 +23,8 @@ order.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from data_warehouse_punta_fina_spark.operators.classify import nb_score_model
 from data_warehouse_punta_fina_spark.operators.freshness import stamp
@@ -74,50 +72,6 @@ def classify_stream_batch(
         .partitionBy(BATCH_COL)
         .parquet(scores_path)
     )
-
-
-def run_classify_stream(
-    spark: SparkSession,
-    input_path: str | None,
-    schema: T.StructType | None,
-    checkpoint_dir: str,
-    model_dir: str,
-    scores_path: str,
-    keep_class: str,
-    max_files_per_trigger: int = 1,
-    stream: DataFrame | None = None,
-    available_now: bool = True,
-    **score_kwargs,
-) -> StreamingQuery:
-    """Drain ``input_path`` (availableNow) through the filter-model loop —
-    or pass any streaming DataFrame via ``stream`` (foreachBatch is
-    source-agnostic). Resume-safe: the checkpoint replays an uncommitted
-    batch, whose partitioned overwrite makes the rerun idempotent."""
-    from data_warehouse_punta_fina_spark.streaming.file_stream import read_file_stream
-
-    if stream is None:
-        if input_path is None or schema is None:
-            raise ValueError("provide either stream= or (input_path, schema)")
-        stream = read_file_stream(
-            spark, input_path, schema, max_files_per_trigger=max_files_per_trigger
-        )
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        classify_stream_batch(
-            batch,
-            batch_id,
-            model_dir=model_dir,
-            scores_path=scores_path,
-            keep_class=keep_class,
-            **score_kwargs,
-        )
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def nb_maintenance_batch(
@@ -243,39 +197,3 @@ def nb_maintenance_batch(
         1
     ).write.mode("overwrite").parquet(f"{model_dir}/consts")
     prune_epochs(spark, model_dir, ("cond_epochs", "classdocs_epochs"), keep=2)
-
-
-def run_nb_maintenance_stream(
-    spark: SparkSession,
-    input_path: str | None,
-    schema: T.StructType | None,
-    checkpoint_dir: str,
-    model_dir: str,
-    text_col: str = "text",
-    label_col: str = "label",
-    max_files_per_trigger: int = 1,
-    stream: DataFrame | None = None,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Drain a labeled-document stream through the NB-model maintenance
-    loop (epoched global state — see :func:`nb_maintenance_batch`).
-    Resume-safe: an uncommitted batch replays and re-derives identical
-    model tables from pre-batch epochs."""
-    from data_warehouse_punta_fina_spark.streaming.file_stream import read_file_stream
-
-    if stream is None:
-        if input_path is None or schema is None:
-            raise ValueError("provide either stream= or (input_path, schema)")
-        stream = read_file_stream(
-            spark, input_path, schema, max_files_per_trigger=max_files_per_trigger
-        )
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        nb_maintenance_batch(batch, batch_id, model_dir, text_col, label_col)
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -5,10 +5,11 @@ The production shape for a crawl pipeline: documents arrive continuously;
 each micro-batch must be admitted only if it does NOT near-duplicate the
 already-admitted corpus, and admitted documents immediately extend the
 index that screens later batches. This composes two existing operators —
-``streaming.file_stream`` (checkpointed file micro-batches; the
+``streaming.file_stream.drain`` (checkpointed micro-batches; the
 reference's chunk loop, `core/batch_processor.py:314-411`, re-expressed)
-and ``operators.dedup.incremental_lsh_dedup`` (band-join candidates
-new × index, candidate-bounded exact verify) — inside ``foreachBatch``,
+runs :func:`dedup_ingest_batch`, which calls
+``operators.dedup.incremental_lsh_dedup`` (band-join candidates
+new × index, candidate-bounded exact verify) inside ``foreachBatch``,
 the Structured Streaming escape hatch for batch-only sinks/joins.
 
 Exactly-once posture: every per-batch output (verdicts, admitted docs,
@@ -32,7 +33,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from data_warehouse_punta_fina_spark.operators.dedup import (
     incremental_lsh_dedup,
@@ -43,15 +43,16 @@ BATCH_COL = "ingest_batch"
 
 
 def _read_or_empty(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    from pyspark.errors import AnalysisException
+    """``path`` read as parquet, or an empty frame of ``schema`` when it
+    holds no data entry yet (absent before batch 0). Anything else is
+    read, so a corrupt/unreadable existing table raises: silently
+    treating the corpus as empty would admit every duplicate in the
+    batch."""
+    from data_warehouse_punta_fina_spark.streaming.epochs import _data_entries
 
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:  # path does not exist yet (batch 0) — ONLY
-        # that; a corrupt/unreadable existing index must raise, because
-        # silently treating the corpus as empty would admit every
-        # duplicate in the batch
+    if not _data_entries(spark, path):
         return spark.createDataFrame([], schema)
+    return spark.read.parquet(path)
 
 
 def dedup_ingest_batch(
@@ -141,49 +142,3 @@ def dedup_ingest_batch(
         .partitionBy(BATCH_COL)
         .parquet(index_path)
     )
-
-
-def run_dedup_ingest_stream(
-    spark: SparkSession,
-    input_path: str | None,
-    schema: T.StructType | None,
-    checkpoint_dir: str,
-    admitted_path: str,
-    index_path: str,
-    verdicts_path: str,
-    max_files_per_trigger: int = 1,
-    stream: DataFrame | None = None,
-    available_now: bool = True,
-    **dedup_kwargs,
-) -> StreamingQuery:
-    """Drain ``input_path`` (availableNow) through the continuous dedup
-    loop — or pass any streaming DataFrame via ``stream`` (a Kafka topic,
-    a custom Python source, …): foreachBatch is source-agnostic, so the
-    dedup loop composes with every streaming reader the session knows.
-    Resume-safe: the checkpoint replays an uncommitted batch, whose
-    partitioned overwrite makes the rerun idempotent."""
-    from data_warehouse_punta_fina_spark.streaming.file_stream import read_file_stream
-
-    if stream is None:
-        if input_path is None or schema is None:
-            raise ValueError("provide either stream= or (input_path, schema)")
-        stream = read_file_stream(
-            spark, input_path, schema, max_files_per_trigger=max_files_per_trigger
-        )
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        dedup_ingest_batch(
-            batch,
-            batch_id,
-            admitted_path=admitted_path,
-            index_path=index_path,
-            verdicts_path=verdicts_path,
-            **dedup_kwargs,
-        )
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

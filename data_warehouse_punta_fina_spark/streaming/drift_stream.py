@@ -39,6 +39,7 @@ def run_psi_monitor_stream(
     micro-batch to ``out_path`` (parquet), columns = psi_report's plus
     ``batch_id``. Returns the StreamingQuery (caller owns lifecycle)."""
     from data_warehouse_punta_fina_spark.operators.quality import psi_report
+    from data_warehouse_punta_fina_spark.streaming.file_stream import drain
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -48,9 +49,4 @@ def run_psi_monitor_stream(
             out_path
         )
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, checkpoint, sink)

@@ -2,22 +2,32 @@
 
 The reference's ``StreamingBatchProcessor`` (`core/batch_processor.py:314-411`)
 is chunked file iteration with checkpoint/resume, retry, and per-chunk
-metrics. Spark-first mapping:
+metrics, all driving one per-chunk callable (``process_func``). Spark-first
+mapping:
 
 - chunks        → file-source micro-batches (``maxFilesPerTrigger``)
+- per-chunk fn  → a ``foreachBatch`` callable ``(batch, batch_id)``
 - checkpoint    → ``checkpointLocation`` (exactly-once resume)
 - retry/timeout → ``spark.task.maxFailures`` (task-level, automatic)
 - metrics       → ``StreamingQuery.lastProgress``
 
 ``trigger(availableNow=True)`` drains everything that exists then stops —
-the batch-with-resume semantics the reference actually implements. True
-streaming additions (watermarked event-time windows, stateful sessionize)
-go beyond the reference: the batch-equivalent windowed aggregation lives
-in registry/events.py (events_tumbling_window) with a SQL oracle; this
-module provides the incremental execution of the same plans.
+the batch-with-resume semantics the reference actually implements.
+:func:`drain` is the package's one micro-batch loop: every streaming
+operator is a per-batch function (``dedup_ingest_batch``,
+``bm25_maintenance_batch``, …) handed to it, e.g.
+``drain(read_file_stream(spark, path, schema, max_files_per_trigger=1),
+ckpt, functools.partial(bm25_maintenance_batch, index_dir=idx))``. This
+module is the only one that touches ``.writeStream``. True streaming
+additions (watermarked event-time windows, stateful sessionize) go beyond
+the reference: the batch-equivalent windowed aggregation lives in
+registry/events.py (events_tumbling_window) with a SQL oracle; this module
+provides the incremental execution of the same plans.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +47,25 @@ def read_file_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(path)
+
+
+def drain(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    process: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """Run ``process(batch, batch_id)`` on every micro-batch of ``stream``
+    that exists now, then stop (availableNow). Resume-safe: the checkpoint
+    replays an uncommitted batch under the same id, so ``process`` must
+    overwrite what that id wrote before (every per-batch function here
+    writes its own ``ingest_batch=<id>`` partition or epoch). The caller
+    owns the returned query: ``awaitTermination`` it."""
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def tumbling_window_agg(

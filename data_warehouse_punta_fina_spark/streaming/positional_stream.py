@@ -35,10 +35,8 @@ nothing to check; a fingerprinted snapshot index is what
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from data_warehouse_punta_fina_spark.operators.freshness import stamp
 from data_warehouse_punta_fina_spark.operators.retrieval import (
@@ -99,41 +97,3 @@ def positional_ingest_batch(
         .partitionBy(BATCH_COL, "bucket")
         .parquet(f"{index_path}/positions")
     )
-
-
-def run_positional_ingest_stream(
-    spark: SparkSession,
-    input_path: str | None,
-    schema: T.StructType | None,
-    checkpoint_dir: str,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 16,
-    max_files_per_trigger: int = 1,
-    stream: DataFrame | None = None,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Drain ``input_path`` (availableNow) through the positional-index
-    maintenance loop — or pass any streaming DataFrame via ``stream``.
-    Resume-safe: an uncommitted batch replays into its own partition."""
-    from data_warehouse_punta_fina_spark.streaming.file_stream import read_file_stream
-
-    if stream is None:
-        if input_path is None or schema is None:
-            raise ValueError("provide either stream= or (input_path, schema)")
-        stream = read_file_stream(
-            spark, input_path, schema, max_files_per_trigger=max_files_per_trigger
-        )
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        positional_ingest_batch(
-            batch, batch_id, index_path, text_col, id_col, n_buckets
-        )
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

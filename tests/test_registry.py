@@ -69,8 +69,9 @@ def test_operators_doc_marks_name_real_queries_and_tests():
     """docs/OPERATORS.md marks registry queries `r:` and pytest tests `t:`.
     Window membership is stated only by __spark_entry__.WINDOW, so the doc
     carries no window labels; every marked name must exist. Every
-    backticked `operators/<mod>.<name>` or `functions/<mod>.<name>` must
-    be a top-level def or assignment in that package module."""
+    backticked `<pkg>/<mod>.<name>` reference into operators/, functions/,
+    streaming/, sources/ or plans/ must be a top-level def or assignment
+    in that package module."""
     doc = open(os.path.join(REPO, "docs", "OPERATORS.md"), encoding="utf-8").read()
     assert not re.findall(r"(?<!\w)[qx]:\w", doc), "window labels (q:/x:) are back"
     known = {"r": set(entrymod.all_queries()), "t": _test_names()}
@@ -82,9 +83,12 @@ def test_operators_doc_marks_name_real_queries_and_tests():
     refs = [
         ref
         for span in re.findall(r"`([^`\n]+)`", doc)
-        for ref in re.findall(r"(?<![\w/])((?:operators|functions)/\w+)\.(\w+)", span)
+        for ref in re.findall(
+            r"(?<![\w/])((?:operators|functions|streaming|sources|plans)/\w+)\.(\w+)", span
+        )
     ]
     assert len(refs) > 100
+    assert {mod.split("/")[0] for mod, _ in refs} >= {"streaming", "sources", "plans"}
     pkg = os.path.join(REPO, "data_warehouse_punta_fina_spark")
     paths = {mod: os.path.join(pkg, f"{mod}.py") for mod, _ in refs}
     defined = {mod: _top_level_names(p) for mod, p in paths.items() if os.path.isfile(p)}
@@ -191,6 +195,42 @@ def test_materialize_is_the_only_checkpoint_site():
     assert checked > 50
     assert not calls, f"materialize outside operators/materialize.py: {calls}"
     assert not params, f"durable *_path options are back: {params}"
+
+
+def test_drain_is_the_only_write_stream_site():
+    """streaming/file_stream.py is the one module that starts a streaming
+    query: no other package module touches ``.writeStream``, ``drain``
+    takes exactly (stream, checkpoint_dir, process), and no per-operator
+    ``run_*_stream`` runner or ``available_now`` switch comes back (a
+    streaming operator is a per-batch function handed to ``drain``).
+    ``run_psi_monitor_stream`` stays: it holds the per-batch PSI logic."""
+    pkg = os.path.join(REPO, "data_warehouse_punta_fina_spark")
+    seam = os.path.join("streaming", "file_stream.py")
+    sites, runners, checked = [], [], 0
+    for root, _dirs, files in os.walk(pkg):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            checked += 1
+            rel = os.path.relpath(os.path.join(root, fname), pkg)
+            tree = ast.parse(open(os.path.join(root, fname), encoding="utf-8").read())
+            for node in ast.walk(tree):
+                if rel != seam and isinstance(node, ast.Attribute) and node.attr == "writeStream":
+                    sites.append(f"{rel}:{node.lineno}")
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    a = node.args
+                    names = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
+                    if rel == seam and node.name == "drain":
+                        assert names == ["stream", "checkpoint_dir", "process"], names
+                    if re.fullmatch(r"run_\w+_stream", node.name) and (
+                        node.name != "run_psi_monitor_stream"
+                    ):
+                        runners.append(f"{rel}:{node.name}")
+                    if "available_now" in names:
+                        runners.append(f"{rel}:{node.name}(available_now)")
+    assert checked > 50
+    assert not sites, f".writeStream outside streaming/file_stream.py: {sites}"
+    assert not runners, f"per-operator stream runners are back: {runners}"
 
 
 def test_freshness_is_the_only_parameter_metadata_site():

@@ -4,6 +4,8 @@ adversarial-partition determinism gate for both debuts."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -253,8 +255,8 @@ def test_bm25_stream_matches_batch_and_is_idempotent(spark, tmp_path):
     from data_warehouse_punta_fina_spark.streaming.bm25_stream import (
         BATCH_COL,
         bm25_stream_batch,
-        run_bm25_stream,
     )
+    from data_warehouse_punta_fina_spark.streaming.file_stream import drain, read_file_stream
     from data_warehouse_punta_fina_spark.functions.text import tokens as _tokens
 
     docs = load_table(spark, SF, "documents")
@@ -284,16 +286,16 @@ def test_bm25_stream_matches_batch_and_is_idempotent(spark, tmp_path):
         shutil.rmtree(f"{in_dir}/batch{i}")
 
     results_path = str(tmp_path / "results")
-    q = run_bm25_stream(
-        spark,
-        in_dir,
-        qterms.schema,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        index_dir=idx,
-        results_path=results_path,
-        k=3,
-        exclude_query_doc=True,
-        max_files_per_trigger=1,
+    q = drain(
+        read_file_stream(spark, in_dir, qterms.schema, max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        partial(
+            bm25_stream_batch,
+            index_dir=idx,
+            results_path=results_path,
+            k=3,
+            exclude_query_doc=True,
+        ),
     )
     q.awaitTermination(120)
 

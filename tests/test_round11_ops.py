@@ -6,6 +6,8 @@ prune_buckets coverage guard, header_word packing bound)."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -667,21 +669,20 @@ def test_positional_ingest_stream_matches_batch_and_is_idempotent(spark, tmp_pat
     from data_warehouse_punta_fina_spark.sources.readers import load_table
     from data_warehouse_punta_fina_spark.streaming.positional_stream import (
         positional_ingest_batch,
-        run_positional_ingest_stream,
     )
+    from data_warehouse_punta_fina_spark.streaming.file_stream import drain, read_file_stream
 
     docs = load_table(spark, SF, "documents").filter(F.col("doc_id") < 120)
     src = str(tmp_path / "src")
     docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(src)
     docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
     idx = str(tmp_path / "stream_idx")
-    q = run_positional_ingest_stream(
-        spark,
-        src,
-        spark.read.parquet(src).schema,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        index_path=idx,
-        n_buckets=4,
+    q = drain(
+        read_file_stream(
+            spark, src, spark.read.parquet(src).schema, max_files_per_trigger=1
+        ),
+        str(tmp_path / "ckpt"),
+        partial(positional_ingest_batch, index_path=idx, n_buckets=4),
     )
     q.awaitTermination(120)
 

@@ -9,6 +9,8 @@ paths)."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -226,8 +228,8 @@ def test_bm25_maintenance_stream_matches_monolithic_and_replay_safe(spark, tmp_p
     from data_warehouse_punta_fina_spark.sources.readers import load_table
     from data_warehouse_punta_fina_spark.streaming.bm25_stream import (
         bm25_maintenance_batch,
-        run_bm25_maintenance_stream,
     )
+    from data_warehouse_punta_fina_spark.streaming.file_stream import drain, read_file_stream
 
     docs = load_table(spark, SF, "documents").filter(F.col("doc_id") < 120)
     src = str(tmp_path / "src")
@@ -236,13 +238,12 @@ def test_bm25_maintenance_stream_matches_monolithic_and_replay_safe(spark, tmp_p
     docs.filter(F.col("doc_id") % 3 == 1).coalesce(1).write.mode("append").parquet(src)
     docs.filter(F.col("doc_id") % 3 == 2).coalesce(1).write.mode("append").parquet(src)
     idx = str(tmp_path / "maintained")
-    q = run_bm25_maintenance_stream(
-        spark,
-        src,
-        spark.read.parquet(src).schema,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        index_dir=idx,
-        n_buckets=8,
+    q = drain(
+        read_file_stream(
+            spark, src, spark.read.parquet(src).schema, max_files_per_trigger=1
+        ),
+        str(tmp_path / "ckpt"),
+        partial(bm25_maintenance_batch, index_dir=idx, n_buckets=8),
     )
     assert q.awaitTermination(180)
 
@@ -472,8 +473,8 @@ def test_nb_maintenance_stream_equals_monolithic_and_replay_safe(spark, tmp_path
     )
     from data_warehouse_punta_fina_spark.streaming.classify_stream import (
         nb_maintenance_batch,
-        run_nb_maintenance_stream,
     )
+    from data_warehouse_punta_fina_spark.streaming.file_stream import drain, read_file_stream
 
     rows = [
         (1, "gato perro gato casa", "es"),
@@ -494,12 +495,12 @@ def test_nb_maintenance_stream_equals_monolithic_and_replay_safe(spark, tmp_path
             "append"
         ).parquet(src)
     mdl = str(tmp_path / "maintained_model")
-    q = run_nb_maintenance_stream(
-        spark,
-        src,
-        spark.read.parquet(src).schema,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        model_dir=mdl,
+    q = drain(
+        read_file_stream(
+            spark, src, spark.read.parquet(src).schema, max_files_per_trigger=1
+        ),
+        str(tmp_path / "ckpt"),
+        partial(nb_maintenance_batch, model_dir=mdl),
     )
     assert q.awaitTermination(180)
 
@@ -729,3 +730,43 @@ def test_ivfpq_compact_index_bit_equal_and_one_file_per_cell(spark, tmp_path):
     ).write.partitionBy("cid").parquet(f"{stripped}/codes")
     with pytest.raises(ValueError, match="no parameter metadata"):
         ivfpq_compact_index(spark, stripped, str(tmp_path / "never"))
+
+
+def test_epoch_and_absent_table_probes_launch_no_job(spark, tmp_path):
+    """The maintenance streams probe their state once per micro-batch:
+    the newest committed epoch (``max_epoch_below``) and whether the
+    dedup corpus exists yet (``dedup_stream._read_or_empty``). Both read
+    directory names only. Epochs 0 and 1 hold data; ``epoch=2`` holds
+    only the ``_temporary`` a crashed attempt leaves, which a parquet read
+    would not discover either — so below=3 gives 1. Neither probe
+    launches a Spark job (counted by job group)."""
+    import os
+
+    from data_warehouse_punta_fina_spark.streaming.dedup_stream import _read_or_empty
+    from data_warehouse_punta_fina_spark.streaming.epochs import max_epoch_below, write_epoch
+
+    root = str(tmp_path / "stats_epochs")
+    for e in (0, 1):
+        write_epoch(spark.range(2), root, e)
+    os.makedirs(f"{root}/epoch=2/_temporary/0")
+    crashed = str(tmp_path / "crashed")
+    os.makedirs(f"{crashed}/_temporary/0")
+    absent = str(tmp_path / "absent")
+
+    sc = spark.sparkContext
+    group = "epoch-probe-no-job"
+    sc.setJobGroup(group, "epoch and absent-table probes")
+    try:
+        got = max_epoch_below(spark, root, 3)
+        assert max_epoch_below(spark, root, 1) == 0
+        assert max_epoch_below(spark, root, 0) is None
+        assert max_epoch_below(spark, absent, 3) is None
+        empty = [_read_or_empty(spark, p, "doc_id long") for p in (absent, crashed)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert got == 1
+    assert all(df.columns == ["doc_id"] for df in empty)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    # a table with data is read, not replaced by the empty frame
+    assert _read_or_empty(spark, f"{root}/epoch=1", "doc_id long").columns == ["id"]

@@ -11,6 +11,7 @@ constant; compaction corpus cross-check before fingerprint stamping).
 from __future__ import annotations
 
 import time
+from functools import partial
 
 from pyspark.sql import functions as F
 
@@ -361,7 +362,7 @@ def test_ivfpq_maintenance_stream_equals_batch_appends_and_replay_safe(
 def test_ivfpq_maintenance_real_stream_drain(spark, tmp_path):
     """End-to-end through a real availableNow Structured Streaming
     query: two source files -> two micro-batches through
-    run_ivfpq_maintenance_stream; the maintained index searches
+    drain + ivfpq_maintenance_batch; the maintained index searches
     bit-equal to a single-batch encode of the union."""
     from data_warehouse_punta_fina_spark.operators.similarity import (
         ivfpq_search_index,
@@ -370,8 +371,8 @@ def test_ivfpq_maintenance_real_stream_drain(spark, tmp_path):
     from data_warehouse_punta_fina_spark.streaming.ann_stream import (
         ivfpq_maintenance_batch,
         ivfpq_stream_init,
-        run_ivfpq_maintenance_stream,
     )
+    from data_warehouse_punta_fina_spark.streaming.file_stream import drain, read_file_stream
 
     emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
     params = dict(n_cells=16, m=8, n_centroids=8, iters=2)
@@ -384,12 +385,12 @@ def test_ivfpq_maintenance_real_stream_drain(spark, tmp_path):
 
     midx = str(tmp_path / "maint")
     ivfpq_stream_init(train, midx, **params)
-    q = run_ivfpq_maintenance_stream(
-        spark,
-        src,
-        spark.read.parquet(src).schema,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        index_dir=midx,
+    q = drain(
+        read_file_stream(
+            spark, src, spark.read.parquet(src).schema, max_files_per_trigger=1
+        ),
+        str(tmp_path / "ckpt"),
+        partial(ivfpq_maintenance_batch, index_dir=midx),
     )
     assert q.awaitTermination(300)
 

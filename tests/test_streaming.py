@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import partial
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -420,8 +421,8 @@ def test_continuous_dedup_ingest_stream(spark, tmp_path):
     from data_warehouse_punta_fina_spark.streaming.dedup_stream import (
         BATCH_COL,
         dedup_ingest_batch,
-        run_dedup_ingest_stream,
     )
+    from data_warehouse_punta_fina_spark.streaming.file_stream import drain, read_file_stream
 
     base = (
         "alpha beta gamma delta epsilon zeta eta theta iota kappa "
@@ -470,13 +471,10 @@ def test_continuous_dedup_ingest_stream(spark, tmp_path):
         "index_path": str(tmp_path / "index"),
         "verdicts_path": str(tmp_path / "verdicts"),
     }
-    q = run_dedup_ingest_stream(
-        spark,
-        in_dir,
-        schema,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-        **paths,
+    q = drain(
+        read_file_stream(spark, in_dir, schema, max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        partial(dedup_ingest_batch, **paths),
     )
     q.awaitTermination(120)
 
@@ -622,8 +620,9 @@ def test_continuous_dedup_stream_resumes_from_checkpoint(spark, tmp_path):
     from pyspark.sql import types as T
 
     from data_warehouse_punta_fina_spark.streaming.dedup_stream import (
-        run_dedup_ingest_stream,
+        dedup_ingest_batch,
     )
+    from data_warehouse_punta_fina_spark.streaming.file_stream import drain, read_file_stream
 
     schema = T.StructType(
         [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
@@ -649,15 +648,22 @@ def test_continuous_dedup_stream_resumes_from_checkpoint(spark, tmp_path):
     }
     ckpt = str(tmp_path / "ckpt")
 
+    def run():
+        return drain(
+            read_file_stream(spark, in_dir, schema, max_files_per_trigger=1),
+            ckpt,
+            partial(dedup_ingest_batch, **paths),
+        )
+
     land("f0.parquet", [(1, text_a), (2, text_b)])
-    q = run_dedup_ingest_stream(spark, in_dir, schema, checkpoint_dir=ckpt, **paths)
+    q = run()
     q.awaitTermination(120)
     v1 = spark.read.parquet(paths["verdicts_path"])
     assert v1.count() == 2
 
     # run 2, same checkpoint: one near-dup of an admitted doc + one fresh
     land("f1.parquet", [(10, text_a.replace("kappa", "KAPPAX")), (11, "totally fresh content words here")])
-    q2 = run_dedup_ingest_stream(spark, in_dir, schema, checkpoint_dir=ckpt, **paths)
+    q2 = run()
     q2.awaitTermination(120)
     v2 = {r["doc_id"]: (r["is_dup"], r["match_id"]) for r in
           spark.read.parquet(paths["verdicts_path"]).collect()}
@@ -682,7 +688,7 @@ def test_dedup_stream_over_custom_python_source(spark, tmp_path):
         SyntheticDocsDataSource,
     )
     from data_warehouse_punta_fina_spark.streaming.dedup_stream import (
-        run_dedup_ingest_stream,
+        dedup_ingest_batch,
     )
 
     spark.dataSource.register(SyntheticDocsDataSource)
@@ -698,18 +704,17 @@ def test_dedup_stream_over_custom_python_source(spark, tmp_path):
         "index_path": str(tmp_path / "index"),
         "verdicts_path": str(tmp_path / "verdicts"),
     }
-    q = run_dedup_ingest_stream(
-        spark,
-        None,
-        None,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        stream=src,
-        available_now=False,  # live trigger: Simple-reader availableNow
-        # coalesces everything into one batch; multi-batch is the point
-        # word-soup docs from a 24-word vocab: raise the near-dup bar so
-        # only the PLANTED exact copies (jaccard 1.0) are rejected
-        threshold=0.9,
-        **paths,
+    # a live trigger, not drain's availableNow: a Simple-reader source
+    # under availableNow coalesces everything into one batch, and
+    # multi-batch is the point
+    q = (
+        src.writeStream.foreachBatch(
+            # word-soup docs from a 24-word vocab: raise the near-dup bar
+            # so only the PLANTED exact copies (jaccard 1.0) are rejected
+            partial(dedup_ingest_batch, threshold=0.9, **paths)
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
     )
     planted = {1, 11, 21, 31, 41, 51}
     deadline = _t.time() + 150
@@ -1199,8 +1204,8 @@ def test_classify_stream_matches_batch_and_is_idempotent(spark, tmp_path):
     from data_warehouse_punta_fina_spark.streaming.classify_stream import (
         BATCH_COL,
         classify_stream_batch,
-        run_classify_stream,
     )
+    from data_warehouse_punta_fina_spark.streaming.file_stream import drain, read_file_stream
 
     train = spark.createDataFrame(
         [
@@ -1237,15 +1242,15 @@ def test_classify_stream_matches_batch_and_is_idempotent(spark, tmp_path):
         shutil.rmtree(f"{in_dir}/batch{i}")
 
     scores_path = str(tmp_path / "scores")
-    q = run_classify_stream(
-        spark,
-        in_dir,
-        schema,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        model_dir=mdl,
-        scores_path=scores_path,
-        keep_class="en",
-        max_files_per_trigger=1,
+    q = drain(
+        read_file_stream(spark, in_dir, schema, max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        partial(
+            classify_stream_batch,
+            model_dir=mdl,
+            scores_path=scores_path,
+            keep_class="en",
+        ),
     )
     q.awaitTermination(120)
 
@@ -1306,8 +1311,8 @@ def test_ann_stream_matches_batch_and_is_idempotent(spark, tmp_path):
     from data_warehouse_punta_fina_spark.streaming.ann_stream import (
         BATCH_COL,
         ann_stream_batch,
-        run_ann_stream,
     )
+    from data_warehouse_punta_fina_spark.streaming.file_stream import drain, read_file_stream
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
         "vec_id", "embedding"
@@ -1330,19 +1335,19 @@ def test_ann_stream_matches_batch_and_is_idempotent(spark, tmp_path):
         shutil.rmtree(f"{in_dir}/batch{i}")
 
     results_path = str(tmp_path / "results")
-    q = run_ann_stream(
-        spark,
-        in_dir,
-        emb.schema,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        index_dir=idx,
-        corpus=emb,
-        results_path=results_path,
-        k=3,
-        probes=2,
-        rerank=10,
-        max_files_per_trigger=1,
-        **params,
+    q = drain(
+        read_file_stream(spark, in_dir, emb.schema, max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        partial(
+            ann_stream_batch,
+            index_dir=idx,
+            corpus=emb,
+            results_path=results_path,
+            k=3,
+            probes=2,
+            rerank=10,
+            **params,
+        ),
     )
     q.awaitTermination(120)
 
