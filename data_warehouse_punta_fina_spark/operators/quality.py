@@ -11,11 +11,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.operators.materialize import materialize
+from data_warehouse_punta_fina_spark.sources.generators import literal_table
 
 
 def _row(spark: SparkSession, check: str, target: str, metric: str, value: int, passed: bool) -> DataFrame:
-    return spark.createDataFrame(
-        [(check, target, metric, int(value), bool(passed))],
+    return literal_table(
+        spark, [(check, target, metric, int(value), bool(passed))],
         "check string, target string, metric string, value long, passed boolean",
     )
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_warehouse_punta_fina_spark.sources.generators import literal_table
+
 
 def reconcile_full_outer(
     primary: DataFrame,
@@ -59,7 +61,7 @@ def symmetry_counts(a: DataFrame, b: DataFrame, keys: list[str]) -> DataFrame:
     left_only = ka.join(kb, keys, "left_anti").count()
     right_only = kb.join(ka, keys, "left_anti").count()
     common = ka.join(kb, keys, "left_semi").count()
-    return spark.createDataFrame(
-        [("left_only", left_only), ("right_only", right_only), ("common", common)],
+    return literal_table(
+        spark, [("left_only", left_only), ("right_only", right_only), ("common", common)],
         "side string, n long",
     )

@@ -44,6 +44,7 @@ from data_warehouse_punta_fina_spark.operators.freshness import (
     stored_params,
 )
 from data_warehouse_punta_fina_spark.operators.materialize import materialize
+from data_warehouse_punta_fina_spark.sources.generators import literal_table
 
 K1 = 1.2
 B = 0.75
@@ -100,7 +101,7 @@ def query_terms(spark: SparkSession, queries: list[tuple[int, str]]) -> DataFram
         # dedupe, keep order; mirror functions.text.tokens exactly
         for t in dict.fromkeys(w for w in re.split(TOKEN_SPLIT_RE, qtext.lower()) if w)
     ]
-    return spark.createDataFrame(qrows, "query_id int, term string")
+    return literal_table(spark, qrows, "query_id int, term string")
 
 
 def bm25_topk(
@@ -1403,7 +1404,7 @@ def _pos_term_occurrences(
     linear-shape :func:`_explode_positions` decode. Each returned
     DataFrame is term-frequency-sized — never corpus-sized."""
     distinct = sorted(set(terms))
-    term_df = spark.createDataFrame([(t,) for t in distinct], "term string")
+    term_df = literal_table(spark, [(t,) for t in distinct], "term string")
     keep = sorted(
         r["b"]
         for r in term_df.select(

@@ -30,6 +30,7 @@ from data_warehouse_punta_fina_spark.operators.freshness import (
     stored_params,
 )
 from data_warehouse_punta_fina_spark.operators.materialize import build_concurrently, materialize
+from data_warehouse_punta_fina_spark.sources.generators import literal_table
 
 
 def _prepare(df: DataFrame, id_col: str, vec_col: str, bucket_bits: int | None = None) -> DataFrame:
@@ -325,7 +326,7 @@ def projection_matrix(
         for p in range(in_dims)
         for k in range(out_dims)
     ]
-    return spark.createDataFrame(rows, "pos int, out_dim int, sign int")
+    return literal_table(spark, rows, "pos int, out_dim int, sign int")
 
 
 def random_projection(
@@ -1020,8 +1021,8 @@ def ivfpq_append_index(
         batch_fp = fingerprint_row(new_vectors, id_col, vec_col)
         mn, mx, ms = merge_fingerprints(old_fp, batch_fp)
         if mn is not None:
-            merged = spark.createDataFrame(
-                [(mn, mx, str(ms))], "fp_n long, fp_xor long, fp_sum string"
+            merged = literal_table(
+                spark, [(mn, mx, str(ms))], "fp_n long, fp_xor long, fp_sum string"
             ).select(
                 "fp_n", "fp_xor", F.col("fp_sum").cast("decimal(38,0)").alias("fp_sum")
             )

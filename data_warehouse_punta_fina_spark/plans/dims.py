@@ -29,7 +29,7 @@ from data_warehouse_punta_fina_spark.functions.dates import (
 )
 from data_warehouse_punta_fina_spark.functions.money import pround, pround2
 from data_warehouse_punta_fina_spark.functions.strings import coded_id, full_name, name_or_default
-from data_warehouse_punta_fina_spark.sources.generators import date_range_source
+from data_warehouse_punta_fina_spark.sources.generators import date_range_source, literal_table
 from data_warehouse_punta_fina_spark.sources.readers import load_table
 
 CALENDAR_START = "1995-01-01"
@@ -91,7 +91,8 @@ def build_dim_producto(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     with_sk = _dense_sk(enriched, "producto_externo_id", "producto_id")
-    default_row = spark.createDataFrame(
+    default_row = literal_table(
+        spark,
         [(1, -1, "PRD-00000000", "Sin Producto", "Sin Marca", "Sin Categoría", 0, None, None, False, None)],
         "producto_id int, producto_externo_id bigint, codigo string, nombre string, marca string, "
         "categoria string, talla int, precio_base decimal(15,2), costo_estandar decimal(15,2), "
@@ -133,8 +134,8 @@ def build_dim_cliente(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["cliente_externo_id"])
     )
     with_sk = _dense_sk(base, "cliente_externo_id", "cliente_id")
-    default_row = spark.createDataFrame(
-        [(1, -1, "CLI-000000", "Sin Cliente", "Sin Segmento", "Sin País", None, False)],
+    default_row = literal_table(
+        spark, [(1, -1, "CLI-000000", "Sin Cliente", "Sin Segmento", "Sin País", None, False)],
         "cliente_id int, cliente_externo_id bigint, codigo string, nombre string, segmento string, "
         "pais string, saldo decimal(15,2), activo boolean",
     )
@@ -159,8 +160,8 @@ def build_dim_usuario(spark: SparkSession, sf_dir: str) -> DataFrame:
         full_name(F.lit(None).cast("string"), F.lit(None).cast("string"), F.col("username")),
     )
     with_sk = _dense_sk(base, "usuario_externo_id", "usuario_id")
-    default_row = spark.createDataFrame(
-        [(1, -1, "sin_usuario", "sin_usuario@puntafina.sv", "Sin Usuario")],
+    default_row = literal_table(
+        spark, [(1, -1, "sin_usuario", "sin_usuario@puntafina.sv", "Sin Usuario")],
         "usuario_id int, usuario_externo_id bigint, username string, email string, nombre_completo string",
     )
     cols = ["usuario_id", "usuario_externo_id", "username", "email", "nombre_completo"]
@@ -180,8 +181,8 @@ def build_dim_almacen(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(True).alias("activo"),
     )
     with_sk = _dense_sk(base, "almacen_externo_id", "almacen_id")
-    default_row = spark.createDataFrame(
-        [(1, -1, "ALM-0000", "Sin Almacén", "Sin País", False)],
+    default_row = literal_table(
+        spark, [(1, -1, "ALM-0000", "Sin Almacén", "Sin País", False)],
         "almacen_id int, almacen_externo_id bigint, codigo string, nombre string, pais string, activo boolean",
     )
     cols = ["almacen_id", "almacen_externo_id", "codigo", "nombre", "pais", "activo"]
@@ -207,8 +208,8 @@ def build_dim_proveedor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(True).alias("activo"),
     )
     with_sk = _dense_sk(base, "proveedor_externo_id", "proveedor_id")
-    default_row = spark.createDataFrame(
-        [(1, -1, "PROV-0000", "Sin Proveedor", "Sin País", "Sin Región", None, False)],
+    default_row = literal_table(
+        spark, [(1, -1, "PROV-0000", "Sin Proveedor", "Sin País", "Sin Región", None, False)],
         "proveedor_id int, proveedor_externo_id bigint, codigo string, nombre string, pais string, "
         "region string, saldo decimal(15,2), activo boolean",
     )
@@ -233,7 +234,8 @@ def build_dim_cuenta_contable(spark: SparkSession, sf_dir: str | None = None) ->
     """Literal chart-of-accounts catalog (S8) + default member (U1)."""
     rows = [(i + 2, c, n, t, nat, True) for i, (c, n, t, nat) in enumerate(ACCOUNTS)]
     rows = [(1, 0, "Sin Cuenta", "na", "na", False)] + rows
-    return spark.createDataFrame(
+    return literal_table(
+        spark,
         rows,
         "cuenta_id int, codigo int, nombre string, tipo_cuenta string, naturaleza string, activa boolean",
     )
@@ -257,8 +259,8 @@ def build_dim_promocion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(True).alias("usa_cupones"),
     )
     with_sk = _dense_sk(base, "promo_externo_id", "promocion_id")
-    default_row = spark.createDataFrame(
-        [(1, -1, "PROMO-0000", "Sin Promoción", False)],
+    default_row = literal_table(
+        spark, [(1, -1, "PROMO-0000", "Sin Promoción", False)],
         "promocion_id int, promo_externo_id int, codigo string, nombre string, usa_cupones boolean",
     )
     cols = ["promocion_id", "promo_externo_id", "codigo", "nombre", "usa_cupones"]

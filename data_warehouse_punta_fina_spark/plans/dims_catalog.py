@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from data_warehouse_punta_fina_spark.functions.dates import date_key
 from data_warehouse_punta_fina_spark.functions.money import pround2
 from data_warehouse_punta_fina_spark.functions.strings import extract_int
-from data_warehouse_punta_fina_spark.sources.generators import monthly_periods
+from data_warehouse_punta_fina_spark.sources.generators import literal_table, monthly_periods
 from data_warehouse_punta_fina_spark.sources.readers import load_table
 
 
@@ -53,8 +53,8 @@ def build_dim_categoria_producto(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("categoria_id", F.col("categoria_id").cast("int"))
         .withColumn("activa", F.lit(True))
     )
-    default_row = spark.createDataFrame(
-        [(1, "Sin Categoría", False)], "categoria_id int, nombre string, activa boolean"
+    default_row = literal_table(
+        spark, [(1, "Sin Categoría", False)], "categoria_id int, nombre string, activa boolean"
     )
     cols = ["categoria_id", "nombre", "activa"]
     return default_row.select(*cols).unionByName(with_sk.select(*cols))
@@ -133,7 +133,8 @@ METODOS_ENVIO = [
 def build_dim_tipo_movimiento(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
     rows = [(i + 2, c, n, cat, af, True) for i, (c, n, cat, af) in enumerate(TIPOS_MOVIMIENTO)]
     rows = [(1, "SIN_MOV", "Sin Tipo", "na", "na", False)] + rows
-    return spark.createDataFrame(
+    return literal_table(
+        spark,
         rows,
         "tipo_movimiento_id int, codigo string, nombre string, categoria string, "
         "afecta_stock string, activo boolean",
@@ -143,8 +144,8 @@ def build_dim_tipo_movimiento(spark: SparkSession, sf_dir: str | None = None) ->
 def build_dim_centro_costo(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
     rows = [(i + 2, c, n, t, True) for i, (c, n, t) in enumerate(CENTROS_COSTO)]
     rows = [(1, "SIN_CC", "Sin Centro", "na", False)] + rows
-    return spark.createDataFrame(
-        rows, "centro_costo_id int, codigo string, nombre string, tipo_centro string, activo boolean"
+    return literal_table(
+        spark, rows, "centro_costo_id int, codigo string, nombre string, tipo_centro string, activo boolean"
     )
 
 
@@ -153,16 +154,16 @@ def build_dim_tipo_transaccion(spark: SparkSession, sf_dir: str | None = None) -
     (case-insensitive contains, reference `complete_fact_builder.py:744-754`)."""
     rows = [(i + 2, c, n, cat, True) for i, (c, n, cat) in enumerate(TIPOS_TRANSACCION)]
     rows = [(1, "SIN_TRX", "Sin Tipo", "na", False)] + rows
-    df = spark.createDataFrame(
-        rows, "tipo_transaccion_id int, codigo string, nombre string, categoria string, activo boolean"
+    df = literal_table(
+        spark, rows, "tipo_transaccion_id int, codigo string, nombre string, categoria string, activo boolean"
     )
     return df.withColumn("es_venta", F.upper(F.col("codigo")).contains("VENTA"))
 
 
 def build_dim_impuestos(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
     rows = [(i, c, n, float(t), True) for i, c, n, t in IMPUESTOS]
-    return spark.createDataFrame(
-        rows, "impuesto_id int, codigo string, nombre string, tasa_raw double, activo boolean"
+    return literal_table(
+        spark, rows, "impuesto_id int, codigo string, nombre string, tasa_raw double, activo boolean"
     ).select(
         "impuesto_id",
         "codigo",
@@ -174,7 +175,8 @@ def build_dim_impuestos(spark: SparkSession, sf_dir: str | None = None) -> DataF
 
 def build_dim_estado_orden(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
     rows = [(i, c, n, o, fin) for i, c, n, o, fin in ESTADOS_ORDEN]
-    return spark.createDataFrame(
+    return literal_table(
+        spark,
         rows,
         "estado_orden_id int, codigo_estado string, nombre_estado string, orden_flujo int, "
         "es_estado_final boolean",
@@ -185,7 +187,8 @@ def build_dim_envio(spark: SparkSession, sf_dir: str | None = None) -> DataFrame
     """Shipping-method dim with regex numeric extraction: '5-7 días' → 5
     (reference `complete_dimension_builder.py:623-653`)."""
     rows = [(i + 1, c, n, t, float(cost)) for i, (c, n, t, cost) in enumerate(METODOS_ENVIO)]
-    df = spark.createDataFrame(
+    df = literal_table(
+        spark,
         rows, "envio_id int, codigo string, metodo_envio string, tiempo_entrega string, costo_raw double"
     )
     return df.select(

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.strings import name_or_default
 from data_warehouse_punta_fina_spark.operators.dedup import dedupe_by_grain
+from data_warehouse_punta_fina_spark.sources.generators import literal_table
 from data_warehouse_punta_fina_spark.sources.readers import load_table
 
 
@@ -103,23 +104,24 @@ def build_dim_canal(spark: SparkSession, sf_dir: str | None = None) -> DataFrame
     """Literal channel catalog + default member (reference `:441-478`)."""
     rows = [(i + 2, c, n, t, True) for i, (c, n, t) in enumerate(CANALES)]
     rows = [(1, "SIN_CANAL", "Sin Canal", "na", False)] + rows
-    return spark.createDataFrame(
-        rows, "canal_id int, codigo string, nombre string, tipo string, activo boolean"
+    return literal_table(
+        spark, rows, "canal_id int, codigo string, nombre string, tipo string, activo boolean"
     )
 
 
 def build_dim_estado_pago(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
     """Payment-status catalog (reference `:673-694`)."""
     rows = [(i + 1, c, n, f) for i, (c, n, f) in enumerate(ESTADOS_PAGO)]
-    return spark.createDataFrame(
-        rows, "estado_pago_id int, codigo string, nombre string, es_final boolean"
+    return literal_table(
+        spark, rows, "estado_pago_id int, codigo string, nombre string, es_final boolean"
     )
 
 
 def build_dim_pago(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
     """Payment-method catalog (reference `:696-743`)."""
     rows = [(i + 1, c, n, v, int(d)) for i, (c, n, v, d) in enumerate(METODOS_PAGO)]
-    return spark.createDataFrame(
+    return literal_table(
+        spark,
         rows,
         "pago_id int, metodo_pago string, nombre string, requiere_validacion boolean, plazo_dias int",
     )
@@ -128,4 +130,4 @@ def build_dim_pago(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
 def build_dim_sitio_web(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
     """Web-site catalog (reference `:405-439`)."""
     rows = [(i + 1, c, u, e) for i, (c, u, e) in enumerate(SITIOS_WEB)]
-    return spark.createDataFrame(rows, "sitio_web_id int, codigo string, url string, entorno string")
+    return literal_table(spark, rows, "sitio_web_id int, codigo string, url string, entorno string")

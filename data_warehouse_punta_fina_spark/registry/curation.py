@@ -31,6 +31,7 @@ from data_warehouse_punta_fina_spark.registry.shared import (
     query,
     sql_of,
 )
+from data_warehouse_punta_fina_spark.sources.generators import literal_table
 from data_warehouse_punta_fina_spark.sources.readers import load_table
 
 
@@ -1047,7 +1048,7 @@ def doc_mixture_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source")
         .agg(F.sum("_tc").alias("tokens"))
     )
-    w = spark.createDataFrame(_MIX_WEIGHTS, "source string, weight double")
+    w = literal_table(spark, _MIX_WEIGHTS, "source string, weight double")
     # water-filling converges in ≤ |sources| rounds (≥1 source
     # saturates per non-converged round) — 5 languages → 5 rounds
     return mixture_allocation(

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround2
 from data_warehouse_punta_fina_spark.registry.shared import _R6D, _r2, query, sql_of
+from data_warehouse_punta_fina_spark.sources.generators import literal_table
 from data_warehouse_punta_fina_spark.sources.readers import load_table
 from data_warehouse_punta_fina_spark.streaming.file_stream import tumbling_window_agg
 
@@ -355,6 +356,15 @@ def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return retention_cohorts(events)
 
 
+# (band, lo, hi) of both events_value_band_rangejoin strategies
+_VALUE_BANDS = [
+    ("B0_50", 0.0, 50.0),
+    ("B50_100", 50.0, 100.0),
+    ("B100_250", 100.0, 250.0),
+    ("B250_INF", 250.0, 1e18),
+]
+
+
 @query(f"""
 WITH bands AS (
   SELECT * FROM (VALUES
@@ -373,11 +383,7 @@ def events_value_band_rangejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fact side; at scale with many bands, bucketize the range key into
     # an equi-join (the standard range-join rewrite)
     events = load_table(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
-        [("B0_50", 0.0, 50.0), ("B50_100", 50.0, 100.0), ("B100_250", 100.0, 250.0),
-         ("B250_INF", 250.0, 1e18)],
-        "band string, lo double, hi double",
-    )
+    bands = literal_table(spark, _VALUE_BANDS, "band string, lo double, hi double")
     joined = events.join(
         F.broadcast(bands), (events["value"] >= bands["lo"]) & (events["value"] < bands["hi"]), "inner"
     )
@@ -399,11 +405,7 @@ def events_value_band_rangejoin_bucketed(spark: SparkSession, sf_dir: str) -> Da
     from data_warehouse_punta_fina_spark.operators.rangejoin import bucketed_range_join
 
     events = load_table(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
-        [("B0_50", 0.0, 50.0), ("B50_100", 50.0, 100.0), ("B100_250", 100.0, 250.0),
-         ("B250_INF", 250.0, 1e18)],
-        "band string, lo double, hi double",
-    )
+    bands = literal_table(spark, _VALUE_BANDS, "band string, lo double, hi double")
     joined = bucketed_range_join(events, "value", bands, step=50.0, hi_cap=250.0)
     return joined.groupBy("band", "event_type").agg(
         F.count("*").alias("n"),

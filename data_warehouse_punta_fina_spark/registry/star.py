@@ -25,6 +25,7 @@ from data_warehouse_punta_fina_spark.plans.facts import (
     build_fact_ventas,
 )
 from data_warehouse_punta_fina_spark.registry.shared import _r2, query, sql_of
+from data_warehouse_punta_fina_spark.sources.generators import literal_table
 from data_warehouse_punta_fina_spark.sources.readers import load_table
 
 
@@ -734,7 +735,7 @@ def dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     diff_cents = int(abs((de["d"] or 0) - (de["c"] or 0)) * 100)
     rows.append(("double_entry", "fact_transacciones", diff_cents))
-    return spark.createDataFrame(rows, "check string, target string, value long")
+    return literal_table(spark, rows, "check string, target string, value long")
 
 
 @query("""

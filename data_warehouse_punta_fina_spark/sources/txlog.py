@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_warehouse_punta_fina_spark.sources.generators import literal_table
+
 
 class CommitConflict(RuntimeError):
     pass
@@ -166,7 +168,7 @@ class TxTable:
         schema = T.StructType.fromJson(json.loads(schema_json))
         cond = F.col(col).between(lo, hi)
         if not kept:
-            return self.spark.createDataFrame([], schema).filter(cond)
+            return literal_table(self.spark, [], schema).filter(cond)
         paths = [os.path.join(self.data_dir, f) for f in kept]
         return self.spark.read.schema(schema).parquet(*paths).filter(cond)
 
@@ -478,7 +480,7 @@ class TxTable:
         files, schema_json, _ = self._snapshot_files(upto)
         schema = T.StructType.fromJson(json.loads(schema_json))
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return literal_table(self.spark, [], schema)
         paths = [os.path.join(self.data_dir, f) for f in files]
         return self.spark.read.schema(schema).parquet(*paths)
 
@@ -605,7 +607,7 @@ class TxTable:
 
             def _rows(rel: list[str]) -> DataFrame:
                 if not rel:
-                    return self.spark.createDataFrame([], schema)
+                    return literal_table(self.spark, [], schema)
                 return self.spark.read.schema(schema).parquet(
                     *[os.path.join(self.data_dir, f) for f in rel]
                 )
@@ -622,7 +624,7 @@ class TxTable:
             schema = out_schema or T.StructType.fromJson(
                 json.loads(self._snapshot_files(upto)[1])
             )
-            empty = self.spark.createDataFrame([], schema)
+            empty = literal_table(self.spark, [], schema)
             return empty.select(
                 "*",
                 F.lit("insert").alias("_change_type"),

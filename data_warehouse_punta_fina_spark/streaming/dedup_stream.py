@@ -38,6 +38,7 @@ from data_warehouse_punta_fina_spark.operators.dedup import (
     incremental_lsh_dedup,
     minhash_band_keys,
 )
+from data_warehouse_punta_fina_spark.sources.generators import literal_table
 
 BATCH_COL = "ingest_batch"
 
@@ -51,7 +52,7 @@ def _read_or_empty(spark: SparkSession, path: str, schema: T.StructType) -> Data
     from data_warehouse_punta_fina_spark.streaming.epochs import _data_entries
 
     if not _data_entries(spark, path):
-        return spark.createDataFrame([], schema)
+        return literal_table(spark, [], schema)
     return spark.read.parquet(path)
 
 

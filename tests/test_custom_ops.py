@@ -188,8 +188,40 @@ def test_generated_sources(spark):
     assert date_range_source(spark, "2024-01-01", "2024-01-31").count() == 31
     mp = monthly_periods(spark, "2024-01-01", "2024-03-31").collect()
     assert [r["periodo_id"] for r in sorted(mp, key=lambda r: r["periodo_id"])] == [202401, 202402, 202403]
-    lt = literal_table(spark, [{"a": 1}, {"a": 2}], "a int")
+    lt = literal_table(spark, [(1,), (2,)], "a int")
     assert lt.count() == 2
+
+
+def test_literal_table_matches_create_dataframe_as_local_relation(spark):
+    """literal_table returns what createDataFrame(rows, ddl) returns —
+    same rows, same schema, same type strictness — but as a
+    LocalTableScan: no Python-fed scan to read it."""
+    from decimal import Decimal
+
+    import pytest as _pytest
+    from pyspark.errors import PySparkTypeError
+
+    from data_warehouse_punta_fina_spark.sources.generators import literal_table
+
+    ddl = "i int, b bigint, s string, d decimal(15,2), f boolean, x double"
+    cases = [
+        [(1, 2**40, "Almacén", None, True, 1.5)],
+        [(-7, -1, None, Decimal("1234567890123.45"), False, -0.25)],
+        [],
+    ]
+    for rows in cases:
+        got = literal_table(spark, rows, ddl)
+        want = spark.createDataFrame(rows, ddl)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert plan.lstrip().startswith("LocalTableScan"), plan
+        assert "ExistingRDD" not in plan
+    bad = [(1, 1, "a", 1.5, True, 1.0)]
+    with _pytest.raises(PySparkTypeError):
+        spark.createDataFrame(bad, ddl)
+    with _pytest.raises(PySparkTypeError):
+        literal_table(spark, bad, ddl)
 
 
 def test_write_excel_guards(spark, tmp_path):

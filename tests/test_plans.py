@@ -433,6 +433,29 @@ def test_dim_and_fact_plan_building_is_fully_lazy(spark, sf_dir):
         sc.setJobGroup("", "")
 
 
+def test_star_build_plans_read_no_python_fed_scan(spark, sf_dir):
+    """The 8 dims and 5 facts run_star_build composes read their literal
+    rows (default members, dim_cuenta_contable, dim_tipo_movimiento) from
+    LocalTableScans: no executed plan holds a Python-fed ExistingRDD scan,
+    whose every read forks Python workers."""
+    from data_warehouse_punta_fina_spark.plans import pipeline as P
+
+    built = {name: build(spark, sf_dir) for name, build in P._DIMS.items()}
+    built["fact_inventario"] = P.build_fact_inventario(spark, sf_dir)
+    built["fact_transacciones"] = P.build_fact_transacciones(spark, sf_dir)
+    built["fact_ventas"] = P.build_fact_ventas(
+        spark, sf_dir, built["dim_producto"], built["dim_cliente"], built["dim_almacen"]
+    )
+    built["fact_balance"] = P.build_fact_balance(
+        built["fact_transacciones"], built["dim_cuenta_contable"]
+    )
+    built["fact_estado_resultados"] = P.build_fact_estado_resultados(built["fact_transacciones"])
+    assert set(built) == set(P._TABLES)
+    plans = {n: df._jdf.queryExecution().executedPlan().toString() for n, df in built.items()}
+    assert [n for n, plan in plans.items() if "ExistingRDD" in plan] == []
+    assert "LocalTableScan" in plans["fact_ventas"] and "LocalTableScan" in plans["fact_inventario"]
+
+
 def test_parquet_pushdown_and_column_pruning(spark):
     """Filters and projections must reach the parquet scan: PushedFilters
     non-empty and ReadSchema pruned to the referenced columns — a scan

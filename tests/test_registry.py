@@ -197,6 +197,34 @@ def test_materialize_is_the_only_checkpoint_site():
     assert not params, f"durable *_path options are back: {params}"
 
 
+def test_literal_table_is_the_only_create_dataframe_site():
+    """sources/generators.py is the one module that builds an inline
+    table: every other package module goes through ``literal_table``,
+    whose Arrow-backed ``LocalRelation`` needs no job to build and no
+    Python worker to read (a ``createDataFrame(<list>)`` is a
+    ``PythonRDD`` scan read by forked Python workers)."""
+    pkg = os.path.join(REPO, "data_warehouse_punta_fina_spark")
+    seam = os.path.join("sources", "generators.py")
+    calls, checked = [], 0
+    for root, _dirs, files in os.walk(pkg):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            checked += 1
+            rel = os.path.relpath(os.path.join(root, fname), pkg)
+            tree = ast.parse(open(os.path.join(root, fname), encoding="utf-8").read())
+            calls += [
+                f"{rel}:{node.lineno}"
+                for node in ast.walk(tree)
+                if rel != seam
+                and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ]
+    assert checked > 50
+    assert not calls, f"createDataFrame outside sources/generators.py: {calls}"
+
+
 def test_drain_is_the_only_write_stream_site():
     """streaming/file_stream.py is the one module that starts a streaming
     query: no other package module touches ``.writeStream``, ``drain``
