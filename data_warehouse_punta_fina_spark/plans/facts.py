@@ -5,8 +5,8 @@ derivation → SK lookups → projection). The financial chain is staged:
 fact_transacciones (journal explode) ⇒ fact_balance (debit/credit rollup +
 running balance) ⇒ fact_estado_resultados (classification + pivot) —
 the reference reads transacciones back from the DW between stages
-(`complete_fact_builder.py:918-932`); here the caller materializes/caches
-the journal once and feeds it forward (plans/pipeline.py).
+(`complete_fact_builder.py:918-932`); here the caller materializes the
+journal once and feeds it forward (plans/pipeline.py).
 
 Monetary math: derived in double with round(...,2) at exactly the
 reference's rounding points, then cast to DECIMAL(15,2) in the final

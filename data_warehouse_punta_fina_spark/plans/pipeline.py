@@ -4,15 +4,18 @@ The reference runs two ordered phases, dims then facts, and writes
 fact_transacciones to the DW only to read it back for fact_balance /
 fact_estado_resultados (`complete_fact_builder.py:918-932`). Those two
 edges, dims → facts and journal → ledger, are the only real dependencies
-in the star build. Here the journal is cached and fed forward instead
-(one computation, two consumers), and every table's whole life (build
-its DataFrame, write it, count it) runs in its own driver thread
-(``operators.materialize.build_concurrently``), in two waves:
+in the star build. Here every wave-1 table that wave 2 reads (the three
+lookup dims and the journal) is materialized once through
+``operators.materialize.materialize``, with no caller-owned cache, and
+fed forward (one computation, each consumer reading stored rows). Every
+table's whole life (build its DataFrame, write it, count it) runs in its
+own driver thread (``operators.materialize.build_concurrently``), in two
+waves:
 
-1. the 8 dims, fact_inventario and fact_transacciones — the journal's
-   write materializes its cache;
-2. fact_ventas over the wave-1 dim_producto / dim_cliente / dim_almacen,
-   and the two ledger facts over the cached journal.
+1. the 8 dims, fact_inventario and fact_transacciones — the first action
+   on each materialized table (its write, or its count) stores its rows;
+2. fact_ventas over the stored dim_producto / dim_cliente / dim_almacen,
+   and the two ledger facts over the stored journal.
 
 Why threads: at these scales the build is bound by the per-job floor,
 not by data. Built one table after another it is ~100 small Spark jobs
@@ -29,7 +32,10 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_warehouse_punta_fina_spark.operators.materialize import build_concurrently
+from data_warehouse_punta_fina_spark.operators.materialize import (
+    build_concurrently,
+    materialize,
+)
 from data_warehouse_punta_fina_spark.plans.dims import (
     build_dim_almacen,
     build_dim_cliente,
@@ -59,6 +65,9 @@ _DIMS = {
     "dim_cuenta_contable": build_dim_cuenta_contable,
     "dim_promocion": build_dim_promocion,
 }
+# the wave-1 tables that wave 2 reads: each is materialized once, so wave 2
+# reads its stored rows instead of re-deriving it
+_FED_FORWARD = ("dim_producto", "dim_cliente", "dim_almacen", "fact_transacciones")
 # the key order of ``PipelineResult.tables``
 _TABLES = (
     *_DIMS,
@@ -101,9 +110,9 @@ def run_star_build(
     job attribution cover the whole build. A failing table raises
     ``StarBuildError`` naming it.
 
-    ``tables["fact_transacciones"]`` is returned cached: the caller owns
-    that cache and unpersists it when done (on failure the build
-    unpersists it itself)."""
+    The three lookup dims and the journal are materialized once through
+    ``materialize`` (lazily: their own wave-1 write or count stores them)
+    and wave 2 reads them; there is no caller-owned cache to release."""
     t0 = time.time()
     built: dict[str, DataFrame] = {}
     counts: dict[str, int] = {}
@@ -112,7 +121,10 @@ def run_star_build(
         def run():
             stage = "build"
             try:
-                df = built[name] = build()
+                df = build()
+                if name in _FED_FORWARD:
+                    df = materialize(df)
+                built[name] = df
                 if warehouse_dir:
                     stage = "write"
                     write_parquet(df, f"{warehouse_dir}/{name}")
@@ -127,7 +139,7 @@ def run_star_build(
     wave_1 = {
         **{name: partial(build, spark, sf_dir) for name, build in _DIMS.items()},
         "fact_inventario": partial(build_fact_inventario, spark, sf_dir),
-        "fact_transacciones": lambda: build_fact_transacciones(spark, sf_dir).cache(),
+        "fact_transacciones": partial(build_fact_transacciones, spark, sf_dir),
     }
     wave_2 = {
         "fact_ventas": lambda: build_fact_ventas(
@@ -140,15 +152,8 @@ def run_star_build(
             built["fact_transacciones"]
         ),
     }
-    try:
-        for wave in (wave_1, wave_2):
-            build_concurrently([life(name, build) for name, build in wave.items()])
-    except BaseException:
-        # build_concurrently returns only after every thread of the wave
-        # has finished, so no thread still uses the journal here
-        if "fact_transacciones" in built:
-            built["fact_transacciones"].unpersist()
-        raise
+    for wave in (wave_1, wave_2):
+        build_concurrently([life(name, build) for name, build in wave.items()])
 
     result = PipelineResult(tables={name: built[name] for name in _TABLES})
     if count:

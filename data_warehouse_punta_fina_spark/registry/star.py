@@ -333,9 +333,10 @@ _DIM_MEMO: dict = {}
 
 
 def _memo_dim(name: str, build, spark: SparkSession, sf_dir: str) -> DataFrame:
-    # production materializes dims once and reuses them across all fact
-    # builds (plans/pipeline.py writes parquet); within a session the
-    # same reuse comes from persist() — unlike localCheckpoint, lineage
+    # the star build materializes its lookup dims once through
+    # materialize() for its own fact_ventas (plans/pipeline.py); the
+    # registry's fact queries run outside that build, so within a session
+    # their reuse comes from persist() — unlike localCheckpoint, lineage
     # is kept, so on a real cluster a lost executor recomputes the
     # missing blocks instead of failing every downstream job
     key = (spark.sparkContext.applicationId, sf_dir, name)

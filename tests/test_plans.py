@@ -162,28 +162,54 @@ def test_pipeline_runs_end_to_end(spark, sf_dir, tmp_path):
     from data_warehouse_punta_fina_spark.plans.pipeline import run_star_build
 
     result = run_star_build(spark, sf_dir, warehouse_dir=str(tmp_path / "wh"))
-    result.tables["fact_transacciones"].unpersist()
     assert list(result.tables) == STAR_TABLES
     assert list(result.counts) == STAR_TABLES
     assert all(v > 0 for v in result.counts.values())
 
     _serial_star_build(spark, sf_dir, str(tmp_path / "serial"))
+    _assert_same_warehouses(tmp_path / "wh", tmp_path / "serial")
     con = duckdb.connect()
     for name in STAR_TABLES:
-        got = f"SELECT * FROM read_parquet('{tmp_path}/wh/{name}/*.parquet')"
-        want = f"SELECT * FROM read_parquet('{tmp_path}/serial/{name}/*.parquet')"
-        assert con.sql(f"SELECT count(*) FROM ({got})").fetchone()[0] == result.counts[name]
+        got = f"SELECT count(*) FROM read_parquet('{tmp_path}/wh/{name}/*.parquet')"
+        assert con.sql(got).fetchone()[0] == result.counts[name], name
+
+
+def _assert_same_warehouses(got_dir, want_dir):
+    """Every star table under ``got_dir`` holds exactly the rows, as a
+    multiset, of the same table under ``want_dir``."""
+    import duckdb
+
+    con = duckdb.connect()
+    for name in STAR_TABLES:
+        got = f"SELECT * FROM read_parquet('{got_dir}/{name}/*.parquet')"
+        want = f"SELECT * FROM read_parquet('{want_dir}/{name}/*.parquet')"
         for a, b in ((got, want), (want, got)):
             extra = con.sql(f"SELECT count(*) FROM ({a} EXCEPT ALL {b})").fetchone()[0]
             assert extra == 0, name
 
 
+def test_star_build_fact_ventas_reads_stored_dims(spark, sf_dir):
+    """fact_ventas runs its SK lookups against the stored wave-1 dims: its
+    plan scans only lineitem and orders, and reads dim_producto,
+    dim_cliente and dim_almacen from their materialized rows instead of
+    re-deriving each from part, customer, supplier and nation."""
+    import re
+
+    from data_warehouse_punta_fina_spark.plans.pipeline import run_star_build
+
+    result = run_star_build(spark, sf_dir, warehouse_dir=None, count=True)
+    # the frame's own plan, planned before any adaptive re-optimization
+    plan = result.tables["fact_ventas"]._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=false" in plan
+    assert plan.count("FileScan parquet") == 2, plan
+    assert sorted(re.findall(r"/(\w+)\.parquet", plan)) == ["lineitem", "orders"]
+    assert plan.count("Scan ExistingRDD") == 3, plan
+
+
 @pytest.mark.parametrize("table", ["dim_promocion", "fact_balance"])
 def test_pipeline_failure_names_its_table(spark, sf_dir, monkeypatch, table):
-    """A failing table (wave 1 or wave 2) is named in the error, the original
-    exception is its cause, and the cached journal is released."""
-    from pyspark import StorageLevel
-
+    """A failing table (wave 1 or wave 2) is named in the error, with the
+    stage it failed in, and the original exception is its cause."""
     from data_warehouse_punta_fina_spark.plans import pipeline
 
     boom = ValueError("boom")
@@ -195,19 +221,33 @@ def test_pipeline_failure_names_its_table(spark, sf_dir, monkeypatch, table):
         monkeypatch.setitem(pipeline._DIMS, table, fail)
     else:
         monkeypatch.setattr(pipeline, f"build_{table}", fail)
-    journals = []
-    build_journal = pipeline.build_fact_transacciones
-
-    def keep_journal(*args):
-        journals.append(build_journal(*args))
-        return journals[-1]
-
-    monkeypatch.setattr(pipeline, "build_fact_transacciones", keep_journal)
     with pytest.raises(pipeline.StarBuildError, match=table) as err:
         pipeline.run_star_build(spark, sf_dir, warehouse_dir=None, count=False)
     assert (err.value.table, err.value.stage) == (table, "build")
     assert err.value.__cause__ is boom
-    assert journals[0].storageLevel == StorageLevel.NONE
+
+
+def test_durable_star_build_equals_ephemeral(spark, sf_dir, tmp_path):
+    """With a checkpoint directory set on the session, the star build's
+    materialized dims and journal are written as reliable checkpoints,
+    and the build writes the same 13 tables, row for row, as with the
+    default local checkpoints."""
+    from data_warehouse_punta_fina_spark.plans.pipeline import run_star_build
+
+    sc = spark.sparkContext
+    ckpt = tmp_path / "ckpt"
+    previous = sc._jsc.sc().getCheckpointDir()
+    assert previous.isEmpty(), "the shared session must start without a checkpoint directory"
+    try:
+        sc.setCheckpointDir(str(ckpt))
+        run_star_build(spark, sf_dir, warehouse_dir=str(tmp_path / "durable"), count=False)
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(previous)
+    assert sc.getCheckpointDir() is None
+    run_star_build(spark, sf_dir, warehouse_dir=str(tmp_path / "ephemeral"), count=False)
+    _assert_same_warehouses(tmp_path / "durable", tmp_path / "ephemeral")
+    written = [p for p in ckpt.rglob("part-*") if p.is_file()]
+    assert written, "no checkpoint files under the session's checkpoint directory"
 
 
 def test_pipeline_jobs_inherit_callers_job_group(spark, sf_dir):
@@ -221,11 +261,10 @@ def test_pipeline_jobs_inherit_callers_job_group(spark, sf_dir):
     ungrouped = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup(group, "star build under a caller's job group")
     try:
-        result = run_star_build(spark, sf_dir, warehouse_dir=None, count=True)
+        run_star_build(spark, sf_dir, warehouse_dir=None, count=True)
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
-    result.tables["fact_transacciones"].unpersist()
     assert tracker.getJobIdsForGroup(group)
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 

@@ -197,6 +197,29 @@ def test_materialize_is_the_only_checkpoint_site():
     assert not params, f"durable *_path options are back: {params}"
 
 
+def test_star_plans_hold_no_cache():
+    """The star build shares an intermediate only through ``materialize``:
+    no module under ``plans/`` calls ``.cache(``, ``.persist(`` or
+    ``.unpersist(``, so no plan hands its caller a cache to release.
+    (``registry/star.py``'s session memo stays the package's only memo.)"""
+    plans = os.path.join(REPO, "data_warehouse_punta_fina_spark", "plans")
+    calls, checked = [], 0
+    for fname in sorted(os.listdir(plans)):
+        if not fname.endswith(".py"):
+            continue
+        checked += 1
+        tree = ast.parse(open(os.path.join(plans, fname), encoding="utf-8").read())
+        calls += [
+            f"plans/{fname}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("cache", "persist", "unpersist")
+        ]
+    assert checked >= 5
+    assert not calls, f"cache calls under plans/: {calls}"
+
+
 def test_literal_table_is_the_only_create_dataframe_site():
     """sources/generators.py is the one module that builds an inline
     table: every other package module goes through ``literal_table``,
