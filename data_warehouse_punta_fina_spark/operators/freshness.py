@@ -20,7 +20,11 @@ codebook silently skews every result instead of failing.
 after the build, and the stored postings/codes describe a snapshot that
 no longer exists. The content half is a fingerprint of the indexed
 corpus, stored with the index at build time, XOR/sum-merged exactly on
-append, and compared against the live corpus on demand:
+append, and compared against the live corpus on demand. This module is
+the only code that knows how it is stored, merged and compared; an
+index family names only the 1-row table that holds it (``stats/`` for
+BM25 and positional, where the count column is ``n_docs``;
+``fingerprint/`` for IVF-PQ, where it is ``fp_n``):
 
 - :func:`content_fingerprint` — one aggregate over the corpus producing
   (row count, bit-XOR of per-row xxhash64, exact decimal SUM of the same
@@ -33,10 +37,16 @@ append, and compared against the live corpus on demand:
   xor=3, sum=3), and xxhash64 itself can collide — ~2^-64-scale
   accidental odds, negligible operationally but not a guarantee.
   Order- and partitioning-independent by construction.
-- ``*_index_is_fresh`` / ``*_refresh_index`` live next to their index
-  (``operators/retrieval.py`` for BM25, ``operators/similarity.py`` for
-  IVF-PQ) and implement the reject-then-rebuild cycle: stale → rebuild,
-  fresh → no-op.
+- :func:`stored_fingerprint` reads a stored table (None when it is
+  missing or any component is absent or NULL); :func:`is_fresh`
+  compares it with the live corpus, and :func:`require_fresh` raises
+  the one :class:`StaleIndexError`. Each ``*_index_is_fresh`` is one
+  call to :func:`is_fresh`, and a missing index is stale in every
+  family. There is no refresh function: a caller that finds an index
+  stale rebuilds it with the family's ``*_build_index``.
+- :func:`merge_fingerprints` and :func:`fingerprint_columns` are the
+  append side: the exact merge of a stored fingerprint with a batch's,
+  and the typed columns every writer stores it as.
 
 Cost note: a freshness check is one full corpus scan (count + two
 hash aggregates, no shuffle beyond the final 1-row reduce) — it is the
@@ -52,7 +62,10 @@ there; this discipline exists because OUR indexes are durable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Row
+from typing import NamedTuple
+
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -98,26 +111,39 @@ def stored_params(
 
 class StaleIndexError(ValueError):
     """A persisted index's stored corpus fingerprint does not match the
-    live corpus — the index describes a snapshot that no longer exists.
-    Rebuild (``*_refresh_index``) instead of searching it."""
+    live corpus, or the index has none: it describes a snapshot that no
+    longer exists. Raised only by :func:`require_fresh`; rebuild the
+    index with its family's ``*_build_index`` instead of searching it."""
 
 
-#: column names of the fingerprint triple, shared by both index families
-FP_COLS = ("fp_n", "fp_xor", "fp_sum")
+class Fingerprint(NamedTuple):
+    """A corpus content fingerprint as Python ints: row count, bit-XOR
+    and exact sum of the per-row xxhash64. A component read from a
+    stored table is None where its column is absent or NULL."""
+
+    n: int | None
+    xor: int | None
+    sum: int | None
 
 
-def content_fingerprint(df: DataFrame, *cols: str) -> DataFrame:
-    """1-row (fp_n, fp_xor, fp_sum) content fingerprint of ``df``
-    projected to ``cols`` — collision-resistant in practice (~2^-64-scale
-    accidental-collision odds; see module docstring — NOT a multiset
-    identity), order/partitioning independent (count/XOR/sum are all
-    commutative + associative), and mergeable under DISJOINT union
-    (counts and sums add, XORs xor), which is what lets an append update
-    the stored fingerprint in O(batch) without rescanning the indexed
-    corpus."""
+#: the fingerprint of an empty corpus, what a maintenance stream's
+#: first batch merges into
+EMPTY = Fingerprint(0, 0, 0)
+
+
+def content_fingerprint(df: DataFrame, *cols: str, count: str = "fp_n") -> DataFrame:
+    """1-row (count, fp_xor, fp_sum) content fingerprint of ``df``
+    projected to ``cols``, its count column named ``count`` (the BM25
+    and positional ``stats`` tables call it ``n_docs``) —
+    collision-resistant in practice (~2^-64-scale accidental-collision
+    odds; see module docstring — NOT a multiset identity),
+    order/partitioning independent (count/XOR/sum are all commutative +
+    associative), and mergeable under DISJOINT union (counts and sums
+    add, XORs xor), which is what lets an append update the stored
+    fingerprint in O(batch) without rescanning the indexed corpus."""
     h = F.xxhash64(*[F.col(c) for c in cols])
     return df.agg(
-        F.count("*").cast("long").alias("fp_n"),
+        F.count("*").cast("long").alias(count),
         F.coalesce(F.bit_xor(h), F.lit(0)).cast("long").alias("fp_xor"),
         F.coalesce(F.sum(h.cast("decimal(38,0)")), F.lit(0))
         .cast("decimal(38,0)")
@@ -125,38 +151,75 @@ def content_fingerprint(df: DataFrame, *cols: str) -> DataFrame:
     )
 
 
-def fingerprint_row(df: DataFrame, *cols: str) -> Row:
-    """Collect the 1-row fingerprint (three scalars — metadata-sized)."""
-    return content_fingerprint(df, *cols).collect()[0]
+def fingerprint_of(row: Row) -> Fingerprint:
+    """The fingerprint a stored 1-row table holds. The count is read
+    from ``fp_n`` or its ``n_docs`` alias; a component whose column is
+    absent (an index built before fingerprints) or NULL (an append chain
+    that started there) is None."""
+    fields = row.asDict()
+    n = fields.get("fp_n", fields.get("n_docs"))
+    parts = (n, fields.get("fp_xor"), fields.get("fp_sum"))
+    return Fingerprint(*(None if v is None else int(v) for v in parts))
 
 
-def rows_match(stored, live) -> bool:
-    """Compare two fingerprint rows field-by-field; a ``stored`` row with
-    any NULL component (a pre-fingerprint index, or an append chain that
-    started before fingerprints existed) is UNKNOWABLE and reported
-    stale — the safe default for a refresh decision."""
-    for c in FP_COLS:
-        s = stored[c] if c in stored.__fields__ else None
-        if s is None:
-            return False
-        if s != live[c]:
-            return False
-    return True
+def live_fingerprint(df: DataFrame, *cols: str) -> Fingerprint:
+    """Collect the fingerprint of ``df`` over ``cols`` (three scalars)."""
+    return fingerprint_of(content_fingerprint(df, *cols).collect()[0])
 
 
-def merge_fingerprints(old: Row | None, batch: Row):
-    """Exact fingerprint of ``old ∪ batch`` for DISJOINT row sets, as a
-    (fp_n, fp_xor, fp_sum) tuple — or ``(None, None, None)`` when the
-    old fingerprint is absent/partial (the unknown poisons the chain;
-    a later freshness check then reports stale, forcing a rebuild that
-    re-establishes it)."""
-    if old is None:
-        return (None, None, None)
-    for c in FP_COLS:
-        if c not in old.__fields__ or old[c] is None:
-            return (None, None, None)
-    return (
-        int(old["fp_n"]) + int(batch["fp_n"]),
-        int(old["fp_xor"]) ^ int(batch["fp_xor"]),
-        int(old["fp_sum"]) + int(batch["fp_sum"]),
+def stored_fingerprint(spark: SparkSession, path: str) -> Fingerprint | None:
+    """The complete fingerprint stored in the 1-row table at ``path``,
+    or None when the table is missing (no index, or a stream-built
+    positional index) or any component is absent or NULL."""
+    try:
+        table = spark.read.parquet(path)
+    except AnalysisException:
+        return None
+    fp = fingerprint_of(table.collect()[0])
+    return None if None in fp else fp
+
+
+def is_fresh(corpus: DataFrame, path: str, *cols: str) -> bool:
+    """True iff the fingerprint stored at ``path`` equals ``corpus``'s
+    over ``cols``. An index without a complete fingerprint is stale —
+    unknowable freshness is staleness — and costs no corpus scan."""
+    stored = stored_fingerprint(corpus.sparkSession, path)
+    return stored is not None and stored == live_fingerprint(corpus, *cols)
+
+
+def require_fresh(corpus: DataFrame, path: str, *cols: str, where: str) -> None:
+    """Raise :class:`StaleIndexError` naming ``where`` unless
+    :func:`is_fresh` — the ``verify_corpus=``/``verify_corpora=`` check
+    of every persisted-index search."""
+    if not is_fresh(corpus, path, *cols):
+        raise StaleIndexError(
+            f"{where} does not match its live corpus (content fingerprint "
+            "mismatch or absent): it describes a snapshot that no longer exists. "
+            "Rebuild it with its *_build_index before searching."
+        )
+
+
+def merge_fingerprints(old: Fingerprint, batch: Fingerprint) -> Fingerprint:
+    """Exact fingerprint of ``old ∪ batch`` for DISJOINT row sets. The
+    count adds whenever ``old``'s is known (the BM25 and positional
+    ``n_docs`` must keep counting); the XOR and sum merge only when both
+    of ``old``'s are known, else they stay None — the unknown poisons
+    the chain, and a later freshness check reports stale, forcing a
+    rebuild that re-establishes it."""
+    known = old.xor is not None and old.sum is not None
+    return Fingerprint(
+        None if old.n is None else old.n + batch.n,
+        old.xor ^ batch.xor if known else None,
+        old.sum + batch.sum if known else None,
     )
+
+
+def fingerprint_columns(fp: Fingerprint, count: str = "fp_n") -> list[Column]:
+    """``fp`` as the three typed literal columns every fingerprint table
+    stores — ``count`` and ``fp_xor`` long, ``fp_sum`` decimal(38,0) — a
+    None component as a typed NULL."""
+    return [
+        F.lit(fp.n).cast("long").alias(count),
+        F.lit(fp.xor).cast("long").alias("fp_xor"),
+        F.lit(None if fp.sum is None else str(fp.sum)).cast("decimal(38,0)").alias("fp_sum"),
+    ]

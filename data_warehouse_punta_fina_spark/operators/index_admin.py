@@ -93,14 +93,6 @@ def _newest_mtime_ms(spark: SparkSession, path: str) -> int:
     return newest
 
 
-def _fp_fields(row) -> tuple[int, int, int]:
-    """(n, xor, sum) from either stats naming (n_docs) or fingerprint
-    naming (fp_n)."""
-    fields = row.__fields__
-    n = row["n_docs"] if "n_docs" in fields else row["fp_n"]
-    return int(n), int(row["fp_xor"]), int(row["fp_sum"])
-
-
 def _validate_supersedes(
     spark: SparkSession, src: str, dst: str, family: str
 ) -> None:
@@ -110,23 +102,23 @@ def _validate_supersedes(
     ``_pos_read_validated`` / ``freshness.stored_params`` on the IVF-PQ
     codes), so a foreign or metadata-stripped dst fails with the same
     rejection a search would give. Content cross-check compares the published
-    corpus fingerprints where both sides carry one; a stream-built
-    positional src (which writes no ``stats/``) falls back to comparing
-    distinct doc counts — one index-sized aggregate each, the admin-job
-    cost class."""
-    from pyspark.errors import AnalysisException
-
+    corpus fingerprints (``freshness.stored_fingerprint``); a positional
+    pair where either side carries none (a stream-built src writes no
+    ``stats/``) falls back to comparing distinct doc counts — one
+    index-sized aggregate each, the admin-job cost class. A BM25 or
+    IVF-PQ src without a complete fingerprint refuses."""
     from pyspark.sql import functions as F
+
+    from data_warehouse_punta_fina_spark.operators.freshness import stored_fingerprint
 
     if family == "bm25":
         from data_warehouse_punta_fina_spark.operators.retrieval import (
             _bm25_read_validated,
         )
 
-        _p, _d, dst_stats, _n = _bm25_read_validated(spark, dst)
-        src_stats = spark.read.parquet(f"{src}/stats")
-        a = _fp_fields(src_stats.collect()[0])
-        b = _fp_fields(dst_stats.collect()[0])
+        _bm25_read_validated(spark, dst)
+        a = stored_fingerprint(spark, f"{src}/stats")
+        b = stored_fingerprint(spark, f"{dst}/stats")
     elif family == "positional":
         from data_warehouse_punta_fina_spark.operators.retrieval import (
             _pos_read_validated,
@@ -134,11 +126,9 @@ def _validate_supersedes(
 
         dst_pos, _n = _pos_read_validated(spark, dst)
         src_pos, _sn = _pos_read_validated(spark, src)
-        try:
-            src_stats = spark.read.parquet(f"{src}/stats").collect()[0]
-            dst_stats = spark.read.parquet(f"{dst}/stats").collect()[0]
-            a, b = _fp_fields(src_stats), _fp_fields(dst_stats)
-        except AnalysisException:
+        a = stored_fingerprint(spark, f"{src}/stats")
+        b = stored_fingerprint(spark, f"{dst}/stats")
+        if a is None or b is None:
             # stream-built src has no stats/ — compare distinct doc
             # counts instead (content identity at posting granularity is
             # what compaction preserves; the doc-id column is whatever
@@ -170,11 +160,11 @@ def _validate_supersedes(
             f"superseding IVF-PQ index at {dst!r}",
             IVFPQ_SCHEME,
         )
-        a = _fp_fields(spark.read.parquet(f"{src}/fingerprint").collect()[0])
-        b = _fp_fields(spark.read.parquet(f"{dst}/fingerprint").collect()[0])
+        a = stored_fingerprint(spark, f"{src}/fingerprint")
+        b = stored_fingerprint(spark, f"{dst}/fingerprint")
     else:
         raise ValueError(f"unknown index family {family!r}; expected one of {FAMILIES}")
-    if a != b:
+    if a is None or a != b:
         raise ValueError(
             f"superseding index at {dst!r} does not describe the same corpus as "
             f"{src!r} (content fingerprint {b} != {a}) — retiring src would delete "

@@ -29,17 +29,19 @@ sum would be nondeterministic across reruns — and ties break on doc_id.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.money import pround
 from data_warehouse_punta_fina_spark.functions.text import tokens
 from data_warehouse_punta_fina_spark.operators.freshness import (
-    StaleIndexError,
     content_fingerprint,
-    fingerprint_row,
+    fingerprint_columns,
+    fingerprint_of,
+    is_fresh,
+    live_fingerprint,
     merge_fingerprints,
-    rows_match,
+    require_fresh,
     stamp,
     stored_params,
 )
@@ -275,10 +277,10 @@ def bm25_build_index(
       terms' buckets, never the whole index;
     - ``dfstats/`` — (term, df), same bucketing;
     - ``stats/`` — one row (n_docs, total_dl) for idf/avgdl, plus the
-      corpus CONTENT fingerprint (fp_n, fp_xor, fp_sum — see
-      ``operators/freshness.py``) so staleness against a mutated corpus
-      is detectable (:func:`bm25_index_is_fresh`) and rejectable
-      (``verify_corpus=`` at search time), not just parameter drift.
+      corpus CONTENT fingerprint (``operators/freshness.py``; ``n_docs``
+      is its count) so staleness against a mutated corpus is detectable
+      (:func:`bm25_index_is_fresh`) and rejectable (``verify_corpus=``
+      at search time), not just parameter drift.
 
     The scheme + n_buckets ride as column metadata on ``tf`` (the
     minhash-band / IVF-PQ discipline) and are validated at search time.
@@ -303,9 +305,8 @@ def bm25_build_index(
     )
     # one corpus pass: n_docs + the content fingerprint (freshness.py);
     # total_dl comes from the already-computed postings aggregate
-    fp = content_fingerprint(docs, id_col, text_col).withColumnRenamed("fp_n", "n_docs")
     (
-        fp.select(F.col("n_docs"), F.col("fp_xor"), F.col("fp_sum"))
+        content_fingerprint(docs, id_col, text_col, count="n_docs")
         .crossJoin(
             postings.agg(F.coalesce(F.sum("tf"), F.lit(0)).alias("total_dl"))
         )
@@ -348,19 +349,13 @@ def _bm25_append_plans(
             "a batch-shaped index with bm25_build_index."
         )
     old = spark.read.parquet(f"{index_dir}/stats").collect()[0]
-    old_n, old_total_dl = int(old["n_docs"]), int(old["total_dl"])
     # one batch-sized pass gives BOTH the doc count and the batch's
     # content fingerprint; disjoint ids (the append contract) make the
     # merged fingerprint exact — counts/sums add, XORs xor — so the
     # appended index stays freshness-checkable in O(batch)
-    batch_fp = fingerprint_row(new_docs, id_col, text_col)
-    n_new = int(batch_fp["fp_n"])
-    old_fp = Row(
-        fp_n=old_n,
-        fp_xor=old["fp_xor"] if "fp_xor" in old.__fields__ else None,
-        fp_sum=old["fp_sum"] if "fp_sum" in old.__fields__ else None,
+    merged = merge_fingerprints(
+        fingerprint_of(old), live_fingerprint(new_docs, id_col, text_col)
     )
-    merged_n, merged_xor, merged_sum = merge_fingerprints(old_fp, batch_fp)
 
     postings_new, df_new, _dl = corpus_term_stats(new_docs, text_col, id_col)
     bucket = F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("bucket")
@@ -381,24 +376,15 @@ def _bm25_append_plans(
         .agg(F.sum("df").cast("long").alias("df"))
         .select("term", "df", bucket)
     )
-    # stats: old row + ONE batch aggregate (total_dl adds exactly; n is
-    # the doc-count sum) — cast long to keep the build schema. The
-    # merged content fingerprint rides along (NULL when the old index
-    # predates fingerprints — the unknown poisons the chain and a later
-    # freshness check forces a rebuild that re-establishes it).
-    fp_xor_lit = F.lit(merged_xor).cast("long")
-    fp_sum_lit = (
-        F.lit(str(merged_sum)) if merged_sum is not None else F.lit(None)
-    ).cast("decimal(38,0)")
-    stats_df = (
-        postings_new.agg(
-            F.lit(old_n + n_new).cast("long").alias("n_docs"),
-            fp_xor_lit.alias("fp_xor"),
-            fp_sum_lit.alias("fp_sum"),
-            (F.coalesce(F.sum("tf"), F.lit(0)) + F.lit(old_total_dl))
-            .cast("long")
-            .alias("total_dl"),
-        )
+    # stats: the merged fingerprint (its count is n_docs; XOR/sum stay
+    # NULL when the old index predates fingerprints) + ONE batch
+    # aggregate (total_dl adds exactly) — cast long to keep the build
+    # schema
+    stats_df = postings_new.agg(
+        *fingerprint_columns(merged, count="n_docs"),
+        (F.coalesce(F.sum("tf"), F.lit(0)) + F.lit(int(old["total_dl"])))
+        .cast("long")
+        .alias("total_dl"),
     )
     return batch_postings, merged_df, stats_df
 
@@ -496,7 +482,7 @@ def bm25_compact_index(
         .parquet(f"{dst_index_dir}/postings")
     )
     (
-        df_stats.select("term", stamp("df", BM25_SCHEME, n_buckets=n_buckets), "bucket")
+        df_stats.select("term", "df", "bucket")
         .repartition(n_buckets, "bucket")
         .write.mode("overwrite")
         .partitionBy("bucket")
@@ -511,46 +497,11 @@ def bm25_index_is_fresh(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> bool:
-    """True iff the persisted index's stored corpus fingerprint matches
-    the LIVE corpus — i.e. the index still describes the data. False for
-    a mutated corpus AND for an index whose fingerprint is absent
-    (pre-fingerprint build, or an append chain that started before
-    fingerprints existed): unknowable staleness is staleness for a
-    refresh decision. One full corpus scan (count + two hash
-    aggregates) — the refresh-orchestration primitive, not a per-query
-    guard (see ``operators/freshness.py``)."""
-    spark = docs.sparkSession
-    stored = spark.read.parquet(f"{index_dir}/stats").collect()[0]
-    # the build writes fp_n as n_docs (they are the same count)
-    stored = Row(
-        fp_n=stored["n_docs"],
-        fp_xor=stored["fp_xor"] if "fp_xor" in stored.__fields__ else None,
-        fp_sum=stored["fp_sum"] if "fp_sum" in stored.__fields__ else None,
-    )
-    return rows_match(stored, fingerprint_row(docs, id_col, text_col))
-
-
-def bm25_refresh_index(
-    docs: DataFrame,
-    index_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 16,
-) -> bool:
-    """The reject-then-rebuild cycle (round-11, VERDICT r10 #7): if the
-    persisted index is FRESH for ``docs``, do nothing and return False;
-    if it is stale, missing, or fingerprint-less, rebuild it from
-    ``docs`` (re-establishing the fingerprint) and return True. The
-    staleness discipline as an operation, not just an error message."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        if bm25_index_is_fresh(docs, index_dir, text_col, id_col):
-            return False
-    except AnalysisException:
-        pass  # no index at index_dir yet — build it
-    bm25_build_index(docs, index_dir, text_col, id_col, n_buckets)
-    return True
+    """True iff the index's stored corpus fingerprint (in ``stats/``)
+    matches the LIVE corpus; False for a mutated corpus and for a
+    missing or fingerprint-less index (``operators/freshness.is_fresh``).
+    One full corpus scan — refresh orchestration, not a per-query guard."""
+    return is_fresh(docs, f"{index_dir}/stats", id_col, text_col)
 
 
 def _bm25_read_validated(
@@ -703,17 +654,14 @@ def bm25_search_index(
     the broadcast-tiny side, never touching the postings scan."""
     spark = query_terms.sparkSession
     postings, df_stats, stats, n_buckets = _bm25_read_validated(spark, index_dir)
-    if verify_corpus is not None and not bm25_index_is_fresh(
-        verify_corpus, index_dir, verify_text_col, id_col
-    ):
+    if verify_corpus is not None:
         # the OTHER staleness axis: parameters match but the corpus
         # mutated since the build — searching would score a snapshot
         # that no longer exists. Costs one corpus scan; pass it from
         # refresh orchestration, not per query (freshness.py).
-        raise StaleIndexError(
-            f"persisted BM25 index at {index_dir!r} does not match the live "
-            "corpus (content fingerprint mismatch or absent) — rebuild with "
-            "bm25_refresh_index before searching."
+        require_fresh(
+            verify_corpus, f"{index_dir}/stats", id_col, verify_text_col,
+            where=f"BM25 index at {index_dir!r}",
         )
     qb, keep = _bm25_query_buckets(query_terms, n_buckets, prune_buckets)
     if keep is not None:
@@ -768,8 +716,8 @@ def bm25_federated_search(
     live corpus DataFrame per shard, parallel to ``index_dirs`` — and
     every shard's stored fingerprint is checked before scoring; a
     mutated shard raises :class:`~.freshness.StaleIndexError` naming
-    the stale shard directory, so the refresh (``bm25_refresh_index``)
-    touches only that shard."""
+    the stale shard directory, so only that shard needs
+    :func:`bm25_build_index`."""
     if not index_dirs:
         raise ValueError("bm25_federated_search needs at least one shard index")
     if verify_corpora is not None:
@@ -779,13 +727,10 @@ def bm25_federated_search(
                 f"({len(verify_corpora)} != {len(index_dirs)})"
             )
         for d, shard_corpus in zip(index_dirs, verify_corpora):
-            if not bm25_index_is_fresh(shard_corpus, d, verify_text_col, id_col):
-                raise StaleIndexError(
-                    f"federated shard index at {d!r} does not match its live "
-                    "corpus (content fingerprint mismatch or absent) — refresh "
-                    "that shard with bm25_refresh_index; fresh shards need no "
-                    "rebuild."
-                )
+            require_fresh(
+                shard_corpus, f"{d}/stats", id_col, verify_text_col,
+                where=f"federated shard index at {d!r}",
+            )
     spark = query_terms.sparkSession
     shards = [_bm25_read_validated(spark, d) for d in index_dirs]
     mods = {nb for (_p, _d, _s, nb) in shards}
@@ -1233,8 +1178,8 @@ def positional_build_index(
       ~avgdl× fewer rows; searches explode the tf-bounded arrays AFTER
       bucket+term pruning, so read-side work is still candidate-bounded;
     - ``stats/`` — 1 row: n_docs + the corpus content fingerprint
-      (``operators/freshness.py``) so staleness is detectable and the
-      refresh cycle applies to this index family too.
+      (``operators/freshness.py``) so staleness is detectable
+      (:func:`positional_index_is_fresh`, ``verify_corpus=``).
 
     The scheme + n_buckets ride as column metadata on ``tf`` (the BM25
     discipline); searches validate them (a tokenizer OR layout change
@@ -1251,8 +1196,12 @@ def positional_build_index(
         .partitionBy("bucket")
         .parquet(f"{index_dir}/positions")
     )
-    fp = content_fingerprint(docs, id_col, text_col).withColumnRenamed("fp_n", "n_docs")
-    fp.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/stats")
+    (
+        content_fingerprint(docs, id_col, text_col, count="n_docs")
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(f"{index_dir}/stats")
+    )
 
 
 def positional_compact_index(
@@ -1326,10 +1275,12 @@ def positional_compact_index(
                 "index to is_fresh=True and admit batch appends onto it. Pass "
                 "the exact documents the index was built from."
             )
-        fp = content_fingerprint(corpus, id_col, text_col).withColumnRenamed(
-            "fp_n", "n_docs"
+        (
+            content_fingerprint(corpus, id_col, text_col, count="n_docs")
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{dst_index_dir}/stats")
         )
-        fp.coalesce(1).write.mode("overwrite").parquet(f"{dst_index_dir}/stats")
 
 
 def positional_index_is_fresh(
@@ -1338,46 +1289,11 @@ def positional_index_is_fresh(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> bool:
-    """Freshness of the positional index against the live corpus — the
-    :func:`bm25_index_is_fresh` contract (absent fingerprint = stale).
-    A MISSING ``stats/`` table (no index at all, or a stream-built index
-    — ``streaming/positional_stream`` intentionally writes no stats: its
-    staleness discipline is the checkpoint) reports False rather than
-    surfacing a raw AnalysisException (ADVICE r11): unknowable freshness
-    is staleness for a refresh decision."""
-    from pyspark.errors import AnalysisException
-
-    spark = docs.sparkSession
-    try:
-        stored = spark.read.parquet(f"{index_dir}/stats").collect()[0]
-    except AnalysisException:
-        return False
-    stored = Row(
-        fp_n=stored["n_docs"],
-        fp_xor=stored["fp_xor"] if "fp_xor" in stored.__fields__ else None,
-        fp_sum=stored["fp_sum"] if "fp_sum" in stored.__fields__ else None,
-    )
-    return rows_match(stored, fingerprint_row(docs, id_col, text_col))
-
-
-def positional_refresh_index(
-    docs: DataFrame,
-    index_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 16,
-) -> bool:
-    """Stale/missing → rebuild (True); fresh → no-op (False) — the
-    reject-then-rebuild cycle for the positional family."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        if positional_index_is_fresh(docs, index_dir, text_col, id_col):
-            return False
-    except AnalysisException:
-        pass
-    positional_build_index(docs, index_dir, text_col, id_col, n_buckets)
-    return True
+    """The :func:`bm25_index_is_fresh` contract for the positional index
+    (fingerprint in ``stats/``). A stream-built index writes no
+    ``stats/`` — its staleness discipline is the checkpoint — so it
+    reads False, as a missing index does."""
+    return is_fresh(docs, f"{index_dir}/stats", id_col, text_col)
 
 
 def _pos_read_validated(spark, index_dir: str) -> tuple[DataFrame, int]:
@@ -1453,12 +1369,10 @@ def phrase_search_index(
     if not toks:
         raise ValueError("phrase contains no tokens under the corpus token rule")
     positions, n_buckets = _pos_read_validated(spark, index_dir)
-    if verify_corpus is not None and not positional_index_is_fresh(
-        verify_corpus, index_dir, verify_text_col, id_col
-    ):
-        raise StaleIndexError(
-            f"persisted positional index at {index_dir!r} does not match the "
-            "live corpus — rebuild with positional_refresh_index before searching."
+    if verify_corpus is not None:
+        require_fresh(
+            verify_corpus, f"{index_dir}/stats", id_col, verify_text_col,
+            where=f"positional index at {index_dir!r}",
         )
     occ = _pos_term_occurrences(spark, positions, toks, n_buckets, id_col)
     anchors = occ[toks[0]].select(id_col, "pos")
@@ -1513,12 +1427,10 @@ def phrase_slop_search_index(
     if not toks:
         raise ValueError("phrase contains no tokens under the corpus token rule")
     positions, n_buckets = _pos_read_validated(spark, index_dir)
-    if verify_corpus is not None and not positional_index_is_fresh(
-        verify_corpus, index_dir, verify_text_col, id_col
-    ):
-        raise StaleIndexError(
-            f"persisted positional index at {index_dir!r} does not match the "
-            "live corpus — rebuild with positional_refresh_index before searching."
+    if verify_corpus is not None:
+        require_fresh(
+            verify_corpus, f"{index_dir}/stats", id_col, verify_text_col,
+            where=f"positional index at {index_dir!r}",
         )
     occ = _pos_term_occurrences(spark, positions, toks, n_buckets, id_col)
     chain = occ[toks[0]].select(
@@ -1648,12 +1560,10 @@ def cooccurrence_search_index(
     if window < 1:
         raise ValueError("window must be >= 1 token")
     positions, n_buckets = _pos_read_validated(spark, index_dir)
-    if verify_corpus is not None and not positional_index_is_fresh(
-        verify_corpus, index_dir, verify_text_col, id_col
-    ):
-        raise StaleIndexError(
-            f"persisted positional index at {index_dir!r} does not match the "
-            "live corpus — rebuild with positional_refresh_index before searching."
+    if verify_corpus is not None:
+        require_fresh(
+            verify_corpus, f"{index_dir}/stats", id_col, verify_text_col,
+            where=f"positional index at {index_dir!r}",
         )
     occ = _pos_term_occurrences(spark, positions, norm, n_buckets, id_col)
     chain = occ[norm[0]].select(
@@ -1705,13 +1615,9 @@ def positional_append_index(
             "discipline is the stream checkpoint; keep feeding the stream), "
             "and a missing index needs positional_build_index first."
         ) from exc
-    old_fp = Row(
-        fp_n=old["n_docs"],
-        fp_xor=old["fp_xor"] if "fp_xor" in old.__fields__ else None,
-        fp_sum=old["fp_sum"] if "fp_sum" in old.__fields__ else None,
+    merged = merge_fingerprints(
+        fingerprint_of(old), live_fingerprint(new_docs, id_col, text_col)
     )
-    batch_fp = fingerprint_row(new_docs, id_col, text_col)
-    mn, mx, ms = merge_fingerprints(old_fp, batch_fp)
     postings = _pos_postings(new_docs, text_col, id_col)
     bucket = F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("bucket")
     (
@@ -1726,12 +1632,5 @@ def positional_append_index(
         .partitionBy("bucket")
         .parquet(f"{index_dir}/positions")
     )
-    n_new = int(batch_fp["fp_n"])
-    fp_xor_lit = F.lit(mx).cast("long")
-    fp_sum_lit = (F.lit(str(ms)) if ms is not None else F.lit(None)).cast("decimal(38,0)")
-    stats_df = spark.range(1).select(
-        F.lit(int(old["n_docs"]) + n_new).cast("long").alias("n_docs"),
-        fp_xor_lit.alias("fp_xor"),
-        fp_sum_lit.alias("fp_sum"),
-    )
+    stats_df = spark.range(1).select(*fingerprint_columns(merged, count="n_docs"))
     stats_df.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/stats")

@@ -21,12 +21,14 @@ from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.functions.vectors import cosine_q, dot_q, norm_sq_q, quantize
 from data_warehouse_punta_fina_spark.operators.freshness import (
-    StaleIndexError,
     content_fingerprint,
-    fingerprint_row,
+    fingerprint_columns,
+    is_fresh,
+    live_fingerprint,
     merge_fingerprints,
-    rows_match,
+    require_fresh,
     stamp,
+    stored_fingerprint,
     stored_params,
 )
 from data_warehouse_punta_fina_spark.operators.materialize import build_concurrently, materialize
@@ -1009,26 +1011,18 @@ def ivfpq_append_index(
     # O(batch) fingerprint maintenance: disjoint ids (the append
     # contract) make counts/sums add and XORs xor exactly, so the
     # appended index stays freshness-checkable without rescanning the
-    # indexed corpus. A pre-fingerprint index stays fingerprint-less
-    # (reported stale until the next full rebuild re-establishes it).
-    from pyspark.errors import AnalysisException
-
-    try:
-        old_fp = spark.read.parquet(f"{index_dir}/fingerprint").collect()[0]
-    except AnalysisException:
-        old_fp = None
-    if old_fp is not None:
-        batch_fp = fingerprint_row(new_vectors, id_col, vec_col)
-        mn, mx, ms = merge_fingerprints(old_fp, batch_fp)
-        if mn is not None:
-            merged = literal_table(
-                spark, [(mn, mx, str(ms))], "fp_n long, fp_xor long, fp_sum string"
-            ).select(
-                "fp_n", "fp_xor", F.col("fp_sum").cast("decimal(38,0)").alias("fp_sum")
-            )
-            merged.coalesce(1).write.mode("overwrite").parquet(
-                f"{index_dir}/fingerprint"
-            )
+    # indexed corpus. An index without a complete fingerprint is left
+    # as it is (reported stale until a full rebuild re-establishes it).
+    old = stored_fingerprint(spark, f"{index_dir}/fingerprint")
+    if old is not None:
+        merged = merge_fingerprints(old, live_fingerprint(new_vectors, id_col, vec_col))
+        (
+            spark.range(1)
+            .select(*fingerprint_columns(merged))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{index_dir}/fingerprint")
+        )
     return spark.read.parquet(f"{index_dir}/codes")
 
 
@@ -1097,44 +1091,12 @@ def ivfpq_index_is_fresh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> bool:
-    """True iff the persisted index's stored corpus fingerprint matches
-    the LIVE corpus. False when the corpus mutated since build+appends,
-    and when the fingerprint is absent (pre-fingerprint index):
-    unknowable staleness is staleness for a refresh decision. One
-    corpus scan — refresh-orchestration, not a per-query guard
-    (``operators/freshness.py``)."""
-    from pyspark.errors import AnalysisException
-
-    spark = corpus.sparkSession
-    try:
-        stored = spark.read.parquet(f"{index_dir}/fingerprint").collect()[0]
-    except AnalysisException:
-        return False
-    return rows_match(stored, fingerprint_row(corpus, id_col, vec_col))
-
-
-def ivfpq_refresh_index(
-    corpus: DataFrame,
-    index_dir: str,
-    n_cells: int = 32,
-    m: int = 8,
-    n_centroids: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 64,
-) -> bool:
-    """The reject-then-rebuild cycle (round-11, VERDICT r10 #7): a FRESH
-    index is left untouched (return False); a stale, missing, or
-    fingerprint-less one is rebuilt from ``corpus`` — retraining the
-    quantizers on the current snapshot and re-establishing the
-    fingerprint (return True)."""
-    if ivfpq_index_is_fresh(corpus, index_dir, id_col, vec_col):
-        return False
-    ivfpq_build_index(
-        corpus, index_dir, n_cells, m, n_centroids, iters, id_col, vec_col, dims
-    )
-    return True
+    """True iff the index's stored corpus fingerprint (in
+    ``fingerprint/``) matches the LIVE corpus; False for a mutated corpus
+    and for a missing or fingerprint-less index
+    (``operators/freshness.is_fresh``). One corpus scan — refresh
+    orchestration, not a per-query guard."""
+    return is_fresh(corpus, f"{index_dir}/fingerprint", id_col, vec_col)
 
 
 def ivfpq_search_index(
@@ -1189,16 +1151,13 @@ def ivfpq_search_index(
         iters=iters,
         dims=dims,
     )
-    if verify_corpus is not None and not ivfpq_index_is_fresh(
-        verify_corpus, index_dir, id_col, vec_col
-    ):
+    if verify_corpus is not None:
         # parameters match but the CORPUS mutated since the build —
         # the codes describe a snapshot that no longer exists. Costs one
         # corpus scan; pass from refresh orchestration, not per query.
-        raise StaleIndexError(
-            f"persisted IVF-PQ index at {index_dir!r} does not match the live "
-            "corpus (content fingerprint mismatch or absent) — rebuild with "
-            "ivfpq_refresh_index before searching."
+        require_fresh(
+            verify_corpus, f"{index_dir}/fingerprint", id_col, vec_col,
+            where=f"IVF-PQ index at {index_dir!r}",
         )
 
     q_cells = (
@@ -1242,7 +1201,7 @@ def ivfpq_federated_search(
     """Federated top-k over PER-SHARD persisted IVF-PQ indexes — how a
     100 TB corpus is actually indexed: no single training job sees all
     the data; each shard trains/encodes its own index
-    (:func:`ivfpq_build_index` per shard, built and refreshed
+    (:func:`ivfpq_build_index` per shard, built and rebuilt
     independently), every query fans out to all shards, and the global
     top-k is the rank-merge of the per-shard lists.
 
@@ -1270,8 +1229,8 @@ def ivfpq_federated_search(
     live corpus DataFrame per shard, parallel to ``index_dirs`` — and
     every shard's stored fingerprint is checked BEFORE any search work;
     a mutated shard raises :class:`~.freshness.StaleIndexError` naming
-    the stale shard directory (refresh just that shard —
-    ``ivfpq_refresh_index`` — the others are untouched).
+    the stale shard directory (rebuild just that shard with
+    :func:`ivfpq_build_index`; the others are untouched).
 
     Scale shape: each shard search is the usual DPP-pruned codes scan +
     rerank; the merge input is shards × queries × k rows — candidate-
@@ -1279,23 +1238,16 @@ def ivfpq_federated_search(
     if not index_dirs:
         raise ValueError("ivfpq_federated_search needs at least one shard index")
     if verify_corpora is not None:
-        from data_warehouse_punta_fina_spark.operators.freshness import (
-            StaleIndexError,
-        )
-
         if len(verify_corpora) != len(index_dirs):
             raise ValueError(
                 f"verify_corpora must parallel index_dirs "
                 f"({len(verify_corpora)} != {len(index_dirs)})"
             )
         for d, shard_corpus in zip(index_dirs, verify_corpora):
-            if not ivfpq_index_is_fresh(shard_corpus, d, id_col, vec_col):
-                raise StaleIndexError(
-                    f"federated shard index at {d!r} does not match its live "
-                    "corpus (content fingerprint mismatch or absent) — refresh "
-                    "that shard with ivfpq_refresh_index; fresh shards need no "
-                    "rebuild."
-                )
+            require_fresh(
+                shard_corpus, f"{d}/fingerprint", id_col, vec_col,
+                where=f"federated shard index at {d!r}",
+            )
     if compensate:
         # the fallback base is the SHARED module constant, not a literal
         # copy of ivfpq_search_index's default (ADVICE r12: a duplicated

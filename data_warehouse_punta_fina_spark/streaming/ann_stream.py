@@ -152,7 +152,11 @@ def ivfpq_maintenance_batch(
     pins. Caller contract: batch ids are disjoint from everything
     already streamed."""
     from data_warehouse_punta_fina_spark.operators.freshness import (
-        fingerprint_row,
+        EMPTY,
+        fingerprint_columns,
+        live_fingerprint,
+        merge_fingerprints,
+        stored_fingerprint,
     )
     from data_warehouse_punta_fina_spark.operators.similarity import (
         IVFPQ_SCHEME,
@@ -206,21 +210,18 @@ def ivfpq_maintenance_batch(
 
     # ---- fingerprint epoch: pre-batch state ∪ batch, published last ----
     src = max_epoch_below(spark, f"{index_dir}/fingerprint_epochs", int(batch_id))
-    if src is None:
-        old_n, old_xor, old_sum = 0, 0, 0
-    else:
-        old = spark.read.parquet(
-            f"{index_dir}/fingerprint_epochs/epoch={src}"
-        ).collect()[0]
-        old_n, old_xor, old_sum = int(old["fp_n"]), int(old["fp_xor"]), int(old["fp_sum"])
-    bfp = fingerprint_row(batch, id_col, vec_col)
-    merged = spark.range(1).select(
-        F.lit(old_n + int(bfp["fp_n"])).cast("long").alias("fp_n"),
-        F.lit(old_xor ^ int(bfp["fp_xor"])).cast("long").alias("fp_xor"),
-        F.lit(str(old_sum + int(bfp["fp_sum"]))).cast("decimal(38,0)").alias("fp_sum"),
+    old = (
+        EMPTY
+        if src is None
+        else stored_fingerprint(spark, f"{index_dir}/fingerprint_epochs/epoch={src}")
     )
-    merged.coalesce(1).write.mode("overwrite").parquet(
-        f"{index_dir}/fingerprint_epochs/epoch={int(batch_id)}"
+    merged = merge_fingerprints(old, live_fingerprint(batch, id_col, vec_col))
+    (
+        spark.range(1)
+        .select(*fingerprint_columns(merged))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(f"{index_dir}/fingerprint_epochs/epoch={int(batch_id)}")
     )
     (
         spark.read.parquet(f"{index_dir}/fingerprint_epochs/epoch={int(batch_id)}")

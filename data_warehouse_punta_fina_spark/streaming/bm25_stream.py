@@ -57,10 +57,17 @@ Both per-batch functions run under ``streaming.file_stream.drain``, e.g.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_warehouse_punta_fina_spark.operators.freshness import stamp
+from data_warehouse_punta_fina_spark.operators.freshness import (
+    EMPTY,
+    fingerprint_columns,
+    fingerprint_of,
+    live_fingerprint,
+    merge_fingerprints,
+    stamp,
+)
 from data_warehouse_punta_fina_spark.operators.retrieval import (
     BM25_SCHEME,
     bm25_search_index,
@@ -159,42 +166,32 @@ def bm25_maintenance_batch(
     src = max_epoch_below(spark, f"{index_dir}/dfstats_epochs", int(batch_id))
     if src is None:
         old_df = None
-        old_n, old_total_dl, old_xor, old_sum = 0, 0, 0, 0
+        old_fp, old_total_dl = EMPTY, 0
     else:
         old_df = spark.read.parquet(f"{index_dir}/dfstats_epochs/epoch={src}").select(
             "term", "df"
         )
         old = spark.read.parquet(f"{index_dir}/stats_epochs/epoch={src}").collect()[0]
-        old_n, old_total_dl = int(old["n_docs"]), int(old["total_dl"])
-        old_xor, old_sum = int(old["fp_xor"]), int(old["fp_sum"])
+        old_fp, old_total_dl = fingerprint_of(old), int(old["total_dl"])
     merged_df = df_new.select("term", "df")
     if old_df is not None:
         merged_df = old_df.unionByName(merged_df)
     merged_df = (
         merged_df.groupBy("term")
         .agg(F.sum("df").cast("long").alias("df"))
-        .select("term", stamp("df", BM25_SCHEME, n_buckets=n_buckets), bucket)
+        .select("term", "df", bucket)
     )
     merged_df.write.mode("overwrite").partitionBy("bucket").parquet(
         f"{index_dir}/dfstats_epochs/epoch={int(batch_id)}"
     )
 
     # ---- merged 1-row stats + fingerprint ------------------------------
-    from data_warehouse_punta_fina_spark.operators.freshness import (
-        fingerprint_row,
-        merge_fingerprints,
-    )
-
-    batch_fp = fingerprint_row(batch, id_col, text_col)
-    old_fp = Row(fp_n=old_n, fp_xor=old_xor, fp_sum=old_sum)
-    mn, mx, ms = merge_fingerprints(old_fp, batch_fp)
+    merged = merge_fingerprints(old_fp, live_fingerprint(batch, id_col, text_col))
     batch_total_dl = int(
         postings.agg(F.coalesce(F.sum("tf"), F.lit(0)).alias("t")).collect()[0]["t"]
     )
     stats_df = spark.range(1).select(
-        F.lit(int(mn)).cast("long").alias("n_docs"),
-        F.lit(int(mx)).cast("long").alias("fp_xor"),
-        F.lit(str(ms)).cast("decimal(38,0)").alias("fp_sum"),
+        *fingerprint_columns(merged, count="n_docs"),
         F.lit(old_total_dl + batch_total_dl).cast("long").alias("total_dl"),
     )
     stats_df.coalesce(1).write.mode("overwrite").parquet(
@@ -207,7 +204,7 @@ def bm25_maintenance_batch(
     # healed by replay re-publishing from the same epoch)
     (
         spark.read.parquet(f"{index_dir}/dfstats_epochs/epoch={int(batch_id)}")
-        .select("term", stamp("df", BM25_SCHEME, n_buckets=n_buckets), bucket)
+        .select("term", "df", bucket)
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(f"{index_dir}/dfstats")

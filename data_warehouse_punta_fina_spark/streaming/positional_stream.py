@@ -28,9 +28,12 @@ ride as column metadata exactly as in the batch build.
 
 Freshness note: the stream-built index carries NO corpus fingerprint —
 its staleness discipline is the CHECKPOINT (the source offsets say
-exactly which documents are in the index), so `*_index_is_fresh` has
-nothing to check; a fingerprinted snapshot index is what
-``positional_build_index`` is for.
+exactly which documents are in the index). ``operators/freshness.py``
+owns the content check, and with no ``stats/`` table to read,
+``positional_index_is_fresh`` reports False, as for a missing index. A
+fingerprinted snapshot is what ``positional_build_index`` (or
+``positional_compact_index(corpus=...)``) writes; there is no refresh
+function.
 """
 
 from __future__ import annotations

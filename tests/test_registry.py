@@ -324,3 +324,39 @@ def test_freshness_is_the_only_parameter_metadata_site():
     assert checked > 50
     assert not sites, f"column metadata handled outside operators/freshness.py: {sites}"
     assert not params, f"parameter-check opt-outs are back: {params}"
+
+
+def test_freshness_is_the_only_content_fingerprint_site():
+    """operators/freshness.py is the one module that knows how a corpus
+    fingerprint is stored and compared: no other module names a
+    fingerprint column (``"fp_n"``, ``"fp_xor"``, ``"fp_sum"``) or
+    constructs ``StaleIndexError``, and no ``*_refresh_index`` function
+    exists (a stale index is rebuilt with its ``*_build_index``)."""
+    pkg = os.path.join(REPO, "data_warehouse_punta_fina_spark")
+    seam = os.path.join("operators", "freshness.py")
+    columns = {"fp_n", "fp_xor", "fp_sum"}
+    sites, refresh, checked = set(), [], 0
+    for root, _dirs, files in os.walk(pkg):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            checked += 1
+            rel = os.path.relpath(os.path.join(root, fname), pkg)
+            tree = ast.parse(open(os.path.join(root, fname), encoding="utf-8").read())
+            for node in ast.walk(tree):
+                if rel != seam and (
+                    (isinstance(node, ast.Constant) and node.value in columns)
+                    or (
+                        isinstance(node, ast.Call)
+                        and getattr(node.func, "id", getattr(node.func, "attr", None))
+                        == "StaleIndexError"
+                    )
+                ):
+                    sites.add(rel)
+                if isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef)
+                ) and node.name.endswith("_refresh_index"):
+                    refresh.append(f"{rel}:{node.name}")
+    assert checked > 50
+    assert not sites, f"content fingerprint handled outside operators/freshness.py: {sorted(sites)}"
+    assert not refresh, f"refresh functions are back: {refresh}"

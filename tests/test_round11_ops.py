@@ -241,125 +241,6 @@ def test_feature_packing_rejects_oversized_dims(spark):
     assert row["header_word"] == stub_header != (70000 << 16) | 1
 
 
-def test_bm25_content_fingerprint_refresh_cycle(spark, tmp_path):
-    """VERDICT r10 #7, content-level: beyond the file-fingerprint cache
-    key, the index itself stores a corpus CONTENT fingerprint — a
-    mutated-in-place corpus (same paths, different rows) is detected
-    (is_fresh False), rejected at search time (StaleIndexError), rebuilt
-    by refresh, and the new results reflect the mutation; a second
-    refresh is a no-op."""
-    from data_warehouse_punta_fina_spark.operators.freshness import StaleIndexError
-    from data_warehouse_punta_fina_spark.operators.retrieval import (
-        bm25_index_is_fresh,
-        bm25_refresh_index,
-        bm25_search_index,
-    )
-
-    idx = str(tmp_path / "bm25_idx")
-    v1 = spark.createDataFrame(
-        [(1, "spark shuffles data"), (2, "ducks swim"), (3, "spark plans queries")],
-        "doc_id long, text string",
-    )
-    # refresh on a MISSING index builds it
-    assert bm25_refresh_index(v1, idx, n_buckets=4) is True
-    assert bm25_index_is_fresh(v1, idx) is True
-    qt = spark.createDataFrame([(9, "spark")], "query_id int, term string")
-    r1 = {r["doc_id"] for r in bm25_search_index(qt, idx, k=3, verify_corpus=v1).collect()}
-    assert r1 == {1, 3}
-
-    # in-place mutation: doc 3 stops mentioning spark, doc 4 starts
-    v2 = spark.createDataFrame(
-        [(1, "spark shuffles data"), (2, "ducks swim"),
-         (3, "flink streams events"), (4, "spark caches blocks")],
-        "doc_id long, text string",
-    )
-    assert bm25_index_is_fresh(v2, idx) is False
-    import pytest as _pytest
-
-    with _pytest.raises(StaleIndexError):
-        bm25_search_index(qt, idx, k=3, verify_corpus=v2)
-    assert bm25_refresh_index(v2, idx, n_buckets=4) is True  # rebuilt
-    r2 = {r["doc_id"] for r in bm25_search_index(qt, idx, k=3, verify_corpus=v2).collect()}
-    assert r2 == {1, 4}, "rebuilt index must reflect the mutated corpus"
-    assert bm25_refresh_index(v2, idx, n_buckets=4) is False  # fresh → no-op
-
-
-def test_bm25_append_preserves_content_fingerprint(spark, tmp_path):
-    """The O(batch) append keeps the stored fingerprint EXACT: after
-    appending a disjoint batch, the index is fresh for the union (and
-    stale for the pre-append corpus) — XOR/sum merge equals a
-    from-scratch fingerprint, independent of partitioning/order."""
-    from data_warehouse_punta_fina_spark.operators.retrieval import (
-        bm25_append_index,
-        bm25_build_index,
-        bm25_index_is_fresh,
-    )
-
-    idx = str(tmp_path / "bm25_idx")
-    base = spark.createDataFrame(
-        [(1, "spark shuffles data"), (2, "ducks swim")],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [(3, "spark caches blocks"), (4, "herons wade")],
-        "doc_id long, text string",
-    )
-    bm25_build_index(base, idx, n_buckets=4)
-    bm25_append_index(batch, idx)
-    union = base.unionByName(batch)
-    assert bm25_index_is_fresh(union, idx) is True
-    # order/partitioning independence of the fingerprint comparison
-    assert bm25_index_is_fresh(union.repartition(7).sortWithinPartitions("text"), idx) is True
-    assert bm25_index_is_fresh(base, idx) is False
-
-
-def test_ivfpq_content_fingerprint_refresh_cycle(spark, tmp_path):
-    """The vector twin of the BM25 cycle: build stores the corpus
-    fingerprint, an in-place mutation is detected and rejected
-    (StaleIndexError on verify_corpus), refresh retrains, appends merge
-    the fingerprint in O(batch) so the appended index stays fresh for
-    the union."""
-    from data_warehouse_punta_fina_spark.operators.freshness import StaleIndexError
-    from data_warehouse_punta_fina_spark.operators.similarity import (
-        ivfpq_append_index,
-        ivfpq_index_is_fresh,
-        ivfpq_refresh_index,
-        ivfpq_search_index,
-    )
-    from data_warehouse_punta_fina_spark.sources.readers import load_table
-
-    emb = load_table(spark, SF, "embeddings")
-    v1 = emb.filter(F.col("vec_id") < 60)
-    idx = str(tmp_path / "ivfpq_idx")
-    params = dict(n_cells=4, m=4, n_centroids=4, iters=1)
-    assert ivfpq_refresh_index(v1, idx, **params) is True  # missing → build
-    assert ivfpq_index_is_fresh(v1, idx) is True
-    queries = emb.filter(F.col("vec_id") < 2)
-    ivfpq_search_index(
-        queries, v1, idx, k=3, probes=2, rerank=10, dims=64,
-        verify_corpus=v1, **params,
-    ).collect()  # fresh → no raise
-
-    # in-place mutation: one vector replaced by a different one
-    v2 = emb.filter((F.col("vec_id") < 59) | (F.col("vec_id") == 61))
-    assert ivfpq_index_is_fresh(v2, idx) is False
-    import pytest as _pytest
-
-    with _pytest.raises(StaleIndexError):
-        ivfpq_search_index(
-            queries, v2, idx, k=3, probes=2, rerank=10, dims=64,
-            verify_corpus=v2, **params,
-        )
-    assert ivfpq_refresh_index(v2, idx, **params) is True  # rebuilt
-    assert ivfpq_refresh_index(v2, idx, **params) is False  # fresh → no-op
-
-    # O(batch) fingerprint maintenance through the append path
-    batch = emb.filter((F.col("vec_id") >= 62) & (F.col("vec_id") < 66))
-    ivfpq_append_index(batch, idx)
-    assert ivfpq_index_is_fresh(v2.unionByName(batch), idx) is True
-    assert ivfpq_index_is_fresh(v2, idx) is False
-
-
 def test_recall_panel_carries_federated_tier():
     """VERDICT r10 #4: RECALL.json must carry the federated tier in BOTH
     SF panels with calibrated floors and no breaches — the per-shard
@@ -471,111 +352,6 @@ def test_retrieval_rank_metrics_known_values(spark):
     assert rows[1]["mrr"] == 1.0
     assert rows[1]["ndcg"] == r6(dcg / idcg)
     assert rows[2]["mrr"] == 0.0 and rows[2]["ndcg"] == 0.0
-
-
-def test_federated_refresh_rebuilds_only_stale_shards(spark, tmp_path):
-    """The operational composition of freshness × federation: when one
-    shard's corpus mutates, refresh rebuilds ONLY that shard (the other
-    shard's stored codes are untouched on disk), and the federated
-    search over the refreshed shards reflects the mutation."""
-    import os
-
-    from data_warehouse_punta_fina_spark.operators.similarity import (
-        ivfpq_federated_search,
-        ivfpq_index_is_fresh,
-        ivfpq_refresh_index,
-    )
-    from data_warehouse_punta_fina_spark.sources.readers import load_table
-
-    emb = load_table(spark, SF, "embeddings")
-    params = dict(n_cells=4, m=4, n_centroids=4, iters=1)
-    dirs = [str(tmp_path / f"s{i}") for i in range(2)]
-    shards_v1 = [
-        emb.filter((F.col("vec_id") < 80) & (F.pmod(F.col("vec_id"), F.lit(2)) == i))
-        for i in range(2)
-    ]
-    for s, d in zip(shards_v1, dirs):
-        assert ivfpq_refresh_index(s, d, **params) is True  # initial build
-
-    def _mtimes(d):
-        codes = os.path.join(d, "codes")
-        return {
-            f: os.path.getmtime(os.path.join(root, f))
-            for root, _, fs in os.walk(codes)
-            for f in fs
-            if f.endswith(".parquet")
-        }
-
-    before = _mtimes(dirs[0])
-    # shard 1's corpus mutates (one extra vector); shard 0 unchanged
-    shard1_v2 = emb.filter(
-        ((F.col("vec_id") < 80) | (F.col("vec_id") == 81))
-        & (F.pmod(F.col("vec_id"), F.lit(2)) == 1)
-    )
-    rebuilt = [
-        ivfpq_refresh_index(shards_v1[0], dirs[0], **params),
-        ivfpq_refresh_index(shard1_v2, dirs[1], **params),
-    ]
-    assert rebuilt == [False, True]
-    assert _mtimes(dirs[0]) == before, "fresh shard's codes must be untouched"
-    assert ivfpq_index_is_fresh(shard1_v2, dirs[1]) is True
-
-    # the rebuild incorporated the mutation: the refreshed shard's codes
-    # now carry the new vector (self-matches are excluded at search
-    # time, so assert on the index contents + an end-to-end search)
-    codes1 = spark.read.parquet(f"{dirs[1]}/codes")
-    assert codes1.filter(F.col("vec_id") == 81).count() > 0
-    corpus_v2 = shards_v1[0].unionByName(shard1_v2)
-    queries = emb.filter(F.col("vec_id") == 0)
-    hits = ivfpq_federated_search(
-        queries, corpus_v2, dirs, k=3, probes=4, rerank=10, dims=64, **params
-    ).collect()
-    assert len(hits) == 3
-
-
-def test_positional_index_phrase_search_and_refresh(spark, tmp_path):
-    """Persisted positional index (round-11): phrase search over stored
-    positions is bit-equal to the in-query token-slice scan (incl. the
-    repeated-term phrase), reads NO corpus table and only the phrase
-    terms' buckets (static filter), and the freshness/refresh cycle
-    applies (mutate → stale → StaleIndexError → rebuild)."""
-    import pytest as _pytest
-
-    from data_warehouse_punta_fina_spark.operators.freshness import StaleIndexError
-    from data_warehouse_punta_fina_spark.operators.retrieval import (
-        phrase_search,
-        phrase_search_index,
-        positional_build_index,
-        positional_index_is_fresh,
-        positional_refresh_index,
-    )
-    from data_warehouse_punta_fina_spark.sources.readers import load_table
-
-    docs = load_table(spark, SF, "documents")
-    idx = str(tmp_path / "pos_idx")
-    positional_build_index(docs, idx, n_buckets=8)
-    for phrase in ("order fast", "the the"):
-        a = sorted(map(tuple, phrase_search(docs, phrase).collect()))
-        b = sorted(map(tuple, phrase_search_index(spark, idx, phrase).collect()))
-        assert a == b and len(a) > 0, phrase
-
-    plan = phrase_search_index(spark, idx, "order fast")._jdf.queryExecution().executedPlan().toString()
-    assert "documents.parquet" not in plan, "persisted search must not touch the corpus"
-    assert "bucket" in plan, "phrase-term bucket pruning missing from the scan"
-
-    v2 = docs.limit(50)
-    assert positional_index_is_fresh(v2, idx) is False
-    with _pytest.raises(StaleIndexError):
-        phrase_search_index(spark, idx, "order fast", verify_corpus=v2)
-    assert positional_refresh_index(v2, idx, n_buckets=8) is True
-    assert positional_refresh_index(v2, idx, n_buckets=8) is False
-    a2 = sorted(map(tuple, phrase_search(v2, "order fast").collect()))
-    b2 = sorted(map(tuple, phrase_search_index(spark, idx, "order fast").collect()))
-    assert a2 == b2
-
-    import pytest as _pt
-    with _pt.raises(ValueError, match="no tokens"):
-        phrase_search_index(spark, idx, "!!!")
 
 
 def test_proximity_search_semantics_and_guards(spark, tmp_path):
