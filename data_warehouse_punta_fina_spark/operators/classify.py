@@ -35,6 +35,7 @@ from data_warehouse_punta_fina_spark.functions.money import pround
 from data_warehouse_punta_fina_spark.functions.text import tokens
 from data_warehouse_punta_fina_spark.operators.freshness import stamp, stored_params
 from data_warehouse_punta_fina_spark.operators.materialize import materialize
+from data_warehouse_punta_fina_spark.sources.readers import read_parquet
 
 # parameter fingerprint for persisted NB models (parquet-footer-durable
 # column metadata, the ivfpq_build_index / minhash_band_keys discipline)
@@ -249,7 +250,7 @@ def nb_save_model(
     ).write.mode("overwrite").parquet(f"{model_dir}/cond")
     classes.write.mode("overwrite").parquet(f"{model_dir}/classes")
     consts.write.mode("overwrite").parquet(f"{model_dir}/consts")
-    return train.sparkSession.read.parquet(f"{model_dir}/cond")
+    return read_parquet(train.sparkSession, f"{model_dir}/cond")
 
 
 def nb_score_model(
@@ -269,11 +270,11 @@ def nb_score_model(
     then ``(id_col, predicted, margin, n_tokens)`` — no actual/correct
     columns."""
     spark = test.sparkSession
-    cond = spark.read.parquet(f"{model_dir}/cond")
+    cond = read_parquet(spark, f"{model_dir}/cond")
     # a mismatched smoothing/rounding scheme silently corrupts every margin
     stored_params(cond, "_c", f"NB model at {model_dir!r}", NB_SCHEME)
-    classes = spark.read.parquet(f"{model_dir}/classes")
-    consts = spark.read.parquet(f"{model_dir}/consts")
+    classes = read_parquet(spark, f"{model_dir}/classes")
+    consts = read_parquet(spark, f"{model_dir}/consts")
     if label_col is None:
         scored = _nb_score(
             cond,

@@ -64,9 +64,10 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+
+from data_warehouse_punta_fina_spark.sources.readers import data_entries, read_parquet
 
 
 def stamp(col: str, scheme: str, **params) -> Column:
@@ -171,11 +172,9 @@ def stored_fingerprint(spark: SparkSession, path: str) -> Fingerprint | None:
     """The complete fingerprint stored in the 1-row table at ``path``,
     or None when the table is missing (no index, or a stream-built
     positional index) or any component is absent or NULL."""
-    try:
-        table = spark.read.parquet(path)
-    except AnalysisException:
+    if not data_entries(spark, path):
         return None
-    fp = fingerprint_of(table.collect()[0])
+    fp = fingerprint_of(read_parquet(spark, path).collect()[0])
     return None if None in fp else fp
 
 

@@ -52,6 +52,8 @@ import time
 
 from pyspark.sql import SparkSession
 
+from data_warehouse_punta_fina_spark.sources.readers import read_parquet
+
 TOMBSTONE = "_RETIRED.json"
 
 # family -> the artifact subdirectories a healthy superseding (batch-
@@ -155,7 +157,7 @@ def _validate_supersedes(
         from data_warehouse_punta_fina_spark.operators.similarity import IVFPQ_SCHEME
 
         stored_params(
-            spark.read.parquet(f"{dst}/codes"),
+            read_parquet(spark, f"{dst}/codes"),
             "scid",
             f"superseding IVF-PQ index at {dst!r}",
             IVFPQ_SCHEME,

@@ -47,6 +47,7 @@ from data_warehouse_punta_fina_spark.operators.freshness import (
 )
 from data_warehouse_punta_fina_spark.operators.materialize import materialize
 from data_warehouse_punta_fina_spark.sources.generators import literal_table
+from data_warehouse_punta_fina_spark.sources.readers import data_entries, read_parquet
 
 K1 = 1.2
 B = 0.75
@@ -348,7 +349,7 @@ def _bm25_append_plans(
             "(streaming/bm25_stream.bm25_maintenance_batch), or rebuild "
             "a batch-shaped index with bm25_build_index."
         )
-    old = spark.read.parquet(f"{index_dir}/stats").collect()[0]
+    old = read_parquet(spark, f"{index_dir}/stats").collect()[0]
     # one batch-sized pass gives BOTH the doc count and the batch's
     # content fingerprint; disjoint ids (the append contract) make the
     # merged fingerprint exact — counts/sums add, XORs xor — so the
@@ -368,7 +369,7 @@ def _bm25_append_plans(
     # counts add exactly. An eager materialization breaks the lineage on
     # the stored path so the merged table can overwrite it.
     old_df = materialize(
-        spark.read.parquet(f"{index_dir}/dfstats").select("term", "df"), eager=True
+        read_parquet(spark, f"{index_dir}/dfstats").select("term", "df"), eager=True
     )
     merged_df = (
         old_df.unionByName(df_new.select("term", "df"))
@@ -515,12 +516,12 @@ def _bm25_read_validated(
     missing-path error: a tokenizer or layout mismatch silently skews
     every score, and a wrong modulus hashes query terms to the wrong
     buckets."""
-    postings = spark.read.parquet(f"{index_dir}/postings")
+    postings = read_parquet(spark, f"{index_dir}/postings")
     stored = stored_params(postings, "tf", f"BM25 index at {index_dir!r}", BM25_SCHEME)
     return (
         postings,
-        spark.read.parquet(f"{index_dir}/dfstats"),
-        spark.read.parquet(f"{index_dir}/stats"),
+        read_parquet(spark, f"{index_dir}/dfstats"),
+        read_parquet(spark, f"{index_dir}/stats"),
         int(stored["n_buckets"]),
     )
 
@@ -821,7 +822,7 @@ def bm25_prf_search_index(
         verify_corpus=verify_corpus,
         verify_text_col=verify_text_col,
     )
-    postings = spark.read.parquet(f"{index_dir}/postings")
+    postings = read_parquet(spark, f"{index_dir}/postings")
     fb = (
         postings.join(F.broadcast(first.select("query_id", id_col)), id_col)
         .groupBy("query_id", "term")
@@ -1262,7 +1263,7 @@ def positional_compact_index(
         # count — reads the just-compacted postings (one aggregate),
         # never re-tokenizes anything
         n_indexed = (
-            spark.read.parquet(f"{dst_index_dir}/positions")
+            read_parquet(spark, f"{dst_index_dir}/positions")
             .agg(F.countDistinct(src_id).alias("n"))
             .collect()[0]["n"]
         )
@@ -1303,7 +1304,7 @@ def _pos_read_validated(spark, index_dir: str) -> tuple[DataFrame, int]:
     rejected — a layout/tokenizer mismatch silently breaks adjacency
     matching, and a wrong modulus empties every result. Shared by the
     searches, the append and the compaction."""
-    positions = spark.read.parquet(f"{index_dir}/positions")
+    positions = read_parquet(spark, f"{index_dir}/positions")
     stored = stored_params(
         positions, "tf", f"positional index at {index_dir!r}", POS_SCHEME
     )
@@ -1599,13 +1600,9 @@ def positional_append_index(
     identical to a full rebuild over the union — disjoint ids mean the
     batch's (term, doc) postings are complete arrays landing in the
     same bucket partitions a rebuild would put them in."""
-    from pyspark.errors import AnalysisException
-
     spark = new_docs.sparkSession
     _positions, n_buckets = _pos_read_validated(spark, index_dir)
-    try:
-        old = spark.read.parquet(f"{index_dir}/stats").collect()[0]
-    except AnalysisException as exc:
+    if not data_entries(spark, f"{index_dir}/stats"):
         # ADVICE r11: a stream-built index (positional_stream writes no
         # stats — its staleness discipline is the checkpoint) must fail
         # loudly with the remedy, not a raw path error
@@ -1614,7 +1611,8 @@ def positional_append_index(
             "stream-built index cannot take batch appends (its fingerprint "
             "discipline is the stream checkpoint; keep feeding the stream), "
             "and a missing index needs positional_build_index first."
-        ) from exc
+        )
+    old = read_parquet(spark, f"{index_dir}/stats").collect()[0]
     merged = merge_fingerprints(
         fingerprint_of(old), live_fingerprint(new_docs, id_col, text_col)
     )

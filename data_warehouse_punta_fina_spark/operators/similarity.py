@@ -33,6 +33,7 @@ from data_warehouse_punta_fina_spark.operators.freshness import (
 )
 from data_warehouse_punta_fina_spark.operators.materialize import build_concurrently, materialize
 from data_warehouse_punta_fina_spark.sources.generators import literal_table
+from data_warehouse_punta_fina_spark.sources.readers import data_entries, read_parquet
 
 
 def _prepare(df: DataFrame, id_col: str, vec_col: str, bucket_bits: int | None = None) -> DataFrame:
@@ -918,8 +919,8 @@ def ivfpq_build_index(
     cb.write.mode("overwrite").parquet(f"{index_dir}/codebook")
 
     spark = corpus.sparkSession
-    coarse_r = spark.read.parquet(f"{index_dir}/centroids")
-    cb_r = spark.read.parquet(f"{index_dir}/codebook")
+    coarse_r = read_parquet(spark, f"{index_dir}/centroids")
+    cb_r = read_parquet(spark, f"{index_dir}/codebook")
     cv = corpus.select(F.col(id_col), quantize(vec_col).alias("qvec"))
     cells = _assign(cv, coarse_r, id_col).select(id_col, "cid")
     codes = (
@@ -951,7 +952,7 @@ def ivfpq_build_index(
         .write.mode("overwrite")
         .parquet(f"{index_dir}/fingerprint")
     )
-    return spark.read.parquet(f"{index_dir}/codes")
+    return read_parquet(spark, f"{index_dir}/codes")
 
 
 def ivfpq_append_index(
@@ -980,9 +981,9 @@ def ivfpq_append_index(
     reported scores exact regardless.
     """
     spark = new_vectors.sparkSession
-    coarse = spark.read.parquet(f"{index_dir}/centroids")
-    cb = spark.read.parquet(f"{index_dir}/codebook")
-    codes0 = spark.read.parquet(f"{index_dir}/codes")
+    coarse = read_parquet(spark, f"{index_dir}/centroids")
+    cb = read_parquet(spark, f"{index_dir}/codebook")
+    codes0 = read_parquet(spark, f"{index_dir}/codes")
     if "ingest_batch" in codes0.columns:
         # a STREAM-MAINTAINED index partitions codes under
         # ingest_batch=<id>/cid=<c>; a batch append would write
@@ -1023,7 +1024,7 @@ def ivfpq_append_index(
             .write.mode("overwrite")
             .parquet(f"{index_dir}/fingerprint")
         )
-    return spark.read.parquet(f"{index_dir}/codes")
+    return read_parquet(spark, f"{index_dir}/codes")
 
 
 def ivfpq_compact_index(
@@ -1044,7 +1045,7 @@ def ivfpq_compact_index(
     in-place rewrite; cut over by path swap, the lakehouse convention;
     after the swap, ``operators.index_admin.retire_index_dir`` owns
     deleting the superseded layout and its epoch history)."""
-    codes = spark.read.parquet(f"{src_index_dir}/codes")
+    codes = read_parquet(spark, f"{src_index_dir}/codes")
     # compacting an unverifiable index would bless a corrupt layout
     stored = stored_params(
         codes, "scid", f"IVF-PQ index at {src_index_dir!r}", IVFPQ_SCHEME
@@ -1068,21 +1069,14 @@ def ivfpq_compact_index(
         .partitionBy("cid")
         .parquet(f"{dst_index_dir}/codes")
     )
-    for sub in ("centroids", "codebook"):
-        spark.read.parquet(f"{src_index_dir}/{sub}").write.mode("overwrite").parquet(
+    # a pre-fingerprint index compacts fingerprint-less (stays stale); the
+    # 1-row fingerprint is one file, so its copy is one file too
+    copied = ["centroids", "codebook"]
+    copied += ["fingerprint"] if data_entries(spark, f"{src_index_dir}/fingerprint") else []
+    for sub in copied:
+        read_parquet(spark, f"{src_index_dir}/{sub}").write.mode("overwrite").parquet(
             f"{dst_index_dir}/{sub}"
         )
-    from pyspark.errors import AnalysisException
-
-    try:
-        (
-            spark.read.parquet(f"{src_index_dir}/fingerprint")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{dst_index_dir}/fingerprint")
-        )
-    except AnalysisException:
-        pass  # a pre-fingerprint index compacts fingerprint-less (stays stale)
 
 
 def ivfpq_index_is_fresh(
@@ -1131,9 +1125,9 @@ def ivfpq_search_index(
     raises instead of silently scoring against the wrong codebook.
     """
     spark = queries.sparkSession
-    coarse = spark.read.parquet(f"{index_dir}/centroids")
-    cb = spark.read.parquet(f"{index_dir}/codebook")
-    codes = spark.read.parquet(f"{index_dir}/codes")
+    coarse = read_parquet(spark, f"{index_dir}/centroids")
+    cb = read_parquet(spark, f"{index_dir}/codebook")
+    codes = read_parquet(spark, f"{index_dir}/codes")
     missing = {id_col, "sub", "scid", "cid"} - set(codes.columns)
     if missing:
         raise ValueError(

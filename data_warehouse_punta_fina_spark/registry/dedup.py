@@ -27,7 +27,7 @@ from data_warehouse_punta_fina_spark.registry.shared import (
     query,
     sql_of,
 )
-from data_warehouse_punta_fina_spark.sources.readers import load_table
+from data_warehouse_punta_fina_spark.sources.readers import load_table, read_parquet
 
 
 @query(f"""
@@ -534,7 +534,7 @@ def doc_incremental_dedup_persisted(spark: SparkSession, sf_dir: str) -> DataFra
         minhash_band_keys(corpus).write.mode("overwrite").partitionBy(
             "band"
         ).parquet(idx)
-    bands = spark.read.parquet(idx)
+    bands = read_parquet(spark, idx)
     new_batch = docs.filter(F.col("doc_id") % 2 == 1)
     return incremental_lsh_dedup(
         corpus, new_batch, threshold=0.2, corpus_bands=bands

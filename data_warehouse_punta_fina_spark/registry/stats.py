@@ -26,7 +26,7 @@ from data_warehouse_punta_fina_spark.operators.validation import (
     validate_and_populate,
 )
 from data_warehouse_punta_fina_spark.registry.shared import _QUALITY, _R6D, _r2, _r6, query
-from data_warehouse_punta_fina_spark.sources.readers import footer_schema, load_table
+from data_warehouse_punta_fina_spark.sources.readers import load_table, read_parquet
 
 
 @query("""
@@ -145,8 +145,7 @@ def files_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # computes all of it from real scan metadata at runtime.
     parts = None
     for t in ("lineitem", "orders", "documents", "embeddings"):
-        path = f"{sf_dir.rstrip('/')}/{t}.parquet"
-        d = spark.read.schema(footer_schema(spark, path)).parquet(path).select(
+        d = read_parquet(spark, f"{sf_dir.rstrip('/')}/{t}.parquet").select(
             F.lit(t).alias("tbl"),
             F.col("_metadata.file_name").alias("file_name"),
             F.col("_metadata.row_index").alias("_ri"),

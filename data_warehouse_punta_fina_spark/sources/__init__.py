@@ -1,5 +1,4 @@
 from data_warehouse_punta_fina_spark.sources.readers import (  # noqa: F401
-    load_all_tables,
     load_table,
     read_csv,
     read_jdbc,

@@ -6,16 +6,19 @@ is declarative: Catalyst pushes filters/projections into the scan (JDBC
 pushdown, Parquet predicate pushdown + column pruning), which covers the
 reference's hand-written WHERE/column-list SQL (S2/S3) for free.
 
-Source tables (``load_table``) are read with a declared schema taken from
-the parquet footer on the driver (``footer_schema``), so opening a table
-launches no Spark job: a schema-less ``spark.read.parquet`` infers the
-schema with one job per read, even for a single file.
+Every parquet table the package opens, the source tables (``load_table``)
+and the indexes, models and stream state it persists, goes through
+``read_parquet``: its schema is read from the parquet footer on the driver
+(``footer_schema``) and declared to the reader, so opening a table launches
+no Spark job (a schema-less ``spark.read.parquet`` runs one inference job per
+read). ``data_entries`` answers "is the table there" with one Hadoop glob.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 
 import pyarrow as pa
 import pyarrow.fs as pafs
@@ -27,12 +30,18 @@ from pyspark.sql import types as T
 from data_warehouse_punta_fina_spark.schemas import SOURCE_SCHEMAS, TABLE_NAMES
 
 
-def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """Parquet scan (S6). Schema optional — parquet is self-describing."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Open the parquet table at ``path`` (S6) under its ``footer_schema``."""
+    return spark.read.schema(footer_schema(spark, path)).parquet(path)
+
+
+def data_entries(spark: SparkSession, dir_glob: str) -> list:
+    """Hadoop paths of the entries a parquet read sees (names not starting
+    with ``_`` or ``.``) directly under every directory matching the glob
+    ``dir_glob``: a table is there iff this is non-empty. One glob, no job."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(f"{dir_glob}/[!_.]*")
+    found = p.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(p)
+    return [st.getPath() for st in found or []]
 
 
 def read_csv(
@@ -211,32 +220,56 @@ _PRIMITIVES = (
 )
 
 
-def _first_data_file(path: str) -> tuple[pafs.FileSystem, str]:
-    """The file whose footer Spark's schema inference reads: ``path``
-    itself, or for a directory its first data file in path order, skipping
-    the names Spark's file index hides (``_SUCCESS``, ``.crc`` files)."""
+def _data_files(path: str) -> tuple[pafs.FileSystem, str, list[str]]:
+    """``path`` on its filesystem and the data files a read of it scans, in
+    path order: ``path`` itself, or every file below it with no component
+    Spark's file index hides (``_SUCCESS``, ``_temporary``, ``.crc``; a
+    ``_``-name holding ``=`` is a partition directory)."""
     if "://" in path:
         fs, local = pafs.FileSystem.from_uri(path)
     else:
         fs, local = pafs.LocalFileSystem(), os.path.abspath(path)
+    local = local.rstrip("/")
     info = fs.get_file_info(local)
     if info.type == pafs.FileType.File:
-        return fs, local
+        return fs, local, [local]
     if info.type != pafs.FileType.Directory:
         raise FileNotFoundError(f"parquet path does not exist: {path}")
     files = sorted(
         f.path
-        for f in fs.get_file_info(pafs.FileSelector(local))
-        if f.type == pafs.FileType.File and not f.base_name.startswith(("_", "."))
+        for f in fs.get_file_info(pafs.FileSelector(local, recursive=True))
+        if f.type == pafs.FileType.File
+        and not any(
+            c.startswith(".") or (c.startswith("_") and "=" not in c)
+            for c in f.path[len(local) + 1 :].split("/")
+        )
     )
     if not files:
         raise ValueError(f"{path}: directory holds no parquet data file")
-    return fs, files[0]
+    return fs, local, files
+
+
+def _partition_fields(path: str, local: str, files: list[str]) -> list[T.StructField]:
+    """The ``k=<int>`` directory columns between ``local`` and its ``files``,
+    typed as Spark's partition inference types them (``IntegerType`` if
+    every value fits 32 bits, else ``LongType``); any other raises."""
+    values: dict[str, list[int]] = {}
+    for d in dict.fromkeys(d for f in files for d in f[len(local) + 1 :].split("/")[:-1]):
+        column, eq, value = d.partition("=")
+        if not (eq and re.fullmatch(r"[+-]?[0-9]+", value) and -(2**63) <= int(value) < 2**63):
+            raise ValueError(f"{path}: partition directory {d!r} of column {column!r} is not <column>=<int>")
+        values.setdefault(column, []).append(int(value))
+    return [
+        T.StructField(c, T.IntegerType() if all(-(2**31) <= v < 2**31 for v in vs) else T.LongType())
+        for c, vs in values.items()
+    ]
 
 
 def footer_schema(spark: SparkSession, path: str) -> T.StructType:
     """The schema ``spark.read.parquet(path)`` would infer, read from one
-    parquet footer on the driver instead of by a Spark job.
+    parquet footer on the driver instead of by a Spark job, followed by
+    the partition columns of the directories below ``path``
+    (``_partition_fields``; a read of ``…/epoch=N`` gets no ``epoch``).
 
     A Spark-written file carries its row schema as JSON in the footer; it
     is used as is (``ParquetFileFormat.readSchemaFromFooter``). Any other
@@ -246,13 +279,14 @@ def footer_schema(spark: SparkSession, path: str) -> T.StructType:
     ``nanosAsLong`` on (``load_table`` sets it). The footer is read on
     every call, so a rewritten file is seen. Raises ``ValueError`` naming
     the column and its type when Spark has no mapping for it."""
-    fs, data_file = _first_data_file(path)
-    with pq.ParquetFile(data_file, filesystem=fs) as pf:
+    fs, local, files = _data_files(path)
+    partitions = _partition_fields(path, local, files)
+    with pq.ParquetFile(files[0], filesystem=fs) as pf:
         row_schema = (pf.metadata.metadata or {}).get(_SPARK_ROW_METADATA)
         arrow_schema = pf.schema_arrow
         physical_types = [c.physical_type for c in pf.schema]
     if row_schema is not None:
-        return T.StructType.fromJson(json.loads(row_schema))
+        return T.StructType(T.StructType.fromJson(json.loads(row_schema)).fields + partitions)
     conf = spark.conf
     infer_ntz = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
     binary_as_string = conf.get("spark.sql.parquet.binaryAsString", "false") == "true"
@@ -294,7 +328,7 @@ def footer_schema(spark: SparkSession, path: str) -> T.StructType:
                 return spark_type
         raise ValueError(f"{path}: column {column!r} has arrow type {t}, which Spark cannot read")
 
-    return T.StructType([T.StructField(f.name, convert(f.type, f.name)) for f in arrow_schema])
+    return T.StructType([T.StructField(f.name, convert(f.type, f.name)) for f in arrow_schema] + partitions)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -326,11 +360,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # runtime-settable SQL conf: required for TIMESTAMP(NANOS) parquet even
     # when the caller supplies its own SparkSession (e.g. the driver)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = footer_schema(spark, path)
-    df = spark.read.schema(schema).parquet(path)
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     declared = {f.name: f.dataType for f in SOURCE_SCHEMAS[name].fields}
-    actual = {f.name: f.dataType for f in schema.fields}
+    actual = {f.name: f.dataType for f in df.schema.fields}
     for c, want in declared.items():
         got = actual.get(c)
         if not isinstance(want, T.TimestampType):
@@ -342,11 +374,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view for spark.sql queries."""
-    for name, df in load_all_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    for name in TABLE_NAMES:
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_warehouse_punta_fina_spark.sources.readers import read_parquet
+
 
 def write_parquet(
     df: DataFrame,
@@ -234,7 +236,7 @@ def compact_parquet(
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     total = fs.getContentSummary(hpath).getLength()
     n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(src_path)
+    df = read_parquet(spark, src_path)
     if cluster_cols:
         out = df.repartitionByRange(n_files, *cluster_cols).sortWithinPartitions(
             *cluster_cols

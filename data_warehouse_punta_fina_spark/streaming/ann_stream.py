@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.operators.freshness import stamp, stored_params
 from data_warehouse_punta_fina_spark.operators.similarity import ivfpq_search_index
+from data_warehouse_punta_fina_spark.sources.readers import read_parquet
 
 BATCH_COL = "ingest_batch"
 
@@ -183,8 +184,8 @@ def ivfpq_maintenance_batch(
         epoch_subdirs=("fingerprint_epochs",),
         batch_subdirs=("codes",),
     )
-    coarse = spark.read.parquet(f"{index_dir}/centroids")
-    cb = spark.read.parquet(f"{index_dir}/codebook")
+    coarse = read_parquet(spark, f"{index_dir}/centroids")
+    cb = read_parquet(spark, f"{index_dir}/codebook")
     # the maintained index must be initialized with ivfpq_stream_init so
     # batches encode under validated parameters
     stored = stored_params(
@@ -224,7 +225,7 @@ def ivfpq_maintenance_batch(
         .parquet(f"{index_dir}/fingerprint_epochs/epoch={int(batch_id)}")
     )
     (
-        spark.read.parquet(f"{index_dir}/fingerprint_epochs/epoch={int(batch_id)}")
+        read_parquet(spark, f"{index_dir}/fingerprint_epochs/epoch={int(batch_id)}")
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(f"{index_dir}/fingerprint")

@@ -73,6 +73,7 @@ from data_warehouse_punta_fina_spark.operators.retrieval import (
     bm25_search_index,
     corpus_term_stats,
 )
+from data_warehouse_punta_fina_spark.sources.readers import read_parquet
 
 BATCH_COL = "ingest_batch"
 
@@ -164,18 +165,13 @@ def bm25_maintenance_batch(
     )
 
     src = max_epoch_below(spark, f"{index_dir}/dfstats_epochs", int(batch_id))
-    if src is None:
-        old_df = None
-        old_fp, old_total_dl = EMPTY, 0
-    else:
-        old_df = spark.read.parquet(f"{index_dir}/dfstats_epochs/epoch={src}").select(
-            "term", "df"
-        )
-        old = spark.read.parquet(f"{index_dir}/stats_epochs/epoch={src}").collect()[0]
-        old_fp, old_total_dl = fingerprint_of(old), int(old["total_dl"])
     merged_df = df_new.select("term", "df")
-    if old_df is not None:
-        merged_df = old_df.unionByName(merged_df)
+    old_fp, old_total_dl = EMPTY, 0
+    if src is not None:
+        old_df = read_parquet(spark, f"{index_dir}/dfstats_epochs/epoch={src}")
+        merged_df = old_df.select("term", "df").unionByName(merged_df)
+        old = read_parquet(spark, f"{index_dir}/stats_epochs/epoch={src}").collect()[0]
+        old_fp, old_total_dl = fingerprint_of(old), int(old["total_dl"])
     merged_df = (
         merged_df.groupBy("term")
         .agg(F.sum("df").cast("long").alias("df"))
@@ -203,14 +199,14 @@ def bm25_maintenance_batch(
     # committed copies, so a crash before either overwrite completes is
     # healed by replay re-publishing from the same epoch)
     (
-        spark.read.parquet(f"{index_dir}/dfstats_epochs/epoch={int(batch_id)}")
+        read_parquet(spark, f"{index_dir}/dfstats_epochs/epoch={int(batch_id)}")
         .select("term", "df", bucket)
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(f"{index_dir}/dfstats")
     )
     (
-        spark.read.parquet(f"{index_dir}/stats_epochs/epoch={int(batch_id)}")
+        read_parquet(spark, f"{index_dir}/stats_epochs/epoch={int(batch_id)}")
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(f"{index_dir}/stats")

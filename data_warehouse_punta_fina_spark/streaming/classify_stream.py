@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_punta_fina_spark.operators.classify import nb_score_model
 from data_warehouse_punta_fina_spark.operators.freshness import stamp
+from data_warehouse_punta_fina_spark.sources.readers import data_entries, read_parquet
 
 BATCH_COL = "ingest_batch"
 
@@ -111,7 +112,6 @@ def nb_maintenance_batch(
         guard_batch_regression,
         max_epoch_below,
         prune_epochs,
-        read_epoch,
         write_epoch,
     )
     from data_warehouse_punta_fina_spark.functions.money import pround
@@ -126,10 +126,7 @@ def nb_maintenance_batch(
         _list_partition_ids,
     )
 
-    jvm = spark._jvm
-    _conf = spark._jsc.hadoopConfiguration()
-    _cond = jvm.org.apache.hadoop.fs.Path(f"{model_dir}/cond")
-    if _cond.getFileSystem(_conf).exists(_cond) and not _list_partition_ids(
+    if data_entries(spark, f"{model_dir}/cond") and not _list_partition_ids(
         spark, f"{model_dir}/cond_epochs", "epoch"
     ):
         raise ValueError(
@@ -163,18 +160,16 @@ def nb_maintenance_batch(
     cond_m = cond_b.select("_y", "term", "_c")
     docs_m = docs_b
     if src is not None:
-        cond_m = read_epoch(spark, f"{model_dir}/cond_epochs", src).unionByName(cond_m)
-        docs_m = read_epoch(spark, f"{model_dir}/classdocs_epochs", src).unionByName(
-            docs_m
-        )
+        cond_m = read_parquet(spark, f"{model_dir}/cond_epochs/epoch={src}").unionByName(cond_m)
+        docs_m = read_parquet(spark, f"{model_dir}/classdocs_epochs/epoch={src}").unionByName(docs_m)
     cond_m = cond_m.groupBy("_y", "term").agg(F.sum("_c").cast("long").alias("_c"))
     docs_m = docs_m.groupBy("_y").agg(F.sum("_nd").cast("long").alias("_nd"))
     write_epoch(cond_m, f"{model_dir}/cond_epochs", int(batch_id))
     write_epoch(docs_m, f"{model_dir}/classdocs_epochs", int(batch_id))
 
     # ---- publish the nb_save_model layout LAST --------------------------
-    cond_new = read_epoch(spark, f"{model_dir}/cond_epochs", int(batch_id))
-    docs_new = read_epoch(spark, f"{model_dir}/classdocs_epochs", int(batch_id))
+    cond_new = read_parquet(spark, f"{model_dir}/cond_epochs/epoch={int(batch_id)}")
+    docs_new = read_parquet(spark, f"{model_dir}/classdocs_epochs/epoch={int(batch_id)}")
     cond_new.select(
         "_y", "term", stamp("_c", NB_SCHEME, logprob_scale=6)
     ).write.mode("overwrite").parquet(f"{model_dir}/cond")

@@ -39,6 +39,7 @@ from data_warehouse_punta_fina_spark.operators.dedup import (
     minhash_band_keys,
 )
 from data_warehouse_punta_fina_spark.sources.generators import literal_table
+from data_warehouse_punta_fina_spark.sources.readers import data_entries, read_parquet
 
 BATCH_COL = "ingest_batch"
 
@@ -49,11 +50,9 @@ def _read_or_empty(spark: SparkSession, path: str, schema: T.StructType) -> Data
     read, so a corrupt/unreadable existing table raises: silently
     treating the corpus as empty would admit every duplicate in the
     batch."""
-    from data_warehouse_punta_fina_spark.streaming.epochs import _data_entries
-
-    if not _data_entries(spark, path):
+    if not data_entries(spark, path):
         return literal_table(spark, [], schema)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def dedup_ingest_batch(

@@ -32,6 +32,8 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_warehouse_punta_fina_spark.sources.readers import data_entries
+
 _log = logging.getLogger(__name__)
 
 
@@ -78,17 +80,6 @@ def _list_partition_ids(spark: SparkSession, path: str, prefix: str) -> list[int
             except ValueError:
                 continue
     return out
-
-
-def _data_entries(spark: SparkSession, dir_glob: str) -> list:
-    """Hadoop paths of the data entries directly under every directory
-    matching the glob ``dir_glob``: names that do not start with ``_`` or
-    ``.``, which a parquet read skips (``_SUCCESS``, ``_temporary``,
-    checksum files). One glob call, no Spark job; empty when nothing
-    matches or the directory is absent."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(f"{dir_glob}/[!_.]*")
-    found = p.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(p)
-    return [st.getPath() for st in found or []]
 
 
 def guard_batch_regression(
@@ -202,22 +193,17 @@ def guard_stream_ownership(
 def max_epoch_below(spark: SparkSession, path: str, below: int) -> int | None:
     """Newest committed epoch strictly below ``below`` (None if the tree
     is empty/absent). An ``epoch=<n>`` directory counts once it holds a
-    data entry (:func:`_data_entries`) — the epochs a parquet read of
+    data entry (``sources.readers.data_entries``) — the epochs a parquet read of
     ``path`` discovers, so a crashed attempt that left only
     ``_temporary`` behind is skipped. Resolved from one Hadoop glob over
     directory names, no Spark job."""
     ids: list[int] = []
-    for entry in _data_entries(spark, f"{path}/epoch=*"):
+    for entry in data_entries(spark, f"{path}/epoch=*"):
         try:
             ids.append(int(entry.getParent().getName().split("=", 1)[1]))
         except ValueError:
             continue
     return max((e for e in ids if e < below), default=None)
-
-
-def read_epoch(spark: SparkSession, path: str, epoch: int) -> DataFrame:
-    """One epoch's committed copy of a global-state table."""
-    return spark.read.parquet(f"{path}/epoch={int(epoch)}")
 
 
 def write_epoch(df: DataFrame, path: str, epoch: int, partition_by: list[str] | None = None) -> None:

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -89,11 +90,16 @@ def test_sources_roundtrip(spark, tmp_path):
     back = read_csv(spark, csv, schema=df.schema)
     assert {tuple(r) for r in back.collect()} == {tuple(r) for r in df.collect()}
 
-    # partitioned parquet: partition pruning path exists
+    # partitioned parquet: partition pruning path exists; read_parquet
+    # types integer partition directories only, and names any other column
     pq2 = str(tmp_path / "pq2")
-    write_parquet(df, pq2, partition_by=["s"])
-    pruned = read_parquet(spark, pq2).filter(F.col("s") == "a")
+    write_parquet(df, pq2, partition_by=["id"])
+    pruned = read_parquet(spark, pq2).filter(F.col("id") == 1)
     assert pruned.count() == 1
+    pq3 = str(tmp_path / "pq3")
+    write_parquet(df, pq3, partition_by=["s"])
+    with pytest.raises(ValueError, match="column 's'"):
+        read_parquet(spark, pq3)
 
 
 def test_jsonl_roundtrip_and_corrupt_line(spark, tmp_path):

@@ -383,6 +383,104 @@ def test_load_table_equals_inferred_read(spark, sf):
         assert diff.isEmpty(), name
 
 
+@pytest.fixture(scope="module")
+def persisted_tables(spark, tmp_path_factory):
+    """One small copy of every persisted layout the engine writes, built
+    by its own writers under one directory."""
+    from data_warehouse_punta_fina_spark.operators.classify import nb_save_model
+    from data_warehouse_punta_fina_spark.operators.dedup import minhash_band_keys
+    from data_warehouse_punta_fina_spark.operators.retrieval import (
+        bm25_build_index,
+        positional_build_index,
+    )
+    from data_warehouse_punta_fina_spark.operators.similarity import ivfpq_build_index
+    from data_warehouse_punta_fina_spark.sources.generators import literal_table
+    from data_warehouse_punta_fina_spark.sources.readers import load_table
+    from data_warehouse_punta_fina_spark.streaming.bm25_stream import bm25_maintenance_batch
+
+    root = str(tmp_path_factory.mktemp("persisted"))
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text").filter("doc_id < 12")
+    bm25_build_index(docs, f"{root}/bm25", n_buckets=4)
+    for batch_id in (0, 1):
+        batch = docs.filter(F.col("doc_id") % 2 == batch_id)
+        bm25_maintenance_batch(batch, batch_id, f"{root}/bm25_stream", n_buckets=4)
+    positional_build_index(docs, f"{root}/positional", n_buckets=4)
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    ivfpq_build_index(emb.filter("vec_id < 8"), f"{root}/ivfpq", n_cells=2, m=2, n_centroids=2, iters=1)
+    minhash_band_keys(docs).write.partitionBy("band").parquet(f"{root}/bands")
+    labeled = literal_table(
+        spark, [(1, "gato perro", "es"), (2, "cat dog", "en")], "doc_id long, text string, label string"
+    )
+    nb_save_model(labeled, f"{root}/nb")
+    wide = literal_table(spark, [(1, 2**40), (2, 7)], "v int, k long")
+    wide.write.partitionBy("k").parquet(f"{root}/wide")
+    return root
+
+
+@pytest.mark.parametrize(
+    "table",
+    [
+        "bm25/postings",
+        "bm25_stream/postings",
+        "positional/positions",
+        "ivfpq/codes",
+        "bands",
+        "nb/cond",
+        "bm25_stream/dfstats_epochs/epoch=1",
+        "wide",
+    ],
+)
+def test_read_parquet_equals_inferred_read(spark, persisted_tables, table):
+    """Every persisted layout the engine writes (BM25 batch and stream-built,
+    positional, IVF-PQ codes, LSH bands, an NB model, one epoch table, a
+    partition value past 32 bits) opens through ``read_parquet`` with no
+    job, and with the schema (field metadata and partition column types
+    included) and the rows of Spark's own schema inference."""
+    from data_warehouse_punta_fina_spark.sources.readers import read_parquet
+
+    path = f"{persisted_tables}/{table}"
+    want = spark.read.parquet(path)
+    sc = spark.sparkContext
+    sc.setJobGroup("read-parquet", "read_parquet must not run jobs")
+    try:
+        got = read_parquet(spark, path)
+        assert _group_job_ids(sc, "read-parquet") == []
+    finally:
+        sc.setJobGroup("", "")
+    assert got.schema == want.schema
+    assert [f.metadata for f in got.schema] == [f.metadata for f in want.schema]
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
+def test_read_parquet_refuses_non_integer_partition(spark, tmp_path):
+    """A partition directory whose value is not an integer raises, naming
+    the table and the column: no type is guessed for it."""
+    from data_warehouse_punta_fina_spark.sources.generators import literal_table
+    from data_warehouse_punta_fina_spark.sources.readers import read_parquet
+
+    path = str(tmp_path / "by_name")
+    literal_table(spark, [(1, "a")], "v int, s string").write.partitionBy("s").parquet(path)
+    with pytest.raises(ValueError, match=r"by_name.*column 's'"):
+        read_parquet(spark, path)
+
+
+def test_missing_table_is_absent_without_a_job(spark, tmp_path):
+    """``data_entries`` reads a missing table, and a directory holding only
+    hidden entries, as absent, and runs no job."""
+    from data_warehouse_punta_fina_spark.sources.readers import data_entries
+
+    (tmp_path / "hidden").mkdir()
+    (tmp_path / "hidden" / "_SUCCESS").touch()
+    sc = spark.sparkContext
+    sc.setJobGroup("data-entries", "data_entries must not run jobs")
+    try:
+        assert data_entries(spark, str(tmp_path / "missing")) == []
+        assert data_entries(spark, str(tmp_path / "hidden")) == []
+        assert _group_job_ids(sc, "data-entries") == []
+    finally:
+        sc.setJobGroup("", "")
+
+
 def test_load_table_launches_no_job(spark, sf_dir):
     """Opening a source table is pure planning: the schema comes from the
     parquet footer on the driver, not from a Spark inference job."""

@@ -284,6 +284,51 @@ def test_drain_is_the_only_write_stream_site():
     assert not runners, f"per-operator stream runners are back: {runners}"
 
 
+def test_readers_is_the_only_parquet_open_site():
+    """sources/readers.py is the one module that opens a parquet table: no
+    other package module calls ``.read.parquet(`` or ``footer_schema``,
+    or imports ``AnalysisException`` to probe whether a table exists
+    (``data_entries`` answers that); ``read_parquet`` takes no schema and
+    ``read_epoch`` is gone. ``sources/txlog.py``'s
+    ``read.schema(<log schema>).parquet(<files>)`` is not that chain: it
+    reads the explicit files its own log lists, under the schema the log
+    stores."""
+    pkg = os.path.join(REPO, "data_warehouse_punta_fina_spark")
+    seam = os.path.join("sources", "readers.py")
+    sites, checked = [], 0
+    for root, _dirs, files in os.walk(pkg):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            checked += 1
+            rel = os.path.relpath(os.path.join(root, fname), pkg)
+            tree = ast.parse(open(os.path.join(root, fname), encoding="utf-8").read())
+            for node in ast.walk(tree):
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    a = node.args
+                    names = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
+                    if rel == seam and node.name == "read_parquet":
+                        assert names == ["spark", "path"], names
+                    if node.name == "read_epoch":
+                        sites.append(f"{rel}:{node.lineno}:read_epoch")
+                if rel == seam:
+                    continue
+                if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                    f = node.func
+                    if f.attr == "parquet" and isinstance(f.value, ast.Attribute) and f.value.attr == "read":
+                        sites.append(f"{rel}:{node.lineno}:.read.parquet(")
+                if isinstance(node, ast.Call):
+                    callee = getattr(node.func, "attr", getattr(node.func, "id", None))
+                    if callee == "footer_schema":
+                        sites.append(f"{rel}:{node.lineno}:footer_schema")
+                if isinstance(node, (ast.Import, ast.ImportFrom)) and any(
+                    alias.name.split(".")[-1] == "AnalysisException" for alias in node.names
+                ):
+                    sites.append(f"{rel}:{node.lineno}:AnalysisException")
+    assert checked > 50
+    assert not sites, f"parquet opened or probed outside sources/readers.py: {sites}"
+
+
 def test_freshness_is_the_only_parameter_metadata_site():
     """operators/freshness.py is the one module that knows how a
     persisted index or model records its build parameters: no other
