@@ -11,7 +11,8 @@ Correct by arithmetic, not by trust: sums/counts are distributive, so
 provided the measures are DECIMAL (float partial sums re-associate;
 decimal sums are associative bit-for-bit, the engine-wide policy). The
 oracle for the demo query recomputes from scratch over the full input —
-a genuinely different computation path, not a mirrored formula.
+a genuinely different computation path, not a mirrored formula. The
+demo query is ``revenue_incremental_merge`` (registry/olap.py).
 
 Scale shape: the delta aggregates map-side (delta-sized), the merge is
 one key-keyed full-outer join of two AGGREGATE tables (both tiny next to
@@ -80,55 +81,3 @@ def incremental_agg_merge(
     )
     return merged.select(*out_cols)
 
-
-def apply_change_feed(
-    prev_agg: DataFrame,
-    changes: DataFrame,
-    keys: list[str],
-    sum_cols: list[str],
-    count_col: str = "n",
-    change_type_col: str = "_change_type",
-) -> DataFrame:
-    """CDC-driven view maintenance: fold a change-data-feed batch
-    (insert/delete row images — ``TxTable.read_changes`` or the
-    ``txlog_changes`` stream) into an aggregate table. Inserts add,
-    deletes subtract (a copy-on-write UPDATE arrives as its
-    delete+insert pair and nets to the in-place change); groups whose
-    count reaches zero are DROPPED, so the maintained state equals a
-    full recompute of the current snapshot bit-for-bit — extinct keys
-    must vanish, not linger as zero rows.
-
-    Same shape as :func:`incremental_agg_merge`: the signed delta
-    aggregates map-side (changes-sized), one key-keyed full-outer join
-    against the aggregate state. History is never re-read — feeding this
-    from the change stream IS incremental materialized-view maintenance.
-    """
-    sign = F.when(F.col(change_type_col) == "insert", F.lit(1)).otherwise(F.lit(-1))
-    d = changes.groupBy(*keys).agg(
-        *[F.sum(sign * F.col(c)).alias(c) for c in sum_cols],
-        F.sum(sign).alias(count_col),
-    )
-    p = prev_agg
-    for c in [*sum_cols, count_col]:
-        d = d.withColumnRenamed(c, f"_d_{c}")
-        p = p.withColumnRenamed(c, f"_p_{c}")
-    merged = p.join(d, keys, "full_outer")
-    out_cols = [F.col(k) for k in keys]
-    for c in sum_cols:
-        out_cols.append(
-            (
-                F.coalesce(F.col(f"_p_{c}"), F.lit(0))
-                + F.coalesce(F.col(f"_d_{c}"), F.lit(0))
-            )
-            .cast(dict(p.dtypes)[f"_p_{c}"])
-            .alias(c)
-        )
-    out_cols.append(
-        (
-            F.coalesce(F.col(f"_p_{count_col}"), F.lit(0))
-            + F.coalesce(F.col(f"_d_{count_col}"), F.lit(0))
-        )
-        .cast("long")
-        .alias(count_col)
-    )
-    return merged.select(*out_cols).filter(F.col(count_col) != 0)

@@ -13,9 +13,6 @@ from data_warehouse_punta_fina_spark.sources.generators import (  # noqa: F401
     literal_table,
     monthly_periods,
 )
-from data_warehouse_punta_fina_spark.sources.pydatasource import (  # noqa: F401
-    SyntheticDocsDataSource,
-)
 from data_warehouse_punta_fina_spark.sources.writers import (  # noqa: F401
     compact_parquet,
     write_bucketed,

@@ -18,11 +18,11 @@ operator is a per-batch function (``dedup_ingest_batch``,
 ``bm25_maintenance_batch``, …) handed to it, e.g.
 ``drain(read_file_stream(spark, path, schema, max_files_per_trigger=1),
 ckpt, functools.partial(bm25_maintenance_batch, index_dir=idx))``. This
-module is the only one that touches ``.writeStream``. True streaming
-additions (watermarked event-time windows, stateful sessionize) go beyond
-the reference: the batch-equivalent windowed aggregation lives in
-registry/events.py (events_tumbling_window) with a SQL oracle; this module
-provides the incremental execution of the same plans.
+module is the only one that touches ``.writeStream``.
+:func:`run_available_now` is the same drain for a plain file sink.
+:func:`tumbling_window_agg` is the one plan here that also runs on a
+stream (with a watermark); its batch form is the events_tumbling_window
+query, which has a SQL oracle.
 """
 
 from __future__ import annotations
@@ -95,48 +95,6 @@ def tumbling_window_agg(
         F.col("n_events"),
         F.col("total_value"),
     )
-
-
-def event_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    left_ts: str,
-    right_ts: str,
-    interval: str = "1 hour",
-    how: str = "inner",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream (or batch) event-time interval join: rows match when
-    keys are equal and ``right_ts`` falls within [left_ts, left_ts +
-    interval]. The §2.11 shape Spark bounds state with — the interval
-    condition is what lets the engine EVICT buffered rows once the
-    watermark passes their join window, instead of holding both streams
-    forever.
-
-    ``how='left_outer'`` additionally emits left rows that found no match,
-    with nulls, AFTER the watermark passes their window — so unmatched
-    results are delayed by the watermark, never wrong. Both inputs get
-    ``watermark`` applied when streaming; join-state size is then bounded
-    by (watermark + interval) of data per key. NOTE (join semantics, not a
-    bug): the outer join's watermark is the MIN across both input streams
-    — if one side simply stops receiving data, unmatched results stop
-    flushing; production feeds emit heartbeats for exactly this reason
-    (tests/test_streaming.py proves the flush with sentinel rows).
-
-    The same expression on static frames is the batch equivalent — used as
-    the oracle in tests. The four column names must be distinct across the
-    two frames (alias before calling).
-    """
-    lw = left.withWatermark(left_ts, watermark) if left.isStreaming else left
-    rw = right.withWatermark(right_ts, watermark) if right.isStreaming else right
-    cond = (
-        (F.col(left_key) == F.col(right_key))
-        & (F.col(right_ts) >= F.col(left_ts))
-        & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {interval}"))
-    )
-    return lw.join(rw, cond, how)
 
 
 def run_available_now(

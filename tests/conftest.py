@@ -30,7 +30,6 @@ SLOW_TESTS = {
     "test_driver_window_spark_schemas_are_scalar",
     "test_round10_debuts_invariant_under_adversarial_partitions",
     "test_continuous_dedup_stream_resumes_from_checkpoint",
-    "test_stream_stream_left_outer_join_emits_after_watermark",
     "test_classify_stream_matches_batch_and_is_idempotent",
     "test_nb_maintenance_stream_equals_monolithic_and_replay_safe",
     "test_ivfpq_append_is_encode_only_and_validated",
@@ -41,7 +40,7 @@ SLOW_TESTS = {
     "test_drop_duplicates_within_watermark_bounds_state",
     "test_ivfpq_maintenance_stream_equals_batch_appends_and_replay_safe",
     "test_ivfpq_content_fingerprint_refresh_cycle",
-    "test_dedup_stream_over_custom_python_source",
+    "test_dedup_stream_collapses_and_rejects_exact_copies",
     "test_dims_have_default_member_and_unique_sks",
     "test_maintenance_refuses_batch_built_artifacts",
     "test_ann_stream_matches_batch_and_is_idempotent",
@@ -58,7 +57,6 @@ SLOW_TESTS = {
     "test_auc_and_ap_drop_null_scores_consistently",
     "test_bm25_compact_maintained_index_roundtrip",
     "test_range_partitioned_cumsum_fuzz",
-    "test_stream_stream_interval_join_equals_batch",
     "test_bm25_federated_equals_monolithic_and_validates",
     "test_retire_refusals",
     "test_bm25_append_preserves_content_fingerprint",
@@ -66,7 +64,6 @@ SLOW_TESTS = {
     "test_incremental_lsh_dedup_with_persisted_index",
     "test_federated_refresh_rebuilds_only_stale_shards",
     "test_bm25_maintenance_batch_id_regression_guarded",
-    "test_txlog_change_feed_streaming_source",
     "test_bm25_topk_ranks_by_relevance",
     "test_ivfpq_plan_shape",
     "test_bm25_prf_persisted_equals_inquery_and_reads_no_corpus",

@@ -363,41 +363,6 @@ def test_read_jsonl_tolerant_quarantines_bad_lines(spark, tmp_path):
     assert lines == {"this is not json", '{"id": broken'}
 
 
-def test_python_datasource_synthetic_docs(spark):
-    """Spark 4 Python DataSource: register once, read like a built-in
-    format; partition-parallel, deterministic across reruns, and usable
-    as fuel for the dedup operators (dup_every plants exact copies)."""
-    from data_warehouse_punta_fina_spark.sources.pydatasource import (
-        SyntheticDocsDataSource,
-    )
-
-    spark.dataSource.register(SyntheticDocsDataSource)
-    df = (
-        spark.read.format("synthetic_docs")
-        .option("n", 200)
-        .option("numPartitions", 8)
-        .option("dup_every", 10)
-        .load()
-    )
-    assert df.columns == ["doc_id", "text", "source"]
-    assert df.count() == 200
-    assert df.rdd.getNumPartitions() == 8
-    # deterministic across actions/reruns
-    a = sorted(map(tuple, df.collect()))
-    b = sorted(map(tuple, df.collect()))
-    assert a == b
-    # planted duplicates: doc 10k+1 copies doc 10k
-    rows = {r["doc_id"]: r["text"] for r in df.collect()}
-    assert rows[11] == rows[10] and rows[21] == rows[20]
-    assert rows[12] != rows[10]
-
-    # the planted dups surface through the engine's own exact dedup
-    from data_warehouse_punta_fina_spark.operators.dedup import exact_dedup
-
-    kept = exact_dedup(df, text_col="text", id_col="doc_id")
-    assert kept.count() == 200 - 20  # one dup per block of 10
-
-
 def test_chunk_documents_windows_and_edges(spark):
     """Overlap windows advance by the stride, keep the tail, skip empty
     docs, and reject a non-advancing overlap."""
