@@ -199,39 +199,3 @@ def pii_hits(col: Column | str) -> Column:
             _placeholder_count(red, token) - _placeholder_count(c, token), F.lit(0)
         )
     return n
-
-
-def luhn_valid(col: Column | str) -> Column:
-    """Luhn checksum (ISO/IEC 7812) over a digit-string column — the
-    precision filter for payment-card PII: a regex can only say "13-19
-    digits in a row", the Luhn check rejects ~90% of random digit runs,
-    so redaction/reporting pipelines gate `<NUMBER>` candidates through
-    this before counting them as card-like. Pure codegen (split +
-    higher-order transform/aggregate, no UDF): from the RIGHT, every
-    second digit doubles (minus 9 when > 9), sum % 10 == 0. NULL for
-    empty/non-digit input (the caller's regex guarantees digits; this
-    guards composition bugs rather than hiding them)."""
-    c = F.col(col) if isinstance(col, str) else col
-    # split(c, "") emitting exactly one element per character with no
-    # trailing "" has differed across Spark/Java versions (a trailing
-    # empty token would NULL the aggregate and flip the doubling
-    # parity) — filter empties out so the checksum is engine-version
-    # independent (ADVICE r9)
-    digits = F.filter(F.split(c, ""), lambda d: d != F.lit(""))
-    n = F.size(digits)
-    total = F.aggregate(
-        F.transform(
-            digits,
-            lambda d, i: F.when(
-                (n - i) % 2 == 0,
-                F.when(d.cast("int") * 2 > 9, d.cast("int") * 2 - 9).otherwise(
-                    d.cast("int") * 2
-                ),
-            ).otherwise(d.cast("int")),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return F.when(
-        c.rlike("^[0-9]+$"), F.pmod(total, F.lit(10)) == 0
-    ).otherwise(F.lit(None).cast("boolean"))

@@ -48,13 +48,11 @@ from data_warehouse_punta_fina_spark.operators.validation import (  # noqa: F401
 )
 from data_warehouse_punta_fina_spark.operators.text_quality import (  # noqa: F401
     bigram_surprisal,
-    filter_sources,
     ngram_rows,
     repetition_metrics,
     source_quality_report,
     unigram_surprisal,
 )
-from data_warehouse_punta_fina_spark.operators.grouped import isotonic_fit  # noqa: F401
 from data_warehouse_punta_fina_spark.operators.incremental import (  # noqa: F401
     aggregate_delta,
     incremental_agg_merge,

@@ -993,63 +993,3 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bit
             F.col(f"_v{j}") > 0, F.lit(1 << (bits - 1 - j)).cast("long")
         ).otherwise(F.lit(0))
     return per_doc.select(F.col(id_col), fingerprint.alias("simhash"))
-
-
-def plan_lsh_params(
-    threshold: float,
-    num_hashes: int,
-    fn_weight: float = 0.5,
-) -> dict:
-    """Choose (bands, rows_per_band) for :func:`minhash_lsh_pairs` /
-    :func:`minhash_band_keys` given a target Jaccard ``threshold`` — the
-    S-curve optimization every production MinHash system runs before
-    indexing (the datasketch MinHashLSH planner shape).
-
-    For b bands of r rows, a pair with true Jaccard s collides with
-    probability ``1 − (1 − s^r)^b``. The planner scores every divisor
-    split b·r = num_hashes by the integrated error against the ideal
-    step function at ``threshold``:
-
-        FP = ∫₀^t P(s) ds   (pairs BELOW threshold that still collide)
-        FN = ∫_t^1 (1 − P(s)) ds   (pairs above it that never do)
-
-    and minimizes ``(1 − fn_weight)·FP + fn_weight·FN`` (midpoint rule,
-    1000 points — deterministic pure Python; ties prefer more bands,
-    i.e. recall). Returns {'bands', 'rows_per_band', 'fp_area',
-    'fn_area', 'threshold_50'} where ``threshold_50 = (1/b)^(1/r)`` is
-    the similarity at which collision probability crosses ~50% — the
-    planner's one-number sanity check against the requested threshold.
-
-    Driver-side planning only (no DataFrames): run once, then pass
-    ``bands=`` to the indexing operators.
-    """
-    if not 0 < threshold < 1:
-        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
-    best = None
-    for bands in range(1, num_hashes + 1):
-        if num_hashes % bands != 0:
-            continue
-        rows = num_hashes // bands
-        steps = 1000
-        fp = fn = 0.0
-        for i in range(steps):
-            s = (i + 0.5) / steps
-            p = 1.0 - (1.0 - s**rows) ** bands
-            if s < threshold:
-                fp += p
-            else:
-                fn += 1.0 - p
-        fp /= steps
-        fn /= steps
-        err = (1.0 - fn_weight) * fp + fn_weight * fn
-        key = (err, -bands)
-        if best is None or key < best[0]:
-            best = (key, bands, rows, fp, fn)
-    _, bands, rows, fp, fn = best
-    return {
-        "bands": bands,
-        "rows_per_band": rows,
-        "fp_area": round(fp, 6),
-        "fn_area": round(fn, 6),
-        "threshold_50": round((1.0 / bands) ** (1.0 / rows), 6),
-    }

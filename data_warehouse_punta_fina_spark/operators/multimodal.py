@@ -1,30 +1,12 @@
-"""Multimodal (image/audio/video) column plumbing (north-star extensions).
+"""Media payloads as opaque ``binary`` columns (a north-star extension).
 
-Media ride through the engine as opaque ``binary`` payloads + typed
-metadata (schemas.MEDIA_ASSET). Decode / feature-extraction runs in
-Arrow-batched pandas via ``mapInPandas`` — the only sanctioned Python
-path — so each task decodes a whole batch without per-row overhead, and
-partitioning stays fully distributed (payloads never visit the driver).
-
-Codec posture (honest tiering — no codec libraries in this container):
-
-- **REAL, no gate**: raw-PCM16 audio DSP (:func:`audio_band_energies`,
-  numpy rfft) and uncompressed images — netpbm (:func:`decode_netpbm`,
-  P5/PGM grayscale and P6/PPM RGB) and BMP (:func:`decode_bmp`,
-  BITMAPINFOHEADER 8-bit palette / 24-bit BGR) parse with plain numpy;
-  :func:`resize_images` and :func:`extract_features` auto-detect the
-  magic and decode genuinely, so the decode → resize → feature lane
-  runs end-to-end with no stub for these formats (round-10,
-  VERDICT r9 #6).
-- PNG decodes FOR REAL too (round-11; palette + Adam7-interlaced lanes
-  round-14): stdlib zlib inflate + a pure-numpy unfilter — 8-bit
-  grayscale/truecolor/palette, interlace 0/1 (:func:`decode_png`).
-- **STUBBED**: JPEG/MP3/... need PIL/librosa/ffmpeg (their codecs have
-  no stdlib equivalent). ``decode_stub=True`` (default) produces
-  deterministic fake features from the bytes; ``decode_stub=False``
-  raises NotImplementedError where the real decoder slots in. The
-  Spark-side contract — schema, batch shape, partition pruning — is
-  real and tested either way.
+:func:`media_from_documents` wraps the documents table as media rows
+whose payload is the text's UTF-8 bytes. :func:`extract_features` turns
+each payload into byte-level features (length, big-endian first word,
+byte-sum checksum) in Arrow-batched pandas via ``mapInPandas``, so the
+payloads stay on the executors. No codec decodes anything: the
+features are defined on the raw bytes, as in the ``media_features``
+oracle SQL.
 """
 
 from __future__ import annotations
@@ -52,49 +34,16 @@ def media_from_documents(docs: DataFrame, modality: str = "image") -> DataFrame:
     )
 
 
-def extract_features(media: DataFrame, decode_stub: bool = True, batch_size_hint: int = 256) -> DataFrame:
-    """Decode+featurize each asset via Arrow-batched mapInPandas.
-
-    Uncompressed image payloads (netpbm P5/P6, BMP) and PNG (stdlib
-    zlib inflate + pure-numpy unfilter — round 11) decode FOR REAL —
-    their features derive from the parsed raster: ``header_word`` packs
-    the genuine (width << 16) | height, ``checksum`` sums the decoded
-    luma (so two encodings of the same image agree). Other payloads use
-    the deterministic byte-level stub, or raise when
-    ``decode_stub=False`` (where the PIL/librosa/ffmpeg codec slots
-    in). The plumbing (binary batches in, feature rows out, 1:1) is the
-    production shape either way.
-    """
+def extract_features(media: DataFrame) -> DataFrame:
+    """Byte-level features of each asset via Arrow-batched mapInPandas,
+    one output row per input row: ``n_bytes`` is the payload length,
+    ``header_word`` its first four bytes as a big-endian word (0 when
+    shorter), ``checksum`` the byte sum mod 1e9+7. A NULL payload gives
+    NULL ``n_bytes`` and ``checksum`` and a 0 ``header_word``."""
 
     def _one(b: bytes | None):
-        if b is not None and (
-            (len(b) >= 2 and b[:2] in (b"P5", b"P6", b"BM")) or b[:8] == _PNG_SIG
-        ):
-            try:
-                if b[:8] == _PNG_SIG:
-                    img = decode_png(b)
-                elif b[:2] == b"BM":
-                    img = decode_bmp(b)
-                else:
-                    img = decode_netpbm(b)
-            except ValueError:
-                img = None  # magic collision on a non-image payload
-            if img is not None and max(img.shape) <= 0xFFFF:
-                # the (w << 16) | h packing holds 16 bits per dimension —
-                # a decoder-legal but oversized raster (decode_bmp allows
-                # up to 1<<20) would fold height bits into the width
-                # field (ADVICE r10), so oversized rasters fall through
-                # to the byte-level stub instead of packing corrupted dims
-                h, w = img.shape
-                return len(b), (w << 16) | h, int(round(img.sum())) % 1_000_000_007
-        if not decode_stub:
-            raise NotImplementedError(
-                "real media decoding of other compressed formats requires "
-                "PIL/librosa/ffmpeg — not available in this container "
-                "(netpbm/BMP/PNG payloads decode genuinely)"
-            )
         if b is None:
-            return 0, 0, 0
+            return None, 0, None
         header = int.from_bytes(b[:4], "big") if len(b) >= 4 else 0
         return len(b), header, sum(b) % 1_000_000_007
 
@@ -105,576 +54,10 @@ def extract_features(media: DataFrame, decode_stub: bool = True, batch_size_hint
                 {
                     "asset_id": pdf["asset_id"],
                     "modality": pdf["modality"],
-                    "n_bytes": [f[0] for f in feats],
+                    "n_bytes": pd.array([f[0] for f in feats], dtype="Int64"),
                     "header_word": [f[1] for f in feats],
-                    "checksum": [f[2] for f in feats],
+                    "checksum": pd.array([f[2] for f in feats], dtype="Int64"),
                 }
             )
 
     return media.mapInPandas(_batches, schema=FEATURE_SCHEMA)
-
-
-def decode_netpbm(b: bytes) -> "object":
-    """REAL image decode for the uncompressed netpbm family — pure numpy,
-    no codec gate: binary PGM (``P5``, grayscale) and PPM (``P6``, RGB →
-    BT.601 luma) with full header grammar (arbitrary whitespace,
-    ``#`` comments, maxval ≤ 255). Returns a float64 h×w array — exactly
-    what a PIL decode would hand the resize kernel. Raises ValueError on
-    a non-netpbm payload (callers auto-detect via the magic)."""
-    import numpy as np
-
-    if not b or b[:2] not in (b"P5", b"P6"):
-        raise ValueError("not a binary netpbm payload (P5/P6 magic required)")
-    magic = b[:2]
-    pos = 2
-    fields: list[int] = []
-    while len(fields) < 3:
-        # skip whitespace and # comments between header tokens
-        while pos < len(b) and b[pos : pos + 1].isspace():
-            pos += 1
-        if pos < len(b) and b[pos : pos + 1] == b"#":
-            while pos < len(b) and b[pos : pos + 1] != b"\n":
-                pos += 1
-            continue
-        start = pos
-        while pos < len(b) and not b[pos : pos + 1].isspace():
-            pos += 1
-        if start == pos:
-            raise ValueError("truncated netpbm header")
-        fields.append(int(b[start:pos]))
-    pos += 1  # exactly ONE whitespace byte separates maxval from raster
-    w, h, maxval = fields
-    if maxval > 255:
-        raise ValueError("16-bit netpbm not supported (maxval > 255)")
-    ch = 1 if magic == b"P5" else 3
-    need = h * w * ch
-    raster = np.frombuffer(b, dtype=np.uint8, count=need, offset=pos).astype(np.float64)
-    if ch == 1:
-        return raster.reshape(h, w)
-    rgb = raster.reshape(h, w, 3)
-    # BT.601 luma — the standard grayscale reduction
-    return rgb[:, :, 0] * 0.299 + rgb[:, :, 1] * 0.587 + rgb[:, :, 2] * 0.114
-
-
-def pgm_encode(img) -> bytes:
-    """Binary PGM (P5) encoder for a uint8 h×w array — the test-payload
-    generator pairing :func:`decode_netpbm` (the image analogue of
-    :func:`pcm16_sine`)."""
-    import numpy as np
-
-    arr = np.asarray(img, dtype=np.uint8)
-    h, w = arr.shape
-    return f"P5\n{w} {h}\n255\n".encode() + arr.tobytes()
-
-
-def ppm_encode(img) -> bytes:
-    """Binary PPM (P6) encoder for a uint8 h×w×3 RGB array."""
-    import numpy as np
-
-    arr = np.asarray(img, dtype=np.uint8)
-    h, w, _ = arr.shape
-    return f"P6\n{w} {h}\n255\n".encode() + arr.tobytes()
-
-
-def decode_bmp(b: bytes) -> "object":
-    """REAL image decode for uncompressed BMP (round-10, VERDICT r9 #6)
-    — pure numpy, no codec gate: BITMAPINFOHEADER (or larger V4/V5
-    headers), 8-bit palette or 24-bit BGR, BI_RGB only, top-down or
-    bottom-up row order, 4-byte row padding. Returns a float64 h×w luma
-    array (BT.601 for color, palette-mapped luma for 8-bit) — the same
-    contract as :func:`decode_netpbm`. Raises ValueError on anything
-    that is not a complete uncompressed BMP, so magic collisions on
-    arbitrary byte payloads fall through to the caller's stub."""
-    import numpy as np
-
-    if not b or b[:2] != b"BM" or len(b) < 54:
-        raise ValueError("not a BMP payload (BM magic + 54-byte headers required)")
-    pix_off = int.from_bytes(b[10:14], "little")
-    hdr_size = int.from_bytes(b[14:18], "little")
-    if hdr_size < 40:
-        raise ValueError("BITMAPCOREHEADER BMPs not supported")
-    w = int.from_bytes(b[18:22], "little", signed=True)
-    h = int.from_bytes(b[22:26], "little", signed=True)
-    bpp = int.from_bytes(b[28:30], "little")
-    compression = int.from_bytes(b[30:34], "little")
-    if compression != 0:
-        raise ValueError("compressed BMP (BI_RLE/BI_BITFIELDS) not supported")
-    if bpp not in (8, 24):
-        raise ValueError(f"only 8/24-bit BMP supported, got {bpp}")
-    bottom_up = h > 0
-    h = abs(h)
-    if w <= 0 or h == 0 or w > 1 << 20 or h > 1 << 20:
-        raise ValueError("implausible BMP dimensions")
-    row_bytes = (w * bpp // 8 + 3) & ~3
-    if pix_off < 14 + hdr_size or len(b) < pix_off + row_bytes * h:
-        raise ValueError("truncated BMP raster")
-    raster = np.frombuffer(b, dtype=np.uint8, count=row_bytes * h, offset=pix_off).reshape(
-        h, row_bytes
-    )
-    if bpp == 8:
-        # palette entries are 4-byte BGRA right after the info header;
-        # map indices through the palette's BT.601 luma (an identity
-        # grayscale palette reduces to the index value itself)
-        pal_off = 14 + hdr_size
-        n_pal = min((pix_off - pal_off) // 4, 256)
-        idx = raster[:, :w]
-        if n_pal > 0:
-            pal = (
-                np.frombuffer(b, dtype=np.uint8, count=n_pal * 4, offset=pal_off)
-                .reshape(n_pal, 4)
-                .astype(np.float64)
-            )
-            if int(idx.max()) >= n_pal:
-                raise ValueError("BMP pixel index outside palette")
-            luma = pal[:, 2] * 0.299 + pal[:, 1] * 0.587 + pal[:, 0] * 0.114
-            img = luma[idx]
-        else:
-            img = idx.astype(np.float64)
-    else:
-        rows = raster[:, : w * 3].reshape(h, w, 3).astype(np.float64)
-        # BMP stores BGR
-        img = rows[:, :, 2] * 0.299 + rows[:, :, 1] * 0.587 + rows[:, :, 0] * 0.114
-    return img[::-1] if bottom_up else img
-
-
-def bmp_encode(img) -> bytes:
-    """24-bit uncompressed BMP encoder for a uint8 h×w×3 RGB array —
-    the fixture generator pairing :func:`decode_bmp` (bottom-up rows,
-    BGR byte order, 4-byte row padding: the standard layout)."""
-    import numpy as np
-
-    arr = np.asarray(img, dtype=np.uint8)
-    h, w, _ = arr.shape
-    row_bytes = (w * 3 + 3) & ~3
-    raster = np.zeros((h, row_bytes), dtype=np.uint8)
-    raster[:, : w * 3] = arr[:, :, ::-1].reshape(h, w * 3)
-    pix = raster[::-1].tobytes()  # bottom-up
-    off = 14 + 40
-    header = (
-        b"BM"
-        + (off + len(pix)).to_bytes(4, "little")
-        + b"\x00\x00\x00\x00"
-        + off.to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little", signed=True)
-        + h.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")
-        + len(pix).to_bytes(4, "little")
-        + (2835).to_bytes(4, "little") * 2
-        + (0).to_bytes(4, "little") * 2
-    )
-    return header + pix
-
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-# Adam7 interlace grid: per-pass (x0, y0, dx, dy) — RFC 2083 §2.6
-_ADAM7 = (
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-)
-
-
-def _png_unfilter(raw, h: int, stride: int, bpp: int):
-    """Scanline reconstruction of all five PNG filter types (None/Sub/
-    Up/Average/Paeth — RFC 2083 §6) for one (sub-)image: ``raw`` is the
-    inflated h×(stride+1) byte grid (filter byte + filtered line per
-    row). int32 accumulators, mod-256 at the end (the spec's
-    unsigned-byte arithmetic); prior = the RECONSTRUCTED previous row,
-    zeros above row 0. Returns int32 (h, stride)."""
-    import numpy as np
-
-    recon = np.zeros((h, stride), dtype=np.int32)
-    for r in range(h):
-        f = int(raw[r, 0])
-        line = raw[r, 1:].astype(np.int32)
-        prior = recon[r - 1] if r > 0 else np.zeros(stride, dtype=np.int32)
-        if f == 0:  # None
-            recon[r] = line
-        elif f == 2:  # Up — vectorizable (no intra-row recurrence)
-            recon[r] = (line + prior) & 0xFF
-        elif f in (1, 3, 4):  # Sub / Average / Paeth: sequential in x
-            row = recon[r]
-            for x in range(stride):
-                a = int(row[x - bpp]) if x >= bpp else 0  # left
-                bb = int(prior[x])  # up
-                if f == 1:
-                    pred = a
-                elif f == 3:
-                    pred = (a + bb) // 2
-                else:
-                    c = int(prior[x - bpp]) if x >= bpp else 0  # up-left
-                    p = a + bb - c
-                    pa, pb, pc = abs(p - a), abs(p - bb), abs(p - c)
-                    pred = a if pa <= pb and pa <= pc else (bb if pb <= pc else c)
-                row[x] = (int(line[x]) + pred) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG filter type {f}")
-    return recon
-
-
-def decode_png(b: bytes) -> "object":
-    """REAL image decode for PNG (round-11, VERDICT r10 #6; palette +
-    Adam7 lanes round-14, VERDICT r13 missing #3) — the COMPRESSED
-    format behind the codec seam, feasible without PIL because PNG's
-    codec is stdlib ``zlib`` plus a pure-numpy scanline unfilter: chunk
-    walk (IHDR/PLTE/IDAT/IEND), zlib inflate of the concatenated IDAT
-    stream, then per-row reconstruction of all five PNG filter types
-    (:func:`_png_unfilter`). Supports 8-bit depth, grayscale (color
-    type 0), truecolor RGB (2) and PALETTE-indexed (3, via the PLTE
-    lookup), both non-interlaced and Adam7-INTERLACED (seven
-    independently-filtered reduced passes scattered back onto the full
-    raster — RFC 2083 §2.6). Returns a float64 h×w luma array (BT.601
-    for RGB/palette) — the same contract as
-    :func:`decode_netpbm`/:func:`decode_bmp` — and raises ValueError on
-    anything else (16-bit, alpha color types 4/6, sub-byte depths), so
-    unsupported PNG variants fall through to the caller's stub
-    honestly; JPEG/MP3 stay documented stub seams (no codec libs in
-    this environment and no stdlib inflate equivalent for them)."""
-    import zlib
-
-    import numpy as np
-
-    if not b or b[:8] != _PNG_SIG:
-        raise ValueError("not a PNG payload (8-byte signature required)")
-    pos = 8
-    ihdr: bytes | None = None
-    plte: bytes | None = None
-    idat = bytearray()
-    while pos + 8 <= len(b):
-        ln = int.from_bytes(b[pos : pos + 4], "big")
-        ctype = b[pos + 4 : pos + 8]
-        data = b[pos + 8 : pos + 8 + ln]
-        if len(data) < ln:
-            raise ValueError("truncated PNG chunk")
-        if ctype == b"IHDR":
-            ihdr = data
-        elif ctype == b"PLTE":
-            plte = data
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-        pos += 12 + ln  # length + type + data + crc
-    if ihdr is None or len(ihdr) < 13 or not idat:
-        raise ValueError("PNG missing IHDR/IDAT")
-    w = int.from_bytes(ihdr[0:4], "big")
-    h = int.from_bytes(ihdr[4:8], "big")
-    bit_depth, color_type, _comp, filt, interlace = ihdr[8:13]
-    if bit_depth != 8 or filt != 0 or interlace not in (0, 1):
-        raise ValueError("only 8-bit depth, filter method 0, interlace 0/1 supported")
-    if color_type not in (0, 2, 3):
-        raise ValueError(
-            "only grayscale (0) / truecolor (2) / palette (3) PNG supported"
-        )
-    if color_type == 3:
-        if plte is None or len(plte) % 3 or not 3 <= len(plte) <= 768:
-            raise ValueError("palette PNG without a valid PLTE chunk")
-    if w <= 0 or h <= 0 or w > 1 << 20 or h > 1 << 20:
-        raise ValueError("implausible PNG dimensions")
-    ch = 3 if color_type == 2 else 1  # palette indexes are 1 byte/pixel
-    raw = zlib.decompress(bytes(idat))
-    if interlace == 0:
-        stride = w * ch
-        if len(raw) != h * (stride + 1):
-            raise ValueError("PNG raster size mismatch after inflate")
-        grid = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride + 1)
-        recon = _png_unfilter(grid, h, stride, ch)
-        px = recon.reshape(h, w, ch)
-    else:
-        # Adam7: seven reduced images, each filtered independently with
-        # its own per-row filter bytes, concatenated in the IDAT stream;
-        # scatter each pass back onto the (dy, dx)-strided full grid
-        px = np.zeros((h, w, ch), dtype=np.int32)
-        off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
-            sub_stride = pw * ch
-            need = ph * (sub_stride + 1)
-            if off + need > len(raw):
-                raise ValueError("interlaced PNG raster truncated after inflate")
-            grid = np.frombuffer(
-                raw[off : off + need], dtype=np.uint8
-            ).reshape(ph, sub_stride + 1)
-            off += need
-            sub = _png_unfilter(grid, ph, sub_stride, ch).reshape(ph, pw, ch)
-            px[y0::dy, x0::dx] = sub
-        if off != len(raw):
-            raise ValueError("interlaced PNG raster size mismatch after inflate")
-    if color_type == 3:
-        lut = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3).astype(np.float64)
-        idx = px.reshape(h, w)
-        if int(idx.max()) >= lut.shape[0]:
-            raise ValueError("palette index out of PLTE range")
-        rgb = lut[idx]
-    elif ch == 1:
-        return px.reshape(h, w).astype(np.float64)
-    else:
-        rgb = px.astype(np.float64)
-    return rgb[:, :, 0] * 0.299 + rgb[:, :, 1] * 0.587 + rgb[:, :, 2] * 0.114
-
-
-def _png_filter_rows(flat, stride: int, bpp: int, filters: "list[int]") -> bytearray:
-    """Forward-filter one (sub-)image's rows (the encoder side of
-    :func:`_png_unfilter`): ``flat`` is the uint8 (h, stride) raster;
-    returns filter-byte-prefixed filtered scanlines."""
-    import numpy as np
-
-    out = bytearray()
-    for r in range(flat.shape[0]):
-        f = int(filters[r % len(filters)]) & 0xFF
-        line = flat[r].astype(np.int32)
-        prior = flat[r - 1].astype(np.int32) if r > 0 else np.zeros(stride, dtype=np.int32)
-        left = np.zeros(stride, dtype=np.int32)
-        left[bpp:] = line[:-bpp]
-        upleft = np.zeros(stride, dtype=np.int32)
-        upleft[bpp:] = prior[:-bpp]
-        if f == 0:
-            enc = line
-        elif f == 1:
-            enc = line - left
-        elif f == 2:
-            enc = line - prior
-        elif f == 3:
-            enc = line - (left + prior) // 2
-        elif f == 4:
-            p = left + prior - upleft
-            pa, pb, pc = np.abs(p - left), np.abs(p - prior), np.abs(p - upleft)
-            pred = np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prior, upleft))
-            enc = line - pred
-        else:
-            raise ValueError(f"unknown PNG filter type {f}")
-        out += bytes([f]) + (enc & 0xFF).astype(np.uint8).tobytes()
-    return out
-
-
-def png_encode(
-    img,
-    row_filters: "list[int] | None" = None,
-    palette=None,
-    interlaced: bool = False,
-) -> bytes:
-    """PNG encoder for a uint8 h×w grayscale / h×w×3 RGB array — the
-    fixture generator pairing :func:`decode_png`. ``row_filters`` picks
-    the per-row filter type (cycled; default all-0) so tests can force
-    every unfilter path (Sub/Up/Average/Paeth) through the decoder —
-    any filter choice must reconstruct the identical raster. Round-14
-    lanes: pass ``palette`` (n×3 uint8) to write ``img`` as an h×w
-    INDEX raster with a PLTE chunk (color type 3), and
-    ``interlaced=True`` to emit the Adam7 seven-pass layout (each pass
-    filtered independently, the filter cycle applied per pass row)."""
-    import zlib
-
-    import numpy as np
-
-    arr = np.asarray(img, dtype=np.uint8)
-    if palette is not None:
-        if arr.ndim != 2:
-            raise ValueError("palette encoding takes an h×w index raster")
-        h, w = arr.shape
-        ch, color_type = 1, 3
-        px = arr.reshape(h, w, 1)
-    elif arr.ndim == 2:
-        h, w = arr.shape
-        ch, color_type = 1, 0
-        px = arr.reshape(h, w, 1)
-    else:
-        h, w, _ = arr.shape
-        ch, color_type = 3, 2
-        px = arr
-    filters = row_filters or [0]
-    if not interlaced:
-        out = _png_filter_rows(px.reshape(h, w * ch), w * ch, ch, filters)
-    else:
-        out = bytearray()
-        for x0, y0, dx, dy in _ADAM7:
-            sub = px[y0::dy, x0::dx]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue
-            ph, pw = sub.shape[0], sub.shape[1]
-            out += _png_filter_rows(
-                np.ascontiguousarray(sub).reshape(ph, pw * ch), pw * ch, ch, filters
-            )
-
-    def _chunk(ctype: bytes, data: bytes) -> bytes:
-        crc = zlib.crc32(ctype + data) & 0xFFFFFFFF
-        return len(data).to_bytes(4, "big") + ctype + data + crc.to_bytes(4, "big")
-
-    ihdr = (
-        w.to_bytes(4, "big")
-        + h.to_bytes(4, "big")
-        + bytes([8, color_type, 0, 0, 1 if interlaced else 0])
-    )
-    parts = _PNG_SIG + _chunk(b"IHDR", ihdr)
-    if palette is not None:
-        parts += _chunk(
-            b"PLTE", np.asarray(palette, dtype=np.uint8).reshape(-1).tobytes()
-        )
-    return (
-        parts
-        + _chunk(b"IDAT", zlib.compress(bytes(out)))
-        + _chunk(b"IEND", b"")
-    )
-
-
-THUMB_SCHEMA = "asset_id long, height int, width int, thumb array<double>"
-
-
-def resize_images(
-    media: DataFrame,
-    out_hw: tuple[int, int] = (8, 8),
-    decode_stub: bool = True,
-) -> DataFrame:
-    """Decode → resize each image to ``out_hw`` via Arrow-batched
-    mapInPandas, with REAL array shapes end-to-end.
-
-    Netpbm payloads (P5/P6 magic) decode FOR REAL via
-    :func:`decode_netpbm`, and BMP payloads (BM magic) via
-    :func:`decode_bmp` — genuine header parse, genuine raster, genuine
-    luma — so for uncompressed images the whole path is production code
-    with no stub anywhere. Other payloads fall back to the deterministic
-    stub decode (bytes become a row-major grayscale image, h = isqrt(n),
-    w = ceil(n/h), zero-padded — the ndarray shape a real
-    ``PIL.Image.open`` would hand over), or raise when
-    ``decode_stub=False`` (where the compressed-format codec slots in).
-    Either way the resize stage (area mean-pooling over an h×w → H×W
-    block grid, the standard thumbnail/downsample kernel) runs real numpy
-    on real shapes. Output rows carry the source dims + a flattened H·W
-    float vector ready for the embedding / near-dup operators
-    (similarity.py) downstream.
-    """
-    import math
-
-    import numpy as np
-
-    H, W = out_hw
-
-    def _decode(b: bytes) -> "np.ndarray":
-        if b and b[:2] in (b"P5", b"P6"):
-            return decode_netpbm(b)
-        if b and b[:2] == b"BM":
-            try:
-                return decode_bmp(b)
-            except ValueError:
-                pass  # magic collision on a non-BMP payload → stub path
-        if b and b[:8] == _PNG_SIG:
-            try:
-                return decode_png(b)
-            except ValueError:
-                pass  # unsupported PNG variant → stub path
-        if not decode_stub:
-            raise NotImplementedError(
-                "real decoding of non-netpbm/BMP/PNG media requires PIL/librosa/ffmpeg — not available in this container"
-            )
-        arr = np.frombuffer(b or b"\x00", dtype=np.uint8)
-        h = max(1, math.isqrt(arr.size))
-        w = math.ceil(arr.size / h)
-        padded = np.zeros(h * w, dtype=np.float64)
-        padded[: arr.size] = arr
-        return padded.reshape(h, w)
-
-    def _pool(img: "np.ndarray") -> "np.ndarray":
-        h, w = img.shape
-        # area interpolation: average each of the H×W target cells over its
-        # source block [floor(r·h/H), floor((r+1)·h/H)) × [... w/W ...)
-        rb = [(r * h) // H for r in range(H + 1)]
-        cb = [(c * w) // W for c in range(W + 1)]
-        out = np.empty((H, W), dtype=np.float64)
-        for r in range(H):
-            r0, r1 = rb[r], max(rb[r + 1], rb[r] + 1)
-            for c in range(W):
-                c0, c1 = cb[c], max(cb[c + 1], cb[c] + 1)
-                out[r, c] = img[r0:r1, c0:c1].mean()
-        return out
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for asset_id, content in zip(pdf["asset_id"], pdf["content"]):
-                img = _decode(content)
-                rows.append(
-                    (asset_id, img.shape[0], img.shape[1], _pool(img).ravel().tolist())
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "height", "width", "thumb"])
-
-    return media.mapInPandas(_batches, schema=THUMB_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per planned frame via
-    sequence+explode on metadata only — the heavy decode happens later in
-    :func:`extract_features` per sampled frame. Keeps the row explosion
-    JVM-side and prunable."""
-    return media.withColumn(
-        "frame_ms",
-        F.explode(F.sequence(F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms))),
-    )
-
-
-AUDIO_FEATURE_SCHEMA = (
-    "asset_id long, n_samples long, band_energies array<double>, dominant_band int"
-)
-
-
-def audio_band_energies(
-    media: DataFrame,
-    n_bands: int = 8,
-    frame: int = 2048,
-    batch_size_hint: int = 256,
-) -> DataFrame:
-    """REAL spectral features — no codec gate: raw PCM16LE mono payloads
-    need only numpy (present in the container), so unlike the
-    image/compressed-audio paths this one runs the actual DSP:
-    ``int16 → float → Hann window → |rfft|² → n_bands equal-width band
-    energies`` over the first ``frame`` samples (zero-padded when
-    shorter), plus the argmax band. This is the audio analogue of
-    ``resize_images``'s real area-pooling: the distributed plumbing AND
-    the kernel are both genuine; swapping in a compressed-format decoder
-    only changes the bytes→samples line.
-
-    Shape: Arrow-batched mapInPandas, one output row per asset, payloads
-    never visit the driver. Deterministic: fixed window, fixed FFT size,
-    argmax ties to the lowest band.
-    """
-    import numpy as np
-
-    half = frame // 2 + 1
-    edges = np.linspace(0, half, n_bands + 1).astype(int)
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        win = np.hanning(frame)
-        for pdf in it:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["content"]):
-                raw = bytes(payload)
-                samples = np.frombuffer(raw[: (len(raw) // 2) * 2], dtype="<i2")
-                n = len(samples)
-                x = np.zeros(frame)
-                x[: min(n, frame)] = samples[:frame] / 32768.0
-                spec = np.abs(np.fft.rfft(x * win)) ** 2
-                bands = [float(spec[edges[i] : edges[i + 1]].sum()) for i in range(n_bands)]
-                rows.append(
-                    (int(aid), int(n), bands, int(np.argmax(bands)))
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "n_samples", "band_energies", "dominant_band"]
-            )
-
-    return media.select("asset_id", "content").mapInPandas(
-        _batches, schema=AUDIO_FEATURE_SCHEMA
-    )
-
-
-def pcm16_sine(asset_id: int, freq_hz: float, n_samples: int = 4096, rate: int = 16000) -> bytes:
-    """Deterministic PCM16LE mono test-signal generator (pure numpy) —
-    the synthetic stand-in for a decoded audio asset."""
-    import numpy as np
-
-    t = np.arange(n_samples) / rate
-    wave = (np.sin(2 * np.pi * freq_hz * t) * 20000).astype("<i2")
-    return wave.tobytes()

@@ -456,21 +456,6 @@ def source_quality_report(
     )
 
 
-def filter_sources(
-    docs: DataFrame,
-    report: DataFrame,
-    source_col: str = "source",
-) -> DataFrame:
-    """Keep only documents whose source passed the
-    :func:`source_quality_report` gate. The kept-source list is
-    sources-sized (tiny at any corpus scale) → broadcast semi-join, the
-    document table never shuffles."""
-    kept = report.filter(F.col("kept")).select(
-        F.col("source").alias(source_col)
-    )
-    return docs.join(F.broadcast(kept), source_col, "left_semi")
-
-
 def source_percentile_gate(
     df: DataFrame,
     score_col: str,

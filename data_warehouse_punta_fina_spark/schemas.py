@@ -128,26 +128,3 @@ SOURCE_SCHEMAS: dict[str, T.StructType] = {
 }
 
 TABLE_NAMES = tuple(SOURCE_SCHEMAS)
-
-# Multimodal asset table (engine-defined; SURVEY.md north-star extensions).
-# image/audio/video payloads ride as opaque binary + typed metadata.
-MEDIA_ASSET = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("modality", T.StringType(), False),  # image|audio|video
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("mime_type", T.StringType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.LongType()),
-                    T.StructField("sample_rate", T.IntegerType()),
-                ]
-            ),
-            True,
-        ),
-    ]
-)

@@ -221,26 +221,26 @@ def test_scalar_lookup_broadcast_constant(spark):
     assert len(out) == 2 and all(r["const_id"] == 99 for r in out)
 
 
-def test_frame_sample_plan(spark):
-    from data_warehouse_punta_fina_spark.operators.multimodal import frame_sample_plan
-
-    media = spark.createDataFrame([(1, 3500), (2, 0)], "asset_id long, duration_ms long")
-    out = frame_sample_plan(media, every_ms=1000).collect()
-    frames = {(r["asset_id"], r["frame_ms"]) for r in out}
-    assert frames == {(1, 0), (1, 1000), (1, 2000), (1, 3000), (2, 0)}
-
-
 def test_media_feature_stub_shapes(spark):
     from data_warehouse_punta_fina_spark.operators.multimodal import (
         extract_features,
         media_from_documents,
     )
 
-    docs = spark.createDataFrame([(1, "abcd"), (2, "")], "doc_id long, text string")
+    docs = spark.createDataFrame(
+        [(1, "abcd"), (2, ""), (3, "P5 2 2 255 abcd"), (4, None)],
+        "doc_id long, text string",
+    )
     out = {r["asset_id"]: r for r in extract_features(media_from_documents(docs)).collect()}
     assert out[1]["n_bytes"] == 4
     assert out[1]["header_word"] == int.from_bytes(b"abcd", "big")
     assert out[2]["n_bytes"] == 0
+    # the media_features oracle SQL's values: an image-shaped payload is
+    # still featurized byte by byte, and a NULL payload keeps NULL length
+    # and checksum (strlen(NULL) is NULL; the header CASE falls to 0)
+    feats = {a: (r["n_bytes"], r["header_word"], r["checksum"]) for a, r in out.items()}
+    assert feats[3] == (15, 1345658930, 911)
+    assert feats[4] == (None, 0, None)
 
 
 def test_quality_checks(spark):
@@ -404,45 +404,6 @@ def test_ivf_trained_cell_locality(spark):
         by_q.setdefault(r["query_id"], []).append(r["rank"])
     for ranks in by_q.values():
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
-
-
-def test_resize_images_real_shapes_and_determinism(spark):
-    """Multimodal resize: real ndarray shapes through the Arrow batch path,
-    deterministic output, fixed 8x8 thumb regardless of source size."""
-    from data_warehouse_punta_fina_spark.operators.multimodal import (
-        media_from_documents,
-        resize_images,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a" * 5), (2, "xyz" * 100), (3, "q"), (4, "m" * 1024)],
-        "doc_id long, text string",
-    )
-    media = media_from_documents(docs)
-    out1 = {r["asset_id"]: r for r in resize_images(media).collect()}
-    out2 = {r["asset_id"]: r for r in resize_images(media.repartition(3)).collect()}
-    assert set(out1) == {1, 2, 3, 4}
-    for aid, r in out1.items():
-        assert len(r["thumb"]) == 64
-        assert r["height"] * r["width"] >= 1
-        assert out2[aid]["thumb"] == r["thumb"]  # partition-invariant
-    # uniform square payload ('m'*1024 → 32x32, no padding) pools to a
-    # constant thumbnail
-    assert set(out1[4]["thumb"]) == {float(ord("m"))}
-    assert (out1[4]["height"], out1[4]["width"]) == (32, 32)
-
-
-def test_resize_images_stub_gate_raises(spark):
-    import pytest as _pytest
-
-    from data_warehouse_punta_fina_spark.operators.multimodal import (
-        media_from_documents,
-        resize_images,
-    )
-
-    docs = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
-    with _pytest.raises(Exception, match="NotImplementedError|PIL"):
-        resize_images(media_from_documents(docs), decode_stub=False).collect()
 
 
 def test_bucketed_range_join_equals_nested_loop(spark):
@@ -1290,13 +1251,10 @@ def test_tfidf_doc_pairs_cosine_semantics(spark):
     assert sims == again
 
 
-def test_source_quality_report_gate_and_filter(spark):
+def test_source_quality_report_gate(spark):
     """A source of copy-paste duplicates fails the dup gate; a healthy
-    source passes; filter_sources keeps only gated-in documents."""
-    from pyspark.sql import functions as F
-
+    source passes."""
     from data_warehouse_punta_fina_spark.operators.text_quality import (
-        filter_sources,
         source_quality_report,
     )
 
@@ -1315,11 +1273,6 @@ def test_source_quality_report_gate_and_filter(spark):
     # 4 identical docs -> 1 distinct hash -> dup_frac 0.75 > 0.5 -> dropped
     assert abs(rep["spam.example"]["dup_frac"] - 0.75) < 1e-9
     assert rep["spam.example"]["kept"] is False
-    kept = filter_sources(docs, source_quality_report(docs))
-    assert {r["source"] for r in kept.select("source").distinct().collect()} == {
-        "good.example"
-    }
-    assert kept.count() == 4
 
 
 def test_tfidf_doc_pairs_matches_pure_python_cosine(spark):
@@ -1698,55 +1651,6 @@ def test_psi_categorical_vanished_category(spark):
     assert drift["b"]["n_cur"] == 0 and float(drift["b"]["p_cur"]) == 1e-06
     total = sum(float(r["psi_term"]) for r in drift.values())
     assert 0.25 < total < 1e6  # clearly drifted, finite
-
-
-def test_plan_lsh_params_s_curve_optimizer():
-    from data_warehouse_punta_fina_spark.operators.dedup import plan_lsh_params
-
-    # low threshold -> many bands (recall); high threshold -> fewer,
-    # longer bands (precision); threshold_50 tracks the request
-    lo = plan_lsh_params(0.2, 12)
-    hi = plan_lsh_params(0.8, 12)
-    assert lo["bands"] > hi["bands"]
-    assert abs(lo["threshold_50"] - 0.2) < 0.25
-    assert abs(hi["threshold_50"] - 0.8) < 0.25
-    # the chosen split must beat every other divisor split on the
-    # weighted area under its own objective
-    import math
-
-    def areas(bands, rows, t):
-        fp = fn = 0.0
-        for i in range(1000):
-            s = (i + 0.5) / 1000
-            p = 1.0 - (1.0 - s**rows) ** bands
-            if s < t:
-                fp += p
-            else:
-                fn += 1.0 - p
-        return fp / 1000, fn / 1000
-
-    t = 0.5
-    got = plan_lsh_params(t, 16)
-    best_err = 0.5 * got["fp_area"] + 0.5 * got["fn_area"]
-    for b in (1, 2, 4, 8, 16):
-        fp, fn = areas(b, 16 // b, t)
-        # the planner reports round-6 areas -> compare at that precision
-        assert best_err <= 0.5 * fp + 0.5 * fn + 1e-6
-    # low thresholds drive toward the max-band split (recall-dominated:
-    # at t=0.2 the planner picks 12x1), mid thresholds balance (16 -> 4x4)
-    assert plan_lsh_params(0.2, 12)["bands"] == 12
-    assert (got["bands"], 16 // got["bands"]) == (4, 4)
-    # a recall-weighted objective never picks fewer bands than the
-    # precision-weighted one at the same threshold
-    assert (
-        plan_lsh_params(0.5, 16, fn_weight=0.9)["bands"]
-        >= plan_lsh_params(0.5, 16, fn_weight=0.1)["bands"]
-    )
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        plan_lsh_params(1.5, 12)
 
 
 def test_pq_fit_codebook_shape_and_grouping(spark):

@@ -465,16 +465,6 @@ _REACHED_ONLY_FROM_TESTS = {
     "streaming/classify_stream.classify_stream_batch",
     "streaming/dedup_stream._read_or_empty",
     "streaming/dedup_stream.dedup_ingest_batch",
-    # multimodal encoders and synthetic media that build the media tests' inputs
-    "operators/multimodal._png_filter_rows",
-    "operators/multimodal.audio_band_energies",
-    "operators/multimodal.bmp_encode",
-    "operators/multimodal.frame_sample_plan",
-    "operators/multimodal.pcm16_sine",
-    "operators/multimodal.pgm_encode",
-    "operators/multimodal.png_encode",
-    "operators/multimodal.ppm_encode",
-    "operators/multimodal.resize_images",
     # persisted-index calls past the queries: freshness predicates, positional
     # append, retirement (streaming/epochs.py checks its tombstone)
     "operators/index_admin._newest_mtime_ms",
@@ -484,12 +474,6 @@ _REACHED_ONLY_FROM_TESTS = {
     "operators/retrieval.positional_append_index",
     "operators/retrieval.positional_index_is_fresh",
     "operators/similarity.ivfpq_index_is_fresh",
-    # operators no query uses yet, to promote or delete (ROADMAP direction 4)
-    "functions/text.luhn_valid",
-    "operators/dedup.plan_lsh_params",
-    "operators/grouped._pava",
-    "operators/grouped.isotonic_fit",
-    "operators/text_quality.filter_sources",
 }
 
 

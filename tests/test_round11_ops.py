@@ -1,8 +1,7 @@
-"""Round-11 gates: the rotation ledger's set-difference rule (VERDICT
-r10 #1), the O(batch) append-stats plan gate (#2), PRF over the
-persisted index (#3), the index-refresh fingerprint cycle (#7), the PNG
-decode lane (#6), and the ADVICE r10 hardenings (n_buckets inference,
-prune_buckets coverage guard, header_word packing bound)."""
+"""Gates for the rotation ledger's set-difference rule, the
+O(batch) append-stats plan, PRF over the persisted index, the
+index-refresh fingerprint cycle, and the index readers' guards
+(n_buckets inference, prune_buckets coverage)."""
 
 from __future__ import annotations
 
@@ -161,84 +160,6 @@ def test_index_refresh_fingerprint_cycle(spark, tmp_path):
     bm25_build_index(spark.read.parquet(f"{sfdir}/documents.parquet"), idx2, n_buckets=4)
     r2 = {r["doc_id"] for r in bm25_search_index(qt, idx2, k=3).collect()}
     assert r2 == {1, 4}, "rebuilt index must reflect the mutated corpus"
-
-
-def test_png_decode_all_filters_and_cross_format_parity(spark):
-    """VERDICT r10 #6: the PNG lane — stdlib-zlib inflate + pure-numpy
-    unfilter — decodes a real compressed raster through
-    decode→resize→feature. Every PNG filter type (None/Sub/Up/Average/
-    Paeth) reconstructs the identical raster, and the PNG and BMP
-    encodings of the SAME image produce byte-identical features
-    (header_word + checksum from the decoded luma) and identical
-    thumbnails through the Spark mapInPandas path."""
-    import numpy as np
-
-    from data_warehouse_punta_fina_spark.operators.multimodal import (
-        bmp_encode,
-        decode_bmp,
-        decode_png,
-        extract_features,
-        png_encode,
-        resize_images,
-    )
-
-    rng = np.random.default_rng(11)
-    rgb = rng.integers(0, 256, size=(24, 17, 3), dtype=np.uint8)
-
-    # (a) every filter choice reconstructs the same raster
-    base = decode_png(png_encode(rgb))
-    for filters in ([1], [2], [3], [4], [0, 1, 2, 3, 4]):
-        again = decode_png(png_encode(rgb, row_filters=filters))
-        assert np.array_equal(base, again), f"filter set {filters} corrupted the raster"
-    # grayscale (color type 0) path too
-    gray = rng.integers(0, 256, size=(9, 13), dtype=np.uint8)
-    assert np.array_equal(
-        decode_png(png_encode(gray, row_filters=[4, 1])), gray.astype(np.float64)
-    )
-
-    # (b) PNG luma == BMP luma of the same image (bit-identical doubles)
-    assert np.array_equal(base, decode_bmp(bmp_encode(rgb)))
-
-    # (c) through the Spark lane: features + thumbnails agree across
-    # encodings of the same raster
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(png_encode(rgb, row_filters=[0, 1, 2, 3, 4])),
-             "image/png"),
-            (2, "image", bytearray(bmp_encode(rgb)), "image/bmp"),
-        ],
-        "asset_id long, modality string, content binary, mime_type string",
-    )
-    feats = {r["asset_id"]: (r["header_word"], r["checksum"])
-             for r in extract_features(media).collect()}
-    assert feats[1] == feats[2]
-    assert feats[1][0] == (17 << 16) | 24  # genuine dims from the parse
-    thumbs = {r["asset_id"]: (r["height"], r["width"], r["thumb"])
-              for r in resize_images(media, out_hw=(4, 4)).collect()}
-    assert thumbs[1] == thumbs[2]
-    assert thumbs[1][:2] == (24, 17)
-
-
-def test_feature_packing_rejects_oversized_dims(spark):
-    """ADVICE r10: a decoder-legal raster wider than 65535 must not fold
-    height bits into the width field of the 16-bit header_word packing —
-    oversized rasters fall through to the byte-level stub."""
-    import numpy as np
-
-    from data_warehouse_punta_fina_spark.operators.multimodal import (
-        bmp_encode,
-        extract_features,
-    )
-
-    wide = np.zeros((1, 70000, 3), dtype=np.uint8)
-    payload = bmp_encode(wide)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(payload), "image/bmp")],
-        "asset_id long, modality string, content binary, mime_type string",
-    )
-    row = extract_features(media).collect()[0]
-    stub_header = int.from_bytes(payload[:4], "big")
-    assert row["header_word"] == stub_header != (70000 << 16) | 1
 
 
 def test_recall_panel_carries_federated_tier():

@@ -1,5 +1,6 @@
 """The engine session keeps a repeated query's generated code compiled,
-and sizes ``local[N]`` to the host when ``SPARK_GRAFT_CPUS`` is unset."""
+sizes ``local[N]`` to the host when ``SPARK_GRAFT_CPUS`` is unset, and
+rebuilds a memoized fact identically after the session memo is reset."""
 
 from __future__ import annotations
 
@@ -48,3 +49,20 @@ def test_repeated_query_reuses_its_compiled_classes(spark):
     before = _compile_count(spark)
     assert [r.x for r in run(0)] == [0, 0, 0, 0]
     assert _compile_count(spark) == before
+
+
+def test_reset_session_memo_rebuilds_identically(spark, sf_dir):
+    """bench.py times the flagship min-of-2 via reset_session_memo(): the
+    reset must empty the memo AND a rebuilt fact must be row-identical to
+    the first build (determinism of the whole dataflow, not just the
+    cache)."""
+    import __spark_entry__ as entrymod
+    from data_warehouse_punta_fina_spark.registry import star
+
+    q = entrymod.all_queries()["fact_ventas"]
+    first = {(r["venta_id"]): (r["total"], r["cliente_id"]) for r in q(spark, sf_dir).collect()}
+    assert len(star._DIM_MEMO) > 0
+    entrymod.reset_session_memo()
+    assert star._DIM_MEMO == {}
+    second = {(r["venta_id"]): (r["total"], r["cliente_id"]) for r in q(spark, sf_dir).collect()}
+    assert first == second
